@@ -15,10 +15,14 @@ Highlight semantics from tasks/entity_linker/task.py:252-324: wrap each
 included mention in ``*...*``; pinned by test_entity_linker.py:671-720
 ("Alice goes to *Boston* to see the *Boston Celtics* game.").
 
+Sharding follows the REL stage: one prompt unit per NER shard,
+sub-sharded when the EL prompt overflows ``context_length``; per-unit
+kb_id lists concatenate in entity order.
+
 Auto-NIL semantics (task.py:113-135): a mention whose candidate set is
 empty/{NIL} is excluded from the prompt and force-assigned NIL. If the
-parsed solution count doesn't match the prompt mention count, the doc's
-links are all NIL (task.py:211-236).
+parsed solution count doesn't match the prompt mention count, that
+prompt's links are all NIL (task.py:211-236).
 """
 
 from __future__ import annotations
@@ -33,7 +37,8 @@ from ..functions.response_parsers import attach_el_solutions, parse_el_solutions
 from ..kb import NIL, UNAVAILABLE_ENTITY_DESC, KnowledgeBase
 from ..model import resolve_model
 from ..templates import render_el_prompt
-from .ner import IO_TYPE
+from .ner import IO_TYPE, SHARDS_COL, doc_inputs
+from .sharding import task_units
 
 LINKS_TYPE = ArrayType(StringType())
 
@@ -75,9 +80,8 @@ def build_el_prompt(
 ) -> Tuple[str, List[bool]]:
     """Candidate lookup (J3) -> in-prompt flags (F5) -> highlight (M4) ->
     rendered EL prompt. Returns (prompt, in_prompt). THE single
-    implementation of the EL prompt-side semantics — shared by the
-    standalone stage kernel and the fused stage so auto-NIL/fallback
-    behavior can't drift between them."""
+    implementation of the EL prompt-side semantics (``el_batch`` and the
+    benchmark's kernel probes call it)."""
     spans = [(s, e) for s, e, _ in span_tuples]
     surfaces = [text[s:e] for s, e, _ in span_tuples]
     cands = [kb.get_candidates(s, top_n) for s in surfaces]
@@ -94,6 +98,41 @@ def build_el_prompt(
     return render_el_prompt(highlighted, mentions, cand_blocks, examples), in_prompt
 
 
+def el_batch(
+    model,
+    kb: KnowledgeBase,
+    texts: List[str],
+    ents: List[List[Tuple[int, int, str]]],
+    bounds: list,
+    *,
+    top_n: int = 5,
+    auto_nil: bool = True,
+    context_length: Optional[int] = None,
+    examples: Optional[list] = None,
+) -> Tuple[List[List[str]], List[dict]]:
+    """EL over one batch of docs (``task_units`` per NER shard, candidates
+    recomputed per unit, H4). Returns, per doc, one KB id (or NIL) per ent
+    and the save_io prompt/response pair."""
+    # render stashes in_prompt per (text, spans) so the prompt task_units
+    # keeps is never re-rendered (and the KB candidate lookups never re-run)
+    # for accepted units. Scoped to this batch: keys hold shard text.
+    flags: dict = {}
+
+    def render(text, spans):
+        prompt, flags[(text, tuple(spans))] = build_el_prompt(
+            text, spans, kb, top_n, auto_nil, examples or []
+        )
+        return prompt
+
+    def parse(text, spans, response, _offset):
+        # positional re-attach (J7); F9: inconsistent -> all NIL
+        in_prompt = flags[(text, tuple(spans))]
+        attached = attach_el_solutions(in_prompt, parse_el_solutions(response))
+        return attached if attached is not None else [NIL] * len(in_prompt)
+
+    return task_units(model, texts, ents, bounds, context_length, render, parse)
+
+
 def link_entities(
     df: DataFrame,
     *,
@@ -101,89 +140,38 @@ def link_entities(
     model_spec: dict,
     top_n: int = 5,
     auto_nil: bool = True,
-    text_col: str = "content",
-    ents_col: str = "ents",
     examples: list | None = None,
-    out_col: str = "kb_ids",
     context_length: Optional[int] = None,
     save_io: bool = False,
 ) -> DataFrame:
-    """Append ``kb_ids``: one KB id (or NIL) per entry of ``ents``. With
-    ``context_length`` set, oversized docs are sub-sharded per task
-    (reference: tasks/entity_linker/task.py:137-165) with candidates
-    recomputed per sub-shard (H4); per-sub kb_id lists concatenate in
-    entity order."""
-    spark = df.sparkSession
-    kb_bc = spark.sparkContext.broadcast(kb.to_json())
-    out_fields = df.schema.fields + [StructField(out_col, LINKS_TYPE)]
+    """Append ``kb_ids``: one KB id (or NIL) per entry of ``ents``
+    (``el_batch`` in one narrow mapInPandas, KB broadcast as JSON)."""
+    has_shards = SHARDS_COL in df.columns
+    kb_bc = df.sparkSession.sparkContext.broadcast(kb.to_json())
+    out_fields = df.schema.fields + [StructField("kb_ids", LINKS_TYPE)]
     if save_io:
         out_fields.append(StructField("el_io", IO_TYPE))
-    out_schema = StructType(out_fields)
-    examples = examples or []
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .sharding import shard_for_task
-
         model = resolve_model(model_spec)
         local_kb = KnowledgeBase.from_json(kb_bc.value)
-        # the render closure stashes in_prompt per (text, spans) so the
-        # prompt returned by shard_for_task is never re-rendered (and the
-        # KB candidate lookups never re-run) for accepted sub-shards.
-        # Scoped PER BATCH (reset below, matching fused.py): keys hold the
-        # full document text, so a task-lifetime cache would pin every doc
-        # of the partition in executor memory.
-        flag_cache: dict = {}
-
-        def el_render(t, sp):
-            prompt, in_prompt = build_el_prompt(
-                t, sp, local_kb, top_n, auto_nil, examples
-            )
-            flag_cache[(t, tuple(sp))] = in_prompt
-            return prompt
-
         for pdf in batches:
-            flag_cache.clear()
-            prompts = []
-            doc_meta = []  # per doc: list of in_prompt flags per sub-shard
-            prompt_bounds = []  # per doc: (start, end) slice into prompts
-            for text, ents in zip(pdf[text_col], pdf[ents_col]):
-                text = text or ""
-                span_tuples = [(e["start"], e["end"], e["label"]) for e in ents]
-                subs = (
-                    shard_for_task(text, span_tuples, context_length, el_render)
-                    if context_length is not None
-                    else [(0, text, span_tuples, el_render(text, span_tuples))]
-                )
-                metas = []
-                p0 = len(prompts)
-                for _offset, st, sp, prompt in subs:
-                    prompts.append(prompt)
-                    metas.append(flag_cache[(st, tuple(sp))])
-                doc_meta.append(metas)
-                prompt_bounds.append((p0, len(prompts)))
-            responses = model(prompts)
-            links_col = []
-            r = 0
-            for metas in doc_meta:
-                attached_all: List[str] = []
-                for in_prompt in metas:
-                    solutions = parse_el_solutions(responses[r])
-                    r += 1
-                    attached = attach_el_solutions(in_prompt, solutions)
-                    if attached is None:  # F9: inconsistent -> all NIL
-                        attached = [NIL] * len(in_prompt)
-                    attached_all.extend(attached)
-                links_col.append(attached_all)
+            kb_ids, io = el_batch(
+                model,
+                local_kb,
+                *doc_inputs(pdf, has_shards),
+                top_n=top_n,
+                auto_nil=auto_nil,
+                context_length=context_length,
+                examples=examples,
+            )
             out = pdf.copy()
-            out[out_col] = links_col
+            out["kb_ids"] = kb_ids
             if save_io:
-                out["el_io"] = [
-                    {"prompts": prompts[a:b], "responses": responses[a:b]}
-                    for a, b in prompt_bounds
-                ]
+                out["el_io"] = io
             yield out
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return df.mapInPandas(kernel, schema=StructType(out_fields))
 
 
 # ---------------------------------------------------------------------------

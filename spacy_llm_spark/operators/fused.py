@@ -1,4 +1,4 @@
-"""Fused NER -> REL -> EL extraction stage (shard-aware).
+"""Fused NER -> REL -> EL extraction stage.
 
 The reference pipelines generate -> model -> parse per task through lazy
 generators with zero materialization between steps (R4,
@@ -7,88 +7,42 @@ the three task stages into ONE ``mapInPandas`` pass: the corpus crosses
 the JVM<->Python Arrow boundary once instead of three times, and each
 Arrow batch runs all three deterministic models locally.
 
-Sharding semantics (H2/H3/H4) mirror the reference per task:
-- NER: spans parsed + de-overlapped per shard, fused with offset shift
-  (tasks/ner/task.py:94-100 per shard + ner/util.py:41-48 reduce).
-- REL: each shard is pre-annotated and prompted with ITS OWN entities
-  (indices local to the shard); parsed relations are bounds-checked
-  against the shard's entity count (F3) and re-indexed into doc
-  coordinates by the shard's cumulative entity offset on merge.
-  (Deliberate divergence: the reference's REL reducer concatenates
-  relation items without re-indexing, rel/util.py:79-102, which leaves
-  shard-local indices dangling in the fused doc; we shift them so every
-  index addresses the doc-level ents array. Cross-shard relations are
-  invisible to both engines — neither prompt contains both entities.)
-- EL: candidates are recomputed per shard (H4,
-  entity_linker/task.py:137-165), auto-NIL and the F9 consistency guard
-  apply per shard, and per-shard kb_id lists concatenate in shard order.
-
-Semantically identical to chaining operators.ner/rel/el when
-context_length is None (tested); use the unfused stages when stages need
-independent checkpoints or different cluster resources.
+The pass is the composition of the per-task kernels ``ner_batch``,
+``rel_batch`` and ``el_batch`` — the same functions the staged operators
+wrap — so the fused and staged paths share one sharding rule (REL/EL
+prompt per NER shard, H2-H4) and produce identical ents/rels/kb_ids and
+save_io prompts, with or without ``context_length`` (tested). Use the
+staged operators when stages need independent checkpoints or different
+cluster resources.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Tuple
+from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import MapType, StringType, StructField, StructType
 
-from ..functions.normalizers import NORMALIZERS, build_label_dict, split_labels
-from ..functions.response_parsers import (
-    attach_el_solutions,
-    extract_span_reasons_cot,
-    find_spans_cot,
-    parse_el_solutions,
-    parse_rel_response,
-    parse_span_response_v2,
-)
-from ..kb import NIL, UNAVAILABLE_ENTITY_DESC, KnowledgeBase
+from ..kb import KnowledgeBase
 from ..model import resolve_model
-from ..templates import render_el_prompt, render_ner_prompt, render_rel_prompt
-from ..tokenizer import filter_spans
-from .el import LINKS_TYPE, build_el_prompt, highlight_ents
-from .ner import ENT_TYPE, IO_TYPE
-from .rel import REL_TYPE, preannotate
-from .sharding import make_shards, shard_for_task
+from .el import LINKS_TYPE, el_batch
+from .ner import ENT_TYPE, IO_TYPE, check_span_format, ent_rows, ner_batch
+from .rel import REL_TYPE, rel_batch
 
 
 def annotate_fused(
-    df: DataFrame,
-    *,
-    ner_model_spec: dict,
-    rel_model_spec: dict,
-    el_model_spec: dict,
-    kb: KnowledgeBase,
-    labels,
-    rel_labels,
-    text_col: str = "content",
-    normalizer: str = "lowercase",
-    span_format: str = "cot",
-    alignment_mode: str = "contract",
-    case_sensitive_matching: bool = False,
-    allow_overlap: bool = False,
-    context_length: Optional[int] = None,
-    top_n: int = 5,
-    auto_nil: bool = True,
-    drop_text: bool = True,
-    ner_examples: Optional[list] = None,
-    rel_examples: Optional[list] = None,
-    el_examples: Optional[list] = None,
-    definitions: Optional[dict] = None,
-    save_io: bool = False,
+    df: DataFrame, *, ner: dict, rel: dict, el: dict, save_io: bool = False
 ) -> DataFrame:
     """Append ents + rels + kb_ids in a single narrow pass.
 
-    ``span_format``: 'cot' parses NER v3 chain-of-thought lines (P3);
-    'v2' parses ``LABEL: phrase, phrase`` lines (P2).
+    ``ner``, ``rel`` and ``el`` are the keyword arguments of
+    ``extract_mentions``, ``extract_relations`` and ``link_entities``
+    (``save_io`` and ``out_col`` aside).
 
-    ``drop_text=True`` drops ``text_col`` from the OUTPUT (it is still the
-    kernel's input): the text dominates the Arrow return payload and the
-    downstream tables never read it — they carry content_sha256 for
-    parity/joins. At 100 TB this halves the checkpoint volume.
+    The ``content`` column is the kernel's input and is dropped from the
+    OUTPUT: the text dominates the Arrow return payload and the downstream
+    tables never read it — they carry content_sha256 for parity/joins.
 
     ``save_io=True`` appends ``llm_io``: map task-name -> per-(sub-)shard
     raw prompt/response string lists, the Spark shape of the reference's
@@ -96,230 +50,35 @@ def annotate_fused(
     (pipeline/llm.py:295-314). Off by default — the strings dominate the
     payload and exist only for production debugging/audit.
     """
-    if span_format not in ("cot", "v2"):
-        raise ValueError(f"Unknown span_format {span_format!r}")
-    if span_format == "v2" and allow_overlap:
-        raise ValueError(
-            "span_format='v2' cannot honor allow_overlap=True: the v2 "
-            "grammar resolves phrases with a global non-overlapping cursor. "
-            "Use the CoT grammar for SpanCat."
-        )
-    label_list = split_labels(labels)
-    rel_label_list = split_labels(rel_labels)
-    norm = NORMALIZERS[normalizer]
-    label_dict = build_label_dict(label_list, norm)
-    kept_fields = [f for f in df.schema.fields if not (drop_text and f.name == text_col)]
-    out_fields = kept_fields + [
+    ner, rel, el = dict(ner), dict(rel), dict(el)
+    specs = [args.pop("model_spec") for args in (ner, rel, el)]
+    kb_bc = df.sparkSession.sparkContext.broadcast(el.pop("kb").to_json())
+    check_span_format(ner.get("span_format", "cot"), ner.get("allow_overlap", False))
+    out_fields = [f for f in df.schema.fields if f.name != "content"] + [
         StructField("ents", ENT_TYPE),
         StructField("rels", REL_TYPE),
         StructField("kb_ids", LINKS_TYPE),
     ]
     if save_io:
         out_fields.append(StructField("llm_io", MapType(StringType(), IO_TYPE)))
-    out_schema = StructType(out_fields)
-    spark = df.sparkSession
-    kb_bc = spark.sparkContext.broadcast(kb.to_json())
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ner_model = resolve_model(ner_model_spec)
-        rel_model = resolve_model(rel_model_spec)
-        el_model = resolve_model(el_model_spec)
+        ner_model, rel_model, el_model = (resolve_model(s) for s in specs)
         local_kb = KnowledgeBase.from_json(kb_bc.value)
-
-        def render_ner(shard_text):
-            return render_ner_prompt(
-                shard_text, label_list, definitions, ner_examples
-            )
-
-        def parse_spans(shard_text: str, response: str):
-            if span_format == "cot":
-                reasons = extract_span_reasons_cot(response, label_dict, norm)
-                return find_spans_cot(
-                    shard_text,
-                    reasons,
-                    case_sensitive=case_sensitive_matching,
-                    alignment_mode=alignment_mode,
-                    allow_overlap=allow_overlap,
-                )
-            return parse_span_response_v2(
-                shard_text,
-                response,
-                label_dict,
-                normalizer=norm,
-                case_sensitive=case_sensitive_matching,
-                alignment_mode=alignment_mode,
-            )
-
         for pdf in batches:
-            texts = [t or "" for t in pdf[text_col]]
-
-            # ---- shard fan-out (local, H2) ----
-            doc_shards: List[List[Tuple[int, str]]] = []
-            ner_prompts = []
-            ner_bounds = []  # per doc: (start, end) slice into ner_prompts
-            for text in texts:
-                shards = (
-                    make_shards(text, context_length, render_ner)
-                    if context_length is not None
-                    else [(0, text, render_ner(text))]
-                )
-                doc_shards.append([(off, st) for off, st, _ in shards])
-                p0 = len(ner_prompts)
-                ner_prompts.extend(p for _, _, p in shards)
-                ner_bounds.append((p0, len(ner_prompts)))
-
-            # ---- NER per shard ----
-            ner_responses = ner_model(ner_prompts)
-            # per doc: list of per-shard local spans (sorted, de-overlapped)
-            doc_shard_spans: List[List[List[Tuple[int, int, str]]]] = []
-            r = 0
-            for shards in doc_shards:
-                shard_spans = []
-                for _offset, shard_text in shards:
-                    spans = parse_spans(shard_text, ner_responses[r])
-                    spans = (
-                        sorted(set(spans)) if allow_overlap else filter_spans(spans)
-                    )
-                    shard_spans.append(spans)
-                    r += 1
-                doc_shard_spans.append(shard_spans)
-
-            # ---- REL per shard (indices local to shard, F3) ----
-            # REL prompts are strictly longer than NER's over the same text
-            # (preannotation markers + different instructions), so each NER
-            # shard is RE-validated against context_length and sub-sharded
-            # if needed — the reference shards every task, not just NER.
-            def rel_render(t, sp):
-                return render_rel_prompt(
-                    preannotate(t, sp), rel_label_list, examples=rel_examples
-                )
-
-            rel_prompts = []
-            rel_sub_counts: List[List[int]] = []  # per shard: n_ents per sub
-            rel_bounds = []  # per doc: (start, end) slice into rel_prompts
-            for shards, shard_spans in zip(doc_shards, doc_shard_spans):
-                p0 = len(rel_prompts)
-                for (_offset, shard_text), spans in zip(shards, shard_spans):
-                    subs = (
-                        shard_for_task(shard_text, spans, context_length, rel_render)
-                        if context_length is not None
-                        else [(0, shard_text, spans, rel_render(shard_text, spans))]
-                    )
-                    rel_sub_counts.append(
-                        [len(sub_spans) for _, _, sub_spans, _ in subs]
-                    )
-                    rel_prompts.extend(p for _, _, _, p in subs)
-                rel_bounds.append((p0, len(rel_prompts)))
-            rel_responses = rel_model(rel_prompts)
-
-            # ---- EL per shard (candidate recompute per shard, H4) ----
-            # build_el_prompt is THE shared EL prompt-side implementation
-            # (operators/el.py); the cache keeps accepted sub-shard prompts
-            # and candidate lookups from running twice
-            el_flag_cache: dict = {}
-
-            def el_render(t, sp):
-                prompt, in_prompt = build_el_prompt(
-                    t, sp, local_kb, top_n, auto_nil, el_examples or []
-                )
-                el_flag_cache[(t, tuple(sp))] = in_prompt
-                return prompt
-
-            el_prompts = []
-            el_sub_in_prompt: List[List[List[bool]]] = []  # per shard: per sub
-            el_bounds = []  # per doc: (start, end) slice into el_prompts
-            for shards, shard_spans in zip(doc_shards, doc_shard_spans):
-                p0 = len(el_prompts)
-                for (_offset, shard_text), spans in zip(shards, shard_spans):
-                    subs = (
-                        shard_for_task(shard_text, spans, context_length, el_render)
-                        if context_length is not None
-                        else [(0, shard_text, spans, el_render(shard_text, spans))]
-                    )
-                    metas = []
-                    for _off, st, sp, prompt in subs:
-                        el_prompts.append(prompt)
-                        metas.append(el_flag_cache[(st, tuple(sp))])
-                    el_sub_in_prompt.append(metas)
-                el_bounds.append((p0, len(el_prompts)))
-            el_responses = el_model(el_prompts)
-
-            # ---- merge shards back to doc coordinates (A1/H3) ----
-            ents_col, rels_col, links_col = [], [], []
-            shard_idx = 0
-            rel_r = 0  # running index into rel_responses (per sub-shard)
-            el_r = 0  # running index into el_responses (per sub-shard)
-            for text, shards, shard_spans in zip(texts, doc_shards, doc_shard_spans):
-                ents: List[dict] = []
-                rels: List[dict] = []
-                kb_ids: List[str] = []
-                ent_offset = 0
-                for (offset, shard_text), spans in zip(shards, shard_spans):
-                    n_ents = len(spans)
-                    # REL: bounds vs each sub-shard's own ents, then shift
-                    # by doc-level offset + preceding sub-shards' ent counts
-                    local_off = 0
-                    for n_sub in rel_sub_counts[shard_idx]:
-                        for dep, dest, relation in parse_rel_response(
-                            rel_responses[rel_r], n_sub
-                        ):
-                            rels.append(
-                                {
-                                    "dep": dep + ent_offset + local_off,
-                                    "dest": dest + ent_offset + local_off,
-                                    "relation": relation,
-                                }
-                            )
-                        local_off += n_sub
-                        rel_r += 1
-                    # EL: positional re-attach within each sub-shard (J7/F9)
-                    for in_prompt in el_sub_in_prompt[shard_idx]:
-                        solutions = parse_el_solutions(el_responses[el_r])
-                        el_r += 1
-                        attached = attach_el_solutions(in_prompt, solutions)
-                        if attached is None:
-                            attached = [NIL] * len(in_prompt)
-                        kb_ids.extend(attached)
-                    # ents: shift char offsets into doc coordinates
-                    ents.extend(
-                        {
-                            "start": s + offset,
-                            "end": e + offset,
-                            "label": label,
-                            "surface": text[s + offset : e + offset],
-                        }
-                        for s, e, label in spans
-                    )
-                    ent_offset += n_ents
-                    shard_idx += 1
-                ents_col.append(ents)
-                rels_col.append(rels)
-                links_col.append(kb_ids)
-
-            out = pdf.drop(columns=[text_col]) if drop_text else pdf.copy()
-            out["ents"] = ents_col
-            out["rels"] = rels_col
-            out["kb_ids"] = links_col
+            texts = [t or "" for t in pdf["content"]]
+            ents, bounds, ner_io = ner_batch(ner_model, texts, **ner)
+            rels, rel_io = rel_batch(rel_model, texts, ents, bounds, **rel)
+            kb_ids, el_io = el_batch(el_model, local_kb, texts, ents, bounds, **el)
+            out = pdf.drop(columns=["content"])
+            out["ents"] = ent_rows(texts, ents)
+            out["rels"] = rels
+            out["kb_ids"] = kb_ids
             if save_io:
                 out["llm_io"] = [
-                    {
-                        "ner": {
-                            "prompts": ner_prompts[na:nb],
-                            "responses": ner_responses[na:nb],
-                        },
-                        "rel": {
-                            "prompts": rel_prompts[ra:rb],
-                            "responses": rel_responses[ra:rb],
-                        },
-                        "el": {
-                            "prompts": el_prompts[ea:eb],
-                            "responses": el_responses[ea:eb],
-                        },
-                    }
-                    for (na, nb), (ra, rb), (ea, eb) in zip(
-                        ner_bounds, rel_bounds, el_bounds
-                    )
+                    {"ner": n, "rel": r, "el": e}
+                    for n, r, e in zip(ner_io, rel_io, el_io)
                 ]
             yield out
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return df.mapInPandas(kernel, schema=StructType(out_fields))

@@ -11,11 +11,16 @@ spaCy token/space arrays; we splice by character offsets, which produces
 the same annotated text (pinned by tests/tasks/test_rel.py:273-291 —
 "Well[ENT0:A] hello[ENT1:B] there[ENT2:C]").
 
-Sharding: pass ``context_length`` to shard oversized docs per task
-(reference shards every task, tasks/rel/task.py + util/sharding.py) —
-the doc is split on span-safe token boundaries, each sub-shard prompted
-with its own entities, and parsed relation indices are shifted back into
-doc coordinates. Cross-shard relations are invisible to both engines.
+Sharding (reference shards every task, tasks/rel/task.py +
+util/sharding.py): each NER shard is prompted with ITS OWN entities
+(indices local to the shard) and sub-sharded on span-safe token
+boundaries when the REL prompt overflows ``context_length``; parsed
+relations are bounds-checked against the unit's entity count (F3) and
+shifted back into doc coordinates. (Deliberate divergence: the
+reference's REL reducer concatenates relation items without
+re-indexing, rel/util.py:79-102; we shift them so every index addresses
+the doc-level ents array.) Cross-shard relations are invisible to both
+engines — neither prompt contains both entities.
 """
 
 from __future__ import annotations
@@ -32,10 +37,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..functions.normalizers import split_labels
 from ..functions.response_parsers import parse_rel_response
 from ..model import resolve_model
 from ..templates import render_rel_prompt
-from .ner import IO_TYPE
+from .ner import IO_TYPE, SHARDS_COL, doc_inputs
+from .sharding import task_units
 
 REL_TYPE = ArrayType(
     StructType(
@@ -69,79 +76,63 @@ def preannotate(text: str, ents: List[Tuple[int, int, str]]) -> str:
     return "".join(out)
 
 
+def rel_batch(
+    model,
+    texts: List[str],
+    ents: List[List[Tuple[int, int, str]]],
+    bounds: list,
+    *,
+    labels,
+    context_length: Optional[int] = None,
+    examples: Optional[list] = None,
+) -> Tuple[List[List[dict]], List[dict]]:
+    """REL over one batch of docs (``task_units`` per NER shard). Returns,
+    per doc, the ``rels`` value and the save_io prompt/response pair."""
+    label_list = split_labels(labels)
+
+    def render(text, spans):
+        return render_rel_prompt(preannotate(text, spans), label_list, examples=examples)
+
+    def parse(_text, spans, response, offset):
+        return [
+            {"dep": dep + offset, "dest": dest + offset, "relation": relation}
+            for dep, dest, relation in parse_rel_response(response, len(spans))
+        ]
+
+    return task_units(model, texts, ents, bounds, context_length, render, parse)
+
+
 def extract_relations(
     df: DataFrame,
     *,
     model_spec: dict,
     labels,
-    text_col: str = "content",
-    ents_col: str = "ents",
-    definitions: Optional[dict] = None,
     examples: Optional[list] = None,
-    out_col: str = "rels",
     context_length: Optional[int] = None,
     save_io: bool = False,
 ) -> DataFrame:
     """Append a ``rels`` column of (dep, dest, relation) items whose indices
-    reference the ``ents`` array (bounds-checked, F3). With
-    ``context_length`` set, oversized docs are sub-sharded per task (H2-H4).
+    reference the ``ents`` array (``rel_batch`` in one narrow mapInPandas).
     """
-    from ..functions.normalizers import split_labels
-    from .sharding import shard_for_task
-
-    label_list = split_labels(labels)
-    out_fields = df.schema.fields + [StructField(out_col, REL_TYPE)]
+    has_shards = SHARDS_COL in df.columns
+    out_fields = df.schema.fields + [StructField("rels", REL_TYPE)]
     if save_io:
         out_fields.append(StructField("rel_io", IO_TYPE))
-    out_schema = StructType(out_fields)
-    examples = examples or []
-    definitions = definitions or {}
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         model = resolve_model(model_spec)
-
-        def rel_render(t, sp):
-            return render_rel_prompt(preannotate(t, sp), label_list, definitions, examples)
-
         for pdf in batches:
-            prompts = []
-            doc_sub_counts = []  # per doc: n_ents per sub-shard
-            prompt_bounds = []  # per doc: (start, end) slice into prompts
-            for text, ents in zip(pdf[text_col], pdf[ents_col]):
-                ent_tuples = [(e["start"], e["end"], e["label"]) for e in ents]
-                subs = (
-                    shard_for_task(text or "", ent_tuples, context_length, rel_render)
-                    if context_length is not None
-                    else [
-                        (0, text or "", ent_tuples, rel_render(text or "", ent_tuples))
-                    ]
-                )
-                doc_sub_counts.append([len(sp) for _, _, sp, _ in subs])
-                p0 = len(prompts)
-                prompts.extend(p for _, _, _, p in subs)
-                prompt_bounds.append((p0, len(prompts)))
-            responses = model(prompts)
-            rels_col = []
-            r = 0
-            for counts in doc_sub_counts:
-                rels, off = [], 0
-                for n_sub in counts:
-                    rels.extend(
-                        {"dep": dep + off, "dest": dest + off, "relation": relation}
-                        for dep, dest, relation in parse_rel_response(
-                            responses[r], n_sub
-                        )
-                    )
-                    off += n_sub
-                    r += 1
-                rels_col.append(rels)
+            rels, io = rel_batch(
+                model,
+                *doc_inputs(pdf, has_shards),
+                labels=labels,
+                context_length=context_length,
+                examples=examples,
+            )
             out = pdf.copy()
-            out[out_col] = rels_col
+            out["rels"] = rels
             if save_io:
-                out["rel_io"] = [
-                    {"prompts": prompts[a:b], "responses": responses[a:b]}
-                    for a, b in prompt_bounds
-                ]
+                out["rel_io"] = io
             yield out
 
-    return df.mapInPandas(kernel, schema=out_schema)
+    return df.mapInPandas(kernel, schema=StructType(out_fields))

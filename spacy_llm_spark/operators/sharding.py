@@ -16,12 +16,17 @@ This is a pure-Python kernel used *inside* the stage mapInPandas functions:
 a doc explodes into shards and is reduced back within the same Arrow batch
 (no explode/groupBy shuffle — shard fan-out is strictly local, which is the
 idiomatic-Spark replacement for the reference's generator plumbing).
+
+One sharding rule serves both the fused and the staged path: NER shards
+the doc (``make_shards``) and reports each shard's (start, end) character
+bounds; REL and EL then prompt per NER shard, sub-sharding a shard only
+when their longer prompt overflows (``task_units``).
 """
 
 from __future__ import annotations
 
 import re
-from typing import Callable, List, Tuple
+from typing import Callable, List, Optional, Sequence, Tuple
 
 _WS_TOKEN_RE = re.compile(r"\S+")
 
@@ -180,3 +185,75 @@ def merge_shard_spans(
     for offset, spans in shard_results:
         merged.extend((s + offset, e + offset, label) for s, e, label in spans)
     return merged
+
+
+def call_per_doc(model, doc_prompts: List[List[str]]) -> List[List[str]]:
+    """One batched model call over every doc's prompts (X1/R3); returns
+    the responses regrouped per doc."""
+    responses = model([p for prompts in doc_prompts for p in prompts])
+    out, r = [], 0
+    for prompts in doc_prompts:
+        out.append(responses[r : r + len(prompts)])
+        r += len(prompts)
+    return out
+
+
+def io_pairs(doc_prompts: List[List[str]], doc_responses: List[List[str]]) -> List[dict]:
+    """Per-doc save_io payload: {"prompts": [...], "responses": [...]}."""
+    return [
+        {"prompts": p, "responses": r} for p, r in zip(doc_prompts, doc_responses)
+    ]
+
+
+def task_units(
+    model,
+    texts: List[str],
+    ents: List[List[Tuple[int, int, str]]],
+    bounds: Sequence[Optional[List[Tuple[int, int]]]],
+    context_length: Optional[int],
+    render: Callable[[str, List[Tuple[int, int, str]]], str],
+    parse: Callable[[str, List[Tuple[int, int, str]], str, int], list],
+) -> Tuple[list, List[dict]]:
+    """The REL/EL loop over one batch, shared by the fused and staged paths.
+
+    Each doc is split into prompt units: one per NER shard in ``bounds``
+    (doc-coordinate (start, end) pairs; ``None`` = the whole doc is one
+    shard), holding the ents that start before the next shard does, in
+    shard-local offsets. With ``context_length`` set a unit whose prompt
+    overflows is sub-sharded by ``shard_for_task``. All units' prompts go
+    through ONE model call; ``parse(unit_text, unit_spans, response,
+    ent_offset)`` then maps each response back into doc coordinates,
+    ``ent_offset`` being the doc index of the unit's first ent.
+
+    Returns (per-doc concatenated parse results, per-doc io pairs)."""
+    doc_units = []
+    for text, doc_ents, doc_bounds in zip(texts, ents, bounds):
+        doc_bounds = doc_bounds if doc_bounds is not None else [(0, len(text))]
+        units, j = [], 0
+        for k, (start, end) in enumerate(doc_bounds):
+            nxt = doc_bounds[k + 1][0] if k + 1 < len(doc_bounds) else None
+            i = j
+            while j < len(doc_ents) and (nxt is None or doc_ents[j][0] < nxt):
+                j += 1
+            shard_text = text[start:end]
+            spans = [(s - start, e - start, l) for s, e, l in doc_ents[i:j]]
+            if context_length is None:
+                units.append((shard_text, spans, render(shard_text, spans)))
+            else:
+                units.extend(
+                    (st, sp, p)
+                    for _, st, sp, p in shard_for_task(
+                        shard_text, spans, context_length, render
+                    )
+                )
+        doc_units.append(units)
+    doc_prompts = [[p for _, _, p in units] for units in doc_units]
+    doc_responses = call_per_doc(model, doc_prompts)
+    results = []
+    for units, responses in zip(doc_units, doc_responses):
+        out, offset = [], 0
+        for (unit_text, spans, _), response in zip(units, responses):
+            out.extend(parse(unit_text, spans, response, offset))
+            offset += len(spans)
+        results.append(out)
+    return results, io_pairs(doc_prompts, doc_responses)

@@ -17,7 +17,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .ner import extract_mentions
+from .ner import SHARDS_COL, extract_mentions
 
 
 def extract_spans(
@@ -25,38 +25,23 @@ def extract_spans(
     *,
     model_spec: dict,
     labels,
-    text_col: str = "content",
-    normalizer: str = "lowercase",
-    alignment_mode: str = "contract",
-    case_sensitive_matching: bool = False,
     context_length: Optional[int] = None,
     definitions: Optional[dict] = None,
     examples: Optional[list] = None,
     out_col: str = "spans",
-    overlap_mode: str = "per_surface",
 ) -> DataFrame:
     """Append a ``spans`` column of aligned, possibly-overlapping spans
-    (sorted by (start, end, label), exact duplicates removed).
-
-    ``overlap_mode``: 'per_surface' (default; our more-robust cursor
-    discipline — intentional divergence, documented in find_spans_cot) or
-    'reference' (byte-parity with the reference's global start-rewind
-    cursor, span/parser.py:152)."""
+    (sorted by (start, end, label), exact duplicates removed)."""
     return extract_mentions(
         df,
         model_spec=model_spec,
         labels=labels,
-        text_col=text_col,
-        normalizer=normalizer,
-        alignment_mode=alignment_mode,
-        case_sensitive_matching=case_sensitive_matching,
         allow_overlap=True,
-        overlap_mode=overlap_mode,
         context_length=context_length,
         definitions=definitions,
         examples=examples,
         out_col=out_col,
-    )
+    ).drop(SHARDS_COL)
 
 
 def spans_table(

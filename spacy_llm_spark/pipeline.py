@@ -1,21 +1,24 @@
 """End-to-end KG-construction pipeline (the `assemble(config)` analog, S9).
 
     corpus (repo, path, commit, lang, content, content_sha256)
-      -> [checkpoint anti-join] NER stage   (narrow mapInPandas)
-      -> [checkpoint anti-join] REL stage   (narrow mapInPandas)
-      -> [checkpoint anti-join] EL stage    (narrow mapInPandas, broadcast KB)
+      -> [checkpoint anti-join] extraction: NER -> REL -> EL in ONE narrow
+         mapInPandas pass (default), or three staged passes (fused=False)
       -> mentions / relations / links / edges tables (native explodes)
       -> canonicalize (salted groupBy + connected components)
       -> vertices / canonical edges + metrics
 
-The three extraction stages are all narrow: the corpus is read once,
-partitioning is preserved end-to-end, and the only shuffles in the whole
-job are (a) the optional checkpoint anti-joins (broadcast-able key sets),
-(b) the explodes' downstream aggregations, and (c) canonicalization.
+Extraction is narrow: the corpus is read once, partitioning is preserved
+end-to-end, and the only shuffles in the whole job are (a) the optional
+checkpoint anti-join (one content-keyed checkpoint for the fused pass,
+one per stage when staged), (b) the explodes' downstream aggregations,
+and (c) canonicalization. ``_task_args`` is the one place per-task
+arguments are built from ``KGConfig``; both paths use it.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import json
 import time
 from dataclasses import dataclass, field
 from typing import Optional
@@ -46,7 +49,10 @@ class KGConfig:
     auto_nil: bool = True
     context_length: Optional[int] = None
     checkpoint_dir: Optional[str] = None
-    fused: bool = True  # False = staged NER/REL/EL with INDEPENDENT checkpoints
+    # True = one NER->REL->EL pass with one checkpoint; False = three staged
+    # passes with INDEPENDENT checkpoints. Same kernels, same output columns
+    # ents/rels/kb_ids (staged keeps content and names io ner_io/rel_io/el_io)
+    fused: bool = True
     span_format: str = "cot"  # 'cot' (NER v3) | 'v2' (LABEL: phrase lines)
     allow_overlap: bool = False  # True = SpanCat semantics (overlapping spans)
     # few-shot prompt examples (driver-side constants, broadcast into the
@@ -69,39 +75,22 @@ class KGConfig:
         return {"name": "top_candidate_el"}
 
     def to_json(self) -> str:
-        """S8 serde: full config as JSON (round-trips via from_json)."""
-        import json
-
-        return json.dumps(
-            {
-                "labels": list(self.labels),
-                "rel_labels": list(self.rel_labels),
-                "ner_dictionary": self.ner_dictionary,
-                "rel_rules": self.rel_rules,
-                "top_n_candidates": self.top_n_candidates,
-                "auto_nil": self.auto_nil,
-                "context_length": self.context_length,
-                "checkpoint_dir": self.checkpoint_dir,
-                "span_format": self.span_format,
-                "allow_overlap": self.allow_overlap,
-                "fused": self.fused,
-                "save_io": self.save_io,
-            },
-            sort_keys=True,
-        )
+        """S8 serde: every field as JSON (round-trips via from_json)."""
+        return json.dumps(dataclasses.asdict(self), sort_keys=True)
 
     @classmethod
     def from_json(cls, payload: str) -> "KGConfig":
-        import json
-
         data = json.loads(payload)
         data["labels"] = tuple(data["labels"])
         data["rel_labels"] = tuple(data["rel_labels"])
         return cls(**data)
 
     def fingerprint_config(self) -> dict:
+        """Checkpoint identity: every field that shapes a prompt, a parse
+        or the persisted annotation schema."""
         return {
             "labels": list(self.labels),
+            "rel_labels": list(self.rel_labels),
             "ner_dictionary": self.ner_dictionary,
             "rel_rules": self.rel_rules,
             "top_n": self.top_n_candidates,
@@ -112,6 +101,10 @@ class KGConfig:
             # save_io changes the persisted annotation schema, so it is
             # part of the checkpoint identity
             "save_io": self.save_io,
+            "ner_examples": self.ner_examples,
+            "rel_examples": self.rel_examples,
+            "el_examples": self.el_examples,
+            "label_definitions": self.label_definitions,
         }
 
 
@@ -129,6 +122,55 @@ class KGResult:
     metrics: Optional[DataFrame] = None
 
 
+def _task_args(cfg: KGConfig, kb: KnowledgeBase) -> dict:
+    """Task name -> keyword arguments of its staged operator, from ``cfg``:
+    the one place the fused, staged and staged-checkpoint paths take the
+    per-task arguments from."""
+    shared = {"context_length": cfg.context_length}
+    return {
+        "ner": dict(
+            model_spec=cfg.ner_model_spec(),
+            labels=list(cfg.labels),
+            span_format=cfg.span_format,
+            allow_overlap=cfg.allow_overlap,
+            definitions=cfg.label_definitions,
+            examples=cfg.ner_examples,
+            **shared,
+        ),
+        "rel": dict(
+            model_spec=cfg.rel_model_spec(),
+            labels=list(cfg.rel_labels),
+            examples=cfg.rel_examples,
+            **shared,
+        ),
+        "el": dict(
+            model_spec=cfg.el_model_spec(),
+            kb=kb,
+            top_n=cfg.top_n_candidates,
+            auto_nil=cfg.auto_nil,
+            examples=cfg.el_examples,
+            **shared,
+        ),
+    }
+
+
+_STAGES = (
+    ("ner", ner_op.extract_mentions),
+    ("rel", rel_op.extract_relations),
+    ("el", el_op.link_entities),
+)
+
+
+def _annotate_staged(corpus, cfg, kb, run=lambda name, df, fn: fn(df)) -> DataFrame:
+    """Chain the staged operators; ``run(name, df, fn)`` applies each stage
+    (the checkpoint path wraps it in ``CheckpointManager.run_stage``)."""
+    args = _task_args(cfg, kb)
+    df = corpus
+    for name, op in _STAGES:
+        df = run(name, df, lambda d, op=op, kw=args[name]: op(d, save_io=cfg.save_io, **kw))
+    return df.drop(ner_op.SHARDS_COL)
+
+
 def annotate_corpus(
     corpus: DataFrame,
     cfg: KGConfig,
@@ -141,56 +183,14 @@ def annotate_corpus(
     ``fused=True`` (default) runs NER+REL+EL in ONE mapInPandas pass —
     one Arrow boundary crossing instead of three (R4 pipelining).
     ``fused=False`` chains the standalone stage operators (independent
-    checkpoints / resources per stage)."""
+    checkpoints / resources per stage). Both run the same per-task kernels
+    on the same arguments."""
     kb = kb or build_code_kb()
     if fused:
         from .operators.fused import annotate_fused
 
-        return annotate_fused(
-            corpus,
-            ner_model_spec=cfg.ner_model_spec(),
-            rel_model_spec=cfg.rel_model_spec(),
-            el_model_spec=cfg.el_model_spec(),
-            kb=kb,
-            labels=list(cfg.labels),
-            rel_labels=list(cfg.rel_labels),
-            context_length=cfg.context_length,
-            top_n=cfg.top_n_candidates,
-            auto_nil=cfg.auto_nil,
-            span_format=cfg.span_format,
-            allow_overlap=cfg.allow_overlap,
-            ner_examples=cfg.ner_examples,
-            rel_examples=cfg.rel_examples,
-            el_examples=cfg.el_examples,
-            definitions=cfg.label_definitions,
-            save_io=cfg.save_io,
-        )
-    df = ner_op.extract_mentions(
-        corpus,
-        model_spec=cfg.ner_model_spec(),
-        labels=list(cfg.labels),
-        context_length=cfg.context_length,
-        span_format=cfg.span_format,
-        allow_overlap=cfg.allow_overlap,
-        save_io=cfg.save_io,
-    )
-    df = rel_op.extract_relations(
-        df,
-        model_spec=cfg.rel_model_spec(),
-        labels=list(cfg.rel_labels),
-        context_length=cfg.context_length,
-        save_io=cfg.save_io,
-    )
-    df = el_op.link_entities(
-        df,
-        kb=kb,
-        model_spec=cfg.el_model_spec(),
-        top_n=cfg.top_n_candidates,
-        auto_nil=cfg.auto_nil,
-        context_length=cfg.context_length,
-        save_io=cfg.save_io,
-    )
-    return df
+        return annotate_fused(corpus, save_io=cfg.save_io, **_task_args(cfg, kb))
+    return _annotate_staged(corpus, cfg, kb)
 
 
 def run_pipeline(
@@ -208,70 +208,26 @@ def run_pipeline(
 
     validate_stage_chain(corpus)
 
-    if cfg.checkpoint_dir and cfg.fused:
-        ckpt = CheckpointManager(cfg.checkpoint_dir)
-        annotated = ckpt.run_stage(
-            spark,
-            "annotate",
-            corpus,
-            lambda df: annotate_corpus(df, cfg, kb),
-            config=cfg.fingerprint_config(),
-            micro_batches=cfg.micro_batches,
-        )
-    elif cfg.checkpoint_dir:
-        # Staged mode: each task stage owns an INDEPENDENT content-keyed
-        # checkpoint (the reference caches per pipeline component) — a
-        # kill between stages resumes with the completed stages as pure
-        # cache hits, and stages can be re-run with different cluster
-        # resources without invalidating one another.
+    if cfg.checkpoint_dir:
+        # Fused: one content-keyed checkpoint for the whole pass. Staged:
+        # each task stage owns an INDEPENDENT checkpoint (the reference
+        # caches per pipeline component) — a kill between stages resumes
+        # with the completed stages as pure cache hits, and stages can be
+        # re-run with different cluster resources without invalidating
+        # one another.
         ckpt = CheckpointManager(cfg.checkpoint_dir)
         fp = cfg.fingerprint_config()
-        ner_out = ckpt.run_stage(
-            spark,
-            "ner",
-            corpus,
-            lambda df: ner_op.extract_mentions(
-                df,
-                model_spec=cfg.ner_model_spec(),
-                labels=list(cfg.labels),
-                context_length=cfg.context_length,
-                span_format=cfg.span_format,
-                allow_overlap=cfg.allow_overlap,
-                save_io=cfg.save_io,
-            ),
-            config={**fp, "stage": "ner"},
-            micro_batches=cfg.micro_batches,
-        )
-        rel_out = ckpt.run_stage(
-            spark,
-            "rel",
-            ner_out,
-            lambda df: rel_op.extract_relations(
-                df,
-                model_spec=cfg.rel_model_spec(),
-                labels=list(cfg.rel_labels),
-                context_length=cfg.context_length,
-                save_io=cfg.save_io,
-            ),
-            config={**fp, "stage": "rel"},
-            micro_batches=cfg.micro_batches,
-        )
-        annotated = ckpt.run_stage(
-            spark,
-            "el",
-            rel_out,
-            lambda df: el_op.link_entities(
-                df,
-                kb=kb,
-                model_spec=cfg.el_model_spec(),
-                top_n=cfg.top_n_candidates,
-                auto_nil=cfg.auto_nil,
-                context_length=cfg.context_length,
-                save_io=cfg.save_io,
-            ),
-            config={**fp, "stage": "el"},
-            micro_batches=cfg.micro_batches,
-        )
+
+        def run(name, df, fn):
+            config = fp if cfg.fused else {**fp, "stage": name}
+            return ckpt.run_stage(
+                spark, name, df, fn, config=config, micro_batches=cfg.micro_batches
+            )
+
+        if cfg.fused:
+            annotated = run("annotate", corpus, lambda df: annotate_corpus(df, cfg, kb))
+        else:
+            annotated = _annotate_staged(corpus, cfg, kb, run)
     else:
         ckpt = None
         # Materialize the (narrow, expensive) annotation pass once; the

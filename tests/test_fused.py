@@ -1,28 +1,101 @@
 """Fused stage must be row-identical to the chained ner/rel/el stages."""
 
+import pytest
+
 from spacy_llm_spark.corpus import corpus_from_documents
 from spacy_llm_spark.kb import build_code_kb
 from spacy_llm_spark.pipeline import KGConfig, annotate_corpus
 
 
-def test_fused_matches_unfused(spark, sf_dir):
-    corpus = corpus_from_documents(spark, sf_dir).limit(40).cache()
-    cfg = KGConfig()
-    kb = build_code_kb()
-    fused = {
-        r.doc_id: r
-        for r in annotate_corpus(corpus, cfg, kb, fused=True).collect()
-    }
-    unfused = {
-        r.doc_id: r
-        for r in annotate_corpus(corpus, cfg, kb, fused=False).collect()
-    }
-    assert fused.keys() == unfused.keys()
+def _long_docs(spark, sf_dir, n_docs=6, per_doc=8):
+    """Long docs: each the concatenation of ``per_doc`` sf documents."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    texts = [
+        r.text
+        for r in spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
+        .orderBy("doc_id")
+        .limit(n_docs * per_doc)
+        .collect()
+    ]
+    rows = [
+        (i, " ".join(texts[i * per_doc : (i + 1) * per_doc])) for i in range(n_docs)
+    ]
+    return spark.createDataFrame(rows, "doc_id long, content string").withColumn(
+        "content_sha256", F.sha2("content", 256)
+    )
+
+
+def _fused_and_staged(corpus, cfg, kb):
+    """doc_id -> row, for the fused and the staged path."""
+    return [
+        {r.doc_id: r for r in annotate_corpus(corpus, cfg, kb, fused=f).collect()}
+        for f in (True, False)
+    ]
+
+
+def _assert_same_prompts(fused, staged):
     for doc_id, f in fused.items():
-        u = unfused[doc_id]
-        assert f.ents == u.ents
-        assert f.rels == u.rels
-        assert f.kb_ids == u.kb_ids
+        s = staged[doc_id]
+        for task in ("ner", "rel", "el"):
+            io = getattr(s, f"{task}_io")
+            assert f.llm_io[task].prompts == io.prompts, (doc_id, task)
+            assert f.llm_io[task].responses == io.responses, (doc_id, task)
+
+
+@pytest.mark.parametrize("context_length", [None, 80])
+def test_fused_matches_unfused(spark, sf_dir, context_length):
+    """Both paths run the same kernels and sharding rule: identical
+    ents/rels/kb_ids and identical per-task prompts, sharded or not."""
+    corpus = _long_docs(spark, sf_dir).cache()
+    cfg = KGConfig(context_length=context_length, save_io=True)
+    fused, staged = _fused_and_staged(corpus, cfg, build_code_kb())
+    assert fused.keys() == staged.keys()
+    for doc_id, f in fused.items():
+        s = staged[doc_id]
+        assert f.ents and f.ents == s.ents
+        assert f.rels == s.rels
+        assert f.kb_ids == s.kb_ids
+    _assert_same_prompts(fused, staged)
+    if context_length is not None:
+        assert all(len(f.llm_io["ner"].prompts) > 1 for f in fused.values())
+
+
+def test_staged_prompts_carry_examples_and_definitions(spark, sf_dir):
+    """Every prompt input on KGConfig reaches both paths: the staged and
+    fused save_io prompts are byte-identical and contain the examples and
+    label definitions."""
+    corpus = _long_docs(spark, sf_dir, n_docs=3, per_doc=2).cache()
+    cfg = KGConfig(
+        save_io=True,
+        ner_examples=[
+            {
+                "text": "use join here",
+                "spans": [
+                    {"text": "join", "is_entity": True, "label": "OP", "reason": "op"}
+                ],
+            }
+        ],
+        rel_examples=[
+            {
+                "text": "spark[ENT0:SYS] join[ENT1:OP]",
+                "relations": [{"dep": 0, "dest": 1, "relation": "executes"}],
+            }
+        ],
+        el_examples=[
+            {"text": "a *join* b", "mentions": ["join"], "solutions": ["OP_JOIN"]}
+        ],
+        label_definitions={"OP": "a relational operator"},
+    )
+    fused, staged = _fused_and_staged(corpus, cfg, build_code_kb())
+    _assert_same_prompts(fused, staged)
+    for s in staged.values():
+        assert "use join here" in s.ner_io.prompts[0]
+        assert "OP: a relational operator" in s.ner_io.prompts[0]
+        assert "spark[ENT0:SYS] join[ENT1:OP]" in s.rel_io.prompts[0]
+        assert "a *join* b" in s.el_io.prompts[0]
 
 
 def test_fused_with_sharding(spark, sf_dir):
@@ -61,36 +134,14 @@ def test_fused_span_format_v2(spark, sf_dir):
     as the CoT grammar for the dictionary corpus."""
     corpus = corpus_from_documents(spark, sf_dir).limit(20).cache()
     kb = build_code_kb()
-    v2 = annotate_fused_with_model(spark, corpus, kb, "v2")
-    cot = annotate_fused_with_model(spark, corpus, kb, "cot")
+    v2, cot = (
+        {
+            r.doc_id: ([tuple(e) for e in r.ents], r.kb_ids)
+            for r in annotate_corpus(corpus, KGConfig(span_format=fmt), kb).collect()
+        }
+        for fmt in ("v2", "cot")
+    )
     assert v2 == cot
-
-
-def annotate_fused_with_model(spark, corpus, kb, fmt):
-    from spacy_llm_spark.kb import CODE_NER_DICT, CODE_REL_RULES
-    from spacy_llm_spark.operators.fused import annotate_fused
-
-    ner_spec = (
-        {"name": "dict_ner_v2", "dictionary": dict(CODE_NER_DICT)}
-        if fmt == "v2"
-        else {"name": "dict_ner", "dictionary": dict(CODE_NER_DICT)}
-    )
-    out = annotate_fused(
-        corpus,
-        ner_model_spec=ner_spec,
-        rel_model_spec={
-            "name": "rule_rel",
-            "rules": {f"{a}|{b}": p for (a, b), p in CODE_REL_RULES.items()},
-        },
-        el_model_spec={"name": "top_candidate_el"},
-        kb=kb,
-        labels=["OP", "TABLE", "SYS"],
-        rel_labels=sorted(set(CODE_REL_RULES.values())),
-        span_format=fmt,
-    )
-    return {
-        r.doc_id: ([tuple(e) for e in r.ents], r.kb_ids) for r in out.collect()
-    }
 
 
 def test_unfused_with_sharding(spark, sf_dir):

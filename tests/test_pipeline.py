@@ -88,6 +88,29 @@ def test_config_guard(spark, sf_dir, tmp_path):
         run_pipeline(spark, corpus, cfg2, materialize_canonical=False)
 
 
+@pytest.mark.parametrize(
+    "change",
+    [
+        {"rel_labels": ("executes",)},
+        {"ner_examples": [{"text": "a join", "spans": []}]},
+        {"rel_examples": [{"text": "a join", "relations": []}]},
+        {"el_examples": [{"text": "a *join*", "mentions": [], "solutions": []}]},
+        {"label_definitions": {"OP": "an operator"}},
+    ],
+    ids=lambda change: next(iter(change)),
+)
+def test_config_guard_prompt_fields(spark, sf_dir, tmp_path, change):
+    """Every field that shapes a prompt is part of the checkpoint identity:
+    resuming with it changed must raise, not return stale annotations."""
+    corpus = corpus_from_documents(spark, sf_dir).limit(5)
+    ckpt = str(tmp_path / "ckpt")
+    run_pipeline(spark, corpus, KGConfig(checkpoint_dir=ckpt), materialize_canonical=False)
+    with pytest.raises(ValueError, match="different configuration"):
+        run_pipeline(
+            spark, corpus, KGConfig(checkpoint_dir=ckpt, **change), materialize_canonical=False
+        )
+
+
 # -- scoring golden (test_ner.py:697-718 formulas) ---------------------------
 
 

@@ -1,6 +1,8 @@
 """Registry (custom tasks), retry policy, annotation merge, config serde,
 and multi-token dictionary NER."""
 
+import dataclasses
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
@@ -86,6 +88,32 @@ def test_kgconfig_json_round_trip():
     cfg = KGConfig(top_n_candidates=2, span_format="v2", context_length=128)
     back = KGConfig.from_json(cfg.to_json())
     assert back == cfg
+    # every field set away from its default survives the round trip
+    full = KGConfig(
+        labels=("OP",),
+        rel_labels=("executes",),
+        ner_dictionary={"join": "OP"},
+        rel_rules={"SYS|OP": "executes"},
+        top_n_candidates=3,
+        auto_nil=False,
+        context_length=256,
+        checkpoint_dir="/tmp/ck",
+        fused=False,
+        span_format="v2",
+        allow_overlap=True,
+        micro_batches=4,
+        save_io=True,
+        ner_examples=[{"text": "a join", "spans": []}],
+        rel_examples=[{"text": "a join", "relations": []}],
+        el_examples=[{"text": "a *join*", "mentions": [], "solutions": []}],
+        label_definitions={"OP": "an operator"},
+    )
+    defaults = KGConfig()
+    assert all(
+        getattr(full, f.name) != getattr(defaults, f.name)
+        for f in dataclasses.fields(KGConfig)
+    )
+    assert KGConfig.from_json(full.to_json()) == full
 
 
 def test_multi_token_dictionary_ner():

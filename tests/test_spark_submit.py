@@ -30,7 +30,7 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path, sf_dir):
     sys.path.insert(0, os.path.join(REPO, "scripts"))
     import make_pyfiles_zip
 
-    zip_path = make_pyfiles_zip.main("dist/spacy_llm_spark.zip")
+    zip_path = make_pyfiles_zip.main(str(tmp_path / "spacy_llm_spark.zip"))
 
     script = tmp_path / "run_kg_job.py"
     shutil.copyfile(os.path.join(REPO, "scripts", "run_kg_job.py"), script)
