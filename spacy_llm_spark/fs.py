@@ -30,12 +30,6 @@ from typing import List, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 
-# Optimization-round diagnostics: SPARK_GRAFT_CUT_PROFILE=1 prints one
-# stderr line per eager lineage cut (wall seconds + call site), making
-# the per-round cost of the iterative operators visible without the UI.
-# Off by default; zero overhead in the normal path.
-_CUT_PROFILE = os.environ.get("SPARK_GRAFT_CUT_PROFILE", "")
-
 # ---------------------------------------------------------------------------
 # Hadoop FileSystem helpers (driver-side metadata I/O)
 # ---------------------------------------------------------------------------
@@ -219,7 +213,11 @@ def cut_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 
 
 def _cut(df: DataFrame, eager: bool) -> DataFrame:
-    if _CUT_PROFILE and eager:
+    # Diagnostics: SPARK_GRAFT_CUT_PROFILE=1 prints one stderr line per
+    # eager lineage cut (wall seconds + call site), making the per-round
+    # cost of the iterative operators visible without the UI. Read per
+    # call, so setting it mid-session takes effect; off by default.
+    if eager and os.environ.get("SPARK_GRAFT_CUT_PROFILE"):
         import sys
         import time
         import traceback

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..fs import cut_lineage
 from ..kb import NIL
+from ..session import local_frame
 
 logger = logging.getLogger(__name__)
 
@@ -206,6 +207,21 @@ def _star_round(e: DataFrame) -> DataFrame:
     )
 
 
+def order_encode(nodes: DataFrame, col: str, id_col: str) -> DataFrame:
+    """ORDER-PRESERVING dictionary encoding (guide §2.3 narrower types):
+    (``col``, ``id_col``) for the distinct values of ``nodes.col``, where
+    the long ids are strictly increasing in the order of ``col``.
+
+    monotonically_increasing_id over the SORTED frame: partition index in
+    the high bits, row position in the low bits, and the range-partitioned
+    sort puts lower values in lower partitions; the expression is
+    non-deterministic, so Catalyst keeps it above the sort. Lineage is cut,
+    so the ids are computed once. ``nodes`` must hold distinct values."""
+    return cut_lineage(
+        nodes.orderBy(col).select(col, F.monotonically_increasing_id().alias(id_col))
+    )
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
@@ -252,9 +268,7 @@ def connected_components(
         uf = UnionFind()
         for row in head:
             uf.union(row[0], row[1])
-        return spark.createDataFrame(
-            uf.items(), "node string, component string"
-        )
+        return local_frame(spark, uf.items(), "node string, component string")
 
     # all_nodes from the RAW edge set: a node appearing only in self-loop
     # edges is still a (singleton) component, matching the driver path
@@ -264,21 +278,13 @@ def connected_components(
         .distinct()
     )
     all_nodes = cut_lineage(all_nodes)
-    # ORDER-PRESERVING dictionary encoding for the star rounds (guide
-    # §2.3 narrower types): each round's two window sorts and the
-    # bounding distinct hash/sort/shuffle node ids several times, so
-    # arbitrary-width ids are encoded once to longs that are monotone in
-    # the node order (monotonically_increasing_id over the SORTED node
-    # frame: partition index in the high bits, row position in the low
-    # bits; the expression is non-deterministic so Catalyst keeps it
-    # above the sort). Min-label arithmetic commutes with the bijection,
-    # so the decoded labels are bit-identical to the direct-id rounds —
-    # and identical to the driver union-find path's convention.
-    vmap = cut_lineage(
-        all_nodes.orderBy("node").select(
-            "node", F.monotonically_increasing_id().alias("_nid")
-        )
-    )
+    # each star round's two window sorts and the bounding distinct
+    # hash/sort/shuffle node ids several times, so arbitrary-width ids are
+    # encoded once to order-preserving longs. Min-label arithmetic
+    # commutes with the bijection, so the decoded labels are
+    # bit-identical to the direct-id rounds — and identical to the driver
+    # union-find path's convention.
+    vmap = order_encode(all_nodes, "node", "_nid")
     enc_edges = (
         edges.join(vmap.select(F.col("node").alias("src"),
                                F.col("_nid").alias("_ns")), "src")
@@ -499,19 +505,11 @@ def canonical_vertices(
             (node, uf.find(node), not node.startswith("surface:"))
             for node in sorted(nodes)
         ]
-        out = links.sparkSession.createDataFrame(
-            rows, "node string, component string, is_kb boolean"
+        # a driver-built LocalRelation: its size is known at plan time, so
+        # canonical_edges' broadcast gate sees a small map as small
+        return local_frame(
+            links.sparkSession, rows, "node string, component string, is_kb boolean"
         )
-        # the driver path KNOWS the map size — it just built it — while
-        # downstream consumers (canonical_edges' plan-time gate) only see
-        # a LogicalRDD with unknown stats and would conservatively
-        # decline to broadcast, paying the triple table's shuffle write
-        # before AQE converts. Attach the hint here, where the knowledge
-        # lives, for maps comfortably under the gate's byte budget
-        # (~100 B/row driver-side estimate).
-        if len(rows) * 100 <= _BROADCAST_VMAP_DEFAULT:
-            out = out.hint("broadcast")
-        return out
 
     edges = pairs.where(F.col("kb_id") != NIL).select(
         F.concat(F.lit("surface:"), F.col("surface_norm")).alias("src"),

@@ -23,6 +23,12 @@ Idempotency at scale: each run appends only keys absent from the
 checkpoint, so re-running after a mid-job kill never duplicates triples;
 the anti-join is the exactly-once gate (at-least-once file append +
 key-level dedup on read).
+
+Parallelism: the work still to do is deduped on the key in ONE exchange
+sized to the cores (``defaultParallelism`` hash partitions). The stage fn
+costs milliseconds of model work per row but the rows are only bytes, so
+the by-bytes AQE coalescing of a plain dedup would run the whole stage as
+one task.
 """
 
 from __future__ import annotations
@@ -38,6 +44,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql.types import StructType
 
 from .. import fs
+from ..session import local_frame
 
 
 def _obs_rows(obs: Observation) -> Optional[int]:
@@ -220,6 +227,10 @@ class CheckpointManager:
         distinct content hash. Mirrors the reference BatchCache, which
         returns exactly the requested docs (spacy_llm/cache.py:216-233).
 
+        ``fn`` runs on ``defaultParallelism`` partitions of the deduped
+        work (hash-partitioned on the key), whatever the input's size in
+        bytes.
+
         Contract for ``fn``: it may APPEND annotation columns and DROP
         input columns, but must not modify values of columns it passes
         through — pass-through columns are re-attached from the input on
@@ -290,8 +301,17 @@ class CheckpointManager:
         # results, so process each key once per run (real corpora are full
         # of duplicate files — vendored deps, forks). The read-back below
         # is keyed dedup anyway; this just avoids redundant model work.
-        todo = todo.dropDuplicates([self.key_col]).observe(
-            obs_todo, F.count(F.lit(1)).alias("rows")
+        # The dedup exchange is sized to the cores: each row costs
+        # milliseconds of model work but only bytes of input, so AQE's
+        # by-bytes coalescing would run a whole stage of long documents
+        # as one task. A repartition with an explicit count is never
+        # coalesced, and the dedup reuses its hash partitioning (one
+        # exchange).
+        n_parts = spark.sparkContext.defaultParallelism
+        todo = (
+            todo.repartition(n_parts, self.key_col)
+            .dropDuplicates([self.key_col])
+            .observe(obs_todo, F.count(F.lit(1)).alias("rows"))
         )
 
         def _persist(res: DataFrame) -> None:
@@ -369,11 +389,15 @@ class CheckpointManager:
         return out
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
+        """One row per stage run. Resolving the counters may run jobs;
+        the returned table is driver-built (``local_frame``), so reading
+        it runs none."""
         rows = [
             (m.stage, m.rows_in, m.cache_hits, m.rows_processed, m.rows_out, m.wall_secs)
             for m in self.metrics
         ]
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             rows,
             "stage string, rows_in long, cache_hits long, rows_processed long, "
             "rows_out long, wall_secs double",

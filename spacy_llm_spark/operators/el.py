@@ -38,7 +38,7 @@ from ..kb import NIL, UNAVAILABLE_ENTITY_DESC, KnowledgeBase
 from ..model import resolve_model
 from ..templates import render_el_prompt
 from .ner import IO_TYPE, SHARDS_COL, doc_inputs
-from .sharding import task_units
+from .sharding import estimate_n_tokens, task_units
 
 LINKS_TYPE = ArrayType(StringType())
 
@@ -98,6 +98,39 @@ def build_el_prompt(
     return render_el_prompt(highlighted, mentions, cand_blocks, examples), in_prompt
 
 
+def el_unit_count(kb: KnowledgeBase, top_n: int, auto_nil: bool, examples: list):
+    """``count(text, spans)``: the whitespace-token count of
+    ``build_el_prompt(text, spans, kb, top_n, auto_nil, examples)``
+    without rendering it, for ``sharding.regular_spans``. The prompt is
+    the template's fixed tokens, plus the text's tokens (``*`` highlights
+    glue to the span's edge characters), plus for every in-prompt mention
+    ``m``: ``*m*`` in the mention list, its ``- For *m*:`` line (2 more
+    tokens) and its candidate lines. Mention costs are cached per surface,
+    so each surface's candidates are looked up once per count model."""
+    overhead = estimate_n_tokens(build_el_prompt("", [], kb, top_n, auto_nil, examples)[0])
+    cost: dict = {}
+
+    def mention_tokens(surface: str) -> int:
+        cands = kb.get_candidates(surface, top_n)
+        if not cands and auto_nil:
+            return 0
+        lines = [f"{qid}. {desc}" for qid, _, desc in cands] or [
+            f"{NIL}. {UNAVAILABLE_ENTITY_DESC}"
+        ]
+        return 2 * estimate_n_tokens(surface) + 2 + sum(map(estimate_n_tokens, lines))
+
+    def count(text: str, spans) -> int:
+        n = overhead + estimate_n_tokens(text)
+        for start, end, _ in spans:
+            surface = text[start:end]
+            if surface not in cost:
+                cost[surface] = mention_tokens(surface)
+            n += cost[surface]
+        return n
+
+    return count
+
+
 def el_batch(
     model,
     kb: KnowledgeBase,
@@ -130,7 +163,8 @@ def el_batch(
         attached = attach_el_solutions(in_prompt, parse_el_solutions(response))
         return attached if attached is not None else [NIL] * len(in_prompt)
 
-    return task_units(model, texts, ents, bounds, context_length, render, parse)
+    count = el_unit_count(kb, top_n, auto_nil, examples or [])
+    return task_units(model, texts, ents, bounds, context_length, render, count, parse)
 
 
 def link_entities(

@@ -1489,22 +1489,15 @@ def strongly_connected_components(
         .unionByName(edges.select(F.col(dst).alias("vertex")))
         .distinct()
     )
-    # ORDER-PRESERVING dictionary encoding (guide §2.3 narrower types,
-    # the betweenness lesson): every trim/color/extract round keys its
+    # The betweenness lesson: every trim/color/extract round keys its
     # joins and aggregates on vertex ids, so arbitrary-width strings are
     # hashed and shuffled ~dozens of times. Encode once to longs whose
-    # order matches the vertex order — monotonically_increasing_id over
-    # the SORTED node frame is monotone in that order (partition index
-    # is the high bits, row position the low bits), and the expression
-    # is non-deterministic so Catalyst never reorders it past the sort —
-    # hence min-label coloring picks the same root through the
-    # bijection, and one decode at the end restores the caller's ids
-    # bit-for-bit.
-    vmap = fs.cut_lineage(
-        live_raw.orderBy("vertex").select(
-            "vertex", F.monotonically_increasing_id().alias("_nid")
-        )
-    )
+    # order matches the vertex order (``order_encode``) — hence min-label
+    # coloring picks the same root through the bijection, and one decode
+    # at the end restores the caller's ids bit-for-bit.
+    from .canonicalize import order_encode
+
+    vmap = order_encode(live_raw, "vertex", "_nid")
     de = fs.cut_lineage(
         de.join(vmap.select(F.col("vertex").alias("s"),
                             F.col("_nid").alias("_ns")), "s")

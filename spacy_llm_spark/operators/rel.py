@@ -42,7 +42,7 @@ from ..functions.response_parsers import parse_rel_response
 from ..model import resolve_model
 from ..templates import render_rel_prompt
 from .ner import IO_TYPE, SHARDS_COL, doc_inputs
-from .sharding import task_units
+from .sharding import estimate_n_tokens, task_units
 
 REL_TYPE = ArrayType(
     StructType(
@@ -76,6 +76,25 @@ def preannotate(text: str, ents: List[Tuple[int, int, str]]) -> str:
     return "".join(out)
 
 
+def rel_unit_prompt(text: str, spans, labels, examples: Optional[list] = None) -> str:
+    """The REL prompt of one unit: ``text`` pre-annotated with ``spans``."""
+    return render_rel_prompt(preannotate(text, spans), labels, examples=examples)
+
+
+def rel_unit_count(labels, examples: Optional[list] = None):
+    """``count(text, spans)``: the whitespace-token count of
+    ``rel_unit_prompt(text, spans, labels, examples)`` without rendering
+    it, for ``sharding.regular_spans``. The prompt is the template's fixed
+    tokens plus the text's tokens: each ``[ENTi:LABEL]`` marker glues to
+    the non-whitespace character it follows, so markers add no token."""
+    overhead = estimate_n_tokens(rel_unit_prompt("", [], labels, examples))
+
+    def count(text: str, _spans) -> int:
+        return overhead + estimate_n_tokens(text)
+
+    return count
+
+
 def rel_batch(
     model,
     texts: List[str],
@@ -91,7 +110,7 @@ def rel_batch(
     label_list = split_labels(labels)
 
     def render(text, spans):
-        return render_rel_prompt(preannotate(text, spans), label_list, examples=examples)
+        return rel_unit_prompt(text, spans, label_list, examples)
 
     def parse(_text, spans, response, offset):
         return [
@@ -99,7 +118,8 @@ def rel_batch(
             for dep, dest, relation in parse_rel_response(response, len(spans))
         ]
 
-    return task_units(model, texts, ents, bounds, context_length, render, parse)
+    count = rel_unit_count(label_list, examples)
+    return task_units(model, texts, ents, bounds, context_length, render, count, parse)
 
 
 def extract_relations(

@@ -21,6 +21,19 @@ One sharding rule serves both the fused and the staged path: NER shards
 the doc (``make_shards``) and reports each shard's (start, end) character
 bounds; REL and EL then prompt per NER shard, sub-sharding a shard only
 when their longer prompt overflows (``task_units``).
+
+REL/EL fit by counting, not rendering (``fit_for_task``): the fit test is
+a whitespace-token count, and for these prompts it is additive — template
+overhead + the unit's text tokens (+ per in-prompt EL mention: its list
+entry, its ``- For`` line and its candidate lines). Each task puts its
+count model next to its renderer (``rel.rel_unit_count``,
+``el.el_unit_count``); the search runs on the count, only the accepted
+units are rendered, and each rendered prompt must count what the model
+said. The render search (``shard_for_task``: a full prompt per probe)
+takes over for a unit whose spans are not ``regular_spans`` (sorted,
+non-overlapping, non-empty, non-whitespace edges, whitespace-free labels
+— e.g. SpanCat overlaps) or whose check fails. Both searches are one loop
+(``_search``), so the shards are the same.
 """
 
 from __future__ import annotations
@@ -29,6 +42,8 @@ import re
 from typing import Callable, List, Optional, Sequence, Tuple
 
 _WS_TOKEN_RE = re.compile(r"\S+")
+
+Span = Tuple[int, int, str]  # (start, end, label), character offsets
 
 
 def estimate_n_tokens(value: str) -> int:
@@ -97,11 +112,11 @@ def make_shards(
 
 def shard_for_task(
     text: str,
-    spans: List[Tuple[int, int, str]],
+    spans: List[Span],
     context_length: int,
-    render: Callable[[str, List[Tuple[int, int, str]]], str],
+    render: Callable[[str, List[Span]], str],
     buffer_frac: float = 1.1,
-) -> List[Tuple[int, str, List[Tuple[int, int, str]], str]]:
+) -> List[Tuple[int, str, List[Span], str]]:
     """Per-task re-sharding (the reference shards EVERY task, e.g.
     tasks/entity_linker/task.py:137-165): a shard sized for the NER prompt
     can overflow for REL/EL, whose prompts add preannotation markers,
@@ -115,13 +130,35 @@ def shard_for_task(
     (overlapping SpanCat spans included); if a span makes a cut
     unavoidable the cut extends right past it, and an unfittable
     single-span shard raises — the same contract as make_shards.
+
+    This is the render search: every probe renders a full prompt.
+    ``fit_for_task`` gives the same shards from a count model.
     """
-    prompt = render(text, spans)
-    if estimate_n_tokens(prompt) * buffer_frac <= context_length:
-        return [(0, text, spans, prompt)]
+
+    def size(sub_text: str, local: List[Span]) -> Tuple[int, str]:
+        prompt = render(sub_text, local)
+        return estimate_n_tokens(prompt), prompt
+
+    return _search(text, spans, context_length, size, buffer_frac)
+
+
+def _search(
+    text: str,
+    spans: List[Span],
+    context_length: int,
+    size: Callable[[str, List[Span]], Tuple[int, object]],
+    buffer_frac: float,
+) -> List[Tuple[int, str, List[Span], object]]:
+    """The shard search behind ``shard_for_task`` and ``fit_for_task``.
+    ``size(sub_text, local_spans) -> (prompt_tokens, payload)``; returns
+    [(char_offset, sub_text, local_spans, payload)] of the accepted
+    probes."""
+    n, payload = size(text, spans)
+    if n * buffer_frac <= context_length:
+        return [(0, text, spans, payload)]
     token_spans = [m.span() for m in _WS_TOKEN_RE.finditer(text)]
     if not token_spans:
-        return [(0, text, spans, prompt)]
+        return [(0, text, spans, payload)]
 
     n_tokens = len(token_spans)
 
@@ -131,7 +168,7 @@ def shard_for_task(
         cut = token_spans[end_tok - 1][1]
         return any(s < cut < e for s, e, _ in spans)
 
-    shards: List[Tuple[int, str, List[Tuple[int, int, str]], str]] = []
+    shards: List[Tuple[int, str, List[Span], object]] = []
     start_tok = 0
     fraction = 0.5
     while start_tok < n_tokens:
@@ -153,8 +190,8 @@ def shard_for_task(
             ce = token_spans[end_tok - 1][1]
             sub_text = text[cs:ce]
             local = [(s - cs, e - cs, l) for s, e, l in spans if s >= cs and e <= ce]
-            prompt = render(sub_text, local)
-            fits = estimate_n_tokens(prompt) * buffer_frac <= context_length
+            n, payload = size(sub_text, local)
+            fits = n * buffer_frac <= context_length
             if not fits:
                 if end_tok - start_tok <= 1 or forced:
                     raise ValueError(
@@ -163,7 +200,7 @@ def shard_for_task(
                         "reduce its size."
                     )
                 frac /= 2
-        shards.append((cs, sub_text, local, prompt))
+        shards.append((cs, sub_text, local, payload))
         start_tok = end_tok
         fraction = 1.0
 
@@ -174,14 +211,64 @@ def shard_for_task(
     return shards
 
 
-def merge_shard_spans(
-    shard_results: List[Tuple[int, List[Tuple[int, int, str]]]]
-) -> List[Tuple[int, int, str]]:
+def regular_spans(text: str, spans: List[Span]) -> bool:
+    """True when the count models of ``fit_for_task`` apply to ``spans``:
+    sorted, non-overlapping and non-empty, inside ``text``, with
+    non-whitespace first and last characters and whitespace-free labels.
+    Then wrapping a span in ``*...*`` or appending an ``[ENTi:LABEL]``
+    marker to it changes no token boundary of the text."""
+    prev_end = 0
+    for start, end, label in spans:
+        if not prev_end <= start < end <= len(text):
+            return False
+        if text[start].isspace() or text[end - 1].isspace():
+            return False
+        if any(ch.isspace() for ch in label):
+            return False
+        prev_end = end
+    return True
+
+
+def fit_for_task(
+    text: str,
+    spans: List[Span],
+    context_length: int,
+    render: Callable[[str, List[Span]], str],
+    count: Callable[[str, List[Span]], int],
+    buffer_frac: float = 1.1,
+) -> List[Tuple[int, str, List[Span], str]]:
+    """``shard_for_task`` with the fit test run on a count model:
+    ``count(sub_text, local_spans)`` must equal
+    ``estimate_n_tokens(render(sub_text, local_spans))`` without
+    rendering. The search is the same, so the shards are the same; only
+    the accepted units are rendered, and each rendered prompt's token
+    count is checked against the model. A unit whose spans are not
+    ``regular_spans``, or whose check fails, takes the render search."""
+    if regular_spans(text, spans):
+
+        def size(sub_text: str, local: List[Span]) -> Tuple[int, int]:
+            n = count(sub_text, local)
+            return n, n
+
+        units = []
+        for offset, sub_text, local, n in _search(
+            text, spans, context_length, size, buffer_frac
+        ):
+            prompt = render(sub_text, local)
+            if estimate_n_tokens(prompt) != n:
+                break
+            units.append((offset, sub_text, local, prompt))
+        else:
+            return units
+    return shard_for_task(text, spans, context_length, render, buffer_frac)
+
+
+def merge_shard_spans(shard_results: List[Tuple[int, List[Span]]]) -> List[Span]:
     """H3/A1: fuse per-shard spans back into doc coordinates by adding each
     shard's character offset (reference fuses docs via Doc.from_docs,
     tasks/ner/util.py:41-48 — additive union in our char-offset model).
     """
-    merged: List[Tuple[int, int, str]] = []
+    merged: List[Span] = []
     for offset, spans in shard_results:
         merged.extend((s + offset, e + offset, label) for s, e, label in spans)
     return merged
@@ -208,11 +295,12 @@ def io_pairs(doc_prompts: List[List[str]], doc_responses: List[List[str]]) -> Li
 def task_units(
     model,
     texts: List[str],
-    ents: List[List[Tuple[int, int, str]]],
+    ents: List[List[Span]],
     bounds: Sequence[Optional[List[Tuple[int, int]]]],
     context_length: Optional[int],
-    render: Callable[[str, List[Tuple[int, int, str]]], str],
-    parse: Callable[[str, List[Tuple[int, int, str]], str, int], list],
+    render: Callable[[str, List[Span]], str],
+    count: Callable[[str, List[Span]], int],
+    parse: Callable[[str, List[Span], str, int], list],
 ) -> Tuple[list, List[dict]]:
     """The REL/EL loop over one batch, shared by the fused and staged paths.
 
@@ -220,7 +308,8 @@ def task_units(
     (doc-coordinate (start, end) pairs; ``None`` = the whole doc is one
     shard), holding the ents that start before the next shard does, in
     shard-local offsets. With ``context_length`` set a unit whose prompt
-    overflows is sub-sharded by ``shard_for_task``. All units' prompts go
+    overflows is sub-sharded by ``fit_for_task``, which sizes prompts with
+    ``count`` (the task's prompt-size model). All units' prompts go
     through ONE model call; ``parse(unit_text, unit_spans, response,
     ent_offset)`` then maps each response back into doc coordinates,
     ``ent_offset`` being the doc index of the unit's first ent.
@@ -242,8 +331,8 @@ def task_units(
             else:
                 units.extend(
                     (st, sp, p)
-                    for _, st, sp, p in shard_for_task(
-                        shard_text, spans, context_length, render
+                    for _, st, sp, p in fit_for_task(
+                        shard_text, spans, context_length, render, count
                     )
                 )
         doc_units.append(units)

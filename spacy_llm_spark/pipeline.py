@@ -9,10 +9,16 @@
 
 Extraction is narrow: the corpus is read once, partitioning is preserved
 end-to-end, and the only shuffles in the whole job are (a) the optional
-checkpoint anti-join (one content-keyed checkpoint for the fused pass,
-one per stage when staged), (b) the explodes' downstream aggregations,
-and (c) canonicalization. ``_task_args`` is the one place per-task
-arguments are built from ``KGConfig``; both paths use it.
+checkpoint anti-join and dedup (one content-keyed checkpoint for the fused
+pass, one per stage when staged; the dedup spreads the work over
+``defaultParallelism`` partitions), (b) the explodes' downstream
+aggregations, and (c) canonicalization. ``_task_args`` is the one place
+per-task arguments are built from ``KGConfig``; both paths use it.
+
+The annotated frame is materialized once (``cut_lineage``) with or
+without a checkpoint — with one, that is the checkpoint read-back (store
+read, dedup, key join) — so the output tables and the triple count do not
+re-run it.
 """
 
 from __future__ import annotations
@@ -230,12 +236,14 @@ def run_pipeline(
             annotated = _annotate_staged(corpus, cfg, kb, run)
     else:
         ckpt = None
-        # Materialize the (narrow, expensive) annotation pass once; the
-        # four output tables and the triple count all re-read it. Row-
-        # serialized blocks (localCheckpoint), NOT the columnar cache —
-        # InMemoryRelation scans of nested array<struct> columns are
-        # several times slower than recomputing (measured).
-        annotated = cut_lineage(annotate_corpus(corpus, cfg, kb, fused=cfg.fused))
+        annotated = annotate_corpus(corpus, cfg, kb, fused=cfg.fused)
+    # Materialize the annotated frame once — the (narrow, expensive)
+    # annotation pass, or with a checkpoint its read-back (store read,
+    # dedup, key join); the output tables and the triple count all re-read
+    # it. Row-serialized blocks (localCheckpoint), NOT the columnar cache —
+    # InMemoryRelation scans of nested array<struct> columns are several
+    # times slower than recomputing (measured).
+    annotated = cut_lineage(annotated)
 
     id_cols = ("doc_id", "content_sha256") if "doc_id" in corpus.columns else (
         "content_sha256",

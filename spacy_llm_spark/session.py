@@ -50,3 +50,22 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str):
+    """A small driver-built table as a DataFrame over an Arrow
+    ``LocalRelation``: reading it runs no Spark job, and Catalyst knows
+    its size (so plan-time broadcast gates see it as small).
+    ``createDataFrame(list_of_tuples, schema)`` would instead build a
+    Python RDD that every read re-runs as a job. ``rows`` are tuples in
+    ``schema`` order (a DDL string)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import DataType
+
+    struct = DataType.fromDDL(schema)
+    columns = list(zip(*rows)) or [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [list(c) for c in columns], schema=to_arrow_schema(struct)
+    )
+    return spark.createDataFrame(table, schema=struct)

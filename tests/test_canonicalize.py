@@ -496,3 +496,30 @@ def test_incremental_components_adversarial_fallback(spark, caplog):
     assert got_small == {
         "a": "a", "b": "a", "c": "c", "d": "c", "e": "e", "f": "e"
     }
+
+
+def test_order_encode_monotone_across_many_partitions(spark):
+    """The order-preserving id encoding of connected_components and
+    strongly_connected_components: ids are strictly increasing in node
+    order even when the sort spreads the nodes over many partitions
+    (the partition index is the high bits of each id)."""
+    import random
+
+    from spacy_llm_spark.operators.canonicalize import order_encode
+
+    rng = random.Random(7)
+    nodes = sorted({f"n{rng.randrange(10**9)}" for _ in range(3000)})
+    shuffled = nodes[:]
+    rng.shuffle(shuffled)
+    df = spark.createDataFrame([(n,) for n in shuffled], "node string").repartition(13)
+    conf = spark.conf
+    saved = conf.get("spark.sql.adaptive.coalescePartitions.enabled")
+    conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        rows = order_encode(df, "node", "_nid").collect()
+    finally:
+        conf.set("spark.sql.adaptive.coalescePartitions.enabled", saved)
+    assert sorted(r.node for r in rows) == nodes
+    ids = [r._nid for r in sorted(rows, key=lambda r: r.node)]
+    assert all(a < b for a, b in zip(ids, ids[1:]))
+    assert len({i >> 33 for i in ids}) > 4  # many partitions took part

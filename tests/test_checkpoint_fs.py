@@ -346,3 +346,13 @@ def test_all_cached_rerun_skips_stage_fn(spark, tmp_path):
     assert sorted(os.listdir(stage_dir)) == files_before  # no empty append
     m = mgr.metrics[-1]
     assert (m.rows_in, m.cache_hits, m.rows_processed) == (20, 20, 0)
+
+
+def test_cut_profile_is_read_per_call(spark, monkeypatch, capsys):
+    """SPARK_GRAFT_CUT_PROFILE takes effect when set after import."""
+    monkeypatch.delenv("SPARK_GRAFT_CUT_PROFILE", raising=False)
+    fs.cut_lineage(spark.range(3))
+    assert "[cut]" not in capsys.readouterr().err
+    monkeypatch.setenv("SPARK_GRAFT_CUT_PROFILE", "1")
+    assert fs.cut_lineage(spark.range(3)).count() == 3
+    assert "[cut]" in capsys.readouterr().err

@@ -138,3 +138,88 @@ def test_ner_scoring_golden(spark, n_detections):
 
 def test_prf_zero_safe():
     assert prf(0, 0, 0) == (0.0, 0.0, 0.0)
+
+
+# -- checkpointed job: cores, one read-back, driver-built metrics -------------
+
+TABLES = ("mentions", "links", "edges", "vertices", "canonical_edges")
+
+
+def _jobs_in_group(spark, group, fn):
+    """(fn(), number of Spark jobs fn ran), counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpointed_job_reads_the_checkpoint_back_once(spark, result, tmp_path):
+    """With a checkpoint, the annotated frame is materialized once: its
+    plan no longer scans the checkpoint, the job (pipeline + the five
+    writes) runs fewer Spark jobs than when every table re-ran the
+    read-back (33), the metrics table is read without a job, and the
+    output matches the no-checkpoint run."""
+    from spacy_llm_spark.sources.sinks import write_table
+
+    corpus, plain = result
+    ckpt = str(tmp_path / "ck")
+
+    def job():
+        res = run_pipeline(spark, corpus, KGConfig(checkpoint_dir=ckpt))
+        for name in TABLES:
+            write_table(getattr(res, name), str(tmp_path / name), mode="overwrite")
+        return res
+
+    res, n_jobs = _jobs_in_group(spark, "ckpt-job", job)
+    rows, n_metric_jobs = _jobs_in_group(spark, "ckpt-metrics", res.metrics.collect)
+    assert n_metric_jobs == 0
+    assert n_jobs < 33
+    assert res.n_triples == plain.n_triples
+    n_docs = corpus.count()
+    assert [(r.rows_in, r.cache_hits, r.rows_processed, r.rows_out) for r in rows] == [
+        (n_docs, 0, n_docs, n_docs)
+    ]
+    plan = res.annotated._jdf.queryExecution().executedPlan().toString()
+    assert "FileScan" not in plan and ckpt not in plan
+
+
+def _task_ids(spark, corpus, ckpt, new_docs, micro_batches=None):
+    """Run the checkpointed fused extraction on ``corpus``; return the
+    partition ids of the tasks that annotated ``new_docs``."""
+    from spacy_llm_spark.kb import build_code_kb
+    from spacy_llm_spark.operators.checkpoint import CheckpointManager
+    from spacy_llm_spark.pipeline import annotate_corpus
+
+    cfg, kb = KGConfig(), build_code_kb()
+
+    def fused(df):
+        return annotate_corpus(df, cfg, kb).withColumn("_task", F.spark_partition_id())
+
+    out = CheckpointManager(ckpt).run_stage(
+        spark, "annotate", corpus, fused, config={"v": 1}, micro_batches=micro_batches
+    )
+    keys = new_docs.select("content_sha256").distinct()
+    return {r._task for r in out.join(keys, "content_sha256").select("_task").collect()}
+
+
+def test_checkpointed_extraction_runs_on_every_core(spark, sf_dir, tmp_path):
+    """The extraction input is hash-partitioned into defaultParallelism
+    partitions — by rows, not by bytes (AQE would coalesce a few hundred
+    KB of text into one task): on a fresh checkpoint, on a resume with new
+    rows and with micro-batches."""
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
+    docs = corpus_from_documents(spark, sf_dir).limit(60).cache()
+    base = docs.where(F.col("doc_id") % 3 != 0)
+    new = docs.where(F.col("doc_id") % 3 == 0).join(
+        base.select("content_sha256"), "content_sha256", "left_anti"
+    )
+    every_task = set(range(n))
+    assert _task_ids(spark, base, str(tmp_path / "a"), base) == every_task
+    # resume: only the docs that are new get processed
+    assert _task_ids(spark, docs, str(tmp_path / "a"), new) == every_task
+    assert _task_ids(spark, docs, str(tmp_path / "b"), docs, micro_batches=2) == every_task

@@ -74,3 +74,18 @@ def test_spark_submit_pyfiles_end_to_end(tmp_path, sf_dir):
     ).fetchone()[0]
     assert n_edges == report["n_triples"]
     assert n_mentions > 0
+
+
+def test_tracked_pyfiles_zip_is_current(tmp_path):
+    """dist/spacy_llm_spark.zip is what spark-submit ships: it must be the
+    zip that scripts/make_pyfiles_zip.py builds from the package source
+    now, byte for byte. Rebuild it with
+    ``python scripts/make_pyfiles_zip.py`` after changing the package."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    import make_pyfiles_zip
+
+    built = make_pyfiles_zip.main(str(tmp_path / "spacy_llm_spark.zip"))
+    with open(built, "rb") as f, open(
+        os.path.join(REPO, "dist", "spacy_llm_spark.zip"), "rb"
+    ) as g:
+        assert f.read() == g.read(), "stale dist/spacy_llm_spark.zip"
