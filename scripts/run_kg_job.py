@@ -64,8 +64,6 @@ def main(argv=None) -> int:
 
     from spacy_llm_spark.corpus import corpus_from_documents
     from spacy_llm_spark.kb import build_code_kb
-    from spacy_llm_spark.operators import canonicalize as canon
-    from spacy_llm_spark.operators import materialize as mat
     from spacy_llm_spark.pipeline import KGConfig, run_pipeline
     from spacy_llm_spark.sources.readers import read_corpus_table
     from spacy_llm_spark.sources.sinks import write_table
@@ -100,9 +98,6 @@ def main(argv=None) -> int:
 
     t0 = time.time()
     result = run_pipeline(spark, corpus, cfg, build_code_kb())
-    id_cols = ("doc_id", "content_sha256") if "doc_id" in corpus.columns else (
-        "content_sha256",
-    )
     write_table(result.mentions, os.path.join(args.output, "mentions"), mode="overwrite")
     write_table(result.links, os.path.join(args.output, "links"), mode="overwrite")
     write_table(result.edges, os.path.join(args.output, "edges"), mode="overwrite")

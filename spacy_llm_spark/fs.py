@@ -47,11 +47,6 @@ def exists(spark: SparkSession, path: str) -> bool:
     return bool(fs.exists(p))
 
 
-def is_dir(spark: SparkSession, path: str) -> bool:
-    fs, p = _fs_path(spark, path)
-    return bool(fs.exists(p) and fs.getFileStatus(p).isDirectory())
-
-
 def mkdirs(spark: SparkSession, path: str) -> None:
     fs, p = _fs_path(spark, path)
     fs.mkdirs(p)
@@ -69,30 +64,6 @@ def list_names(spark: SparkSession, path: str) -> List[str]:
     if not fs.exists(p):
         return []
     return [status.getPath().getName() for status in fs.listStatus(p)]
-
-
-def list_files(spark: SparkSession, path: str, suffix: str = "") -> List[str]:
-    """Fully-qualified child FILE URIs ([] if path doesn't exist)."""
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return []
-    return [
-        status.getPath().toString()
-        for status in fs.listStatus(p)
-        if status.isFile() and status.getPath().getName().endswith(suffix)
-    ]
-
-
-def list_subdirs(spark: SparkSession, path: str) -> List[str]:
-    """Fully-qualified child directory URIs ([] if path doesn't exist)."""
-    fs, p = _fs_path(spark, path)
-    if not fs.exists(p):
-        return []
-    return [
-        status.getPath().toString()
-        for status in fs.listStatus(p)
-        if status.isDirectory()
-    ]
 
 
 def write_text(spark: SparkSession, path: str, text: str) -> None:
@@ -124,17 +95,6 @@ def parquet_exists(spark: SparkSession, path: str) -> bool:
         name.endswith(".parquet") or name == "_SUCCESS"
         for name in list_names(spark, path)
     )
-
-
-def committed_subdirs(spark: SparkSession, path: str) -> List[str]:
-    """Child dirs that contain a _SUCCESS marker — i.e. fully-committed
-    batch writes. A crash mid-write leaves a partial dir WITHOUT _SUCCESS,
-    which this filter treats as never-written (exactly-once replay)."""
-    return [
-        d
-        for d in list_subdirs(spark, path)
-        if exists(spark, d.rstrip("/") + "/_SUCCESS")
-    ]
 
 
 # ---------------------------------------------------------------------------

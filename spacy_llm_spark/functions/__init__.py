@@ -1,1 +1,4 @@
-from . import lm, normalizers, redact, relevance, response_parsers, text, timeutil  # noqa: F401
+"""Column/batch kernels: response parsers, label normalizers, text
+analysis and RDF serialization. Import each submodule directly; nothing
+is loaded here.
+"""

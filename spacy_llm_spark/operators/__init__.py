@@ -1,30 +1,6 @@
-from . import (  # noqa: F401
-    asof,
-    audit,
-    canonicalize,
-    checkpoint,
-    decontaminate,
-    dedup,
-    el,
-    fused,
-    fuzzy,
-    graph,
-    importance,
-    materialize,
-    multimodal,
-    ner,
-    packing,
-    quantiles,
-    rangejoin,
-    reason,
-    rel,
-    sampling,
-    scoring,
-    setjoin,
-    sharding,
-    similarity,
-    sketches,
-    skew,
-    spancat,
-    tasks,
-)
+"""Spark operators: the KG extraction stages (``ner``, ``rel``, ``el``,
+``fused``, ``sharding``, ``checkpoint``, ``materialize``,
+``canonicalize``) and the graph/dedup/similarity families the legacy
+driver queries use. Import each submodule directly; nothing is loaded
+here, so a worker that runs the fused kernel imports only what it uses.
+"""

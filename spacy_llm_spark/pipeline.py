@@ -61,10 +61,10 @@ class KGConfig:
     fused: bool = True
     span_format: str = "cot"  # 'cot' (NER v3) | 'v2' (LABEL: phrase lines)
     allow_overlap: bool = False  # True = SpanCat semantics (overlapping spans)
-    # few-shot prompt examples (driver-side constants, broadcast into the
-    # render kernels; load with sources.readers.fewshot_reader)
     micro_batches: Optional[int] = None  # per-partition checkpoint granularity
     save_io: bool = False  # retain raw prompt/response columns (llm_io)
+    # few-shot prompt examples (driver-side constants, broadcast into the
+    # render kernels; load with sources.readers.fewshot_reader)
     ner_examples: Optional[list] = None
     rel_examples: Optional[list] = None
     el_examples: Optional[list] = None

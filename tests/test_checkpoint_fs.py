@@ -5,7 +5,7 @@ The "non-file: scheme" here is Hadoop's ``viewfs://`` mount-table
 filesystem, mounted on the fly over the test tmp dir. Bytes land on local
 disk, but the URI is ONLY resolvable through the Hadoop FileSystem API:
 ``os.path`` calls on a ``viewfs://...`` string see nothing, so any
-surviving driver-local POSIX probe in the checkpoint/streaming metadata
+surviving driver-local POSIX probe in the checkpoint metadata
 path fails these tests.
 """
 
@@ -65,14 +65,6 @@ def test_fs_helpers_roundtrip_mockfs(spark, mockfs_base, tmp_path):
     assert names == ["guard.json"]
     fs.delete(spark, posixpath.join(mockfs_base, "meta"))
     assert not fs.exists(spark, path)
-
-
-def test_committed_subdirs_requires_success_marker(spark, mockfs_base):
-    base = posixpath.join(mockfs_base, "keys")
-    spark.range(3).write.parquet(posixpath.join(base, "batch_id=0"))
-    fs.mkdirs(spark, posixpath.join(base, "batch_id=1"))  # partial: no _SUCCESS
-    committed = fs.committed_subdirs(spark, base)
-    assert [posixpath.basename(d) for d in committed] == ["batch_id=0"]
 
 
 # ---------------------------------------------------------------------------
@@ -193,55 +185,6 @@ def test_cut_lineage_reliable_mode(spark, tmp_path):
         fs.configure_lineage(False)
 
 
-# ---------------------------------------------------------------------------
-# streaming: exactly-once keys on a non-file scheme (ADVICE d)
-# ---------------------------------------------------------------------------
-
-
-def _mini_batch(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id long, content string, lang string"
-    ).withColumn("content_sha256", F.sha2("content", 256))
-
-
-def test_stream_replay_and_partial_keys_crash(spark, mockfs_base):
-    from spacy_llm_spark.streaming.incremental import make_batch_processor
-
-    out_dir = posixpath.join(mockfs_base, "kg_out")
-    process = make_batch_processor(spark, out_dir)
-    b0 = _mini_batch(spark, [(1, "spark join customer", "py"), (2, "window sort table", "java")])
-    process(b0, 0)
-    edges_path = posixpath.join(out_dir, "edges")
-    n_edges = spark.read.parquet(edges_path).count()
-    assert n_edges > 0
-    keys_dir = posixpath.join(out_dir, "_processed_keys")
-    assert [posixpath.basename(d) for d in fs.committed_subdirs(spark, keys_dir)] == [
-        "batch_id=0"
-    ]
-
-    # crash-replay of the same batch: sinks unchanged (exactly-once)
-    process(b0, 0)
-    assert spark.read.parquet(edges_path).count() == n_edges
-
-    # simulate a crash mid-keys-write for batch 1: sinks committed, keys
-    # subdir exists WITHOUT _SUCCESS. The replay must NOT treat those keys
-    # as processed (that would erase batch 1's sink rows).
-    b1 = _mini_batch(spark, [(3, "filter merge part", "go")])
-    process(b1, 1)
-    n_after_b1 = spark.read.parquet(edges_path).count()
-    assert n_after_b1 > n_edges
-    keys_b1 = posixpath.join(keys_dir, "batch_id=1")
-    fs.delete(spark, posixpath.join(keys_b1, "_SUCCESS"), recursive=False)
-    assert fs.parquet_exists(spark, keys_b1)  # partial files still there
-
-    process(b1, 1)  # replay after the simulated crash
-    # batch 1's rows are regenerated, not erased
-    assert spark.read.parquet(edges_path).count() == n_after_b1
-    assert sorted(
-        posixpath.basename(d) for d in fs.committed_subdirs(spark, keys_dir)
-    ) == ["batch_id=0", "batch_id=1"]
-
-
 def test_configure_lineage_reliable_requires_dir(spark):
     """reliable=True with no checkpoint dir anywhere fails loudly at
     configure time, not as an opaque SparkException mid-operator."""
@@ -250,78 +193,6 @@ def test_configure_lineage_reliable_requires_dir(spark):
     with pytest.raises(ValueError, match="requires a checkpoint directory"):
         fs.configure_lineage(True)
     assert not fs.lineage_is_reliable()
-
-
-def test_stream_resume_honors_legacy_flat_keys(spark, mockfs_base):
-    """A pre-upgrade stream wrote processed keys as flat part files in
-    _processed_keys; resume must still anti-join against them instead of
-    reprocessing (and double-appending) the whole history."""
-    from spacy_llm_spark.streaming.incremental import make_batch_processor
-
-    out_dir = posixpath.join(mockfs_base, "kg_out")
-    process = make_batch_processor(spark, out_dir)
-    batch = spark.createDataFrame(
-        [(1, "spark join customer", "py")], "doc_id long, content string, lang string"
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    # simulate the legacy layout: keys appended flat, no batch subdir
-    batch.select("content_sha256").write.mode("append").parquet(
-        posixpath.join(out_dir, "_processed_keys")
-    )
-    process(batch, 7)
-    # the doc was treated as already processed: no sink dirs were written
-    assert not fs.exists(spark, posixpath.join(out_dir, "edges"))
-
-
-def test_stream_legacy_keys_coexist_with_subdirs(spark, mockfs_base):
-    """Legacy flat key files + batch_id subdirs (committed AND a crashed
-    uncommitted one) in the same _processed_keys dir: the probe must see
-    legacy + committed keys, must NOT see the uncommitted subdir's keys,
-    and must not throw conflicting-directory-structures."""
-    from spacy_llm_spark.streaming.incremental import make_batch_processor
-
-    out_dir = posixpath.join(mockfs_base, "kg_out")
-    keys_dir = posixpath.join(out_dir, "_processed_keys")
-
-    def sha_of(text):
-        import hashlib
-
-        return hashlib.sha256(text.encode()).hexdigest()
-
-    legacy_doc = "spark join customer"
-    committed_doc = "window sort table"
-    uncommitted_doc = "filter merge part"
-    # legacy flat files
-    spark.createDataFrame(
-        [(sha_of(legacy_doc),)], "content_sha256 string"
-    ).write.mode("append").parquet(keys_dir)
-    # committed batch subdir
-    spark.createDataFrame(
-        [(sha_of(committed_doc),)], "content_sha256 string"
-    ).write.parquet(posixpath.join(keys_dir, "batch_id=3"))
-    # crashed (uncommitted) batch subdir: no _SUCCESS
-    spark.createDataFrame(
-        [(sha_of(uncommitted_doc),)], "content_sha256 string"
-    ).write.parquet(posixpath.join(keys_dir, "batch_id=4"))
-    fs.delete(
-        spark, posixpath.join(keys_dir, "batch_id=4", "_SUCCESS"), recursive=False
-    )
-
-    batch = spark.createDataFrame(
-        [
-            (1, legacy_doc, "py"),        # seen via legacy flat files
-            (2, committed_doc, "java"),   # seen via committed subdir
-            (3, uncommitted_doc, "go"),   # NOT seen: crashed keys write
-        ],
-        "doc_id long, content string, lang string",
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    make_batch_processor(spark, out_dir)(batch, 9)
-
-    # only the uncommitted doc was (re)processed
-    edges = spark.read.parquet(posixpath.join(out_dir, "edges"))
-    shas = {r.content_sha256 for r in edges.select("content_sha256").collect()}
-    assert shas == {sha_of(uncommitted_doc)}
-    # no quarantine happened
-    assert not fs.exists(spark, posixpath.join(out_dir, "_quarantine"))
 
 
 def test_all_cached_rerun_skips_stage_fn(spark, tmp_path):

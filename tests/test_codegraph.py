@@ -1,242 +1,9 @@
-"""Code-structure KG family: import extraction, dependency edges,
-identifier splitting (operators/codegraph.py) and DAG layering
-(operators/graph.topological_levels)."""
+"""DAG layering and cycle condensation (operators/graph.py:
+topological_levels, condensation)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from spacy_llm_spark.corpus import corpus_from_documents
-from spacy_llm_spark.operators import codegraph as cg
 from spacy_llm_spark.operators.graph import topological_levels
-
-
-def _files(spark, rows):
-    return spark.createDataFrame(rows, "repo string, path string, content string")
-
-
-# --- synthetic header rendering -------------------------------------------
-
-
-def test_header_rendering_per_lang(spark):
-    rows = [
-        (0, "r", "src/doc_0.py", "en", "body"),
-        (1, "r", "src/doc_1.java", "de", "body"),
-        (2, "r", "src/doc_2.go", "fr", "body"),
-        (3, "r", "src/doc_3.rs", "es", "body"),
-        (4, "r", "src/doc_4.md", "zh", "body"),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, repo string, path string, lang string, content string"
-    )
-    out = {
-        r.path: r.content
-        for r in cg.with_import_header(df, n_modules=50).collect()
-    }
-    assert out["src/doc_0.py"] == "import mod0\nimport mod13\nimport mod26\nbody"
-    assert out["src/doc_1.java"] == (
-        "import dep.mod7;\nimport dep.mod20;\nimport dep.mod33;\nbody"
-    )
-    assert out["src/doc_2.go"] == (
-        'import "dep/mod14"\nimport "dep/mod27"\nimport "dep/mod40"\nbody'
-    )
-    assert out["src/doc_3.rs"] == (
-        "use dep::mod21;\nuse dep::mod34;\nuse dep::mod47;\nbody"
-    )
-    assert out["src/doc_4.md"] == "body"  # non-code: untouched
-
-
-# --- import extraction: real-language snippets ----------------------------
-
-
-def test_extract_imports_python(spark):
-    content = (
-        "import os.path\n"
-        "from collections import abc\n"
-        "import numpy as np\n"
-        "x = 1  # import nothing: not line-anchored\n"
-    )
-    df = _files(spark, [("r1", "a/b.py", content)])
-    mods = {r.module for r in cg.extract_imports(df).collect()}
-    # python rule: FIRST dotted segment (top-level package)
-    assert mods == {"os", "collections", "numpy"}
-
-
-def test_extract_imports_java(spark):
-    content = (
-        "package x.y;\n"
-        "import java.util.List;\n"
-        "import static org.junit.Assert.assertEquals;\n"
-        "class A {}\n"
-    )
-    df = _files(spark, [("r1", "A.java", content)])
-    mods = {r.module for r in cg.extract_imports(df).collect()}
-    # java rule: LAST dotted segment
-    assert mods == {"List", "assertEquals"}
-
-
-def test_extract_imports_go_block_and_alias(spark):
-    content = (
-        "package main\n"
-        'import "fmt"\n'
-        "import (\n"
-        '\t"strings"\n'
-        '\tstr "os/exec"\n'
-        ")\n"
-        "func main() {}\n"
-    )
-    df = _files(spark, [("r1", "m.go", content)])
-    mods = {r.module for r in cg.extract_imports(df).collect()}
-    assert mods == {"fmt", "strings", "exec"}
-
-
-def test_extract_imports_rust_use_tree(spark):
-    content = (
-        "use std::collections::HashMap;\n"
-        "use serde::{Serialize, Deserialize};\n"
-        "use dep::mod4;\n"
-        "fn main() {}\n"
-    )
-    df = _files(spark, [("r1", "m.rs", content)])
-    mods = {r.module for r in cg.extract_imports(df).collect()}
-    assert mods == {"HashMap", "serde", "mod4"}
-
-
-def test_extract_imports_non_code_and_dedup(spark):
-    df = _files(
-        spark,
-        [
-            ("r1", "notes.md", "import os\nuse x;\n"),  # non-code ext: no rows
-            ("r1", "a.py", "import os\nimport os\n"),  # duplicate import
-        ],
-    )
-    rows = cg.extract_imports(df).collect()
-    assert [(r.path, r.module) for r in rows] == [("a.py", "os")]
-
-
-def test_extract_imports_matches_arithmetic_derivation(spark, sf_dir):
-    """End-to-end against the INDEPENDENT doc_id arithmetic — the regex
-    path never sees the arithmetic, the arithmetic never sees the
-    regexes."""
-    files = corpus_from_documents(spark, sf_dir)
-    view = cg.with_import_header(files)
-    got = {
-        (r.doc_id, r.module)
-        for r in cg.extract_imports(view).select("doc_id", "module").collect()
-    }
-    code_langs = {"en", "de", "fr", "es"}  # zh -> md: no imports
-    expected = {
-        (r.doc_id, f"mod{(r.doc_id * 7 + i * 13) % 50}")
-        for r in files.select("doc_id", "lang").collect()
-        if r.lang in code_langs
-        for i in range(3)
-    }
-    assert got == expected
-
-
-def test_extract_imports_plan_is_narrow(spark):
-    """Extraction before the terminal distinct: no join, no shuffle."""
-    df = _files(spark, [("r1", "a.py", "import os\n")])
-    plan = cg.extract_imports(df)._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in plan
-    assert plan.count("Exchange") <= 1  # the distinct only
-
-
-# --- providers + dependency edges -----------------------------------------
-
-
-def test_module_providers_min_doc_id_claims(spark):
-    df = spark.createDataFrame(
-        [(0, "rA"), (50, "rB"), (1, "rC")], "doc_id long, repo string"
-    )
-    prov = {
-        r.module: r.provider_repo
-        for r in cg.module_providers(df, n_modules=50).collect()
-    }
-    assert prov == {"mod0": "rA", "mod1": "rC"}  # doc 0 < 50 claims mod0
-
-
-def test_dependency_edges_hand_case(spark):
-    imports = spark.createDataFrame(
-        [
-            ("rA", "a.py", "m1"),
-            ("rA", "b.py", "m1"),
-            ("rA", "a.py", "m2"),
-            ("rB", "c.py", "m1"),
-        ],
-        "repo string, path string, module string",
-    )
-    providers = spark.createDataFrame(
-        [("m1", "rB"), ("m2", "rA")], "module string, provider_repo string"
-    )
-    rows = {
-        (r.src_repo, r.dst_repo): (r.n_imports, r.n_files)
-        for r in cg.dependency_edges(imports, providers).collect()
-    }
-    # rA->rB via m1 from two files; rA->rA (m2) and rB->rB (m1) dropped
-    assert rows == {("rA", "rB"): (2, 2)}
-
-
-def test_dependency_edges_broadcast_gated(spark):
-    imports = spark.createDataFrame(
-        [("rA", "a.py", "m1")], "repo string, path string, module string"
-    )
-    providers = spark.createDataFrame(
-        [("m1", "rB")], "module string, provider_repo string"
-    )
-    # None = unconditional hint -> broadcast join planned
-    hinted = cg.dependency_edges(imports, providers, broadcast_threshold=None)
-    plan = hinted._jdf.queryExecution().sparkPlan().toString()
-    assert "BroadcastHashJoin" in plan
-    # default gate: LogicalRDD has UNKNOWN plan-time stats -> no hint
-    # planted (AQE's measured-size decision takes over at runtime)
-    gated = cg.dependency_edges(imports, providers)
-    plang = gated._jdf.queryExecution().optimizedPlan().toString()
-    assert "hint" not in plang.lower()
-    assert sorted(hinted.collect()) == sorted(gated.collect())
-
-
-# --- identifiers -----------------------------------------------------------
-
-
-def test_split_identifiers_goldens(spark):
-    df = spark.createDataFrame(
-        [
-            ("fooBarBaz",),
-            ("snake_case_name",),
-            ("HTTPServerV2",),
-            ("_leading",),
-            ("x",),
-        ],
-        "s string",
-    )
-    got = {
-        r.s: r.toks
-        for r in df.select(
-            "s", cg.split_identifiers(F.col("s")).alias("toks")
-        ).collect()
-    }
-    assert got["fooBarBaz"] == ["foo", "bar", "baz"]
-    assert got["snake_case_name"] == ["snake", "case", "name"]
-    assert got["HTTPServerV2"] == ["http", "server", "v2"]
-    assert got["_leading"] == ["leading"]
-    assert got["x"] == ["x"]
-
-
-def test_identifier_stats_counts(spark):
-    df = _files(
-        spark,
-        [("r1", "a.py", "fooBar foo_bar 123 foo")],  # 123 is not an identifier
-    )
-    got = {
-        r.subtoken: r.n_occurrences
-        for r in cg.identifier_stats(df).collect()
-    }
-    assert got == {"foo": 3, "bar": 2}
-    filtered = {
-        r.subtoken: r.n_occurrences
-        for r in cg.identifier_stats(df, min_count=3).collect()
-    }
-    assert filtered == {"foo": 3}
 
 
 # --- topological levels ----------------------------------------------------
@@ -280,154 +47,6 @@ def test_topological_levels_max_rounds_raises(spark):
         topological_levels(e, max_rounds=2)
 
 
-def test_dep_graph_end_to_end_layering(spark, sf_dir):
-    """corpus -> imports -> dep edges -> filtered DAG -> levels: the
-    composition the code_dep_layers entry query runs."""
-    files = corpus_from_documents(spark, sf_dir)
-    view = cg.with_import_header(files)
-    imps = cg.extract_imports(view)
-    edges = cg.dependency_edges(imps, cg.module_providers(files))
-    dag = edges.where(F.col("src_repo") < F.col("dst_repo"))
-    levels = topological_levels(dag, src="src_repo", dst="dst_repo")
-    rows = {r.vertex: r.level for r in levels.collect()}
-    assert rows  # non-empty
-    # mega/monorepo sorts before every org/repo-*: it is always a root
-    assert rows.get("mega/monorepo") == 0
-    # level bound: longest path in a DAG < n_vertices
-    assert max(rows.values()) < len(rows)
-
-
-# --- persisted-index / incremental form ------------------------------------
-
-
-def test_import_and_provider_append_equal_full(spark, sf_dir):
-    """Disjoint-batch appends are bit-equal to the full recompute for
-    both indexes AND the edges derived from them — the strong contract
-    the dedup/alignment families pin."""
-    files = corpus_from_documents(spark, sf_dir)
-    view = cg.with_import_header(files)
-    old_v = view.where(F.col("doc_id") % 2 == 0)
-    new_v = view.where(F.col("doc_id") % 2 == 1)
-    old_f = files.where(F.col("doc_id") % 2 == 0)
-    new_f = files.where(F.col("doc_id") % 2 == 1)
-
-    full_imp = cg.import_index(view)
-    inc_imp = cg.import_index_append(cg.import_index(old_v), new_v)
-    assert sorted(map(tuple, full_imp.collect())) == sorted(
-        map(tuple, inc_imp.collect())
-    )
-
-    full_prov = cg.provider_index(files)
-    inc_prov = cg.provider_index_append(cg.provider_index(old_f), new_f)
-    assert sorted(map(tuple, full_prov.collect())) == sorted(
-        map(tuple, inc_prov.collect())
-    )
-
-    full_edges = cg.dependency_edges_from_index(full_imp, full_prov)
-    inc_edges = cg.dependency_edges_from_index(inc_imp, inc_prov)
-    assert sorted(map(tuple, full_edges.collect())) == sorted(
-        map(tuple, inc_edges.collect())
-    )
-    # and the index path == the direct path
-    direct = cg.dependency_edges(
-        cg.extract_imports(view), cg.module_providers(files)
-    )
-    assert sorted(map(tuple, full_edges.collect())) == sorted(
-        map(tuple, direct.collect())
-    )
-
-
-def test_index_stamps_refuse_mismatches(spark):
-    files = spark.createDataFrame(
-        [(1, "r", "a.py", "import os\n")],
-        "doc_id long, repo string, path string, content string",
-    )
-    imp = cg.import_index(files)
-    prov = cg.provider_index(files, n_modules=50)
-    # unversioned frames refused
-    with pytest.raises(ValueError, match="stamp"):
-        cg.import_index_append(imp.drop(cg._import_stamp()), files)
-    # mismatched n_modules -> different expected stamp -> refused
-    with pytest.raises(ValueError, match="mismatch"):
-        cg.provider_index_append(prov, files, n_modules=64)
-    with pytest.raises(ValueError, match="mismatch"):
-        cg.dependency_edges_from_index(imp, prov, n_modules=64)
-
-
-# --- code-corpus quality filters -------------------------------------------
-
-
-def test_code_quality_stats_hand_case(spark):
-    content = "# header comment\nimport os\n\nx = 1  # trailing\n#done"
-    # lines: ['# header comment', 'import os', '', 'x = 1  # trailing',
-    #         '#done'] -> 5 lines, 3 start with '#' after ltrim... no:
-    # 'x = 1...' doesn't; '' doesn't. comment lines = 2 + '#done' = 3? no:
-    # '# header comment' and '#done' -> 2... plus none others = 2/5
-    df = spark.createDataFrame(
-        [(1, "r", "a.py", content)],
-        "doc_id long, repo string, path string, content string",
-    )
-    from spacy_llm_spark.operators.codegraph import code_quality_stats
-
-    r = code_quality_stats(df).collect()[0]
-    assert r.n_lines == 5
-    assert r.max_line_len == len("x = 1  # trailing")
-    total = sum(len(l) for l in content.split("\n"))
-    assert r.avg_line_len == round(total / 5, 6)
-    alnum = sum(c.isalnum() for c in content)
-    assert r.alnum_frac == round(alnum / len(content), 6)
-    assert r.comment_line_frac == round(2 / 5, 6)
-    assert r.autogen is False
-
-
-def test_code_quality_comment_marker_per_lang(spark):
-    rows = [
-        (1, "r", "a.go", "// c\ncode\n"),
-        (2, "r", "b.py", "// not python comment\n# yes\n"),
-        (3, "r", "c.md", "# md has no line marker here\n"),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, repo string, path string, content string"
-    )
-    from spacy_llm_spark.operators.codegraph import code_quality_stats
-
-    got = {r.path: r.comment_line_frac for r in code_quality_stats(df).collect()}
-    assert got["a.go"] == round(1 / 3, 6)  # ['// c', 'code', '']
-    assert got["b.py"] == round(1 / 3, 6)  # only '# yes'
-    assert got["c.md"] == 0.0  # no marker for md
-
-
-def test_code_quality_filter_thresholds(spark):
-    from spacy_llm_spark.operators.codegraph import code_quality_filter
-
-    long_line = "x" * 1500
-    rows = [
-        (1, "r", "ok.py", "import os\nx = 1\n# fine"),
-        (2, "r", "minified.py", long_line),
-        (3, "r", "gen.py", "# AUTO-GENERATED file, DO NOT EDIT\nx = 1"),
-        (4, "r", "blob.py", "%%%% ---- !!!! ''''"),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, repo string, path string, content string"
-    )
-    kept = {r.path for r in code_quality_filter(df).collect()}
-    assert kept == {"ok.py"}
-    # autogen kept when drop_autogen=False
-    kept2 = {r.path for r in code_quality_filter(df, drop_autogen=False).collect()}
-    assert kept2 == {"ok.py", "gen.py"}
-
-
-def test_code_quality_empty_file_safe(spark):
-    from spacy_llm_spark.operators.codegraph import code_quality_stats
-
-    df = spark.createDataFrame(
-        [(1, "r", "e.py", "")],
-        "doc_id long, repo string, path string, content string",
-    )
-    r = code_quality_stats(df).collect()[0]
-    assert r.alnum_frac == 0.0 and r.n_lines == 1 and r.max_line_len == 0
-
-
 # --- condensation + layering over cyclic graphs ----------------------------
 
 
@@ -467,231 +86,3 @@ def test_condensation_pure_dag_unchanged(spark):
     e = _edges(spark, [("a", "b"), ("b", "c"), ("a", "c")])
     got = sorted(map(tuple, condensation(e).collect()))
     assert got == [("a", "b"), ("a", "c"), ("b", "c")]
-
-
-
-# --- definition extraction --------------------------------------------------
-
-
-def test_extract_definitions_python(spark):
-    content = (
-        "import os\n"
-        "class Foo:\n"
-        "    def bar(self):\n"
-        "        return 1\n"
-        "def baz(x): pass\n"
-    )
-    df = _files(spark, [("r1", "a.py", content)])
-    got = {(r.kind, r.name) for r in cg.extract_definitions(df).collect()}
-    assert got == {("type", "Foo"), ("function", "bar"), ("function", "baz")}
-
-
-def test_extract_definitions_go(spark):
-    content = (
-        "package main\n"
-        "type Server struct {\n"
-        "}\n"
-        "func NewServer() {}\n"
-        "func (s *Server) Run(x int) {}\n"
-    )
-    df = _files(spark, [("r1", "m.go", content)])
-    got = {(r.kind, r.name) for r in cg.extract_definitions(df).collect()}
-    assert got == {("type", "Server"), ("function", "NewServer"), ("function", "Run")}
-
-
-def test_extract_definitions_rust(spark):
-    content = (
-        "pub struct Config {}\n"
-        "fn helper() {}\n"
-        "pub fn public_api(x: u8) -> u8 { x }\n"
-    )
-    df = _files(spark, [("r1", "m.rs", content)])
-    got = {(r.kind, r.name) for r in cg.extract_definitions(df).collect()}
-    assert got == {
-        ("type", "Config"), ("function", "helper"), ("function", "public_api")
-    }
-
-
-def test_extract_definitions_java(spark):
-    content = (
-        "public class Widget {\n"
-        "  private int count = 5;\n"
-        "  public void render(int depth) {}\n"
-        "  protected static String name() { return null; }\n"
-        "}\n"
-    )
-    df = _files(spark, [("r1", "Widget.java", content)])
-    got = {(r.kind, r.name) for r in cg.extract_definitions(df).collect()}
-    # the field assignment (has '=') must NOT parse as a definition
-    assert got == {
-        ("type", "Widget"), ("function", "render"), ("function", "name")
-    }
-
-
-def test_extract_definitions_stub_matches_arithmetic(spark, sf_dir):
-    """End-to-end over the def-stub view against the independent
-    doc_id arithmetic (the code_defs oracle's derivation)."""
-    files = corpus_from_documents(spark, sf_dir)
-    view = cg.with_def_stub(files)
-    got = {
-        (r.doc_id, r.kind, r.name)
-        for r in cg.extract_definitions(view)
-        .select("doc_id", "kind", "name").collect()
-    }
-    code_langs = {"en", "de", "fr", "es"}
-    expected = {
-        (r.doc_id, "function", f"fn{r.doc_id % 97}")
-        for r in files.select("doc_id", "lang").collect()
-        if r.lang in code_langs
-    }
-    assert got == expected
-
-
-
-def test_definition_index_append_equals_full(spark, sf_dir):
-    files = corpus_from_documents(spark, sf_dir)
-    view = cg.with_def_stub(files)
-    old_v = view.where(F.col("doc_id") % 2 == 0)
-    new_v = view.where(F.col("doc_id") % 2 == 1)
-    full = cg.definition_index(view)
-    inc = cg.definition_index_append(cg.definition_index(old_v), new_v)
-    assert sorted(map(tuple, full.collect())) == sorted(
-        map(tuple, inc.collect())
-    )
-    import pytest as _pytest
-
-    stamp = [c for c in full.columns if c.startswith("_fmt")][0]
-    with _pytest.raises(ValueError, match="stamp"):
-        cg.definition_index_append(full.drop(stamp), new_v)
-
-
-
-def test_to_dot_deterministic_and_escaped(spark):
-    e = spark.createDataFrame(
-        [("b", "c"), ("a", "b"), ("a", "b"), ('we"ird', "a\\x")],
-        "src_repo string, dst_repo string",
-    )
-    dot = cg.to_dot(e).collect()[0].dot
-    assert dot == (
-        'digraph G {\n'
-        '  "a" -> "b";\n'
-        '  "b" -> "c";\n'
-        '  "we\\"ird" -> "a\\\\x";\n'
-        '}'
-    )
-
-
-
-# --- reference (lexical call-graph) edges ----------------------------------
-
-
-def test_reference_edges_hand_case(spark):
-    files = spark.createDataFrame(
-        [
-            (1, "rA", "a.py", "def helper(x):\n    return x"),
-            (2, "rB", "b.py", "import os\ny = helper(1)"),
-            (3, "rC", "c.py", "helper = 5  # lexical: still a reference"),
-        ],
-        "doc_id long, repo string, path string, content string",
-    )
-    defs = cg.extract_definitions(files)
-    got = sorted(
-        map(tuple, cg.reference_edges(files, defs).collect())
-    )
-    # b.py and c.py mention helper; a.py defines it (self-ref dropped)
-    assert got == [
-        ("rB", "b.py", "helper", "rA", "a.py"),
-        ("rC", "c.py", "helper", "rA", "a.py"),
-    ]
-
-
-def test_reference_edges_min_doc_definer(spark):
-    files = spark.createDataFrame(
-        [
-            (5, "rX", "x.py", "def dup(): pass"),
-            (2, "rY", "y.py", "def dup(): pass"),  # min doc_id wins
-            (9, "rZ", "z.py", "dup()"),
-        ],
-        "doc_id long, repo string, path string, content string",
-    )
-    defs = cg.extract_definitions(files)
-    got = sorted(map(tuple, cg.reference_edges(files, defs).collect()))
-    # z references dup -> resolved to rY (doc 2); x's mention of dup
-    # resolves to y as well (cross-file), y's own drops as self-ref
-    assert got == [
-        ("rX", "x.py", "dup", "rY", "y.py"),
-        ("rZ", "z.py", "dup", "rY", "y.py"),
-    ]
-
-
-def test_reference_edges_stub_matches_arithmetic(spark, sf_dir):
-    """call-stub view end-to-end vs the independent arithmetic (the
-    code_ref_edges oracle derivation)."""
-    files = corpus_from_documents(spark, sf_dir)
-    view = cg.with_call_stub(cg.with_def_stub(files))
-    defs = cg.extract_definitions(view)
-    got = {
-        (r.src_path, r.name, r.def_path)
-        for r in cg.reference_edges(view, defs).collect()
-    }
-    code = [
-        (r.doc_id, r.path)
-        for r in files.select("doc_id", "path", "lang").collect()
-        if r.lang in {"en", "de", "fr", "es"}
-    ]
-    definer = {}
-    for d, p in sorted(code):
-        definer.setdefault(d % 97, (d, p))
-    expected = set()
-    for d, p in code:
-        # a file mentions BOTH its call-stub target and its OWN
-        # def-stub name; the latter cross-resolves when an earlier
-        # file claimed the same residue
-        for j in {(d * 3 + 1) % 97, d % 97}:
-            if j in definer and definer[j][1] != p:
-                expected.add((p, f"fn{j}", definer[j][1]))
-    assert got == expected
-
-
-
-def test_reference_edges_from_index_late_claim_rebinds(spark):
-    """index path == direct path, and a LATE definer claim (smaller
-    doc_id arriving in a later batch) retroactively re-resolves every
-    standing mention — resolution is probe-time, never stored."""
-    schema = "doc_id long, repo string, path string, content string"
-    b1 = spark.createDataFrame(
-        [(5, "rX", "x.py", "def dup(): pass"),
-         (9, "rZ", "z.py", "dup()")],
-        schema,
-    )
-    b2 = spark.createDataFrame(
-        [(2, "rY", "y.py", "def dup(): pass")],  # late, smaller doc_id
-        schema,
-    )
-    m1 = cg.mention_index(b1)
-    d1 = cg.definition_index(b1)
-    first = sorted(map(tuple, cg.reference_edges_from_index(m1, d1).collect()))
-    assert ("rZ", "z.py", "dup", "rX", "x.py") in first
-
-    m2 = cg.mention_index_append(m1.localCheckpoint(), b2)
-    d2 = cg.definition_index_append(d1.localCheckpoint(), b2)
-    got = sorted(map(tuple, cg.reference_edges_from_index(m2, d2).collect()))
-    full = spark.createDataFrame(
-        [(5, "rX", "x.py", "def dup(): pass"),
-         (9, "rZ", "z.py", "dup()"),
-         (2, "rY", "y.py", "def dup(): pass")],
-        schema,
-    )
-    want = sorted(map(tuple, cg.reference_edges(
-        full, cg.extract_definitions(full)
-    ).collect()))
-    assert got == want
-    # z's standing mention now resolves to the NEW min-claim definer
-    assert ("rZ", "z.py", "dup", "rY", "y.py") in got
-    assert ("rZ", "z.py", "dup", "rX", "x.py") not in got
-
-    import pytest as _pytest
-
-    stamp = [c for c in m1.columns if c.startswith("_fmt")][0]
-    with _pytest.raises(ValueError, match="stamp"):
-        cg.reference_edges_from_index(m1.drop(stamp), d1)

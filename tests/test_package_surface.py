@@ -1,0 +1,204 @@
+"""The package surface the KG job and the driver files rely on.
+
+- A Python worker that runs the fused kernel imports only the KG job's
+  modules (the package ``__init__``s load nothing eagerly).
+- Every ``spacy_llm_spark`` import in the driver files resolves, including
+  function-level imports inside queries nobody calls in tier-1, and every
+  ``oracle_sql()`` key names a ``queries()`` entry.
+
+Both checks are static or run in a fresh interpreter; neither starts Spark.
+"""
+
+import ast
+import glob
+import json
+import os
+import subprocess
+import sys
+
+import pytest
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = "spacy_llm_spark"
+
+# the KG job: read_corpus_table -> run_pipeline -> five sinks
+KG_JOB_MODULES = {
+    PKG,
+    f"{PKG}.corpus",
+    f"{PKG}.fs",
+    f"{PKG}.functions",
+    f"{PKG}.functions.normalizers",
+    f"{PKG}.functions.response_parsers",
+    f"{PKG}.kb",
+    f"{PKG}.model",
+    f"{PKG}.operators",
+    f"{PKG}.operators.canonicalize",
+    f"{PKG}.operators.checkpoint",
+    f"{PKG}.operators.el",
+    f"{PKG}.operators.fused",
+    f"{PKG}.operators.materialize",
+    f"{PKG}.operators.ner",
+    f"{PKG}.operators.rel",
+    f"{PKG}.operators.sharding",
+    f"{PKG}.pipeline",
+    f"{PKG}.plans",
+    f"{PKG}.plans.validate",
+    f"{PKG}.session",
+    f"{PKG}.sources",
+    f"{PKG}.sources.readers",
+    f"{PKG}.sources.sinks",
+    f"{PKG}.templates",
+    f"{PKG}.tokenizer",
+}
+
+DRIVER_FILES = sorted(
+    [
+        os.path.join(REPO, "__spark_entry__.py"),
+        os.path.join(REPO, "bench.py"),
+        os.path.join(REPO, "bench_extra.py"),
+    ]
+    + glob.glob(os.path.join(REPO, "scripts", "*.py"))
+    + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
+)
+
+
+def test_worker_import_closure_is_the_kg_job():
+    code = (
+        "import json, sys\n"
+        f"import {PKG}.operators.fused, {PKG}.pipeline\n"
+        f"print(json.dumps(sorted(m for m in sys.modules "
+        f"if m == '{PKG}' or m.startswith('{PKG}.'))))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    )
+    loaded = set(json.loads(proc.stdout.strip().splitlines()[-1]))
+    assert f"{PKG}.operators.fused" in loaded
+    assert loaded <= KG_JOB_MODULES, sorted(loaded - KG_JOB_MODULES)
+    for family in ("operators.graph", "operators.dedup", "operators.similarity"):
+        assert f"{PKG}.{family}" not in loaded
+
+
+def _module_file(module):
+    base = os.path.join(REPO, *module.split("."))
+    for path in (base + ".py", os.path.join(base, "__init__.py")):
+        if os.path.exists(path):
+            return path
+    return None
+
+
+def _top_level_names(path):
+    """Names a module binds at import time (defs, assignments, imports),
+    looking into top-level if/try blocks."""
+    names = set()
+
+    def visit(stmts):
+        for s in stmts:
+            if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names.add(s.name)
+            elif isinstance(s, (ast.Assign, ast.AnnAssign, ast.AugAssign)):
+                targets = s.targets if isinstance(s, ast.Assign) else [s.target]
+                for t in targets:
+                    names.update(
+                        n.id for n in ast.walk(t) if isinstance(n, ast.Name)
+                    )
+            elif isinstance(s, (ast.Import, ast.ImportFrom)):
+                names.update(
+                    (a.asname or a.name).split(".")[0] for a in s.names
+                )
+            elif isinstance(s, ast.If):
+                visit(s.body)
+                visit(s.orelse)
+            elif isinstance(s, ast.Try):
+                visit(s.body)
+                visit(s.orelse)
+                visit(s.finalbody)
+                for h in s.handlers:
+                    visit(h.body)
+
+    with open(path) as f:
+        visit(ast.parse(f.read()).body)
+    return names
+
+
+def _dangling_imports(path):
+    """Unresolvable ``spacy_llm_spark`` imports in one file, plus
+    ``alias.attr`` uses of an imported package module whose attribute the
+    module does not define."""
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    problems = []
+    module_aliases = {}  # local name -> package modules it is bound to
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] != PKG:
+                    continue
+                if _module_file(a.name) is None:
+                    problems.append(f"line {node.lineno}: no module {a.name}")
+                elif a.asname:
+                    module_aliases.setdefault(a.asname, set()).add(a.name)
+        elif isinstance(node, ast.ImportFrom):
+            mod = node.module or ""
+            if node.level or mod.split(".")[0] != PKG:
+                continue
+            mod_file = _module_file(mod)
+            if mod_file is None:
+                problems.append(f"line {node.lineno}: no module {mod}")
+                continue
+            defined = _top_level_names(mod_file)
+            for a in node.names:
+                sub = f"{mod}.{a.name}"
+                if _module_file(sub) is not None:
+                    module_aliases.setdefault(a.asname or a.name, set()).add(sub)
+                elif a.name not in defined:
+                    problems.append(f"line {node.lineno}: {mod} has no {a.name}")
+    defined_by = {
+        m: _top_level_names(_module_file(m))
+        for mods in module_aliases.values()
+        for m in mods
+    }
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id in module_aliases
+        ):
+            mods = module_aliases[node.value.id]
+            if not any(
+                node.attr in defined_by[m] or _module_file(f"{m}.{node.attr}")
+                for m in mods
+            ):
+                problems.append(
+                    f"line {node.lineno}: {node.value.id}.{node.attr} "
+                    f"not defined in {sorted(mods)}"
+                )
+    return problems
+
+
+@pytest.mark.parametrize(
+    "path", DRIVER_FILES, ids=[os.path.relpath(p, REPO) for p in DRIVER_FILES]
+)
+def test_driver_file_has_no_dangling_package_imports(path):
+    assert _dangling_imports(path) == []
+
+
+def test_dangling_import_check_catches_a_missing_module(tmp_path):
+    bad = tmp_path / "driver.py"
+    bad.write_text(
+        "from spacy_llm_spark.operators import canonicalize as canon\n"
+        "def q(spark, sf):\n"
+        "    from spacy_llm_spark.operators.gone import op\n"
+        "    from spacy_llm_spark.kb import no_such_name\n"
+        "    return canon.no_such_function(op)\n"
+    )
+    problems = _dangling_imports(str(bad))
+    assert len(problems) == 3, problems
+
+
+def test_every_oracle_names_a_query():
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry
+
+    assert set(entry.oracle_sql()) <= set(entry.queries())

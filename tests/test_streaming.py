@@ -1,1514 +1,4 @@
-"""Streaming/incremental pipeline tests."""
-
-import os
-
-import pytest
-from pyspark.sql import functions as F
-
-from spacy_llm_spark.streaming.incremental import (
-    run_incremental,
-    windowed_event_counts,
-)
-
-
-def test_incremental_two_deliveries(spark, tmp_path):
-    """Files arriving in two waves; second wave redelivers doc content ->
-    no duplicate triples (content-level idempotence)."""
-    src = tmp_path / "incoming"
-    out = tmp_path / "kg_out"
-    rows1 = [(1, "spark join customer", "python"), (2, "window sort table", "java")]
-    rows2 = [(3, "spark join customer", "python"), (4, "filter merge part", "go")]
-    schema = "doc_id long, content string, lang string"
-
-    df1 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    df1.write.mode("append").parquet(str(src))
-    q = run_incremental(spark, str(src), str(out), trigger_once=True)
-    q.awaitTermination(120)
-
-    edges1 = spark.read.parquet(str(out / "edges"))
-    n1 = edges1.count()
-    assert n1 > 0
-
-    # second delivery: doc 3 has the same content as doc 1 -> skipped
-    df2 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    df2.write.mode("append").parquet(str(src))
-    q = run_incremental(spark, str(src), str(out), trigger_once=True)
-    q.awaitTermination(120)
-
-    edges2 = spark.read.parquet(str(out / "edges"))
-    shas = [r.content_sha256 for r in edges2.select("content_sha256").distinct().collect()]
-    # 3 distinct contents annotated (doc3 deduped against doc1)
-    mentions = spark.read.parquet(str(out / "mentions"))
-    assert mentions.select("content_sha256").distinct().count() == 3
-    # no duplicate mention rows for the redelivered content
-    dup = (
-        mentions.groupBy("content_sha256", "ent_idx").count().where(F.col("count") > 1)
-    )
-    assert dup.count() == 0
-
-
-def test_windowed_event_counts_static(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = windowed_event_counts(events, window="1 hour")
-    total = out.agg(F.sum("n")).first()[0]
-    assert total == events.count()
-    # window bounds are aligned hours
-    row = out.first()
-    assert row.window_start.minute == 0
-
-
-def test_windowed_event_counts_streaming(spark, sf_dir, tmp_path):
-    """Same aggregation over a file stream with watermark; availableNow
-    drains the directory and the totals match the static run."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").limit(500)
-    src = tmp_path / "events_stream"
-    events.write.parquet(str(src))
-    stream = (
-        spark.readStream.schema(events.schema).parquet(str(src))
-    )
-    agg = windowed_event_counts(stream, window="1 hour", watermark="2 hours")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_counts")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "ck"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("select sum(n) from win_counts").first()[0]
-    # append mode only emits windows the watermark has closed; with
-    # availableNow all-but-the-latest windows close
-    static_total = events.count()
-    assert got is None or got <= static_total
-
-
-def test_batch_replay_is_exactly_once(spark, tmp_path):
-    """Crash-replay semantics: foreachBatch re-delivers a failed batch with
-    the SAME batch_id; re-running it must not double-append sink rows, even
-    though the first attempt committed the sinks (crash before the
-    processed-keys marker is simulated by replaying the same call)."""
-    from spacy_llm_spark.streaming.incremental import make_batch_processor
-
-    out = tmp_path / "kg_out"
-    rows = [(1, "spark join customer", "python"), (2, "window sort table", "java")]
-    df = spark.createDataFrame(rows, "doc_id long, content string, lang string").withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    process = make_batch_processor(spark, str(out))
-    process(df, 0)
-    n_mentions = spark.read.parquet(str(out / "mentions")).count()
-    n_edges = spark.read.parquet(str(out / "edges")).count()
-    assert n_mentions > 0
-
-    # replay of batch 0 (same offsets -> same batch_id): overwrite, not append
-    process(df, 0)
-    assert spark.read.parquet(str(out / "mentions")).count() == n_mentions
-    assert spark.read.parquet(str(out / "edges")).count() == n_edges
-
-    # worst case: crash AFTER the sink writes but BEFORE the processed-keys
-    # marker — simulate by removing the marker and replaying batch 0; the
-    # per-batch overwrite still keeps the sinks exactly-once
-    import shutil
-
-    shutil.rmtree(str(out / "_processed_keys"))
-    process(df, 0)
-    assert spark.read.parquet(str(out / "mentions")).count() == n_mentions
-    assert spark.read.parquet(str(out / "edges")).count() == n_edges
-
-    # a genuinely new batch with new content still lands
-    df2 = spark.createDataFrame(
-        [(3, "filter merge part", "go")], "doc_id long, content string, lang string"
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    process(df2, 1)
-    assert spark.read.parquet(str(out / "mentions")).count() > n_mentions
-
-
-def test_windowed_counts_live_stream_drops_late_rows(spark, tmp_path):
-    """Drive windowed_event_counts with a real file stream: on-time rows
-    aggregate into their event-time window; a row arriving after the
-    watermark passed its window is dropped (VERDICT r2 item 8)."""
-    from datetime import datetime
-
-    src = tmp_path / "ev_src"
-    schema = "ts timestamp, event_type string, value double"
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    # wave 1: two on-time rows in the 10:00 window
-    deliver(
-        [
-            (datetime(2024, 1, 1, 10, 0), "a", 1.0),
-            (datetime(2024, 1, 1, 10, 20), "a", 2.0),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = windowed_event_counts(stream, window="1 hour", watermark="30 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("wec_live")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "wm_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # append mode: nothing finalized yet (watermark 9:50 < window end)
-        assert spark.sql("select * from wec_live").count() == 0
-
-        # wave 2: event time jumps to 13:00 -> watermark advances to 12:30,
-        # finalizing the 10:00 window
-        deliver([(datetime(2024, 1, 1, 13, 0), "a", 10.0)])
-        q.processAllAvailable()
-
-        # wave 3: a LATE row for the already-finalized 10:00 window plus an
-        # on-time row; the late row must be dropped, not re-emitted
-        deliver(
-            [
-                (datetime(2024, 1, 1, 10, 15), "a", 100.0),
-                (datetime(2024, 1, 1, 13, 30), "a", 1.0),
-            ]
-        )
-        q.processAllAvailable()
-        # wave 4: push the watermark past 14:00 to flush the 13:00 window
-        deliver([(datetime(2024, 1, 1, 15, 0), "a", 0.5)])
-        q.processAllAvailable()
-
-        rows = {
-            r.window_start: r
-            for r in spark.sql("select * from wec_live").collect()
-        }
-        w10 = rows[datetime(2024, 1, 1, 10, 0)]
-        # only the two on-time rows; the late 100.0 never appears
-        assert w10.n == 2 and w10.total_value == 3.0
-        w13 = rows[datetime(2024, 1, 1, 13, 0)]
-        assert w13.n == 2 and w13.total_value == 11.0
-    finally:
-        q.stop()
-
-
-def test_streaming_asof_stateful_cross_batch(spark, tmp_path):
-    """applyInPandasWithState as-of: a probe in a later micro-batch must
-    match a reference delivered in an earlier one (state persists), and
-    probes before any reference get NULL matches."""
-    from datetime import datetime
-
-    from spacy_llm_spark.streaming.stateful import streaming_asof
-
-    src = tmp_path / "asof_src"
-    schema = (
-        "event_id long, user_id long, ts timestamp, "
-        "event_type string, value double"
-    )
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    # wave 1: view before any click (-> NULL), click, view after click
-    deliver(
-        [
-            (1, 7, datetime(2024, 1, 1, 0, 0, 1), "view", 0.0),
-            (2, 7, datetime(2024, 1, 1, 0, 0, 5), "click", 42.0),
-            (3, 7, datetime(2024, 1, 1, 0, 0, 9), "view", 0.0),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_asof(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName("asof_live")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "asof_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = {r["event_id"]: (r["matched_id"], r["matched_value"])
-                for r in spark.sql("select * from asof_live").collect()}
-        assert rows[1] == (None, None)
-        assert rows[3] == (2, 42.0)
-
-        # wave 2 (new micro-batch): view matches wave-1 click via state;
-        # a second user's click seeds state for wave 3
-        deliver(
-            [
-                (4, 7, datetime(2024, 1, 1, 0, 1, 0), "view", 0.0),
-                (5, 8, datetime(2024, 1, 1, 0, 1, 0), "click", 7.0),
-            ]
-        )
-        q.processAllAvailable()
-        rows = {r["event_id"]: (r["matched_id"], r["matched_value"])
-                for r in spark.sql("select * from asof_live").collect()}
-        assert rows[4] == (2, 42.0)  # cross-batch state
-
-        # wave 3: strictness edge cases.
-        # - view 6 at EXACTLY user 8's stored click time (00:01:00): an
-        #   equal-time stored reference must NOT match (strictly prior),
-        #   same as the in-batch rule
-        # - view 9 at the same time as same-batch click 7: neither the
-        #   equal-time click 7 nor anything later is visible; the stored
-        #   strictly-prior click 5 matches
-        # - view 10 (user 7) is LATE: timestamped before the stored
-        #   click 2 -> NULL, never an anachronistic future reference
-        deliver(
-            [
-                (6, 8, datetime(2024, 1, 1, 0, 1, 0), "view", 0.0),
-                (7, 8, datetime(2024, 1, 1, 0, 2, 0), "click", 9.0),
-                (9, 8, datetime(2024, 1, 1, 0, 2, 0), "view", 0.0),
-                (10, 7, datetime(2024, 1, 1, 0, 0, 2), "view", 0.0),
-            ]
-        )
-        q.processAllAvailable()
-        rows = {r["event_id"]: (r["matched_id"], r["matched_value"])
-                for r in spark.sql("select * from asof_live").collect()}
-        assert rows[6] == (None, None)  # equal-time stored ref: no match
-        assert rows[9] == (5, 7.0)      # same-batch equal-time click invisible
-        assert rows[10] == (None, None)  # late probe: no future match
-    finally:
-        q.stop()
-
-
-def test_streaming_asof_string_keys(spark, tmp_path):
-    """The key column's type flows into the output schema — non-integer
-    keys must work, and a pre-existing unrelated 'key' column is
-    rejected loudly."""
-    from datetime import datetime
-
-    from spacy_llm_spark.streaming.stateful import streaming_asof
-
-    src = tmp_path / "asof_str_src"
-    schema = (
-        "event_id long, session_id string, ts timestamp, "
-        "event_type string, value double"
-    )
-    spark.createDataFrame(
-        [
-            (1, "sess-a", datetime(2024, 1, 1, 0, 0, 1), "click", 5.0),
-            (2, "sess-a", datetime(2024, 1, 1, 0, 0, 2), "view", 0.0),
-        ],
-        schema,
-    ).coalesce(1).write.parquet(str(src))
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    out = streaming_asof(stream, key="session_id")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("asof_str")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "asof_str_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        rows = spark.sql("select * from asof_str").collect()
-        assert [(r["event_id"], r["key"], r["matched_id"]) for r in rows] == [
-            (2, "sess-a", 1)
-        ]
-    finally:
-        q.stop()
-
-    import pytest as _pytest
-
-    clash = stream.withColumnRenamed("value", "key")
-    with _pytest.raises(ValueError, match="'key' column"):
-        streaming_asof(clash, key="session_id")
-
-
-def test_streaming_distinct_cross_batch(spark, tmp_path):
-    """Stateful exact dedup: the first row per content key passes; later
-    arrivals in the same or any later micro-batch are dropped."""
-    from spacy_llm_spark.streaming.stateful import streaming_distinct
-
-    src = tmp_path / "dedup_src"
-    schema = "doc_id long, sha string, text string"
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    deliver([(1, "a", "x"), (2, "a", "x"), (3, "b", "y")])  # in-batch dup
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_distinct(stream, "sha")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("dedup_live")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "dedup_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {r["sha"] for r in spark.sql("select * from dedup_live").collect()}
-        assert got == {"a", "b"}
-        assert spark.sql("select * from dedup_live").count() == 2
-
-        # wave 2: a re-delivered sha and a new one
-        deliver([(4, "a", "x"), (5, "c", "z")])
-        q.processAllAvailable()
-        rows = spark.sql("select * from dedup_live").collect()
-        assert {r["sha"] for r in rows} == {"a", "b", "c"}
-        assert len(rows) == 3  # the wave-2 'a' was dropped by state
-    finally:
-        q.stop()
-
-
-def test_streaming_asof_eventtime_retro_match(spark, tmp_path):
-    """Event-time as-of: a reference arriving LATE (in a later
-    micro-batch, but within the watermark) retro-matches a buffered
-    probe — the case the processing-time operator documents as
-    impossible. Probes emit only once the watermark passes them."""
-    from datetime import datetime
-
-    from spacy_llm_spark.streaming.stateful import streaming_asof_eventtime
-
-    src = tmp_path / "et_src"
-    schema = (
-        "event_id long, user_id long, ts timestamp, "
-        "event_type string, value double"
-    )
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    # batch 1: only the probe (10:05); nothing can emit yet
-    deliver([(1, 7, datetime(2024, 1, 1, 10, 5), "view", 0.0)])
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_asof_eventtime(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("et_asof")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "et_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("select * from et_asof").count() == 0  # buffered
-
-        # batch 2: a ref timestamped BEFORE the probe arrives late
-        # (10:02 > watermark 09:55 -> admitted)
-        deliver([(2, 7, datetime(2024, 1, 1, 10, 2), "click", 42.0)])
-        q.processAllAvailable()
-        assert spark.sql("select * from et_asof").count() == 0  # still buffered
-
-        # batch 3: advance the watermark past the probe (event 10:30 ->
-        # wm 10:20); the probe flushes WITH the retro-matched ref
-        deliver([(3, 7, datetime(2024, 1, 1, 10, 30), "click", 9.0)])
-        q.processAllAvailable()
-        rows = {r["event_id"]: (r["matched_id"], r["matched_value"])
-                for r in spark.sql("select * from et_asof").collect()}
-        assert rows == {1: (2, 42.0)}
-    finally:
-        q.stop()
-
-
-def test_streaming_asof_eventtime_timeout_flush(spark, tmp_path):
-    """A key whose stream goes quiet still flushes its buffered probes:
-    the event-time timeout fires when OTHER keys advance the global
-    watermark."""
-    from datetime import datetime
-
-    from spacy_llm_spark.streaming.stateful import streaming_asof_eventtime
-
-    src = tmp_path / "et2_src"
-    schema = (
-        "event_id long, user_id long, ts timestamp, "
-        "event_type string, value double"
-    )
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    # user 7: click then probe; user 7 then goes silent forever
-    deliver(
-        [
-            (1, 7, datetime(2024, 1, 1, 10, 0), "click", 5.0),
-            (2, 7, datetime(2024, 1, 1, 10, 5), "view", 0.0),
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_asof_eventtime(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("et_asof2")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "et2_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("select * from et_asof2").count() == 0
-
-        # only user 8 traffic from here on; watermark moves to 10:20
-        deliver([(3, 8, datetime(2024, 1, 1, 10, 30), "click", 1.0)])
-        q.processAllAvailable()
-        rows = {r["event_id"]: (r["matched_id"], r["matched_value"])
-                for r in spark.sql("select * from et_asof2").collect()}
-        assert rows == {2: (1, 5.0)}  # flushed via timeout, matched in-key
-    finally:
-        q.stop()
-
-
-def test_streaming_asof_eventtime_strictness_and_ties(spark, tmp_path):
-    """Batch-equivalence edges for the event-time kernel: a reference at
-    EXACTLY the probe's timestamp must not match (strict <), and equal-
-    timestamp references tie-break to the max event_id."""
-    from datetime import datetime
-
-    from spacy_llm_spark.streaming.stateful import streaming_asof_eventtime
-
-    src = tmp_path / "et3_src"
-    schema = (
-        "event_id long, user_id long, ts timestamp, "
-        "event_type string, value double"
-    )
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    deliver(
-        [
-            (1, 7, datetime(2024, 1, 1, 10, 0), "click", 1.0),
-            (2, 7, datetime(2024, 1, 1, 10, 0), "click", 2.0),  # tie: max id
-            (3, 7, datetime(2024, 1, 1, 10, 5), "click", 3.0),
-            (4, 7, datetime(2024, 1, 1, 10, 5), "view", 0.0),   # equal-time ref excluded
-            (5, 7, datetime(2024, 1, 1, 10, 1), "view", 0.0),   # ties at 10:00 -> id 2
-        ]
-    )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = streaming_asof_eventtime(stream, watermark="10 minutes")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("et_asof3")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "et3_ck"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        # advance the watermark past both probes
-        deliver([(6, 8, datetime(2024, 1, 1, 10, 30), "click", 0.0)])
-        q.processAllAvailable()
-        rows = {r["event_id"]: (r["matched_id"], r["matched_value"])
-                for r in spark.sql("select * from et_asof3").collect()}
-        assert rows[5] == (2, 2.0)  # 10:00 tie -> max event_id
-        assert rows[4] == (2, 2.0)  # click 3 at exactly 10:05 NOT matched
-    finally:
-        q.stop()
-
-
-def test_streaming_asof_eventtime_non_utc_session(spark, tmp_path):
-    """Regression: the event-time kernel must localize Arrow's
-    session-local naive timestamps before comparing them with the
-    UTC-epoch watermark — on a non-UTC session an unlocalized kernel
-    emits probes hours early (or crashes setting a timeout below the
-    watermark)."""
-    from datetime import datetime
-
-    from spacy_llm_spark.streaming.stateful import streaming_asof_eventtime
-
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
-    try:
-        src = tmp_path / "et4_src"
-        schema = (
-            "event_id long, user_id long, ts timestamp, "
-            "event_type string, value double"
-        )
-
-        def deliver(rows):
-            spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(str(src))
-
-        deliver([(1, 7, datetime(2024, 1, 1, 10, 5), "view", 0.0)])
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        out = streaming_asof_eventtime(stream, watermark="10 minutes")
-        q = (
-            out.writeStream.format("memory")
-            .queryName("et_asof4")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "et4_ck"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            # probe must still be buffered (watermark has not passed it)
-            assert spark.sql("select * from et_asof4").count() == 0
-            deliver([(2, 7, datetime(2024, 1, 1, 10, 2), "click", 42.0)])
-            q.processAllAvailable()
-            deliver([(3, 7, datetime(2024, 1, 1, 10, 30), "click", 9.0)])
-            q.processAllAvailable()
-            rows = {r["event_id"]: (r["matched_id"], r["matched_value"], r["ts"])
-                    for r in spark.sql("select * from et_asof4").collect()}
-            mid, mval, ts = rows[1]
-            assert (mid, mval) == (2, 42.0)
-            assert ts == datetime(2024, 1, 1, 10, 5)  # round-trips local-naive
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-
-
-class _FakeState:
-    """Minimal GroupState stand-in for kernel-level unit tests."""
-
-    def __init__(self, watermark_ms):
-        self._wm = watermark_ms
-        self._val = None
-        self.timeout_set = None
-
-    @property
-    def exists(self):
-        return self._val is not None
-
-    @property
-    def get(self):
-        return self._val
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, v):
-        self._val = v
-
-    def remove(self):
-        self._val = None
-
-    def setTimeoutTimestamp(self, ms):
-        self.timeout_set = ms
-
-
-def test_eventtime_kernel_keeps_pre_watermark_ref_for_boundary_probe():
-    """A probe with pt == watermark is NOT late (Spark drops only
-    ts < watermark) and under strict (<) matching needs the latest ref
-    with rt < watermark. Pruning must therefore retain the newest
-    strictly-pre-watermark ref even when a ref sits exactly AT the
-    watermark — a bisect_right-style at-or-before cut would discard it
-    and hand the boundary probe a NULL."""
-    import pandas as pd
-
-    from spacy_llm_spark.streaming.stateful import _eventtime_asof_kernel
-
-    kernel = _eventtime_asof_kernel("view", "click", "event_type", "UTC")
-    wm_us = 200_000_000  # watermark at t=200s
-    t = lambda s: pd.Timestamp(1970, 1, 1) + pd.Timedelta(seconds=s)
-
-    # batch 1: refs at 100s and exactly 200s; watermark already at 200s
-    state = _FakeState(watermark_ms=wm_us // 1000)
-    batch1 = pd.DataFrame(
-        {"event_id": [10, 11], "key": [7, 7], "ts": [t(100), t(200)],
-         "event_type": ["click", "click"], "value": [1.0, 2.0]}
-    )
-    list(kernel((7,), iter([batch1]), state))
-    refs = [tuple(r) for r in state.get[1]]
-    assert (100_000_000, 10, 1.0) in refs  # pre-wm ref survives pruning
-    assert (200_000_000, 11, 2.0) in refs
-
-    # batch 2: boundary probe at pt == wm == 200s -> must match ref@100s
-    batch2 = pd.DataFrame(
-        {"event_id": [20], "key": [7], "ts": [t(200)],
-         "event_type": ["view"], "value": [0.0]}
-    )
-    out = pd.concat(list(kernel((7,), iter([batch2]), state)))
-    assert list(out["event_id"]) == [20]
-    assert out.iloc[0]["matched_id"] == 10
-    assert out.iloc[0]["matched_value"] == 1.0
-
-
-def test_temporal_joins_reject_mixed_timestamp_flavors(spark):
-    """NTZ vs TZ sides bucket/compare on epoch bases that differ by the
-    session-tz offset; both operators must refuse the mix loudly
-    instead of silently dropping matches."""
-    from datetime import datetime
-
-    from spacy_llm_spark.operators.asof import asof_join
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    left = spark.createDataFrame(
-        [(1, "k", datetime(2024, 1, 1))], "lid long, k string, lt timestamp"
-    )
-    right_ntz = spark.createDataFrame(
-        [(2, "k", datetime(2024, 1, 1))], "rid long, k string, rt timestamp_ntz"
-    )
-    with pytest.raises(ValueError, match="mixed timestamp flavors"):
-        asof_join(left, right_ntz, on="k", left_time="lt",
-                  right_time="rt", right_cols=["rid"])
-
-    pts = spark.createDataFrame(
-        [(1, datetime(2024, 1, 1))], "pid long, t timestamp_ntz"
-    )
-    ivs = spark.createDataFrame(
-        [(2, datetime(2024, 1, 1), datetime(2024, 1, 2))],
-        "wid long, ws timestamp, we timestamp",
-    )
-    with pytest.raises(ValueError, match="mixed timestamp flavors"):
-        interval_join(pts, ivs, point_time="t", start="ws", end="we",
-                      bucket_secs=60)
-
-
-def test_streaming_asof_eventtime_kill_and_resume(spark, tmp_path):
-    """State-store recovery: stop the event-time as-of query mid-run
-    (buffered probes + refs in state), start a NEW query from the same
-    checkpoint, feed more data — the combined output must equal the
-    batch asof_join over all watermark-admitted rows."""
-    from datetime import datetime
-
-    from spacy_llm_spark.operators.asof import asof_join
-    from spacy_llm_spark.streaming.stateful import streaming_asof_eventtime
-
-    src = tmp_path / "etkr_src"
-    ck = tmp_path / "etkr_ck"
-    sink = tmp_path / "etkr_out"
-    schema = (
-        "event_id long, user_id long, ts timestamp, "
-        "event_type string, value double"
-    )
-
-    def deliver(rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(str(src))
-
-    def start_query():
-        # file sink, not memory: the memory sink refuses checkpoint
-        # recovery, and recovery is exactly what this test drives
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(str(src))
-        )
-        out = streaming_asof_eventtime(stream, watermark="10 minutes")
-        return (
-            out.writeStream.format("parquet")
-            .outputMode("append")
-            .option("path", str(sink))
-            .option("checkpointLocation", str(ck))
-            .start()
-        )
-
-    def sink_rows():
-        try:
-            return spark.read.parquet(str(sink)).collect()
-        except Exception:  # sink dir not created yet
-            return []
-
-    t = lambda m: datetime(2024, 1, 1, 10, m)
-    all_rows = []
-
-    def rows(batch):
-        all_rows.extend(batch)
-        return batch
-
-    # phase 1: refs and probes across two keys; probe 3 stays buffered
-    # (watermark has not passed it when we kill the query).
-    # first delivery BEFORE the stream starts: the file source requires
-    # an existing path
-    deliver(rows([(1, 7, t(0), "click", 5.0),
-                  (2, 8, t(1), "click", 6.0)]))
-    q1 = start_query()
-    try:
-        q1.processAllAvailable()
-        deliver(rows([(3, 7, t(5), "view", 0.0),
-                      (4, 8, t(6), "view", 0.0)]))
-        q1.processAllAvailable()
-        assert len(sink_rows()) == 0  # everything still buffered in state
-    finally:
-        q1.stop()
-
-    # phase 2: NEW query, SAME checkpoint — state must come back; a
-    # late ref for key 7 (10:03 < probe 10:05) retro-matches the
-    # RECOVERED buffered probe, then the watermark advances and flushes
-    q2 = start_query()
-    try:
-        deliver(rows([(5, 7, t(3), "click", 7.0)]))
-        q2.processAllAvailable()
-        deliver(rows([(6, 7, t(40), "click", 1.0),
-                      (7, 8, t(40), "click", 2.0)]))
-        q2.processAllAvailable()
-        deliver(rows([(8, 7, t(59), "click", 1.5)]))
-        q2.processAllAvailable()
-        streamed = {
-            r["event_id"]: (r["matched_id"], r["matched_value"])
-            for r in sink_rows()
-        }
-    finally:
-        q2.stop()
-
-    # batch reference over every admitted row (none were late here)
-    df = spark.createDataFrame(all_rows, schema)
-    views = df.where(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = df.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("matched_id"),
-        "user_id",
-        F.col("ts").alias("cts"),
-        F.col("value").alias("matched_value"),
-    )
-    expected = {
-        r["event_id"]: (r["matched_id"], r["matched_value"])
-        for r in asof_join(
-            views, clicks, on="user_id", left_time="ts", right_time="cts",
-            right_cols=["matched_id", "matched_value"],
-            right_tiebreak="matched_id", strict=True,
-        ).collect()
-    }
-    assert streamed == expected
-    assert streamed == {3: (5, 7.0), 4: (2, 6.0)}
-
-
-def test_incremental_vertex_maintenance_live(spark, tmp_path):
-    """maintain_vertices=True keeps the canonical label map current
-    across micro-batch deliveries: after two waves (the second both
-    extends an existing cluster and adds a new one), the latest snapshot
-    must equal a from-scratch canonical_vertices over ALL links."""
-    from spacy_llm_spark.operators import canonicalize as canon
-    from spacy_llm_spark.operators import materialize as mat
-    from spacy_llm_spark.pipeline import KGConfig, annotate_corpus
-    from spacy_llm_spark.streaming.incremental import latest_vertex_snapshot
-
-    src = tmp_path / "incoming"
-    out = tmp_path / "kg_out"
-    schema = "doc_id long, content string, lang string"
-    rows1 = [(1, "spark join customer", "python"), (2, "window sort table", "java")]
-    rows2 = [(3, "join filter stream", "python"), (4, "merge part region", "go")]
-
-    df1 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    df1.write.mode("append").parquet(str(src))
-    q = run_incremental(
-        spark, str(src), str(out), trigger_once=True, maintain_vertices=True
-    )
-    q.awaitTermination(120)
-    snap1 = latest_vertex_snapshot(spark, str(out))
-    assert snap1 is not None and snap1.count() > 0
-
-    df2 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    df2.write.mode("append").parquet(str(src))
-    q = run_incremental(
-        spark, str(src), str(out), trigger_once=True, maintain_vertices=True
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r.node, r.component)
-        for r in latest_vertex_snapshot(spark, str(out)).collect()
-    }
-    corpus = (
-        spark.createDataFrame(rows1 + rows2, schema)
-        .withColumn("content_sha256", F.sha2("content", 256))
-    )
-    links = mat.links_table(
-        annotate_corpus(corpus, KGConfig(), None), ("doc_id", "content_sha256")
-    )
-    want = {
-        (r.node, r.component)
-        for r in canon.canonical_vertices(links)
-        .select("node", "component")
-        .collect()
-    }
-    assert got == want
-
-
-def test_vertex_maintenance_replay_is_noop(spark, tmp_path):
-    """Crash-replay of a batch with maintain_vertices: the replayed merge
-    re-reads a snapshot that may already contain the batch's edges —
-    re-merging the same edges must leave labels bit-identical (the no-op
-    property the exactly-once claim rests on)."""
-    from spacy_llm_spark.streaming.incremental import (
-        latest_vertex_snapshot,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_vertices=True)
-    schema = "doc_id long, content string, lang string"
-    b0 = spark.createDataFrame(
-        [(1, "spark join customer", "python")], schema
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    proc(b0, 0)
-    b1 = spark.createDataFrame(
-        [(2, "join filter stream", "python")], schema
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    proc(b1, 1)
-    after_once = {
-        (r.node, r.component)
-        for r in latest_vertex_snapshot(spark, str(out)).collect()
-    }
-    # replay batch 1 (same batch_id, same rows — a foreachBatch crash
-    # replay). Deleting the processed-keys table forces the WORST case:
-    # the anti-join cannot empty the batch, so the full merge re-runs
-    # over a snapshot that already contains these edges — and must be a
-    # no-op. (A crash between the snapshot write and the keys marker
-    # produces exactly this state.)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(b1, 1)
-    after_replay = {
-        (r.node, r.component)
-        for r in latest_vertex_snapshot(spark, str(out)).collect()
-    }
-    assert after_replay == after_once
-
-    # and the literal no-op property: re-merging a batch's edges into a
-    # snapshot that ALREADY contains them changes nothing
-    from spacy_llm_spark.operators.canonicalize import (
-        incremental_components,
-        links_increment_edges,
-    )
-
-    links1 = spark.read.parquet(str(out / "links" / "batch_id=1"))
-    remerged = {
-        (r.node, r.component)
-        for r in incremental_components(
-            latest_vertex_snapshot(spark, str(out)),
-            links_increment_edges(links1),
-        ).collect()
-    }
-    assert remerged == after_once
-
-
-def test_poison_batch_quarantines_without_killing_stream(spark, tmp_path):
-    """A batch whose rows cannot be annotated (missing content column)
-    must be quarantined by the admit/annotate phase — the processor
-    returns normally (stream stays alive) and no sink partitions land."""
-    from spacy_llm_spark import fs as _fs
-    from spacy_llm_spark.streaming.incremental import make_batch_processor
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out))
-    poison = spark.createDataFrame(
-        [(1, "not-a-content-column", "x" * 64)],
-        "doc_id long, wrong string, content_sha256 string",
-    )
-    proc(poison, 0)  # must not raise
-    assert _fs.exists(spark, str(out / "_quarantine"))
-    assert not _fs.exists(spark, str(out / "edges"))
-    assert not _fs.exists(spark, str(out / "_processed_keys"))
-
-
-def test_vertex_snapshot_retention_prunes_old_batches(spark, tmp_path):
-    """maintain_vertices snapshots are full maps and only the newest is
-    ever read — retention keeps the last K committed snapshots and
-    deletes older ones after the keys marker commits, so storage stays
-    bounded at K x map instead of batches x map. A torn (uncommitted)
-    stale dir is collected too; the retained window and the readable
-    snapshot are unaffected."""
-    from spacy_llm_spark import fs as _fs
-    from spacy_llm_spark.streaming.incremental import (
-        latest_vertex_snapshot,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(
-        spark, str(out), maintain_vertices=True, vertex_snapshot_retention=2
-    )
-    schema = "doc_id long, content string, lang string"
-    texts = [
-        "spark join customer", "join filter stream",
-        "window sort merge", "stream shuffle partition",
-    ]
-    # plant a torn stale snapshot (no _SUCCESS) that pruning must collect
-    torn = out / "vertices" / "batch_id=90"
-    torn.mkdir(parents=True)
-    (torn / "part-00000.parquet").write_bytes(b"")
-    for i, text in enumerate(texts, start=100):
-        b = spark.createDataFrame(
-            [(i, text, "python")], schema
-        ).withColumn("content_sha256", F.sha2("content", 256))
-        proc(b, i)
-
-    kept = sorted(p.name for p in (out / "vertices").iterdir())
-    assert kept == ["batch_id=102", "batch_id=103"]
-    # the readable snapshot is the newest and still holds the full map
-    snap = latest_vertex_snapshot(spark, str(out))
-    nodes = {r.node for r in snap.collect()}
-    assert "K110" in nodes  # 'join' linked in the very first batch
-
-    # retention=None preserves everything (debug mode)
-    out2 = tmp_path / "kg_out2"
-    proc2 = make_batch_processor(
-        spark, str(out2), maintain_vertices=True,
-        vertex_snapshot_retention=None,
-    )
-    for i, text in enumerate(texts[:3], start=200):
-        b = spark.createDataFrame(
-            [(i, text, "python")], schema
-        ).withColumn("content_sha256", F.sha2("content", 256))
-        proc2(b, i)
-    assert len(list((out2 / "vertices").iterdir())) == 3
-
-
-def test_dupngram_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_dupngrams=True keeps the duplicated-span stats current
-    across micro-batch deliveries — the latest snapshot equals a
-    from-scratch duplicated_ngram_stats over ALL docs — and a crash
-    replay of a batch (same batch_id, keys erased: the worst case)
-    leaves the snapshot bit-identical, because the replayed probe reads
-    the prior-batch base, never its own torn output."""
-    from spacy_llm_spark.operators.dedup import duplicated_ngram_stats
-    from spacy_llm_spark.streaming.incremental import (
-        latest_dupngram_stats,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(
-        spark, str(out), maintain_dupngrams=True, dupngram_n=3
-    )
-    schema = "doc_id long, content string, lang string"
-    rows1 = [(1, "spark join customer table", "python"),
-             (2, "window sort table", "java")]
-    rows2 = [(3, "spark join customer index", "python"),  # shares a 3-gram with 1
-             (4, "merge part region", "go")]
-    b0 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b0, 0)
-    snap0 = latest_dupngram_stats(spark, str(out))
-    assert snap0 is not None and snap0.count() == 2
-
-    b1 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b1, 1)
-    got = sorted(map(tuple, latest_dupngram_stats(spark, str(out)).collect()))
-    corpus = spark.createDataFrame(rows1 + rows2, schema)
-    want = sorted(map(tuple, duplicated_ngram_stats(
-        corpus, n=3, text_col="content").collect()))
-    assert got == want
-    by_id = {t[0]: t for t in got}
-    assert by_id[1][2] == 1 and by_id[3][2] == 1  # the shared "spark join customer"
-
-    # crash replay of batch 1 with the keys table erased (worst case —
-    # the anti-join cannot empty the batch, the probe fully re-runs)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(b1, 1)
-    replayed = sorted(map(tuple, latest_dupngram_stats(spark, str(out)).collect()))
-    assert replayed == got
-
-
-def test_dupngram_snapshot_retention_prunes(spark, tmp_path):
-    """counts/stats snapshots keep only the newest K; the grams subdirs
-    (the standing index in append form) are never pruned."""
-    import os
-
-    from spacy_llm_spark.streaming.incremental import make_batch_processor
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(
-        spark, str(out), maintain_dupngrams=True,
-        dupngram_snapshot_retention=2,
-    )
-    schema = "doc_id long, content string, lang string"
-    for i in range(4):
-        b = spark.createDataFrame(
-            [(10 * i + 1, f"spark join customer {i}", "python")], schema
-        ).withColumn("content_sha256", F.sha2("content", 256))
-        proc(b, i)
-    def _bids(sub):
-        p = out / "dupngram" / sub
-        return sorted(
-            int(d.split("=")[1]) for d in os.listdir(p) if d.startswith("batch_id=")
-        )
-    assert _bids("stats") == [2, 3]
-    assert _bids("counts") == [2, 3]
-    assert _bids("grams") == [0, 1, 2, 3]
-
-
-def test_sink_compaction_roundtrip_and_crash_safety(spark, tmp_path):
-    """compact_sink folds old batch dirs into one committed range with
-    row-identical read_sink output; crash leftovers (an original still
-    present under a committed range, a superseded nested range) are
-    invisible to readers and collected by the next sweep."""
-    import shutil
-
-    from spacy_llm_spark.streaming.incremental import (
-        compact_sink,
-        make_batch_processor,
-        read_sink,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out))
-    schema = "doc_id long, content string, lang string"
-    for i in range(4):
-        b = spark.createDataFrame(
-            [(10 * i + j, f"spark join customer {i} {j}", "python")
-             for j in range(2)],
-            schema,
-        ).withColumn("content_sha256", F.sha2("content", 256))
-        proc(b, i)
-
-    before = sorted(map(tuple, read_sink(spark, str(out), "links").collect()))
-    folded = compact_sink(spark, str(out), "links", keep_recent=2)
-    assert folded == 2  # batches 0,1 folded; 2,3 kept
-    after = sorted(map(tuple, read_sink(spark, str(out), "links").collect()))
-    assert after == before
-    import os
-
-    leaves = sorted(os.listdir(out / "links"))
-    assert "batch_lo=0_hi=1" in leaves
-    assert "batch_id=0" not in leaves and "batch_id=1" not in leaves
-    assert "batch_id=2" in leaves and "batch_id=3" in leaves
-
-    # crash leftover 1: an original re-appears under the committed range
-    # (as if the post-commit delete died) — readers must ignore it
-    shutil.copytree(out / "links" / "batch_id=2", out / "links" / "batch_id=1")
-    assert sorted(map(tuple, read_sink(spark, str(out), "links").collect())) == before
-    # the next sweep collects it without folding anything new
-    collected = compact_sink(spark, str(out), "links", keep_recent=2)
-    assert collected >= 1
-    assert "batch_id=1" not in os.listdir(out / "links")
-
-    # crash leftover 2: a superseded NESTED range left by a crashed
-    # re-compaction — fold everything into a wider range, then restore
-    # the old narrow range dir
-    shutil.copytree(out / "links" / "batch_lo=0_hi=1", tmp_path / "stash")
-    compact_sink(spark, str(out), "links", keep_recent=0)
-    leaves = [d for d in os.listdir(out / "links") if d.startswith("batch_lo=")]
-    assert leaves == ["batch_lo=0_hi=3"]
-    shutil.copytree(tmp_path / "stash", out / "links" / "batch_lo=0_hi=1")
-    assert sorted(map(tuple, read_sink(spark, str(out), "links").collect())) == before
-    compact_sink(spark, str(out), "links", keep_recent=0)
-    assert [d for d in os.listdir(out / "links") if d.startswith("batch_lo=")] == [
-        "batch_lo=0_hi=3"
-    ]
-    assert sorted(map(tuple, read_sink(spark, str(out), "links").collect())) == before
-
-
-def test_auto_compaction_in_processor(spark, tmp_path):
-    """compact_every triggers the sweep from inside the batch loop and
-    read_sink stays row-identical."""
-    import os
-
-    from spacy_llm_spark.streaming.incremental import (
-        make_batch_processor,
-        read_sink,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), compact_every=2)
-    schema = "doc_id long, content string, lang string"
-    rows = []
-    for i in range(5):
-        r = (i, f"spark join customer {i}", "python")
-        rows.append(r)
-        b = spark.createDataFrame([r], schema).withColumn(
-            "content_sha256", F.sha2("content", 256)
-        )
-        proc(b, i)
-    leaves = sorted(os.listdir(out / "links"))
-    assert any(d.startswith("batch_lo=") for d in leaves)
-    got_docs = {
-        r["doc_id"] for r in read_sink(spark, str(out), "links").collect()
-    }
-    assert got_docs == {0, 1, 2, 3, 4}
-
-
-def test_dupngram_maintenance_dedups_within_batch(spark, tmp_path):
-    """Two rows with the same id/content inside ONE batch must count as
-    one document — a gram unique to that document stays unduplicated."""
-    from spacy_llm_spark.streaming.incremental import (
-        latest_dupngram_stats,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_dupngrams=True)
-    schema = "doc_id long, content string, lang string"
-    b = spark.createDataFrame(
-        [(1, "spark join customer unique gram", "python"),
-         (1, "spark join customer unique gram", "python")],
-        schema,
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    proc(b, 0)
-    rows = latest_dupngram_stats(spark, str(out)).collect()
-    assert len(rows) == 1
-    assert rows[0]["n_dup_grams"] == 0  # its grams exist in ONE doc only
-
-
-def test_compaction_collects_torn_range_dir(spark, tmp_path):
-    """An UNCOMMITTED batch_lo dir (crash mid-consolidation) is ignored
-    by read_sink and garbage-collected by the next sweep."""
-    import os
-
-    from spacy_llm_spark.streaming.incremental import (
-        compact_sink,
-        make_batch_processor,
-        read_sink,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out))
-    schema = "doc_id long, content string, lang string"
-    for i in range(3):
-        b = spark.createDataFrame(
-            [(i, f"spark join customer {i}", "python")], schema
-        ).withColumn("content_sha256", F.sha2("content", 256))
-        proc(b, i)
-    before = sorted(map(tuple, read_sink(spark, str(out), "links").collect()))
-    # simulate the torn write: parquet data, no _SUCCESS
-    torn = out / "links" / "batch_lo=0_hi=9"
-    spark.read.parquet(str(out / "links" / "batch_id=0")).write.parquet(str(torn))
-    os.remove(torn / "_SUCCESS")
-    assert sorted(map(tuple, read_sink(spark, str(out), "links").collect())) == before
-    compact_sink(spark, str(out), "links", keep_recent=8)  # folds nothing
-    assert not os.path.exists(torn)
-    assert sorted(map(tuple, read_sink(spark, str(out), "links").collect())) == before
-
-
-def test_packing_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_packing=True packs each micro-batch as a continuation of
-    the running token stream: the union of per-batch segments equals
-    pack_sequences over the whole arrival-ordered corpus, batch totals
-    accumulate exactly, and a crash replay (same batch_id, keys erased)
-    leaves segments and totals bit-identical because the base total is
-    always the PRIOR batch's committed snapshot."""
-    from spacy_llm_spark.operators.packing import pack_sequences
-    from spacy_llm_spark.streaming.incremental import (
-        make_batch_processor,
-        packed_segments,
-    )
-
-    out = tmp_path / "kg_out"
-    budget = 16
-    proc = make_batch_processor(
-        spark, str(out), maintain_packing=True, packing_budget=budget
-    )
-    schema = "doc_id long, content string, lang string"
-    rows1 = [(1, "spark join customer table", "python"),
-             (2, "window sort table merge part region scan", "java")]
-    rows2 = [(3, "filter merge part", "go"),
-             (4, "vector scan index row group batch", "rust")]
-    b0 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b0, 0)
-    b1 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b1, 1)
-
-    got = sorted(map(tuple, packed_segments(spark, str(out)).collect()))
-    # arrival order == doc_id order here, so the full recompute over the
-    # concatenated corpus is the exact reference
-    corpus = spark.createDataFrame(rows1 + rows2, schema)
-    want = sorted(map(tuple, pack_sequences(
-        corpus, budget, text_col="content", n_chunks=1).collect()))
-    assert got == want
-    # batch 1 continues mid-pack: doc 2 ends at token 11 (not a budget
-    # boundary), so doc 3 must start in the same pack
-    by_doc = {t[0]: t for t in got}
-    assert by_doc[3][1] == by_doc[2][1] or by_doc[3][2] > 0
-
-    # totals snapshot accumulates exactly
-    tot = spark.read.parquet(str(out / "packing" / "totals" / "batch_id=1"))
-    assert tot.head()["total_tokens"] == 4 + 7 + 3 + 6
-
-    # crash replay of batch 1 with the keys table erased (worst case)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(b1, 1)
-    replayed = sorted(map(tuple, packed_segments(spark, str(out)).collect()))
-    assert replayed == got
-    tot2 = spark.read.parquet(str(out / "packing" / "totals" / "batch_id=1"))
-    assert tot2.head()["total_tokens"] == 20
-
-
-def test_wordindex_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_wordindex=True keeps the BPE word-frequency index
-    current across micro-batch deliveries — the latest snapshot equals
-    word_index over ALL docs — and a keys-erased crash replay leaves it
-    bit-identical (the replayed merge reads the prior-batch base)."""
-    from spacy_llm_spark.functions.bpe import (
-        pair_counts_from_index,
-        word_index,
-        word_index_stamp,
-    )
-    from spacy_llm_spark.streaming.incremental import (
-        latest_word_index,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_wordindex=True)
-    schema = "doc_id long, content string, lang string"
-    rows1 = [(1, "spark join customer table", "python"),
-             (2, "window sort table", "java")]
-    rows2 = [(3, "spark join spark join", "python"),
-             (4, "merge part region", "go")]
-    b0 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b0, 0)
-    snap0 = latest_word_index(spark, str(out))
-    assert snap0 is not None and word_index_stamp() in snap0.columns
-
-    b1 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b1, 1)
-    got = sorted(
-        map(tuple, latest_word_index(spark, str(out)).select("word", "n").collect())
-    )
-    corpus = spark.createDataFrame(rows1 + rows2, schema)
-    want = sorted(
-        map(tuple, word_index(corpus, text_col="content")
-            .select("word", "n").collect())
-    )
-    assert got == want
-    # the snapshot is probe-ready: round-0 stats come straight off it
-    assert pair_counts_from_index(latest_word_index(spark, str(out))).count() > 0
-
-    # crash replay of batch 1, keys erased (worst case)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(b1, 1)
-    replayed = sorted(
-        map(tuple, latest_word_index(spark, str(out)).select("word", "n").collect())
-    )
-    assert replayed == got
-
-    # retention: 3 batches with retention=3 -> only newest 3 remain
-    b2 = spark.createDataFrame(
-        [(5, "filter scan batch", "rust")], schema
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    proc(b2, 2)
-    import os
-
-    dirs = sorted(os.listdir(out / "wordindex"))
-    assert dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
-
-
-def test_dsir_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_dsir=True keeps the DSIR raw-distribution bucket index
-    current across micro-batch deliveries — the latest snapshot equals
-    bucket_count_index over ALL docs — the snapshot is score-ready
-    against an offline target index, and a keys-erased crash replay
-    leaves it bit-identical."""
-    from spacy_llm_spark.operators.importance import (
-        N_BUCKETS,
-        bucket_count_index,
-        dsir_index_stamp,
-        dsir_logweights,
-        dsir_logweights_from_index,
-    )
-    from spacy_llm_spark.streaming.incremental import (
-        latest_dsir_index,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_dsir=True)
-    schema = "doc_id long, content string, lang string"
-    rows1 = [(1, "spark join customer table", "python"),
-             (2, "window sort table scan", "java")]
-    rows2 = [(3, "spark join spark join", "python"),
-             (4, "merge part region scan", "go")]
-    b0 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b0, 0)
-    snap0 = latest_dsir_index(spark, str(out))
-    assert snap0 is not None and dsir_index_stamp(2, N_BUCKETS) in snap0.columns
-
-    b1 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b1, 1)
-    got = sorted(map(tuple, latest_dsir_index(spark, str(out))
-                 .select("bucket", "n").collect()))
-    corpus = spark.createDataFrame(rows1 + rows2, schema)
-    want = sorted(map(tuple, bucket_count_index(corpus, text_col="content")
-                  .select("bucket", "n").collect()))
-    assert got == want  # integer counts: bit-equal to the full rebuild
-
-    # the snapshot is score-ready: weights off (live raw index, offline
-    # target index) match the direct two-corpus computation
-    target = corpus.where("lang = 'python'")
-    tgt_idx = bucket_count_index(target, text_col="content").localCheckpoint()
-    from_idx = {
-        r["doc_id"]: r["dsir_logweight"]
-        for r in dsir_logweights_from_index(
-            corpus, latest_dsir_index(spark, str(out)), tgt_idx,
-            text_col="content",
-        ).collect()
-    }
-    direct = {
-        r["doc_id"]: r["dsir_logweight"]
-        for r in dsir_logweights(corpus, target, text_col="content").collect()
-    }
-    assert set(from_idx) == set(direct)
-    for i in direct:
-        assert from_idx[i] == pytest.approx(direct[i], abs=2e-6)
-
-    # crash replay of batch 1, keys erased (worst case)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(b1, 1)
-    replayed = sorted(map(tuple, latest_dsir_index(spark, str(out))
-                      .select("bucket", "n").collect()))
-    assert replayed == got
-
-    # retention: 3 batches with retention=3 -> only newest 3 remain
-    b2 = spark.createDataFrame(
-        [(5, "filter scan batch", "rust")], schema
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    proc(b2, 2)
-    import os
-
-    dirs = sorted(os.listdir(out / "dsirindex"))
-    assert dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
-
-
-def test_lsh_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_lsh=True keeps the banded MinHash index (append form)
-    and the verified near-dup pair snapshot current across micro-batch
-    deliveries — the pair snapshot equals minhash_lsh_dup_pairs over all
-    CONTENT-UNIQUE docs (exact duplicates never reach maintenance: the
-    sha gate drops them upstream, so LSH only needs the near-dups), the
-    standing band index is probe-ready, and a keys-erased crash replay
-    leaves both bit-identical."""
-    from spacy_llm_spark.operators import dedup as dd
-    from spacy_llm_spark.streaming.incremental import (
-        latest_lsh_pairs,
-        lsh_band_index,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(
-        spark, str(out), maintain_lsh=True, lsh_threshold=0.6
-    )
-    schema = "doc_id long, content string, lang string"
-    dup_text = "spark join filter window sort group table scan merge part"
-    rows1 = [(1, dup_text, "python"),
-             (2, "completely different tokens here entirely", "java")]
-    rows2 = [(3, dup_text + " extra", "python"),
-             (4, dup_text, "go")]
-    b0 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b0, 0)
-    assert latest_lsh_pairs(spark, str(out)) is not None
-
-    b1 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b1, 1)
-    got = sorted(map(tuple, latest_lsh_pairs(spark, str(out)).collect()))
-    # doc 4 is an EXACT dup of doc 1 (same sha) — the stream's content
-    # gate drops it before maintenance, so the standing corpus is the
-    # content-unique one
-    corpus = spark.createDataFrame(rows1 + rows2[:1], schema)
-    want = sorted(map(tuple, dd.minhash_lsh_dup_pairs(
-        corpus, text_col="content", id_col="doc_id", threshold=0.6
-    ).collect()))
-    assert got == want
-    assert (1, 3) in {(a, b) for a, b, _ in got}  # the near-dup pair
-
-    # the standing band index is probe-ready: a fresh out-of-stream
-    # probe batch against it matches a probe against a from-scratch
-    # corpus index
-    idx = lsh_band_index(spark, str(out)).localCheckpoint()
-    nb = spark.createDataFrame([(9, dup_text + " tail", "zig")], schema)
-    via_stream_idx = sorted(map(tuple, dd.minhash_lsh_probe(
-        nb, idx, text_col="content", id_col="doc_id", threshold=0.6,
-        include_new_pairs=False,
-    ).collect()))
-    fresh_idx = dd.minhash_lsh_index(
-        corpus, text_col="content", id_col="doc_id"
-    ).localCheckpoint()
-    via_fresh_idx = sorted(map(tuple, dd.minhash_lsh_probe(
-        nb, fresh_idx, text_col="content", id_col="doc_id", threshold=0.6,
-        include_new_pairs=False,
-    ).collect()))
-    assert via_stream_idx == via_fresh_idx and via_stream_idx
-
-    # crash replay of batch 1: the crash window that matters is AFTER
-    # the lsh writes but BEFORE the keys marker commits — erase only
-    # batch 1's own keys subdir (erasing PRIOR batches' keys would
-    # legitimately change the batch composition here, since doc 4's sha
-    # duplicates batch 0's doc 1 and the gate is what drops it)
-    from spacy_llm_spark import fs as _fs
-
-    bands_before = sorted(map(tuple, lsh_band_index(spark, str(out))
-                          .drop("sig").collect()))
-    _fs.delete(spark, str(out / "_processed_keys" / "batch_id=1"))
-    proc(b1, 1)
-    assert sorted(map(tuple, latest_lsh_pairs(spark, str(out)).collect())) == got
-    assert sorted(map(tuple, lsh_band_index(spark, str(out))
-                  .drop("sig").collect())) == bands_before
-
-    # retention: pairs snapshots prune to newest 3; bands never prune
-    import os
-
-    for extra_bid in (2, 3, 4):
-        bx = spark.createDataFrame(
-            [(10 + extra_bid, f"unique content {extra_bid}", "rust")], schema
-        ).withColumn("content_sha256", F.sha2("content", 256))
-        proc(bx, extra_bid)
-    assert sorted(os.listdir(out / "lsh" / "pairs")) == [
-        "batch_id=2", "batch_id=3", "batch_id=4"
-    ]
-    assert sorted(os.listdir(out / "lsh" / "bands")) == [
-        f"batch_id={i}" for i in range(5)
-    ]
+"""MinHash-LSH probe against a prebuilt batch index (operators/dedup.py)."""
 
 
 def test_lsh_probe_prebuilt_new_index_matches_rebuilt(spark):
@@ -1539,404 +29,3 @@ def test_lsh_probe_prebuilt_new_index_matches_rebuilt(spark):
     wrong = dd.minhash_lsh_index(nb, seed=99).localCheckpoint()
     with _pytest.raises(ValueError):
         dd.minhash_lsh_probe(nb, idx, threshold=0.5, new_index=wrong)
-
-
-def test_edgesupport_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_edgesupport=True keeps the per-triple provenance table
-    current across micro-batch deliveries: the latest snapshot equals
-    edge_support over the whole committed edges sink (the additive
-    merge is exact because the keys anti-join makes batch doc sets
-    disjoint), support stays NULL (reader divides by its own corpus
-    count), and a keys-erased crash replay leaves it bit-identical."""
-    from spacy_llm_spark.operators.materialize import edge_support
-    from spacy_llm_spark.streaming.incremental import (
-        latest_edge_support,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_edgesupport=True)
-    schema = "doc_id long, content string, lang string"
-    rows1 = [
-        (1, "join reads table then filter writes table", "python"),
-        (2, "window sort table scan join", "java"),
-    ]
-    rows2 = [
-        (3, "join reads table then join writes table", "python"),
-        (4, "merge part region scan filter", "go"),
-    ]
-    b0 = spark.createDataFrame(rows1, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b0, 0)
-    snap0 = latest_edge_support(spark, str(out))
-    assert snap0 is not None and snap0.count() > 0
-
-    b1 = spark.createDataFrame(rows2, schema).withColumn(
-        "content_sha256", F.sha2("content", 256)
-    )
-    proc(b1, 1)
-    cols = ("subj", "pred", "obj", "n_docs", "n_mentions")
-    snap = latest_edge_support(spark, str(out))
-    got = sorted(map(tuple, snap.select(*cols).collect()))
-    all_edges = spark.read.parquet(str(out / "edges"))
-    want = sorted(
-        map(tuple, edge_support(all_edges).select(*cols).collect())
-    )
-    assert got == want and len(got) > 0
-    assert all(r.support is None for r in snap.collect())
-
-    # crash replay of batch 1, keys erased (worst case)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(b1, 1)
-    replayed = sorted(
-        map(
-            tuple,
-            latest_edge_support(spark, str(out)).select(*cols).collect(),
-        )
-    )
-    assert replayed == got
-
-    # retention: 3 committed snapshots with the default retention=3
-    b2 = spark.createDataFrame(
-        [(5, "filter scan batch emits metrics", "rust")], schema
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    proc(b2, 2)
-    import os
-
-    dirs = sorted(os.listdir(out / "edgesupport"))
-    assert dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
-
-
-def test_factstate_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_snapshot=True keeps the live current-fact state
-    (latest obj per (subj, pred), ts = last asserting batch) equal to
-    the full temporal recompute over every committed batch's edges; a
-    keys-erased crash replay leaves it bit-identical, and retention
-    keeps only the newest snapshots."""
-    from spacy_llm_spark.operators.temporal import snapshot_state
-    from spacy_llm_spark.streaming.incremental import (
-        latest_fact_state,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_snapshot=True)
-    schema = "doc_id long, content string, lang string"
-    batches = [
-        [(1, "join reads table then filter writes table", "python"),
-         (2, "window sort table scan join", "java")],
-        [(3, "join reads table then join writes table", "python"),
-         (4, "merge part region scan filter", "go")],
-        [(5, "filter scan batch emits metrics", "rust")],
-    ]
-    frames = [
-        spark.createDataFrame(rows, schema).withColumn(
-            "content_sha256", F.sha2("content", 256)
-        )
-        for rows in batches
-    ]
-    cols = ("subj", "pred", "obj", "ts")
-
-    def state_rows(df):
-        return sorted(map(tuple, df.select(*cols).collect()))
-
-    for bid, frame in enumerate(frames):
-        proc(frame, bid)
-        got = state_rows(latest_fact_state(spark, str(out)))
-        # full recompute over every committed batch's edges sink
-        all_edges = spark.read.parquet(str(out / "edges"))
-        log = all_edges.select(
-            "subj", "pred", "obj", F.col("batch_id").cast("long").alias("ts")
-        )
-        want = state_rows(snapshot_state(log))
-        assert got == want and len(got) > 0, f"batch {bid}"
-
-    # crash replay of the last batch with the keys marker erased
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(frames[-1], len(frames) - 1)
-    assert state_rows(latest_fact_state(spark, str(out))) == got
-
-    # facts re-asserted later carry the later batch ts
-    latest = latest_fact_state(spark, str(out))
-    by_key = {(r.subj, r.pred, r.obj): r.ts for r in latest.collect()}
-    reasserted = [k for k, ts in by_key.items() if ts == 1]
-    assert reasserted, "batch 1 re-asserts at least one batch-0 fact"
-
-    import os
-
-    dirs = sorted(os.listdir(out / "factstate"))
-    assert dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
-
-
-def test_alignment_index_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_alignment=True keeps the standing feature index equal
-    to audit.alignment_index over EVERY committed batch's edges (the
-    append==rebuild contract, live); a keys-erased crash replay leaves
-    it bit-identical; probing the maintained index == a full
-    align_entities against the whole committed KG; retention prunes."""
-    from spacy_llm_spark.operators import audit
-    from spacy_llm_spark.streaming.incremental import (
-        latest_alignment_index,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_alignment=True)
-    schema = "doc_id long, content string, lang string"
-    batches = [
-        [(1, "join reads table then filter writes table", "python"),
-         (2, "window sort table scan join", "java")],
-        [(3, "join reads table then join writes table", "python"),
-         (4, "merge part region scan filter", "go")],
-        [(5, "filter scan batch emits metrics", "rust")],
-    ]
-    frames = [
-        spark.createDataFrame(rows, schema).withColumn(
-            "content_sha256", F.sha2("content", 256)
-        )
-        for rows in batches
-    ]
-
-    def rows_of(df):
-        return sorted(map(tuple, df.collect()))
-
-    for bid, frame in enumerate(frames):
-        proc(frame, bid)
-        got = latest_alignment_index(spark, str(out))
-        all_edges = spark.read.parquet(str(out / "edges")).select(
-            "subj", "pred", "obj"
-        )
-        want = audit.alignment_index(all_edges)
-        assert rows_of(got) == rows_of(want), f"batch {bid}"
-        assert len(got.take(1)) == 1
-
-    # crash replay with the keys marker erased: bit-identical
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(frames[-1], len(frames) - 1)
-    # re-read AFTER the replay rewrote batch files (fresh listings)
-    all_edges = spark.read.parquet(str(out / "edges")).select(
-        "subj", "pred", "obj"
-    )
-    want = audit.alignment_index(all_edges)
-    assert rows_of(latest_alignment_index(spark, str(out))) == rows_of(want)
-
-    # probing the live index == full alignment against the committed KG
-    probe_kg = spark.createDataFrame(
-        [("pX", "executes", "K110")], "subj string, pred string, obj string"
-    )
-    via_index = rows_of(
-        audit.align_entities_probe(
-            probe_kg, latest_alignment_index(spark, str(out))
-        )
-    )
-    full = rows_of(audit.align_entities(probe_kg, all_edges))
-    assert via_index == full
-
-    import os
-
-    dirs = sorted(os.listdir(out / "alignidx"))
-    assert dirs == ["batch_id=0", "batch_id=1", "batch_id=2"]
-
-
-def test_imports_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_imports=True keeps the per-file import index (append
-    form) and the module-provider dimension (merged snapshots) current
-    across micro-batch deliveries — standing index == import_index over
-    ALL files, provider snapshot == provider_index over ALL files, and
-    edges derived from the maintained frames == the direct recompute. A
-    keys-erased crash replay leaves everything bit-identical."""
-    import os
-
-    from spacy_llm_spark.operators import codegraph as cg
-    from spacy_llm_spark.streaming.incremental import (
-        latest_provider_index,
-        make_batch_processor,
-        standing_import_index,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_imports=True)
-    schema = "doc_id long, repo string, path string, lang string, content string"
-    rows1 = [
-        (1, "rA", "src/a.py", "en", "import mod1\nimport mod2\nspark join"),
-        (2, "rB", "src/b.rs", "es", "use dep::mod1;\nwindow sort"),
-    ]
-    rows2 = [
-        (3, "rA", "src/c.go", "fr", 'import "dep/mod3"\nmerge part'),
-        (51, "rC", "src/d.py", "en", "import mod1\nfilter scan"),
-    ]
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema).withColumn(
-            "content_sha256", F.sha2("content", 256)
-        )
-
-    proc(batch(rows1), 0)
-    proc(batch(rows2), 1)
-
-    def rows_of(df):
-        # the processor reorders columns (sha probe); compare
-        # column-name-aligned
-        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
-
-    full = batch(rows1 + rows2)
-    want_imp = rows_of(cg.import_index(full))
-    got_imp = rows_of(standing_import_index(spark, str(out)))
-    assert got_imp == want_imp
-
-    want_prov = rows_of(cg.provider_index(full))
-    got_prov = rows_of(latest_provider_index(spark, str(out)))
-    assert got_prov == want_prov
-
-    # the maintained frames are probe-ready: derived edges == direct
-    want_edges = sorted(map(tuple, cg.dependency_edges(
-        cg.extract_imports(full), cg.module_providers(full)
-    ).collect()))
-    got_edges = sorted(map(tuple, cg.dependency_edges_from_index(
-        standing_import_index(spark, str(out)),
-        latest_provider_index(spark, str(out)),
-    ).collect()))
-    assert got_edges == want_edges
-
-    # crash replay of batch 1, keys erased (worst case)
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(batch(rows2), 1)
-    assert rows_of(standing_import_index(spark, str(out))) == want_imp
-    assert rows_of(latest_provider_index(spark, str(out))) == want_prov
-
-    # missing corpus columns refused
-    import pytest as _pytest
-
-    bad = spark.createDataFrame(
-        [(9, "x")], "doc_id long, content string"
-    ).withColumn("content_sha256", F.sha2("content", 256))
-    with _pytest.raises(ValueError, match="maintain_imports"):
-        proc(bad, 2)
-
-    # retention: 4 provider snapshots with retention=3 -> oldest pruned;
-    # the per-batch import subdirs (the standing index) all survive
-    # distinct contents: identical text would be dropped by the
-    # content-sha idempotence probe before maintenance sees it
-    for i, r in enumerate(
-        [[(60 + j, "rD", f"src/e{j}.py", "en", f"import mod9\nrow {j}")]
-         for j in range(2)]
-    ):
-        proc(batch(r), 2 + i)
-    prov_dirs = sorted(os.listdir(out / "imports" / "providers"))
-    assert prov_dirs == ["batch_id=1", "batch_id=2", "batch_id=3"]
-    batch_dirs = sorted(os.listdir(out / "imports" / "batches"))
-    assert batch_dirs == [
-        "batch_id=0", "batch_id=1", "batch_id=2", "batch_id=3"
-    ]
-
-
-def test_distinct_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_distinct=True keeps the per-group HLL sketch index
-    current — the latest snapshot's estimates sit inside the 4-sigma
-    envelope of the exact distinct counts over ALL delivered rows — and
-    a keys-erased crash replay leaves the estimates EXACTLY unchanged
-    (register-wise max is idempotent)."""
-    import os
-
-    from spacy_llm_spark.operators import sketches
-    from spacy_llm_spark.streaming.incremental import (
-        latest_hll_index,
-        make_batch_processor,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_distinct=True)
-    schema = "doc_id long, content string, lang string"
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema).withColumn(
-            "content_sha256", F.sha2("content", 256)
-        )
-
-    rows1 = [(i, f"text {i}", "en" if i % 2 else "de") for i in range(40)]
-    rows2 = [(i, f"text {i}", "en" if i % 2 else "de") for i in range(40, 90)]
-    proc(batch(rows1), 0)
-    proc(batch(rows2), 1)
-
-    idx = latest_hll_index(spark, str(out))
-    est = {
-        r.lang: r.n_distinct_approx
-        for r in sketches.distinct_from_index(
-            idx, "content_sha256", ["lang"]
-        ).collect()
-    }
-    exact = {"en": 45, "de": 45}
-    for lang, n in exact.items():
-        assert abs(est[lang] - n) <= 4 * 1.04 / (2 ** 12) ** 0.5 * n + 1
-
-    # keys-erased replay: estimates EXACTLY unchanged
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(batch(rows2), 1)
-    est2 = {
-        r.lang: r.n_distinct_approx
-        for r in sketches.distinct_from_index(
-            latest_hll_index(spark, str(out)), "content_sha256", ["lang"]
-        ).collect()
-    }
-    assert est2 == est
-
-    # retention
-    proc(batch([(99, "text 99x", "en")]), 2)
-    proc(batch([(100, "text 100x", "de")]), 3)
-    dirs = sorted(os.listdir(out / "hllindex"))
-    assert dirs == ["batch_id=1", "batch_id=2", "batch_id=3"]
-
-
-
-def test_defs_maintenance_live_and_replay(spark, tmp_path):
-    """maintain_defs=True keeps the code-entity table current — the
-    standing union equals definition_index over ALL delivered files —
-    and a keys-erased crash replay leaves it bit-identical."""
-    from spacy_llm_spark.operators import codegraph as cg
-    from spacy_llm_spark.streaming.incremental import (
-        make_batch_processor,
-        standing_definition_index,
-    )
-
-    out = tmp_path / "kg_out"
-    proc = make_batch_processor(spark, str(out), maintain_defs=True)
-    schema = "doc_id long, repo string, path string, lang string, content string"
-    rows1 = [
-        (1, "rA", "src/a.py", "en", "class Foo:\n    def bar(self): pass"),
-        (2, "rB", "src/b.go", "fr", "func Run() {}\ntype T struct {}"),
-    ]
-    rows2 = [
-        (3, "rC", "src/c.rs", "es", "pub fn api() {}\nstruct S {}"),
-    ]
-
-    def batch(rows):
-        return spark.createDataFrame(rows, schema).withColumn(
-            "content_sha256", F.sha2("content", 256)
-        )
-
-    proc(batch(rows1), 0)
-    proc(batch(rows2), 1)
-
-    def rows_of(df):
-        return sorted(map(tuple, df.select(*sorted(df.columns)).collect()))
-
-    want = rows_of(cg.definition_index(batch(rows1 + rows2)))
-    got = rows_of(standing_definition_index(spark, str(out)))
-    assert got == want
-
-    from spacy_llm_spark import fs as _fs
-
-    _fs.delete(spark, str(out / "_processed_keys"))
-    proc(batch(rows2), 1)
-    assert rows_of(standing_definition_index(spark, str(out))) == want
