@@ -3154,6 +3154,57 @@ def q_kg_single_linkage(spark, sf_dir):
     return single_linkage_clusters(forest, 50_000, nodes=nodes, weight="w")
 
 
+def q_er_match_scores(spark, sf_dir):
+    """Fellegi–Sunter match weights over the SNM candidate pairs
+    (operators/linkage.py): u estimated from the part table's value
+    collision probabilities (exact integer sums), m as domain priors;
+    scoring is a pure whole-stage-codegen projection — the block→score
+    half of the ER stack in two operators."""
+    from spacy_llm_spark.operators.blocking import sorted_neighborhood_pairs
+    from spacy_llm_spark.operators.linkage import (
+        estimate_u_probs,
+        fellegi_sunter_scores,
+    )
+
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    fields = ["p_brand", "p_type", "p_size"]
+    pairs = sorted_neighborhood_pairs(
+        part, "p_partkey", "p_name", window=3, keep_cols=tuple(fields)
+    )
+    u = estimate_u_probs(part, fields)
+    m = {"p_brand": 0.95, "p_type": 0.9, "p_size": 0.85}
+    return fellegi_sunter_scores(pairs, fields, m, u)
+
+
+def q_er_clusters(spark, sf_dir):
+    """The full ER stack end-to-end: SNM blocking → Fellegi–Sunter
+    scoring → threshold (2.0) → connected components → every part
+    record labeled with its entity cluster (min member id; unmatched
+    records are singleton clusters). Ids round-trip through
+    zero-padded strings so the CC min-label convention (string min)
+    equals the numeric min the oracle computes."""
+    from spacy_llm_spark.operators import canonicalize as canon
+
+    scores = q_er_match_scores(spark, sf_dir)
+    matched = scores.where(F.col("match_weight") >= 2.0).select(
+        F.format_string("p%012d", "id_a").alias("src"),
+        F.format_string("p%012d", "id_b").alias("dst"),
+    )
+    cc = canon.connected_components(matched)
+    part = spark.read.parquet(f"{sf_dir}/part.parquet")
+    records = part.select(
+        F.col("p_partkey").cast("long").alias("record_id"),
+        F.format_string("p%012d", "p_partkey").alias("node"),
+    )
+    return records.join(cc, "node", "left").select(
+        "record_id",
+        F.coalesce(
+            F.substring("component", 2, 12).cast("long"),
+            F.col("record_id"),
+        ).alias("cluster_id"),
+    )
+
+
 # ---------------------------------------------------------------------------
 # Contract functions
 # ---------------------------------------------------------------------------
@@ -3364,6 +3415,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_edge_support_incremental": q_kg_edge_support_incremental,
         "kg_shortest_paths": q_kg_shortest_paths,
         "docs_chunks": q_docs_chunks,
+        # entity resolution (operators/blocking.py, operators/linkage.py)
+        "er_match_scores": q_er_match_scores,
+        "er_clusters": q_er_clusters,
     }
 
 
@@ -6505,6 +6559,66 @@ FROM doubled a JOIN doubled b
     # standing-pair sims) -> same oracle minus the df filter
     sql["lexical_cosine_incremental"] = sql["lexical_cosine_pairs"].replace(
         "WHERE dfc.df <= 100", ""
+    )
+    # Fellegi-Sunter over the SNM pairs: u recomputed in SQL from the
+    # same exact-integer collision sums; weights quantized 10 dp
+    # pre-sum exactly like operators/linkage.py
+    sql["er_match_scores"] = """
+WITH r AS (
+  SELECT p_partkey AS id, p_name AS key, p_brand, p_type, p_size,
+         row_number() OVER (ORDER BY p_name, p_partkey) AS rk
+  FROM part WHERE p_name IS NOT NULL
+), pr AS (
+  SELECT a.id AS id_a, b.id AS id_b, a.key AS key_a, b.key AS key_b,
+         CAST(b.rk - a.rk AS INT) AS rank_gap,
+         a.p_brand AS p_brand_a, a.p_type AS p_type_a, a.p_size AS p_size_a,
+         b.p_brand AS p_brand_b, b.p_type AS p_type_b, b.p_size AS p_size_b
+  FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
+), ub AS (
+  SELECT CAST(sum(n*n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
+  FROM (SELECT count(*) AS n FROM part WHERE p_brand IS NOT NULL GROUP BY p_brand)
+), ut AS (
+  SELECT CAST(sum(n*n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
+  FROM (SELECT count(*) AS n FROM part WHERE p_type IS NOT NULL GROUP BY p_type)
+), us AS (
+  SELECT CAST(sum(n*n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
+  FROM (SELECT count(*) AS n FROM part WHERE p_size IS NOT NULL GROUP BY p_size)
+)
+SELECT pr.*, round(
+    CASE WHEN p_brand_a IS NULL OR p_brand_b IS NULL THEN 0e0
+         WHEN p_brand_a = p_brand_b THEN round(log2(0.95e0 / ub.u), 10)
+         ELSE round(log2(0.05e0 / (1e0 - ub.u)), 10) END
+  + CASE WHEN p_type_a IS NULL OR p_type_b IS NULL THEN 0e0
+         WHEN p_type_a = p_type_b THEN round(log2(0.9e0 / ut.u), 10)
+         ELSE round(log2(0.1e0 / (1e0 - ut.u)), 10) END
+  + CASE WHEN p_size_a IS NULL OR p_size_b IS NULL THEN 0e0
+         WHEN p_size_a = p_size_b THEN round(log2(0.85e0 / us.u), 10)
+         ELSE round(log2(0.15e0 / (1e0 - us.u)), 10) END, 6) AS match_weight
+FROM pr, ub, ut, us
+"""
+    # ER clusters: wrap the er_match_scores statement as a scored CTE,
+    # add threshold + recursive undirected closure + min-member label
+    _er = sql["er_match_scores"].strip()
+    assert _er.startswith("WITH ")
+    sql["er_clusters"] = (
+        "WITH RECURSIVE "
+        + _er[len("WITH "):].replace(
+            "\nSELECT pr.*, round(", "\n, scored AS (\nSELECT pr.*, round(", 1
+        )
+        + """)
+, matched AS (SELECT id_a, id_b FROM scored WHERE match_weight >= 2.0),
+ue AS (SELECT id_a AS a, id_b AS b FROM matched
+       UNION SELECT id_b, id_a FROM matched),
+reach AS (
+  SELECT a, b FROM ue
+  UNION
+  SELECT r.a, ue.b FROM reach r JOIN ue ON r.b = ue.a
+), mn AS (SELECT a AS id, min(b) AS mb FROM reach GROUP BY a)
+SELECT CAST(p_partkey AS BIGINT) AS record_id,
+       CAST(least(p_partkey, coalesce(mn.mb, p_partkey)) AS BIGINT)
+         AS cluster_id
+FROM part LEFT JOIN mn ON p_partkey = mn.id
+"""
     )
     # MSF oracle: cycle-property characterization over bottleneck paths
     # (NOT a Boruvka re-run) — with all-distinct weights, e is in the

@@ -18,6 +18,9 @@ Layout
                           mentions/links/edges tables, vertices, canonical edges
 - ``operators.*``         graph / reason / dedup / similarity / audit /
                           fusion / temporal / kgembed (legacy driver queries)
+- other ``operators.*`` / ``functions.*``, ``examples``, ``registry``
+                          reached by neither the job nor the legacy driver's
+                          KG queries; kept for their tests
 - ``functions.response_parsers``   response-parser kernels (NER, REL, EL)
 - ``functions.normalizers`` label normalizers
 - ``functions.text`` / ``functions.rdf``  text analysis, RDF serialization

@@ -65,6 +65,24 @@ def _build_model(spec: dict) -> BatchModel:
         return make_rule_rel_model(rules)
     if name == "top_candidate_el":
         return make_top_candidate_el_model()
+    if name == "keyword_textcat":
+        return make_keyword_textcat_model(
+            spec["keywords"], spec.get("binary", False)
+        )
+    if name == "identity_lemma":
+        return make_identity_lemma_model()
+    if name == "lexicon_sentiment":
+        return make_lexicon_sentiment_model(spec["pos_words"], spec["neg_words"])
+    if name == "head_summary":
+        return make_head_summary_model(spec.get("n_tokens", 8))
+    if name == "echo":
+        return make_echo_model()
+    if name == "upper_translate":
+        # deterministic 'translation': uppercase the fenced doc
+        def _upper(prompts):
+            return [extract_doc_from_prompt(p).upper() for p in prompts]
+
+        return _upper
     raise ValueError(f"Unknown model spec: {spec!r}")
 
 
@@ -289,6 +307,77 @@ def make_rule_rel_model(rules: Dict[Tuple[str, str], str]) -> BatchModel:
                     lines.append(f'{{"dep": {i}, "dest": {j}{tail}')
             responses.append("\n".join(lines))
         return responses
+
+    return call
+
+
+def make_keyword_textcat_model(keywords: Dict[str, str], binary: bool) -> BatchModel:
+    """Deterministic TextCat 'LLM': binary -> POS iff the single label's
+    keyword occurs as a token; multilabel -> comma list of labels whose
+    keyword occurs (P7 response grammar)."""
+
+    def call(prompts: Sequence[str]) -> List[str]:
+        out = []
+        for prompt in prompts:
+            toks = set(extract_doc_from_prompt(prompt).split())
+            hits = [label for label, kw in sorted(keywords.items()) if kw in toks]
+            if binary:
+                out.append("POS" if hits else "NEG")
+            else:
+                out.append(",".join(hits))
+        return out
+
+    return call
+
+
+def make_identity_lemma_model() -> BatchModel:
+    """Deterministic Lemma 'LLM': every whitespace token lemmatizes to
+    itself (P8 response grammar 'token: lemma')."""
+
+    def call(prompts: Sequence[str]) -> List[str]:
+        return [
+            "\n".join(f"{tok}: {tok}" for tok in extract_doc_from_prompt(p).split())
+            for p in prompts
+        ]
+
+    return call
+
+
+def make_lexicon_sentiment_model(pos_words, neg_words) -> BatchModel:
+    """Deterministic Sentiment 'LLM': 0.5 + 0.5*(pos-neg)/(pos+neg),
+    rounded to 4 places; 0.5 when neither occurs (P9 'Answer: <float>')."""
+    pos, neg = set(pos_words), set(neg_words)
+
+    def call(prompts: Sequence[str]) -> List[str]:
+        out = []
+        for prompt in prompts:
+            toks = extract_doc_from_prompt(prompt).split()
+            np_ = sum(t in pos for t in toks)
+            nn = sum(t in neg for t in toks)
+            score = 0.5 if np_ + nn == 0 else 0.5 + 0.5 * (np_ - nn) / (np_ + nn)
+            out.append(f"Answer: {round(score, 4)}")
+        return out
+
+    return call
+
+
+def make_head_summary_model(n_tokens: int) -> BatchModel:
+    """Deterministic Summarization 'LLM': first n tokens of the doc."""
+
+    def call(prompts: Sequence[str]) -> List[str]:
+        return [
+            " ".join(extract_doc_from_prompt(p).split()[:n_tokens])
+            for p in prompts
+        ]
+
+    return call
+
+
+def make_echo_model() -> BatchModel:
+    """Echo the prompt back (Raw-task test model)."""
+
+    def call(prompts: Sequence[str]) -> List[str]:
+        return list(prompts)
 
     return call
 

@@ -1944,3 +1944,72 @@ def line_dedup_probe(
         "_line", F.col("mc").alias("c")
     ).withColumn(stamp, F.lit(True))
     return clean, new_index_lines, new_index_counts
+
+
+def hamming64_dup_pairs(
+    fp: DataFrame,
+    *,
+    id_col: str = "doc_id",
+    hash_col: str = "simhash",
+    max_hamming: int = 3,
+    n_blocks: int = 4,
+    max_bucket_size: int | None = 1000,
+    log_drops: bool = False,
+) -> DataFrame:
+    """Near-duplicate pairs by hamming distance over ANY 64-bit
+    fingerprint column — SimHash, image pHash/dHash, audio
+    fingerprints — decoupled from the text fingerprint kernel (the
+    multimodal dedup entry point: ``multimodal.media_phash`` feeds
+    this).
+
+    Same scale shape as ``simhash_dup_pairs``: pigeonhole block banding
+    (exact for ``max_hamming < n_blocks``), block index folded into the
+    bucket value so candidates come from a single-key self-join, hot
+    buckets capped, ``bit_count(xor)`` verify only inside buckets, all
+    native expressions. Returns distinct (id_a, id_b), id_a < id_b.
+    """
+    _check_pigeonhole(max_hamming, n_blocks)
+    width = 64 // n_blocks
+    mask = (1 << width) - 1
+    blocks = F.array(
+        *[
+            F.struct(
+                F.lit(b).alias("band"),
+                (
+                    F.shiftrightunsigned(F.col(hash_col), width * b)
+                    .bitwiseAND(F.lit(mask))
+                    + F.lit(b << width).cast("long")
+                ).alias("bucket"),
+            )
+            for b in range(n_blocks)
+        ]
+    )
+    banded = fp.select(
+        id_col, F.col(hash_col).alias("_h"), F.explode(blocks).alias("bv")
+    ).select(id_col, "_h", F.col("bv.bucket").alias("bucket"))
+    banded = cut_lineage(
+        _cap_hot_buckets(
+            banded, id_col, max_bucket_size, log_drops=log_drops,
+            what="hamming64",
+        )
+    )
+    left = banded.alias("l")
+    right = banded.alias("r")
+    return (
+        left.join(
+            right,
+            on=[
+                F.col("l.bucket") == F.col("r.bucket"),
+                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
+            ],
+        )
+        .where(
+            F.bit_count(F.col("l._h").bitwiseXOR(F.col("r._h")))
+            <= max_hamming
+        )
+        .select(
+            F.col(f"l.{id_col}").alias("id_a"),
+            F.col(f"r.{id_col}").alias("id_b"),
+        )
+        .distinct()
+    )

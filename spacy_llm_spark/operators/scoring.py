@@ -54,6 +54,28 @@ def score_links(
     return prf(tp, pred_pos.count(), gold_pos.count())
 
 
+def score_cats(
+    predicted: DataFrame,
+    gold: DataFrame,
+    keys: Sequence[str] = ("doc_id",),
+    label_col: str = "label",
+    score_col: str = "score",
+    threshold: float = 0.5,
+) -> Tuple[float, float, float]:
+    """A10: TextCat micro P/R/F over flattened (doc, label, score) rows —
+    positive iff score >= threshold (spacy score_cats micro_* semantics)."""
+    pred_pos = (
+        predicted.where(F.col(score_col) >= threshold)
+        .select(*keys, label_col)
+        .distinct()
+    )
+    gold_pos = (
+        gold.where(F.col(score_col) >= threshold).select(*keys, label_col).distinct()
+    )
+    tp = pred_pos.join(gold_pos, on=[*keys, label_col], how="inner").count()
+    return prf(tp, pred_pos.count(), gold_pos.count())
+
+
 def score_triples(
     predicted: DataFrame,
     gold: DataFrame,

@@ -1,5 +1,6 @@
 """Connected-components and canonicalization tests."""
 
+from pyspark.sql import functions as F
 
 from spacy_llm_spark.operators.canonicalize import (
     canonical_vertices,
@@ -64,6 +65,20 @@ def test_surface_clusters_via_shared_qid(spark):
     assert rows["K120"] == "K120"
     # NIL mention stays a singleton surface component
     assert rows["surface:foo"] == "surface:foo"
+
+
+def test_salted_agg_matches_plain(spark):
+    from spacy_llm_spark.operators.skew import salted_agg
+
+    df = spark.range(1000).select(
+        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
+    )
+    plain = {r.k: (r.n, r.s) for r in df.groupBy("k").agg(
+        F.count("*").alias("n"), F.sum("v").alias("s")).collect()}
+    salted = {r.k: (r.n, r.s) for r in salted_agg(
+        df, ["k"], {"n": (F.count(F.lit(1)), F.sum), "s": (F.sum("v"), F.sum)}
+    ).collect()}
+    assert plain == salted
 
 
 def test_distributed_cc_large_graph_matches_union_find(spark):

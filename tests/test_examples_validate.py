@@ -1,8 +1,15 @@
-"""Plan validation (X7) and SpanCat overlap semantics."""
+"""Label algebra (T1/T2, A5/A6), plan validation (X7), TextCat scoring,
+and SpanCat overlap semantics."""
 
+import warnings
 
 import pytest
 
+from spacy_llm_spark.examples import (
+    check_label_consistency,
+    discover_labels,
+    harvest_prompt_examples,
+)
 from spacy_llm_spark.functions.response_parsers import find_spans_cot, SpanReason
 from spacy_llm_spark.plans.validate import (
     PlanValidationError,
@@ -10,6 +17,60 @@ from spacy_llm_spark.plans.validate import (
     require_ents_schema,
     validate_stage_chain,
 )
+
+NER_EXAMPLES = [
+    {
+        "text": "Jack and Jill went up the hill.",
+        "spans": [
+            {"text": "Jack", "is_entity": True, "label": "PER", "reason": "person"},
+            {"text": "went up", "is_entity": False, "label": "==NONE==", "reason": "verb"},
+            {"text": "hill", "is_entity": True, "label": "LOC", "reason": "location"},
+        ],
+    },
+    {
+        "text": "ACME hired Bob.",
+        "spans": [
+            {"text": "ACME", "is_entity": True, "label": "ORG", "reason": "company"},
+            {"text": "Bob", "is_entity": True, "label": "PER", "reason": "person"},
+        ],
+    },
+]
+
+
+def test_discover_labels():
+    assert discover_labels(NER_EXAMPLES) == ["LOC", "ORG", "PER"]
+
+
+def test_label_consistency_warns_and_prunes():
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        unspecified, pruned = check_label_consistency(NER_EXAMPLES, ["PER", "LOC"])
+    assert unspecified == ["ORG"]
+    assert any("not specified" in str(w.message) for w in caught)
+    # example 2 keeps Bob (PER) but drops ACME (ORG)
+    assert [s["text"] for s in pruned[1]["spans"]] == ["Bob"]
+    # negative-span sentinel rows survive pruning
+    assert any(s["label"] == "==NONE==" for s in pruned[0]["spans"])
+
+
+def test_prune_drops_empty_examples():
+    _, pruned = check_label_consistency(NER_EXAMPLES, ["MISC"])
+    assert pruned == []
+
+
+def test_rel_example_labels():
+    rel_examples = [
+        {"text": "t", "ents": [], "relations": [{"dep": 0, "dest": 1, "relation": "LivesIn"}]}
+    ]
+    assert discover_labels(rel_examples) == ["LivesIn"]
+    unspecified, pruned = check_label_consistency(rel_examples, ["Visits"])
+    assert unspecified == ["LivesIn"] and pruned == []
+
+
+def test_harvest():
+    assert harvest_prompt_examples(NER_EXAMPLES, 0) == []
+    assert harvest_prompt_examples(NER_EXAMPLES, 1) == NER_EXAMPLES[:1]
+    assert harvest_prompt_examples(NER_EXAMPLES, -1) == NER_EXAMPLES
 
 
 # -- X7 validation ------------------------------------------------------------
@@ -37,6 +98,24 @@ def test_require_ents_schema(spark):
     bad = spark.createDataFrame([(1, ["a"])], "doc_id long, ents array<string>")
     with pytest.raises(PlanValidationError):
         require_ents_schema(bad)
+
+
+# -- A10 TextCat scoring -------------------------------------------------------
+
+
+def test_score_cats(spark):
+    from spacy_llm_spark.operators.scoring import score_cats
+
+    schema = "doc_id long, label string, score double"
+    pred = spark.createDataFrame(
+        [(1, "A", 1.0), (1, "B", 0.0), (2, "A", 1.0)], schema
+    )
+    gold = spark.createDataFrame(
+        [(1, "A", 1.0), (1, "B", 1.0), (2, "B", 1.0)], schema
+    )
+    p, r, f = score_cats(pred, gold)
+    assert p == 0.5  # tp=1 (doc1/A) of 2 positives predicted
+    assert r == pytest.approx(1 / 3)
 
 
 # -- SpanCat: allow_overlap keeps overlapping spans ---------------------------

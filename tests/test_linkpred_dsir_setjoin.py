@@ -1,14 +1,15 @@
-"""Graph link prediction, label propagation and HITS, data-quality
-audits, n-gram diversity and kNN joins — each against an independent
-pure-Python reference."""
+"""Round-5 additions: Adamic–Adar link prediction, deterministic label
+propagation, DSIR importance resampling, and the exact prefix-filtered
+Jaccard self-join — each against an independent pure-Python reference."""
 
+import hashlib
 import itertools
 import math
 import random
 
 import pytest
 
-from spacy_llm_spark.operators import graph
+from spacy_llm_spark.operators import graph, importance, setjoin
 
 
 # ---------------------------------------------------------------------------
@@ -253,6 +254,301 @@ def test_hits_mass_conservation_and_empty(spark):
 
 
 # ---------------------------------------------------------------------------
+# DSIR importance resampling
+# ---------------------------------------------------------------------------
+
+_DOCS = [
+    (0, "the cat sat on the mat", "en"),
+    (1, "the dog sat on the log", "en"),
+    (2, "cats and dogs and cats", "en"),
+    (3, "le chat est sur le tapis", "fr"),
+    (4, "der hund sitzt auf dem baum", "de"),
+    (5, "the cat sat on the mat again and again", "fr"),  # en-LIKE text, fr tag
+    (6, "word", None),  # < 2 tokens: no bigrams -> weight 0
+]
+
+
+def _bucket(g: str, start: int, mod: int) -> int:
+    h = hashlib.sha256(g.encode()).hexdigest()
+    return int(h[start - 1 : start - 1 + 8], 16) % mod
+
+
+def _bigrams(text: str):
+    toks = text.split()
+    return [f"{a} {b}" for a, b in zip(toks, toks[1:])]
+
+
+def _dsir_reference(docs, target_langs, buckets=10_000, alpha=1.0):
+    feats = {i: [_bucket(g, 25, buckets) for g in _bigrams(t)] for i, t, _ in docs}
+    raw_counts, tgt_counts = {}, {}
+    for i, _, lang in docs:
+        for b in feats[i]:
+            raw_counts[b] = raw_counts.get(b, 0) + 1
+            if lang in target_langs:
+                tgt_counts[b] = tgt_counts.get(b, 0) + 1
+    rt, tt = sum(raw_counts.values()), sum(tgt_counts.values())
+    weights = {}
+    for i, _, _ in docs:
+        s = 0.0
+        for b in feats[i]:
+            lp_t = math.log(
+                (tgt_counts.get(b, 0) + alpha) / (tt + alpha * buckets)
+            )
+            lp_r = math.log((raw_counts[b] + alpha) / (rt + alpha * buckets))
+            s += round(lp_t - lp_r, 8)
+        weights[i] = round(s, 6)
+    return weights
+
+
+def test_dsir_logweights_match_reference(spark):
+    import pyspark.sql.functions as F
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
+    got = {
+        r["doc_id"]: r["dsir_logweight"]
+        for r in importance.dsir_logweights(
+            docs, docs.where(F.col("lang") == "en")
+        ).collect()
+    }
+    want = _dsir_reference(_DOCS, {"en"})
+    assert set(got) == set(want)
+    for i in want:
+        assert got[i] == pytest.approx(want[i], abs=2e-6), i
+    # the weight is content-driven, not tag-driven: every doc whose
+    # bigrams all appear in the target outscores the fully off-target
+    # de doc (doc 5's extra off-target tail legitimately drags it down
+    # — DSIR sums, it does not length-normalize)
+    assert got[6] == 0.0
+    assert min(got[0], got[1], got[2]) > got[4]
+
+
+def test_dsir_topk_and_resample_deterministic(spark):
+    import pyspark.sql.functions as F
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
+    target = docs.where(F.col("lang") == "en")
+    top = importance.dsir_top_k(docs, target, k=3).collect()
+    want = _dsir_reference(_DOCS, {"en"})
+    want_ids = [i for i, _ in sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))][:3]
+    assert [r["doc_id"] for r in top] == want_ids
+
+    res1 = importance.dsir_resample(docs, target, k=4, temperature=2.0).collect()
+    res2 = importance.dsir_resample(docs, target, k=4, temperature=2.0).collect()
+    assert [r.asDict() for r in res1] == [r.asDict() for r in res2]
+    # verify one gumbel key against the formula
+    by_id = {d: t for d, t, _ in _DOCS}
+    for r in res1:
+        u = (_bucket(by_id[r["doc_id"]], 33, 1_000_000) + 0.5) / 1_000_000
+        want_key = round(want[r["doc_id"]] / 2.0 - math.log(-math.log(u)), 6)
+        assert r["gumbel_key"] == pytest.approx(want_key, abs=2e-6)
+
+    with pytest.raises(ValueError):
+        importance.dsir_top_k(docs, target, k=0)
+    with pytest.raises(ValueError):
+        importance.dsir_resample(docs, target, k=1, temperature=0.0)
+
+
+def test_dsir_empty_target_uniform_floor(spark):
+    import pyspark.sql.functions as F
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
+    got = importance.dsir_logweights(
+        docs, docs.where(F.col("lang") == "zz")
+    ).collect()
+    want = _dsir_reference(_DOCS, {"zz"})
+    assert {r["doc_id"]: r["dsir_logweight"] for r in got} == pytest.approx(want)
+    # every weight finite; frequent-in-raw buckets are penalized most
+    assert all(math.isfinite(r["dsir_logweight"]) for r in got)
+
+
+def test_bucket_index_append_equals_full(spark):
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
+    old = docs.where("doc_id % 2 = 0")
+    new = docs.where("doc_id % 2 = 1")
+    merged = importance.bucket_index_append(
+        importance.bucket_count_index(old).localCheckpoint(), new
+    )
+    full = importance.bucket_count_index(docs)
+    stamp = importance.dsir_index_stamp(2, importance.N_BUCKETS)
+    assert stamp in merged.columns and stamp in full.columns
+    got = {(r["bucket"], r["n"]) for r in merged.collect()}
+    want = {(r["bucket"], r["n"]) for r in full.collect()}
+    assert got == want  # integer counts: bit-equal merge
+
+
+def test_dsir_from_index_matches_direct(spark):
+    import pyspark.sql.functions as F
+
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
+    target = docs.where(F.col("lang") == "en")
+    raw_idx = importance.bucket_index_append(
+        importance.bucket_count_index(docs.where("doc_id % 2 = 0")),
+        docs.where("doc_id % 2 = 1"),
+    ).localCheckpoint()
+    tgt_idx = importance.bucket_count_index(target).localCheckpoint()
+    got = {
+        r["doc_id"]: r["dsir_logweight"]
+        for r in importance.dsir_logweights_from_index(
+            docs, raw_idx, tgt_idx
+        ).collect()
+    }
+    want = {
+        r["doc_id"]: r["dsir_logweight"]
+        for r in importance.dsir_logweights(docs, target).collect()
+    }
+    assert set(got) == set(want)
+    for i in want:
+        assert got[i] == pytest.approx(want[i], abs=2e-6), i
+
+
+def test_dsir_from_index_stale_batch_and_refusals(spark):
+    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
+    raw_idx = importance.bucket_count_index(docs).localCheckpoint()
+    tgt_idx = importance.bucket_count_index(docs.where("lang = 'en'"))
+    # a genuinely NEW batch (buckets unseen by either index): every
+    # feature takes both floors, the weight stays finite and the two
+    # floors cancel to log((rt + aB) / (tt + aB)) per feature
+    fresh = spark.createDataFrame(
+        [(99, "zzz qqq vvv kkk")], "doc_id long, text string"
+    )
+    rows = importance.dsir_logweights_from_index(fresh, raw_idx, tgt_idx).collect()
+    assert len(rows) == 1 and math.isfinite(rows[0]["dsir_logweight"])
+    rt = sum(r["n"] for r in raw_idx.collect())
+    tt = sum(r["n"] for r in tgt_idx.collect())
+    b = importance.N_BUCKETS
+    per = round(math.log(1.0 / (tt + b)) - math.log(1.0 / (rt + b)), 8)
+    assert rows[0]["dsir_logweight"] == pytest.approx(round(3 * per, 6), abs=2e-6)
+    # refusals: unstamped frame; params mismatch (different bucket count)
+    with pytest.raises(ValueError):
+        importance.bucket_index_append(raw_idx.drop(
+            importance.dsir_index_stamp(2, importance.N_BUCKETS)), docs)
+    with pytest.raises(ValueError):
+        importance.dsir_logweights_from_index(
+            fresh, raw_idx, tgt_idx, buckets=5000
+        )
+    with pytest.raises(ValueError):
+        importance.dsir_logweights_from_index(fresh, raw_idx, tgt_idx, alpha=0.0)
+
+
+def test_bucket_log_probs_is_a_distribution(spark):
+    docs = spark.createDataFrame(
+        [(i, t) for i, t, _ in _DOCS], "doc_id long, text string"
+    )
+    rows = importance.bucket_log_probs(docs, buckets=100).collect()
+    total = rows[0]["_total"]
+    present = sum(math.exp(r["log_prob"]) for r in rows)
+    absent = (100 - len(rows)) * (1.0 / (total + 100))
+    assert present + absent == pytest.approx(1.0, abs=1e-9)
+
+
+# ---------------------------------------------------------------------------
+# Exact prefix-filtered Jaccard self-join
+# ---------------------------------------------------------------------------
+
+
+def _jaccard_reference(docs, t):
+    sets = {i: set(txt.split()) for i, txt in docs if txt.split()}
+    out = {}
+    for a, b in itertools.combinations(sorted(sets), 2):
+        inter = len(sets[a] & sets[b])
+        union = len(sets[a] | sets[b])
+        j = inter / union
+        if j >= t:
+            out[(a, b)] = (inter, round(j, 6))
+    return out
+
+
+@pytest.mark.parametrize("threshold", [0.3, 0.5, 0.8, 1.0])
+def test_jaccard_join_exact_matches_bruteforce(spark, threshold):
+    rng = random.Random(int(threshold * 10))
+    vocab = [f"w{i}" for i in range(30)]
+    docs = [
+        (i, " ".join(rng.choices(vocab, k=rng.randint(0, 12)))) for i in range(40)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        (r["id_a"], r["id_b"]): (r["common_tokens"], r["jaccard"])
+        for r in setjoin.jaccard_join_exact(df, threshold).collect()
+    }
+    assert got == _jaccard_reference(docs, threshold)
+
+
+def _containment_reference(docs, t):
+    sets = {i: set(txt.split()) for i, txt in docs if txt.split()}
+    out = {}
+    for a in sets:
+        for b in sets:
+            if a == b:
+                continue
+            inter = len(sets[a] & sets[b])
+            c = inter / len(sets[a])
+            if c >= t:
+                out[(a, b)] = (inter, round(c, 6))
+    return out
+
+
+@pytest.mark.parametrize("threshold", [0.5, 0.8, 1.0])
+def test_containment_join_matches_bruteforce(spark, threshold):
+    rng = random.Random(int(threshold * 100))
+    vocab = [f"w{i}" for i in range(25)]
+    docs = [
+        (i, " ".join(rng.choices(vocab, k=rng.randint(0, 15)))) for i in range(35)
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+    got = {
+        (r["id_a"], r["id_b"]): (r["common_tokens"], r["containment"])
+        for r in setjoin.containment_join_exact(df, threshold).collect()
+    }
+    assert got == _containment_reference(docs, threshold)
+
+
+def test_containment_join_asymmetry(spark):
+    # a strictly inside b: containment(a in b) = 1.0 but (b in a) = 0.5
+    # — the pair symmetric Jaccard (1/2 = 0.5) misses at high thresholds
+    df = spark.createDataFrame(
+        [(0, "x y"), (1, "x y p q"), (2, "zz")], "doc_id long, text string"
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["containment"]
+        for r in setjoin.containment_join_exact(df, 0.9).collect()
+    }
+    assert got == {(0, 1): 1.0}
+    both = {
+        (r["id_a"], r["id_b"]): r["containment"]
+        for r in setjoin.containment_join_exact(df, 0.5).collect()
+    }
+    assert both == {(0, 1): 1.0, (1, 0): 0.5}
+    with pytest.raises(ValueError):
+        setjoin.containment_join_exact(df, 0.0)
+
+
+def test_jaccard_join_exact_edges(spark):
+    df = spark.createDataFrame(
+        [
+            (0, "a b c d"),
+            (1, "a b c d"),  # identical
+            (2, "a b c e"),  # J=3/5 with 0/1
+            (3, ""),  # empty: pairs with nothing
+            (4, "z"),
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        (r["id_a"], r["id_b"]): r["jaccard"]
+        for r in setjoin.jaccard_join_exact(df, 0.6).collect()
+    }
+    assert got == {(0, 1): 1.0, (0, 2): 0.6, (1, 2): 0.6}
+    only_exact = {
+        (r["id_a"], r["id_b"])
+        for r in setjoin.jaccard_join_exact(df, 1.0).collect()
+    }
+    assert only_exact == {(0, 1)}
+    for bad in (0.0, -0.1, 1.5):
+        with pytest.raises(ValueError):
+            setjoin.jaccard_join_exact(df, bad)
+
+
+# ---------------------------------------------------------------------------
 # Data-quality audits
 # ---------------------------------------------------------------------------
 
@@ -355,6 +651,56 @@ def test_ngram_diversity_hand_case(spark):
 
 
 # ---------------------------------------------------------------------------
+# Decayed counts
+# ---------------------------------------------------------------------------
+
+
+def test_decayed_counts_hand_case(spark):
+    from datetime import datetime
+
+    from spacy_llm_spark.operators.anomaly import decayed_counts
+
+    hl = 3600.0  # 1 hour
+    rows = [
+        (1, datetime(2024, 1, 1, 12, 0)),   # newest: weight 1.0
+        (1, datetime(2024, 1, 1, 11, 0)),   # one half-life: 0.5
+        (1, datetime(2024, 1, 1, 10, 0)),   # two: 0.25
+        (2, datetime(2024, 1, 1, 12, 0)),   # newest too: 1.0
+        (2, datetime(2024, 1, 1, 9, 0)),    # three: 0.125
+    ]
+    df = spark.createDataFrame(rows, "user_id long, ts timestamp")
+    got = {
+        r["user_id"]: (r["n_events"], r["decayed_count"])
+        for r in decayed_counts(df, ["user_id"], half_life_secs=hl).collect()
+    }
+    assert got == {1: (3, 1.75), 2: (2, 1.125)}
+    # determinism: the reference point is the data's max ts, not now()
+    again = {
+        r["user_id"]: (r["n_events"], r["decayed_count"])
+        for r in decayed_counts(df, ["user_id"], half_life_secs=hl).collect()
+    }
+    assert again == got
+    with pytest.raises(ValueError):
+        decayed_counts(df, [], half_life_secs=hl)
+    with pytest.raises(ValueError):
+        decayed_counts(df, ["user_id"], half_life_secs=0)
+
+
+def test_decayed_counts_ntz_and_fractional(spark):
+    from spacy_llm_spark.operators.anomaly import decayed_counts
+
+    df = spark.range(2).selectExpr(
+        "id AS user_id",
+        "timestamp_ntz'2024-06-01 00:00:00' - make_interval(0,0,0,0,0,0,id*90) AS ts",
+    )
+    rows = decayed_counts(df, ["user_id"], half_life_secs=60.0).collect()
+    got = {r["user_id"]: r["decayed_count"] for r in rows}
+    # 90s age at 60s half-life: 0.5^1.5
+    assert got[0] == 1.0
+    assert got[1] == round(round(0.5 ** 1.5, 8), 6)
+
+
+# ---------------------------------------------------------------------------
 # Batch kNN join
 # ---------------------------------------------------------------------------
 
@@ -411,7 +757,198 @@ def test_knn_join_k_exceeds_corpus_and_custom_cols(spark):
     assert rows[0]["cosine"] == rows[1]["cosine"] == round(2 ** -0.5, 6)
 
 
-# ------------------------- shape/privacy audits, hard negatives, alignment
+# ---------------------------------------------------------------------------
+# MAD robust outliers
+# ---------------------------------------------------------------------------
+
+
+def test_mad_outliers_heavy_tail_beats_zscore(spark):
+    from spacy_llm_spark.operators.anomaly import mad_outliers, zscore_outliers
+
+    # 20 values at ~10, one at 1000: sigma explodes (z of the whale is
+    # ~sqrt(n) bounded, pulling everything else toward 0), but the
+    # median/MAD barely move — the robust detector flags the whale
+    rows = [(i, "g", 10.0 + (i % 3)) for i in range(20)] + [(99, "g", 1000.0)]
+    df = spark.createDataFrame(rows, "id long, key string, value double")
+    robust = mad_outliers(df, "value", ["key"], threshold=3.5).collect()
+    assert [r["id"] for r in robust] == [99]
+    # classical z-score misses it at the same nominal cutoff: the whale
+    # IS the variance, so its own z stays below sqrt(n)
+    classical = zscore_outliers(df, "value", ["key"], threshold=4.5).collect()
+    assert classical == []
+
+
+def test_mad_outliers_reference_and_edges(spark):
+    import statistics
+
+    from spacy_llm_spark.operators.anomaly import mad_outliers
+
+    vals = [1.0, 2.0, 2.0, 3.0, 3.0, 3.0, 4.0, 9.0, -6.0]
+    df = spark.createDataFrame(
+        [(i, v) for i, v in enumerate(vals)], "id long, value double"
+    )
+    med = statistics.median(vals)
+    mad = statistics.median(sorted(abs(v - med) for v in vals))
+    want = {
+        i: round(0.6745 * (v - med) / mad, 6)
+        for i, v in enumerate(vals)
+        if abs(round(0.6745 * (v - med) / mad, 6)) > 2.0
+    }
+    got = {r["id"]: r["robust_z"]
+           for r in mad_outliers(df, "value", threshold=2.0).collect()}
+    assert got == pytest.approx(want)
+    # zero-MAD group (majority constant): nothing flagged
+    const = spark.createDataFrame(
+        [(i, "k", 5.0) for i in range(9)] + [(9, "k", 50.0)],
+        "id long, key string, value double",
+    )
+    assert mad_outliers(const, "value", ["key"]).count() == 0
+
+
+# ------------------------------------------ sorted-neighborhood blocking
+
+from spacy_llm_spark.operators.blocking import sorted_neighborhood_pairs
+
+
+def test_snm_pairs_hand_case_and_chunk_invariance(spark):
+    """Pairs are exactly the rank-distance-<window neighbors of the
+    global (key, id) order; duplicate keys tie-break by id; NULL keys
+    drop; and the distributed rank is bit-identical at any n_chunks
+    (1 == 5 == default) — the single-partition sort is the spec."""
+    rows = [
+        (0, "anna"), (1, "anne"), (2, "anne"),  # dup key -> id order
+        (3, "bob"), (4, "carl"), (5, None),
+    ]
+    df = spark.createDataFrame(rows, "id bigint, name string")
+    got = sorted(
+        map(tuple, sorted_neighborhood_pairs(df, "id", "name", 3).collect())
+    )
+    # order: anna(0) anne(1) anne(2) bob(3) carl(4)
+    assert got == sorted(
+        [
+            (0, 1, "anna", "anne", 1), (0, 2, "anna", "anne", 2),
+            (1, 2, "anne", "anne", 1), (1, 3, "anne", "bob", 2),
+            (2, 3, "anne", "bob", 1), (2, 4, "anne", "carl", 2),
+            (3, 4, "bob", "carl", 1),
+        ]
+    )
+    for nc in (1, 5):
+        alt = sorted(
+            map(
+                tuple,
+                sorted_neighborhood_pairs(
+                    df, "id", "name", 3, n_chunks=nc
+                ).collect(),
+            )
+        )
+        assert alt == got, f"n_chunks={nc} changed the pair set"
+
+
+def test_snm_keep_cols_and_guards(spark):
+    df = spark.createDataFrame(
+        [(0, "a", 10), (1, "b", 20)], "id bigint, name string, sz bigint"
+    )
+    got = sorted_neighborhood_pairs(
+        df, "id", "name", 2, keep_cols=("sz",)
+    ).collect()
+    assert [(r["id_a"], r["id_b"], r["sz_a"], r["sz_b"]) for r in got] == [
+        (0, 1, 10, 20)
+    ]
+    with pytest.raises(ValueError, match="window"):
+        sorted_neighborhood_pairs(df, "id", "name", 1)
+    with pytest.raises(ValueError, match="missing"):
+        sorted_neighborhood_pairs(df, "id", "nope", 2)
+
+
+def test_snm_surrogate_routing_is_order_consistent(spark):
+    """Keys sharing 8-byte prefixes, multibyte UTF-8, and short keys
+    all rank identically to the single-partition sort under heavy
+    chunking — the surrogate only routes, the full key ranks."""
+    names = [
+        "prefix-shared-AAAA", "prefix-shared-AAAB", "prefix-shared",
+        "zz", "z", "a", "ab", "abc", "ünïcode", "ün", "日本語", "日本",
+    ]
+    df = spark.createDataFrame(
+        [(i, n) for i, n in enumerate(names)], "id bigint, name string"
+    )
+    ref = sorted(
+        map(tuple, sorted_neighborhood_pairs(df, "id", "name", 4, n_chunks=1).collect())
+    )
+    got = sorted(
+        map(tuple, sorted_neighborhood_pairs(df, "id", "name", 4, n_chunks=6).collect())
+    )
+    assert got == ref
+
+
+# ------------------------------------------ Fellegi-Sunter linkage
+
+from spacy_llm_spark.operators.linkage import (
+    estimate_u_probs,
+    fellegi_sunter_scores,
+)
+
+
+def test_estimate_u_probs_collision_probability(spark):
+    """u = sum over values of (n_v/N)^2 on the non-null distribution."""
+    df = spark.createDataFrame(
+        [("x",), ("x",), ("y",), (None,)], "f string"
+    )
+    u = estimate_u_probs(df, ["f"])["f"]
+    assert u == pytest.approx((2 / 3) ** 2 + (1 / 3) ** 2)
+    with pytest.raises(ValueError, match="missing"):
+        estimate_u_probs(df, ["nope"])
+    empty = spark.createDataFrame([(None,)], "f string")
+    with pytest.raises(ValueError, match="no non-null"):
+        estimate_u_probs(empty, ["f"])
+
+
+def test_fellegi_sunter_hand_case(spark):
+    """Agreement adds log2(m/u), disagreement log2((1-m)/(1-u)),
+    missing contributes 0; addends quantized 10 dp pre-sum."""
+    import math
+
+    pairs = spark.createDataFrame(
+        [
+            (1, 2, "a", "a", 5, 5),    # both agree
+            (1, 3, "a", "b", 5, 7),    # both disagree
+            (1, 4, None, "a", 5, 5),   # name missing -> only size counts
+        ],
+        "id_a bigint, id_b bigint, name_a string, name_b string,"
+        " sz_a bigint, sz_b bigint",
+    )
+    m = {"name": 0.9, "sz": 0.8}
+    u = {"name": 0.1, "sz": 0.25}
+    wa = {f: round(math.log2(m[f] / u[f]), 10) for f in m}
+    wd = {f: round(math.log2((1 - m[f]) / (1 - u[f])), 10) for f in m}
+    got = {
+        (r["id_a"], r["id_b"]): r["match_weight"]
+        for r in fellegi_sunter_scores(pairs, ["name", "sz"], m, u).collect()
+    }
+    assert got == {
+        (1, 2): round(wa["name"] + wa["sz"], 6),
+        (1, 3): round(wd["name"] + wd["sz"], 6),
+        (1, 4): round(wa["sz"], 6),
+    }
+
+    with pytest.raises(ValueError, match="non-empty"):
+        fellegi_sunter_scores(pairs, [], m, u)
+    with pytest.raises(ValueError, match="pair columns missing"):
+        fellegi_sunter_scores(pairs, ["other"], m, u)
+    with pytest.raises(ValueError, match="0 < u < m < 1"):
+        fellegi_sunter_scores(pairs, ["name"], {"name": 0.1}, {"name": 0.2})
+
+
+def test_fellegi_sunter_is_pure_projection(spark):
+    """Scoring adds no Exchange/Join over the pairs frame — the weights
+    are literals, so the whole stage is codegen."""
+    pairs = spark.createDataFrame(
+        [(1, 2, "a", "a")], "id_a bigint, id_b bigint, f_a string, f_b string"
+    )
+    scored = fellegi_sunter_scores(
+        pairs, ["f"], {"f": 0.9}, {"f": 0.1}
+    )
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "Join" not in plan
 
 
 def test_triple_shape_violations_kinds_and_precedence(spark):
@@ -558,6 +1095,32 @@ def test_hard_negatives_validation(spark):
         hard_negatives(emb, emb, k=0)
     with _pytest.raises(ValueError, match="sim_lo < sim_hi"):
         hard_negatives(emb, emb, sim_lo=0.9, sim_hi=0.5)
+
+
+def test_er_clusters_is_a_partition_with_min_labels(spark, sf_dir):
+    """End-to-end ER stack (SNM → FS → threshold → CC): every part
+    record gets exactly one cluster, the cluster id is the cluster's
+    minimum record id, and every above-threshold pair lands in one
+    cluster."""
+    import __spark_entry__ as entry
+
+    clusters = entry.q_er_clusters(spark, sf_dir).cache()
+    part_n = spark.read.parquet(f"{sf_dir}/part.parquet").count()
+    rows = clusters.collect()
+    assert len(rows) == part_n
+    assert len({r["record_id"] for r in rows}) == part_n
+    by_cluster = {}
+    for r in rows:
+        by_cluster.setdefault(r["cluster_id"], []).append(r["record_id"])
+    for cid, members in by_cluster.items():
+        assert cid == min(members)
+    matched = entry.q_er_match_scores(spark, sf_dir).where(
+        "match_weight >= 2.0"
+    )
+    lab = {r["record_id"]: r["cluster_id"] for r in rows}
+    for p in matched.collect():
+        assert lab[p["id_a"]] == lab[p["id_b"]]
+    clusters.unpersist()
 
 
 def test_quantize_embeddings_numpy_parity_and_error_bound(spark, sf_dir):
@@ -901,6 +1464,32 @@ def test_summarize_entities_rare_facts_first(spark):
     import pytest as _pytest
     with _pytest.raises(ValueError, match="k must be"):
         audit.summarize_entities(t, k=0)
+
+
+def test_blocking_quality_metrics(spark):
+    from pyspark.sql import Row
+    from spacy_llm_spark.operators import blocking
+
+    cand = spark.createDataFrame(
+        [Row(id_a=a, id_b=b) for a, b in [
+            ("r1", "r2"), ("r2", "r1"),   # orientation dedups
+            ("r3", "r4"), ("r5", "r6"), ("r1", "r1"),  # self drops
+        ]],
+        "id_a string, id_b string",
+    )
+    gold = spark.createDataFrame(
+        [Row(id_a=a, id_b=b) for a, b in [
+            ("r1", "r2"), ("r3", "r4"), ("r7", "r8"),
+        ]],
+        "id_a string, id_b string",
+    )
+    row = blocking.blocking_quality(cand, gold, total_records=8).head()
+    assert (row.n_candidates, row.n_gold, row.n_found) == (3, 3, 2)
+    assert row.pair_completeness == round(2 / 3, 6)
+    assert row.reduction_ratio == round(1 - 3 / 28, 6)
+    import pytest as _pytest
+    with _pytest.raises(ValueError, match="total_records"):
+        blocking.blocking_quality(cand, gold, total_records=1)
 
 
 def test_k_anonymity_violations(spark):

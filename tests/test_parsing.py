@@ -24,8 +24,11 @@ from spacy_llm_spark.functions.response_parsers import (
     extract_span_reasons_cot,
     find_substrings,
     parse_el_solutions,
+    parse_lemma_response,
     parse_ner_v3,
     parse_rel_response,
+    parse_sentiment_response,
+    parse_textcat_response,
 )
 from spacy_llm_spark.tokenizer import filter_spans
 
@@ -229,6 +232,31 @@ def test_el_attach_with_auto_nil():
 
 
 # -- TextCat / Lemma / Sentiment ---------------------------------------------
+
+
+def test_textcat_binary():
+    ld = build_label_dict(["Recipe"])
+    assert parse_textcat_response("POS", ld, use_binary=True) == {"Recipe": 1.0}
+    assert parse_textcat_response("NEG", ld, use_binary=True) == {"Recipe": 0.0}
+
+
+def test_textcat_multilabel_and_exclusive():
+    ld = build_label_dict(["A", "B"])
+    assert parse_textcat_response("a,b", ld) == {"A": 1.0, "B": 1.0}
+    assert parse_textcat_response("a,b", ld, exclusive_classes=True) == {
+        "A": 0.0,
+        "B": 0.0,
+    }
+
+
+def test_lemma_parse():
+    resp = "Lemmatized text:\n'''\nwent: go\nup: up\nbroken line\n'''"
+    assert parse_lemma_response(resp) == [["went", "go"], ["up", "up"]]
+
+
+def test_sentiment_parse():
+    assert parse_sentiment_response("Answer: 0.75") == 0.75
+    assert parse_sentiment_response("garbage") is None
 
 
 def test_allow_overlap_same_occurrence_multiple_labels():

@@ -1,12 +1,278 @@
-"""Property test: the duplicated-n-gram probe against a full recompute
-over randomized small corpora.
+"""Property tests: the distributed as-of join and interval join against
+brute-force Python references over randomized small inputs.
 
 Each hypothesis example runs real Spark jobs, so example counts are kept
-small.
+small; the randomized layouts still cover equal-time ties, duplicate
+times, empty sides, keys missing from one side, and boundary-exact
+interval endpoints far better than hand-picked cases.
 """
 
+import datetime as dt
 
+import pytest
 from hypothesis import given, settings, strategies as st
+from pyspark.sql import functions as F
+
+from spacy_llm_spark.operators.asof import asof_join
+from spacy_llm_spark.operators.rangejoin import interval_join
+
+
+def _t(sec: int) -> dt.datetime:
+    return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=int(sec))
+
+
+_keys = st.sampled_from(["k0", "k1"])
+_lefts = st.lists(
+    st.tuples(_keys, st.integers(0, 20)), min_size=0, max_size=7
+)
+_rights = st.lists(
+    st.tuples(_keys, st.integers(0, 20)), min_size=0, max_size=7
+)
+
+
+@given(_lefts, _rights, st.booleans(), st.sampled_from([None, 1, 7, 3600]))
+@settings(max_examples=15, deadline=None)
+def test_asof_join_matches_bruteforce(spark, lefts, rights, strict, split):
+    left = spark.createDataFrame(
+        [(i, k, _t(s)) for i, (k, s) in enumerate(lefts)],
+        "lid long, k string, lt timestamp",
+    )
+    right = spark.createDataFrame(
+        [(i, k, _t(s)) for i, (k, s) in enumerate(rights)],
+        "rid long, k string, rt timestamp",
+    )
+    out = asof_join(
+        left, right, on="k", left_time="lt", right_time="rt",
+        right_cols=["rid"], right_tiebreak="rid", strict=strict,
+        split_bucket_secs=split,
+    )
+    got = {r["lid"]: r["rid"] for r in out.collect()}
+
+    expected = {}
+    for i, (k, s) in enumerate(lefts):
+        cands = [
+            (rs, j)
+            for j, (rk, rs) in enumerate(rights)
+            if rk == k and (rs < s if strict else rs <= s)
+        ]
+        expected[i] = max(cands)[1] if cands else None
+    assert got == expected
+
+
+_points = st.lists(st.integers(0, 40), min_size=0, max_size=8)
+_intervals = st.lists(
+    st.tuples(st.integers(0, 40), st.integers(0, 12)), min_size=0, max_size=6
+)
+
+
+@given(_points, _intervals, st.sampled_from([1, 3, 7, 60]))
+@settings(max_examples=15, deadline=None)
+def test_interval_join_matches_bruteforce(spark, points, intervals, bucket):
+    pts = spark.createDataFrame(
+        [(i, _t(s)) for i, s in enumerate(points)], "pid long, t timestamp"
+    )
+    ivs = spark.createDataFrame(
+        [(j, _t(s), _t(s + ln)) for j, (s, ln) in enumerate(intervals)],
+        "wid long, ws timestamp, we timestamp",
+    )
+    out = interval_join(
+        pts, ivs, point_time="t", start="ws", end="we", bucket_secs=bucket
+    )
+    got = sorted((r["pid"], r["wid"]) for r in out.collect())
+    expected = sorted(
+        (i, j)
+        for i, s in enumerate(points)
+        for j, (ws, ln) in enumerate(intervals)
+        if ws <= s < ws + ln
+    )
+    assert got == expected
+
+
+def test_sampling_operators(spark):
+    from spacy_llm_spark.operators import sampling
+
+    rows = [(i, f"src{i % 4}", f"body of document number {i}") for i in range(80)]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+
+    strat = sampling.stratified_sample(df, "source", 5)
+    per = {r["source"]: r["cnt"] for r in
+           strat.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    assert per == {f"src{i}": 5 for i in range(4)}
+    # deterministic: same pick twice
+    a = sorted(r["doc_id"] for r in strat.collect())
+    b = sorted(r["doc_id"] for r in sampling.stratified_sample(df, "source", 5).collect())
+    assert a == b
+    # small stratum: returns what exists, no error
+    tiny = sampling.stratified_sample(df.where(F.col("doc_id") < 2), "source", 5)
+    assert tiny.count() == 2
+
+    frac = sampling.hash_sample(df, 0.5)
+    n = frac.count()
+    assert 0 < n < 80
+    assert frac.count() == n  # deterministic
+    # no shuffle in the plan
+    plan = frac._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+
+
+def test_stratified_sample_mega_stratum_guard(spark):
+    """One dominant stratum above the threshold: warn mode stays exact
+    and loud, error mode raises before shuffling, fallback mode
+    switches just that stratum to hash_sample with count ~ n."""
+    import warnings as _w
+
+    from spacy_llm_spark.operators import sampling
+
+    rows = [(i, "mega", f"doc body {i}") for i in range(3_000)] + [
+        (10_000 + i, f"small{i % 3}", f"other body {i}") for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+
+    with _w.catch_warnings(record=True) as caught:
+        _w.simplefilter("always")
+        exact = sampling.stratified_sample(
+            df, "source", 20, max_stratum_rows=1_000, on_oversize="warn"
+        )
+        per = {r["source"]: r["cnt"] for r in
+               exact.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    assert per == {"mega": 20, "small0": 20, "small1": 20, "small2": 20}
+    assert any("mega" in str(w.message) for w in caught)
+
+    with pytest.raises(ValueError, match="mega"):
+        sampling.stratified_sample(
+            df, "source", 20, max_stratum_rows=1_000, on_oversize="error"
+        )
+
+    fb = sampling.stratified_sample(
+        df, "source", 300, max_stratum_rows=1_000, on_oversize="fallback"
+    )
+    per = {r["source"]: r["cnt"] for r in
+           fb.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    # small strata stay exact (all 20 rows, < n); mega is approximate
+    assert per["small0"] == per["small1"] == per["small2"] == 20
+    assert per["mega"] == pytest.approx(300, rel=0.35)  # hash_sample noise
+    # deterministic: identical picks on a second run
+    a = sorted(r["doc_id"] for r in fb.collect())
+    b = sorted(
+        r["doc_id"]
+        for r in sampling.stratified_sample(
+            df, "source", 300, max_stratum_rows=1_000, on_oversize="fallback"
+        ).collect()
+    )
+    assert a == b
+
+    # under the threshold the guard is a no-op and results are identical
+    # to the unguarded path
+    u = sorted(
+        r["doc_id"]
+        for r in sampling.stratified_sample(
+            df, "source", 20, max_stratum_rows=None
+        ).collect()
+    )
+    g = sorted(
+        r["doc_id"]
+        for r in sampling.stratified_sample(
+            df, "source", 20, max_stratum_rows=1_000_000
+        ).collect()
+    )
+    assert u == g
+
+
+def test_hash_sample_independent_of_split(spark):
+    """sample_bucket (hex 9-16) and assign_split (hex 1-8) read disjoint
+    digest regions — sampling must not skew the split ratios."""
+    from spacy_llm_spark.functions.text import assign_split
+    from spacy_llm_spark.operators import sampling
+
+    df = spark.createDataFrame(
+        [(i, f"text payload {i}") for i in range(400)], "doc_id long, text string"
+    )
+    sampled = sampling.hash_sample(assign_split(df), 0.5)
+    counts = {r["split"]: r["cnt"] for r in
+              sampled.groupBy("split").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    total = sum(counts.values())
+    assert counts.get("train", 0) / total == pytest.approx(0.8, abs=0.12)
+
+# ---------------------------------------------------------------------------
+# as-of mega-key split path ≡ default path (row-for-row)
+# ---------------------------------------------------------------------------
+
+_nullable_keys = st.sampled_from(["k0", "k1", None])
+# seconds drawn from a TIGHT range so equal-time ties (left-left,
+# right-right, and left==right) occur constantly
+_nullable_times = st.one_of(st.none(), st.integers(0, 5))
+_split_lefts = st.lists(
+    st.tuples(_nullable_keys, _nullable_times), min_size=0, max_size=8
+)
+_split_rights = st.lists(
+    st.tuples(_nullable_keys, _nullable_times), min_size=0, max_size=8
+)
+
+
+@given(
+    _split_lefts,
+    _split_rights,
+    st.booleans(),
+    # 1 s (one row per bucket), mid, exactly the span, far beyond the
+    # span (every row in one bucket — degenerates to the default shape)
+    st.sampled_from([1, 2, 3, 5, 6, 7, 86_400]),
+    st.sampled_from([None, 2, 3600]),
+)
+@settings(max_examples=25, deadline=None)
+def test_asof_split_path_equals_default_path(
+    spark, lefts, rights, strict, bucket, tol
+):
+    left = spark.createDataFrame(
+        [(i, k, _t(s) if s is not None else None) for i, (k, s) in enumerate(lefts)],
+        "lid long, k string, lt timestamp",
+    )
+    right = spark.createDataFrame(
+        [(i, k, _t(s) if s is not None else None) for i, (k, s) in enumerate(rights)],
+        "rid long, k string, rt timestamp",
+    )
+    kw = dict(
+        on="k", left_time="lt", right_time="rt", right_cols=["rid"],
+        right_tiebreak="rid", strict=strict, tolerance_secs=tol,
+    )
+    default = asof_join(left, right, **kw)
+    split = asof_join(left, right, split_bucket_secs=bucket, **kw)
+    d = sorted(
+        (r["lid"], r["k"], r["lt"], r["rid"]) for r in default.collect()
+    )
+    s = sorted(
+        (r["lid"], r["k"], r["lt"], r["rid"]) for r in split.collect()
+    )
+    assert d == s
+
+def test_stratified_sample_fallback_keeps_null_stratum(spark):
+    """NULL is a legitimate stratum; the fallback's key tests must be
+    null-safe or the whole NULL stratum silently vanishes."""
+    from spacy_llm_spark.operators import sampling
+
+    rows = [(i, "mega", f"doc body {i}") for i in range(2_000)] + [
+        (10_000 + i, None, f"null body {i}") for i in range(40)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, source string, text string")
+    fb = sampling.stratified_sample(
+        df, "source", 10, max_stratum_rows=1_000, on_oversize="fallback"
+    )
+    per = {r["source"]: r["cnt"] for r in
+           fb.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    assert per.get(None) == 10  # exact path, not dropped
+    assert 0 < per["mega"] < 2_000  # approximate hash_sample
+
+    # and a NULL mega-stratum takes the fallback without vanishing
+    rows2 = [(i, None, f"doc body {i}") for i in range(2_000)] + [
+        (10_000 + i, "small", f"other {i}") for i in range(40)
+    ]
+    df2 = spark.createDataFrame(rows2, "doc_id long, source string, text string")
+    fb2 = sampling.stratified_sample(
+        df2, "source", 100, max_stratum_rows=1_000, on_oversize="fallback"
+    )
+    per2 = {r["source"]: r["cnt"] for r in
+            fb2.groupBy("source").agg(F.count(F.lit(1)).alias("cnt")).collect()}
+    assert per2["small"] == 40
+    assert per2.get(None, 0) == pytest.approx(100, rel=0.5)
 
 
 # words over a 3-letter alphabet: 3-gram collisions across docs are
@@ -51,3 +317,87 @@ def test_dup_ngram_probe_equals_full_property(spark, old_texts, new_texts, min_d
     assert sorted(map(tuple, stats.collect())) == sorted(
         map(tuple, full.collect())
     )
+
+
+def test_temperature_sample_flattens_groups(spark):
+    from spacy_llm_spark.operators import sampling
+
+    # skewed groups: 400 / 100 / 25 rows
+    rows = (
+        [(i, "big", f"big document body {i}") for i in range(400)]
+        + [(1000 + i, "mid", f"mid document body {i}") for i in range(100)]
+        + [(2000 + i, "tiny", f"tiny document body {i}") for i in range(25)]
+    )
+    df = spark.createDataFrame(rows, "doc_id long, grp string, text string")
+
+    # alpha=1: identity (every keep_frac is 1.0)
+    full = sampling.temperature_sample(df, "grp", alpha=1.0)
+    assert full.count() == 525
+    assert {r["keep_frac"] for r in full.select("keep_frac").distinct().collect()} == {1.0}
+
+    out = sampling.temperature_sample(df, "grp", alpha=0.5)
+    per = {r["grp"]: r["n"] for r in
+           out.groupBy("grp").agg(F.count(F.lit(1)).alias("n")).collect()}
+    # smallest group keeps everything; larger groups shrink toward
+    # n_g**alpha scaling: expected keeps 400/4=100, 100/2=50, 25/1=25
+    assert per["tiny"] == 25
+    assert abs(per["big"] - 100) < 30   # hash noise around 400*(16)^-0.5
+    assert abs(per["mid"] - 50) < 20
+    # deterministic: same rows both times
+    a = sorted(r["doc_id"] for r in out.collect())
+    b = sorted(r["doc_id"] for r in
+               sampling.temperature_sample(df, "grp", alpha=0.5).collect())
+    assert a == b
+    # keep_frac column exposes the applied weight
+    fr = {r["grp"]: r["keep_frac"] for r in
+          out.select("grp", "keep_frac").distinct().collect()}
+    assert fr["tiny"] == 1.0 and fr["big"] == 0.25 and fr["mid"] == 0.5
+
+    with pytest.raises(ValueError, match="alpha"):
+        sampling.temperature_sample(df, "grp", alpha=0.0)
+
+
+def test_temperature_sample_null_group_kept(spark):
+    from spacy_llm_spark.operators import sampling
+
+    rows = [(i, "a", f"doc {i}") for i in range(50)] + [
+        (100 + i, None, f"null doc {i}") for i in range(5)
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, grp string, text string")
+    out = sampling.temperature_sample(df, "grp", alpha=0.5)
+    got = {r["grp"] for r in out.select("grp").distinct().collect()}
+    assert None in got  # NULL group survives the null-safe join
+    n_null = out.where(F.col("grp").isNull()).count()
+    assert n_null == 5  # smallest group: keep_frac 1.0
+
+
+# --- sequence packing vs a brute-force Python reference ---
+
+_tok_counts = st.lists(st.integers(0, 30), min_size=0, max_size=10)
+
+
+@given(_tok_counts, st.integers(1, 17), st.sampled_from([1, 2, 5]))
+@settings(max_examples=15, deadline=None)
+def test_pack_sequences_matches_bruteforce(spark, toks, budget, n_chunks):
+    from spacy_llm_spark.operators.packing import pack_sequences
+
+    df = spark.createDataFrame(
+        [(i, n) for i, n in enumerate(toks)], "doc_id long, n_tok long"
+    )
+    got = {
+        (r["doc_id"], r["pack_id"]): (r["tok_start"], r["seg_len"])
+        for r in pack_sequences(
+            df, budget, n_tokens_col="n_tok", n_chunks=n_chunks
+        ).collect()
+    }
+    expected, pos = {}, 0
+    for i, n in enumerate(toks):
+        if n <= 0:
+            continue
+        start, end = pos, pos + n
+        for p in range(start // budget, (end - 1) // budget + 1):
+            lo = max(start, p * budget)
+            hi = min(end, (p + 1) * budget)
+            expected[(i, p)] = (lo - p * budget, hi - lo)
+        pos = end
+    assert got == expected

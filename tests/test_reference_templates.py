@@ -308,6 +308,57 @@ def test_el_v1_example_path_parity(case):
 
 # ---- small task templates (lemma/summarization/sentiment/translation/raw) ----
 
+from spacy_llm_spark.templates import (  # noqa: E402
+    render_lemma_v1_reference,
+    render_raw_v1_reference,
+    render_sentiment_v1_reference,
+    render_summarization_v1_reference,
+    render_translation_v1_reference,
+)
+
+_SMALL_CASES = [
+    ("lemma.v1.jinja", render_lemma_v1_reference, dict(text="T")),
+    ("lemma.v1.jinja", render_lemma_v1_reference,
+     dict(text="T", prompt_examples=[
+         {"text": "a b", "lemmas": [{"a": "a"}, {"b": "b"}]},
+         {"text": "c", "lemmas": [{"c": "c"}]}])),
+    ("summarization.v1.jinja", render_summarization_v1_reference,
+     dict(text="T", max_n_words=None)),
+    ("summarization.v1.jinja", render_summarization_v1_reference,
+     dict(text="T", max_n_words=8,
+          prompt_examples=[{"text": "x", "summary": "s"},
+                           {"text": "y", "summary": "t"}])),
+    ("sentiment.v1.jinja", render_sentiment_v1_reference, dict(text="T")),
+    ("sentiment.v1.jinja", render_sentiment_v1_reference,
+     dict(text="T", prompt_examples=[{"text": "x", "score": 1.0},
+                                     {"text": "y", "score": 0.25}])),
+    ("translation.v1.jinja", render_translation_v1_reference,
+     dict(text="T", target_lang="Spanish", source_lang=None)),
+    ("translation.v1.jinja", render_translation_v1_reference,
+     dict(text="T", target_lang="Spanish", source_lang="English",
+          prompt_examples=[{"text": "x", "translation": "y"}])),
+    ("raw.v1.jinja", render_raw_v1_reference, dict(text="T")),
+    ("raw.v1.jinja", render_raw_v1_reference,
+     dict(text="T", prompt_examples=[{"text": "x", "reply": "y"},
+                                     {"text": "z", "reply": "w"}])),
+]
+
+
+@pytest.mark.skipif(
+    not (_have_reference and _have_jinja), reason="reference checkout not present"
+)
+@pytest.mark.parametrize("tmpl,fn,case", _SMALL_CASES)
+def test_small_template_byte_parity(tmpl, fn, case):
+    from types import SimpleNamespace as NS
+
+    kwargs = {k: v for k, v in case.items() if k != "prompt_examples"}
+    examples = case.get("prompt_examples")
+    jinja_examples = (
+        [NS(**e) for e in examples] if examples else None
+    )
+    want = _jinja_render(tmpl, prompt_examples=jinja_examples, **kwargs)
+    assert fn(**case) == want
+
 
 from spacy_llm_spark.templates import render_spancat_v3_reference  # noqa: E402
 
@@ -330,6 +381,44 @@ def test_spancat_v3_byte_parity(case):
         prompt_examples=examples,
     )
     assert render_spancat_v3_reference(**case) == want
+
+
+from spacy_llm_spark.templates import render_textcat_v3_reference  # noqa: E402
+
+TEXTCAT_CASES = [
+    dict(text="T", labels=["Spam"]),
+    dict(text="T", labels=["A", "B"], exclusive_classes=True),
+    dict(text="T", labels=["A", "B"], allow_none=True),
+    dict(text="T", labels=["A", "B"], label_definitions={"A": "a"}),
+    dict(text="T", labels=["A", "B"], label_definitions={"A": "a"},
+         prompt_examples=[{"text": "x", "answer": "A"},
+                          {"text": "y", "answer": "B"}]),
+    dict(text="T", labels=["Spam"],
+         prompt_examples=[{"text": "x", "answer": "POS"}]),
+    dict(text="T", labels=["Spam"], label_definitions={"Spam": "junk"},
+         prompt_examples=[{"text": "x", "answer": "POS"}]),
+    dict(text="T", labels=["Spam"], label_definitions={"Spam": "junk"}),
+]
+
+
+@pytest.mark.skipif(
+    not (_have_reference and _have_jinja), reason="reference checkout not present"
+)
+@pytest.mark.parametrize("case", TEXTCAT_CASES)
+def test_textcat_v3_byte_parity(case):
+    from types import SimpleNamespace as NS
+
+    examples = case.get("prompt_examples")
+    want = _jinja_render(
+        "textcat.v3.jinja",
+        text=case["text"],
+        labels=case["labels"],
+        exclusive_classes=case.get("exclusive_classes", False),
+        allow_none=case.get("allow_none", False),
+        label_definitions=case.get("label_definitions"),
+        prompt_examples=[NS(**e) for e in examples] if examples else None,
+    )
+    assert render_textcat_v3_reference(**case) == want
 
 
 from spacy_llm_spark.templates import render_ner_v2_reference  # noqa: E402
@@ -364,10 +453,12 @@ def test_ner_v2_byte_parity(case):
     assert render_ner_v2_reference(**case) == want
 
 
-from spacy_llm_spark.templates import (
+from spacy_llm_spark.templates import (  # noqa: E402
     render_ner_v1_reference,
     render_spancat_v1_reference,
     render_spancat_v2_reference,
+    render_textcat_v1_reference,
+    render_textcat_v2_reference,
 )
 
 NER_V1_CASES = [
@@ -416,3 +507,38 @@ def test_spancat_v2_byte_parity(case):
         prompt_examples=[NS(**e) for e in examples] if examples else None,
     )
     assert render_spancat_v2_reference(**case) == want
+
+
+TEXTCAT_V12_CASES = [
+    dict(text="T", labels=["Spam"]),
+    dict(text="T", labels=["A", "B"], exclusive_classes=True),
+    dict(text="T", labels=["A", "B"], allow_none=True),
+    dict(text="T", labels=["A", "B"], allow_none=True,
+         prompt_examples=[{"text": "x", "answer": "A"}]),
+    dict(text="T", labels=["Spam"],
+         prompt_examples=[{"text": "x", "answer": "POS"},
+                          {"text": "y", "answer": "NEG"}]),
+]
+
+
+@pytest.mark.skipif(
+    not (_have_reference and _have_jinja), reason="reference checkout not present"
+)
+@pytest.mark.parametrize("tmpl,fn", [
+    ("textcat.v1.jinja", render_textcat_v1_reference),
+    ("textcat.v2.jinja", render_textcat_v2_reference),
+])
+@pytest.mark.parametrize("case", TEXTCAT_V12_CASES)
+def test_textcat_v12_byte_parity(tmpl, fn, case):
+    from types import SimpleNamespace as NS
+
+    examples = case.get("prompt_examples")
+    want = _jinja_render(
+        tmpl,
+        text=case["text"],
+        labels=case["labels"],
+        exclusive_classes=case.get("exclusive_classes", False),
+        allow_none=case.get("allow_none", False),
+        prompt_examples=[NS(**e) for e in examples] if examples else None,
+    )
+    assert fn(**case) == want

@@ -1,14 +1,48 @@
-"""Retry policy, annotation merge, config serde, multi-token dictionary
-NER and edge support."""
+"""Registry (custom tasks), retry policy, annotation merge, config serde,
+and multi-token dictionary NER."""
 
 import dataclasses
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
+from spacy_llm_spark import registry
 from spacy_llm_spark.model import resolve_model, with_retry
 from spacy_llm_spark.operators.materialize import merge_annotations
 from spacy_llm_spark.pipeline import KGConfig
+
+
+def test_builtin_tasks_registered():
+    names = registry.registered_tasks()
+    assert "spacy.TextCat.v3" in names
+    assert "spacy.Lemma.v1" in names
+
+
+def test_custom_task(spark):
+    """tests/tasks/test_custom.py analog: a render/parse pair becomes a
+    working stage."""
+
+    @registry.register_misc("char_count_parse")
+    def parse(response: str) -> int:
+        return int(response)
+
+    stage = registry.make_custom_task(
+        render=lambda t: t,  # raw prompt
+        parse=lambda r: len(r),
+        out_col="n_chars_llm",
+        out_type=LongType(),
+        model_spec={"name": "echo"},
+    )
+    df = spark.createDataFrame([(1, "hello")], "doc_id long, content string")
+    row = stage(df).collect()[0]
+    assert row.n_chars_llm == 5
+    assert registry.get_misc("char_count_parse")("7") == 7
+
+
+def test_unknown_task_raises():
+    with pytest.raises(KeyError, match="Unknown task"):
+        registry.get_task("nope")
 
 
 def test_with_retry_recovers_and_exhausts():

@@ -1,10 +1,11 @@
-"""Tests for readers, sinks, and config serde."""
+"""Tests for single-output task stages, readers, sinks, and serde."""
 
 import json
 
 import pytest
 from pyspark.sql import functions as F
 
+from spacy_llm_spark.operators import tasks
 from spacy_llm_spark.sources import readers, sinks
 
 
@@ -16,6 +17,58 @@ def docs(spark):
         (3, "the quick brown fox"),
     ]
     return spark.createDataFrame(rows, "doc_id long, content string").cache()
+
+
+def test_textcat_binary_stage(spark, docs):
+    out = tasks.classify_text(
+        docs,
+        model_spec={"name": "keyword_textcat", "keywords": {"SparkDoc": "spark"}, "binary": True},
+        labels=["SparkDoc"],
+    )
+    cats = {r.doc_id: r.cats for r in out.collect()}
+    assert cats[1] == {"SparkDoc": 1.0}
+    assert cats[2] == {"SparkDoc": 0.0}
+
+
+def test_textcat_multilabel_stage(spark, docs):
+    out = tasks.classify_text(
+        docs,
+        model_spec={
+            "name": "keyword_textcat",
+            "keywords": {"HasJoin": "join", "HasMerge": "merge"},
+        },
+        labels=["HasJoin", "HasMerge"],
+        use_binary=False,
+    )
+    cats = {r.doc_id: r.cats for r in out.collect()}
+    assert cats[1] == {"HasJoin": 1.0, "HasMerge": 0.0}
+    assert cats[2] == {"HasJoin": 0.0, "HasMerge": 1.0}
+
+
+def test_lemma_stage(spark, docs):
+    out = tasks.lemmatize(docs, model_spec={"name": "identity_lemma"})
+    lem = {r.doc_id: r.lemmas for r in out.collect()}
+    assert lem[3] == [["the", "the"], ["quick", "quick"], ["brown", "brown"], ["fox", "fox"]]
+
+
+def test_sentiment_stage(spark, docs):
+    out = tasks.score_sentiment(
+        docs,
+        model_spec={"name": "lexicon_sentiment", "pos_words": ["fast"], "neg_words": ["slow"]},
+    )
+    sent = {r.doc_id: r.sentiment for r in out.collect()}
+    assert sent[1] == 1.0   # two fast, zero slow
+    assert sent[2] == 0.0   # zero fast, two slow
+    assert sent[3] == 0.5   # neither
+
+
+def test_summary_and_raw(spark, docs):
+    out = tasks.summarize(docs, model_spec={"name": "head_summary", "n_tokens": 2})
+    s = {r.doc_id: r.summary for r in out.collect()}
+    assert s[1] == "spark join"
+    raw = tasks.raw_prompt(docs, model_spec={"name": "echo"})
+    r = {x.doc_id: x.llm_reply for x in raw.collect()}
+    assert r[3] == "the quick brown fox"
 
 
 # -- readers -----------------------------------------------------------------
