@@ -147,9 +147,57 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
 
     timed("dedup_embedding_lsh", embedding_lsh_run)
 
-    # the zero-shuffle repetition projection over the docs frame
+    # temporal operators (new in r3): as-of join + bucketized interval
+    # join over the full events table, and the zero-shuffle repetition
+    # projection over the docs frame
     from spacy_llm_spark.functions import text as textfn
+    from spacy_llm_spark.operators.asof import asof_join
+    from spacy_llm_spark.operators.rangejoin import interval_join
 
+    events = spark.read.parquet(f"{sf_dir}/events.parquet").localCheckpoint()
+
+    def asof_run():
+        views = events.where(F.col("event_type") == "view").select(
+            "event_id", "user_id", "ts"
+        )
+        clicks = events.where(F.col("event_type") == "click").select(
+            F.col("event_id").alias("click_event_id"),
+            "user_id",
+            F.col("ts").alias("cts"),
+            F.col("value").alias("click_value"),
+        )
+        out = asof_join(
+            views, clicks, on="user_id", left_time="ts", right_time="cts",
+            right_cols=["click_event_id", "click_value"], strict=True,
+        )
+        # count(matched col), not count(*): a bare count lets Catalyst
+        # prune the unused window and the bench would time only the
+        # union+filter
+        return out.agg(
+            F.count("click_event_id"), F.count(F.lit(1))
+        ).collect()[0][1]
+
+    timed("asof_join_events", asof_run)
+
+    def interval_run():
+        # events.ts is TIMESTAMP_NTZ — the bounds must share its flavor
+        # (interval_join refuses a mix)
+        epoch = F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+        windows = spark.range(100).select(
+            F.col("id").alias("window_id"),
+            (epoch + F.col("id") * F.expr("INTERVAL 7 HOURS")).alias("ws"),
+            (
+                epoch
+                + F.col("id") * F.expr("INTERVAL 7 HOURS")
+                + F.expr("INTERVAL 3 HOURS")
+            ).alias("we"),
+        )
+        return interval_join(
+            events.select("event_id", "ts"), windows,
+            point_time="ts", start="ws", end="we", bucket_secs=3 * 3600,
+        ).count()
+
+    timed("interval_join_events", interval_run)
     timed("repetition_stats", lambda: textfn.repetition_stats(docs).count())
 
     # distributed CC is timed OUTSIDE the headline query set: its wall is
@@ -220,7 +268,14 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["lexical_cosine_pairs_sec"] = round(time.time() - t0, 3)
     extras["lexical_cosine_n_pairs"] = n_lex
 
-    # round-5 addition: SemDeDup (doubled corpus, 16 cells)
+    t0 = time.time()
+    from spacy_llm_spark.functions.relevance import bm25_topk
+
+    bm25_topk(docs, ["spark", "window", "dup"], k=25).count()
+    extras["bm25_topk_sec"] = round(time.time() - t0, 3)
+
+    # round-5 additions: SemDeDup (doubled corpus, 16 cells), the
+    # stupid-backoff LM self-score, and the MG heavy-hitter top-k
     t0 = time.time()
     base_emb = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -243,6 +298,29 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["semantic_dedup_n_pairs"] = n_sem
 
     t0 = time.time()
+    from spacy_llm_spark.functions.lm import lm_self_score
+
+    lm_self_score(docs).count()
+    extras["lm_self_score_sec"] = round(time.time() - t0, 3)
+
+    t0 = time.time()
+    from spacy_llm_spark.functions.text import tokens_expr
+    from spacy_llm_spark.operators.sketches import frequent_items_topk
+
+    frequent_items_topk(
+        docs.select(F.explode(tokens_expr(F.col("text"))).alias("token")),
+        "token", k=25, capacity=4096,
+    ).count()
+    extras["frequent_tokens_sec"] = round(time.time() - t0, 3)
+
+    t0 = time.time()
+    from spacy_llm_spark.operators.packing import pack_sequences
+
+    n_packed = pack_sequences(docs, budget=2048, n_chunks=32).count()
+    extras["pack_sequences_sec"] = round(time.time() - t0, 3)
+    extras["pack_sequences_n_segments"] = n_packed
+
+    t0 = time.time()
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -258,7 +336,17 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["line_dedup_sec"] = round(time.time() - t0, 3)
     extras["line_dedup_n_removed"] = int(n_line)
 
-    # k-core peeling + personalized pagerank over the 200k-edge graph
+    # round-5 late families: BPE induction (20 merges over the replicated
+    # corpus — the per-round cost is vocabulary-scale, not corpus-scale),
+    # k-core peeling + personalized pagerank over the 200k-edge graph,
+    # the single-pass profiler, and z-score burst detection
+    t0 = time.time()
+    from spacy_llm_spark.functions.bpe import train_bpe
+
+    n_bpe = len(train_bpe(docs, n_merges=20))
+    extras["bpe_train_20_merges_sec"] = round(time.time() - t0, 3)
+    extras["bpe_n_merges"] = n_bpe
+
     t0 = time.time()
     from spacy_llm_spark.operators.graph import k_core
 
@@ -278,6 +366,22 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
 
     personalized_pagerank(chain, seeds, src="src", dst="dst", iters=5).count()
     extras["ppr_200k_edges_5iters_sec"] = round(time.time() - t0, 3)
+
+    t0 = time.time()
+    from spacy_llm_spark.operators.profile import profile_table
+
+    profile_table(docs).count()
+    extras["profile_documents_sec"] = round(time.time() - t0, 3)
+
+    t0 = time.time()
+    from spacy_llm_spark.operators.anomaly import zscore_outliers
+
+    hourly = events.groupBy(
+        "user_id", F.date_trunc("hour", "ts").alias("hour")
+    ).agg(F.count(F.lit(1)).alias("n"))
+    n_anom = zscore_outliers(hourly, "n", ["user_id"], threshold=2.0).count()
+    extras["events_anomaly_sec"] = round(time.time() - t0, 3)
+    extras["events_anomaly_n_rows"] = n_anom
 
     # Adamic–Adar link prediction over the 200k-edge chain graph (~every
     # interior vertex is a wedge pivot -> ~200k scored non-adjacent pairs)
@@ -299,6 +403,26 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
 
     hits(chain, iters=3, src="src", dst="dst").count()
     extras["hits_200k_edges_3iters_sec"] = round(time.time() - t0, 3)
+
+    # DSIR selection: corpus-vs-'en'-slice importance weights + top 1000
+    t0 = time.time()
+    from spacy_llm_spark.operators.importance import dsir_top_k
+
+    dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=1000).count()
+    extras["dsir_topk_sec"] = round(time.time() - t0, 3)
+
+    # exact prefix-filtered Jaccard self-join on a 1-in-5 doc slice: the
+    # synthetic corpus shares a small vocabulary, so token-SET similarity
+    # is pathologically dense — the slice + 0.8 threshold keep the
+    # result-pair count (recorded) meaningful as a scale signal
+    t0 = time.time()
+    from spacy_llm_spark.operators.setjoin import jaccard_join_exact
+
+    n_jx = jaccard_join_exact(
+        docs.where(F.col("doc_id") % 5 == 0), threshold=0.8
+    ).count()
+    extras["jaccard_exact_join_sec"] = round(time.time() - t0, 3)
+    extras["jaccard_exact_n_pairs"] = n_jx
 
     # SCC over a realistic 200k-edge digraph: 20k independent 5-cycles
     # (coloring diameter 5, all roots extract in parallel) + 10k

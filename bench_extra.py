@@ -5,7 +5,7 @@ a time with the same data shapes as bench.py, so before/after deltas for
 a single operator are measurable without the 30-minute full sweep.
 
 Usage:
-    python bench_extra.py --targets entailment_fixpoint,hard_negatives \
+    python bench_extra.py --targets entailment_fixpoint,jaccard_exact \
         [--sf /root/testdata/sf0.1] [--explain-dir plans/r06 --suffix before]
 
 Prints one JSON line {target: seconds, ...} (plus row counts as
@@ -181,6 +181,16 @@ def make_targets(spark, sf_dir, cpus, replicate):
     T["closure_hierarchy"] = closure_hierarchy
 
     # --- set/vector similarity -------------------------------------------
+    def jaccard_exact():
+        from spacy_llm_spark.operators.setjoin import jaccard_join_exact
+
+        d = docs()
+        return jaccard_join_exact(
+            d.where(F.col("doc_id") % 5 == 0), threshold=0.8
+        ).count()
+
+    T["jaccard_exact"] = jaccard_exact
+
     def hard_negatives():
         from spacy_llm_spark.operators.similarity import hard_negatives
 
@@ -359,6 +369,13 @@ def make_targets(spark, sf_dir, cpus, replicate):
         ).count()
 
     T["update_where"] = update_where
+
+    def bpe_train():
+        from spacy_llm_spark.functions.bpe import train_bpe
+
+        return len(train_bpe(docs(), n_merges=20))
+
+    T["bpe_train"] = bpe_train
 
     # --- embedding / fusion ----------------------------------------------
     def transe():

@@ -140,7 +140,65 @@ def main():
         explain_str(round_df),
     ))
 
-    # 8. degree-oriented triangle counting: every join is an equi-join
+    # 8. as-of join: ONE hash exchange, a running window, zero join operators
+    from spacy_llm_spark.operators.asof import asof_join
+
+    events = spark.read.parquet(f"{SF}/events.parquet")
+    views = events.where(F.col("event_type") == "view").select(
+        "event_id", "user_id", "ts"
+    )
+    clicks = events.where(F.col("event_type") == "click").select(
+        F.col("event_id").alias("click_event_id"),
+        "user_id",
+        F.col("ts").alias("cts"),
+        F.col("value").alias("click_value"),
+    )
+    asof = asof_join(
+        views, clicks, on="user_id", left_time="ts", right_time="cts",
+        right_cols=["click_event_id", "click_value"], strict=True,
+    )
+    sections.append((
+        "As-of join: union + running-last window, no join operator",
+        "Both sides union into one stream and a single `Exchange "
+        "hashpartitioning(_k)` feeds a running `last(payload, ignorenulls)` "
+        "window — |L|+|R| rows through one shuffle, versus the O(|L|x|R|) "
+        "BroadcastNestedLoopJoin a naive `t_right <= t_left` range predicate "
+        "would plan. There is no Join node anywhere in this plan.",
+        explain_str(asof),
+    ))
+
+    # 9. interval join: bucketized equi-join instead of a nested loop
+    from spacy_llm_spark.operators.rangejoin import interval_join
+
+    windows = spark.range(100).select(
+        F.col("id").alias("window_id"),
+        (
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+            + F.col("id") * F.expr("INTERVAL 7 HOURS")
+        ).alias("ws"),
+        (
+            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
+            + F.col("id") * F.expr("INTERVAL 7 HOURS")
+            + F.expr("INTERVAL 3 HOURS")
+        ).alias("we"),
+    )
+    ij = interval_join(
+        events.select("event_id", "ts", "event_type"), windows,
+        point_time="ts", start="ws", end="we", bucket_secs=3 * 3600,
+    )
+    sections.append((
+        "Interval (range) join: explode-to-buckets + hash equi-join",
+        "The interval side explodes into its covered time buckets and the "
+        "plan is a plain equi-join on `_b` (SortMergeJoin/ShuffledHashJoin — "
+        "AQE picks) followed by the exact containment Filter. No "
+        "BroadcastNestedLoopJoin / CartesianProduct, which is what Spark "
+        "plans for a raw `ts >= ws AND ts < we` predicate. (Window bounds "
+        "are built TIMESTAMP_NTZ to match the events column — the operator "
+        "refuses mixed timestamp flavors.)",
+        explain_str(ij),
+    ))
+
+    # 10. degree-oriented triangle counting: every join is an equi-join
     from spacy_llm_spark.operators import graph as graph_op
 
     edges_df = spark.createDataFrame(
@@ -159,7 +217,38 @@ def main():
         explain_str(tri),
     ))
 
-    # 9. bucketed join: both Exchanges elided by the table layout
+    # 11. certified approximate quantiles: ONE aggregation
+    from spacy_llm_spark.operators import quantiles as qt
+
+    cert = qt.approx_quantile_certificate(
+        events, "value", ["event_type"], accuracy=10_000
+    )
+    sections.append((
+        "Approximate-quantile certificate: approx + exact bounds in ONE aggregation",
+        "percentile_approx (GK summaries, the 100 TB path) and the exact "
+        "bound percentiles ride the same ObjectHashAggregate: a single "
+        "Exchange on the group key, not one per metric. Production runs "
+        "use `approx_quantiles` alone; this certificate is the audit form "
+        "whose booleans the oracle pins.",
+        explain_str(cert),
+    ))
+
+    # 12. HLL sketch distinct: one narrow shuffle of sketches
+    from spacy_llm_spark.operators import sketches as sk
+
+    hll = sk.approx_distinct(events, "user_id", ["event_type"], rsd=0.02)
+    sections.append((
+        "HLL approx distinct: one narrow shuffle of mergeable sketches",
+        "approx_count_distinct aggregates partial HLL++ registers "
+        "map-side and shuffles ONE fixed-size sketch per (partition, "
+        "group) — compare the exact count(DISTINCT) plan, which must "
+        "shuffle on (group, value) and again on group. This is the "
+        "count(DISTINCT) replacement for high-cardinality columns at "
+        "corpus scale.",
+        explain_str(hll),
+    ))
+
+    # 13. bucketed join: both Exchanges elided by the table layout
     import tempfile
 
     from spacy_llm_spark.sources.bucketed import bucketed_join, write_bucketed
@@ -190,7 +279,7 @@ def main():
         spark.sql("DROP TABLE IF EXISTS p_orders")
         spark.sql("DROP TABLE IF EXISTS p_cust")
 
-    # 10. incremental canonical-edge maintenance: broadcast remap only
+    # 14. incremental canonical-edge maintenance: broadcast remap only
     from spacy_llm_spark.operators.canonicalize import canonical_edges
 
     triples = spark.createDataFrame(
@@ -211,7 +300,41 @@ def main():
         explain_str(canonical_edges(triples, vmap)),
     ))
 
-    # 11. duplicated n-gram spans: projection -> one gram groupBy -> semi-join
+    # 15. BM25 direct path: one stats reduce, scoring projection, TakeOrdered
+    from spacy_llm_spark.functions.relevance import (
+        bm25_index,
+        bm25_query_from_index,
+        bm25_topk,
+    )
+
+    sections.append((
+        "BM25 (direct): ONE stats reduce, scoring as a projection, TakeOrdered",
+        "The corpus stats (N, avgdl, per-term df) reduce to a single row "
+        "(Exchange SinglePartition) that broadcasts back via a 1-row "
+        "IdentityBroadcast cross join; the per-doc score is a pure "
+        "whole-stage-codegen projection; top-k is TakeOrderedAndProject — "
+        "no global Sort materializes the corpus ordering. Two scans of the "
+        "text column, zero corpus-keyed shuffles.",
+        explain_str(bm25_topk(docs, ["spark", "window", "dup"], k=25)),
+    ))
+
+    # 16. BM25 from the persisted inverted index: term-filtered scan
+    postings, doclens = bm25_index(docs)
+    postings.write.mode("overwrite").parquet("/tmp/plans_bm25_postings")
+    doclens.write.mode("overwrite").parquet("/tmp/plans_bm25_doclens")
+    p2 = spark.read.parquet("/tmp/plans_bm25_postings")
+    d2 = spark.read.parquet("/tmp/plans_bm25_doclens")
+    sections.append((
+        "BM25 (indexed): the postings scan is FILTERED to the query terms",
+        "Querying from the persisted inverted index never reads the corpus "
+        "text: look for `PushedFilters: [In(term, ...)]` on the postings "
+        "scan — with a term-bucketed or term-partitioned layout this prunes "
+        "to |terms| slivers of the index. df is a |terms|-group aggregate "
+        "over the pruned scan; doclens is the only doc-scale input.",
+        explain_str(bm25_query_from_index(p2, d2, ["spark", "window", "dup"], k=25)),
+    ))
+
+    # 17. duplicated n-gram spans: projection -> one gram groupBy -> semi-join
     from spacy_llm_spark.operators.dedup import duplicated_ngram_stats
 
     sections.append((
@@ -225,7 +348,7 @@ def main():
         explain_str(duplicated_ngram_stats(docs, n=3)),
     ))
 
-    # 12. sparse lexical all-pairs cosine: inverted-index equi-join
+    # 18. sparse lexical all-pairs cosine: inverted-index equi-join
     from spacy_llm_spark.operators.similarity import lexical_cosine_pairs
 
     sections.append((
@@ -238,7 +361,7 @@ def main():
         explain_str(lexical_cosine_pairs(docs, min_sim=0.5, n=3, max_df=100)),
     ))
 
-    # 13. multi-source BFS hop: expand equi-join + visited anti-join
+    # 19. multi-source BFS hop: expand equi-join + visited anti-join
     from spacy_llm_spark.operators.graph import bfs_levels
 
     bfs_edges = spark.createDataFrame(
@@ -257,7 +380,22 @@ def main():
         explain_str(bfs_levels(bfs_edges, bfs_seeds, max_hops=1)),
     ))
 
-    # 14. line dedup: one line-keyed count, anti join, doc reassembly
+    # 20. sequence packing: chunked prefix sum, no single-partition window
+    from spacy_llm_spark.operators.packing import pack_sequences
+
+    sections.append((
+        "Sequence packing: the running sum never collapses to one partition",
+        "The global token cumsum is decomposed: the Window's Exchange is "
+        "`hashpartitioning(_chunk)` (chunk = driver-frozen quantile bucket "
+        "of the order key), NEVER `SinglePartition`; the cross-chunk "
+        "offsets enter as a literal map lookup (no join node). The pack "
+        "explosion is a Generate over the same partitioning. InMemoryScan "
+        "= the persisted 3-column projection, so the text column is read "
+        "once across the boundary/totals/output passes.",
+        explain_str(pack_sequences(docs, budget=2048, n_chunks=8)),
+    ))
+
+    # 21. line dedup: one line-keyed count, anti join, doc reassembly
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -277,7 +415,103 @@ def main():
         ),
     ))
 
-    # 15. Adamic–Adar: equi-joins only, aggregate-fused scoring
+    # 22. BPE: pair stats over the word table, rewrite as a narrow fold
+    from spacy_llm_spark.functions.bpe import (
+        initial_symbols,
+        merge_pair_expr,
+        pair_counts,
+        word_table,
+    )
+
+    sym = initial_symbols(word_table(docs))
+    sections.append((
+        "BPE round: vocabulary-scale pair aggregate; rewrite is shuffle-free",
+        "The corpus collapsed to the word table in ONE earlier shuffle; a "
+        "merge round is this pair aggregate (Generate over the symbol "
+        "array + HashAggregate keyed on the pair — all vocabulary-scale) "
+        "plus a rewrite that is a pure Project (the aggregate() fold below "
+        "— no Exchange at all), so 30k merges cost 30k vocabulary-scale "
+        "aggregations and zero corpus re-reads.",
+        explain_str(pair_counts(sym))
+        + "\n\n-- rewrite (one merge applied):\n"
+        + explain_str(sym.withColumn("symbols", merge_pair_expr("e", "r"))),
+    ))
+
+    # 23. single-pass profiler: one scan, one expand, one aggregate
+    from spacy_llm_spark.operators.profile import profile_table
+
+    sections.append((
+        "Table profile: every column's stats in one scan + one aggregate",
+        "All null/distinct/min/max/len statistics ride ONE scan: the "
+        "multi-distinct rewrite is the single Expand above the scan, the "
+        "wide aggregate reduces to one row (Exchange SinglePartition of "
+        "partial aggregates — bytes, not rows), and the per-column "
+        "unpivot is a Generate(stack) over that 1-row frame. Profiling N "
+        "columns costs the same single pass as profiling one.",
+        explain_str(profile_table(docs)),
+    ))
+
+    # 24. z-score outliers: one window pass on the group key
+    from spacy_llm_spark.operators.anomaly import zscore_outliers
+
+    hourly = (
+        spark.read.parquet(f"{SF}/events.parquet")
+        .groupBy("user_id", F.date_trunc("hour", "ts").alias("hour"))
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    sections.append((
+        "Z-score outliers: group stats stay inside the key's window pass",
+        "One Exchange on the group key feeds the window pass (Spark "
+        "splits avg and stddev_pop into two Window nodes over the SAME "
+        "partitioning — no second shuffle); the filter is a projection "
+        "above it. No join, no driver traffic — per-key state is two "
+        "running moments.",
+        explain_str(zscore_outliers(hourly, "n", ["user_id"], threshold=2.0)),
+    ))
+
+    # 25. snapshot diff: one full-outer id join, comparison in projection
+    from spacy_llm_spark.operators.diff import snapshot_diff
+
+    old_snap = docs.where(F.col("doc_id") % 7 != 0)
+    new_snap = docs.where(F.col("doc_id") % 5 != 3)
+    sections.append((
+        "Snapshot diff (CDC): one full-outer id join, delta-scale output",
+        "The whole diff is a single full-outer SortMergeJoin on the id "
+        "(co-partition both snapshots with a bucketed-by-id layout and "
+        "the Exchanges elide); change detection is the null-safe "
+        "comparison inside the Project/Filter above it — no fingerprint "
+        "column is computed or stored, no second pass, and unchanged "
+        "rows die in the filter so the output is delta-scale.",
+        explain_str(snapshot_diff(old_snap, new_snap, "doc_id")),
+    ))
+
+    # 26. co-occurrence PMI: windowed projection, never a self-join
+    from spacy_llm_spark.functions.cooccur import cooccurrence_pmi
+
+    sections.append((
+        "Co-occurrence PMI: pair generation is a Generate, not a self-join",
+        "Pairs come from transform+slice over the token array (a "
+        "Generate node — fan-out bounded by the window), then ONE "
+        "pair-keyed HashAggregate; the unigram joins are "
+        "vocabulary-scale and the corpus totals ride a broadcast 1-row "
+        "frame. The corpus never joins itself on position.",
+        explain_str(cooccurrence_pmi(docs, window=2, min_count=10)),
+    ))
+
+    # 27. skew report: key aggregate + broadcast totals + TakeOrdered
+    from spacy_llm_spark.operators.skew import skew_report
+
+    sections.append((
+        "Skew report: one key aggregate, 1-row broadcast, TakeOrdered",
+        "The diagnostics cost one HashAggregate on the candidate key, a "
+        "1-row totals aggregate broadcast back, and TakeOrderedAndProject "
+        "for the top-n — no global sort; the ranking window runs over "
+        "the already-limited n-row frame (the WindowExec single-partition "
+        "warning refers to <= top_n rows).",
+        explain_str(skew_report(docs, ["source"], top_n=10)),
+    ))
+
+    # 28. Adamic–Adar: equi-joins only, aggregate-fused scoring
     from spacy_llm_spark.operators.graph import adamic_adar
 
     edges_aa = spark.createDataFrame(
@@ -295,7 +529,7 @@ def main():
         explain_str(adamic_adar(edges_aa, min_common=1)),
     ))
 
-    # 16. label propagation: per-round argmax is ONE two-level aggregate.
+    # 29. label propagation: per-round argmax is ONE two-level aggregate.
     # cut_lineage (localCheckpoint per round) would collapse the explain
     # to a Scan ExistingRDD — disable it for the CAPTURE only, so the
     # true single-round plan is visible.
@@ -332,6 +566,36 @@ def main():
     finally:
         _fs.cut_lineage = _real_cut
         _graph_mod.fs.cut_lineage = _real_cut
+
+    # 30. DSIR: bucket-scale ratio map broadcast into the corpus scan
+    from spacy_llm_spark.operators.importance import dsir_top_k
+
+    sections.append((
+        "DSIR importance selection: broadcast bucket map + TakeOrdered",
+        "Both corpus distributions aggregate to bucket scale (<= 10k "
+        "rows); their log-ratio map is BroadcastExchange'd into the "
+        "raw corpus' explode — the corpus-scale side never shuffles on "
+        "the bucket — and the per-doc weight is one doc-keyed "
+        "HashAggregate; selection is TakeOrderedAndProject, never a "
+        "global sort. Raw corpus cost: two scans, nothing wider than "
+        "(doc_id, weight) exchanged.",
+        explain_str(dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=100)),
+    ))
+
+    # 31. exact Jaccard self-join: prefix equi-join, no rank window
+    from spacy_llm_spark.operators.setjoin import jaccard_join_exact
+
+    sections.append((
+        "Exact prefix-filtered Jaccard join: df-ordered prefixes, equi-joins only",
+        "The global rarest-first token order is the (df, token) VALUE "
+        "pair sorted per-doc inside array_sort — no global rank window "
+        "ever plans; candidates come from ONE prefix-token equi-join "
+        "with the length filter applied before dedup, and verification "
+        "is native array_intersect above two id-keyed joins. Nothing "
+        "quadratic in the corpus materializes; the only Exchanges are "
+        "token-, doc-, and pair-keyed hash partitionings.",
+        explain_str(jaccard_join_exact(docs, threshold=0.8)),
+    ))
 
     from spacy_llm_spark.operators.audit import triple_shape_violations
 
@@ -385,6 +649,21 @@ def main():
             cosine_topk_quantized(
                 quantize_embeddings(emb), [0.1] * 64, k=20
             )
+        ),
+    ))
+
+    from spacy_llm_spark.operators.sampling import proportional_mix
+
+    sections.append((
+        "Exact-composition corpus mix: one group aggregate + one group window",
+        "Quotas come from ONE column-pruned group-cardinality aggregate "
+        "(bounded collect of |proportions| rows) and re-enter the plan as "
+        "a literal map, so the selection is a single group-keyed "
+        "row_number window over the isin-filtered scan — one Exchange "
+        "total, no join, and the filter prunes unlisted groups at the "
+        "scan.",
+        explain_str(
+            proportional_mix(docs, "lang", {"en": 0.6, "de": 0.2, "fr": 0.2})
         ),
     ))
 

@@ -19,8 +19,8 @@ Layout
 - ``operators.*``         graph / reason / dedup / similarity / audit /
                           fusion / temporal / kgembed (legacy driver queries)
 - other ``operators.*`` / ``functions.*``, ``examples``, ``registry``
-                          reached by neither the job nor the legacy driver's
-                          KG queries; kept for their tests
+                          sampling, packing, joins, sketches, task stages,
+                          ...: the legacy driver's non-KG queries and bench rows
 - ``functions.response_parsers``   response-parser kernels (NER, REL, EL)
 - ``functions.normalizers`` label normalizers
 - ``functions.text`` / ``functions.rdf``  text analysis, RDF serialization
