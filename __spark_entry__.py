@@ -4797,27 +4797,29 @@ FROM nodes n LEFT JOIN (
 
 
 def _pagerank_oracle_sql(iters: int = 5, d: float = 0.85, q: int = 10) -> str:
-    """Chained-CTE power iteration — one CTE pair per round, quantized to
-    ``q`` dp exactly like operators/graph.pagerank."""
+    """Chained-CTE power iteration — three CTEs per round, quantized to
+    ``q`` dp exactly like operators/graph.pagerank. Every CTE is
+    MATERIALIZED (as in ``_hits_oracle_sql``): a round reads the previous
+    one twice, so inlined rounds would grow the plan as 2^iters copies."""
     parts = [
         _MENTIONS_CTE,
         _EDGES_CTE,
         """
-, de AS (SELECT DISTINCT subj AS s, obj AS t FROM edges),
-nodes AS (SELECT s AS v FROM de UNION SELECT t FROM de),
-outd AS (SELECT s, count(*) AS dg FROM de GROUP BY s),
-nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
-r0 AS (SELECT v, round(1.0 / nn.n, {q}) AS r FROM nodes, nn)""".format(q=q),
+, de AS MATERIALIZED (SELECT DISTINCT subj AS s, obj AS t FROM edges),
+nodes AS MATERIALIZED (SELECT s AS v FROM de UNION SELECT t FROM de),
+outd AS MATERIALIZED (SELECT s, count(*) AS dg FROM de GROUP BY s),
+nn AS MATERIALIZED (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes),
+r0 AS MATERIALIZED (SELECT v, round(1.0 / nn.n, {q}) AS r FROM nodes, nn)""".format(q=q),
     ]
     for i in range(1, iters + 1):
         parts.append(
             """,
-c{i} AS (SELECT e.t AS v, sum(p.r / o.dg) AS contrib
+c{i} AS MATERIALIZED (SELECT e.t AS v, sum(p.r / o.dg) AS contrib
          FROM r{p} p JOIN de e ON e.s = p.v JOIN outd o ON o.s = p.v
          GROUP BY e.t),
-d{i} AS (SELECT coalesce(sum(p.r), 0) AS dm
+d{i} AS MATERIALIZED (SELECT coalesce(sum(p.r), 0) AS dm
          FROM r{p} p LEFT JOIN outd o ON o.s = p.v WHERE o.s IS NULL),
-r{i} AS (SELECT n.v,
+r{i} AS MATERIALIZED (SELECT n.v,
          round((1 - {d}) / nn.n + {d} * (coalesce(c.contrib, 0) + d{i}.dm / nn.n), {q}) AS r
          FROM nodes n LEFT JOIN c{i} c ON c.v = n.v, d{i}, nn)""".format(
                 i=i, p=i - 1, d=d, q=q

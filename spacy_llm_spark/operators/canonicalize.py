@@ -613,14 +613,12 @@ def canonical_edges(
     ):
         vmap = F.broadcast(vmap)
     return (
-        edges.join(vmap.withColumnRenamed("node", "subj"), "subj", "left")
-        .withColumnRenamed("component", "subj_canonical")
-        .join(vmap.withColumnRenamed("node", "obj"), "obj", "left")
-        .withColumnRenamed("component", "obj_canonical")
-        .select(
-            F.coalesce("subj_canonical", "subj").alias("subj"),
-            F.col("pred"),
-            F.coalesce("obj_canonical", "obj").alias("obj"),
+        edges.join(vmap.selectExpr("node AS subj", "component AS subj_canonical"), "subj", "left")
+        .join(vmap.selectExpr("node AS obj", "component AS obj_canonical"), "obj", "left")
+        .selectExpr(
+            "coalesce(subj_canonical, subj) AS subj",
+            "pred",
+            "coalesce(obj_canonical, obj) AS obj",
             *[c for c in edges.columns if c not in ("subj", "pred", "obj")],
         )
     )

@@ -47,7 +47,7 @@ from .. import fs
 from ..session import local_frame
 
 
-def _obs_rows(obs: Observation) -> Optional[int]:
+def observed_rows(obs: Observation) -> Optional[int]:
     """Non-blocking read of an Observation's ``rows`` metric; ``None`` when
     unavailable.
 
@@ -59,8 +59,9 @@ def _obs_rows(obs: Observation) -> Optional[int]:
     both cases, so metrics stay correct at the cost of (at most) one extra
     job per stage — vs. the three unconditional count() scans this design
     replaced. Observations are therefore attached ONLY at plan roots
-    (``todo``, ``out``), where the stage's own write job reports them
-    reliably."""
+    (``todo``, ``out``), where the first job that runs the plan — the
+    stage's own write, or the eager lineage cut of the work list — reports
+    them reliably."""
     jo = obs._jo  # noqa: SLF001 — scala Observation (classic mode)
     if jo is None:
         return None
@@ -82,13 +83,15 @@ class StageMetrics:
     """Lazily-resolved per-stage counters (A7, reference cache.py:59-67).
 
     ``rows_processed`` is observed on the todo frame — populated by the
-    persist job the stage already runs (zero extra actions).
+    first job the stage already runs over it: the persist write on a fresh
+    checkpoint, the materialization of the work list on a resume or with
+    ``micro_batches`` (zero extra actions).
     ``rows_out`` is observed on the returned frame and resolves when the
     caller consumes it; ``rows_in == rows_out`` by construction (the
     read-back is an inner key-join against a store that, post-persist,
     covers every input key exactly once), so no third observation is
     needed. Reading a metric whose observation hasn't fired (or was lost
-    to the AQE metric-drop quirk — see ``_obs_rows``) triggers one count()
+    to the AQE metric-drop quirk — see ``observed_rows``) triggers one count()
     and caches the result.
 
     Caveat: ``rows_in == rows_out`` relies on the stage-fn contract (fn
@@ -119,7 +122,7 @@ class StageMetrics:
 
     def _resolve(self, name: str, obs: Observation, attr: str) -> int:
         if name not in self._resolved:
-            value = _obs_rows(obs)
+            value = observed_rows(obs)
             if value is None:
                 value = getattr(self, attr).count()
             self._resolved[name] = value
@@ -231,6 +234,12 @@ class CheckpointManager:
         work (hash-partitioned on the key), whatever the input's size in
         bytes.
 
+        On a resume (a checkpoint exists) the work list — the anti-join
+        against the store, deduped — is materialized once
+        (``fs.cut_lineage``) before ``fn`` runs: its observed size decides
+        whether ``fn`` runs at all, and ``fn`` then reads the cut blocks,
+        so the store and the input are scanned once for the anti-join.
+
         Contract for ``fn``: it may APPEND annotation columns and DROP
         input columns, but must not modify values of columns it passes
         through — pass-through columns are re-attached from the input on
@@ -332,17 +341,17 @@ class CheckpointManager:
                 manifest = self._read_manifest(spark, stage)
             selected.write.mode("append").parquet(path)
 
+        def _materialize(df: DataFrame):
+            # the eager lineage cut fires obs_todo; counting the cut blocks
+            # is the (cheap) fallback if its metrics are lost
+            cut = fs.cut_lineage(df)
+            n = observed_rows(obs_todo)
+            return cut, cut.count() if n is None else n
+
         pre_resolved: dict = {}
         if micro_batches and micro_batches > 1:
-            from ..fs import cut_lineage
-
             bucket = F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(micro_batches))
-            todo_mat = cut_lineage(todo.withColumn("_bucket", bucket))
-            # the eager lineage cut may or may not report the observation
-            # (RDD-level action) — counting the materialized blocks is cheap
-            n_todo = _obs_rows(obs_todo)
-            if n_todo is None:
-                n_todo = todo_mat.count()
+            todo_mat, n_todo = _materialize(todo.withColumn("_bucket", bucket))
             pre_resolved["todo"] = n_todo
             if n_todo > 0:
                 for b in range(micro_batches):
@@ -352,16 +361,18 @@ class CheckpointManager:
                 # nothing to do but the manifest must exist for read-back
                 _persist(fn(todo_mat.where(F.lit(False)).drop("_bucket")))
         elif has_ckpt:
-            # Resume path: count the anti-join result FIRST (one cheap job,
-            # which also fires obs_todo) and skip the stage fn entirely when
-            # everything is cached — an all-cached rerun must not spin up
-            # model kernels over an empty frame or append empty commits on
-            # every invocation. Fresh runs (no checkpoint) skip this count:
-            # there the persist job itself populates the observations.
-            n_todo = todo.count()
+            # Resume path: materialize the work list FIRST (one pass over
+            # the store and the input, which also fires obs_todo) and skip
+            # the stage fn entirely when everything is cached — an
+            # all-cached rerun must not spin up model kernels over an empty
+            # frame or append empty commits on every invocation. fn then
+            # runs over the cut blocks, so the persist write does not
+            # re-run the anti-join. Fresh runs (no checkpoint) skip the
+            # cut: there the persist job itself populates the observations.
+            todo_mat, n_todo = _materialize(todo)
             pre_resolved["todo"] = n_todo
             if n_todo > 0 or manifest is None:
-                _persist(fn(todo))
+                _persist(fn(todo_mat))
         else:
             _persist(fn(todo))
 
@@ -377,8 +388,8 @@ class CheckpointManager:
                 stage=stage,
                 obs_todo=obs_todo,
                 obs_out=obs_out,
-                # the LAZY todo plan, never the materialized micro-batch
-                # frame (whose blocks must not be pinned by metrics); the
+                # the LAZY todo plan, never the materialized work list
+                # (whose blocks must not be pinned by metrics); the
                 # fallback count merely re-runs the anti-join
                 todo_df=todo,
                 out_df=out,

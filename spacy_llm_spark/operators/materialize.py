@@ -20,53 +20,41 @@ from pyspark.sql import functions as F
 from ..kb import NIL
 
 
+def _explode(df: DataFrame, id_cols, array_col: str, idx: str, elem: str, *keep) -> DataFrame:
+    """(ids..., keep..., idx, elem): one row per element of ``array_col``."""
+    return df.selectExpr(*id_cols, *keep, f"posexplode({array_col}) AS ({idx}, {elem})")
+
+
+_ENT_FIELDS = (
+    "ent.start AS start", "ent.`end` AS `end`", "ent.label AS label", "ent.surface AS surface"
+)
+
+
 def mentions_table(df: DataFrame, id_cols=("doc_id", "content_sha256")) -> DataFrame:
     """Explode ents -> (ids..., ent_idx, start, end, label, surface)."""
-    return df.select(
-        *id_cols, F.posexplode("ents").alias("ent_idx", "ent")
-    ).select(
-        *id_cols,
-        "ent_idx",
-        F.col("ent.start").alias("start"),
-        F.col("ent.end").alias("end"),
-        F.col("ent.label").alias("label"),
-        F.col("ent.surface").alias("surface"),
+    return _explode(df, id_cols, "ents", "ent_idx", "ent").selectExpr(
+        *id_cols, "ent_idx", *_ENT_FIELDS
     )
 
 
 def relations_table(df: DataFrame, id_cols=("doc_id", "content_sha256")) -> DataFrame:
     """Explode rels -> (ids..., rel_idx, dep, dest, relation)."""
-    return df.select(
-        *id_cols, F.posexplode("rels").alias("rel_idx", "rel")
-    ).select(
-        *id_cols,
-        "rel_idx",
-        F.col("rel.dep").alias("dep"),
-        F.col("rel.dest").alias("dest"),
-        F.col("rel.relation").alias("relation"),
+    return _explode(df, id_cols, "rels", "rel_idx", "rel").selectExpr(
+        *id_cols, "rel_idx", "rel.dep AS dep", "rel.dest AS dest", "rel.relation AS relation"
     )
 
 
 def links_table(df: DataFrame, id_cols=("doc_id", "content_sha256")) -> DataFrame:
-    """Explode ents aligned with kb_ids -> (ids..., ent_idx, surface, label,
-    kb_id).
+    """Explode ents aligned with kb_ids -> (ids..., ent_idx, start, end,
+    label, surface, kb_id).
 
     Deliberately ``posexplode(ents)`` + ``element_at(kb_ids, pos+1)``, NOT
     ``arrays_zip``: field extraction from a zipped struct re-materializes
     the zip per accessed field (measured ~10x slower on this explode), and
     higher-order lambdas (zip_with) drop out of codegen entirely.
     """
-    exploded = df.select(
-        *id_cols, "kb_ids", F.posexplode("ents").alias("ent_idx", "ent")
-    )
-    return exploded.select(
-        *id_cols,
-        "ent_idx",
-        F.col("ent.start").alias("start"),
-        F.col("ent.end").alias("end"),
-        F.col("ent.label").alias("label"),
-        F.col("ent.surface").alias("surface"),
-        F.element_at("kb_ids", F.col("ent_idx") + 1).alias("kb_id"),
+    return _explode(df, id_cols, "ents", "ent_idx", "ent", "kb_ids").selectExpr(
+        *id_cols, "ent_idx", *_ENT_FIELDS, "element_at(kb_ids, ent_idx + 1) AS kb_id"
     )
 
 
@@ -92,41 +80,40 @@ def merge_annotations(
     return merged.drop(*[f"_old_{c}" for c in annotation_cols])
 
 
-def _node_expr(ent_col: str, kb_col: str):
-    """KB id when linked, else normalized surface node."""
-    return F.when(
-        (F.col(kb_col).isNotNull()) & (F.col(kb_col) != NIL), F.col(kb_col)
-    ).otherwise(F.concat(F.lit("surface:"), F.lower(F.trim(F.col(ent_col)))))
+def _node_expr(ent_col: str, kb_col: str) -> str:
+    """SQL: KB id when linked, else normalized surface node."""
+    return (
+        f"CASE WHEN {kb_col} IS NOT NULL AND {kb_col} != '{NIL}' THEN {kb_col} "
+        f"ELSE concat('surface:', lower(trim({ent_col}))) END"
+    )
 
 
 def edges_table(df: DataFrame, id_cols=("doc_id", "content_sha256")) -> DataFrame:
     """(subj, pred, obj) triples: resolve rel indices into the ents/kb_ids
     arrays with element_at — a pure projection, no join, no shuffle.
     """
-    exploded = df.select(
-        *id_cols,
-        F.col("ents"),
-        F.col("kb_ids"),
-        F.posexplode("rels").alias("rel_idx", "rel"),
-    ).select(
-        *id_cols,
-        "rel_idx",
-        F.col("rel.relation").alias("pred"),
-        F.element_at("ents", F.col("rel.dep") + 1).alias("dep_ent"),
-        F.element_at("kb_ids", F.col("rel.dep") + 1).alias("dep_kb"),
-        F.element_at("ents", F.col("rel.dest") + 1).alias("dest_ent"),
-        F.element_at("kb_ids", F.col("rel.dest") + 1).alias("dest_kb"),
-    )
-    return exploded.select(
-        *id_cols,
-        "rel_idx",
-        _node_expr("dep_ent.surface", "dep_kb").alias("subj"),
-        F.col("pred"),
-        _node_expr("dest_ent.surface", "dest_kb").alias("obj"),
-        F.col("dep_ent.surface").alias("subj_surface"),
-        F.col("dest_ent.surface").alias("obj_surface"),
-        F.col("dep_ent.label").alias("subj_label"),
-        F.col("dest_ent.label").alias("obj_label"),
+    return (
+        _explode(df, id_cols, "rels", "rel_idx", "rel", "ents", "kb_ids")
+        .selectExpr(
+            *id_cols,
+            "rel_idx",
+            "rel.relation AS pred",
+            "element_at(ents, rel.dep + 1) AS dep_ent",
+            "element_at(kb_ids, rel.dep + 1) AS dep_kb",
+            "element_at(ents, rel.dest + 1) AS dest_ent",
+            "element_at(kb_ids, rel.dest + 1) AS dest_kb",
+        )
+        .selectExpr(
+            *id_cols,
+            "rel_idx",
+            _node_expr("dep_ent.surface", "dep_kb") + " AS subj",
+            "pred",
+            _node_expr("dest_ent.surface", "dest_kb") + " AS obj",
+            "dep_ent.surface AS subj_surface",
+            "dest_ent.surface AS obj_surface",
+            "dep_ent.label AS subj_label",
+            "dest_ent.label AS obj_label",
+        )
     )
 
 

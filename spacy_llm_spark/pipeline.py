@@ -17,8 +17,8 @@ per-task arguments are built from ``KGConfig``; both paths use it.
 
 The annotated frame is materialized once (``cut_lineage``) with or
 without a checkpoint — with one, that is the checkpoint read-back (store
-read, dedup, key join) — so the output tables and the triple count do not
-re-run it.
+read, dedup, key join) — so the output tables do not re-run it, and the
+triple count is an observation on that cut (no job of its own).
 """
 
 from __future__ import annotations
@@ -29,7 +29,8 @@ import time
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .kb import CODE_NER_DICT, CODE_REL_RULES, KnowledgeBase, build_code_kb
 from .operators import canonicalize as canon
@@ -38,7 +39,7 @@ from .operators import materialize as mat
 from .operators import ner as ner_op
 from .operators import rel as rel_op
 from .fs import cut_lineage
-from .operators.checkpoint import CheckpointManager
+from .operators.checkpoint import CheckpointManager, observed_rows
 
 
 @dataclass
@@ -239,11 +240,17 @@ def run_pipeline(
         annotated = annotate_corpus(corpus, cfg, kb, fused=cfg.fused)
     # Materialize the annotated frame once — the (narrow, expensive)
     # annotation pass, or with a checkpoint its read-back (store read,
-    # dedup, key join); the output tables and the triple count all re-read
-    # it. Row-serialized blocks (localCheckpoint), NOT the columnar cache —
-    # InMemoryRelation scans of nested array<struct> columns are several
-    # times slower than recomputing (measured).
-    annotated = cut_lineage(annotated)
+    # dedup, key join); the output tables all re-read it. Row-serialized
+    # blocks (localCheckpoint), NOT the columnar cache — InMemoryRelation
+    # scans of nested array<struct> columns are several times slower than
+    # recomputing (measured). The triple count (one edge per rels element)
+    # is observed on the cut itself, so it costs no job of its own.
+    obs_triples = Observation()
+    annotated = cut_lineage(
+        annotated.observe(
+            obs_triples, F.expr("coalesce(sum(size(coalesce(rels, array()))), 0)").alias("rows")
+        )
+    )
 
     id_cols = ("doc_id", "content_sha256") if "doc_id" in corpus.columns else (
         "content_sha256",
@@ -260,7 +267,9 @@ def run_pipeline(
         vertices = None
         canonical_edges = edges
 
-    n_triples = edges.count()
+    n_triples = observed_rows(obs_triples)
+    if n_triples is None:
+        n_triples = edges.count()
     wall = time.time() - t0
     metrics = ckpt.metrics_df(spark) if ckpt else None
     return KGResult(

@@ -145,6 +145,33 @@ def test_run_stage_metrics_without_extra_jobs(spark, tmp_path):
     assert _n_jobs(spark) == after_consume
 
 
+def test_resume_runs_stage_fn_over_the_materialized_work_list(spark, tmp_path):
+    """On a resume with new rows the work list (anti-join + dedup) is
+    materialized once: the frame the stage fn gets does not scan the
+    checkpoint, so the persist write does not re-run the anti-join, and
+    the stage runs at most 4 jobs (the cut, which also gives the work
+    count, and the write; a separate count plus a write that re-runs the
+    anti-join is 7)."""
+    ckpt_dir = str(tmp_path / "ck")
+    CheckpointManager(ckpt_dir).run_stage(spark, "s", _corpus(spark), _stage, config={"v": 1})
+
+    plans = []
+
+    def stage(chunk):
+        plans.append(chunk._jdf.queryExecution().executedPlan().toString())
+        return _stage(chunk)
+
+    mgr = CheckpointManager(ckpt_dir)
+    before = _n_jobs(spark)
+    out = mgr.run_stage(spark, "s", _corpus(spark, 25), stage, config={"v": 1})
+    assert _n_jobs(spark) - before <= 4
+    assert len(plans) == 1
+    assert "FileScan" not in plans[0] and ckpt_dir not in plans[0]
+    assert sorted(r.out for r in out.collect()) == [2 * i for i in range(25)]
+    m = mgr.metrics[-1]
+    assert (m.rows_in, m.cache_hits, m.rows_processed, m.rows_out) == (25, 20, 5, 25)
+
+
 def test_metrics_correct_on_all_cached_rerun(spark, tmp_path):
     mgr = CheckpointManager(str(tmp_path / "ck"))
     df = _corpus(spark)

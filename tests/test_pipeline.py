@@ -159,10 +159,10 @@ def _jobs_in_group(spark, group, fn):
 
 def test_checkpointed_job_reads_the_checkpoint_back_once(spark, result, tmp_path):
     """With a checkpoint, the annotated frame is materialized once: its
-    plan no longer scans the checkpoint, the job (pipeline + the five
-    writes) runs fewer Spark jobs than when every table re-ran the
-    read-back (33), the metrics table is read without a job, and the
-    output matches the no-checkpoint run."""
+    plan does not scan the checkpoint, the job (pipeline + the five
+    writes) runs at most 14 Spark jobs — no table re-runs the read-back
+    and the triple count runs no job of its own — the metrics table is
+    read without a job, and the output matches the no-checkpoint run."""
     from spacy_llm_spark.sources.sinks import write_table
 
     corpus, plain = result
@@ -177,7 +177,7 @@ def test_checkpointed_job_reads_the_checkpoint_back_once(spark, result, tmp_path
     res, n_jobs = _jobs_in_group(spark, "ckpt-job", job)
     rows, n_metric_jobs = _jobs_in_group(spark, "ckpt-metrics", res.metrics.collect)
     assert n_metric_jobs == 0
-    assert n_jobs < 33
+    assert n_jobs <= 14
     assert res.n_triples == plain.n_triples
     n_docs = corpus.count()
     assert [(r.rows_in, r.cache_hits, r.rows_processed, r.rows_out) for r in rows] == [
@@ -185,6 +185,23 @@ def test_checkpointed_job_reads_the_checkpoint_back_once(spark, result, tmp_path
     ]
     plan = res.annotated._jdf.queryExecution().executedPlan().toString()
     assert "FileScan" not in plan and ckpt not in plan
+
+
+@pytest.mark.parametrize("case", ["plain", "checkpoint", "empty"])
+def test_n_triples_counts_the_edges(spark, result, tmp_path, case):
+    """``n_triples`` is the edge count, taken by an observation on the
+    annotated frame's lineage cut: an int when run_pipeline returns, so
+    reading it runs no job."""
+    corpus, _ = result
+    if case == "empty":
+        corpus = corpus.limit(0)
+    cfg = KGConfig(checkpoint_dir=str(tmp_path / "ck") if case == "checkpoint" else None)
+    res = run_pipeline(spark, corpus, cfg, materialize_canonical=False)
+    n, n_jobs = _jobs_in_group(spark, f"n-triples-{case}", lambda: res.n_triples)
+    assert n_jobs == 0
+    assert type(n) is int
+    assert n == res.edges.count()
+    assert (n == 0) == (case == "empty")
 
 
 def _task_ids(spark, corpus, ckpt, new_docs, micro_batches=None):
