@@ -537,73 +537,6 @@ def q_ner_prf(spark, sf_dir):
     )
 
 
-def q_textcat_binary(spark, sf_dir):
-    from spacy_llm_spark.operators import tasks
-
-    out = tasks.classify_text(
-        _docs(spark, sf_dir),
-        model_spec={"name": "keyword_textcat", "keywords": {"SparkDoc": "spark"}, "binary": True},
-        labels=["SparkDoc"],
-        text_col="text",
-    )
-    return out.select("doc_id", F.explode("cats").alias("label", "score"))
-
-
-def q_lemma_identity(spark, sf_dir):
-    from spacy_llm_spark.operators import tasks
-
-    out = tasks.lemmatize(
-        _docs(spark, sf_dir), model_spec={"name": "identity_lemma"}, text_col="text"
-    )
-    return out.select(
-        "doc_id", F.posexplode("lemmas").alias("pos", "pair")
-    ).select(
-        "doc_id",
-        (F.col("pos") + 1).cast("long").alias("pos"),
-        F.element_at("pair", 1).alias("token"),
-        F.element_at("pair", 2).alias("lemma"),
-    )
-
-
-def q_sentiment_lexicon(spark, sf_dir):
-    from spacy_llm_spark.operators import tasks
-
-    out = tasks.score_sentiment(
-        _docs(spark, sf_dir),
-        model_spec={"name": "lexicon_sentiment", "pos_words": ["fast"], "neg_words": ["slow"]},
-        text_col="text",
-    )
-    return out.select("doc_id", F.round("sentiment", 4).alias("sentiment"))
-
-
-def q_summary_head(spark, sf_dir):
-    from spacy_llm_spark.operators import tasks
-
-    out = tasks.summarize(
-        _docs(spark, sf_dir), model_spec={"name": "head_summary", "n_tokens": 8},
-        text_col="text",
-    )
-    return out.select("doc_id", "summary")
-
-
-def q_translate_upper(spark, sf_dir):
-    from spacy_llm_spark.operators import tasks
-
-    out = tasks.translate(
-        _docs(spark, sf_dir), model_spec={"name": "upper_translate"}, text_col="text"
-    )
-    return out.select("doc_id", "translation")
-
-
-def q_raw_echo(spark, sf_dir):
-    from spacy_llm_spark.operators import tasks
-
-    out = tasks.raw_prompt(
-        _docs(spark, sf_dir), model_spec={"name": "echo"}, text_col="text"
-    )
-    return out.select("doc_id", "llm_reply")
-
-
 def q_events_sessions(spark, sf_dir):
     """Session windows (10-minute inactivity gap) per user — the
     streaming-grade sessionization operator, runnable on static frames."""
@@ -2470,22 +2403,6 @@ def q_corpus_mix(spark, sf_dir):
     )
 
 
-def q_events_zorder_key(spark, sf_dir):
-    """Morton/Z-order key over (user_id, day) (functions/layout.py
-    zorder_key) — the OPTIMIZE ZORDER primitive: a pure shift/mask
-    codegen projection whose range layout gives BOTH columns zone-map
-    locality; the key is partitioning-independent, hence oracle-able."""
-    from spacy_llm_spark.functions.layout import zorder_key
-    from spacy_llm_spark.functions.timeutil import micros
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    mu = micros(F.col("ts"), events.schema["ts"].dataType)
-    day = F.floor(mu / F.lit(86400 * 1_000_000)).cast("long")
-    return events.select(
-        "event_id", zorder_key([F.col("user_id"), day], bits=16).alias("zkey")
-    )
-
-
 def q_er_match_scores(spark, sf_dir):
     """Fellegi–Sunter match weights over the SNM candidate pairs
     (operators/linkage.py): u estimated from the part table's value
@@ -2567,20 +2484,6 @@ def q_er_blocking_parts(spark, sf_dir):
 
     part = spark.read.parquet(f"{sf_dir}/part.parquet")
     return sorted_neighborhood_pairs(part, "p_partkey", "p_name", window=3)
-
-
-def q_events_gapfill(spark, sf_dir):
-    """Daily gap-fill + LOCF per user (operators/timeseries.py):
-    last event value per day on each user's min..max day grid, empty
-    days carried forward — keyed aggregates + sequence explode + one
-    keyed fill window; values carried, never computed, so floats cross
-    engines exactly."""
-    from spacy_llm_spark.operators.timeseries import gapfill_locf
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return gapfill_locf(
-        events, ["user_id"], "ts", ["value"], step_seconds=86400
-    )
 
 
 def q_kg_walks(spark, sf_dir):
@@ -2693,17 +2596,6 @@ def q_lang_confusion(spark, sf_dir):
     )
 
 
-def q_event_transitions(spark, sf_dir):
-    """First-order Markov transition counts of each user's event
-    sequence (operators/funnel.py event_transitions): one user-keyed
-    window pass + one |types|²-scale aggregation; event_id breaks
-    timestamp ties so the counts are fully deterministic."""
-    from spacy_llm_spark.operators.funnel import event_transitions
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return event_transitions(events, tiebreak_col="event_id")
-
-
 def q_docs_quality_deciles(spark, sf_dir):
     """Exact-quantile decile assignment over document length
     (operators/quantiles.py quantile_buckets): thresholds from ONE
@@ -2727,27 +2619,6 @@ def q_docs_skew_report(spark, sf_dir):
     return skew_report(_docs(spark, sf_dir), ["source"], top_n=10)
 
 
-def q_events_retention(spark, sf_dir):
-    """Weekly cohort retention (operators/funnel.py cohort_retention):
-    users bucketed by first-activity week, counted at each later week.
-    Activity collapses to the distinct (user, period) grid first, so
-    the cohort join runs user-scale."""
-    from spacy_llm_spark.operators.funnel import cohort_retention
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cohort_retention(events)
-
-
-def q_events_funnel(spark, sf_dir):
-    """Ordered funnel conversion view -> click -> purchase
-    (operators/funnel.py funnel_steps): earliest-completion semantics,
-    one user-keyed join per step over shrinking frames."""
-    from spacy_llm_spark.operators.funnel import funnel_steps
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return funnel_steps(events, ["view", "click", "purchase"])
-
-
 def q_cluster_prf(spark, sf_dir):
     """Pairwise clustering P/R/F1 (operators/scoring.py
     pairwise_cluster_prf) — the entity-resolution evaluation metric,
@@ -2768,55 +2639,6 @@ def q_cluster_bcubed(spark, sf_dir):
     from spacy_llm_spark.operators.scoring import bcubed_prf
 
     return bcubed_prf(_docs(spark, sf_dir), "lang", "source")
-
-
-def q_user_state_history(spark, sf_dir):
-    """SCD type-2 state history per user (operators/diff.py
-    scd2_compact): consecutive identical event_type states collapse
-    into (version, valid_from, valid_to, is_current) intervals — one
-    id-keyed window shuffle, change-point-scale output."""
-    from spacy_llm_spark.operators.diff import scd2_compact
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return scd2_compact(events, "user_id", "ts", ["event_type"])
-
-
-def q_user_state_history_incremental(spark, sf_dir):
-    """Incremental SCD2 maintenance (operators/diff.py scd2_apply):
-    events from Jan 25 on arrive as a later batch (a global time cut —
-    per-id in-order by construction, the CDC-feed contract scd2_apply
-    validates) and fold into the standing history by recompacting ONLY
-    touched ids; bit-equal to the full recompute, so this shares
-    q_user_state_history's oracle verbatim."""
-    from spacy_llm_spark.operators.diff import scd2_apply, scd2_compact
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    cut = F.lit("2024-01-25").cast("timestamp")
-    old = events.where(F.col("ts") < cut)
-    batch = events.where(F.col("ts") >= cut)
-    history = scd2_compact(old, "user_id", "ts", ["event_type"])
-    return scd2_apply(history, batch, "user_id", "ts", ["event_type"])
-
-
-def q_corpus_diff(spark, sf_dir):
-    """Snapshot CDC (operators/diff.py): two deterministic versions of
-    the corpus (a re-crawl that dropped doc_id%5==3, picked up
-    doc_id%7==0, and re-extracted doc_id%11==1 with different casing)
-    diffed into the added/removed/changed delta — ONE full-outer
-    id join, null-safe column comparison, delta-scale output."""
-    from spacy_llm_spark.operators.diff import snapshot_diff
-
-    docs = _docs(spark, sf_dir)
-    old = docs.where(F.col("doc_id") % 7 != 0)
-    new = docs.where(F.col("doc_id") % 5 != 3).withColumn(
-        "text",
-        F.when(F.col("doc_id") % 11 == 1, F.upper("text")).otherwise(
-            F.col("text")
-        ),
-    )
-    return snapshot_diff(
-        old, new, "doc_id", compare_cols=["text", "lang", "source", "n_chars"]
-    )
 
 
 def q_token_pmi(spark, sf_dir):
@@ -4226,10 +4048,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     induction, graph analytics, corpus
     hygiene (PII/decontam/quality), relevance scoring
     (BM25), sub-document span dedup, sampling, sequence packing,
-    quantiles+sketches, temporal joins, task-parity parsers,
-    windows/skew/agg, EL, multimodal.
+    quantiles+sketches, temporal joins, NER parsers/scorers
+    (token_count, ner_prf), windows/skew/agg, EL, multimodal.
     Variants whose family already has a stamped representative
-    (alternate task parsers, extra window shapes, exact-quantile twin,
+    (extra window shapes, exact-quantile twin,
     as-of variants, base fingerprints) live AFTER position 50 — still
     oracle-checked by scripts/check_oracles.py and the judge's full
     sweep. ADD NEW ENTRIES AFTER POSITION 50 unless they open a new
@@ -4328,7 +4150,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "profile_documents": q_profile_documents,
         # --- anomaly detection (z-score monitoring) ---
         # (substring_offsets moved below 50 to make room: the parser
-        # family keeps token_count/ner_prf/textcat_binary stamped)
+        # family keeps token_count/ner_prf stamped)
         "events_anomaly": q_events_anomaly,
         # --- sampling ---
         "stratified_sample": q_stratified_sample,
@@ -4341,9 +4163,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (events_in_windows moved below 50 in the stamped-window
         # re-curation: the temporal-join family keeps asof_latest_click)
         "asof_latest_click": q_asof_latest_click,
-        # --- task-parity parsers / scorers ---
-        # (textcat_binary moved below 50: parsers keep token_count +
-        # ner_prf stamped)
+        # --- NER parsers / scorers ---
         "token_count": q_token_count,
         "ner_prf": q_ner_prf,
         # --- windows / aggregation / skew ---
@@ -4370,7 +4190,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_ego_network": q_kg_ego_network,
         "kg_degree_histogram": q_kg_degree_histogram,
         "kg_bgp_bind_order": q_kg_bgp_bind_order,
-        "textcat_binary": q_textcat_binary,
         "events_in_windows": q_events_in_windows,
         "kg_msf": q_kg_msf,
         "kg_single_linkage": q_kg_single_linkage,
@@ -4382,8 +4201,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lsh_dedup_verified": q_lsh_dedup_verified,
         "kg_bfs_levels": q_kg_bfs_levels,
         "detect_language": q_detect_language,
-        # (lemma/sentiment are parse-family variants of textcat_binary;
-        # regional_revenue is a join-family variant of salted_repo_stats
+        # (regional_revenue is a join-family variant of salted_repo_stats
         # — swapped out in round 5 for the three new families above;
         # dedup_cluster_reps is the dedup family's 5th rep, swapped out
         # for the fuzzy-ER family; kg_clustering_coeff is the graph
@@ -4458,16 +4276,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_ppr": q_kg_ppr,
         "dedup_cluster_reps": q_dedup_cluster_reps,
         "fuzzy_name_pairs_incremental": q_fuzzy_name_pairs_incremental,
-        "lemma_identity": q_lemma_identity,
-        "sentiment_lexicon": q_sentiment_lexicon,
         "regional_revenue": q_regional_revenue,
         "distinct_tokens": q_distinct_tokens,
         "events_sliding": q_events_sliding,
         "jaccard_vs_probe": q_jaccard_vs_probe,
         "word_stats": q_word_stats,
-        "summary_head": q_summary_head,
-        "translate_upper": q_translate_upper,
-        "raw_echo": q_raw_echo,
         "events_sessions": q_events_sessions,
         "events_rollup": q_events_rollup,
         "order_revenue": q_order_revenue,
@@ -4565,21 +4378,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # text-analysis family variant (quality_score/detect_language
         # hold the family's stamped slots)
         "token_pmi": q_token_pmi,
-        # cache/CDC family variant (cache_probe_anti_join holds the
-        # family's stamped slot)
-        "corpus_diff": q_corpus_diff,
-        "user_state_history": q_user_state_history,
-        "user_state_history_incremental": q_user_state_history_incremental,
         # scorer family variant (ner_prf holds the stamped slot)
         "cluster_prf": q_cluster_prf,
         "cluster_bcubed": q_cluster_bcubed,
-        # event-analytics family variants (events_hourly holds the slot)
-        "events_retention": q_events_retention,
-        "events_funnel": q_events_funnel,
         # skew family variant (salted_repo_stats holds the stamped slot)
         "docs_skew_report": q_docs_skew_report,
-        # event-analytics + quantile family variants
-        "event_transitions": q_event_transitions,
+        # quantile + window family variants
         "docs_quality_deciles": q_docs_quality_deciles,
         "events_rolling": q_events_rolling,
         # classifier-evaluation variant (ner_prf holds the scorer slot)
@@ -4591,13 +4395,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_node2vec": q_kg_node2vec,
         "kg_edge_support": q_kg_edge_support,
         "kg_edge_support_incremental": q_kg_edge_support_incremental,
-        "events_gapfill": q_events_gapfill,
         "er_blocking_parts": q_er_blocking_parts,
         "kg_shortest_paths": q_kg_shortest_paths,
         "doc_keywords": q_doc_keywords,
         "er_match_scores": q_er_match_scores,
         "er_clusters": q_er_clusters,
-        "events_zorder_key": q_events_zorder_key,
         "corpus_mix": q_corpus_mix,
         # text-analysis family variant: RAG chunking
         "docs_chunks": q_docs_chunks,
@@ -5169,41 +4971,6 @@ def _kcore_unrolled_sql(k: int, rounds: int) -> str:
     return "\n".join(parts)
 
 
-_SCD2_SQL = """
-WITH obs AS (
-  SELECT user_id, ts, event_type FROM events WHERE ts IS NOT NULL
-), c AS (
-  SELECT user_id, ts, event_type,
-         (row_number() OVER w = 1
-          OR event_type IS DISTINCT FROM lag(event_type) OVER w) AS ch
-  FROM obs
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_type)
-), k AS (
-  SELECT user_id, ts, event_type FROM c WHERE ch
-)
-SELECT user_id,
-       CAST(row_number() OVER w2 AS INT) AS version,
-       ts AS valid_from,
-       lead(ts) OVER w2 AS valid_to,
-       (lead(ts) OVER w2 IS NULL) AS is_current,
-       event_type
-FROM k
-WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_type)
-"""
-
-
-def _zorder_sql(exprs: list, bits: int) -> str:
-    """Morton interleave as the same shift/mask sum zorder_key builds —
-    one term per (column, bit), pure integer arithmetic."""
-    n = len(exprs)
-    terms = [
-        f"(((({e}) >> {i}) & 1) << {i * n + ci})"
-        for ci, e in enumerate(exprs)
-        for i in range(bits)
-    ]
-    return " + ".join(terms)
-
-
 def _sssp_unrolled_sql(rounds: int, seed_pred: str) -> str:
     """Bellman–Ford unrolled one min-relaxation CTE per round (chained
     MATERIALIZED CTEs like kcore/bfs); weight = len(pred), integer-
@@ -5687,38 +5454,6 @@ SELECT tp, n_pred, n_gold,
        round(CAST(tp AS DOUBLE) / n_gold, 6) AS recall
 FROM counts
 """,
-        "textcat_binary": """
-SELECT doc_id, 'SparkDoc' AS label,
-       CAST(CASE WHEN list_contains(string_split(text, ' '), 'spark')
-            THEN 1.0 ELSE 0.0 END AS DOUBLE) AS score
-FROM documents
-""",
-        "lemma_identity": """
-SELECT doc_id,
-       generate_subscripts(string_split(text, ' '), 1) AS pos,
-       unnest(string_split(text, ' ')) AS token,
-       unnest(string_split(text, ' ')) AS lemma
-FROM documents
-""",
-        "sentiment_lexicon": """
-WITH counts AS (
-  SELECT doc_id,
-    len(list_filter(string_split(text, ' '), t -> t = 'fast')) AS np,
-    len(list_filter(string_split(text, ' '), t -> t = 'slow')) AS nn
-  FROM documents
-)
-SELECT doc_id,
-  CASE WHEN np + nn = 0 THEN 0.5
-       ELSE round(0.5 + 0.5 * (np - nn) / (np + nn), 4) END AS sentiment
-FROM counts
-""",
-        "summary_head": """
-SELECT doc_id,
-       array_to_string(list_slice(string_split(text, ' '), 1, 8), ' ') AS summary
-FROM documents
-""",
-        "translate_upper": "SELECT doc_id, upper(text) AS translation FROM documents",
-        "raw_echo": "SELECT doc_id, text AS llm_reply FROM documents",
         "events_sessions": """
 WITH ordered AS (
   SELECT user_id, epoch(ts) AS e,
@@ -7685,16 +7420,6 @@ GROUP BY 1, 2
         "kg_shortest_paths": m
         + _EDGES_CTE
         + _sssp_unrolled_sql(4, "v LIKE 'K1%'"),
-        # Morton key: identical shift/mask sum, generated by _zorder_sql
-        "events_zorder_key": f"""
-SELECT event_id,
-       CAST({_zorder_sql(
-           ["CAST(user_id AS BIGINT)",
-            "CAST(floor(epoch(ts) / 86400) AS BIGINT)"],
-           16,
-       )} AS BIGINT) AS zkey
-FROM events
-""",
         # Fellegi-Sunter over the SNM pairs: u recomputed in SQL from the
         # same exact-integer collision sums; weights quantized 10 dp
         # pre-sum exactly like operators/linkage.py
@@ -7771,32 +7496,6 @@ WITH r AS (
 SELECT a.id AS id_a, b.id AS id_b, a.key AS key_a, b.key AS key_b,
        CAST(b.rk - a.rk AS INT) AS rank_gap
 FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
-""",
-        # gap-fill: last-in-slot via DESC row_number == engine max-struct;
-        # LOCF via last_value IGNORE NULLS over the same grid
-        "events_gapfill": """
-WITH o AS (
-  SELECT user_id, value,
-         CAST(floor(epoch(ts) / 86400) * 86400 AS BIGINT) AS slot,
-         CAST(epoch_us(ts) AS BIGINT) AS mu
-  FROM events WHERE ts IS NOT NULL
-), lis AS (
-  SELECT user_id, slot, value FROM (
-    SELECT user_id, slot, value,
-           row_number() OVER (PARTITION BY user_id, slot
-                              ORDER BY mu DESC, value DESC) AS rn
-    FROM o) WHERE rn = 1
-), b AS (
-  SELECT user_id, min(slot) AS mn, max(slot) AS mx FROM lis GROUP BY user_id
-), grid AS (
-  SELECT user_id, unnest(generate_series(mn, mx, 86400)) AS slot FROM b
-)
-SELECT g.user_id, g.slot,
-       (l.user_id IS NOT NULL) AS observed,
-       last_value(l.value IGNORE NULLS) OVER (
-         PARTITION BY g.user_id ORDER BY g.slot
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
-FROM grid g LEFT JOIN lis l ON l.user_id = g.user_id AND l.slot = g.slot
 """,
         "kg_ppr": m
         + _EDGES_CTE
@@ -8047,20 +7746,6 @@ FROM hourly
 WINDOW w AS (PARTITION BY user_id ORDER BY hour_epoch
              ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
 """,
-        "event_transitions": """
-WITH seq AS (
-  SELECT event_type AS from_type,
-         lead(event_type) OVER (
-           PARTITION BY user_id ORDER BY ts, event_id) AS to_type
-  FROM events
-), c AS (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-  FROM seq WHERE to_type IS NOT NULL GROUP BY 1, 2
-)
-SELECT from_type, to_type, n,
-       round(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
-FROM c
-""",
         "docs_quality_deciles": """
 WITH th AS (
   SELECT quantile_cont(n_chars,
@@ -8089,37 +7774,6 @@ SELECT key, n, round(n / tot.total, 6) AS share,
        CAST(row_number() OVER (ORDER BY n DESC, key ASC) AS BIGINT) AS rank
 FROM counts, tot
 ORDER BY n DESC, key ASC LIMIT 10
-""",
-        "events_retention": """
-WITH act AS (
-  SELECT DISTINCT user_id AS u,
-         CAST(floor(epoch(ts) / 604800) AS BIGINT) AS period
-  FROM events
-), cohorts AS (
-  SELECT u, min(period) AS cohort_period FROM act GROUP BY u
-)
-SELECT c.cohort_period, a.period - c.cohort_period AS period_offset,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM act a JOIN cohorts c USING (u)
-GROUP BY 1, 2
-""",
-        "events_funnel": """
-WITH s0 AS (
-  SELECT user_id AS u, min(ts) AS t FROM events
-  WHERE event_type = 'view' GROUP BY 1
-), s1 AS (
-  SELECT e.user_id AS u, min(e.ts) AS t FROM events e
-  JOIN s0 ON s0.u = e.user_id AND e.ts >= s0.t
-  WHERE e.event_type = 'click' GROUP BY 1
-), s2 AS (
-  SELECT e.user_id AS u, min(e.ts) AS t FROM events e
-  JOIN s1 ON s1.u = e.user_id AND e.ts >= s1.t
-  WHERE e.event_type = 'purchase' GROUP BY 1
-)
-SELECT 'view' AS step, CAST(0 AS BIGINT) AS step_idx,
-       (SELECT CAST(count(*) AS BIGINT) FROM s0) AS n_users
-UNION ALL SELECT 'click', 1, (SELECT count(*) FROM s1)
-UNION ALL SELECT 'purchase', 2, (SELECT count(*) FROM s2)
 """,
         "cluster_prf": """
 WITH a AS (
@@ -8182,31 +7836,6 @@ SELECT n_items,
          AS bcubed_f1
 FROM t
 """,
-        "corpus_diff": """
-WITH old AS (
-  SELECT * FROM documents WHERE doc_id % 7 <> 0
-), new AS (
-  SELECT doc_id,
-         CASE WHEN doc_id % 11 = 1 THEN upper(text) ELSE text END AS text,
-         lang, source, n_chars
-  FROM documents WHERE doc_id % 5 <> 3
-)
-SELECT coalesce(o.doc_id, n.doc_id) AS doc_id,
-       CASE WHEN o.doc_id IS NULL THEN 'added'
-            WHEN n.doc_id IS NULL THEN 'removed'
-            ELSE 'changed' END AS status
-FROM old o FULL OUTER JOIN new n ON n.doc_id = o.doc_id
-WHERE o.doc_id IS NULL OR n.doc_id IS NULL
-   OR NOT (o.text IS NOT DISTINCT FROM n.text
-       AND o.lang IS NOT DISTINCT FROM n.lang
-       AND o.source IS NOT DISTINCT FROM n.source
-       AND o.n_chars IS NOT DISTINCT FROM n.n_chars)
-""",
-        # SCD2: change-point detection + interval close in SQL windows;
-        # the incremental query shares this oracle VERBATIM (scd2_apply
-        # is bit-equal to full recompaction — the contract under test)
-        "user_state_history": _SCD2_SQL,
-        "user_state_history_incremental": _SCD2_SQL,
         # independent cross-check by construction: the oracle generates
         # pairs with the naive positions SELF-JOIN the engine avoids
         "token_pmi": """

@@ -469,23 +469,7 @@ def main():
         explain_str(zscore_outliers(hourly, "n", ["user_id"], threshold=2.0)),
     ))
 
-    # 25. snapshot diff: one full-outer id join, comparison in projection
-    from spacy_llm_spark.operators.diff import snapshot_diff
-
-    old_snap = docs.where(F.col("doc_id") % 7 != 0)
-    new_snap = docs.where(F.col("doc_id") % 5 != 3)
-    sections.append((
-        "Snapshot diff (CDC): one full-outer id join, delta-scale output",
-        "The whole diff is a single full-outer SortMergeJoin on the id "
-        "(co-partition both snapshots with a bucketed-by-id layout and "
-        "the Exchanges elide); change detection is the null-safe "
-        "comparison inside the Project/Filter above it — no fingerprint "
-        "column is computed or stored, no second pass, and unchanged "
-        "rows die in the filter so the output is delta-scale.",
-        explain_str(snapshot_diff(old_snap, new_snap, "doc_id")),
-    ))
-
-    # 26. co-occurrence PMI: windowed projection, never a self-join
+    # 25. co-occurrence PMI: windowed projection, never a self-join
     from spacy_llm_spark.functions.cooccur import cooccurrence_pmi
 
     sections.append((
@@ -498,7 +482,7 @@ def main():
         explain_str(cooccurrence_pmi(docs, window=2, min_count=10)),
     ))
 
-    # 27. skew report: key aggregate + broadcast totals + TakeOrdered
+    # 26. skew report: key aggregate + broadcast totals + TakeOrdered
     from spacy_llm_spark.operators.skew import skew_report
 
     sections.append((
@@ -511,7 +495,7 @@ def main():
         explain_str(skew_report(docs, ["source"], top_n=10)),
     ))
 
-    # 28. Adamic–Adar: equi-joins only, aggregate-fused scoring
+    # 27. Adamic–Adar: equi-joins only, aggregate-fused scoring
     from spacy_llm_spark.operators.graph import adamic_adar
 
     edges_aa = spark.createDataFrame(
@@ -529,7 +513,7 @@ def main():
         explain_str(adamic_adar(edges_aa, min_common=1)),
     ))
 
-    # 29. label propagation: per-round argmax is ONE two-level aggregate.
+    # 28. label propagation: per-round argmax is ONE two-level aggregate.
     # cut_lineage (localCheckpoint per round) would collapse the explain
     # to a Scan ExistingRDD — disable it for the CAPTURE only, so the
     # true single-round plan is visible.
@@ -567,7 +551,7 @@ def main():
         _fs.cut_lineage = _real_cut
         _graph_mod.fs.cut_lineage = _real_cut
 
-    # 30. DSIR: bucket-scale ratio map broadcast into the corpus scan
+    # 29. DSIR: bucket-scale ratio map broadcast into the corpus scan
     from spacy_llm_spark.operators.importance import dsir_top_k
 
     sections.append((
@@ -582,7 +566,7 @@ def main():
         explain_str(dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=100)),
     ))
 
-    # 31. exact Jaccard self-join: prefix equi-join, no rank window
+    # 30. exact Jaccard self-join: prefix equi-join, no rank window
     from spacy_llm_spark.operators.setjoin import jaccard_join_exact
 
     sections.append((

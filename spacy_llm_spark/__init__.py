@@ -18,9 +18,9 @@ Layout
                           mentions/links/edges tables, vertices, canonical edges
 - ``operators.*``         graph / reason / dedup / similarity / audit /
                           fusion / temporal / kgembed (legacy driver queries)
-- other ``operators.*`` / ``functions.*``, ``examples``, ``registry``
-                          sampling, packing, joins, sketches, task stages,
-                          ...: the legacy driver's non-KG queries and bench rows
+- other ``operators.*`` / ``functions.*``
+                          sampling, packing, joins, sketches, ...: the
+                          legacy driver's non-KG queries and bench rows
 - ``functions.response_parsers``   response-parser kernels (NER, REL, EL)
 - ``functions.normalizers`` label normalizers
 - ``functions.text`` / ``functions.rdf``  text analysis, RDF serialization

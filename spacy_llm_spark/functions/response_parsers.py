@@ -12,10 +12,6 @@ Reference semantics re-derived from:
                              tasks/span/examples.py:25-58 (SpanReason line grammar)
 - REL JSON lines             spacy_llm/tasks/rel/parser.py:11-40, items.py:4-14
 - EL ::: <QID> solutions     spacy_llm/tasks/entity_linker/parser.py:10-54
-- TextCat                    spacy_llm/tasks/textcat/parser.py:9-53
-- Lemma                      spacy_llm/tasks/lemma/parser.py:8-37
-- Sentiment                  spacy_llm/tasks/sentiment/parser.py:8-29
-- Summarization/Raw          spacy_llm/tasks/summarization/parser.py:8-24
 """
 
 from __future__ import annotations
@@ -392,55 +388,3 @@ def attach_el_solutions(
         return None
     it = iter(solutions)
     return [next(it) if in_prompt else NIL for in_prompt in ent_in_prompt]
-
-
-# --------------------------------------------------------------------------
-# P7-P10: TextCat / Lemma / Sentiment / Summarization parses
-# --------------------------------------------------------------------------
-
-
-def parse_textcat_response(
-    response: str,
-    label_dict: Dict[str, str],
-    *,
-    use_binary: bool = False,
-    exclusive_classes: bool = False,
-    normalizer: Callable[[str], str] | None = None,
-) -> Dict[str, float]:
-    norm = normalizer or lowercase_normalizer
-    response = response.strip()
-    if use_binary:
-        label = list(label_dict.values())[0]
-        return {label: 1.0 if response.upper() == "POS" else 0.0}
-    categories = {label: 0.0 for label in label_dict.values()}
-    pred_labels = response.split(",")
-    if exclusive_classes and len(pred_labels) > 1:
-        pred_labels = []
-    for pred in pred_labels:
-        key = norm(pred.strip())
-        if key in label_dict:
-            categories[label_dict[key]] = 1.0
-    return categories
-
-
-def parse_lemma_response(response: str) -> List[List[str]]:
-    """``word: lemma`` lines -> [[word, lemma], ...]; malformed dropped."""
-    rows = [
-        [part.strip() for part in pr.split(":")]
-        for pr in response.replace("Lemmatized text:", "")
-        .replace("'''", "")
-        .strip()
-        .split("\n")
-    ]
-    return [r for r in rows if len(r) == 2]
-
-
-def parse_sentiment_response(response: str) -> Optional[float]:
-    try:
-        return float("".join(response.replace("Answer:", "").strip().split()))
-    except ValueError:
-        return None
-
-
-def parse_summarization_response(response: str) -> str:
-    return response.replace("'''", "").strip()

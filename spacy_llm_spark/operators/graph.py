@@ -4763,45 +4763,3 @@ def single_linkage_clusters(
     return all_nodes.join(cc, "node", "left").select(
         "node", F.coalesce("cluster", "node").alias("cluster")
     )
-
-
-def condensation(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    max_rounds: int = 12,
-    max_iter: int = 60,
-) -> DataFrame:
-    """The condensation DAG: every strongly connected component
-    collapsed to its min-label representative, edges relabeled and
-    deduplicated, intra-SCC edges dropped. The output is acyclic BY
-    CONSTRUCTION (the classic SCC condensation theorem), which is what
-    makes ``topological_levels`` total over it — the layer-a-cyclic-
-    dependency-graph recipe the layering operator's cycle refusal
-    points at.
-
-    One SCC labeling (``strongly_connected_components``) + two
-    vertex-keyed label joins + one distinct; the label map is
-    vertex-scale. Output columns keep the input names.
-    """
-    labels = strongly_connected_components(
-        edges, src=src, dst=dst, max_rounds=max_rounds, max_iter=max_iter
-    )
-    return (
-        edges.select(src, dst)
-        .join(
-            labels.select(
-                F.col("vertex").alias(src), F.col("scc").alias("_ssrc")
-            ),
-            src,
-        )
-        .join(
-            labels.select(
-                F.col("vertex").alias(dst), F.col("scc").alias("_sdst")
-            ),
-            dst,
-        )
-        .where(F.col("_ssrc") != F.col("_sdst"))
-        .select(F.col("_ssrc").alias(src), F.col("_sdst").alias(dst))
-        .distinct()
-    )

@@ -1,4 +1,4 @@
-"""Evaluation operators (A8/A9/A10) as two-phase Spark aggregations.
+"""Evaluation operators (A8/A9) as two-phase Spark aggregations.
 
 NER P/R/F semantics pinned by tests/tasks/test_ner.py:697-718: a predicted
 mention is correct iff (doc, start, end, label) matches a gold mention;
@@ -52,40 +52,6 @@ def score_links(
     gold_pos = gold.where(F.col(kb_col) != NIL).select(*keys, kb_col).distinct()
     tp = pred_pos.join(gold_pos, on=[*keys, kb_col], how="inner").count()
     return prf(tp, pred_pos.count(), gold_pos.count())
-
-
-def score_cats(
-    predicted: DataFrame,
-    gold: DataFrame,
-    keys: Sequence[str] = ("doc_id",),
-    label_col: str = "label",
-    score_col: str = "score",
-    threshold: float = 0.5,
-) -> Tuple[float, float, float]:
-    """A10: TextCat micro P/R/F over flattened (doc, label, score) rows —
-    positive iff score >= threshold (spacy score_cats micro_* semantics)."""
-    pred_pos = (
-        predicted.where(F.col(score_col) >= threshold)
-        .select(*keys, label_col)
-        .distinct()
-    )
-    gold_pos = (
-        gold.where(F.col(score_col) >= threshold).select(*keys, label_col).distinct()
-    )
-    tp = pred_pos.join(gold_pos, on=[*keys, label_col], how="inner").count()
-    return prf(tp, pred_pos.count(), gold_pos.count())
-
-
-def score_triples(
-    predicted: DataFrame,
-    gold: DataFrame,
-    keys: Sequence[str] = ("doc_id", "subj", "pred", "obj"),
-) -> Tuple[float, float, float]:
-    """Triple-level P/R/F — the BASELINE.json >=0.95 parity metric."""
-    p = predicted.select(*keys).distinct()
-    g = gold.select(*keys).distinct()
-    tp = p.join(g, on=list(keys), how="inner").count()
-    return prf(tp, p.count(), g.count())
 
 
 def pairwise_cluster_prf(

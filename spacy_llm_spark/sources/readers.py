@@ -1,6 +1,6 @@
 """Input readers (S1-S5 analogs).
 
-Few-shot example files and templates are prompt *constants*: they are read
+Few-shot example files are prompt *constants*: they are read
 driver-side and broadcast into stage kernels, never joined against the
 corpus (registry/reader.py:8-87 semantics — including the try-all-formats
 fallback of fewshot_reader).
@@ -11,11 +11,6 @@ from __future__ import annotations
 import json
 from pathlib import Path
 from typing import List, Union
-
-
-def file_reader(path: Union[str, Path]) -> str:
-    """S2: read a template file as a string (registry/reader.py:8-19)."""
-    return Path(path).read_text()
 
 
 def fewshot_reader(path: Union[str, Path]) -> List[dict]:
@@ -83,7 +78,6 @@ def load_examples_for_task(path: Union[str, Path], task: str) -> List[dict]:
         "ner": {"text", "spans"},
         "rel": {"text", "ents", "relations"},
         "entity_linker": {"text", "mentions", "entity_ids", "solutions"},
-        "textcat": {"text"},
     }.get(task, {"text"})
     examples = fewshot_reader(path)
     out = []

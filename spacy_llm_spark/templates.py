@@ -379,130 +379,7 @@ def render_el_v1_reference(
     return out
 
 
-_LEMMA_V1_HEADER = (
-    "You are an expert lemmatization system. Your task is to accept Text as "
-    "input and identify the lemma for every token in the Text.\n"
-    "Consider that contractions represent multiple words. Each word in a "
-    "contraction should be annotated with its lemma separately.\n"
-    "Output each original word on a new line, followed by a colon and the "
-    "word's lemma - like this:\n'''\n"
-    "Word1: Lemma of Word1\n"
-    "Word2: Lemma of Word2\n'''\n"
-    "Include the final punctuation token in this list.\n"
-    'Prefix with your output with "Lemmatized text".\n'
-)
 _EXAMPLES_GUIDE = "Below are some examples (only use these as a guide):\n"
-
-
-def render_lemma_v1_reference(
-    text: str, prompt_examples: Optional[List[dict]] = None
-) -> str:
-    """Byte-parity render of lemma.v1.jinja. ``prompt_examples``: list of
-    {"text": ..., "lemmas": [{token: lemma}, ...]}."""
-    out = _LEMMA_V1_HEADER
-    if prompt_examples:
-        out += "\n" + _EXAMPLES_GUIDE
-        for ex in prompt_examples:
-            out += f"\nText:\n'''\n{ex['text']}\n'''\nLemmas:\n'''"
-            for lemma in ex["lemmas"]:
-                for k, v in lemma.items():
-                    out += f"\n{k}: {v}"
-            out += "\n'''\n"
-        out += "\n"
-    else:
-        out += "\n\n"
-    out += f"Here is the text that needs to be lemmatized:\n'''\n{text}\n'''"
-    return out
-
-
-def render_summarization_v1_reference(
-    text: str,
-    max_n_words: Optional[int] = None,
-    prompt_examples: Optional[List[dict]] = None,
-) -> str:
-    """Byte-parity render of summarization.v1.jinja. ``prompt_examples``:
-    list of {"text": ..., "summary": ...}."""
-    out = (
-        "You are an expert summarization system. Your task is to accept Text "
-        "as input and summarize the Text in a concise way."
-    )
-    if max_n_words:
-        out += (
-            f"\nThe summary must not, under any circumstances, contain more "
-            f"than {max_n_words} words."
-        )
-    if prompt_examples:
-        out += "\n" + _EXAMPLES_GUIDE
-        for ex in prompt_examples:
-            out += f"\nText:\n'''\n{ex['text']}\n'''\nSummary:\n'''\n{ex['summary']}\n'''\n"
-        out += "\n"
-    else:
-        out += "\n"
-    out += f"Here is the Text that needs to be summarized:\n'''\n{text}\n'''\nSummary:"
-    return out
-
-
-def render_sentiment_v1_reference(
-    text: str, prompt_examples: Optional[List[dict]] = None
-) -> str:
-    """Byte-parity render of sentiment.v1.jinja. ``prompt_examples``: list
-    of {"text": ..., "score": ...}."""
-    out = (
-        "Analyse whether the text surrounded by ''' is positive or negative. "
-        "Respond with a float value between 0 and 1. 1 represents an "
-        "exclusively positive sentiment, 0 an exclusively negative sentiment."
-    )
-    if prompt_examples:
-        out += "\n" + _EXAMPLES_GUIDE
-        for ex in prompt_examples:
-            out += f"\nText:\n'''\n{ex['text']}\n'''\nAnswer: {ex['score']}\n"
-        out += "\n"
-    else:
-        out += "\n\n"
-    out += f"Text:\n'''\n{text}\n'''\nAnswer:"
-    return out
-
-
-def render_translation_v1_reference(
-    text: str,
-    target_lang: str,
-    source_lang: Optional[str] = None,
-    prompt_examples: Optional[List[dict]] = None,
-) -> str:
-    """Byte-parity render of translation.v1.jinja. ``prompt_examples``:
-    list of {"text": ..., "translation": ...}."""
-    if source_lang:
-        out = f'Translate the text after "Text:" from {source_lang} to {target_lang}.\n\n'
-    else:
-        out = f'\nTranslate the text after "Text:" to {target_lang}.\n\n'
-    out += 'Respond after "Translation:" with nothing but the translated text.'
-    if prompt_examples:
-        out += "\n" + _EXAMPLES_GUIDE
-        for ex in prompt_examples:
-            out += f"\nText:\n{ex['text']}\nTranslation:\n{ex['translation']}\n"
-        out += "\n"
-    else:
-        out += "\n\n"
-    out += f"Text:\n{text}\nTranslation:"
-    return out
-
-
-def render_raw_v1_reference(
-    text: str, prompt_examples: Optional[List[dict]] = None
-) -> str:
-    """Byte-parity render of raw.v1.jinja. ``prompt_examples``: list of
-    {"text": ..., "reply": ...}."""
-    if prompt_examples:
-        out = _EXAMPLES_GUIDE
-        for ex in prompt_examples:
-            out += f"\nText:\n{ex['text']}\nReply:\n{ex['reply']}\n"
-        out += "\n"
-    else:
-        out = "\n"
-    out += f"Text:\n{text}\nReply:"
-    return out
-
-
 _NER_V2_HEADER = (
     "You are an expert Named Entity Recognition (NER) system. Your task "
     "is to accept Text as input and extract named entities for the set "
@@ -609,184 +486,6 @@ def render_spancat_v2_reference(
         prompt_examples=prompt_examples,
         _header=_SPANCAT_V2_HEADER,
     )
-
-
-_TEXTCAT_SYSTEM_HEADER = (
-    "You are an expert Text Classification system. Your task is to "
-    "accept Text as input\nand provide a category for the text based on "
-    "the predefined labels.\n\n"
-)
-
-
-def _render_textcat_v12(
-    text: str,
-    labels: Sequence[str],
-    exclusive_classes: bool,
-    allow_none: bool,
-    prompt_examples: Optional[List[dict]],
-    header: str,
-    strict: bool,
-) -> str:
-    out = header
-    if len(labels) == 1:
-        label = labels[0]
-        out += (
-            f"Classify whether the text below belongs to the {label} "
-            f"category or not.\n"
-            f"If it is a {label}, answer `POS`. If it is not a {label}, "
-            f"answer `NEG`.\n"
-        )
-        if strict:
-            out += (
-                "Do not put any other text in your answer, only one of 'POS' "
-                "or 'NEG' with nothing before or after.\n"
-            )
-    else:
-        out += (
-            "Classify the text below to any of the following labels: "
-            + ", ".join(labels)
-            + "\n"
-        )
-        if not strict:  # v1 keeps a blank line the v2 trim removed
-            out += "\n"
-        if exclusive_classes:
-            out += (
-                "The task is exclusive, so only choose one label from what I "
-                "provided.\n"
-            )
-            if strict:
-                out += (
-                    "Do not put any other text in your answer, only one of "
-                    "the provided labels with nothing before or after.\n"
-                )
-        else:
-            out += (
-                "The task is non-exclusive, so you can provide more than one "
-                "label as long as\nthey're comma-delimited. For example: "
-                "Label1, Label2, Label3.\n"
-            )
-            if strict:
-                out += (
-                    "Do not put any other text in your answer, only one or "
-                    "more of the provided labels with nothing before or "
-                    "after.\n"
-                )
-            if allow_none:
-                out += (
-                    "If the text cannot be classified into any of the "
-                    "provided labels, answer `==NONE==`.\n"
-                )
-    if prompt_examples:
-        out += _EXAMPLES_GUIDE + "\n"
-        for ex in prompt_examples:
-            out += f"\nText:\n'''\n{ex['text']}\n'''\n\n{ex['answer']}\n"
-        out += "\n"
-    out += f"\nHere is the text that needs classification\n\n\nText:\n'''\n{text}\n'''"
-    return out
-
-
-def render_textcat_v1_reference(
-    text: str,
-    labels: Sequence[str],
-    exclusive_classes: bool = False,
-    allow_none: bool = False,
-    prompt_examples: Optional[List[dict]] = None,
-) -> str:
-    """Byte-parity render of textcat.v1.jinja."""
-    return _render_textcat_v12(
-        text, labels, exclusive_classes, allow_none, prompt_examples,
-        header="", strict=False,
-    )
-
-
-def render_textcat_v2_reference(
-    text: str,
-    labels: Sequence[str],
-    exclusive_classes: bool = False,
-    allow_none: bool = False,
-    prompt_examples: Optional[List[dict]] = None,
-) -> str:
-    """Byte-parity render of textcat.v2.jinja."""
-    return _render_textcat_v12(
-        text, labels, exclusive_classes, allow_none, prompt_examples,
-        header=_TEXTCAT_SYSTEM_HEADER, strict=True,
-    )
-
-
-def render_textcat_v3_reference(
-    text: str,
-    labels: Sequence[str],
-    exclusive_classes: bool = False,
-    allow_none: bool = False,
-    label_definitions: Optional[Dict[str, str]] = None,
-    prompt_examples: Optional[List[dict]] = None,
-) -> str:
-    """Byte-parity render of textcat.v3.jinja (binary / exclusive /
-    non-exclusive branches). ``prompt_examples``: list of
-    {"text": ..., "answer": ...}."""
-    out = (
-        "You are an expert Text Classification system. Your task is to "
-        "accept Text as input\nand provide a category for the text based on "
-        "the predefined labels.\n\n"
-    )
-    if len(labels) == 1:
-        label = labels[0]
-        out += (
-            f"Classify whether the text below belongs to the {label} "
-            f"category or not.\n"
-            f"If it is a {label}, answer `POS`. If it is not a {label}, "
-            f"answer `NEG`.\n"
-            "Do not put any other text in your answer, only one of 'POS' or "
-            "'NEG' with nothing before or after.\n"
-        )
-    else:
-        out += (
-            "Classify the text below to any of the following labels: "
-            + ", ".join(labels)
-            + "\n\n"
-        )
-        if exclusive_classes:
-            out += (
-                "The task is exclusive, so only choose one label from what I "
-                "provided.\n"
-                "Do not put any other text in your answer, only one of the "
-                "provided labels with nothing before or after.\n"
-            )
-        else:
-            out += (
-                "The task is non-exclusive, so you can provide more than one "
-                "label as long as\nthey're comma-delimited. For example: "
-                "Label1, Label2, Label3.\n"
-                "Do not put any other text in your answer, only one or more "
-                "of the provided labels with nothing before or after.\n"
-            )
-            if allow_none:
-                out += (
-                    "If the text cannot be classified into any of the "
-                    "provided labels, answer `==NONE==`.\n"
-                )
-    if label_definitions:
-        out += (
-            "\nBelow are definitions of each label to help aid you in "
-            "correctly classifying the text.\n"
-            "Assume these definitions are written by an expert and follow "
-            "them closely.\n\n"
-        )
-        for label, definition in label_definitions.items():
-            out += f"{label}: {definition}\n"
-        if not prompt_examples:
-            out += "\n"
-    if prompt_examples:
-        # the single-label branch's tighter whitespace trim puts the guide
-        # line flush against the instructions and pads after it instead
-        binary = len(labels) == 1
-        out += ("" if binary and not label_definitions else "\n") + _EXAMPLES_GUIDE
-        out += "\n" if (binary or label_definitions) else ""
-        for ex in prompt_examples:
-            out += f"\nText:\n'''\n{ex['text']}\n'''\n\n{ex['answer']}\n"
-        out += "\n"
-    out += f"\nHere is the text that needs classification\n\n\nText:\n'''\n{text}\n'''"
-    return out
 
 
 def extract_doc_from_prompt(prompt: str) -> str:

@@ -35,11 +35,6 @@ def tokenize(text: str) -> List[Span]:
     return [m.span() for m in _TOKEN_RE.finditer(text)]
 
 
-def tokenize_words(text: str) -> List[str]:
-    """Token surface forms, in order."""
-    return _TOKEN_RE.findall(text)
-
-
 def align_char_span(
     tokens: List[Span],
     start: int,

@@ -1,5 +1,4 @@
-"""DAG layering and cycle condensation (operators/graph.py:
-topological_levels, condensation)."""
+"""DAG layering (operators/graph.py: topological_levels)."""
 
 import pytest
 
@@ -45,44 +44,3 @@ def test_topological_levels_max_rounds_raises(spark):
     e = _edges(spark, [("a", "b"), ("b", "c"), ("c", "d")])
     with pytest.raises(RuntimeError, match="max_rounds"):
         topological_levels(e, max_rounds=2)
-
-
-# --- condensation + layering over cyclic graphs ----------------------------
-
-
-def test_condensation_collapses_cycles_to_dag(spark):
-    from spacy_llm_spark.operators.graph import condensation
-
-    # cycle {a,b,c} -> d -> cycle {e,f}; plus d -> a back-edge? no: keep DAG
-    e = _edges(
-        spark,
-        [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
-         ("d", "e"), ("e", "f"), ("f", "e")],
-    )
-    got = sorted(map(tuple, condensation(e).collect()))
-    # SCCs: {a,b,c} -> 'a', {d} -> 'd', {e,f} -> 'e'
-    assert got == [("a", "d"), ("d", "e")]
-
-
-def test_condensation_then_layering_totalizes_cyclic_graphs(spark):
-    """topological_levels refuses cycles; over the condensation it is
-    total — the documented recipe."""
-    from spacy_llm_spark.operators.graph import condensation
-
-    e = _edges(
-        spark,
-        [("a", "b"), ("b", "a"), ("b", "c"), ("c", "d"), ("d", "c")],
-    )
-    with pytest.raises(ValueError, match="cycle"):
-        topological_levels(e).collect()
-    cond = condensation(e)
-    got = {r.vertex: r.level for r in topological_levels(cond).collect()}
-    assert got == {"a": 0, "c": 1}
-
-
-def test_condensation_pure_dag_unchanged(spark):
-    from spacy_llm_spark.operators.graph import condensation
-
-    e = _edges(spark, [("a", "b"), ("b", "c"), ("a", "c")])
-    got = sorted(map(tuple, condensation(e).collect()))
-    assert got == [("a", "b"), ("a", "c"), ("b", "c")]

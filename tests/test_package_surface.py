@@ -5,8 +5,11 @@
 - Every ``spacy_llm_spark`` import in the driver files resolves, including
   function-level imports inside queries nobody calls in tier-1, and every
   ``oracle_sql()`` key names a ``queries()`` entry.
+- Every module under ``spacy_llm_spark/`` is reached by imports from the
+  KG job (``pipeline``) or a driver file; a module only tests import is
+  not part of the product.
 
-Both checks are static or run in a fresh interpreter; neither starts Spark.
+The checks are static or run in a fresh interpreter; none starts Spark.
 """
 
 import ast
@@ -122,6 +125,31 @@ def _top_level_names(path):
     return names
 
 
+def _package_imports(tree, package=None):
+    """``(lineno, module, names, asname)`` for every ``spacy_llm_spark``
+    import in a parsed file, function-level ones included: one entry per
+    module of an ``import`` statement (``names`` None, ``asname`` its
+    alias) and one per ``from`` statement (``names`` its ``ast.alias``
+    list). Relative imports resolve against ``package``, the importing
+    module's package; files outside the package pass None."""
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PKG:
+                    yield node.lineno, a.name, None, a.asname
+        elif isinstance(node, ast.ImportFrom):
+            if node.level:
+                if package is None:
+                    continue
+                parts = package.split(".")
+                parts = parts[: len(parts) - node.level + 1]
+                mod = ".".join(parts + ([node.module] if node.module else []))
+            else:
+                mod = node.module or ""
+            if mod.split(".")[0] == PKG:
+                yield node.lineno, mod, node.names, None
+
+
 def _dangling_imports(path):
     """Unresolvable ``spacy_llm_spark`` imports in one file, plus
     ``alias.attr`` uses of an imported package module whose attribute the
@@ -130,30 +158,22 @@ def _dangling_imports(path):
         tree = ast.parse(f.read())
     problems = []
     module_aliases = {}  # local name -> package modules it is bound to
-    for node in ast.walk(tree):
-        if isinstance(node, ast.Import):
-            for a in node.names:
-                if a.name.split(".")[0] != PKG:
-                    continue
-                if _module_file(a.name) is None:
-                    problems.append(f"line {node.lineno}: no module {a.name}")
-                elif a.asname:
-                    module_aliases.setdefault(a.asname, set()).add(a.name)
-        elif isinstance(node, ast.ImportFrom):
-            mod = node.module or ""
-            if node.level or mod.split(".")[0] != PKG:
-                continue
-            mod_file = _module_file(mod)
-            if mod_file is None:
-                problems.append(f"line {node.lineno}: no module {mod}")
-                continue
-            defined = _top_level_names(mod_file)
-            for a in node.names:
-                sub = f"{mod}.{a.name}"
-                if _module_file(sub) is not None:
-                    module_aliases.setdefault(a.asname or a.name, set()).add(sub)
-                elif a.name not in defined:
-                    problems.append(f"line {node.lineno}: {mod} has no {a.name}")
+    for lineno, mod, names, asname in _package_imports(tree):
+        mod_file = _module_file(mod)
+        if mod_file is None:
+            problems.append(f"line {lineno}: no module {mod}")
+            continue
+        if names is None:
+            if asname:
+                module_aliases.setdefault(asname, set()).add(mod)
+            continue
+        defined = _top_level_names(mod_file)
+        for a in names:
+            sub = f"{mod}.{a.name}"
+            if _module_file(sub) is not None:
+                module_aliases.setdefault(a.asname or a.name, set()).add(sub)
+            elif a.name not in defined:
+                problems.append(f"line {lineno}: {mod} has no {a.name}")
     defined_by = {
         m: _top_level_names(_module_file(m))
         for mods in module_aliases.values()
@@ -175,6 +195,54 @@ def _dangling_imports(path):
                     f"not defined in {sorted(mods)}"
                 )
     return problems
+
+
+def _import_closure(paths, modules=()):
+    """Package modules reached from the files ``paths`` and the package
+    ``modules`` by imports at any depth, function bodies included. An
+    imported module reaches its parent packages too, and ``from m import
+    n`` reaches ``m.n`` when that is a submodule."""
+    reached, todo = set(), [(p, None) for p in paths]
+
+    def reach(mod):
+        parts = mod.split(".")
+        for i in range(1, len(parts) + 1):
+            m = ".".join(parts[:i])
+            if m not in reached:
+                reached.add(m)
+                todo.append((_module_file(m), m))
+
+    for m in modules:
+        reach(m)
+    while todo:
+        path, module = todo.pop()
+        if module is None:
+            package = None
+        elif path.endswith("__init__.py"):
+            package = module
+        else:
+            package = module.rpartition(".")[0]
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for _, mod, names, _ in _package_imports(tree, package):
+            if _module_file(mod) is None:
+                continue
+            reach(mod)
+            for a in names or ():
+                if _module_file(f"{mod}.{a.name}") is not None:
+                    reach(f"{mod}.{a.name}")
+    return reached
+
+
+def _package_modules():
+    root = os.path.join(REPO, PKG)
+    out = set()
+    for path in glob.glob(os.path.join(root, "**", "*.py"), recursive=True):
+        rel = os.path.relpath(path, REPO)[: -len(".py")].split(os.sep)
+        if rel[-1] == "__init__":
+            rel = rel[:-1]
+        out.add(".".join(rel))
+    return out
 
 
 @pytest.mark.parametrize(
@@ -202,3 +270,22 @@ def test_every_oracle_names_a_query():
     import __spark_entry__ as entry
 
     assert set(entry.oracle_sql()) <= set(entry.queries())
+
+
+def test_every_package_module_is_reached_from_the_job_or_a_driver():
+    """A module that only tests import is not part of the product: every
+    module must be reached from the KG job (``pipeline``) or a driver
+    file. Tests are not roots."""
+    reached = _import_closure(DRIVER_FILES, [f"{PKG}.pipeline"])
+    assert sorted(_package_modules() - reached) == []
+
+
+def test_import_closure_follows_relative_and_function_level_imports():
+    kg = _import_closure([], [f"{PKG}.pipeline"])
+    # pipeline imports fused and plans.validate inside functions; the
+    # parsers are reached through ner/rel/el's relative imports
+    for m in ("operators.fused", "plans.validate", "functions.response_parsers"):
+        assert f"{PKG}.{m}" in kg
+    assert kg <= KG_JOB_MODULES, sorted(kg - KG_JOB_MODULES)
+    assert f"{PKG}.operators.graph" not in kg
+    assert f"{PKG}.operators.graph" in _import_closure(DRIVER_FILES)

@@ -71,226 +71,6 @@ def test_profile_all_null_column(spark):
     assert r["avg_len"] is None
 
 
-# --------------------------------------------------- snapshot diff (CDC)
-
-import pytest as _pytest
-
-from spacy_llm_spark.operators.diff import assert_unique_ids, snapshot_diff
-
-
-def test_snapshot_diff_statuses(spark):
-    old = spark.createDataFrame(
-        [(1, "a", 1.0), (2, "b", None), (3, "c", 3.0), (4, "d", 4.0)],
-        "id bigint, t string, v double",
-    )
-    new = spark.createDataFrame(
-        [(2, "b", None), (3, "CHANGED", 3.0), (4, "d", None), (5, "e", 5.0)],
-        "id bigint, t string, v double",
-    )
-    got = {r["id"]: r["status"] for r in snapshot_diff(old, new, "id").collect()}
-    # 1 removed; 2 unchanged (NULL==NULL not a change); 3 changed (text);
-    # 4 changed (value -> NULL); 5 added
-    assert got == {1: "removed", 3: "changed", 4: "changed", 5: "added"}
-
-
-def test_snapshot_diff_column_subset_and_errors(spark):
-    old = spark.createDataFrame([(1, "a", 1.0)], "id bigint, t string, v double")
-    new = spark.createDataFrame([(1, "a", 9.0)], "id bigint, t string, v double")
-    # comparing only t: the v change is invisible -> empty diff
-    assert snapshot_diff(old, new, "id", compare_cols=["t"]).count() == 0
-    with _pytest.raises(ValueError, match="missing"):
-        snapshot_diff(old, new, "id", compare_cols=["nope"])
-    with _pytest.raises(ValueError, match="no columns"):
-        snapshot_diff(old.select("id"), new.select("id"), "id")
-
-
-def test_assert_unique_ids(spark):
-    ok = spark.createDataFrame([(1,), (2,)], "id bigint")
-    assert_unique_ids(ok, "id")
-    dup = spark.createDataFrame([(1,), (1,)], "id bigint")
-    with _pytest.raises(ValueError, match="duplicate id"):
-        assert_unique_ids(dup, "id")
-
-
-# ----------------------------------------------------- SCD2 dimension
-
-from pyspark.sql import functions as F
-
-from spacy_llm_spark.operators.diff import scd2_apply, scd2_compact
-
-
-def _ts(day, h=0):
-    import datetime
-
-    return datetime.datetime(2024, 1, day, h)
-
-
-def test_scd2_compact_hand_case(spark):
-    """Runs collapse to one interval each; a state going NULL and back
-    opens new versions (null-safe change detect); NULL-ts rows drop;
-    valid_to chains to the next valid_from with the tail open."""
-    rows = [
-        (1, _ts(1), "a"), (1, _ts(2), "a"), (1, _ts(3), "b"),
-        (1, _ts(4), None), (1, _ts(5), None), (1, _ts(6), "a"),
-        (2, _ts(1), "x"), (2, None, "y"),
-    ]
-    obs = spark.createDataFrame(rows, "id bigint, ts timestamp, st string")
-    got = sorted(
-        scd2_compact(obs, "id", "ts", ["st"]).collect(),
-        key=lambda r: (r["id"], r["version"]),
-    )
-    flat = [
-        (r["id"], r["version"], r["valid_from"], r["valid_to"],
-         r["is_current"], r["st"]) for r in got
-    ]
-    assert flat == [
-        (1, 1, _ts(1), _ts(3), False, "a"),
-        (1, 2, _ts(3), _ts(4), False, "b"),
-        (1, 3, _ts(4), _ts(6), False, None),
-        (1, 4, _ts(6), None, True, "a"),
-        (2, 1, _ts(1), None, True, "x"),
-    ]
-
-    with _pytest.raises(ValueError, match="non-empty"):
-        scd2_compact(obs, "id", "ts", [])
-    with _pytest.raises(ValueError, match="missing"):
-        scd2_compact(obs, "id", "ts", ["nope"])
-
-
-def test_scd2_apply_bit_equal_to_full_recompute(spark):
-    """Per-id in-order batches (a global time cut) folded by scd2_apply
-    reproduce scd2_compact over the full stream bit-for-bit — including
-    tail-run extension (dedup), new states, and brand-new ids."""
-    rows = [
-        (i, _ts(d, h), st)
-        for i, states in [
-            (1, "aabba"), (2, "aaaaa"), (3, "abcde"), (4, "zzzyz"),
-        ]
-        for (d, h), st in zip(
-            [(1, 0), (3, 5), (7, 1), (11, 9), (20, 2)], states
-        )
-    ] + [(5, _ts(26), "new")]  # id born inside the batch window
-    obs = spark.createDataFrame(rows, "id bigint, ts timestamp, st string")
-    full = scd2_compact(obs, "id", "ts", ["st"])
-    cut = _ts(10)
-    hist = scd2_compact(obs.where(F.col("ts") < cut), "id", "ts", ["st"])
-    inc = scd2_apply(
-        hist, obs.where(F.col("ts") >= cut), "id", "ts", ["st"]
-    )
-    key = lambda r: (r["id"], r["version"])  # noqa: E731
-    assert sorted(map(tuple, full.collect()), key=lambda t: t[:2]) == sorted(
-        map(tuple, inc.collect()), key=lambda t: t[:2]
-    )
-    # two chained batches == one batch == full
-    mid = _ts(15)
-    inc2 = scd2_apply(
-        scd2_apply(
-            hist,
-            obs.where((F.col("ts") >= cut) & (F.col("ts") < mid)),
-            "id", "ts", ["st"],
-        ),
-        obs.where(F.col("ts") >= mid),
-        "id", "ts", ["st"],
-    )
-    assert sorted(map(tuple, inc.collect())) == sorted(map(tuple, inc2.collect()))
-
-
-def test_scd2_apply_guards(spark):
-    obs = spark.createDataFrame(
-        [(1, _ts(1), "a"), (1, _ts(5), "b")],
-        "id bigint, ts timestamp, st string",
-    )
-    hist = scd2_compact(obs, "id", "ts", ["st"])
-    late = spark.createDataFrame(
-        [(1, _ts(3), "c")], "id bigint, ts timestamp, st string"
-    )
-    with _pytest.raises(ValueError, match="out-of-order"):
-        scd2_apply(hist, late, "id", "ts", ["st"])
-    # validate=False skips the tripwire (caller owns the contract)
-    assert scd2_apply(hist, late, "id", "ts", ["st"], validate=False).count() >= 2
-    with _pytest.raises(ValueError, match="history columns"):
-        scd2_apply(obs, late, "id", "ts", ["st"])
-
-
-# ------------------------------------------------ gap-fill / LOCF
-
-from spacy_llm_spark.operators.timeseries import gapfill_locf
-
-
-def test_gapfill_locf_hand_case(spark):
-    """Grid spans min..max slot per key; the LAST observation in a slot
-    wins; empty slots carry forward with observed=False; an observed
-    slot with a NULL value still fills from the previous non-null."""
-    rows = [
-        (1, _ts(1, 2), 10.0), (1, _ts(1, 9), 11.0),  # same day: last wins
-        (1, _ts(4), 40.0),
-        (1, _ts(5), None),  # observed but null -> LOCF fills 40.0
-        (2, _ts(2), 7.0),
-        (2, None, 99.0),  # null ts dropped
-    ]
-    obs = spark.createDataFrame(rows, "id bigint, ts timestamp, value double")
-    got = sorted(
-        gapfill_locf(obs, ["id"], "ts", ["value"], 86400).collect(),
-        key=lambda r: (r["id"], r["slot"]),
-    )
-    day = lambda d: int(_ts(d).replace(tzinfo=__import__("datetime").timezone.utc).timestamp())  # noqa: E731
-    flat = [(r["id"], r["slot"], r["observed"], r["value"]) for r in got]
-    assert flat == [
-        (1, day(1), True, 11.0),
-        (1, day(2), False, 11.0),
-        (1, day(3), False, 11.0),
-        (1, day(4), True, 40.0),
-        (1, day(5), True, 40.0),
-        (2, day(2), True, 7.0),
-    ]
-
-
-def test_gapfill_locf_guards(spark):
-    obs = spark.createDataFrame(
-        [(1, _ts(1), 1.0), (1, _ts(30), 2.0)],
-        "id bigint, ts timestamp, value double",
-    )
-    with _pytest.raises(ValueError, match="max_slots_per_key"):
-        gapfill_locf(obs, ["id"], "ts", ["value"], 1, max_slots_per_key=1000)
-    # cap disabled -> runs (29 days of seconds is fine to PLAN, just not
-    # to collect; count a coarse grid instead to keep the test fast)
-    assert gapfill_locf(obs, ["id"], "ts", ["value"], 86400).count() == 30
-    with _pytest.raises(ValueError, match="key_cols"):
-        gapfill_locf(obs, [], "ts", ["value"], 86400)
-    with _pytest.raises(ValueError, match="value_cols"):
-        gapfill_locf(obs, ["id"], "ts", [], 86400)
-    with _pytest.raises(ValueError, match="step_seconds"):
-        gapfill_locf(obs, ["id"], "ts", ["value"], 0)
-    with _pytest.raises(ValueError, match="missing"):
-        gapfill_locf(obs, ["id"], "ts", ["nope"], 86400)
-
-
-def test_gapfill_locf_multi_value_and_keys(spark):
-    """Two value columns fill independently; composite keys partition
-    independently (no cross-key leakage)."""
-    rows = [
-        ("a", 1, _ts(1), 1.0, "x"),
-        ("a", 1, _ts(3), None, "y"),
-        ("a", 2, _ts(2), 5.0, None),
-    ]
-    obs = spark.createDataFrame(
-        rows, "g string, id bigint, ts timestamp, v double, s string"
-    )
-    got = {
-        (r["g"], r["id"], r["slot"]): (r["v"], r["s"], r["observed"])
-        for r in gapfill_locf(
-            obs, ["g", "id"], "ts", ["v", "s"], 86400
-        ).collect()
-    }
-    day = lambda d: int(_ts(d).replace(tzinfo=__import__("datetime").timezone.utc).timestamp())  # noqa: E731
-    assert got == {
-        ("a", 1, day(1)): (1.0, "x", True),
-        ("a", 1, day(2)): (1.0, "x", False),
-        ("a", 1, day(3)): (1.0, "y", True),  # v carries, s updates
-        ("a", 2, day(2)): (5.0, None, True),  # never-seen s stays null
-    }
-
-
 # ------------------------------------------- pairwise clustering P/R/F1
 
 from spacy_llm_spark.operators.scoring import pairwise_cluster_prf
@@ -351,78 +131,6 @@ def test_pairwise_cluster_prf_no_pair_materialization(spark):
     assert "SortMergeJoin" not in plan
 
 
-# --------------------------------------------------- retention + funnel
-
-import datetime as _dt
-
-from spacy_llm_spark.operators.funnel import cohort_retention, funnel_steps
-
-
-def _ev(spark, rows):
-    return spark.createDataFrame(
-        [(u, _dt.datetime(2024, 1, 1) + _dt.timedelta(seconds=s), t) for u, s, t in rows],
-        "user_id bigint, ts timestamp_ntz, event_type string",
-    )
-
-
-def test_cohort_retention_hand_case(spark):
-    day = 86400
-    rows = [
-        # u1: first period 0, active periods 0 and 2
-        (1, 0, "view"), (1, 2 * day + 5, "view"),
-        # u2: first period 1 only
-        (2, day + 1, "click"),
-        # u3: first period 0, active 0, 1, 2
-        (3, 10, "view"), (3, day, "view"), (3, 2 * day, "view"),
-    ]
-    got = {
-        (r["cohort_period"] - 19723, r["period_offset"]): r["n_users"]
-        for r in cohort_retention(_ev(spark, rows), period_secs=day).collect()
-    }
-    # epoch day of 2024-01-01 = 19723
-    assert got == {(0, 0): 2, (0, 1): 1, (0, 2): 2, (1, 0): 1}
-
-    import pytest
-
-    with pytest.raises(ValueError, match="period_secs"):
-        cohort_retention(_ev(spark, rows), period_secs=0)
-
-
-def test_funnel_steps_order_matters(spark):
-    rows = [
-        # u1 completes view -> click -> purchase in order
-        (1, 0, "view"), (1, 10, "click"), (1, 20, "purchase"),
-        # u2 clicks BEFORE viewing: counts for view, not for click-after-view
-        (2, 10, "click"), (2, 20, "view"),
-        # u3 view+click same instant (ties count), never purchases
-        (3, 5, "view"), (3, 5, "click"),
-        # u4 only purchases
-        (4, 1, "purchase"),
-    ]
-    got = {
-        r["step"]: (r["step_idx"], r["n_users"])
-        for r in funnel_steps(_ev(spark, rows), ["view", "click", "purchase"]).collect()
-    }
-    assert got == {"view": (0, 3), "click": (1, 2), "purchase": (2, 1)}
-
-    import pytest
-
-    with pytest.raises(ValueError, match="non-empty"):
-        funnel_steps(_ev(spark, rows), [])
-
-
-def test_funnel_earliest_completion_semantics(spark):
-    # u1: click at 5 (before first view at 10) must NOT count, but the
-    # click at 15 (after) does; purchase at 12 is before the QUALIFYING
-    # click (15), so no purchase conversion
-    rows = [(1, 10, "view"), (1, 5, "click"), (1, 15, "click"), (1, 12, "purchase")]
-    got = {
-        r["step"]: r["n_users"]
-        for r in funnel_steps(_ev(spark, rows), ["view", "click", "purchase"]).collect()
-    }
-    assert got == {"view": 1, "click": 1, "purchase": 0}
-
-
 # --------------------------------------------------- skew report
 
 from spacy_llm_spark.operators.skew import skew_report
@@ -449,38 +157,6 @@ def test_skew_report_composite_key_and_ties(spark):
     assert got[0]["key"] == "r1␟py" and got[0]["n"] == 2
     # ties broken by key ascending — deterministic cut
     assert [r["key"] for r in got[1:]] == ["r1␟go", "r2␟go"]
-
-
-# --------------------------------------------------- event transitions
-
-from spacy_llm_spark.operators.funnel import event_transitions
-
-
-def test_event_transitions_hand_case(spark):
-    rows = [
-        (1, 0, "view"), (1, 10, "click"), (1, 20, "view"), (1, 30, "click"),
-        (2, 0, "view"), (2, 10, "purchase"),
-        (3, 0, "error"),  # single event: no transition
-    ]
-    got = {
-        (r["from_type"], r["to_type"]): (r["n"], r["p"])
-        for r in event_transitions(_ev(spark, rows)).collect()
-    }
-    assert got[("view", "click")] == (2, round(2 / 3, 6))
-    assert got[("view", "purchase")] == (1, round(1 / 3, 6))
-    assert got[("click", "view")] == (1, 1.0)
-    assert ("error", "error") not in got and len(got) == 3
-
-
-def test_event_transitions_tiebreak(spark):
-    # two events at the same instant: default tiebreak orders by type
-    rows = [(1, 0, "view"), (1, 5, "click"), (1, 5, "error")]
-    got = {
-        (r["from_type"], r["to_type"]): r["n"]
-        for r in event_transitions(_ev(spark, rows)).collect()
-    }
-    # at t=5: click < error lexicographically -> view->click->error
-    assert got == {("view", "click"): 1, ("click", "error"): 1}
 
 
 # --------------------------------------------------- rolling stats

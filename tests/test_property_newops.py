@@ -1,15 +1,11 @@
-"""Property tests for the late round-5 operators against brute-force
-Python references over randomized inputs (same discipline as
+"""Property tests for quantile buckets and z-score outliers against
+brute-force Python references over randomized inputs (same discipline as
 test_property_joins/test_property_kernels: few examples, real Spark
 jobs, adversarial small shapes — ties, nulls, empty groups)."""
-
-import datetime as dt
 
 from hypothesis import given, settings, strategies as st
 
 from spacy_llm_spark.operators.anomaly import zscore_outliers
-from spacy_llm_spark.operators.diff import snapshot_diff
-from spacy_llm_spark.operators.funnel import cohort_retention
 from spacy_llm_spark.operators.quantiles import quantile_buckets
 
 
@@ -36,74 +32,6 @@ def test_quantile_buckets_invariants(spark, values, n_buckets):
     assert all(0 <= b < n_buckets for b in buckets)
     # the minimum always lands in bucket 0, the maximum in a top bucket
     assert buckets[0] == 0
-
-
-# --------------------------------------------------- snapshot diff
-
-_ids = st.integers(min_value=0, max_value=8)
-_vals = st.one_of(st.none(), st.sampled_from(["a", "b", "c"]))
-
-
-@settings(max_examples=10, deadline=None)
-@given(
-    st.dictionaries(_ids, _vals, max_size=8),
-    st.dictionaries(_ids, _vals, max_size=8),
-)
-def test_snapshot_diff_matches_bruteforce(spark, old, new):
-    o = spark.createDataFrame(
-        [(k, v) for k, v in old.items()], "id bigint, t string"
-    )
-    n = spark.createDataFrame(
-        [(k, v) for k, v in new.items()], "id bigint, t string"
-    )
-    got = {r["id"]: r["status"] for r in snapshot_diff(o, n, "id").collect()}
-    want = {}
-    for k in set(old) | set(new):
-        if k not in new:
-            want[k] = "removed"
-        elif k not in old:
-            want[k] = "added"
-        elif old[k] != new[k]:
-            want[k] = "changed"
-    assert got == want
-
-
-# --------------------------------------------------- cohort retention
-
-@settings(max_examples=8, deadline=None)
-@given(
-    st.lists(
-        st.tuples(
-            st.integers(min_value=1, max_value=4),  # user
-            st.integers(min_value=0, max_value=20),  # day
-        ),
-        min_size=1,
-        max_size=25,
-    )
-)
-def test_cohort_retention_matches_bruteforce(spark, events):
-    day = 86400
-    df = spark.createDataFrame(
-        [
-            (u, dt.datetime(2024, 1, 1) + dt.timedelta(days=d))
-            for u, d in events
-        ],
-        "user_id bigint, ts timestamp_ntz",
-    )
-    got = {
-        (r["cohort_period"], r["period_offset"]): r["n_users"]
-        for r in cohort_retention(df, period_secs=day).collect()
-    }
-    base = 19723  # epoch day of 2024-01-01
-    act = {(u, base + d) for u, d in events}
-    first = {}
-    for u, p in act:
-        first[u] = min(first.get(u, p), p)
-    want = {}
-    for u, p in act:
-        key = (first[u], p - first[u])
-        want[key] = want.get(key, 0) + 1
-    assert got == want
 
 
 # --------------------------------------------------- z-score outliers
