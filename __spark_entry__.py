@@ -22,7 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from spacy_llm_spark.corpus import CORPUS_ORACLE_SQL, corpus_from_documents
 from spacy_llm_spark.functions import text as textfn
 from spacy_llm_spark.kb import CODE_NER_DICT, CODE_REL_RULES, build_code_kb
-from spacy_llm_spark.operators import dedup, el, fuzzy, similarity
+from spacy_llm_spark.operators import dedup, el, similarity
 from spacy_llm_spark.pipeline import KGConfig, annotate_corpus
 from spacy_llm_spark.operators import materialize as mat
 
@@ -362,22 +362,6 @@ def q_word_stats(spark, sf_dir):
     return _as_long(out, "n_chars", "n_tokens", "n_distinct_tokens")
 
 
-def q_salted_repo_stats(spark, sf_dir):
-    from spacy_llm_spark.operators.skew import salted_agg
-
-    corpus = corpus_from_documents(spark, sf_dir)
-    out = salted_agg(
-        corpus,
-        ["repo"],
-        {
-            "n_files": (F.count(F.lit(1)), F.sum),
-            "n_chars": (F.sum(F.length("content")), F.sum),
-        },
-        n_salt=16,
-    )
-    return _as_long(out, "n_files", "n_chars")
-
-
 def q_el_candidates_topn(spark, sf_dir):
     kb = build_code_kb()
     surfaces = (
@@ -453,7 +437,6 @@ def q_cosine_topk(spark, sf_dir):
     probe = emb.where(F.col("vec_id") == 0).select("embedding").first()[0]
     out = similarity.cosine_topk(emb, [float(x) for x in probe], k=10)
     return out.select("vec_id", F.round("cosine", 6).alias("cosine"))
-
 
 
 def q_cosine_topk_int8(spark, sf_dir):
@@ -594,7 +577,6 @@ def q_order_revenue(spark, sf_dir):
     )
 
 
-
 def q_media_phash_dups(spark, sf_dir):
     """Multimodal near-dup detection: perceptual dHash over the decoded
     payloads (multimodal.media_phash — deterministic fake decode, real
@@ -721,50 +703,6 @@ def q_dedup_cluster_reps(spark, sf_dir):
     return dedup.dedup_clusters(pairs, docs)
 
 
-def _entity_names(spark, sf_dir):
-    """The entity-name universe fuzzy ER runs over: every customer and
-    supplier name (near-identical zero-padded identifiers — exactly the
-    one-edit-apart shape fuzzy matching exists for)."""
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    return customer.select(F.col("c_name").alias("name")).unionByName(
-        supplier.select(F.col("s_name").alias("name"))
-    )
-
-
-def q_fuzzy_name_pairs(spark, sf_dir):
-    """Fuzzy entity resolution (fuzzy.fuzzy_pairs): deletion-neighborhood
-    blocking (FastSS — exact, never all-pairs) + native levenshtein
-    verify over the customer∪supplier name universe. The oracle
-    brute-forces the all-pairs definition, so equality proves the
-    blocking misses nothing."""
-    return fuzzy.fuzzy_pairs(_entity_names(spark, sf_dir), max_distance=1)
-
-
-def q_fuzzy_name_pairs_incremental(spark, sf_dir):
-    """Incremental fuzzy ER: suppliers + 80% of customers pre-keyed into
-    the persisted blocking index; the remaining customers arrive as a
-    batch and probe it (only the batch derives deletion variants).
-    pairs(old) ∪ probe(new) equals the full recompute, so it shares
-    fuzzy_name_pairs' brute-force oracle verbatim."""
-    from spacy_llm_spark.fs import cut_lineage
-
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    supplier = spark.read.parquet(f"{sf_dir}/supplier.parquet")
-    old = (
-        customer.where(F.col("c_custkey") % 5 != 0)
-        .select(F.col("c_name").alias("name"))
-        .unionByName(supplier.select(F.col("s_name").alias("name")))
-    )
-    batch = customer.where(F.col("c_custkey") % 5 == 0).select(
-        F.col("c_name").alias("name")
-    )
-    idx = cut_lineage(fuzzy.fuzzy_index(old))
-    return fuzzy.fuzzy_pairs(old).unionByName(
-        fuzzy.fuzzy_pairs_probe(idx, batch)
-    )
-
-
 def q_corpus_clean(spark, sf_dir):
     # the composed cleaning pass: quality >= 0.85 (drops ~70% of the
     # synthetic docs, so the filter is actually exercised), any language,
@@ -859,78 +797,6 @@ def q_kg_canonical_edges_incremental(spark, sf_dir):
     )
 
 
-def q_asof_latest_click(spark, sf_dir):
-    """As-of join (operators/asof.py): for each 'view' event, the same
-    user's most recent strictly-prior 'click' event. Union + running-last
-    window — ONE shuffle, no inequality join."""
-    from spacy_llm_spark.operators.asof import asof_join
-
-    views, clicks = _asof_click_frames(spark, sf_dir)
-    out = asof_join(
-        views,
-        clicks,
-        on="user_id",
-        left_time="ts",
-        right_time="cts",
-        right_cols=["click_event_id", "click_value"],
-        right_tiebreak="click_event_id",
-        strict=True,
-    )
-    return _as_long(out, "event_id", "user_id", "click_event_id").select(
-        "event_id", "user_id", "click_event_id", "click_value"
-    )
-
-
-def _asof_click_frames(spark, sf_dir):
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    views = events.where(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_event_id"),
-        "user_id",
-        F.col("ts").alias("cts"),
-        F.col("value").alias("click_value"),
-    )
-    return views, clicks
-
-
-def q_asof_recent_click(spark, sf_dir):
-    """As-of with a tolerance horizon: the latest strictly-prior click
-    counts only if it is at most 1 h old (equivalently: the latest click
-    within (t-1h, t) — the oracle states it that way)."""
-    from spacy_llm_spark.operators.asof import asof_join
-
-    views, clicks = _asof_click_frames(spark, sf_dir)
-    out = asof_join(
-        views, clicks, on="user_id", left_time="ts", right_time="cts",
-        right_cols=["click_event_id", "click_value"],
-        right_tiebreak="click_event_id", strict=True, tolerance_secs=3600.0,
-    )
-    return _as_long(out, "event_id", "user_id", "click_event_id").select(
-        "event_id", "user_id", "click_event_id", "click_value"
-    )
-
-
-def q_asof_latest_click_split(spark, sf_dir):
-    """The SAME semantics as asof_latest_click but through the mega-key
-    physical plan (per-(key, 6h-bucket) windows + carry-in): the shared
-    oracle certifies the split path end-to-end, not just vs the default
-    path."""
-    from spacy_llm_spark.operators.asof import asof_join
-
-    views, clicks = _asof_click_frames(spark, sf_dir)
-    out = asof_join(
-        views, clicks, on="user_id", left_time="ts", right_time="cts",
-        right_cols=["click_event_id", "click_value"],
-        right_tiebreak="click_event_id", strict=True,
-        split_bucket_secs=6 * 3600,
-    )
-    return _as_long(out, "event_id", "user_id", "click_event_id").select(
-        "event_id", "user_id", "click_event_id", "click_value"
-    )
-
-
 def q_repetition_stats(spark, sf_dir):
     """Gopher-style repetition filters: dup-token/dup-bigram/top-bigram
     fractions — zero-shuffle narrow projection (functions/text.py)."""
@@ -939,21 +805,6 @@ def q_repetition_stats(spark, sf_dir):
 
 def q_vocab_topk(spark, sf_dir):
     return textfn.vocab_topk(_docs(spark, sf_dir), k=20)
-
-
-def q_frequent_tokens(spark, sf_dir):
-    """Certified-exact top-20 tokens via the bounded-memory Misra-Gries
-    sketch + candidate recount (operators/sketches.py) — same answer as
-    vocab_topk's full two-phase count, but the shuffle is capped at
-    capacity x partitions rows regardless of item cardinality."""
-    from spacy_llm_spark.operators.sketches import frequent_items_topk
-
-    toks = _docs(spark, sf_dir).select(
-        F.explode(textfn.tokens_expr(F.col("text"))).alias("token")
-    )
-    return frequent_items_topk(toks, "token", k=20, capacity=512).select(
-        F.col("item").alias("token"), "n"
-    )
 
 
 def q_lm_self_nll(spark, sf_dir):
@@ -1251,30 +1102,6 @@ def _katz_oracle_sql(iters: int = 3, alpha: float = 0.1,
            FROM nodes n LEFT JOIN i{k} i ON i.vertex = n.vertex)""")
     parts.append(f"\nSELECT vertex, katz FROM k{iters}\n")
     return "".join(parts)
-
-
-def q_blocking_quality(spark, sf_dir):
-    """Blocking-scheme evaluation (operators/blocking.blocking_quality):
-    candidates = doc pairs sharing a 2-hex sha256 prefix (256 blocks),
-    gold = exact-duplicate pairs (equal full sha) — pair completeness
-    is 1.0 BY CONSTRUCTION (equal sha implies equal prefix; the
-    metric proves it), reduction ratio ~1 shows the quadratic space
-    pruned. One distinct + one semi-join + count-scale aggregates."""
-    from spacy_llm_spark.operators.blocking import blocking_quality
-
-    d = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("id"), F.sha2(F.col("text"), 256).alias("h")
-    )
-    n = d.count()
-    a = d.select(F.col("id").alias("id_a"), F.col("h").alias("ha"),
-                 F.substring("h", 1, 2).alias("pa"))
-    b = d.select(F.col("id").alias("id_b"), F.col("h").alias("hb"),
-                 F.substring("h", 1, 2).alias("pb"))
-    cand = a.join(b, (F.col("pa") == F.col("pb"))
-                  & (F.col("id_a") < F.col("id_b"))).select("id_a", "id_b")
-    gold = a.join(b, (F.col("ha") == F.col("hb"))
-                  & (F.col("id_a") < F.col("id_b"))).select("id_a", "id_b")
-    return blocking_quality(cand, gold, total_records=n)
 
 
 def q_kg_degree_histogram(spark, sf_dir):
@@ -1941,9 +1768,8 @@ def q_kg_hyperball(spark, sf_dir):
     merged JVM-side, one edge join + one union-merge aggregate per
     round) in its certificate form over the undirected KG triple graph:
     the exact N(t) curve plus a boolean certifying the sketch estimate
-    per round — the sketches.approx_distinct_certificate contract, so
-    the DuckDB oracle is the exact recursive-BFS curve + literal
-    true."""
+    per round, so the DuckDB oracle is the exact recursive-BFS curve +
+    literal true."""
     from spacy_llm_spark.operators.graph import hyperball_certificate
 
     triples = q_kg_edges(spark, sf_dir).select("subj", "obj").distinct()
@@ -2223,37 +2049,6 @@ def q_lexical_cosine_pairs(spark, sf_dir):
     )
 
 
-def q_events_in_windows(spark, sf_dir):
-    """Interval (range) join via bucketized equi-join (operators/
-    rangejoin.py): events against 100 synthetic 3h incident windows on a
-    7h cadence — no nested-loop join in the plan."""
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
-        "event_id", "ts", "event_type"
-    )
-    # events.ts is TIMESTAMP_NTZ in the parquet; build the window bounds
-    # in the SAME flavor (interval_join refuses a NTZ/TZ mix — the two
-    # epoch bases differ by the session-tz offset)
-    epoch = F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-    windows = spark.range(100).select(
-        F.col("id").alias("window_id"),
-        (epoch + F.col("id") * F.expr("INTERVAL 7 HOURS")).alias("ws"),
-        (
-            epoch
-            + F.col("id") * F.expr("INTERVAL 7 HOURS")
-            + F.expr("INTERVAL 3 HOURS")
-        ).alias("we"),
-    )
-    out = interval_join(
-        events, windows, point_time="ts", start="ws", end="we",
-        bucket_secs=3 * 3600,
-    )
-    return _as_long(out, "event_id", "window_id").select(
-        "event_id", "window_id", "event_type"
-    )
-
-
 def q_pretoken_count(spark, sf_dir):
     """BPE-ish pre-token counting over the PII-augmented text (which
     actually contains punctuation, so the estimate differs from the
@@ -2263,25 +2058,6 @@ def q_pretoken_count(spark, sf_dir):
         "doc_id",
         textfn.pretoken_count(F.col("text")).cast("long").alias("n_pretokens"),
         textfn.token_count(F.col("text")).cast("long").alias("n_ws_tokens"),
-    )
-
-
-def q_events_anomaly(spark, sf_dir):
-    """Per-user hourly activity bursts (operators/anomaly.py): hourly
-    event counts z-scored within each user's own history; |z| >= 2
-    population-σ flags the burst/dip hours. One shuffle for the hour
-    rollup + one window pass on the user key."""
-    from spacy_llm_spark.operators.anomaly import zscore_outliers
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hourly = events.groupBy(
-        "user_id", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    return zscore_outliers(hourly, "n", ["user_id"], threshold=2.0).select(
-        F.col("user_id").cast("long").alias("user_id"),
-        F.unix_timestamp("hour").cast("long").alias("hour_epoch"),
-        F.col("n").cast("long").alias("n"),
-        "z",
     )
 
 
@@ -2338,23 +2114,6 @@ def q_docs_length_histogram(spark, sf_dir):
     return histogram(_docs(spark, sf_dir), "n_chars", n_bins=20)
 
 
-def q_join_size_orders(spark, sf_dir):
-    """Exact join-size prediction for orders ⋈ lineitem on the order
-    key (operators/skew.py join_size_estimate): two per-key count
-    aggregations + one key-scale join — the data-scale join never
-    runs. The planning input that chooses broadcast vs bucketed vs
-    salted before a 100 TB shuffle."""
-    from spacy_llm_spark.operators.skew import join_size_estimate
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("k")
-    )
-    lineitem = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        F.col("l_orderkey").alias("k")
-    )
-    return join_size_estimate(orders, lineitem, ["k"], top_n=5)
-
-
 def q_docs_chunks(spark, sf_dir):
     """RAG/embedding ingestion chunking (functions/text.py
     chunk_documents): 64-token windows overlapping by 16, offsets kept,
@@ -2403,57 +2162,6 @@ def q_corpus_mix(spark, sf_dir):
     )
 
 
-def q_er_match_scores(spark, sf_dir):
-    """Fellegi–Sunter match weights over the SNM candidate pairs
-    (operators/linkage.py): u estimated from the part table's value
-    collision probabilities (exact integer sums), m as domain priors;
-    scoring is a pure whole-stage-codegen projection — the block→score
-    half of the ER stack in two operators."""
-    from spacy_llm_spark.operators.blocking import sorted_neighborhood_pairs
-    from spacy_llm_spark.operators.linkage import (
-        estimate_u_probs,
-        fellegi_sunter_scores,
-    )
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    fields = ["p_brand", "p_type", "p_size"]
-    pairs = sorted_neighborhood_pairs(
-        part, "p_partkey", "p_name", window=3, keep_cols=tuple(fields)
-    )
-    u = estimate_u_probs(part, fields)
-    m = {"p_brand": 0.95, "p_type": 0.9, "p_size": 0.85}
-    return fellegi_sunter_scores(pairs, fields, m, u)
-
-
-def q_er_clusters(spark, sf_dir):
-    """The full ER stack end-to-end: SNM blocking → Fellegi–Sunter
-    scoring → threshold (2.0) → connected components → every part
-    record labeled with its entity cluster (min member id; unmatched
-    records are singleton clusters). Ids round-trip through
-    zero-padded strings so the CC min-label convention (string min)
-    equals the numeric min the oracle computes."""
-    from spacy_llm_spark.operators import canonicalize as canon
-
-    scores = q_er_match_scores(spark, sf_dir)
-    matched = scores.where(F.col("match_weight") >= 2.0).select(
-        F.format_string("p%012d", "id_a").alias("src"),
-        F.format_string("p%012d", "id_b").alias("dst"),
-    )
-    cc = canon.connected_components(matched)
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    records = part.select(
-        F.col("p_partkey").cast("long").alias("record_id"),
-        F.format_string("p%012d", "p_partkey").alias("node"),
-    )
-    return records.join(cc, "node", "left").select(
-        "record_id",
-        F.coalesce(
-            F.substring("component", 2, 12).cast("long"),
-            F.col("record_id"),
-        ).alias("cluster_id"),
-    )
-
-
 def q_kg_shortest_paths(spark, sf_dir):
     """Hop-bounded weighted SSSP over the KG (operators/graph.py
     shortest_paths): min-weight distance (weight = len(pred),
@@ -2472,18 +2180,6 @@ def q_kg_shortest_paths(spark, sf_dir):
     )
     seeds = verts.where(F.col("vertex").startswith("K1"))
     return shortest_paths(edges, seeds, weight_col="w8", max_hops=4)
-
-
-def q_er_blocking_parts(spark, sf_dir):
-    """Sorted-neighborhood ER blocking over part names
-    (operators/blocking.py): all record pairs within 3 positions of
-    the global (p_name, p_partkey) order — the O(n·w) candidate set;
-    global rank assembled distributively (surrogate range-chunking +
-    prefix-sum offsets), pairs via explode + ONE rank equi-join."""
-    from spacy_llm_spark.operators.blocking import sorted_neighborhood_pairs
-
-    part = spark.read.parquet(f"{sf_dir}/part.parquet")
-    return sorted_neighborhood_pairs(part, "p_partkey", "p_name", window=3)
 
 
 def q_kg_walks(spark, sf_dir):
@@ -2558,26 +2254,6 @@ def q_kg_node2vec(spark, sf_dir):
     )
 
 
-def q_events_rolling(spark, sf_dir):
-    """Trailing 7-hour rolling activity features per user
-    (operators/anomaly.py rolling_stats) over the hourly count grid —
-    integer-valued input keeps the sliding mean bit-identical across
-    engines regardless of their window summation structure."""
-    from spacy_llm_spark.operators.anomaly import rolling_stats
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    hourly = (
-        events.groupBy(
-            "user_id",
-            F.unix_timestamp(F.date_trunc("hour", "ts"))
-            .cast("long")
-            .alias("hour_epoch"),
-        )
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    return rolling_stats(hourly, "n", ["user_id"], ["hour_epoch"], window_rows=7)
-
-
 def q_lang_confusion(spark, sf_dir):
     """Language-ID confusion matrix: the stopword-profile detector
     (functions/text.py detect_language) scored against the corpus's
@@ -2594,29 +2270,6 @@ def q_lang_confusion(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-
-
-def q_docs_quality_deciles(spark, sf_dir):
-    """Exact-quantile decile assignment over document length
-    (operators/quantiles.py quantile_buckets): thresholds from ONE
-    percentile aggregation broadcast back, bucket id as a pure
-    projection — the training-mix stratification shape, no NTILE
-    global sort."""
-    from spacy_llm_spark.operators.quantiles import quantile_buckets
-
-    docs = _docs(spark, sf_dir).select("doc_id", "n_chars")
-    return quantile_buckets(docs, "n_chars", n_buckets=10)
-
-
-def q_docs_skew_report(spark, sf_dir):
-    """Pre-shuffle skew diagnostics (operators/skew.py skew_report)
-    over the deliberately skewed source column (the mega-repo owns
-    ~30% of rows): heaviest keys, their shares, and the skew factor
-    that decides between AQE splitting and salting BEFORE the shuffle
-    is paid for."""
-    from spacy_llm_spark.operators.skew import skew_report
-
-    return skew_report(_docs(spark, sf_dir), ["source"], top_n=10)
 
 
 def q_cluster_prf(spark, sf_dir):
@@ -2826,21 +2479,6 @@ def q_event_quantiles(spark, sf_dir):
     )
 
 
-def q_event_quantiles_approx(spark, sf_dir):
-    """Approximate percentiles (operators/quantiles.py) with the
-    rank-error certificate: per event type, booleans asserting the
-    percentile_approx value (accuracy=10000, rank error <= 1e-4) lies
-    between the exact percentiles at the guaranteed rank bounds. The
-    approx values are engine-specific; the bound is the cross-engine
-    contract, so the oracle is the literal TRUE per group."""
-    from spacy_llm_spark.operators import quantiles as qt
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return qt.approx_quantile_certificate(
-        events, "value", ["event_type"], accuracy=10_000
-    )
-
-
 def q_events_daily_pivot(spark, sf_dir):
     """Pivoted daily activity matrix: one row per day, one column per
     event type. Explicit pivot values keep the schema static (no
@@ -2934,53 +2572,6 @@ def q_kg_neighbor_jaccard(spark, sf_dir):
 
     edges = q_kg_edges(spark, sf_dir)
     return graph.neighbor_jaccard(edges, min_common=2)
-
-
-def q_distinct_users_approx(spark, sf_dir):
-    """HyperLogLog distinct-count certificate (operators/sketches.py):
-    per event type, the exact distinct user count plus a boolean
-    asserting the HLL estimate (rsd=0.02) is within 4 sigma of it. The
-    estimate itself is engine-specific; the bound is the cross-engine
-    contract, so the oracle carries the exact count and literal TRUE."""
-    from spacy_llm_spark.operators import sketches
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sketches.approx_distinct_certificate(
-        events, "user_id", ["event_type"], rsd=0.02
-    )
-
-
-def q_distinct_users_sketch_incremental(spark, sf_dir):
-    """Distinct-user counts from the PERSISTED DataSketches HLL index
-    grown by an append (odd-user events appended onto the even half,
-    sketches.hll_index/_append/distinct_from_index) — history never
-    re-read. The estimate is engine- and merge-path-specific, so the
-    cross-engine contract is the certificate: exact count + a boolean
-    asserting the index's estimate sits within 4 sigma of it (rsd =
-    1.04/sqrt(2^12) ~1.6%); the oracle carries the exact count and
-    literal TRUE, the distinct_users_approx pattern."""
-    from spacy_llm_spark.operators import sketches
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    old = events.where(F.col("user_id") % 2 == 0)
-    new = events.where(F.col("user_id") % 2 == 1)
-    idx = sketches.hll_index(old, "user_id", ["event_type"]).localCheckpoint()
-    idx = sketches.hll_index_append(idx, new, "user_id", ["event_type"])
-    est = sketches.distinct_from_index(
-        idx, "user_id", ["event_type"], alias="_est"
-    )
-    exact = events.groupBy("event_type").agg(
-        F.countDistinct("user_id").alias("n_distinct")
-    )
-    bound = 4 * 1.04 / (2 ** 12) ** 0.5
-    return exact.join(est, "event_type").select(
-        "event_type",
-        "n_distinct",
-        (
-            F.abs(F.col("_est") - F.col("n_distinct"))
-            <= F.lit(bound) * F.col("n_distinct") + 1
-        ).alias("ok"),
-    )
 
 
 def q_k_anonymity_audit(spark, sf_dir):
@@ -3825,22 +3416,6 @@ def q_dsir_resample(spark, sf_dir):
     )
 
 
-def q_events_mad(spark, sf_dir):
-    """Robust per-type outliers by modified z-score (operators/
-    anomaly.py mad_outliers, Iglewicz–Hoaglin 0.6745*(x-med)/MAD,
-    threshold 3.5) — the heavy-tail-proof complement of the z-score
-    detector; exact interpolated medians on both engines."""
-    from spacy_llm_spark.operators.anomaly import mad_outliers
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return mad_outliers(
-        events.select("event_id", "event_type", "value"),
-        "value",
-        ["event_type"],
-        threshold=3.5,
-    )
-
-
 def q_knn_join(spark, sf_dir):
     """Batch exact k-NN join (operators/similarity.py knn_join): every
     50th vector's 5 nearest corpus neighbors by cosine — broadcast
@@ -3869,17 +3444,6 @@ def q_hard_negatives(spark, sf_dir):
     return hard_negatives(
         q, emb, k=5, sim_lo=0.35, sim_hi=0.95, positives=gold
     )
-
-
-def q_events_decayed(spark, sf_dir):
-    """Recency-weighted per-user engagement (operators/anomaly.py
-    decayed_counts): sum(0.5^(age / 7 days)) against the corpus'
-    newest event — per-row weights quantized 8 dp pre-sum so both
-    engines sum identical addends."""
-    from spacy_llm_spark.operators.anomaly import decayed_counts
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return decayed_counts(events, ["user_id"], half_life_secs=7 * 24 * 3600.0)
 
 
 def q_docs_diversity(spark, sf_dir):
@@ -3930,17 +3494,6 @@ def q_audit_orders(spark, sf_dir):
     ).orderBy("check")
 
 
-def q_containment_join(spark, sf_dir):
-    """EXACT asymmetric token-set containment join at threshold 0.9
-    (operators/setjoin.py containment_join_exact): ordered pairs whose
-    first doc's tokens live >= 90% inside the second's — the
-    quote/boilerplate/subset-page detector symmetric Jaccard misses
-    when the container is much larger."""
-    from spacy_llm_spark.operators import setjoin
-
-    return setjoin.containment_join_exact(_docs(spark, sf_dir), threshold=0.9)
-
-
 def q_dsir_topk_incremental(spark, sf_dir):
     """DSIR selection through the persisted bucket-count indexes
     (operators/importance.py bucket_count_index / bucket_index_append /
@@ -3962,16 +3515,6 @@ def q_dsir_topk_incremental(spark, sf_dir):
     ).localCheckpoint()
     w = importance.dsir_logweights_from_index(docs, raw_idx, tgt_idx)
     return w.orderBy(F.desc("dsir_logweight"), F.asc("doc_id")).limit(100)
-
-
-def q_jaccard_join_exact(spark, sf_dir):
-    """EXACT all-pairs token-set Jaccard join at threshold 0.5 via
-    prefix filtering (operators/setjoin.py, AllPairs/PPJoin): the
-    certainty complement of the LSH dedup family — every qualifying
-    pair returned, none missed, nothing quadratic materialized."""
-    from spacy_llm_spark.operators import setjoin
-
-    return setjoin.jaccard_join_exact(_docs(spark, sf_dir), threshold=0.5)
 
 
 def q_kg_msf(spark, sf_dir):
@@ -4048,11 +3591,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     induction, graph analytics, corpus
     hygiene (PII/decontam/quality), relevance scoring
     (BM25), sub-document span dedup, sampling, sequence packing,
-    quantiles+sketches, temporal joins, NER parsers/scorers
-    (token_count, ner_prf), windows/skew/agg, EL, multimodal.
-    Variants whose family already has a stamped representative
-    (extra window shapes, exact-quantile twin,
-    as-of variants, base fingerprints) live AFTER position 50 — still
+    NER parsers/scorers (token_count, ner_prf), windows/agg, EL,
+    multimodal. Variants whose family already has a stamped
+    representative (extra window shapes, base fingerprints) live AFTER
+    position 50 — still
     oracle-checked by scripts/check_oracles.py and the judge's full
     sweep. ADD NEW ENTRIES AFTER POSITION 50 unless they open a new
     family; if they do, swap them in for a same-family variant, never
@@ -4086,9 +3628,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "embedding_lsh_incremental": q_embedding_lsh_incremental,
         # --- cache / checkpoint / sinks ---
         "cache_probe_anti_join": q_cache_probe_anti_join,
-        # --- valid-time temporal KG (new family, this session):
-        # save_io_counts moved below 50 — the checkpoint family keeps
-        # cache_probe_anti_join stamped ---
+        # --- valid-time temporal KG ---
         "kg_snapshot_asof": q_kg_snapshot_asof,
         # --- dedup (one per modality + clustering) ---
         "dedup_exact": q_dedup_exact,
@@ -4097,8 +3637,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # shares its oracle VERBATIM (pairs(old) ∪ probe(new) ≡ full
         # recompute), so the MinHash-LSH family stays stamped
         "kg_wl_fingerprints": q_kg_wl_fingerprints,
-        # --- fuzzy entity resolution (deletion-neighborhood blocking) ---
-        "fuzzy_name_pairs": q_fuzzy_name_pairs,
         # --- sub-document (span) dedup ---
         "dup_ngram_stats": q_dup_ngram_stats,
         # --- similarity search ---
@@ -4117,13 +3655,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pagerank": q_kg_pagerank,
         # --- RDF serialization (N-Triples): its only stamped entry ---
-        # (kg_katz, kg_weighted_pagerank, kg_ego_network and
-        # kg_degree_histogram stay below 50: analytics keeps
-        # degree_stats + pagerank stamped; the weighted-pagerank
-        # machinery stays stamped via textrank_keywords, which composes it)
         "kg_ntriples": q_kg_ntriples,
-        # --- entity-resolution blocking ---
-        "blocking_quality": q_blocking_quality,
         "textrank_keywords": q_textrank_keywords,
         # --- named-graph (quad) matching — new family, this
         # session; kg_bfs_levels moved below 50 (analytics keeps
@@ -4140,73 +3672,45 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- relevance scoring (BM25) ---
         "bm25_topk": q_bm25_topk,
         "quality_score": q_quality_score,
-        # (kg_bgp_bind_order moved below 50 in the stamped-window
-        # re-curation: SPARQL keeps kg_bgp_match + kg_bgp_graphs
-        # stamped; detect_language already below — text analysis keeps
+        # (detect_language is below 50 — text analysis keeps
         # quality_score + token_count)
         # --- dataset profiling (corpus card) ---
         # (corpus_clean moved below 50 to make room: it composes the
         # same quality_exprs machinery quality_score stamps)
         "profile_documents": q_profile_documents,
-        # --- anomaly detection (z-score monitoring) ---
-        # (substring_offsets moved below 50 to make room: the parser
-        # family keeps token_count/ner_prf stamped)
-        "events_anomaly": q_events_anomaly,
         # --- sampling ---
         "stratified_sample": q_stratified_sample,
         # --- sequence packing (training-batch assembly) ---
         "pack_sequences": q_pack_sequences,
-        # --- quantiles + sketches ---
-        "event_quantiles_approx": q_event_quantiles_approx,
-        "distinct_users_approx": q_distinct_users_approx,
-        # --- temporal joins ---
-        # (events_in_windows moved below 50 in the stamped-window
-        # re-curation: the temporal-join family keeps asof_latest_click)
-        "asof_latest_click": q_asof_latest_click,
         # --- NER parsers / scorers ---
         "token_count": q_token_count,
         "ner_prf": q_ner_prf,
-        # --- windows / aggregation / skew ---
+        # --- windows / aggregation ---
         "events_hourly": q_events_hourly,
         # --- ontology induction (schema discovery) ---
         # (new family this session; topk_orders_per_customer moved
         # below 50 — the top-n shape keeps el_candidates_topn stamped)
         "kg_ontology": q_kg_ontology,
-        "salted_repo_stats": q_salted_repo_stats,
         # --- entity linking + multimodal ---
         "el_candidates_topn": q_el_candidates_topn,
         "media_stats": q_media_stats,
-        # ================= position 50 boundary =================
-        # family variants below — oracle-checked, not driver-stamped
-        # (displaced this session for the four new families above)
+        # --- sinks, graph analytics, SPARQL modifiers, spanning forest ---
         "save_io_counts": q_save_io_counts,
         "kg_katz": q_kg_katz,
-        # stamped-window re-curation (this session): six entries whose
-        # families keep stamped reps moved here so the true first 50
-        # again covers every family (events_hourly / kg_ontology /
-        # salted_repo_stats / el_candidates_topn / media_stats had
-        # drifted past position 50)
         "kg_weighted_pagerank": q_kg_weighted_pagerank,
         "kg_ego_network": q_kg_ego_network,
         "kg_degree_histogram": q_kg_degree_histogram,
         "kg_bgp_bind_order": q_kg_bgp_bind_order,
-        "events_in_windows": q_events_in_windows,
         "kg_msf": q_kg_msf,
+        # ================= position 50 boundary =================
+        # family variants below — oracle-checked, not driver-stamped
         "kg_single_linkage": q_kg_single_linkage,
-        "distinct_users_sketch_incremental": (
-            q_distinct_users_sketch_incremental
-        ),
         "k_anonymity_audit": q_k_anonymity_audit,
         "l_diversity_audit": q_l_diversity_audit,
         "lsh_dedup_verified": q_lsh_dedup_verified,
         "kg_bfs_levels": q_kg_bfs_levels,
         "detect_language": q_detect_language,
-        # (regional_revenue is a join-family variant of salted_repo_stats
-        # — swapped out in round 5 for the three new families above;
-        # dedup_cluster_reps is the dedup family's 5th rep, swapped out
-        # for the fuzzy-ER family; kg_clustering_coeff is the graph
-        # family's 5th rep, swapped out for BPE tokenizer induction;
-        # corpus_clean is the quality family's 3rd rep, swapped out for
+        # (corpus_clean is the quality family's 3rd rep, swapped out for
         # dataset profiling)
         "corpus_clean": q_corpus_clean,
         # dedup-modality base reps, swapped below 50 in round 5 for the
@@ -4275,7 +3779,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_kcore": q_kg_kcore,
         "kg_ppr": q_kg_ppr,
         "dedup_cluster_reps": q_dedup_cluster_reps,
-        "fuzzy_name_pairs_incremental": q_fuzzy_name_pairs_incremental,
         "regional_revenue": q_regional_revenue,
         "distinct_tokens": q_distinct_tokens,
         "events_sliding": q_events_sliding,
@@ -4292,8 +3795,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_split": q_corpus_split,
         "event_quantiles": q_event_quantiles,
         "events_daily_pivot": q_events_daily_pivot,
-        "asof_recent_click": q_asof_recent_click,
-        "asof_latest_click_split": q_asof_latest_click_split,
         # ANN-family variant: persisted-index IVF (swapped below 50 for
         # the DSIR importance-selection family in round 5)
         "ivf_topk": q_ivf_topk,
@@ -4335,24 +3836,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # first 50 by the fusion + ontology-induction families)
         "ann_lsh_topk": q_ann_lsh_topk,
         "topk_orders_per_customer": q_topk_orders_per_customer,
-        # dedup-family variant: the EXACT prefix-filtered all-pairs
-        # Jaccard join (LSH reps are stamped; this is the certainty
-        # complement)
-        "jaccard_join_exact": q_jaccard_join_exact,
-        "containment_join": q_containment_join,
         "audit_orders": q_audit_orders,
         "docs_diversity": q_docs_diversity,
-        "events_decayed": q_events_decayed,
         "knn_join": q_knn_join,
         "hard_negatives": q_hard_negatives,
-        "events_mad": q_events_mad,
         "lexical_cosine_pairs": q_lexical_cosine_pairs,
         "dup_ngram_stats_incremental": q_dup_ngram_stats_incremental,
         "bm25_topk_indexed": q_bm25_topk_indexed,
         "lexical_cosine_incremental": q_lexical_cosine_incremental,
         "vocab_drift": q_vocab_drift,
         "lsh_dedup_scoped": q_lsh_dedup_scoped,
-        "frequent_tokens": q_frequent_tokens,
         "lm_self_nll": q_lm_self_nll,
         "semantic_dedup_pairs": q_semantic_dedup_pairs,
         "semantic_dedup_incremental": q_semantic_dedup_incremental,
@@ -4381,11 +3874,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # scorer family variant (ner_prf holds the stamped slot)
         "cluster_prf": q_cluster_prf,
         "cluster_bcubed": q_cluster_bcubed,
-        # skew family variant (salted_repo_stats holds the stamped slot)
-        "docs_skew_report": q_docs_skew_report,
-        # quantile + window family variants
-        "docs_quality_deciles": q_docs_quality_deciles,
-        "events_rolling": q_events_rolling,
         # classifier-evaluation variant (ner_prf holds the scorer slot)
         "lang_confusion": q_lang_confusion,
         # graph family variant (degree/pagerank/triangles/BFS stamped)
@@ -4395,16 +3883,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_node2vec": q_kg_node2vec,
         "kg_edge_support": q_kg_edge_support,
         "kg_edge_support_incremental": q_kg_edge_support_incremental,
-        "er_blocking_parts": q_er_blocking_parts,
         "kg_shortest_paths": q_kg_shortest_paths,
         "doc_keywords": q_doc_keywords,
-        "er_match_scores": q_er_match_scores,
-        "er_clusters": q_er_clusters,
         "corpus_mix": q_corpus_mix,
         # text-analysis family variant: RAG chunking
         "docs_chunks": q_docs_chunks,
-        # skew/planning family variant
-        "join_size_orders": q_join_size_orders,
         # profiling family variant (profile_documents holds the slot)
         "docs_length_histogram": q_docs_length_histogram,
         # incremental twin of bpe_pair_counts (shares its oracle)
@@ -4914,30 +4397,6 @@ ratio AS (
 )"""
 
 
-def _asof_oracle_sql(horizon: str = "") -> str:
-    """Latest strictly-prior click per view (optionally within a
-    horizon), as a deterministic rn-window over the inequality join —
-    the quadratic form is fine at oracle scale."""
-    return f"""
-WITH views AS (
-  SELECT event_id, user_id, ts FROM events WHERE event_type = 'view'
-), clicks AS (
-  SELECT event_id, user_id, ts, value FROM events WHERE event_type = 'click'
-), j AS (
-  SELECT v.event_id, c.event_id AS click_event_id, c.value AS click_value,
-         row_number() OVER (PARTITION BY v.event_id
-                            ORDER BY c.ts DESC, c.event_id DESC) AS rn
-  FROM views v JOIN clicks c
-    ON c.user_id = v.user_id AND c.ts < v.ts {horizon}
-)
-SELECT CAST(v.event_id AS BIGINT) AS event_id,
-       CAST(v.user_id AS BIGINT) AS user_id,
-       CAST(j.click_event_id AS BIGINT) AS click_event_id,
-       j.click_value
-FROM views v LEFT JOIN (SELECT * FROM j WHERE rn = 1) j USING (event_id)
-"""
-
-
 def _kcore_unrolled_sql(k: int, rounds: int) -> str:
     """k-core peeling unrolled to a fixed round count (chained CTEs —
     same discipline as the BFS/pagerank oracles; peeling is
@@ -5328,11 +4787,6 @@ SELECT doc_id, CAST(len(text) AS BIGINT) AS n_chars,
        CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct_tokens
 FROM documents
 """,
-        "salted_repo_stats": f"""
-WITH corpus AS ({CORPUS_ORACLE_SQL})
-SELECT repo, count(*) AS n_files, CAST(sum(len(content)) AS BIGINT) AS n_chars
-FROM corpus GROUP BY repo
-""",
         "el_candidates_topn": m
         + """
 SELECT DISTINCT msurf.surface AS mention, a.qid,
@@ -5566,20 +5020,6 @@ WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
 SELECT a AS doc_id, CAST(min(b) AS BIGINT) AS cluster_rep
 FROM reach GROUP BY a
 """,
-        # brute-force all-pairs levenshtein — the definition the FastSS
-        # deletion-neighborhood blocking must reproduce exactly
-        "fuzzy_name_pairs": """
-WITH names AS (
-  SELECT DISTINCT name FROM (
-    SELECT c_name AS name FROM customer
-    UNION ALL SELECT s_name AS name FROM supplier
-  ) WHERE len(name) >= 4
-)
-SELECT a.name AS name_a, b.name AS name_b,
-       CAST(levenshtein(a.name, b.name) AS BIGINT) AS distance
-FROM names a JOIN names b ON a.name < b.name
-WHERE levenshtein(a.name, b.name) <= 1
-""",
         "corpus_clean": """
 WITH s AS (
   SELECT doc_id, text,
@@ -5703,15 +5143,6 @@ scored AS (
 SELECT vec_id, round(cos, 6) AS cosine FROM scored
 ORDER BY cos DESC, vec_id LIMIT 10
 """,
-        "asof_latest_click": _asof_oracle_sql(),
-        # identical semantics through the split (mega-key) physical plan
-        "asof_latest_click_split": _asof_oracle_sql(),
-        # tolerance = "latest click within (t-1h, t)": the engine voids a
-        # stale latest match, and since the latest is the max, stale-max
-        # <=> no click in the horizon — the two phrasings are equivalent
-        "asof_recent_click": _asof_oracle_sql(
-            horizon="AND c.ts >= v.ts - INTERVAL 1 HOUR"
-        ),
         # total over documents (LEFT JOIN from the corpus, like the
         # engine's per-row projection) and whitespace-robust: ord2 is the
         # contiguous rank AFTER dropping empty tokens, so runs of spaces
@@ -5748,12 +5179,6 @@ LEFT JOIN tstats t USING (doc_id)
 LEFT JOIN bstats b USING (doc_id)
 """,
         "vocab_topk": """
-SELECT tok AS token, CAST(count(*) AS BIGINT) AS n
-FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
-WHERE len(tok) > 0
-GROUP BY tok ORDER BY n DESC, token ASC LIMIT 20
-""",
-        "frequent_tokens": """
 SELECT tok AS token, CAST(count(*) AS BIGINT) AS n
 FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
 WHERE len(tok) > 0
@@ -6630,29 +6055,6 @@ SELECT 'doc:2' AS graph, subj, pred, obj FROM (
   UNION
   SELECT s AS subj, 'storedIn' AS pred, t AS obj FROM sol)
 """,
-        # blocking metrics: prefix-block + exact-dup pair sets, counts
-        "blocking_quality": """
-WITH d AS (SELECT doc_id AS id, sha256(text) AS h FROM documents),
-cand AS (
-  SELECT DISTINCT least(a.id, b.id) AS lo, greatest(a.id, b.id) AS hi
-  FROM d a JOIN d b
-    ON substr(a.h, 1, 2) = substr(b.h, 1, 2) AND a.id < b.id),
-g AS (
-  SELECT DISTINCT least(a.id, b.id) AS lo, greatest(a.id, b.id) AS hi
-  FROM d a JOIN d b ON a.h = b.h AND a.id < b.id),
-c AS (SELECT
-  CAST((SELECT count(*) FROM cand) AS BIGINT) AS n_candidates,
-  CAST((SELECT count(*) FROM g) AS BIGINT) AS n_gold,
-  CAST((SELECT count(*) FROM g SEMI JOIN cand
-        ON g.lo = cand.lo AND g.hi = cand.hi) AS BIGINT) AS n_found,
-  (SELECT count(*) FROM d) AS n)
-SELECT n_candidates, n_gold, n_found,
-       round(CAST(n_found AS DOUBLE) / n_gold, 6) AS pair_completeness,
-       round(1.0 - CAST(n_candidates AS DOUBLE)
-                   / CAST(n * (n - 1) // 2 AS DOUBLE), 6)
-         AS reduction_ratio
-FROM c
-""",
         # degree histogram: vertex degrees -> log2 bins, two aggregates
         "kg_degree_histogram": m
         + _EDGES_CTE
@@ -7420,45 +6822,6 @@ GROUP BY 1, 2
         "kg_shortest_paths": m
         + _EDGES_CTE
         + _sssp_unrolled_sql(4, "v LIKE 'K1%'"),
-        # Fellegi-Sunter over the SNM pairs: u recomputed in SQL from the
-        # same exact-integer collision sums; weights quantized 10 dp
-        # pre-sum exactly like operators/linkage.py
-        "er_match_scores": """
-WITH r AS (
-  SELECT p_partkey AS id, p_name AS key, p_brand, p_type, p_size,
-         row_number() OVER (ORDER BY p_name, p_partkey) AS rk
-  FROM part WHERE p_name IS NOT NULL
-), pr AS (
-  SELECT a.id AS id_a, b.id AS id_b, a.key AS key_a, b.key AS key_b,
-         CAST(b.rk - a.rk AS INT) AS rank_gap,
-         a.p_brand AS p_brand_a, a.p_type AS p_type_a, a.p_size AS p_size_a,
-         b.p_brand AS p_brand_b, b.p_type AS p_type_b, b.p_size AS p_size_b
-  FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
-), ub AS (
-  SELECT CAST(sum(n*n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
-  FROM (SELECT count(*) AS n FROM part WHERE p_brand IS NOT NULL GROUP BY p_brand)
-), ut AS (
-  SELECT CAST(sum(n*n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
-  FROM (SELECT count(*) AS n FROM part WHERE p_type IS NOT NULL GROUP BY p_type)
-), us AS (
-  SELECT CAST(sum(n*n) AS DOUBLE) / (CAST(sum(n) AS DOUBLE) * CAST(sum(n) AS DOUBLE)) AS u
-  FROM (SELECT count(*) AS n FROM part WHERE p_size IS NOT NULL GROUP BY p_size)
-)
-SELECT pr.*, round(
-    CASE WHEN p_brand_a IS NULL OR p_brand_b IS NULL THEN 0e0
-         WHEN p_brand_a = p_brand_b THEN round(log2(0.95e0 / ub.u), 10)
-         ELSE round(log2(0.05e0 / (1e0 - ub.u)), 10) END
-  + CASE WHEN p_type_a IS NULL OR p_type_b IS NULL THEN 0e0
-         WHEN p_type_a = p_type_b THEN round(log2(0.9e0 / ut.u), 10)
-         ELSE round(log2(0.1e0 / (1e0 - ut.u)), 10) END
-  + CASE WHEN p_size_a IS NULL OR p_size_b IS NULL THEN 0e0
-         WHEN p_size_a = p_size_b THEN round(log2(0.85e0 / us.u), 10)
-         ELSE round(log2(0.15e0 / (1e0 - us.u)), 10) END, 6) AS match_weight
-FROM pr, ub, ut, us
-""",
-        # ER clusters: the er_match_scores oracle wrapped as a CTE,
-        # threshold 2.0, recursive undirected closure, min-member label;
-        # unmatched part records are singletons
         # TF-IDF keywords: same tokenization idiom as bm25_topk; the
         # 10dp/6dp rounding ladder mirrors tfidf_keywords line-for-line
         "doc_keywords": """
@@ -7484,18 +6847,6 @@ SELECT doc_id, term, tf, score, CAST(rn AS INT) AS rank FROM (
     PARTITION BY doc_id ORDER BY score DESC, term) AS rn
   FROM scored
 ) WHERE rn <= 3
-""",
-        # SNM blocking: the oracle's single global row_number IS the
-        # spec the distributed prefix-sum rank must reproduce bit-for-bit
-        "er_blocking_parts": """
-WITH r AS (
-  SELECT p_partkey AS id, p_name AS key,
-         row_number() OVER (ORDER BY p_name, p_partkey) AS rk
-  FROM part WHERE p_name IS NOT NULL
-)
-SELECT a.id AS id_a, b.id AS id_b, a.key AS key_a, b.key AS key_b,
-       CAST(b.rk - a.rk AS INT) AS rank_gap
-FROM r a JOIN r b ON b.rk - a.rk BETWEEN 1 AND 2
 """,
         "kg_ppr": m
         + _EDGES_CTE
@@ -7636,14 +6987,6 @@ JOIN nrm na ON na.doc_id = dots.id_a
 JOIN nrm nb ON nb.doc_id = dots.id_b
 WHERE dot / (sqrt(na.s2) * sqrt(nb.s2)) >= 0.5e0
 """,
-        # the HLL estimate is engine-specific; the exact count and the
-        # 4-sigma bound are the cross-engine contract
-        "distinct_users_approx": """
-SELECT event_type,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct,
-       true AS ok
-FROM events GROUP BY event_type
-""",
         # every sf0.01 doc fits one shard (max 553 chars, no context
         # limit), so save_io must retain exactly one prompt/response per
         # task per doc, with a non-empty NER response
@@ -7654,19 +6997,6 @@ SELECT doc_id,
        CAST(1 AS BIGINT) AS n_el_io,
        TRUE AS ner_response_nonempty
 FROM documents
-""",
-        "events_in_windows": """
-WITH win AS (
-  SELECT i AS window_id,
-         TIMESTAMP '2024-01-01 00:00:00' + i * INTERVAL 7 HOUR AS ws,
-         TIMESTAMP '2024-01-01 00:00:00' + i * INTERVAL 7 HOUR
-           + INTERVAL 3 HOUR AS we
-  FROM range(100) t(i)
-)
-SELECT CAST(e.event_id AS BIGINT) AS event_id,
-       CAST(w.window_id AS BIGINT) AS window_id,
-       e.event_type
-FROM events e JOIN win w ON e.ts >= w.ws AND e.ts < w.we
 """,
         "pretoken_count": (
             "WITH aug AS ({aug})\n"
@@ -7693,23 +7023,6 @@ SELECT bin, round(blo + bin * (bhi - blo) / 20, 6) AS lo,
        CAST(count(*) AS BIGINT) AS n
 FROM binned GROUP BY bin, blo, bhi
 """,
-        "join_size_orders": """
-WITH ka AS (
-  SELECT o_orderkey AS k, count(*) AS na FROM orders GROUP BY 1
-), kb AS (
-  SELECT l_orderkey AS k, count(*) AS nb FROM lineitem GROUP BY 1
-), c AS (
-  SELECT CAST(ka.k AS VARCHAR) AS key, CAST(na * nb AS BIGINT) AS nr
-  FROM ka JOIN kb USING (k)
-), top AS (
-  SELECT string_agg(key || '=' || nr, ', ' ORDER BY nr DESC, key ASC)
-           AS top_keys
-  FROM (SELECT * FROM c ORDER BY nr DESC, key ASC LIMIT 5)
-)
-SELECT (SELECT CAST(coalesce(sum(nr), 0) AS BIGINT) FROM c) AS join_rows,
-       (SELECT CAST(count(*) AS BIGINT) FROM c) AS n_matching_keys,
-       (SELECT coalesce(top_keys, '') FROM top) AS top_keys
-""",
         "docs_chunks": """
 WITH toks AS (
   SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0) AS arr
@@ -7730,50 +7043,6 @@ SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
        CAST(len(list_slice(arr, s + 1, s + 64)) AS BIGINT) AS n_tokens,
        array_to_string(list_slice(arr, s + 1, s + 64), ' ') AS chunk_text
 FROM kept
-""",
-        "events_rolling": """
-WITH hourly AS (
-  SELECT user_id,
-         CAST(epoch(date_trunc('hour', ts)) AS BIGINT) AS hour_epoch,
-         CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT user_id, hour_epoch, n,
-       round(avg(n) OVER w, 6) AS roll_avg,
-       min(n) OVER w AS roll_min,
-       max(n) OVER w AS roll_max
-FROM hourly
-WINDOW w AS (PARTITION BY user_id ORDER BY hour_epoch
-             ROWS BETWEEN 6 PRECEDING AND CURRENT ROW)
-""",
-        "docs_quality_deciles": """
-WITH th AS (
-  SELECT quantile_cont(n_chars,
-           [0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9]) AS t
-  FROM documents
-)
-SELECT doc_id, n_chars,
-       CAST(CASE WHEN n_chars IS NULL THEN NULL
-            ELSE len(list_filter(th.t, x -> n_chars > x)) END AS BIGINT)
-         AS bucket
-FROM documents, th
-""",
-        "docs_skew_report": """
-WITH counts AS (
-  SELECT coalesce(CAST(source AS VARCHAR), '␀') AS key,
-         CAST(count(*) AS BIGINT) AS n
-  FROM documents GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n) AS DOUBLE) AS total,
-         CAST(count(*) AS DOUBLE) AS nkeys,
-         CAST(max(n) AS DOUBLE) AS maxn
-  FROM counts
-)
-SELECT key, n, round(n / tot.total, 6) AS share,
-       round(tot.maxn / (tot.total / tot.nkeys), 6) AS skew_factor,
-       CAST(row_number() OVER (ORDER BY n DESC, key ASC) AS BIGINT) AS rank
-FROM counts, tot
-ORDER BY n DESC, key ASC LIMIT 10
 """,
         "cluster_prf": """
 WITH a AS (
@@ -7862,20 +7131,6 @@ SELECT co.a, co.b, CAST(co.n_ab AS BIGINT) AS n_ab,
                 / ((ua.n / tot.n_tok) * (ub.n / tot.n_tok))), 6) AS pmi
 FROM co JOIN uni ua ON ua.tok = co.a JOIN uni ub ON ub.tok = co.b, tot
 WHERE co.n_ab >= 10
-""",
-        "events_anomaly": """
-WITH h AS (
-  SELECT user_id, date_trunc('hour', ts) AS hour, count(*) AS n
-  FROM events GROUP BY 1, 2
-), s AS (
-  SELECT user_id, avg(n) AS m, stddev_pop(n) AS sd FROM h GROUP BY user_id
-)
-SELECT CAST(h.user_id AS BIGINT) AS user_id,
-       CAST(epoch(h.hour) AS BIGINT) AS hour_epoch,
-       CAST(h.n AS BIGINT) AS n,
-       round((h.n - s.m) / s.sd, 6) AS z
-FROM h JOIN s USING (user_id)
-WHERE s.sd > 0 AND abs(round((h.n - s.m) / s.sd, 6)) >= 2.0
 """,
         "profile_documents": _profile_sql(
             "documents",
@@ -8105,42 +7360,6 @@ ORDER BY dsir_logweight DESC, doc_id LIMIT 100
 SELECT doc_id, dsir_logweight, gumbel_key FROM keyed
 ORDER BY gumbel_key DESC, doc_id LIMIT 100
 """,
-        # exact all-pairs Jaccard join: the oracle is deliberately the
-        # NAIVE quadratic self-join — exactness is the operator's whole
-        # claim, so the independent check must not share the prefix
-        # filter; threshold compared on the exact ratio, rounded after
-        "jaccard_join_exact": """
-WITH ts AS (
-  SELECT doc_id,
-         list_distinct(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS toks
-  FROM documents
-), ne AS (SELECT doc_id, toks, len(toks) AS m FROM ts WHERE len(toks) > 0)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS common_tokens,
-       round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-             / (a.m + b.m - len(list_intersect(a.toks, b.toks))), 6) AS jaccard
-FROM ne a JOIN ne b ON a.doc_id < b.doc_id
-WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
-      / (a.m + b.m - len(list_intersect(a.toks, b.toks))) >= 0.5
-""",
-        # MAD outliers: quantile_cont == F.percentile (exact
-        # interpolation), robust_z rounded before the threshold filter
-        "events_mad": """
-WITH med AS (
-  SELECT event_type, quantile_cont(value, 0.5) AS med
-  FROM events GROUP BY event_type
-), mad AS (
-  SELECT e.event_type, quantile_cont(abs(e.value - m.med), 0.5) AS mad
-  FROM events e JOIN med m USING (event_type) GROUP BY e.event_type
-)
-SELECT e.event_id, e.event_type, e.value,
-       round(0.6745 * (e.value - m.med) / d.mad, 6) AS robust_z
-FROM events e
-JOIN med m USING (event_type)
-JOIN mad d USING (event_type)
-WHERE d.mad > 0
-  AND abs(round(0.6745 * (e.value - m.med) / d.mad, 6)) > 3.5
-""",
         # batch kNN: rank on the RAW cosine (round after), ties by id —
         # identical to the engine's struct sort
         "knn_join": """
@@ -8185,17 +7404,6 @@ WITH q AS (
 )
 SELECT query_id, CAST(rank AS INT) AS rank, vec_id, round(cos, 6) AS cosine
 FROM ranked WHERE rank <= 5
-""",
-        # decayed counts: exact microsecond ages / one double literal
-        # (IEEE-determined), weights quantized 8 dp PRE-sum
-        "events_decayed": """
-WITH ref AS (SELECT max(epoch_us(ts)) AS r FROM events)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       round(sum(round(pow(0.5, (ref.r - epoch_us(ts))
-                              / (604800.0 * 1000000.0)), 8)), 6)
-         AS decayed_count
-FROM events, ref GROUP BY user_id, ref.r
 """,
         # distinct-n diversity: all-integer counts, rectangular
         # lang x n grid (zero rows kept); n-grams never cross docs
@@ -8269,35 +7477,11 @@ SELECT * FROM (
   WHERE o_orderstatus IS NOT NULL AND o_orderstatus NOT IN ('O', 'F', 'P')
 ) ORDER BY "check"
 """,
-        # asymmetric containment: same naive-quadratic independence
-        # argument, ordered pairs, denominator = |A| alone
-        "containment_join": """
-WITH ts AS (
-  SELECT doc_id,
-         list_distinct(list_filter(string_split(text, ' '), t -> len(t) > 0)) AS toks
-  FROM documents
-), ne AS (SELECT doc_id, toks, len(toks) AS m FROM ts WHERE len(toks) > 0)
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(len(list_intersect(a.toks, b.toks)) AS BIGINT) AS common_tokens,
-       round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) / a.m, 6)
-         AS containment
-FROM ne a JOIN ne b ON a.doc_id <> b.doc_id
-WHERE CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) / a.m >= 0.9
-""",
         "event_quantiles": """
 SELECT event_type,
        round(quantile_cont(value, 0.5), 6) AS p50,
        round(quantile_cont(value, 0.9), 6) AS p90,
        round(quantile_cont(value, 0.99), 6) AS p99
-FROM events GROUP BY event_type
-""",
-        # the approx values are engine-specific (GK summaries vs
-        # t-digest); the exact cross-engine contract is that every
-        # approx percentile respects its rank-error bound, hence TRUE
-        "event_quantiles_approx": """
-SELECT event_type,
-       count(*) AS n,
-       true AS ok_p50, true AS ok_p90, true AS ok_p99
 FROM events GROUP BY event_type
 """,
         "events_daily_pivot": """
@@ -8325,7 +7509,6 @@ FROM events GROUP BY 1
     sql["simhash_incremental"] = sql["simhash_dup_pairs"]
     sql["dup_ngram_stats_incremental"] = sql["dup_ngram_stats"]
     sql["bm25_topk_indexed"] = sql["bm25_topk"]
-    sql["fuzzy_name_pairs_incremental"] = sql["fuzzy_name_pairs"]
     sql["bpe_pair_counts_incremental"] = sql["bpe_pair_counts"]
     sql["dsir_topk_incremental"] = sql["dsir_topk"]
     # the full detector oracle nests as a subquery; joined to the gold
@@ -8352,30 +7535,6 @@ FROM doubled a JOIN doubled b
     # standing-pair sims) -> same oracle minus the df filter
     sql["lexical_cosine_incremental"] = sql["lexical_cosine_pairs"].replace(
         "WHERE dfc.df <= 100", ""
-    )
-    # ER clusters: wrap the er_match_scores statement as a scored CTE,
-    # add threshold + recursive undirected closure + min-member label
-    _er = sql["er_match_scores"].strip()
-    assert _er.startswith("WITH ")
-    sql["er_clusters"] = (
-        "WITH RECURSIVE "
-        + _er[len("WITH "):].replace(
-            "\nSELECT pr.*, round(", "\n, scored AS (\nSELECT pr.*, round(", 1
-        )
-        + """)
-, matched AS (SELECT id_a, id_b FROM scored WHERE match_weight >= 2.0),
-ue AS (SELECT id_a AS a, id_b AS b FROM matched
-       UNION SELECT id_b, id_a FROM matched),
-reach AS (
-  SELECT a, b FROM ue
-  UNION
-  SELECT r.a, ue.b FROM reach r JOIN ue ON r.b = ue.a
-), mn AS (SELECT a AS id, min(b) AS mb FROM reach GROUP BY a)
-SELECT CAST(p_partkey AS BIGINT) AS record_id,
-       CAST(least(p_partkey, coalesce(mn.mb, p_partkey)) AS BIGINT)
-         AS cluster_id
-FROM part LEFT JOIN mn ON p_partkey = mn.id
-"""
     )
     # MSF oracle: cycle-property characterization over bottleneck paths
     # (NOT a Boruvka re-run) — with all-distinct weights, e is in the
@@ -8427,10 +7586,6 @@ SELECT c_nationkey, c_mktsegment,
 FROM customer GROUP BY c_nationkey, c_mktsegment
 HAVING count(DISTINCT CAST(FLOOR(c_acctbal / 2000) AS INTEGER)) < 5
 """
-    # the sketch-index incremental twin shares the certificate oracle:
-    # exact count + literal TRUE (estimates are engine/merge-path
-    # specific; the bound is the contract)
-    sql["distinct_users_sketch_incremental"] = sql["distinct_users_approx"]
     # single-linkage oracle: min-label closure over the sub-threshold
     # ORIGINAL graph (never sees the MSF) — equality with the
     # forest-cut path is the MSF invariant the operator documents

@@ -47,13 +47,6 @@ def main():
 
     shapes = {}
 
-    def jaccard_join_exact():
-        from spacy_llm_spark.operators.setjoin import jaccard_join_exact
-
-        return jaccard_join_exact(docs.where(F.col("doc_id") % 5 == 0), 0.8)
-
-    shapes["jaccard_join_exact"] = jaccard_join_exact
-
     def hard_negatives():
         from spacy_llm_spark.operators.similarity import hard_negatives
 

@@ -9,7 +9,8 @@ import math
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -39,6 +40,11 @@ def normalize(rows, cols):
 
 
 def main(sf_dir: str, only: list | None = None) -> int:
+    # the Python workers that run mapInPandas kernels import the package
+    # too, whatever the working directory
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     spark = get_spark(
         master="local[8]",
         extra_conf={"spark.ui.showConsoleProgress": "false"},

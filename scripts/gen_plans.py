@@ -140,65 +140,7 @@ def main():
         explain_str(round_df),
     ))
 
-    # 8. as-of join: ONE hash exchange, a running window, zero join operators
-    from spacy_llm_spark.operators.asof import asof_join
-
-    events = spark.read.parquet(f"{SF}/events.parquet")
-    views = events.where(F.col("event_type") == "view").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = events.where(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_event_id"),
-        "user_id",
-        F.col("ts").alias("cts"),
-        F.col("value").alias("click_value"),
-    )
-    asof = asof_join(
-        views, clicks, on="user_id", left_time="ts", right_time="cts",
-        right_cols=["click_event_id", "click_value"], strict=True,
-    )
-    sections.append((
-        "As-of join: union + running-last window, no join operator",
-        "Both sides union into one stream and a single `Exchange "
-        "hashpartitioning(_k)` feeds a running `last(payload, ignorenulls)` "
-        "window — |L|+|R| rows through one shuffle, versus the O(|L|x|R|) "
-        "BroadcastNestedLoopJoin a naive `t_right <= t_left` range predicate "
-        "would plan. There is no Join node anywhere in this plan.",
-        explain_str(asof),
-    ))
-
-    # 9. interval join: bucketized equi-join instead of a nested loop
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    windows = spark.range(100).select(
-        F.col("id").alias("window_id"),
-        (
-            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-            + F.col("id") * F.expr("INTERVAL 7 HOURS")
-        ).alias("ws"),
-        (
-            F.lit("2024-01-01 00:00:00").cast("timestamp_ntz")
-            + F.col("id") * F.expr("INTERVAL 7 HOURS")
-            + F.expr("INTERVAL 3 HOURS")
-        ).alias("we"),
-    )
-    ij = interval_join(
-        events.select("event_id", "ts", "event_type"), windows,
-        point_time="ts", start="ws", end="we", bucket_secs=3 * 3600,
-    )
-    sections.append((
-        "Interval (range) join: explode-to-buckets + hash equi-join",
-        "The interval side explodes into its covered time buckets and the "
-        "plan is a plain equi-join on `_b` (SortMergeJoin/ShuffledHashJoin — "
-        "AQE picks) followed by the exact containment Filter. No "
-        "BroadcastNestedLoopJoin / CartesianProduct, which is what Spark "
-        "plans for a raw `ts >= ws AND ts < we` predicate. (Window bounds "
-        "are built TIMESTAMP_NTZ to match the events column — the operator "
-        "refuses mixed timestamp flavors.)",
-        explain_str(ij),
-    ))
-
-    # 10. degree-oriented triangle counting: every join is an equi-join
+    # 8. degree-oriented triangle counting: every join is an equi-join
     from spacy_llm_spark.operators import graph as graph_op
 
     edges_df = spark.createDataFrame(
@@ -217,38 +159,7 @@ def main():
         explain_str(tri),
     ))
 
-    # 11. certified approximate quantiles: ONE aggregation
-    from spacy_llm_spark.operators import quantiles as qt
-
-    cert = qt.approx_quantile_certificate(
-        events, "value", ["event_type"], accuracy=10_000
-    )
-    sections.append((
-        "Approximate-quantile certificate: approx + exact bounds in ONE aggregation",
-        "percentile_approx (GK summaries, the 100 TB path) and the exact "
-        "bound percentiles ride the same ObjectHashAggregate: a single "
-        "Exchange on the group key, not one per metric. Production runs "
-        "use `approx_quantiles` alone; this certificate is the audit form "
-        "whose booleans the oracle pins.",
-        explain_str(cert),
-    ))
-
-    # 12. HLL sketch distinct: one narrow shuffle of sketches
-    from spacy_llm_spark.operators import sketches as sk
-
-    hll = sk.approx_distinct(events, "user_id", ["event_type"], rsd=0.02)
-    sections.append((
-        "HLL approx distinct: one narrow shuffle of mergeable sketches",
-        "approx_count_distinct aggregates partial HLL++ registers "
-        "map-side and shuffles ONE fixed-size sketch per (partition, "
-        "group) — compare the exact count(DISTINCT) plan, which must "
-        "shuffle on (group, value) and again on group. This is the "
-        "count(DISTINCT) replacement for high-cardinality columns at "
-        "corpus scale.",
-        explain_str(hll),
-    ))
-
-    # 13. bucketed join: both Exchanges elided by the table layout
+    # 9. bucketed join: both Exchanges elided by the table layout
     import tempfile
 
     from spacy_llm_spark.sources.bucketed import bucketed_join, write_bucketed
@@ -279,7 +190,7 @@ def main():
         spark.sql("DROP TABLE IF EXISTS p_orders")
         spark.sql("DROP TABLE IF EXISTS p_cust")
 
-    # 14. incremental canonical-edge maintenance: broadcast remap only
+    # 10. incremental canonical-edge maintenance: broadcast remap only
     from spacy_llm_spark.operators.canonicalize import canonical_edges
 
     triples = spark.createDataFrame(
@@ -300,7 +211,7 @@ def main():
         explain_str(canonical_edges(triples, vmap)),
     ))
 
-    # 15. BM25 direct path: one stats reduce, scoring projection, TakeOrdered
+    # 11. BM25 direct path: one stats reduce, scoring projection, TakeOrdered
     from spacy_llm_spark.functions.relevance import (
         bm25_index,
         bm25_query_from_index,
@@ -318,7 +229,7 @@ def main():
         explain_str(bm25_topk(docs, ["spark", "window", "dup"], k=25)),
     ))
 
-    # 16. BM25 from the persisted inverted index: term-filtered scan
+    # 12. BM25 from the persisted inverted index: term-filtered scan
     postings, doclens = bm25_index(docs)
     postings.write.mode("overwrite").parquet("/tmp/plans_bm25_postings")
     doclens.write.mode("overwrite").parquet("/tmp/plans_bm25_doclens")
@@ -334,7 +245,7 @@ def main():
         explain_str(bm25_query_from_index(p2, d2, ["spark", "window", "dup"], k=25)),
     ))
 
-    # 17. duplicated n-gram spans: projection -> one gram groupBy -> semi-join
+    # 13. duplicated n-gram spans: projection -> one gram groupBy -> semi-join
     from spacy_llm_spark.operators.dedup import duplicated_ngram_stats
 
     sections.append((
@@ -348,7 +259,7 @@ def main():
         explain_str(duplicated_ngram_stats(docs, n=3)),
     ))
 
-    # 18. sparse lexical all-pairs cosine: inverted-index equi-join
+    # 14. sparse lexical all-pairs cosine: inverted-index equi-join
     from spacy_llm_spark.operators.similarity import lexical_cosine_pairs
 
     sections.append((
@@ -361,7 +272,7 @@ def main():
         explain_str(lexical_cosine_pairs(docs, min_sim=0.5, n=3, max_df=100)),
     ))
 
-    # 19. multi-source BFS hop: expand equi-join + visited anti-join
+    # 15. multi-source BFS hop: expand equi-join + visited anti-join
     from spacy_llm_spark.operators.graph import bfs_levels
 
     bfs_edges = spark.createDataFrame(
@@ -380,7 +291,7 @@ def main():
         explain_str(bfs_levels(bfs_edges, bfs_seeds, max_hops=1)),
     ))
 
-    # 20. sequence packing: chunked prefix sum, no single-partition window
+    # 16. sequence packing: chunked prefix sum, no single-partition window
     from spacy_llm_spark.operators.packing import pack_sequences
 
     sections.append((
@@ -395,7 +306,7 @@ def main():
         explain_str(pack_sequences(docs, budget=2048, n_chunks=8)),
     ))
 
-    # 21. line dedup: one line-keyed count, anti join, doc reassembly
+    # 17. line dedup: one line-keyed count, anti join, doc reassembly
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -415,7 +326,7 @@ def main():
         ),
     ))
 
-    # 22. BPE: pair stats over the word table, rewrite as a narrow fold
+    # 18. BPE: pair stats over the word table, rewrite as a narrow fold
     from spacy_llm_spark.functions.bpe import (
         initial_symbols,
         merge_pair_expr,
@@ -437,7 +348,7 @@ def main():
         + explain_str(sym.withColumn("symbols", merge_pair_expr("e", "r"))),
     ))
 
-    # 23. single-pass profiler: one scan, one expand, one aggregate
+    # 19. single-pass profiler: one scan, one expand, one aggregate
     from spacy_llm_spark.operators.profile import profile_table
 
     sections.append((
@@ -451,25 +362,7 @@ def main():
         explain_str(profile_table(docs)),
     ))
 
-    # 24. z-score outliers: one window pass on the group key
-    from spacy_llm_spark.operators.anomaly import zscore_outliers
-
-    hourly = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .groupBy("user_id", F.date_trunc("hour", "ts").alias("hour"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    sections.append((
-        "Z-score outliers: group stats stay inside the key's window pass",
-        "One Exchange on the group key feeds the window pass (Spark "
-        "splits avg and stddev_pop into two Window nodes over the SAME "
-        "partitioning — no second shuffle); the filter is a projection "
-        "above it. No join, no driver traffic — per-key state is two "
-        "running moments.",
-        explain_str(zscore_outliers(hourly, "n", ["user_id"], threshold=2.0)),
-    ))
-
-    # 25. co-occurrence PMI: windowed projection, never a self-join
+    # 20. co-occurrence PMI: windowed projection, never a self-join
     from spacy_llm_spark.functions.cooccur import cooccurrence_pmi
 
     sections.append((
@@ -482,20 +375,7 @@ def main():
         explain_str(cooccurrence_pmi(docs, window=2, min_count=10)),
     ))
 
-    # 26. skew report: key aggregate + broadcast totals + TakeOrdered
-    from spacy_llm_spark.operators.skew import skew_report
-
-    sections.append((
-        "Skew report: one key aggregate, 1-row broadcast, TakeOrdered",
-        "The diagnostics cost one HashAggregate on the candidate key, a "
-        "1-row totals aggregate broadcast back, and TakeOrderedAndProject "
-        "for the top-n — no global sort; the ranking window runs over "
-        "the already-limited n-row frame (the WindowExec single-partition "
-        "warning refers to <= top_n rows).",
-        explain_str(skew_report(docs, ["source"], top_n=10)),
-    ))
-
-    # 27. Adamic–Adar: equi-joins only, aggregate-fused scoring
+    # 21. Adamic–Adar: equi-joins only, aggregate-fused scoring
     from spacy_llm_spark.operators.graph import adamic_adar
 
     edges_aa = spark.createDataFrame(
@@ -513,7 +393,7 @@ def main():
         explain_str(adamic_adar(edges_aa, min_common=1)),
     ))
 
-    # 28. label propagation: per-round argmax is ONE two-level aggregate.
+    # 22. label propagation: per-round argmax is ONE two-level aggregate.
     # cut_lineage (localCheckpoint per round) would collapse the explain
     # to a Scan ExistingRDD — disable it for the CAPTURE only, so the
     # true single-round plan is visible.
@@ -551,7 +431,7 @@ def main():
         _fs.cut_lineage = _real_cut
         _graph_mod.fs.cut_lineage = _real_cut
 
-    # 29. DSIR: bucket-scale ratio map broadcast into the corpus scan
+    # 23. DSIR: bucket-scale ratio map broadcast into the corpus scan
     from spacy_llm_spark.operators.importance import dsir_top_k
 
     sections.append((
@@ -564,21 +444,6 @@ def main():
         "global sort. Raw corpus cost: two scans, nothing wider than "
         "(doc_id, weight) exchanged.",
         explain_str(dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=100)),
-    ))
-
-    # 30. exact Jaccard self-join: prefix equi-join, no rank window
-    from spacy_llm_spark.operators.setjoin import jaccard_join_exact
-
-    sections.append((
-        "Exact prefix-filtered Jaccard join: df-ordered prefixes, equi-joins only",
-        "The global rarest-first token order is the (df, token) VALUE "
-        "pair sorted per-doc inside array_sort — no global rank window "
-        "ever plans; candidates come from ONE prefix-token equi-join "
-        "with the length filter applied before dedup, and verification "
-        "is native array_intersect above two id-keyed joins. Nothing "
-        "quadratic in the corpus materializes; the only Exchanges are "
-        "token-, doc-, and pair-keyed hash partitionings.",
-        explain_str(jaccard_join_exact(docs, threshold=0.8)),
     ))
 
     from spacy_llm_spark.operators.audit import triple_shape_violations

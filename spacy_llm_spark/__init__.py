@@ -19,7 +19,7 @@ Layout
 - ``operators.*``         graph / reason / dedup / similarity / audit /
                           fusion / temporal / kgembed (legacy driver queries)
 - other ``operators.*`` / ``functions.*``
-                          sampling, packing, joins, sketches, ...: the
+                          sampling, packing, profiling, ...: the
                           legacy driver's non-KG queries and bench rows
 - ``functions.response_parsers``   response-parser kernels (NER, REL, EL)
 - ``functions.normalizers`` label normalizers

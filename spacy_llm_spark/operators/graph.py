@@ -3707,8 +3707,8 @@ def hyperball_certificate(
 ) -> DataFrame:
     """Exact neighborhood function + a boolean certifying the HyperBall
     estimate per round — the cross-engine contract for sketch-valued
-    results (the ``sketches.approx_distinct_certificate`` pattern: the
-    oracle side is the exact curve plus a literal ``true``).
+    results (the oracle side is the exact curve plus a literal
+    ``true``).
 
     The exact side materializes the reachable-pair set round by round
     (p_t = p_{t-1} ∪ p_{t-1}⋈edges, one join + one distinct per round —

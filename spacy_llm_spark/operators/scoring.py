@@ -1,12 +1,8 @@
-"""Evaluation operators (A8/A9) as two-phase Spark aggregations.
+"""Evaluation operators (A8) as two-phase Spark aggregations.
 
 NER P/R/F semantics pinned by tests/tasks/test_ner.py:697-718: a predicted
 mention is correct iff (doc, start, end, label) matches a gold mention;
 P = tp / n_pred, R = tp / n_gold, F = 2PR/(P+R) (0 where undefined).
-
-EL accuracy (A9): correct iff (doc, ent_idx, kb_id) matches, restricted to
-gold non-NIL links (Scorer.score_links negative_labels=[NIL] semantics,
-tasks/entity_linker/util.py:75-80).
 
 Everything is a join + count — Spark's partial aggregation does the
 map-side combine; no driver-side loops.
@@ -18,8 +14,6 @@ from typing import Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..kb import NIL
 
 
 def prf(tp: int, n_pred: int, n_gold: int) -> Tuple[float, float, float]:
@@ -39,19 +33,6 @@ def score_mentions(
         gold.select(*keys).distinct(), on=list(keys), how="inner"
     ).count()
     return prf(tp, predicted.select(*keys).distinct().count(), gold.select(*keys).distinct().count())
-
-
-def score_links(
-    predicted: DataFrame,
-    gold: DataFrame,
-    keys: Sequence[str] = ("doc_id", "ent_idx"),
-    kb_col: str = "kb_id",
-) -> Tuple[float, float, float]:
-    """EL P/R/F over non-NIL predictions/gold (negative label = NIL)."""
-    pred_pos = predicted.where(F.col(kb_col) != NIL).select(*keys, kb_col).distinct()
-    gold_pos = gold.where(F.col(kb_col) != NIL).select(*keys, kb_col).distinct()
-    tp = pred_pos.join(gold_pos, on=[*keys, kb_col], how="inner").count()
-    return prf(tp, pred_pos.count(), gold_pos.count())
 
 
 def pairwise_cluster_prf(

@@ -3,8 +3,7 @@
 - cosine_topk:       brute-force cosine top-k against a probe vector —
                      fully native (zip_with/aggregate inside codegen), one
                      pass, then a k-row takeOrdered-style limit.
-- hyperplane_signature / ann_lsh_topk:
-                     random-hyperplane LSH; candidates only from the
+- ann_lsh_topk:      random-hyperplane LSH; candidates only from the
                      probe's bucket (and optionally Hamming-adjacent
                      buckets), exact cosine re-rank within candidates.
                      The scale path: bucket cardinality ~ n / 2^planes.
@@ -433,31 +432,6 @@ def _scored_vs_queries_kernel(
 def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     rng = np.random.RandomState(seed)
     return rng.normal(size=(n_planes, dim))
-
-
-def hyperplane_signature(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    seed: int = 7,
-    dim: int,
-) -> DataFrame:
-    """Append ``lsh_sig`` (long): sign bits against fixed random planes,
-    expressed natively — one aggregate per plane folded into codegen.
-    ``dim`` must come from the caller (schema/metadata/probe): discovering
-    it with a ``.first()`` would launch a whole Spark job at plan time.
-    """
-    planes = _planes(dim, n_planes, seed)
-    sig = F.lit(0).cast("long")
-    vec = F.col(vec_col).cast("array<double>")
-    for p in range(n_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[p]])
-        bit = F.when(_dot(vec, plane) > 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        sig = sig.bitwiseOR(bit)
-    return df.withColumn("lsh_sig", sig)
 
 
 def ann_lsh_topk(

@@ -231,8 +231,7 @@ def allen_relations(
     right_end: str = "valid_to",
 ) -> DataFrame:
     """Allen's interval algebra (Allen 1983) over two validity-interval
-    frames — the temporal-REASONING complement of the bucketized
-    ``interval_join`` (which only finds overlap): every key-matched
+    frames — temporal REASONING, not just overlap: every key-matched
     interval pair classified into exactly one of the 13 relations
     (``before / meets / overlaps / starts / during / finishes /
     equals`` and their inverses), the vocabulary for questions like

@@ -4,8 +4,8 @@ Settings chosen for the 100 TB design point (and to behave well on
 local[N] test runs):
 
 - AQE on (runtime coalescing, skew-join splitting) — the reference handles
-  no skew at all (single machine); we rely on AQE + explicit salting
-  (operators/skew.py) per BASELINE.json north_rule.
+  no skew at all (single machine); we rely on AQE per BASELINE.json
+  north_rule.
 - Arrow enabled with a bounded batch size: every expensive kernel is an
   Arrow-batched pandas UDF (the reference's minibatch=128 analog,
   spacy_llm/pipeline/llm.py:195).

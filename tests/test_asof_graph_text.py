@@ -1,7 +1,5 @@
-"""Tests for the round-3 additions: as-of join, repetition/vocab stats,
-PII redaction, n-gram decontamination, and KG graph analytics."""
-
-import datetime as dt
+"""Tests for the round-3 additions: repetition/vocab stats, PII
+redaction, n-gram decontamination, and KG graph analytics."""
 
 import numpy as np
 
@@ -11,153 +9,9 @@ from pyspark.sql import functions as F
 from spacy_llm_spark.functions import redact, text as textfn
 from spacy_llm_spark.operators import decontaminate as decon
 from spacy_llm_spark.operators import graph
-from spacy_llm_spark.operators.asof import asof_join
-
-
-def _ts(minute, second=0):
-    return dt.datetime(2024, 1, 1, 0, minute, second)
-
-
-# ---------------------------------------------------------------------------
-# as-of join
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def asof_frames(spark):
-    left = spark.createDataFrame(
-        [
-            (1, "u1", _ts(10)),  # after r2 -> matches r2
-            (2, "u1", _ts(5)),   # equal to r1's time (tie case)
-            (3, "u1", _ts(1)),   # before everything -> no match
-            (4, "u2", _ts(30)),  # other key
-            (5, "u3", _ts(30)),  # key with no right rows at all
-        ],
-        "event_id long, user_id string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [
-            (101, "u1", _ts(5), 1.0),
-            (102, "u1", _ts(5), 2.0),   # same time as 101: tiebreak -> max id
-            (103, "u1", _ts(8), 3.0),
-            (104, "u2", _ts(7), 4.0),
-        ],
-        "click_id long, user_id string, cts timestamp, value double",
-    )
-    return left, right
-
-
-def _rows(df):
-    return {r["event_id"]: (r["click_id"], r["value"]) for r in df.collect()}
-
-
-def test_asof_inclusive_semantics_and_ties(asof_frames):
-    left, right = asof_frames
-    out = asof_join(
-        left, right, on="user_id", left_time="ts", right_time="cts",
-        right_cols=["click_id", "value"], right_tiebreak="click_id",
-    )
-    assert out.columns == ["event_id", "user_id", "ts", "click_id", "value"]
-    got = _rows(out)
-    assert got[1] == (103, 3.0)          # latest <= t
-    assert got[2] == (102, 2.0)          # equal time allowed; max-tiebreak wins
-    assert got[3] == (None, None)        # nothing precedes
-    assert got[4] == (104, 4.0)
-    assert got[5] == (None, None)        # key absent from right
-
-
-def test_asof_strict_excludes_equal_time(asof_frames):
-    left, right = asof_frames
-    got = _rows(
-        asof_join(
-            left, right, on="user_id", left_time="ts", right_time="cts",
-            right_cols=["click_id", "value"], strict=True,
-        )
-    )
-    assert got[2] == (None, None)        # t == right time no longer matches
-    assert got[1] == (103, 3.0)          # earlier matches unaffected
-
-
-def test_asof_tolerance_voids_stale_matches(asof_frames):
-    left, right = asof_frames
-    got = _rows(
-        asof_join(
-            left, right, on="user_id", left_time="ts", right_time="cts",
-            right_cols=["click_id", "value"], tolerance_secs=90.0,
-        )
-    )
-    assert got[1] == (None, None)        # 2 min gap > 90 s horizon
-    assert got[2] == (102, 2.0)          # 0 s gap within horizon
-
-
-def test_asof_split_bucket_mode_equivalent(asof_frames):
-    """The mega-key path (per-(key, time-bucket) windows + carry-in)
-    returns exactly the default path's rows for every bucket size,
-    including buckets smaller than the event spacing and one giant
-    bucket that degenerates to the default layout."""
-    left, right = asof_frames
-    base = None
-    for split in (None, 1, 60, 300, 86400):
-        got = _rows(
-            asof_join(
-                left, right, on="user_id", left_time="ts", right_time="cts",
-                right_cols=["click_id", "value"], right_tiebreak="click_id",
-                split_bucket_secs=split,
-            )
-        )
-        if base is None:
-            base = got
-        assert got == base, f"split_bucket_secs={split}"
-
-
-def test_asof_split_mode_null_keys_and_times(spark):
-    """Regression: the split path must keep left rows with NULL join key
-    or NULL time (the default window path does — NULLs form their own
-    partition), and reject non-positive bucket sizes loudly."""
-    left = spark.createDataFrame(
-        [(1, "u1", _ts(10)), (2, None, _ts(10)), (3, "u1", None)],
-        "event_id long, user_id string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [(101, "u1", _ts(5), 1.0)],
-        "click_id long, user_id string, cts timestamp, value double",
-    )
-    base = None
-    for split in (None, 60):
-        got = _rows(
-            asof_join(
-                left, right, on="user_id", left_time="ts", right_time="cts",
-                right_cols=["click_id", "value"], split_bucket_secs=split,
-            )
-        )
-        assert set(got) == {1, 2, 3}, f"split={split} dropped rows"
-        if base is None:
-            base = got
-        assert got == base, f"split={split}"
-
-    for bad in (0, -60):
-        with pytest.raises(ValueError, match="positive"):
-            asof_join(
-                left, right, on="user_id", left_time="ts", right_time="cts",
-                right_cols=["click_id", "value"], split_bucket_secs=bad,
-            )
-
-
-def test_asof_single_shuffle_plan(asof_frames):
-    left, right = asof_frames
-    plan = asof_join(
-        left, right, on="user_id", left_time="ts", right_time="cts",
-        right_cols=["click_id", "value"],
-    )._jdf.queryExecution().executedPlan().toString()
-    # one Exchange for the window partition; no join operator anywhere
-    assert plan.count("Exchange hashpartitioning") == 1
-    assert "Join" not in plan and "CartesianProduct" not in plan
-
-
 # ---------------------------------------------------------------------------
 # repetition / vocab
 # ---------------------------------------------------------------------------
-
 
 def test_repetition_stats_hand_case(spark):
     df = spark.createDataFrame(
@@ -195,7 +49,6 @@ def test_vocab_topk(spark):
 # ---------------------------------------------------------------------------
 # PII
 # ---------------------------------------------------------------------------
-
 
 def test_pii_counts_and_redact(spark):
     text = (
@@ -264,7 +117,6 @@ def test_pii_hardened_classes(spark):
 # ---------------------------------------------------------------------------
 # decontamination
 # ---------------------------------------------------------------------------
-
 
 def test_ngram_overlap_and_decontaminate(spark):
     corpus = spark.createDataFrame(
@@ -347,7 +199,6 @@ def test_build_ngram_bloom_has_no_false_negatives(spark):
 # ---------------------------------------------------------------------------
 # graph analytics
 # ---------------------------------------------------------------------------
-
 
 @pytest.fixture(scope="module")
 def edge_df(spark):
@@ -479,134 +330,8 @@ def test_pagerank_empty_graph(spark):
 
 
 # ---------------------------------------------------------------------------
-# interval (range) join
-# ---------------------------------------------------------------------------
-
-
-@pytest.fixture(scope="module")
-def interval_frames(spark):
-    points = spark.createDataFrame(
-        [
-            (1, _ts(5)),    # inside w0
-            (2, _ts(10)),   # exactly at w0 end -> excluded (end-exclusive)
-            (3, _ts(0)),    # exactly at w0 start -> included
-            (4, _ts(35)),   # inside w1 and the overlapping w2
-            (5, _ts(59)),   # outside every window
-        ],
-        "point_id long, ts timestamp",
-    )
-    intervals = spark.createDataFrame(
-        [
-            (0, _ts(0), _ts(10)),
-            (1, _ts(30), _ts(40)),
-            (2, _ts(33), _ts(36)),   # overlaps w1
-            (3, _ts(50), _ts(50)),   # empty interval -> matches nothing
-        ],
-        "window_id long, ws timestamp, we timestamp",
-    )
-    return points, intervals
-
-
-def test_interval_join_semantics(interval_frames):
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    points, intervals = interval_frames
-    out = interval_join(
-        points, intervals, point_time="ts", start="ws", end="we",
-        bucket_secs=120,
-    )
-    got = sorted((r["point_id"], r["window_id"]) for r in out.collect())
-    assert got == [(1, 0), (3, 0), (4, 1), (4, 2)]
-
-
-def test_interval_join_no_nested_loop(interval_frames):
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    points, intervals = interval_frames
-    plan = interval_join(
-        points, intervals, point_time="ts", start="ws", end="we",
-        bucket_secs=120,
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_interval_join_fractional_second_end(spark):
-    """Regression: an interval end 0.5 s past a bucket boundary must not
-    lose points in that final bucket (second-truncated bucketing did)."""
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    pts = spark.createDataFrame(
-        [(1, dt.datetime(2024, 1, 1, 0, 1, 0, 200000))],
-        "point_id long, ts timestamp",
-    )
-    ivs = spark.createDataFrame(
-        [(0, dt.datetime(2024, 1, 1, 0, 0, 0), dt.datetime(2024, 1, 1, 0, 1, 0, 500000))],
-        "window_id long, ws timestamp, we timestamp",
-    )
-    out = interval_join(
-        pts, ivs, point_time="ts", start="ws", end="we", bucket_secs=60
-    )
-    assert [(r["point_id"], r["window_id"]) for r in out.collect()] == [(1, 0)]
-
-
-def test_asof_tolerance_subsecond_precision(spark):
-    """Regression: tolerance must be judged on microsecond gaps, not
-    second-truncated ones."""
-    left = spark.createDataFrame(
-        [
-            (1, "u1", dt.datetime(2024, 1, 1, 0, 0, 2, 900000)),  # gap 1.9s
-            (2, "u2", dt.datetime(2024, 1, 1, 0, 0, 2, 0)),       # gap 0.1s
-        ],
-        "event_id long, user_id string, ts timestamp",
-    )
-    right = spark.createDataFrame(
-        [
-            (101, "u1", dt.datetime(2024, 1, 1, 0, 0, 1, 0), 1.0),
-            (102, "u2", dt.datetime(2024, 1, 1, 0, 0, 1, 900000), 2.0),
-        ],
-        "click_id long, user_id string, cts timestamp, value double",
-    )
-    got = _rows(
-        asof_join(
-            left, right, on="user_id", left_time="ts", right_time="cts",
-            right_cols=["click_id", "value"], tolerance_secs=1.5,
-        )
-    )
-    # true gap 1.9s > 1.5 -> void; second-truncated diff (2-1=1) would keep
-    assert got[1] == (None, None)
-    got_tight = _rows(
-        asof_join(
-            left, right, on="user_id", left_time="ts", right_time="cts",
-            right_cols=["click_id", "value"], tolerance_secs=0.5,
-        )
-    )
-    # true gap 0.1s <= 0.5 -> keep; second-truncated diff (2-1=1) would void
-    assert got_tight[2] == (102, 2.0)
-
-
-def test_interval_join_bucket_size_invariance(interval_frames):
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    points, intervals = interval_frames
-    expected = None
-    for bucket in (7, 60, 3600, 86400):  # odd + tiny + huge buckets
-        got = sorted(
-            (r["point_id"], r["window_id"])
-            for r in interval_join(
-                points, intervals, point_time="ts", start="ws", end="we",
-                bucket_secs=bucket,
-            ).collect()
-        )
-        if expected is None:
-            expected = got
-        assert got == expected, f"bucket_secs={bucket}"
-
-
-# ---------------------------------------------------------------------------
 # pre-token count + deterministic split
 # ---------------------------------------------------------------------------
-
 
 def test_pretoken_count(spark):
     df = spark.createDataFrame(
@@ -636,26 +361,6 @@ def test_assign_split_deterministic_and_duplicate_safe(spark):
     for i, text in rows:
         by_text.setdefault(text, set()).add(a[i])
     assert all(len(s) == 1 for s in by_text.values())
-
-
-def test_interval_join_with_entity_key(spark):
-    """The optional `on` key co-partitions by entity: a point only joins
-    intervals of the SAME key even when times overlap across keys."""
-    from spacy_llm_spark.operators.rangejoin import interval_join
-
-    points = spark.createDataFrame(
-        [(1, "u1", _ts(5)), (2, "u2", _ts(5))],
-        "point_id long, user string, ts timestamp",
-    )
-    intervals = spark.createDataFrame(
-        [(0, "u1", _ts(0), _ts(10))],
-        "window_id long, user string, ws timestamp, we timestamp",
-    )
-    out = interval_join(
-        points, intervals, point_time="ts", start="ws", end="we",
-        bucket_secs=60, on="user",
-    )
-    assert [(r["point_id"], r["window_id"]) for r in out.collect()] == [(1, 0)]
 
 
 def test_clustering_coefficient_bruteforce(spark):
@@ -701,30 +406,7 @@ def test_clustering_coefficient_shapes(spark):
                         "coeff": 0.0}
 
 
-def test_approx_distinct_certificate(spark):
-    from spacy_llm_spark.operators import sketches
-
-    rows = [(f"g{i % 2}", i % 500) for i in range(10_000)]
-    df = spark.createDataFrame(rows, "g string, v long")
-    out = {r["g"]: r.asDict() for r in
-           sketches.approx_distinct_certificate(df, "v", ["g"], rsd=0.02).collect()}
-    assert out["g0"]["n_distinct"] == 250 and out["g0"]["ok"]
-    assert out["g1"]["n_distinct"] == 250 and out["g1"]["ok"]
-    # certificate = the exact distinct's two-phase plan (shuffle on
-    # (g, v) then g) with the sketch partials riding along — no THIRD
-    # exchange for the sketch; the sketch-only operator is one shuffle
-    cert = sketches.approx_distinct_certificate(df, "v", ["g"])
-    plan = cert._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning") == 2, plan
-    sk = sketches.approx_distinct(df, "v", ["g"])
-    plan = sk._jdf.queryExecution().executedPlan().toString()
-    final = plan.split("== Initial Plan ==")[0]
-    assert final.count("Exchange hashpartitioning") == 1, plan
-
-
 # ---------------------------------------------------------------- bfs
-
 
 def test_bfs_levels_hand_case(spark):
     """Chain a-b-c-d-e plus isolated pair x-y; self-loop must not create
@@ -772,7 +454,6 @@ def test_bfs_levels_duplicate_seeds_and_min_level(spark):
 
 # ---------------------------------------------------------------- bm25
 
-
 def test_bm25_rare_term_outranks_common(spark):
     """A doc matching the rare query term outscores a doc matching the
     corpus-saturating term (idf ordering), and tf raises the score."""
@@ -806,7 +487,6 @@ def test_bm25_empty_terms_raise_and_topk_ties(spark):
 
 
 # ------------------------------------------------- duplicated n-grams
-
 
 def test_duplicated_ngram_stats_hand_case(spark):
     from spacy_llm_spark.operators.dedup import duplicated_ngram_stats
@@ -951,65 +631,6 @@ def test_vocab_drift_hand_case(spark):
     assert got["y"] == (0.5, 0.0, 0.5)
     # total variation = 0.5 * (0.75 + 0.25 + 0.5)
     assert abs(sum(v[2] for v in got.values()) / 2 - 0.75) < 1e-9
-
-
-def test_frequent_items_topk_matches_exact(spark):
-    """Zipf-ish skew, capacity far below cardinality, hash-scattered
-    partitions: the MG candidate cut + recount must equal the exact
-    two-phase top-k, counts included."""
-    from spacy_llm_spark.operators import sketches
-
-    rows = []
-    for i in range(200):           # 200 distinct items
-        rows += [(f"w{i:03d}",)] * (1 + (200 - i) ** 2 // 40)  # heavy head
-    df = spark.createDataFrame(rows, "item string").repartition(16)
-    got = sketches.frequent_items_topk(df, "item", k=10, capacity=32).collect()
-    exact = (
-        df.groupBy("item").count()
-        .orderBy(F.desc("count"), F.asc("item")).limit(10).collect()
-    )
-    assert [(r["item"], r["n"]) for r in got] == [
-        (r["item"], r["count"]) for r in exact
-    ]
-
-
-def test_frequent_items_topk_flat_distribution_falls_back(spark, caplog):
-    """Uniform counts at tiny capacity: no certifiable candidate set —
-    the operator must fall back to the exact count (and say so), not
-    return a wrong head."""
-    import logging
-
-    from spacy_llm_spark.operators import sketches
-
-    rows = [(f"u{i:04d}",) for i in range(500)] * 3  # all counts = 3
-    df = spark.createDataFrame(rows, "item string").repartition(8)
-    with caplog.at_level(logging.WARNING):
-        got = sketches.frequent_items_topk(df, "item", k=5, capacity=4).collect()
-    assert [(r["item"], r["n"]) for r in got] == [
-        (f"u{i:04d}", 3) for i in range(5)
-    ]
-    assert any("falling back" in r.message for r in caplog.records)
-
-
-def test_frequent_items_approx_brackets_truth(spark):
-    """est_lb <= true <= est_ub for every retained item, and the bracket
-    width is the measured decrement total (zero when capacity holds all
-    items, so est_lb == true exactly)."""
-    from spacy_llm_spark.operators import sketches
-
-    rows = [("a",)] * 50 + [("b",)] * 30 + [("c",)] * 2 + [(None,)] * 5
-    df = spark.createDataFrame(rows, "item string").repartition(4)
-    wide = {r["item"]: (r["est_lb"], r["est_ub"])
-            for r in sketches.frequent_items_approx(df, "item", capacity=64).collect()}
-    assert wide == {"a": (50, 50), "b": (30, 30), "c": (2, 2)}
-
-    tight = {r["item"]: (r["est_lb"], r["est_ub"])
-             for r in sketches.frequent_items_approx(df, "item", capacity=2).collect()}
-    true = {"a": 50, "b": 30, "c": 2}
-    for item, (lb, ub) in tight.items():
-        assert lb <= true[item] <= ub
-    # the dominant item always survives a capacity-2 sketch of 3 items
-    assert "a" in tight
 
 
 # ---------------------------------------------------------------- k-core
@@ -1164,48 +785,6 @@ def test_ppr_absent_seeds_dropped_then_raise(spark):
         personalized_pagerank(
             edges, spark.createDataFrame([("zzz",)], "v string")
         )
-
-
-# --------------------------------------------------- z-score outliers
-
-def test_zscore_outliers_keyed(spark):
-    from spacy_llm_spark.operators.anomaly import zscore_outliers
-
-    rows = [
-        # key a: values 10,10,10,40 — 40 is the burst
-        ("a", 10.0), ("a", 10.0), ("a", 10.0), ("a", 40.0),
-        # key b: constant — zero variance, never flagged
-        ("b", 5.0), ("b", 5.0),
-    ]
-    df = spark.createDataFrame(rows, "k string, v double")
-    got = zscore_outliers(df, "v", ["k"], threshold=1.5).collect()
-    assert [(r["k"], r["v"]) for r in got] == [("a", 40.0)]
-    # z = (40 - 17.5) / stddev_pop([10,10,10,40]) = 22.5/12.99038 ≈ 1.732051
-    assert abs(got[0]["z"] - 1.732051) < 1e-6
-
-
-def test_zscore_outliers_global_and_threshold_guard(spark):
-    import pytest
-
-    from spacy_llm_spark.operators.anomaly import zscore_outliers
-
-    df = spark.createDataFrame(
-        [(float(x),) for x in [1, 1, 1, 1, 1, 1, 1, 1, 1, 100]], "v double"
-    )
-    got = zscore_outliers(df, "v", threshold=2.0).collect()
-    assert [r["v"] for r in got] == [100.0]
-    with pytest.raises(ValueError, match="threshold"):
-        zscore_outliers(df, "v", threshold=0.0)
-
-
-def test_zscore_outliers_symmetric(spark):
-    from spacy_llm_spark.operators.anomaly import zscore_outliers
-
-    # dips are anomalies too: |z| is tested, not z
-    vals = [50.0] * 8 + [0.0]
-    df = spark.createDataFrame([(v,) for v in vals], "v double")
-    got = zscore_outliers(df, "v", threshold=2.0).collect()
-    assert [r["v"] for r in got] == [0.0] and got[0]["z"] < 0
 
 
 # --------------------------------------------------- co-occurrence / PMI
@@ -1440,7 +1019,6 @@ def test_k_core_empty_result_keeps_input_vertex_type(spark):
 
 # ---- strongly connected components (FW-Trim-coloring) ----
 
-
 def _scc_reference(edge_list):
     """Pure-Python Tarjan (iterative), min-member labels."""
     import collections
@@ -1574,7 +1152,6 @@ def test_scc_nonconvergence_raises(spark):
 
 # ---------- HyperBall neighborhood function ----------
 
-
 def _py_neighborhood(pairs, directed=False):
     """Exact N(t) per BFS round, list of (t, n_pairs)."""
     adj = {}
@@ -1658,80 +1235,3 @@ def test_hyperball_guards(spark):
         hyperball(e, max_t=2)
     with pytest.raises(RuntimeError, match="not converged"):
         hyperball_certificate(e, max_t=2)
-
-
-def test_hll_index_append_within_bound_and_replay_stable(spark, tmp_path):
-    """The persisted-sketch form: estimates off the appended index stay
-    inside the sketch's error envelope around the exact counts in ANY
-    batch order (merged sketches can sit a register off a direct build
-    — the union gadget — so bit-equality is NOT the contract); a
-    replayed batch leaves estimates EXACTLY unchanged (register max is
-    idempotent); parquet round-trip preserves the sketch binary."""
-    from spacy_llm_spark.operators import sketches
-
-    df = spark.range(3000).select(
-        (F.col("id") % 5).alias("g"), (F.col("id") % 777).alias("v")
-    )
-    exact = {
-        r.g: r.n
-        for r in df.groupBy("g").agg(F.countDistinct("v").alias("n")).collect()
-    }
-    # lg_k=12 -> rsd ~1.04/sqrt(4096) ~1.6%; 4 sigma ~6.5%
-    bound = 4 * 1.04 / (2 ** 12) ** 0.5
-
-    def assert_in_bound(rows):
-        for g, est in rows:
-            assert abs(est - exact[g]) <= bound * exact[g] + 1, (g, est)
-
-    full = sorted(map(tuple, sketches.distinct_from_index(
-        sketches.hll_index(df, "v", ["g"]), "v", ["g"]
-    ).collect()))
-    assert_in_bound(full)
-
-    a = df.where(F.col("id") % 3 == 0)
-    b = df.where(F.col("id") % 3 == 1)
-    c = df.where(F.col("id") % 3 == 2)
-    # order 1: a, b, c — with a parquet round-trip in the middle
-    idx = sketches.hll_index(a, "v", ["g"])
-    p = str(tmp_path / "hll_idx")
-    idx.write.mode("overwrite").parquet(p)
-    idx = sketches.hll_index_append(spark.read.parquet(p), b, "v", ["g"])
-    idx = sketches.hll_index_append(
-        idx.localCheckpoint(), c, "v", ["g"]
-    ).localCheckpoint()
-    got1 = sorted(map(tuple, sketches.distinct_from_index(
-        idx, "v", ["g"]
-    ).collect()))
-    assert_in_bound(got1)
-    # order 2: c, a, b
-    idx2 = sketches.hll_index(c, "v", ["g"])
-    idx2 = sketches.hll_index_append(idx2.localCheckpoint(), a, "v", ["g"])
-    idx2 = sketches.hll_index_append(idx2.localCheckpoint(), b, "v", ["g"])
-    got2 = sorted(map(tuple, sketches.distinct_from_index(
-        idx2, "v", ["g"]
-    ).collect()))
-    assert_in_bound(got2)
-    # replay: appending batch b AGAIN changes NOTHING (idempotent merge)
-    idx3 = sketches.hll_index_append(idx, b, "v", ["g"])
-    got3 = sorted(map(tuple, sketches.distinct_from_index(
-        idx3, "v", ["g"]
-    ).collect()))
-    assert got3 == got1
-
-
-def test_hll_index_stamp_refusals(spark):
-    from spacy_llm_spark.operators import sketches
-
-    df = spark.range(100).select(
-        (F.col("id") % 2).alias("g"), F.col("id").alias("v")
-    )
-    idx = sketches.hll_index(df, "v", ["g"])
-    import pytest as _pytest
-
-    stamp = [c for c in idx.columns if c.startswith("_fmt")][0]
-    with _pytest.raises(ValueError, match="stamp"):
-        sketches.hll_index_append(idx.drop(stamp), df, "v", ["g"])
-    with _pytest.raises(ValueError, match="mismatch"):
-        sketches.hll_index_append(idx, df, "v", ["g"], lg_k=14)
-    with _pytest.raises(ValueError, match="mismatch"):
-        sketches.distinct_from_index(idx, "other_col", ["g"])

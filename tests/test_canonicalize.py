@@ -67,20 +67,6 @@ def test_surface_clusters_via_shared_qid(spark):
     assert rows["surface:foo"] == "surface:foo"
 
 
-def test_salted_agg_matches_plain(spark):
-    from spacy_llm_spark.operators.skew import salted_agg
-
-    df = spark.range(1000).select(
-        (F.col("id") % 7).alias("k"), F.col("id").alias("v")
-    )
-    plain = {r.k: (r.n, r.s) for r in df.groupBy("k").agg(
-        F.count("*").alias("n"), F.sum("v").alias("s")).collect()}
-    salted = {r.k: (r.n, r.s) for r in salted_agg(
-        df, ["k"], {"n": (F.count(F.lit(1)), F.sum), "s": (F.sum("v"), F.sum)}
-    ).collect()}
-    assert plain == salted
-
-
 def test_distributed_cc_large_graph_matches_union_find(spark):
     """Large-star/small-star at real scale: 105k+ edges of long chains
     (diameter 30k — min-label propagation would need 30k rounds), hub

@@ -8,8 +8,12 @@
 - Every module under ``spacy_llm_spark/`` is reached by imports from the
   KG job (``pipeline``) or a driver file; a module only tests import is
   not part of the product.
+- Each of the first 50 ``queries()`` entries, the ones the driver's
+  correctness harness stamps, has a DuckDB oracle, and
+  ``scripts/check_oracles.py`` passes from any working directory.
 
-The checks are static or run in a fresh interpreter; none starts Spark.
+The checks are static or run in a fresh interpreter; only the
+``check_oracles.py`` run starts Spark, in its own process.
 """
 
 import ast
@@ -270,6 +274,35 @@ def test_every_oracle_names_a_query():
     import __spark_entry__ as entry
 
     assert set(entry.oracle_sql()) <= set(entry.queries())
+
+
+def test_stamped_first_50_queries_have_oracles():
+    """The driver stamps only the first 50 entries of ``queries()``; a
+    stamped slot without a DuckDB oracle is a slot nothing checks."""
+    sys.path.insert(0, REPO)
+    import __spark_entry__ as entry
+
+    stamped = list(entry.queries())[:50]
+    assert len(stamped) == 50
+    assert [k for k in stamped if k not in entry.oracle_sql()] == []
+
+
+def test_check_oracles_runs_outside_the_repo_root(tmp_path, sf_dir):
+    """The Python workers of a query that runs a ``mapInPandas`` kernel
+    import the package too, so the checker must hand them the repo root
+    whatever directory it is started from."""
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"no test data at {sf_dir}")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "check_oracles.py"),
+         sf_dir, "kg_mentions"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
+    assert any(
+        line.startswith("OK    kg_mentions") for line in proc.stdout.splitlines()
+    ), proc.stdout[-2000:]
 
 
 def test_every_package_module_is_reached_from_the_job_or_a_driver():

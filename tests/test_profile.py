@@ -131,60 +131,6 @@ def test_pairwise_cluster_prf_no_pair_materialization(spark):
     assert "SortMergeJoin" not in plan
 
 
-# --------------------------------------------------- skew report
-
-from spacy_llm_spark.operators.skew import skew_report
-
-
-def test_skew_report_values(spark):
-    rows = [("hot",)] * 6 + [("a",)] * 2 + [("b",)] * 1 + [("c",)] * 1
-    df = spark.createDataFrame(rows, "k string")
-    got = skew_report(df, ["k"], top_n=2).collect()
-    assert [(r["key"], r["n"], r["rank"]) for r in got] == [("hot", 6, 1), ("a", 2, 2)]
-    # mean per key = 10/4 = 2.5; skew factor = 6/2.5 = 2.4; share 0.6
-    assert got[0]["share"] == 0.6 and got[0]["skew_factor"] == 2.4
-
-    import pytest
-
-    with pytest.raises(ValueError, match="top_n"):
-        skew_report(df, ["k"], top_n=0)
-
-
-def test_skew_report_composite_key_and_ties(spark):
-    rows = [("r1", "py"), ("r1", "py"), ("r2", "go"), ("r1", "go")]
-    df = spark.createDataFrame(rows, "repo string, lang string")
-    got = skew_report(df, ["repo", "lang"], top_n=3).collect()
-    assert got[0]["key"] == "r1␟py" and got[0]["n"] == 2
-    # ties broken by key ascending — deterministic cut
-    assert [r["key"] for r in got[1:]] == ["r1␟go", "r2␟go"]
-
-
-# --------------------------------------------------- rolling stats
-
-from spacy_llm_spark.operators.anomaly import rolling_stats
-
-
-def test_rolling_stats_hand_case(spark):
-    rows = [("a", i, v) for i, v in enumerate([1.0, 2.0, 6.0, 3.0])] + [
-        ("b", 0, 10.0)
-    ]
-    df = spark.createDataFrame(rows, "k string, i int, v double")
-    got = {
-        (r["k"], r["i"]): (r["roll_avg"], r["roll_min"], r["roll_max"])
-        for r in rolling_stats(df, "v", ["k"], ["i"], window_rows=3).collect()
-    }
-    assert got[("a", 0)] == (1.0, 1.0, 1.0)
-    assert got[("a", 1)] == (1.5, 1.0, 2.0)
-    assert got[("a", 2)] == (3.0, 1.0, 6.0)
-    assert got[("a", 3)] == (round(11 / 3, 6), 2.0, 6.0)  # window slid past 1.0
-    assert got[("b", 0)] == (10.0, 10.0, 10.0)
-
-    import pytest
-
-    with pytest.raises(ValueError, match="window_rows"):
-        rolling_stats(df, "v", ["k"], ["i"], window_rows=0)
-
-
 # --------------------------------------------------- document chunking
 
 from spacy_llm_spark.functions.text import chunk_documents
@@ -232,33 +178,6 @@ def test_chunk_documents_no_shuffle(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan  # pure projection + generate
-
-
-# --------------------------------------------------- join size estimate
-
-from spacy_llm_spark.operators.skew import join_size_estimate
-
-
-def test_join_size_estimate_exact(spark):
-    a = spark.createDataFrame(
-        [("k1",), ("k1",), ("k2",), ("k3",)], "k string"
-    )
-    b = spark.createDataFrame(
-        [("k1",), ("k1",), ("k1",), ("k2",), ("k4",)], "k string"
-    )
-    r = join_size_estimate(a, b, ["k"], top_n=1).collect()[0]
-    # k1: 2*3=6, k2: 1*1=1; k3/k4 unmatched
-    assert (r["join_rows"], r["n_matching_keys"]) == (7, 2)
-    assert r["top_keys"] == "k1=6"
-    # the prediction matches the real join exactly
-    assert a.join(b, "k").count() == 7
-
-
-def test_join_size_estimate_disjoint(spark):
-    a = spark.createDataFrame([("x",)], "k string")
-    b = spark.createDataFrame([("y",)], "k string")
-    r = join_size_estimate(a, b, ["k"]).collect()[0]
-    assert (r["join_rows"], r["n_matching_keys"], r["top_keys"]) == (0, 0, "")
 
 
 # --------------------------------------------------- histogram

@@ -1,91 +1,14 @@
-"""Property tests: the distributed as-of join and interval join against
-brute-force Python references over randomized small inputs.
+"""Sampling, duplicated n-gram probe and sequence packing checks, with
+property tests against brute-force Python references over randomized
+small inputs.
 
 Each hypothesis example runs real Spark jobs, so example counts are kept
-small; the randomized layouts still cover equal-time ties, duplicate
-times, empty sides, keys missing from one side, and boundary-exact
-interval endpoints far better than hand-picked cases.
+small.
 """
-
-import datetime as dt
 
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
-
-from spacy_llm_spark.operators.asof import asof_join
-from spacy_llm_spark.operators.rangejoin import interval_join
-
-
-def _t(sec: int) -> dt.datetime:
-    return dt.datetime(2024, 1, 1) + dt.timedelta(seconds=int(sec))
-
-
-_keys = st.sampled_from(["k0", "k1"])
-_lefts = st.lists(
-    st.tuples(_keys, st.integers(0, 20)), min_size=0, max_size=7
-)
-_rights = st.lists(
-    st.tuples(_keys, st.integers(0, 20)), min_size=0, max_size=7
-)
-
-
-@given(_lefts, _rights, st.booleans(), st.sampled_from([None, 1, 7, 3600]))
-@settings(max_examples=15, deadline=None)
-def test_asof_join_matches_bruteforce(spark, lefts, rights, strict, split):
-    left = spark.createDataFrame(
-        [(i, k, _t(s)) for i, (k, s) in enumerate(lefts)],
-        "lid long, k string, lt timestamp",
-    )
-    right = spark.createDataFrame(
-        [(i, k, _t(s)) for i, (k, s) in enumerate(rights)],
-        "rid long, k string, rt timestamp",
-    )
-    out = asof_join(
-        left, right, on="k", left_time="lt", right_time="rt",
-        right_cols=["rid"], right_tiebreak="rid", strict=strict,
-        split_bucket_secs=split,
-    )
-    got = {r["lid"]: r["rid"] for r in out.collect()}
-
-    expected = {}
-    for i, (k, s) in enumerate(lefts):
-        cands = [
-            (rs, j)
-            for j, (rk, rs) in enumerate(rights)
-            if rk == k and (rs < s if strict else rs <= s)
-        ]
-        expected[i] = max(cands)[1] if cands else None
-    assert got == expected
-
-
-_points = st.lists(st.integers(0, 40), min_size=0, max_size=8)
-_intervals = st.lists(
-    st.tuples(st.integers(0, 40), st.integers(0, 12)), min_size=0, max_size=6
-)
-
-
-@given(_points, _intervals, st.sampled_from([1, 3, 7, 60]))
-@settings(max_examples=15, deadline=None)
-def test_interval_join_matches_bruteforce(spark, points, intervals, bucket):
-    pts = spark.createDataFrame(
-        [(i, _t(s)) for i, s in enumerate(points)], "pid long, t timestamp"
-    )
-    ivs = spark.createDataFrame(
-        [(j, _t(s), _t(s + ln)) for j, (s, ln) in enumerate(intervals)],
-        "wid long, ws timestamp, we timestamp",
-    )
-    out = interval_join(
-        pts, ivs, point_time="t", start="ws", end="we", bucket_secs=bucket
-    )
-    got = sorted((r["pid"], r["wid"]) for r in out.collect())
-    expected = sorted(
-        (i, j)
-        for i, s in enumerate(points)
-        for j, (ws, ln) in enumerate(intervals)
-        if ws <= s < ws + ln
-    )
-    assert got == expected
 
 
 def test_sampling_operators(spark):
@@ -193,56 +116,6 @@ def test_hash_sample_independent_of_split(spark):
     total = sum(counts.values())
     assert counts.get("train", 0) / total == pytest.approx(0.8, abs=0.12)
 
-# ---------------------------------------------------------------------------
-# as-of mega-key split path ≡ default path (row-for-row)
-# ---------------------------------------------------------------------------
-
-_nullable_keys = st.sampled_from(["k0", "k1", None])
-# seconds drawn from a TIGHT range so equal-time ties (left-left,
-# right-right, and left==right) occur constantly
-_nullable_times = st.one_of(st.none(), st.integers(0, 5))
-_split_lefts = st.lists(
-    st.tuples(_nullable_keys, _nullable_times), min_size=0, max_size=8
-)
-_split_rights = st.lists(
-    st.tuples(_nullable_keys, _nullable_times), min_size=0, max_size=8
-)
-
-
-@given(
-    _split_lefts,
-    _split_rights,
-    st.booleans(),
-    # 1 s (one row per bucket), mid, exactly the span, far beyond the
-    # span (every row in one bucket — degenerates to the default shape)
-    st.sampled_from([1, 2, 3, 5, 6, 7, 86_400]),
-    st.sampled_from([None, 2, 3600]),
-)
-@settings(max_examples=25, deadline=None)
-def test_asof_split_path_equals_default_path(
-    spark, lefts, rights, strict, bucket, tol
-):
-    left = spark.createDataFrame(
-        [(i, k, _t(s) if s is not None else None) for i, (k, s) in enumerate(lefts)],
-        "lid long, k string, lt timestamp",
-    )
-    right = spark.createDataFrame(
-        [(i, k, _t(s) if s is not None else None) for i, (k, s) in enumerate(rights)],
-        "rid long, k string, rt timestamp",
-    )
-    kw = dict(
-        on="k", left_time="lt", right_time="rt", right_cols=["rid"],
-        right_tiebreak="rid", strict=strict, tolerance_secs=tol,
-    )
-    default = asof_join(left, right, **kw)
-    split = asof_join(left, right, split_bucket_secs=bucket, **kw)
-    d = sorted(
-        (r["lid"], r["k"], r["lt"], r["rid"]) for r in default.collect()
-    )
-    s = sorted(
-        (r["lid"], r["k"], r["lt"], r["rid"]) for r in split.collect()
-    )
-    assert d == s
 
 def test_stratified_sample_fallback_keeps_null_stratum(spark):
     """NULL is a legitimate stratum; the fallback's key tests must be
