@@ -2272,6 +2272,17 @@ def q_lang_confusion(spark, sf_dir):
     )
 
 
+def q_docs_skew_report(spark, sf_dir):
+    """Pre-shuffle skew diagnostics (operators/profile.py skew_report)
+    over the deliberately skewed source column (the mega-repo owns
+    ~30% of rows): heaviest keys, their shares, and the skew factor
+    that decides between AQE splitting and salting BEFORE the shuffle
+    is paid for."""
+    from spacy_llm_spark.operators.profile import skew_report
+
+    return skew_report(_docs(spark, sf_dir), ["source"], top_n=10)
+
+
 def q_cluster_prf(spark, sf_dir):
     """Pairwise clustering P/R/F1 (operators/scoring.py
     pairwise_cluster_prf) — the entity-resolution evaluation metric,
@@ -3874,6 +3885,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # scorer family variant (ner_prf holds the stamped slot)
         "cluster_prf": q_cluster_prf,
         "cluster_bcubed": q_cluster_bcubed,
+        # profiling-family variant (profile_documents holds the slot)
+        "docs_skew_report": q_docs_skew_report,
         # classifier-evaluation variant (ner_prf holds the scorer slot)
         "lang_confusion": q_lang_confusion,
         # graph family variant (degree/pagerank/triangles/BFS stamped)
@@ -7043,6 +7056,23 @@ SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
        CAST(len(list_slice(arr, s + 1, s + 64)) AS BIGINT) AS n_tokens,
        array_to_string(list_slice(arr, s + 1, s + 64), ' ') AS chunk_text
 FROM kept
+""",
+        "docs_skew_report": """
+WITH counts AS (
+  SELECT coalesce(CAST(source AS VARCHAR), '␀') AS key,
+         CAST(count(*) AS BIGINT) AS n
+  FROM documents GROUP BY 1
+), tot AS (
+  SELECT CAST(sum(n) AS DOUBLE) AS total,
+         CAST(count(*) AS DOUBLE) AS nkeys,
+         CAST(max(n) AS DOUBLE) AS maxn
+  FROM counts
+)
+SELECT key, n, round(n / tot.total, 6) AS share,
+       round(tot.maxn / (tot.total / tot.nkeys), 6) AS skew_factor,
+       CAST(row_number() OVER (ORDER BY n DESC, key ASC) AS BIGINT) AS rank
+FROM counts, tot
+ORDER BY n DESC, key ASC LIMIT 10
 """,
         "cluster_prf": """
 WITH a AS (

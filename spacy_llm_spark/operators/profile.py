@@ -28,7 +28,7 @@ functions/text.py's per-document quality features.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional
+from typing import Iterable, Optional, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -164,3 +164,60 @@ def histogram(
             "n",
         )
     )
+
+
+def skew_report(
+    df: DataFrame,
+    key_cols: Sequence[str],
+    top_n: int = 10,
+) -> DataFrame:
+    """Pre-join skew diagnostics for a prospective shuffle key:
+    the ``top_n`` heaviest key values with their row share and the
+    key-space skew factor (heaviest key's count / mean count per key —
+    the number that predicts whether AQE skew splitting or salting is
+    needed BEFORE paying for the shuffle).
+
+    One key-keyed aggregation + one 1-row global aggregate broadcast
+    back; top-n is TakeOrdered, never a global sort. Output:
+    (key, n, share, skew_factor, rank) — share/skew rounded 6 dp, rank
+    by (n DESC, key ASC) so the cut is deterministic under ties.
+    """
+    if top_n < 1:
+        raise ValueError(f"top_n must be >= 1, got {top_n}")
+    keys = list(key_cols)
+    # concat_ws silently DROPS null inputs, which would merge a NULL key
+    # component with the empty string (and ('a', NULL) with ('a',)) —
+    # encode each component null-safely with a sentinel instead
+    parts = [
+        F.coalesce(F.col(k).cast("string"), F.lit("␀")) for k in keys
+    ]
+    counts = df.groupBy(
+        F.concat_ws("␟", *parts).alias("key")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n"))
+    totals = counts.agg(
+        F.sum("n").cast("double").alias("_total"),
+        F.count(F.lit(1)).cast("double").alias("_nkeys"),
+        F.max("n").cast("double").alias("_maxn"),
+    )
+    return (
+        counts.crossJoin(F.broadcast(totals))
+        .select(
+            "key",
+            "n",
+            F.round(F.col("n") / F.col("_total"), 6).alias("share"),
+            F.round(
+                F.col("_maxn") / (F.col("_total") / F.col("_nkeys")), 6
+            ).alias("skew_factor"),
+        )
+        .orderBy(F.desc("n"), F.asc("key"))
+        .limit(top_n)
+        .withColumn("rank", _rank_window().cast("long"))
+    )
+
+
+def _rank_window():
+    # rank over the already-limited top-n frame: the single-partition
+    # window touches <= top_n rows, never the key space
+    from pyspark.sql import Window
+
+    return F.row_number().over(Window.orderBy(F.desc("n"), F.asc("key")))

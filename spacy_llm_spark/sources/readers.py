@@ -69,3 +69,23 @@ def read_corpus_table(spark, path: str, fmt: str = "parquet"):
     if "content_sha256" not in df.columns:
         df = df.withColumn("content_sha256", F.sha2("content", 256))
     return df
+
+
+def load_examples_for_task(path: Union[str, Path], task: str) -> List[dict]:
+    """Validate raw example dicts against the task's expected shape
+    (pydantic-analog validation, kept minimal: required keys present)."""
+    required = {
+        "ner": {"text", "spans"},
+        "rel": {"text", "ents", "relations"},
+        "entity_linker": {"text", "mentions", "entity_ids", "solutions"},
+    }.get(task, {"text"})
+    examples = fewshot_reader(path)
+    out = []
+    for ex in examples:
+        if required <= set(ex):
+            out.append(ex)
+    if examples and not out:
+        raise ValueError(
+            f"No examples in {path} match the {task} schema (need {required})."
+        )
+    return out

@@ -131,6 +131,34 @@ def test_pairwise_cluster_prf_no_pair_materialization(spark):
     assert "SortMergeJoin" not in plan
 
 
+# --------------------------------------------------- skew report
+
+from spacy_llm_spark.operators.profile import skew_report
+
+
+def test_skew_report_values(spark):
+    rows = [("hot",)] * 6 + [("a",)] * 2 + [("b",)] * 1 + [("c",)] * 1
+    df = spark.createDataFrame(rows, "k string")
+    got = skew_report(df, ["k"], top_n=2).collect()
+    assert [(r["key"], r["n"], r["rank"]) for r in got] == [("hot", 6, 1), ("a", 2, 2)]
+    # mean per key = 10/4 = 2.5; skew factor = 6/2.5 = 2.4; share 0.6
+    assert got[0]["share"] == 0.6 and got[0]["skew_factor"] == 2.4
+
+    import pytest
+
+    with pytest.raises(ValueError, match="top_n"):
+        skew_report(df, ["k"], top_n=0)
+
+
+def test_skew_report_composite_key_and_ties(spark):
+    rows = [("r1", "py"), ("r1", "py"), ("r2", "go"), ("r1", "go")]
+    df = spark.createDataFrame(rows, "repo string, lang string")
+    got = skew_report(df, ["repo", "lang"], top_n=3).collect()
+    assert got[0]["key"] == "r1␟py" and got[0]["n"] == 2
+    # ties broken by key ascending — deterministic cut
+    assert [r["key"] for r in got[1:]] == ["r1␟go", "r2␟go"]
+
+
 # --------------------------------------------------- document chunking
 
 from spacy_llm_spark.functions.text import chunk_documents

@@ -46,6 +46,17 @@ def test_fewshot_reader_formats(tmp_path):
         readers.fewshot_reader(bad)
 
 
+def test_load_examples_schema_filter(tmp_path):
+    path = tmp_path / "mixed.jsonl"
+    path.write_text(
+        json.dumps({"text": "ok", "ents": [], "relations": []})
+        + "\n"
+        + json.dumps({"text": "missing fields"})
+    )
+    out = readers.load_examples_for_task(path, "rel")
+    assert len(out) == 1
+
+
 def test_read_corpus_table_adds_sha(spark, tmp_path):
     df = spark.createDataFrame(
         [("r", "p", "c", "py", "hello")],
