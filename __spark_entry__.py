@@ -577,43 +577,6 @@ def q_order_revenue(spark, sf_dir):
     )
 
 
-def q_media_phash_dups(spark, sf_dir):
-    """Multimodal near-dup detection: perceptual dHash over the decoded
-    payloads (multimodal.media_phash — deterministic fake decode, real
-    Arrow kernel + banding plumbing) -> generic 64-bit hamming pair join
-    (dedup.hamming64_dup_pairs). Every 10th payload is planted as an
-    exact duplicate under a new id; random 64-bit hashes make chance
-    <= 3-bit collisions ~1e-14, so the pairs are exactly the plants.
-    No SQL oracle BY NATURE: the hash is a function of binary payload
-    bytes (rows-only driver check; value parity vs numpy is pinned in
-    tests/test_multimodal.py)."""
-    from spacy_llm_spark.operators import multimodal as mm
-    from spacy_llm_spark.operators.dedup import hamming64_dup_pairs
-
-    base = mm.synthesize_media_table(spark, n=400)
-    dups = base.where(
-        F.col("media_id").substr(2, 5).cast("int") % 10 == 0
-    ).withColumn("media_id", F.concat(F.lit("d"), F.col("media_id")))
-    fp = mm.media_phash(base.unionByName(dups))
-    return hamming64_dup_pairs(
-        fp, id_col="media_id", hash_col="phash", max_hamming=3
-    )
-
-
-def q_media_stats(spark, sf_dir):
-    """Multimodal metadata aggregate over the synthesized media table —
-    metadata formulas are deterministic in the row index, so the DuckDB
-    oracle regenerates them from range(n)."""
-    from spacy_llm_spark.operators import multimodal as mm
-
-    media = mm.synthesize_media_table(spark, n=60)
-    return mm.media_stats(media).select(
-        "media_type",
-        F.col("n").cast("long").alias("n"),
-        F.round("avg_frames", 6).alias("avg_frames"),
-    )
-
-
 def q_embedding_dup_pairs(spark, sf_dir):
     """Embedding near-dup pairs via banded hyperplane LSH (OR-construction)
     verified by exact cosine — the oracle is the brute-force cross join, so
@@ -807,15 +770,6 @@ def q_vocab_topk(spark, sf_dir):
     return textfn.vocab_topk(_docs(spark, sf_dir), k=20)
 
 
-def q_lm_self_nll(spark, sf_dir):
-    """CCNet-style fluency score: bigram stupid-backoff LM trained on
-    the corpus, scoring the same corpus (functions/lm.py). Lower
-    lm_nll = more fluent relative to the corpus."""
-    from spacy_llm_spark.functions.lm import lm_self_score
-
-    return lm_self_score(_docs(spark, sf_dir))
-
-
 def q_semantic_dedup_pairs(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): centroid cells + within-cell exact
     all-pairs cosine (operators/dedup.semantic_dup_pairs). Centroids are
@@ -872,26 +826,10 @@ def q_semantic_dedup_incremental(spark, sf_dir):
     )
 
 
-def q_lm_incremental_nll(spark, sf_dir):
-    """Incremental LM maintenance: counts trained on the first half of
-    the corpus, then the second half folded in via merge_ngram_counts
-    (additive — history never re-tokenizes); scoring with the merged
-    model must equal training on everything at once, so the oracle IS
-    lm_self_nll's, verbatim."""
-    from spacy_llm_spark.functions.lm import lm_score, merge_ngram_counts, ngram_lm_counts
-
-    docs = _docs(spark, sf_dir)
-    half_a = docs.where(F.col("doc_id") % 2 == 0)
-    half_b = docs.where(F.col("doc_id") % 2 == 1)
-    uni, big, total = ngram_lm_counts(half_a)
-    uni, big, total = merge_ngram_counts(uni, big, total, half_b)
-    return lm_score(docs, uni, big, total)
-
-
 def _pii_augmented(docs):
-    """Deterministically inject PII into the synthetic corpus (doc_id %
-    4 selects the class mix) so detection/redaction is actually
-    exercised; the oracle builds the identical augmented text in SQL."""
+    """Deterministically inject PII-shaped strings into the synthetic
+    corpus (doc_id % 4 selects the class mix) so pre-tokenization sees
+    punctuation; the oracle builds the identical augmented text in SQL."""
     sha = F.sha2(F.col("doc_id").cast("string"), 256)
     ids = F.col("doc_id").cast("string")
     text = F.col("text")
@@ -942,51 +880,6 @@ def _pii_augmented(docs):
     return docs.select("doc_id", aug.alias("text"))
 
 
-def q_pii_scrub(spark, sf_dir):
-    """PII detect + redact (functions/redact.py) over the deterministic
-    PII-augmented corpus; redacted text is compared by sha256."""
-    from spacy_llm_spark.functions import redact as redactfn
-
-    aug = _pii_augmented(_docs(spark, sf_dir))
-    counts = redactfn.pii_counts(aug)
-    scrubbed = redactfn.redact(aug).select(
-        "doc_id", F.sha2("text_redacted", 256).alias("redacted_sha256")
-    )
-    return counts.join(scrubbed, "doc_id")
-
-
-def q_decontaminate(spark, sf_dir):
-    """Benchmark decontamination: distinct 3-gram overlap of every doc
-    (doc_id >= 20) against the probe set (doc_id < 20), broadcast join."""
-    from spacy_llm_spark.operators import decontaminate as decon
-
-    docs = _docs(spark, sf_dir)
-    return decon.ngram_overlap(
-        docs.where(F.col("doc_id") >= 20),
-        docs.where(F.col("doc_id") < 20),
-        n=3,
-        min_overlap=1,
-    )
-
-
-def q_decontaminate_bloom(spark, sf_dir):
-    """Bloom-prefiltered decontamination: identical results to
-    ``decontaminate`` (no false negatives; false positives die in the
-    exact confirm join) — shares its oracle — but the corpus n-gram
-    stream is map-side-filtered against a ~1 MiB broadcast bitmap
-    before any join, so the confirm join input is hit-scale even when
-    the probe's distinct-n-gram set outgrows broadcast."""
-    from spacy_llm_spark.operators import decontaminate as decon
-
-    docs = _docs(spark, sf_dir)
-    return decon.ngram_overlap_bloom(
-        docs.where(F.col("doc_id") >= 20),
-        docs.where(F.col("doc_id") < 20),
-        n=3,
-        min_overlap=1,
-    )
-
-
 def q_kg_degree_stats(spark, sf_dir):
     """Vertex degree profile of the raw triple multigraph (one union +
     one groupBy on the vertex id)."""
@@ -996,37 +889,20 @@ def q_kg_degree_stats(spark, sf_dir):
     return graph.degree_stats(edges)
 
 
-def _wpr_oracle_sql(iters: int = 3, d: float = 0.85, q: int = 10,
-                    ew_sql: str | None = None,
-                    final_sql: str | None = None) -> str:
+def _wpr_oracle_sql(iters: int = 3, d: float = 0.85, q: int = 10) -> str:
     """Round-unrolled weighted-PageRank oracle — mirrors
     graph.weighted_pagerank: per-edge shares quantized q dp PRE-sum,
-    rank quantized q dp per round, dangling mass as a scalar.
-    ``ew_sql`` overrides the weighted-edge CTE (default: mention-count
-    weights over the canonical KG); ``final_sql`` overrides the final
-    SELECT (default: the full rank table)."""
-    parts = [
-        ew_sql
-        if ew_sql is not None
-        else """
+    rank quantized q dp per round, dangling mass as a scalar. Edge
+    weights are mention counts over the canonical KG."""
+    parts = [f"""
 , ew AS (SELECT subj AS s, obj AS t, CAST(count(*) AS DOUBLE) AS w
          FROM edges GROUP BY subj, obj)
 , nodes AS (SELECT DISTINCT v AS vertex FROM
             (SELECT s AS v FROM ew UNION ALL SELECT t FROM ew))
 , ws AS (SELECT s, sum(w) AS W FROM ew GROUP BY s)
 , nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)
-, r0 AS (SELECT vertex, round(1.0 / (SELECT n FROM nn), %d) AS rank
-         FROM nodes)"""
-    ]
-    if ew_sql is not None:
-        parts.append("""
-, nodes AS (SELECT DISTINCT v AS vertex FROM
-            (SELECT s AS v FROM ew UNION ALL SELECT t FROM ew))
-, ws AS (SELECT s, sum(w) AS W FROM ew GROUP BY s)
-, nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM nodes)
-, r0 AS (SELECT vertex, round(1.0 / (SELECT n FROM nn), %d) AS rank
-         FROM nodes)""")
-    parts = [p % q if "%d" in p else p for p in parts]
+, r0 AS (SELECT vertex, round(1.0 / (SELECT n FROM nn), {q}) AS rank
+         FROM nodes)"""]
     for k in range(1, iters + 1):
         parts.append(f"""
 , c{k} AS (SELECT ew.t AS vertex,
@@ -1043,42 +919,8 @@ def _wpr_oracle_sql(iters: int = 3, d: float = 0.85, q: int = 10,
                                  + (SELECT dm FROM d{k})
                                    / (SELECT n FROM nn)), {q}) AS rank
            FROM nodes n LEFT JOIN c{k} c ON c.vertex = n.vertex)""")
-    parts.append(
-        final_sql
-        if final_sql is not None
-        else f"\nSELECT vertex, rank FROM r{iters}\n"
-    )
+    parts.append(f"\nSELECT vertex, rank FROM r{iters}\n")
     return "".join(parts)
-
-
-def q_textrank_keywords(spark, sf_dir):
-    """TextRank keyword extraction (Mihalcea & Tarau 2004) as pure
-    operator COMPOSITION — no new kernel: the corpus co-occurrence
-    graph (functions/cooccur.cooccurrence_counts, window 2, pruned to
-    n_ab >= 10) symmetrized into weighted edges, ranked by
-    graph.weighted_pagerank (3 rounds), top-20 tokens by rank with a
-    deterministic tie-break. TakeOrderedAndProject on the vertex-scale
-    rank table."""
-    from spacy_llm_spark.functions.cooccur import cooccurrence_counts
-    from spacy_llm_spark.operators.graph import weighted_pagerank
-
-    co = cooccurrence_counts(_docs(spark, sf_dir), window=2).where(
-        F.col("n_ab") >= 10
-    )
-    sym = co.select(
-        F.col("a").alias("subj"), F.col("b").alias("obj"),
-        F.col("n_ab").cast("double").alias("weight"),
-    ).unionByName(
-        co.select(
-            F.col("b").alias("subj"), F.col("a").alias("obj"),
-            F.col("n_ab").cast("double").alias("weight"),
-        )
-    )
-    return (
-        weighted_pagerank(sym, iters=3)
-        .orderBy(F.desc("rank"), "vertex")
-        .limit(20)
-    )
 
 
 def _katz_oracle_sql(iters: int = 3, alpha: float = 0.1,
@@ -2072,38 +1914,6 @@ def q_profile_documents(spark, sf_dir):
     return profile_table(_docs(spark, sf_dir))
 
 
-def q_bpe_pair_counts(spark, sf_dir):
-    """Round-0 BPE training statistics (functions/bpe.py): corpus-wide
-    adjacent symbol-pair counts over char + end-of-word symbols, top 30
-    in the training tie-break order (count DESC, pair ASC) — exactly the
-    argmax stream the first merge round consumes. The corpus collapses
-    to the word-frequency table in ONE shuffle; pair stats aggregate
-    vocabulary-scale rows only."""
-    from spacy_llm_spark.functions import bpe
-
-    sym = bpe.initial_symbols(bpe.word_table(_docs(spark, sf_dir)))
-    return (
-        bpe.pair_counts(sym)
-        .select("a", "b", F.col("n_pairs").cast("long").alias("n_pairs"))
-        .orderBy(F.desc("n_pairs"), F.asc("a"), F.asc("b"))
-        .limit(30)
-    )
-
-
-def q_bpe_encode(spark, sf_dir):
-    """Induce 16 BPE merges from the corpus and encode it with them
-    (functions/bpe.py). Iterative argmax training + the data-dependent
-    lowest-rank-first encode loop are genuinely non-SQL-expressible, so
-    this entry carries the driver's rows-only check; full value parity
-    against a pure-Python Sennrich reference is pinned in
-    tests/test_bpe.py (train, encode, losslessness, hypothesis sweep)."""
-    from spacy_llm_spark.functions import bpe
-
-    docs = _docs(spark, sf_dir)
-    merges = bpe.train_bpe(docs, n_merges=16)
-    return bpe.encode_bpe(docs, merges).select("doc_id", "n_bpe_tokens")
-
-
 def q_docs_length_histogram(spark, sf_dir):
     """Fixed-width document-length histogram (operators/profile.py
     histogram): distribution shape for the corpus card — one 1-row
@@ -2145,21 +1955,6 @@ def q_doc_keywords(spark, sf_dir):
     from spacy_llm_spark.functions.relevance import tfidf_keywords
 
     return tfidf_keywords(_docs(spark, sf_dir), k=3, min_df=2)
-
-
-def q_corpus_mix(spark, sf_dir):
-    """Exact-composition domain mix (operators/sampling.py
-    proportional_mix): largest corpus with lang shares en:de:fr =
-    60:20:20 — binding group taken whole, others cut to floor(scale·p)
-    by content-hash order; one group-cardinality aggregate + one
-    group-keyed window, RNG-free."""
-    from spacy_llm_spark.operators.sampling import proportional_mix
-
-    return proportional_mix(
-        _docs(spark, sf_dir),
-        "lang",
-        {"en": 0.6, "de": 0.2, "fr": 0.2},
-    )
 
 
 def q_kg_shortest_paths(spark, sf_dir):
@@ -2305,40 +2100,6 @@ def q_cluster_bcubed(spark, sf_dir):
     return bcubed_prf(_docs(spark, sf_dir), "lang", "source")
 
 
-def q_token_pmi(spark, sf_dir):
-    """Token co-occurrence PMI (functions/cooccur.py): collocation
-    candidates over the corpus. Pair generation is a windowed JVM
-    projection (never a positions self-join — that shape is what the
-    ORACLE uses as an independent cross-check); counts and PMI joins
-    are vocabulary-scale."""
-    from spacy_llm_spark.functions.cooccur import cooccurrence_pmi
-
-    return cooccurrence_pmi(_docs(spark, sf_dir), window=2, min_count=10)
-
-
-def q_bpe_pair_counts_incremental(spark, sf_dir):
-    """Incremental twin of bpe_pair_counts (shares its oracle
-    verbatim): a persisted (word, n) index is built over the standing
-    corpus once; the new batch is tokenized alone and merged in
-    (functions/bpe.py word_index_append — counts are associative sums,
-    so merged == full rebuild bit-for-bit); round-0 pair statistics
-    come straight off the merged index without touching any document."""
-    from spacy_llm_spark.functions import bpe
-    from spacy_llm_spark.fs import cut_lineage
-
-    docs = _docs(spark, sf_dir)
-    old = docs.where(F.col("doc_id") % 5 != 4)
-    new = docs.where(F.col("doc_id") % 5 == 4)
-    idx = cut_lineage(bpe.word_index(old))
-    merged = bpe.word_index_append(idx, new)
-    return (
-        bpe.pair_counts_from_index(merged)
-        .select("a", "b", F.col("n_pairs").cast("long").alias("n_pairs"))
-        .orderBy(F.desc("n_pairs"), F.asc("a"), F.asc("b"))
-        .limit(30)
-    )
-
-
 def q_corpus_split(spark, sf_dir):
     """Deterministic content-hashed train/val/test split — duplicates
     can never straddle splits; reproducible at any cluster size."""
@@ -2389,91 +2150,6 @@ def q_regional_revenue(spark, sf_dir):
             F.count(F.lit(1)).alias("n_items"),
             F.round(F.sum(rev), 2).cast("double").alias("revenue"),
         )
-    )
-
-
-def q_stratified_sample(spark, sf_dir):
-    """Deterministic stratified sample: 10 docs per source, picked by
-    content-hash order (operators/sampling.py)."""
-    from spacy_llm_spark.operators import sampling
-
-    return sampling.stratified_sample(
-        _docs(spark, sf_dir), "source", 10
-    ).select("doc_id", "source")
-
-
-def q_temperature_sample(spark, sf_dir):
-    """Per-language temperature downsampling (alpha=0.5): kept sizes
-    follow n_lang**alpha, smallest language keeps everything; row cut
-    is content-hash deterministic (operators/sampling.py)."""
-    from spacy_llm_spark.operators import sampling
-
-    return sampling.temperature_sample(
-        _docs(spark, sf_dir), "lang", alpha=0.5
-    ).select("doc_id", "lang", "keep_frac")
-
-
-def q_pack_sequences(spark, sf_dir):
-    """Concatenate-and-chunk sequence packing (budget=256 tokens, doc_id
-    order): distributed prefix sum over driver-frozen chunk boundaries —
-    no single-partition window (operators/packing.py)."""
-    from spacy_llm_spark.operators import packing
-
-    return packing.pack_sequences(
-        _docs(spark, sf_dir), budget=256, n_chunks=7
-    )
-
-
-def q_pack_texts(spark, sf_dir):
-    """Materialized training sequences: packed segments joined back to
-    the docs, tokens sliced per segment and reassembled per pack
-    (operators/packing.py materialize_packs)."""
-    from spacy_llm_spark.operators import packing
-
-    docs = _docs(spark, sf_dir)
-    segs = packing.pack_sequences(docs, budget=256, n_chunks=7)
-    return packing.materialize_packs(docs, segs)
-
-
-def q_pack_sequences_incremental(spark, sf_dir):
-    """Incremental packing parity: pack the first ~80% of doc_ids, then
-    append-pack the rest at stream_offset = total_tokens(old); the union
-    must equal the full recompute bit-for-bit — the oracle is the SAME
-    full-corpus SQL as pack_sequences."""
-    from spacy_llm_spark.operators import packing
-
-    docs = _docs(spark, sf_dir)
-    split_id = [
-        r[0] for r in docs.selectExpr("percentile(doc_id, 0.8)").collect()
-    ][0]
-    old = docs.where(F.col("doc_id") <= split_id)
-    new = docs.where(F.col("doc_id") > split_id)
-    prev_total = packing.total_tokens(old)
-    return packing.pack_sequences(old, budget=256, n_chunks=5).unionByName(
-        packing.pack_sequences_append(new, 256, prev_total, n_chunks=3)
-    )
-
-
-def q_weighted_upsample(spark, sf_dir):
-    """Per-language epoch upsampling (training-mix repeat factors):
-    floor(w) copies + a content-hash fractional copy; weights < 1
-    downsample (operators/sampling.py weighted_upsample)."""
-    from spacy_llm_spark.operators import sampling
-
-    return sampling.weighted_upsample(
-        _docs(spark, sf_dir),
-        {"de": 2.5, "fr": 2.0, "es": 1.5, "zh": 1.25, "en": 0.4},
-        "lang",
-    ).select("doc_id", "lang", "epoch")
-
-
-def q_hash_sample(spark, sf_dir):
-    """Deterministic ~20% content-hash sample — shuffle-free,
-    resume-safe (same doc always makes the same cut)."""
-    from spacy_llm_spark.operators import sampling
-
-    return sampling.hash_sample(_docs(spark, sf_dir), 0.2).select(
-        "doc_id", sampling.sample_bucket("text").alias("bucket")
     )
 
 
@@ -2588,7 +2264,7 @@ def q_kg_neighbor_jaccard(spark, sf_dir):
 def q_k_anonymity_audit(spark, sf_dir):
     """k-anonymity audit (audit.k_anonymity_violations): customer
     quasi-identifier groups (nation, segment) smaller than k=10 — the
-    re-identification risk report beside the PII scrub."""
+    re-identification risk report."""
     from spacy_llm_spark.operators import audit
 
     customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
@@ -3402,31 +3078,6 @@ def q_kg_ktruss(spark, sf_dir):
     return k_truss(cliques.unionByName(tree), k=5)
 
 
-def q_dsir_topk(spark, sf_dir):
-    """DSIR greedy data selection (operators/importance.py, Xie et al.
-    2023 arXiv:2302.03169): the 100 raw documents whose hashed-bigram
-    feature distribution most resembles the English target slice —
-    importance weight = sum of per-feature target/raw log-probability
-    ratios over 10k sha-hashed buckets, add-1 smoothed."""
-    from spacy_llm_spark.operators import importance
-
-    docs = _docs(spark, sf_dir)
-    return importance.dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=100)
-
-
-def q_dsir_resample(spark, sf_dir):
-    """DSIR Gumbel-top-k importance RESAMPLING (the paper's actual
-    sampler, derandomized): 100 docs without replacement proportional
-    to softmax(logweight / 2.0), with hash-derived Gumbel noise — a
-    reproducible random sample weighted toward the target domain."""
-    from spacy_llm_spark.operators import importance
-
-    docs = _docs(spark, sf_dir)
-    return importance.dsir_resample(
-        docs, docs.where(F.col("lang") == "en"), k=100, temperature=2.0
-    )
-
-
 def q_knn_join(spark, sf_dir):
     """Batch exact k-NN join (operators/similarity.py knn_join): every
     50th vector's 5 nearest corpus neighbors by cosine — broadcast
@@ -3505,29 +3156,6 @@ def q_audit_orders(spark, sf_dir):
     ).orderBy("check")
 
 
-def q_dsir_topk_incremental(spark, sf_dir):
-    """DSIR selection through the persisted bucket-count indexes
-    (operators/importance.py bucket_count_index / bucket_index_append /
-    dsir_logweights_from_index): raw index built over the even docs,
-    the odd half APPENDED (counts are associative — merge bit-equal to
-    a full rebuild), target index over the en slice; scores come off
-    the standing indexes without re-reading either corpus. Shares
-    dsir_topk's oracle verbatim — the full≡incremental contract."""
-    from spacy_llm_spark.operators import importance
-
-    docs = _docs(spark, sf_dir)
-    old = docs.where(F.col("doc_id") % 2 == 0)
-    new = docs.where(F.col("doc_id") % 2 == 1)
-    raw_idx = importance.bucket_index_append(
-        importance.bucket_count_index(old).localCheckpoint(), new
-    ).localCheckpoint()
-    tgt_idx = importance.bucket_count_index(
-        docs.where(F.col("lang") == "en")
-    ).localCheckpoint()
-    w = importance.dsir_logweights_from_index(docs, raw_idx, tgt_idx)
-    return w.orderBy(F.desc("dsir_logweight"), F.asc("doc_id")).limit(100)
-
-
 def q_kg_msf(spark, sf_dir):
     """Boruvka minimum spanning forest (graph.minimum_spanning_forest)
     over a deterministic weighted graph derived from part (k -> k//2
@@ -3599,17 +3227,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     minhash/simhash/embedding slots held by their incremental reps),
     ANN (brute; the banded-LSH machinery stays stamped via
     lsh_dedup_incremental), truth-discovery fusion, ontology
-    induction, graph analytics, corpus
-    hygiene (PII/decontam/quality), relevance scoring
-    (BM25), sub-document span dedup, sampling, sequence packing,
-    NER parsers/scorers (token_count, ner_prf), windows/agg, EL,
-    multimodal. Variants whose family already has a stamped
-    representative (extra window shapes, base fingerprints) live AFTER
-    position 50 — still
-    oracle-checked by scripts/check_oracles.py and the judge's full
-    sweep. ADD NEW ENTRIES AFTER POSITION 50 unless they open a new
-    family; if they do, swap them in for a same-family variant, never
-    push a family's only representative below 50.
+    induction, graph analytics, text quality / language detection,
+    relevance scoring (BM25), sub-document span dedup, dataset
+    profiling, privacy audits, NER parsers/scorers (token_count,
+    ner_prf), windows/agg, EL. Variants whose family already has a
+    stamped representative (extra window shapes, base fingerprints)
+    live AFTER position 50 — still oracle-checked by
+    scripts/check_oracles.py when it runs every key. ADD NEW ENTRIES
+    AFTER POSITION 50 unless they open a new family; if they do, swap
+    them in for a same-family variant, never push a family's only
+    representative below 50.
     """
     return {
         # --- KG core (the flagship path) ---
@@ -3651,35 +3278,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # --- sub-document (span) dedup ---
         "dup_ngram_stats": q_dup_ngram_stats,
         # --- similarity search ---
-        # (ivf_topk moved below 50 to make room for the DSIR family:
-        # ANN keeps brute-force + LSH stamped reps, and ivf_topk stays
-        # judge-sweep-checked with its incremental twin)
+        # (ivf_topk is below 50: ANN keeps brute-force + LSH stamped
+        # reps, and ivf_topk stays oracle-checked with its incremental
+        # twin)
         "cosine_topk": q_cosine_topk,
         # --- truth-discovery fact fusion ---
         # (new family this session; ann_lsh_topk moved below 50 — ANN
         # keeps the brute-force rep and the banded-LSH machinery stays
         # stamped via lsh_dedup_incremental)
         "kg_fused_facts": q_kg_fused_facts,
-        # --- importance-weighted data selection (DSIR) ---
-        "dsir_topk": q_dsir_topk,
         # --- graph analytics ---
         "kg_degree_stats": q_kg_degree_stats,
         "kg_pagerank": q_kg_pagerank,
         # --- RDF serialization (N-Triples): its only stamped entry ---
         "kg_ntriples": q_kg_ntriples,
-        "textrank_keywords": q_textrank_keywords,
         # --- named-graph (quad) matching — new family, this
         # session; kg_bfs_levels moved below 50 (analytics keeps
         # degree_stats + pagerank stamped) ---
         "kg_bgp_graphs": q_kg_bgp_graphs,
-        # --- tokenizer induction (BPE round-0 statistics) ---
-        # (kg_clustering_coeff moved below 50 to make room: it shares
-        # the oriented-wedge machinery with kg_triangles, so the graph
-        # family keeps degree/pagerank/triangles/BFS stamped reps)
-        "bpe_pair_counts": q_bpe_pair_counts,
-        # --- corpus hygiene / text analysis ---
-        "pii_scrub": q_pii_scrub,
-        "decontaminate": q_decontaminate,
         # --- relevance scoring (BM25) ---
         "bm25_topk": q_bm25_topk,
         "quality_score": q_quality_score,
@@ -3689,10 +3305,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (corpus_clean moved below 50 to make room: it composes the
         # same quality_exprs machinery quality_score stamps)
         "profile_documents": q_profile_documents,
-        # --- sampling ---
-        "stratified_sample": q_stratified_sample,
-        # --- sequence packing (training-batch assembly) ---
-        "pack_sequences": q_pack_sequences,
         # --- NER parsers / scorers ---
         "token_count": q_token_count,
         "ner_prf": q_ner_prf,
@@ -3702,9 +3314,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (new family this session; topk_orders_per_customer moved
         # below 50 — the top-n shape keeps el_candidates_topn stamped)
         "kg_ontology": q_kg_ontology,
-        # --- entity linking + multimodal ---
+        # --- entity linking ---
         "el_candidates_topn": q_el_candidates_topn,
-        "media_stats": q_media_stats,
         # --- sinks, graph analytics, SPARQL modifiers, spanning forest ---
         "save_io_counts": q_save_io_counts,
         "kg_katz": q_kg_katz,
@@ -3713,21 +3324,20 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_degree_histogram": q_kg_degree_histogram,
         "kg_bgp_bind_order": q_kg_bgp_bind_order,
         "kg_msf": q_kg_msf,
-        # ================= position 50 boundary =================
-        # family variants below — oracle-checked, not driver-stamped
+        # --- single linkage, privacy audits, base dedup / BFS / text
+        # reps: the slots the training-data curation families held ---
         "kg_single_linkage": q_kg_single_linkage,
         "k_anonymity_audit": q_k_anonymity_audit,
         "l_diversity_audit": q_l_diversity_audit,
         "lsh_dedup_verified": q_lsh_dedup_verified,
         "kg_bfs_levels": q_kg_bfs_levels,
         "detect_language": q_detect_language,
-        # (corpus_clean is the quality family's 3rd rep, swapped out for
-        # dataset profiling)
         "corpus_clean": q_corpus_clean,
-        # dedup-modality base reps, swapped below 50 in round 5 for the
-        # kg_bgp_match / kg_closure families (simhash_incremental and
-        # embedding_lsh_incremental keep those modalities stamped)
         "simhash_dup_pairs": q_simhash_dup_pairs,
+        # ================= position 50 boundary =================
+        # family variants below — oracle-checked, not driver-stamped
+        # (embedding_lsh_incremental keeps the embedding modality
+        # stamped)
         "embedding_dup_pairs": q_embedding_dup_pairs,
         # RDF interchange (serde-family variant; escape table pinned by
         # the adversarial round-trip test)
@@ -3806,15 +3416,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_split": q_corpus_split,
         "event_quantiles": q_event_quantiles,
         "events_daily_pivot": q_events_daily_pivot,
-        # ANN-family variant: persisted-index IVF (swapped below 50 for
-        # the DSIR importance-selection family in round 5)
+        # ANN-family variant: persisted-index IVF
         "ivf_topk": q_ivf_topk,
         "cosine_topk_int8": q_cosine_topk_int8,
         "ivf_topk_incremental": q_ivf_topk_incremental,
-        # DSIR-family variants: the Gumbel-top-k resampler proper, and
-        # the persisted-index/incremental scoring path
-        "dsir_resample": q_dsir_resample,
-        "dsir_topk_incremental": q_dsir_topk_incremental,
         # graph-analytics variants: hub-discounted link prediction and
         # LPA community detection (degree/pagerank/triangles/BFS are
         # the stamped reps)
@@ -3857,31 +3462,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lexical_cosine_incremental": q_lexical_cosine_incremental,
         "vocab_drift": q_vocab_drift,
         "lsh_dedup_scoped": q_lsh_dedup_scoped,
-        "lm_self_nll": q_lm_self_nll,
         "semantic_dedup_pairs": q_semantic_dedup_pairs,
         "semantic_dedup_incremental": q_semantic_dedup_incremental,
-        "lm_incremental_nll": q_lm_incremental_nll,
-        "decontaminate_bloom": q_decontaminate_bloom,
-        "temperature_sample": q_temperature_sample,
-        # hash_sample: sampling-family variant (stratified_sample is the
-        # stamped representative) — swapped below 50 for pack_sequences
-        "hash_sample": q_hash_sample,
-        "pack_sequences_incremental": q_pack_sequences_incremental,
         # sub-document dedup family variant (dup_ngram_stats is the
         # stamped representative); adds the CCNet rewrite step
         "line_dedup": q_line_dedup,
-        # sampling-family variant: epoch upsampling (mixing recipe)
-        "weighted_upsample": q_weighted_upsample,
         # graph-analytics variant (kg_triangles/kg_clustering_coeff are
         # the stamped representatives): link-prediction scoring
         "kg_neighbor_jaccard": q_kg_neighbor_jaccard,
-        # packing-family variant: materialized training sequences
-        "pack_texts": q_pack_texts,
         # incremental twin of line_dedup (shares its oracle verbatim)
         "line_dedup_incremental": q_line_dedup_incremental,
-        # text-analysis family variant (quality_score/detect_language
-        # hold the family's stamped slots)
-        "token_pmi": q_token_pmi,
         # scorer family variant (ner_prf holds the stamped slot)
         "cluster_prf": q_cluster_prf,
         "cluster_bcubed": q_cluster_bcubed,
@@ -3898,20 +3488,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_edge_support_incremental": q_kg_edge_support_incremental,
         "kg_shortest_paths": q_kg_shortest_paths,
         "doc_keywords": q_doc_keywords,
-        "corpus_mix": q_corpus_mix,
         # text-analysis family variant: RAG chunking
         "docs_chunks": q_docs_chunks,
         # profiling family variant (profile_documents holds the slot)
         "docs_length_histogram": q_docs_length_histogram,
-        # incremental twin of bpe_pair_counts (shares its oracle)
-        "bpe_pair_counts_incremental": q_bpe_pair_counts_incremental,
-        # iterative BPE train+encode — no SQL oracle by nature (the
-        # driver records its rows-only check); value parity is pinned
-        # against a pure-Python reference in tests/test_bpe.py
-        "bpe_encode": q_bpe_encode,
-        # multimodal near-dup: rows-only by nature (hash of binary
-        # payload bytes; numpy parity pinned in test_multimodal.py)
-        "media_phash_dups": q_media_phash_dups,
     }
 
 
@@ -3919,27 +3499,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # oracles — bit-for-bit the engine's sha2_60 token-hash majority vote.
 # The cluster oracle's recursive CTE (transitive closure) needs WITH
 # RECURSIVE even though the fingerprint part is plain.
-# Concatenate-and-chunk sequence packing: global running token sum in
-# doc_id order, cut every 256 tokens; one row per (doc, pack) segment.
-# string_split(text, ' ') matches the engine's whitespace token_count on
-# this corpus (same equivalence the green token_count oracle pins).
-_PACK_SEQUENCES_SQL = """
-WITH t AS (
-  SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
-  FROM documents
-), c AS (
-  SELECT doc_id, n_tok,
-         CAST(sum(n_tok) OVER (ORDER BY doc_id) AS BIGINT) AS cend
-  FROM t WHERE n_tok > 0
-)
-SELECT c.doc_id, CAST(p AS BIGINT) AS pack_id,
-       CAST(greatest(cend - n_tok, p*256) - p*256 AS BIGINT) AS tok_start,
-       CAST(least(cend, (p+1)*256) - greatest(cend - n_tok, p*256) AS BIGINT)
-         AS seg_len
-FROM c, UNNEST(generate_series(CAST((cend - n_tok) // 256 AS BIGINT),
-                               CAST((cend - 1) // 256 AS BIGINT))) AS u(p)
-"""
-
 _SIMHASH_FP_CTE = """
 WITH RECURSIVE toks AS (
   SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
@@ -4369,47 +3928,6 @@ JOIN nn ON nn.lab = d.lab
     )
 
 
-#: DSIR per-document log importance weights (raw = documents, target =
-#: lang-'en' slice, hashed bigrams, 10k buckets, alpha=1) — shared by
-#: the dsir_topk and dsir_resample oracles, which differ only in the
-#: selection key. Mirrors operators/importance.py: bucket = sha256 hex
-#: chars 25-32 mod 10000; log-ratio quantized to 8 dp pre-sum.
-_DSIR_WEIGHTS_CTE = """
-WITH ts AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0) AS toks
-  FROM documents
-), tok AS (
-  SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS ord
-  FROM ts
-), feat AS (
-  SELECT a.doc_id,
-         CAST('0x' || substr(sha256(a.tok || ' ' || b.tok), 25, 8) AS BIGINT)
-           % 10000 AS bucket
-  FROM tok a JOIN tok b ON b.doc_id = a.doc_id AND b.ord = a.ord + 1
-), raw_counts AS (SELECT bucket, count(*) AS n FROM feat GROUP BY bucket),
-raw_total AS (SELECT coalesce(sum(n), 0) AS t FROM raw_counts),
-tgt AS (
-  SELECT f.bucket FROM feat f JOIN documents d USING (doc_id)
-  WHERE d.lang = 'en'
-), tgt_counts AS (SELECT bucket, count(*) AS n FROM tgt GROUP BY bucket),
-tgt_total AS (SELECT coalesce(sum(n), 0) AS t FROM tgt_counts),
-ratio AS (
-  SELECT rc.bucket,
-         round(coalesce(ln((tc.n + 1.0) / (tt.t + 10000.0)),
-                        ln(1.0 / (tt.t + 10000.0)))
-               - ln((rc.n + 1.0) / (rt.t + 10000.0)), 8) AS log_ratio
-  FROM raw_counts rc
-  LEFT JOIN tgt_counts tc ON tc.bucket = rc.bucket
-  CROSS JOIN raw_total rt CROSS JOIN tgt_total tt
-), w AS (
-  SELECT f.doc_id, round(sum(r.log_ratio), 6) AS dsir_logweight
-  FROM feat f JOIN ratio r USING (bucket) GROUP BY f.doc_id
-), allw AS (
-  SELECT d.doc_id, coalesce(w.dsir_logweight, 0.0) AS dsir_logweight
-  FROM documents d LEFT JOIN w USING (doc_id)
-)"""
-
-
 def _kcore_unrolled_sql(k: int, rounds: int) -> str:
     """k-core peeling unrolled to a fixed round count (chained CTEs —
     same discipline as the BFS/pagerank oracles; peeling is
@@ -4633,35 +4151,6 @@ SELECT doc_id,
              || substr(sha256(CAST(doc_id AS VARCHAR)), 17, 16)
     END AS text
 FROM documents
-"""
-
-
-def _pii_oracle_sql() -> str:
-    """Counts + redacted sha, generated from the SAME ``PII_PATTERNS``
-    dict the engine uses (pattern text and redaction order cannot
-    drift)."""
-    from spacy_llm_spark.functions.redact import PII_PATTERNS
-
-    count_cols = ",\n  ".join(
-        "CAST(len(regexp_extract_all(text, '{pat}')) AS BIGINT) AS n_{name}".format(
-            pat=pat, name=name
-        )
-        for name, (pat, _) in PII_PATTERNS.items()
-    )
-    total = " + ".join(
-        f"len(regexp_extract_all(text, '{pat}'))"
-        for _, (pat, _) in PII_PATTERNS.items()
-    )
-    scrub = "text"
-    for _, (pat, repl) in PII_PATTERNS.items():
-        scrub = f"regexp_replace({scrub}, '{pat}', '{repl}', 'g')"
-    return f"""
-WITH aug AS ({_pii_aug_sql()})
-SELECT doc_id,
-  {count_cols},
-  CAST({total} AS BIGINT) AS pii_total,
-  sha256({scrub}) AS redacted_sha256
-FROM aug
 """
 
 
@@ -4962,17 +4451,6 @@ SELECT o_orderpriority, count(*) AS n_items,
 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderpriority
 """,
-        "media_stats": """
-WITH media AS (
-  SELECT i,
-         CASE CAST(i % 3 AS INTEGER) WHEN 0 THEN 'image' WHEN 1 THEN 'audio'
-              ELSE 'video' END AS media_type,
-         CASE WHEN i % 3 = 0 THEN 1 ELSE 8 + CAST(i % 7 AS INTEGER) END AS n_frames
-  FROM range(60) t(i)
-)
-SELECT media_type, count(*) AS n, round(avg(n_frames), 6) AS avg_frames
-FROM media GROUP BY media_type
-""",
         "embedding_dup_pairs": """
 WITH doubled AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -5197,66 +4675,6 @@ FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
 WHERE len(tok) > 0
 GROUP BY tok ORDER BY n DESC, token ASC LIMIT 20
 """,
-        "lm_self_nll": """
-WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-tok AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
-        FROM ts),
-tokf AS (SELECT doc_id, w,
-                row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
-         FROM tok WHERE len(w) > 0),
-uni AS (SELECT w, count(*) AS c1 FROM tokf GROUP BY w),
-tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n FROM uni),
-big AS (SELECT a.w AS w1, b.w AS w2, count(*) AS c2
-        FROM tokf a JOIN tokf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        GROUP BY 1, 2),
-scored AS (
-  SELECT t.doc_id,
-         round(CASE
-           WHEN t.pos = 1 THEN log10(coalesce(u.c1, 0.4) / tot.n)
-           WHEN bg.c2 IS NOT NULL THEN log10(CAST(bg.c2 AS DOUBLE) / up.c1)
-           ELSE log10(0.4 * coalesce(u.c1, 0.4) / tot.n)
-         END, 9) AS lp
-  FROM tokf t
-  LEFT JOIN tokf p  ON p.doc_id = t.doc_id AND p.pos = t.pos - 1
-  LEFT JOIN big bg  ON bg.w1 = p.w AND bg.w2 = t.w
-  LEFT JOIN uni u   ON u.w = t.w
-  LEFT JOIN uni up  ON up.w = p.w
-  CROSS JOIN tot
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(-sum(lp) / count(*), 6) AS lm_nll
-FROM scored GROUP BY doc_id
-""",
-        "lm_incremental_nll": """
-WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-tok AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
-        FROM ts),
-tokf AS (SELECT doc_id, w,
-                row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
-         FROM tok WHERE len(w) > 0),
-uni AS (SELECT w, count(*) AS c1 FROM tokf GROUP BY w),
-tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n FROM uni),
-big AS (SELECT a.w AS w1, b.w AS w2, count(*) AS c2
-        FROM tokf a JOIN tokf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        GROUP BY 1, 2),
-scored AS (
-  SELECT t.doc_id,
-         round(CASE
-           WHEN t.pos = 1 THEN log10(coalesce(u.c1, 0.4) / tot.n)
-           WHEN bg.c2 IS NOT NULL THEN log10(CAST(bg.c2 AS DOUBLE) / up.c1)
-           ELSE log10(0.4 * coalesce(u.c1, 0.4) / tot.n)
-         END, 9) AS lp
-  FROM tokf t
-  LEFT JOIN tokf p  ON p.doc_id = t.doc_id AND p.pos = t.pos - 1
-  LEFT JOIN big bg  ON bg.w1 = p.w AND bg.w2 = t.w
-  LEFT JOIN uni u   ON u.w = t.w
-  LEFT JOIN uni up  ON up.w = p.w
-  CROSS JOIN tot
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(-sum(lp) / count(*), 6) AS lm_nll
-FROM scored GROUP BY doc_id
-""",
         "semantic_dedup_pairs": """
 WITH doubled AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -5300,33 +4718,6 @@ FROM cellv a JOIN cellv b ON a.cell = b.cell AND a.vec_id < b.vec_id
 WHERE list_dot_product(a.v, b.v) /
       (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(b.v, b.v)))
       >= 0.95
-""",
-        "pii_scrub": _pii_oracle_sql(),
-        "decontaminate": """
-WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-tok AS (
-  SELECT doc_id, unnest(toks) AS tok, generate_subscripts(toks, 1) AS ord
-  FROM ts
-), tok2 AS (
-  SELECT doc_id, tok,
-         row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS ord2
-  FROM tok WHERE len(tok) > 0
-),
-ng AS (
-  SELECT a.doc_id, a.tok || ' ' || b.tok || ' ' || c.tok AS g
-  FROM tok2 a
-  JOIN tok2 b ON b.doc_id = a.doc_id AND b.ord2 = a.ord2 + 1
-  JOIN tok2 c ON c.doc_id = a.doc_id AND c.ord2 = a.ord2 + 2
-), probe AS (SELECT DISTINCT g FROM ng WHERE doc_id < 20),
-cand AS (SELECT DISTINCT doc_id, g FROM ng WHERE doc_id >= 20),
-hits AS (
-  SELECT doc_id, count(*) AS n FROM cand JOIN probe USING (g) GROUP BY doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(h.n, 0) AS BIGINT) AS n_overlap,
-       coalesce(h.n, 0) >= 1 AS contaminated
-FROM documents d LEFT JOIN hits h USING (doc_id)
-WHERE d.doc_id >= 20
 """,
         "kg_degree_stats": m
         + _EDGES_CTE
@@ -6178,10 +5569,6 @@ FROM pr
         "kg_hits": _hits_oracle_sql(iters=5, q=10),
         "kg_weighted_pagerank": m + _EDGES_CTE + _wpr_oracle_sql(iters=3),
         "kg_katz": m + _EDGES_CTE + _katz_oracle_sql(iters=3, alpha=0.05),
-        # TextRank: the token_pmi co-occurrence CTEs feeding the same
-        # unrolled weighted-pagerank rounds, top-20
-        "textrank_keywords": _wpr_oracle_sql(
-            iters=3, ew_sql="\nWITH toks AS (\n  SELECT doc_id, string_split(text, ' ') AS arr FROM documents\n), pos AS (\n  SELECT doc_id, unnest(arr) AS tok, generate_subscripts(arr, 1) AS ord\n  FROM toks\n), co AS (\n  SELECT a, b, count(*) AS n_ab FROM (\n    SELECT p1.tok AS a, p2.tok AS b\n    FROM pos p1 JOIN pos p2\n      ON p2.doc_id = p1.doc_id\n     AND p2.ord > p1.ord AND p2.ord <= p1.ord + 2)\n  GROUP BY a, b HAVING count(*) >= 10\n), ew AS (\n  SELECT s, t, CAST(sum(n_ab) AS DOUBLE) AS w FROM (\n    SELECT a AS s, b AS t, n_ab FROM co\n    UNION ALL SELECT b AS s, a AS t, n_ab FROM co)\n  GROUP BY s, t)", final_sql='\nSELECT vertex, rank FROM r3 ORDER BY rank DESC, vertex LIMIT 20\n'),
         # SHACL shape audit: same literal ontology as _SHAPES (generated
         # from the one Python list so engine and oracle cannot drift)
         # mutual-best sameAs links: the alignment CTE + two
@@ -7135,33 +6522,6 @@ SELECT n_items,
          AS bcubed_f1
 FROM t
 """,
-        # independent cross-check by construction: the oracle generates
-        # pairs with the naive positions SELF-JOIN the engine avoids
-        "token_pmi": """
-WITH toks AS (
-  SELECT doc_id, string_split(text, ' ') AS arr FROM documents
-), pos AS (
-  SELECT doc_id, unnest(arr) AS tok, generate_subscripts(arr, 1) AS ord
-  FROM toks
-), pairs AS (
-  SELECT p1.tok AS a, p2.tok AS b
-  FROM pos p1 JOIN pos p2
-    ON p2.doc_id = p1.doc_id
-   AND p2.ord > p1.ord AND p2.ord <= p1.ord + 2
-), co AS (
-  SELECT a, b, count(*) AS n_ab FROM pairs GROUP BY a, b
-), uni AS (
-  SELECT tok, count(*) AS n FROM pos GROUP BY tok
-), tot AS (
-  SELECT (SELECT CAST(count(*) AS DOUBLE) FROM pos) AS n_tok,
-         (SELECT CAST(count(*) AS DOUBLE) FROM pairs) AS n_pair
-)
-SELECT co.a, co.b, CAST(co.n_ab AS BIGINT) AS n_ab,
-       round(ln((CAST(co.n_ab AS DOUBLE) / tot.n_pair)
-                / ((ua.n / tot.n_tok) * (ub.n / tot.n_tok))), 6) AS pmi
-FROM co JOIN uni ua ON ua.tok = co.a JOIN uni ub ON ub.tok = co.b, tot
-WHERE co.n_ab >= 10
-""",
         "profile_documents": _profile_sql(
             "documents",
             [
@@ -7172,24 +6532,6 @@ WHERE co.n_ab >= 10
                 ("n_chars", False),
             ],
         ),
-        # round-0 BPE pair statistics: same pre-token pattern, chars +
-        # end-of-word marker, training tie-break order (count DESC,
-        # pair ASC) so the LIMIT-30 cut is deterministic on both sides
-        "bpe_pair_counts": (
-            "WITH words AS (\n"
-            "  SELECT unnest(regexp_extract_all(text, '{pat}')) AS w FROM documents\n"
-            "), idx AS (\n"
-            "  SELECT w, unnest(generate_series(1, len(w))) AS i FROM words\n"
-            "), pairs AS (\n"
-            "  SELECT substr(w, i, 1) AS a,\n"
-            "         CASE WHEN i < len(w) THEN substr(w, i + 1, 1)\n"
-            "              ELSE '</w>' END AS b\n"
-            "  FROM idx\n"
-            ")\n"
-            "SELECT a, b, CAST(count(*) AS BIGINT) AS n_pairs\n"
-            "FROM pairs GROUP BY a, b\n"
-            "ORDER BY n_pairs DESC, a, b LIMIT 30"
-        ).format(pat=textfn.PRETOKEN_PATTERN),
         "corpus_split": (
             "SELECT doc_id, CASE {ladder} END AS split FROM (\n"
             "  SELECT doc_id, CAST('0x' || substr(sha256(text), 1, 8) AS BIGINT)\n"
@@ -7216,43 +6558,6 @@ WHERE r_name = 'ASIA'
   AND o_orderdate >= TIMESTAMP '1996-01-01'
   AND o_orderdate <  TIMESTAMP '1997-01-01'
 GROUP BY n_name
-""",
-        "stratified_sample": """
-SELECT doc_id, source FROM (
-  SELECT doc_id, source,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY sha256(text), doc_id) AS rk
-  FROM documents) WHERE rk <= 10
-""",
-        "temperature_sample": """
-WITH counts AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-mn AS (SELECT min(n) AS min_n FROM counts),
-fr AS (
-  SELECT lang, pow(CAST(n AS DOUBLE) / CAST(min_n AS DOUBLE), -0.5) AS kf
-  FROM counts, mn
-)
-SELECT d.doc_id, d.lang, round(fr.kf, 6) AS keep_frac
-FROM documents d JOIN fr USING (lang)
-WHERE CAST('0x' || substr(sha256(d.text), 9, 8) AS BIGINT) % 1000000
-      < round(fr.kf * 1000000)
-""",
-        "weighted_upsample": """
-WITH w AS (
-  SELECT doc_id, lang, text,
-         CASE lang WHEN 'de' THEN 2.5 WHEN 'fr' THEN 2.0 WHEN 'es' THEN 1.5
-                   WHEN 'zh' THEN 1.25 WHEN 'en' THEN 0.4 ELSE 1.0 END AS wt
-  FROM documents
-), c AS (
-  SELECT doc_id, lang,
-         CAST(floor(wt) AS BIGINT)
-         + CASE WHEN CAST('0x' || substr(sha256(text), 17, 8) AS BIGINT)
-                     % 1000000 < round((wt - floor(wt)) * 1000000)
-                THEN 1 ELSE 0 END AS n_copies
-  FROM w
-)
-SELECT doc_id, lang, CAST(e AS BIGINT) AS epoch
-FROM c, UNNEST(generate_series(0, CAST(n_copies - 1 AS BIGINT))) AS u(e)
-WHERE n_copies > 0
 """,
         "line_dedup": """
 WITH toks AS (
@@ -7297,98 +6602,6 @@ SELECT t.doc_id, coalesce(k.clean_text, '') AS clean_text,
        CAST((len(t.tk)+7)//8 - coalesce(k.n_kept, 0) AS BIGINT)
          AS n_lines_removed
 FROM toks t LEFT JOIN kept k USING (doc_id)
-""",
-        "pack_texts": """
-WITH tk AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), x -> len(x) > 0) AS toks
-  FROM documents
-), t AS (
-  SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_tok FROM tk
-), c AS (
-  SELECT doc_id, n_tok,
-         CAST(sum(n_tok) OVER (ORDER BY doc_id) AS BIGINT) AS cend
-  FROM t WHERE n_tok > 0
-), seg AS (
-  SELECT c.doc_id, CAST(p AS BIGINT) AS pack_id,
-         CAST(greatest(cend - n_tok, p*256) - p*256 AS BIGINT) AS tok_start,
-         CAST(least(cend, (p+1)*256) - greatest(cend - n_tok, p*256) AS BIGINT)
-           AS seg_len
-  FROM c, UNNEST(generate_series(CAST((cend - n_tok) // 256 AS BIGINT),
-                                 CAST((cend - 1) // 256 AS BIGINT))) AS u(p)
-), off AS (
-  SELECT *,
-         sum(seg_len) OVER (PARTITION BY doc_id ORDER BY pack_id) - seg_len
-           AS doc_off
-  FROM seg
-), piece AS (
-  SELECT o.pack_id, o.tok_start, o.seg_len,
-         array_to_string(tk.toks[(o.doc_off+1):(o.doc_off+o.seg_len)], ' ')
-           AS pc
-  FROM off o JOIN tk USING (doc_id)
-)
-SELECT pack_id, string_agg(pc, ' ' ORDER BY tok_start) AS pack_text,
-       CAST(sum(seg_len) AS BIGINT) AS n_tokens
-FROM piece GROUP BY pack_id
-""",
-        "pack_sequences": _PACK_SEQUENCES_SQL,
-        # incremental packing is bit-equal to the full recompute, so it
-        # shares the full-corpus oracle verbatim
-        "pack_sequences_incremental": _PACK_SEQUENCES_SQL,
-        "hash_sample": """
-SELECT doc_id,
-       CAST('0x' || substr(sha256(text), 9, 8) AS BIGINT) % 1000000 AS bucket
-FROM documents
-WHERE CAST('0x' || substr(sha256(text), 9, 8) AS BIGINT) % 1000000 < 200000
-""",
-        # proportional_mix: binding group (min n/p, value tiebreak)
-        # taken whole; others floor((n_b * p)/p_b) — the double
-        # arithmetic order mirrors sampling.py verbatim
-        "corpus_mix": """
-WITH p AS (
-  SELECT * FROM (VALUES ('en', 0.6), ('de', 0.2), ('fr', 0.2)) AS t(k, share)
-), c AS (
-  SELECT k, share, count(*) AS n
-  FROM documents JOIN p ON lang = k GROUP BY k, share
-), b AS (
-  SELECT k AS bk, share AS bshare, n AS bn FROM c
-  ORDER BY CAST(n AS DOUBLE) / share, k LIMIT 1
-), q AS (
-  SELECT k, CASE WHEN k = bk THEN bn
-                 ELSE CAST(floor((bn * share) / bshare) AS BIGINT)
-            END AS quota
-  FROM c, b
-)
-SELECT doc_id, text, lang, source, n_chars, quota
-FROM (
-  SELECT d.*, q.quota,
-         row_number() OVER (PARTITION BY lang
-                            ORDER BY sha256(text), doc_id) AS rk
-  FROM documents d JOIN q ON d.lang = q.k)
-WHERE rk <= quota
-""",
-        # DSIR (Xie et al. 2023): hashed-bigram buckets (sha256 hex
-        # 25-32 mod 10k), add-1 smoothing, per-bucket log-ratio
-        # quantized to 8 dp BEFORE the per-doc sum (so both engines sum
-        # identical addends), weight rounded to 6 dp; ln() everywhere —
-        # DuckDB log() is base 10
-        "dsir_topk": _DSIR_WEIGHTS_CTE
-        + """
-SELECT doc_id, dsir_logweight FROM allw
-ORDER BY dsir_logweight DESC, doc_id LIMIT 100
-""",
-        # Gumbel-top-k resample: noise from sha256 hex 33-40 (a digest
-        # region disjoint from every other hash consumer), u never 0/1
-        "dsir_resample": _DSIR_WEIGHTS_CTE
-        + """
-, keyed AS (
-  SELECT a.doc_id, a.dsir_logweight,
-         round(a.dsir_logweight / 2.0
-               - ln(-ln((CAST('0x' || substr(sha256(d.text), 33, 8) AS BIGINT)
-                         % 1000000 + 0.5) / 1000000.0)), 6) AS gumbel_key
-  FROM allw a JOIN documents d USING (doc_id)
-)
-SELECT doc_id, dsir_logweight, gumbel_key FROM keyed
-ORDER BY gumbel_key DESC, doc_id LIMIT 100
 """,
         # batch kNN: rank on the RAW cosine (round after), ties by id —
         # identical to the engine's struct sort
@@ -7525,9 +6738,6 @@ FROM events GROUP BY 1
 """,
     }
     # incremental == full recompute by construction -> same oracle text
-    # the Bloom prefilter is exact (no false negatives; FPs confirmed
-    # away), so it shares the exact path's oracle verbatim
-    sql["decontaminate_bloom"] = sql["decontaminate"]
     sql["kg_vertices_incremental"] = sql["kg_vertices"]
     sql["kg_canonical_edges_incremental"] = sql["kg_canonical_edges"]
     sql["kg_closure_incremental"] = sql["kg_closure"]
@@ -7539,8 +6749,6 @@ FROM events GROUP BY 1
     sql["simhash_incremental"] = sql["simhash_dup_pairs"]
     sql["dup_ngram_stats_incremental"] = sql["dup_ngram_stats"]
     sql["bm25_topk_indexed"] = sql["bm25_topk"]
-    sql["bpe_pair_counts_incremental"] = sql["bpe_pair_counts"]
-    sql["dsir_topk_incremental"] = sql["dsir_topk"]
     # the full detector oracle nests as a subquery; joined to the gold
     # lang column it becomes the confusion matrix
     sql["lang_confusion"] = (

@@ -226,8 +226,7 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     bm25_topk(docs, ["spark", "window", "dup"], k=25).count()
     extras["bm25_topk_sec"] = round(time.time() - t0, 3)
 
-    # round-5 additions: SemDeDup (doubled corpus, 16 cells), the
-    # stupid-backoff LM self-score, and the MG heavy-hitter top-k
+    # round-5 additions: SemDeDup (doubled corpus, 16 cells)
     t0 = time.time()
     base_emb = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -250,19 +249,6 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["semantic_dedup_n_pairs"] = n_sem
 
     t0 = time.time()
-    from spacy_llm_spark.functions.lm import lm_self_score
-
-    lm_self_score(docs).count()
-    extras["lm_self_score_sec"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    from spacy_llm_spark.operators.packing import pack_sequences
-
-    n_packed = pack_sequences(docs, budget=2048, n_chunks=32).count()
-    extras["pack_sequences_sec"] = round(time.time() - t0, 3)
-    extras["pack_sequences_n_segments"] = n_packed
-
-    t0 = time.time()
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -278,17 +264,8 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["line_dedup_sec"] = round(time.time() - t0, 3)
     extras["line_dedup_n_removed"] = int(n_line)
 
-    # round-5 late families: BPE induction (20 merges over the replicated
-    # corpus — the per-round cost is vocabulary-scale, not corpus-scale),
-    # k-core peeling + personalized pagerank over the 200k-edge graph,
-    # the single-pass profiler, and z-score burst detection
-    t0 = time.time()
-    from spacy_llm_spark.functions.bpe import train_bpe
-
-    n_bpe = len(train_bpe(docs, n_merges=20))
-    extras["bpe_train_20_merges_sec"] = round(time.time() - t0, 3)
-    extras["bpe_n_merges"] = n_bpe
-
+    # round-5 late families: k-core peeling + personalized pagerank over
+    # the 200k-edge graph and the single-pass profiler
     t0 = time.time()
     from spacy_llm_spark.operators.graph import k_core
 
@@ -335,13 +312,6 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
 
     hits(chain, iters=3, src="src", dst="dst").count()
     extras["hits_200k_edges_3iters_sec"] = round(time.time() - t0, 3)
-
-    # DSIR selection: corpus-vs-'en'-slice importance weights + top 1000
-    t0 = time.time()
-    from spacy_llm_spark.operators.importance import dsir_top_k
-
-    dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=1000).count()
-    extras["dsir_topk_sec"] = round(time.time() - t0, 3)
 
     # SCC over a realistic 200k-edge digraph: 20k independent 5-cycles
     # (coloring diameter 5, all roots extract in parallel) + 10k

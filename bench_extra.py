@@ -360,13 +360,6 @@ def make_targets(spark, sf_dir, cpus, replicate):
 
     T["update_where"] = update_where
 
-    def bpe_train():
-        from spacy_llm_spark.functions.bpe import train_bpe
-
-        return len(train_bpe(docs(), n_merges=20))
-
-    T["bpe_train"] = bpe_train
-
     # --- embedding / fusion ----------------------------------------------
     def transe():
         from spacy_llm_spark.operators import kgembed

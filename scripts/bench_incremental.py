@@ -650,131 +650,6 @@ def lsh_main() -> None:
     spark.stop()
 
 
-def wordindex_main() -> None:
-    """Incremental BPE word-index maintenance vs full recompute over K
-    append batches at $SPARK_GRAFT_SF_DIR scale: the incremental curve
-    merges only the batch's counts into the standing vocabulary-scale
-    index, while the full curve re-tokenizes all accumulated history
-    every batch. Index equality is asserted at the final batch.
-    Usage: bench_incremental.py --wordindex [k_batches]
-    """
-    from spacy_llm_spark.functions.bpe import word_index, word_index_append
-
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    if k < 1:
-        raise SystemExit("--wordindex needs k_batches >= 1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        master=f"local[{cpus}]", shuffle_partitions=cpus * 2,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count()
-
-    def batch(i):
-        return docs.select(
-            (F.col("doc_id") + i * 10 * n_docs).alias("doc_id"), "text"
-        ).repartition(cpus).localCheckpoint()
-
-    base = batch(0)
-    idx = word_index(base).localCheckpoint()
-    history = base
-    inc_secs, full_secs = [], []
-    for i in range(1, k + 1):
-        nb = batch(i)
-        t0 = time.time()
-        idx = word_index_append(idx, nb).localCheckpoint()
-        inc_secs.append(round(time.time() - t0, 3))
-        history = history.unionByName(nb).localCheckpoint()
-        t0 = time.time()
-        full = word_index(history)
-        full.count()
-        full_secs.append(round(time.time() - t0, 3))
-    diff = (
-        idx.select("word", "n").exceptAll(full.select("word", "n")).count()
-        + full.select("word", "n").exceptAll(idx.select("word", "n")).count()
-    )
-    print(json.dumps({
-        "metric": "incremental_vs_full_wordindex",
-        "sf_dir": sf_dir, "docs_per_batch": n_docs, "k_batches": k,
-        "incremental_per_batch_sec": inc_secs,
-        "full_recompute_per_batch_sec": full_secs,
-        "total_incremental_sec": round(sum(inc_secs), 3),
-        "total_full_sec": round(sum(full_secs), 3),
-        "speedup": round(sum(full_secs) / max(sum(inc_secs), 1e-9), 2),
-        "index_match_final": diff == 0,
-        "cpus": cpus,
-    }))
-    spark.stop()
-
-def packing_main() -> None:
-    """Incremental packing vs full recompute over K append batches at
-    $SPARK_GRAFT_SF_DIR scale: pack_sequences_append touches only the
-    batch (flat curve — the index is ONE number), while the full
-    recompute re-scans and re-sums the whole accumulated stream every
-    batch. Segment equality (union of increments == full) is asserted
-    at the final batch. Usage: bench_incremental.py --packing [k_batches]
-    """
-    from spacy_llm_spark.operators.packing import (
-        pack_sequences,
-        pack_sequences_append,
-        total_tokens,
-    )
-
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 6
-    if k < 1:
-        raise SystemExit("--packing needs k_batches >= 1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "16"))
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    budget = 2048
-    spark = get_spark(
-        master=f"local[{cpus}]", shuffle_partitions=cpus * 2,
-        extra_conf={"spark.ui.showConsoleProgress": "false"},
-    )
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n_docs = docs.count()
-
-    def batch(i):
-        return docs.select(
-            (F.col("doc_id") + i * 10 * n_docs).alias("doc_id"), "text"
-        ).repartition(cpus).localCheckpoint()
-
-    base = batch(0)
-    packed = pack_sequences(base, budget, n_chunks=cpus).localCheckpoint()
-    running_total = total_tokens(base)
-    history = base
-    inc_secs, full_secs = [], []
-    for i in range(1, k + 1):
-        nb = batch(i)
-        t0 = time.time()
-        seg = pack_sequences_append(
-            nb, budget, running_total, n_chunks=cpus
-        ).localCheckpoint()
-        running_total += total_tokens(nb)
-        inc_secs.append(round(time.time() - t0, 3))
-        packed = packed.unionByName(seg).localCheckpoint()
-        history = history.unionByName(nb).localCheckpoint()
-        t0 = time.time()
-        full = pack_sequences(history, budget, n_chunks=cpus)
-        full.count()
-        full_secs.append(round(time.time() - t0, 3))
-    diff = packed.exceptAll(full).count() + full.exceptAll(packed).count()
-    print(json.dumps({
-        "metric": "incremental_vs_full_packing",
-        "sf_dir": sf_dir, "docs_per_batch": n_docs, "k_batches": k,
-        "budget": budget,
-        "incremental_per_batch_sec": inc_secs,
-        "full_recompute_per_batch_sec": full_secs,
-        "total_incremental_sec": round(sum(inc_secs), 3),
-        "total_full_sec": round(sum(full_secs), 3),
-        "speedup": round(sum(full_secs) / max(sum(inc_secs), 1e-9), 2),
-        "segments_match_final": diff == 0,
-        "cpus": cpus,
-    }))
-    spark.stop()
-
-
 def closure_main() -> None:
     """Incremental transitive closure vs full recompute over K append
     batches: a growing binary hierarchy (the ontology shape), each batch
@@ -839,12 +714,8 @@ if __name__ == "__main__":
         alignment_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--fusion":
         fusion_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--wordindex":
-        wordindex_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--lsh":
         lsh_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--packing":
-        packing_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--dupngram":
         dupngram_main()
     elif len(sys.argv) > 1 and sys.argv[1] == "--edgesupport":

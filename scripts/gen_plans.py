@@ -291,22 +291,7 @@ def main():
         explain_str(bfs_levels(bfs_edges, bfs_seeds, max_hops=1)),
     ))
 
-    # 16. sequence packing: chunked prefix sum, no single-partition window
-    from spacy_llm_spark.operators.packing import pack_sequences
-
-    sections.append((
-        "Sequence packing: the running sum never collapses to one partition",
-        "The global token cumsum is decomposed: the Window's Exchange is "
-        "`hashpartitioning(_chunk)` (chunk = driver-frozen quantile bucket "
-        "of the order key), NEVER `SinglePartition`; the cross-chunk "
-        "offsets enter as a literal map lookup (no join node). The pack "
-        "explosion is a Generate over the same partitioning. InMemoryScan "
-        "= the persisted 3-column projection, so the text column is read "
-        "once across the boundary/totals/output passes.",
-        explain_str(pack_sequences(docs, budget=2048, n_chunks=8)),
-    ))
-
-    # 17. line dedup: one line-keyed count, anti join, doc reassembly
+    # 16. line dedup: one line-keyed count, anti join, doc reassembly
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -326,29 +311,7 @@ def main():
         ),
     ))
 
-    # 18. BPE: pair stats over the word table, rewrite as a narrow fold
-    from spacy_llm_spark.functions.bpe import (
-        initial_symbols,
-        merge_pair_expr,
-        pair_counts,
-        word_table,
-    )
-
-    sym = initial_symbols(word_table(docs))
-    sections.append((
-        "BPE round: vocabulary-scale pair aggregate; rewrite is shuffle-free",
-        "The corpus collapsed to the word table in ONE earlier shuffle; a "
-        "merge round is this pair aggregate (Generate over the symbol "
-        "array + HashAggregate keyed on the pair — all vocabulary-scale) "
-        "plus a rewrite that is a pure Project (the aggregate() fold below "
-        "— no Exchange at all), so 30k merges cost 30k vocabulary-scale "
-        "aggregations and zero corpus re-reads.",
-        explain_str(pair_counts(sym))
-        + "\n\n-- rewrite (one merge applied):\n"
-        + explain_str(sym.withColumn("symbols", merge_pair_expr("e", "r"))),
-    ))
-
-    # 19. single-pass profiler: one scan, one expand, one aggregate
+    # 17. single-pass profiler: one scan, one expand, one aggregate
     from spacy_llm_spark.operators.profile import profile_table
 
     sections.append((
@@ -362,20 +325,7 @@ def main():
         explain_str(profile_table(docs)),
     ))
 
-    # 20. co-occurrence PMI: windowed projection, never a self-join
-    from spacy_llm_spark.functions.cooccur import cooccurrence_pmi
-
-    sections.append((
-        "Co-occurrence PMI: pair generation is a Generate, not a self-join",
-        "Pairs come from transform+slice over the token array (a "
-        "Generate node — fan-out bounded by the window), then ONE "
-        "pair-keyed HashAggregate; the unigram joins are "
-        "vocabulary-scale and the corpus totals ride a broadcast 1-row "
-        "frame. The corpus never joins itself on position.",
-        explain_str(cooccurrence_pmi(docs, window=2, min_count=10)),
-    ))
-
-    # 21. Adamic–Adar: equi-joins only, aggregate-fused scoring
+    # 18. Adamic–Adar: equi-joins only, aggregate-fused scoring
     from spacy_llm_spark.operators.graph import adamic_adar
 
     edges_aa = spark.createDataFrame(
@@ -393,16 +343,23 @@ def main():
         explain_str(adamic_adar(edges_aa, min_common=1)),
     ))
 
-    # 22. label propagation: per-round argmax is ONE two-level aggregate.
+    # 19. label propagation: per-round argmax is ONE two-level aggregate.
     # cut_lineage (localCheckpoint per round) would collapse the explain
-    # to a Scan ExistingRDD — disable it for the CAPTURE only, so the
-    # true single-round plan is visible.
+    # to a Scan ExistingRDD — for the CAPTURE only, the cut still runs
+    # (observations on the cut frame, like HITS' L1 total, fire on its
+    # job) but hands back the uncut frame, so the true single-round plan
+    # is visible.
     from spacy_llm_spark import fs as _fs
     from spacy_llm_spark.operators import graph as _graph_mod
     from spacy_llm_spark.operators.graph import hits, label_propagation
 
     _real_cut = _fs.cut_lineage
-    _fs.cut_lineage = lambda df, *a, **k: df
+
+    def _run_uncut(df, *a, **k):
+        _real_cut(df, *a, **k)
+        return df
+
+    _fs.cut_lineage = _run_uncut
     _graph_mod.fs.cut_lineage = _fs.cut_lineage
     try:
         sections.append((
@@ -411,40 +368,25 @@ def main():
             "two-level HashAggregate — (v,label) counts, then min(struct(-n,"
             "label)) per vertex — so the most-frequent-label pick never "
             "plans a Window sort on a skewed vertex key; partial aggregation "
-            "absorbs hub fan-in map-side. (Lineage cutting is disabled for "
-            "this capture; in the operator each round is checkpointed.)",
+            "absorbs hub fan-in map-side. (This capture shows the uncut "
+            "plan; in the operator each round is checkpointed.)",
             explain_str(label_propagation(edges_aa, rounds=1)),
         ))
 
         # 29b. HITS: per-round joins + broadcast totals, no collect
         sections.append((
-            "HITS (1 round): edge joins + vertex aggregates + broadcast totals",
+            "HITS (1 round): edge joins + vertex aggregates + observed totals",
             "Each half-step is one edge-scale equi-join carrying a single "
-            "double, one vertex-keyed HashAggregate with map-side partials, "
-            "and a 1-row L1 total BroadcastExchange'd back (the only "
-            "nested-loop nodes are those 1-row broadcast cross joins) — the "
-            "normalization never collects rank rows to the driver. (Lineage "
-            "cutting disabled for this capture, as above.)",
+            "double and one vertex-keyed HashAggregate with map-side "
+            "partials; its L1 total is a CollectMetrics observation on the "
+            "half-step's own lineage-cut job and divides in as a literal — "
+            "no broadcast, no second pass over the join, and no rank rows "
+            "collected to the driver. (Uncut plan, as above.)",
             explain_str(hits(edges_aa, iters=1)),
         ))
     finally:
         _fs.cut_lineage = _real_cut
         _graph_mod.fs.cut_lineage = _real_cut
-
-    # 23. DSIR: bucket-scale ratio map broadcast into the corpus scan
-    from spacy_llm_spark.operators.importance import dsir_top_k
-
-    sections.append((
-        "DSIR importance selection: broadcast bucket map + TakeOrdered",
-        "Both corpus distributions aggregate to bucket scale (<= 10k "
-        "rows); their log-ratio map is BroadcastExchange'd into the "
-        "raw corpus' explode — the corpus-scale side never shuffles on "
-        "the bucket — and the per-doc weight is one doc-keyed "
-        "HashAggregate; selection is TakeOrderedAndProject, never a "
-        "global sort. Raw corpus cost: two scans, nothing wider than "
-        "(doc_id, weight) exchanged.",
-        explain_str(dsir_top_k(docs, docs.where(F.col("lang") == "en"), k=100)),
-    ))
 
     from spacy_llm_spark.operators.audit import triple_shape_violations
 
@@ -498,21 +440,6 @@ def main():
             cosine_topk_quantized(
                 quantize_embeddings(emb), [0.1] * 64, k=20
             )
-        ),
-    ))
-
-    from spacy_llm_spark.operators.sampling import proportional_mix
-
-    sections.append((
-        "Exact-composition corpus mix: one group aggregate + one group window",
-        "Quotas come from ONE column-pruned group-cardinality aggregate "
-        "(bounded collect of |proportions| rows) and re-enter the plan as "
-        "a literal map, so the selection is a single group-keyed "
-        "row_number window over the isin-filtered scan — one Exchange "
-        "total, no join, and the filter prunes unlisted groups at the "
-        "scan.",
-        explain_str(
-            proportional_mix(docs, "lang", {"en": 0.6, "de": 0.2, "fr": 0.2})
         ),
     ))
 

@@ -303,8 +303,6 @@ def parse_ner_v3(
 # P5: REL parse (one JSON object per line) + bounds filter (F3)
 # --------------------------------------------------------------------------
 
-_ENT_PREFIX = re.compile(r"^ENT")
-
 
 def _clean_ent_index(value) -> Optional[int]:
     """items.py:9-14 — strip 'ENT' prefix before int cast."""

@@ -161,7 +161,7 @@ def clean_corpus(
 def ngrams_expr(text_col: str, n: int) -> Column:
     """Array of adjacent token n-grams — index-zipped slices of the token
     array, a pure projection (no explode, no shuffle). The single source
-    for token n-grams (repetition stats, decontamination)."""
+    for token n-grams (repetition stats, duplicated n-gram spans)."""
     toks = tokens_expr(F.col(text_col))
     m = F.greatest(F.size(toks) - (n - 1), F.lit(0))
     slices = [F.slice(toks, F.lit(i + 1), m) for i in range(n)]
@@ -180,7 +180,7 @@ def hash_bucket(text_col: str, hex_start: int, buckets: int) -> Column:
     """Deterministic uniform bucket in [0, buckets): 8 hex chars of the
     sha256 digest starting at 1-based ``hex_start``, as an integer mod
     ``buckets``. Callers that must be mutually independent read disjoint
-    digest regions (splits: chars 1-8; sampling: chars 9-16)."""
+    digest regions (splits: chars 1-8)."""
     return F.conv(
         F.substring(F.sha2(F.col(text_col), 256), hex_start, 8), 16, 10
     ).cast("long") % F.lit(int(buckets))

@@ -65,8 +65,6 @@ from .graph import transitive_closure
 _BROADCAST_SCHEMA_BYTES = 256 << 20
 _EST_BYTES_PER_ROW = 100
 
-_SCHEMA_PREDS = ("subClassOf", "subPropertyOf", "domain", "range")
-
 
 def _closure_map(edges: DataFrame, max_rounds: int) -> tuple[DataFrame, int]:
     """Transitive closure of a schema edge set as a (sub, super) map,

@@ -214,13 +214,6 @@ def snapshot_diff(
     )
 
 
-_ALLEN_RELATIONS = (
-    "before", "meets", "overlaps", "starts", "during", "finishes",
-    "equals", "finished_by", "contains", "started_by", "overlapped_by",
-    "met_by", "after",
-)
-
-
 def allen_relations(
     left: DataFrame,
     right: DataFrame,

@@ -1,16 +1,14 @@
-"""Round-5 additions: Adamic–Adar link prediction, deterministic label
-propagation and DSIR importance resampling — each against an independent
-pure-Python reference — plus data-quality audits, kNN joins and KG shape
-checks."""
+"""Round-5 additions: Adamic–Adar link prediction and deterministic label
+propagation — each against an independent pure-Python reference — plus
+data-quality audits, kNN joins and KG shape checks."""
 
-import hashlib
 import itertools
 import math
 import random
 
 import pytest
 
-from spacy_llm_spark.operators import graph, importance
+from spacy_llm_spark.operators import graph
 
 
 # ---------------------------------------------------------------------------
@@ -252,194 +250,6 @@ def test_hits_mass_conservation_and_empty(spark):
     out = graph.hits(empty, iters=2)
     assert out.count() == 0
     assert out.columns == ["vertex", "hub", "authority"]
-
-
-# ---------------------------------------------------------------------------
-# DSIR importance resampling
-# ---------------------------------------------------------------------------
-
-_DOCS = [
-    (0, "the cat sat on the mat", "en"),
-    (1, "the dog sat on the log", "en"),
-    (2, "cats and dogs and cats", "en"),
-    (3, "le chat est sur le tapis", "fr"),
-    (4, "der hund sitzt auf dem baum", "de"),
-    (5, "the cat sat on the mat again and again", "fr"),  # en-LIKE text, fr tag
-    (6, "word", None),  # < 2 tokens: no bigrams -> weight 0
-]
-
-
-def _bucket(g: str, start: int, mod: int) -> int:
-    h = hashlib.sha256(g.encode()).hexdigest()
-    return int(h[start - 1 : start - 1 + 8], 16) % mod
-
-
-def _bigrams(text: str):
-    toks = text.split()
-    return [f"{a} {b}" for a, b in zip(toks, toks[1:])]
-
-
-def _dsir_reference(docs, target_langs, buckets=10_000, alpha=1.0):
-    feats = {i: [_bucket(g, 25, buckets) for g in _bigrams(t)] for i, t, _ in docs}
-    raw_counts, tgt_counts = {}, {}
-    for i, _, lang in docs:
-        for b in feats[i]:
-            raw_counts[b] = raw_counts.get(b, 0) + 1
-            if lang in target_langs:
-                tgt_counts[b] = tgt_counts.get(b, 0) + 1
-    rt, tt = sum(raw_counts.values()), sum(tgt_counts.values())
-    weights = {}
-    for i, _, _ in docs:
-        s = 0.0
-        for b in feats[i]:
-            lp_t = math.log(
-                (tgt_counts.get(b, 0) + alpha) / (tt + alpha * buckets)
-            )
-            lp_r = math.log((raw_counts[b] + alpha) / (rt + alpha * buckets))
-            s += round(lp_t - lp_r, 8)
-        weights[i] = round(s, 6)
-    return weights
-
-
-def test_dsir_logweights_match_reference(spark):
-    import pyspark.sql.functions as F
-
-    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
-    got = {
-        r["doc_id"]: r["dsir_logweight"]
-        for r in importance.dsir_logweights(
-            docs, docs.where(F.col("lang") == "en")
-        ).collect()
-    }
-    want = _dsir_reference(_DOCS, {"en"})
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i], abs=2e-6), i
-    # the weight is content-driven, not tag-driven: every doc whose
-    # bigrams all appear in the target outscores the fully off-target
-    # de doc (doc 5's extra off-target tail legitimately drags it down
-    # — DSIR sums, it does not length-normalize)
-    assert got[6] == 0.0
-    assert min(got[0], got[1], got[2]) > got[4]
-
-
-def test_dsir_topk_and_resample_deterministic(spark):
-    import pyspark.sql.functions as F
-
-    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
-    target = docs.where(F.col("lang") == "en")
-    top = importance.dsir_top_k(docs, target, k=3).collect()
-    want = _dsir_reference(_DOCS, {"en"})
-    want_ids = [i for i, _ in sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))][:3]
-    assert [r["doc_id"] for r in top] == want_ids
-
-    res1 = importance.dsir_resample(docs, target, k=4, temperature=2.0).collect()
-    res2 = importance.dsir_resample(docs, target, k=4, temperature=2.0).collect()
-    assert [r.asDict() for r in res1] == [r.asDict() for r in res2]
-    # verify one gumbel key against the formula
-    by_id = {d: t for d, t, _ in _DOCS}
-    for r in res1:
-        u = (_bucket(by_id[r["doc_id"]], 33, 1_000_000) + 0.5) / 1_000_000
-        want_key = round(want[r["doc_id"]] / 2.0 - math.log(-math.log(u)), 6)
-        assert r["gumbel_key"] == pytest.approx(want_key, abs=2e-6)
-
-    with pytest.raises(ValueError):
-        importance.dsir_top_k(docs, target, k=0)
-    with pytest.raises(ValueError):
-        importance.dsir_resample(docs, target, k=1, temperature=0.0)
-
-
-def test_dsir_empty_target_uniform_floor(spark):
-    import pyspark.sql.functions as F
-
-    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
-    got = importance.dsir_logweights(
-        docs, docs.where(F.col("lang") == "zz")
-    ).collect()
-    want = _dsir_reference(_DOCS, {"zz"})
-    assert {r["doc_id"]: r["dsir_logweight"] for r in got} == pytest.approx(want)
-    # every weight finite; frequent-in-raw buckets are penalized most
-    assert all(math.isfinite(r["dsir_logweight"]) for r in got)
-
-
-def test_bucket_index_append_equals_full(spark):
-    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
-    old = docs.where("doc_id % 2 = 0")
-    new = docs.where("doc_id % 2 = 1")
-    merged = importance.bucket_index_append(
-        importance.bucket_count_index(old).localCheckpoint(), new
-    )
-    full = importance.bucket_count_index(docs)
-    stamp = importance.dsir_index_stamp(2, importance.N_BUCKETS)
-    assert stamp in merged.columns and stamp in full.columns
-    got = {(r["bucket"], r["n"]) for r in merged.collect()}
-    want = {(r["bucket"], r["n"]) for r in full.collect()}
-    assert got == want  # integer counts: bit-equal merge
-
-
-def test_dsir_from_index_matches_direct(spark):
-    import pyspark.sql.functions as F
-
-    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
-    target = docs.where(F.col("lang") == "en")
-    raw_idx = importance.bucket_index_append(
-        importance.bucket_count_index(docs.where("doc_id % 2 = 0")),
-        docs.where("doc_id % 2 = 1"),
-    ).localCheckpoint()
-    tgt_idx = importance.bucket_count_index(target).localCheckpoint()
-    got = {
-        r["doc_id"]: r["dsir_logweight"]
-        for r in importance.dsir_logweights_from_index(
-            docs, raw_idx, tgt_idx
-        ).collect()
-    }
-    want = {
-        r["doc_id"]: r["dsir_logweight"]
-        for r in importance.dsir_logweights(docs, target).collect()
-    }
-    assert set(got) == set(want)
-    for i in want:
-        assert got[i] == pytest.approx(want[i], abs=2e-6), i
-
-
-def test_dsir_from_index_stale_batch_and_refusals(spark):
-    docs = spark.createDataFrame(_DOCS, "doc_id long, text string, lang string")
-    raw_idx = importance.bucket_count_index(docs).localCheckpoint()
-    tgt_idx = importance.bucket_count_index(docs.where("lang = 'en'"))
-    # a genuinely NEW batch (buckets unseen by either index): every
-    # feature takes both floors, the weight stays finite and the two
-    # floors cancel to log((rt + aB) / (tt + aB)) per feature
-    fresh = spark.createDataFrame(
-        [(99, "zzz qqq vvv kkk")], "doc_id long, text string"
-    )
-    rows = importance.dsir_logweights_from_index(fresh, raw_idx, tgt_idx).collect()
-    assert len(rows) == 1 and math.isfinite(rows[0]["dsir_logweight"])
-    rt = sum(r["n"] for r in raw_idx.collect())
-    tt = sum(r["n"] for r in tgt_idx.collect())
-    b = importance.N_BUCKETS
-    per = round(math.log(1.0 / (tt + b)) - math.log(1.0 / (rt + b)), 8)
-    assert rows[0]["dsir_logweight"] == pytest.approx(round(3 * per, 6), abs=2e-6)
-    # refusals: unstamped frame; params mismatch (different bucket count)
-    with pytest.raises(ValueError):
-        importance.bucket_index_append(raw_idx.drop(
-            importance.dsir_index_stamp(2, importance.N_BUCKETS)), docs)
-    with pytest.raises(ValueError):
-        importance.dsir_logweights_from_index(
-            fresh, raw_idx, tgt_idx, buckets=5000
-        )
-    with pytest.raises(ValueError):
-        importance.dsir_logweights_from_index(fresh, raw_idx, tgt_idx, alpha=0.0)
-
-
-def test_bucket_log_probs_is_a_distribution(spark):
-    docs = spark.createDataFrame(
-        [(i, t) for i, t, _ in _DOCS], "doc_id long, text string"
-    )
-    rows = importance.bucket_log_probs(docs, buckets=100).collect()
-    total = rows[0]["_total"]
-    present = sum(math.exp(r["log_prob"]) for r in rows)
-    absent = (100 - len(rows)) * (1.0 / (total + 100))
-    assert present + absent == pytest.approx(1.0, abs=1e-9)
 
 
 # ---------------------------------------------------------------------------

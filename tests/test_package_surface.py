@@ -8,6 +8,9 @@
 - Every module under ``spacy_llm_spark/`` is reached by imports from the
   KG job (``pipeline``) or a driver file; a module only tests import is
   not part of the product.
+- Every top-level function, class and UPPER_CASE constant of the package
+  is referenced from the package or a driver file, except the few on
+  ``TEST_ONLY_DEFS``.
 - Each of the first 50 ``queries()`` entries, the ones the driver's
   correctness harness stamps, has a DuckDB oracle, and
   ``scripts/check_oracles.py`` passes from any working directory.
@@ -20,6 +23,7 @@ import ast
 import glob
 import json
 import os
+import re
 import subprocess
 import sys
 
@@ -56,6 +60,71 @@ KG_JOB_MODULES = {
     f"{PKG}.sources.sinks",
     f"{PKG}.templates",
     f"{PKG}.tokenizer",
+}
+
+# Package defs that only tests reach, each with why it stays. The list
+# only shrinks: a def that loses its last caller is deleted, not added.
+TEST_ONLY_DEFS = {
+    f"{PKG}.model.with_retry":
+        "retry policy for a remote model backend; the bundled models never fail",
+    f"{PKG}.tokenizer.align_char_span":
+        "spaCy char_span alignment modes, pinned against the reference",
+    f"{PKG}.fs.lineage_is_reliable":
+        "tells a caller whether cut_lineage survives executor loss",
+    f"{PKG}.kb.load_kb_yaml":
+        "reads the reference's KB YAML layout; tests build their KB with it",
+    f"{PKG}.kb.load_descs_csv":
+        "reads the reference's entity-description CSV layout",
+    f"{PKG}.templates.render_rel_v1_reference":
+        "reference implementation the vectorized REL renderer is compared to",
+    f"{PKG}.templates.render_el_v1_reference":
+        "reference implementation the vectorized EL renderer is compared to",
+    f"{PKG}.templates.render_spancat_v1_reference":
+        "reference implementation of spancat.v1, compared to the jinja render",
+    f"{PKG}.templates.render_spancat_v2_reference":
+        "reference implementation of spancat.v2, compared to the jinja render",
+    f"{PKG}.templates.render_spancat_v3_reference":
+        "reference implementation of spancat.v3, compared to the jinja render",
+    f"{PKG}.plans.validate.require_ents_schema":
+        "input check for a caller that supplies its own ents column",
+    f"{PKG}.operators.dedup.semantic_dedup":
+        "row-keeping form of semantic_dup_pairs, pinned by a test",
+    f"{PKG}.operators.materialize.merge_annotations":
+        "keeps prior annotations on reprocessing, as the reference does",
+    f"{PKG}.operators.el.unhighlight":
+        "inverse of the EL mention highlighting, for round-trip checks",
+    f"{PKG}.operators.scoring.score_mentions":
+        "mention-level NER P/R/F, pinned against hand cases",
+    f"{PKG}.operators.similarity.dequantize_expr":
+        "inverse of the int8 quantization; tests bound its error with it",
+    f"{PKG}.functions.response_parsers.parse_ner_v3":
+        "row-level NER v3 parser the batch parser is compared to",
+    f"{PKG}.sources.readers.fewshot_reader":
+        "loads few-shot examples for KGConfig (see its comment)",
+    f"{PKG}.sources.sinks.read_table":
+        "reads back a table that write_table committed",
+    f"{PKG}.functions.rdf.parse_ntriples":
+        "inverse of to_ntriples; the serializer's round-trip tests use it",
+    f"{PKG}.functions.rdf.parse_ntriples_typed":
+        "full-grammar N-Triples reader for the typed round-trip tests",
+    f"{PKG}.functions.rdf.parse_nquads":
+        "inverse of to_nquads; the serializer's round-trip tests use it",
+    f"{PKG}.functions.rdf.parse_turtle":
+        "inverse of flat to_turtle; the serializer's round-trip tests use it",
+    f"{PKG}.functions.rdf.turtle_header":
+        "the @prefix line a to_turtle document starts with",
+    f"{PKG}.functions.relevance.bm25_index_append":
+        "append form of bm25_index, pinned equal to a rebuild",
+    f"{PKG}.operators.dedup.exact_dedup":
+        "min-id representative per exact text hash, pinned by a test",
+    f"{PKG}.operators.dedup.jaccard_vs_probe":
+        "token-set Jaccard against one probe text, pinned by a test",
+    f"{PKG}.operators.fusion.trust_drift":
+        "staleness metric for a frozen trust table, pinned by tests",
+    f"{PKG}.operators.similarity.ivf_index_drift":
+        "recall of a stale IVF index against brute force, pinned by tests",
+    f"{PKG}.operators.similarity.train_ivf_centroids":
+        "Lloyd refinement of IVF centroids; tests check it finds planted cells",
 }
 
 DRIVER_FILES = sorted(
@@ -322,3 +391,128 @@ def test_import_closure_follows_relative_and_function_level_imports():
     assert kg <= KG_JOB_MODULES, sorted(kg - KG_JOB_MODULES)
     assert f"{PKG}.operators.graph" not in kg
     assert f"{PKG}.operators.graph" in _import_closure(DRIVER_FILES)
+
+
+_CONSTANT = re.compile(r"_?[A-Z][A-Z0-9_]*$")
+
+
+def _module_defs(tree):
+    """Top-level functions, classes and UPPER_CASE constants of a parsed
+    module, each with the statement that defines it."""
+    defs = {}
+    for s in tree.body:
+        if isinstance(s, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            defs[s.name] = s
+        elif isinstance(s, (ast.Assign, ast.AnnAssign)):
+            targets = s.targets if isinstance(s, ast.Assign) else [s.target]
+            for t in targets:
+                if isinstance(t, ast.Name) and _CONSTANT.match(t.id):
+                    defs[t.id] = s
+    return defs
+
+
+def _dotted(node):
+    """``a.b.c`` for a chain of attribute accesses on a name, else None."""
+    parts = []
+    while isinstance(node, ast.Attribute):
+        parts.append(node.attr)
+        node = node.value
+    if not isinstance(node, ast.Name):
+        return None
+    return ".".join([node.id] + parts[::-1])
+
+
+def _def_references(tree, package=None):
+    """``(module, name)`` pairs a parsed file refers to in another package
+    module: a name it imports, or ``alias.name`` on a package module it
+    imports. Function-level imports count."""
+    refs, aliases = set(), {}  # local name -> package modules
+    for _, mod, names, asname in _package_imports(tree, package):
+        if _module_file(mod) is None:
+            continue
+        if names is None:
+            local = asname or mod.split(".")[0]
+            aliases.setdefault(local, set()).add(mod if asname else PKG)
+            continue
+        for a in names:
+            sub = f"{mod}.{a.name}"
+            if _module_file(sub) is not None:
+                aliases.setdefault(a.asname or a.name, set()).add(sub)
+            else:
+                refs.add((mod, a.name))
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Attribute):
+            continue
+        dotted = _dotted(node.value)
+        if dotted is None:
+            continue
+        head, _, rest = dotted.partition(".")
+        for mod in aliases.get(head, ()):
+            mod = f"{mod}.{rest}" if rest else mod
+            if _module_file(mod) is not None and (
+                _module_file(f"{mod}.{node.attr}") is None
+            ):
+                refs.add((mod, node.attr))
+    return refs
+
+
+def _unreferenced_package_defs():
+    """``module.name`` of every package def that neither its own module
+    (outside the def itself) nor another package module nor a driver file
+    refers to. Tests are not references."""
+    defs, refs = {}, set()
+    for mod in _package_modules():
+        path = _module_file(mod)
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        package = mod if path.endswith("__init__.py") else mod.rpartition(".")[0]
+        refs |= _def_references(tree, package)
+        own = _module_defs(tree)
+        used = {}  # name -> top-level statements that use it
+        for s in tree.body:
+            for n in ast.walk(s):
+                if isinstance(n, ast.Name) and n.id in own:
+                    used.setdefault(n.id, set()).add(id(s))
+        for name, node in own.items():
+            defs[(mod, name)] = bool(used.get(name, set()) - {id(node)})
+    for path in DRIVER_FILES:
+        with open(path) as f:
+            refs |= _def_references(ast.parse(f.read()))
+    return sorted(
+        f"{mod}.{name}"
+        for (mod, name), self_used in defs.items()
+        if not self_used and (mod, name) not in refs
+    )
+
+
+def test_every_package_def_is_reached_outside_tests():
+    """A def that only tests reach is not part of the product: every
+    top-level function, class and UPPER_CASE constant of the package is
+    referenced, through imports or ``module.attr``, from the package or a
+    driver file. ``TEST_ONLY_DEFS`` names the exceptions."""
+    unreferenced = set(_unreferenced_package_defs())
+    only_tests = sorted(unreferenced - set(TEST_ONLY_DEFS))
+    assert not only_tests, f"only tests reach {only_tests}"
+    # an entry that gained a caller, or lost its def, leaves the list
+    stale = sorted(set(TEST_ONLY_DEFS) - unreferenced)
+    assert not stale, f"no longer test-only: {stale}"
+
+
+def test_def_reference_scan_resolves_imports_and_attributes(tmp_path):
+    driver = tmp_path / "driver.py"
+    driver.write_text(
+        "import spacy_llm_spark.operators.graph\n"
+        "from spacy_llm_spark.operators import canonicalize as canon\n"
+        "from spacy_llm_spark.kb import build_code_kb\n"
+        "def q(spark):\n"
+        "    from spacy_llm_spark import fs\n"
+        "    fs.cut_lineage(canon.canonical_vertices(build_code_kb()))\n"
+        "    return spacy_llm_spark.operators.graph.pagerank\n"
+    )
+    refs = _def_references(ast.parse(driver.read_text()))
+    assert refs == {
+        (f"{PKG}.kb", "build_code_kb"),
+        (f"{PKG}.fs", "cut_lineage"),
+        (f"{PKG}.operators.canonicalize", "canonical_vertices"),
+        (f"{PKG}.operators.graph", "pagerank"),
+    }

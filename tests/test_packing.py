@@ -1,135 +1,7 @@
-"""Sequence packing (operators/packing.py): invariants, chunking
-invariance, incremental-append parity, plan shape."""
+"""CCNet line dedup (operators/dedup.py) and neighbor-Jaccard link
+prediction (operators/graph.py)."""
 
 import pytest
-from pyspark.sql import functions as F
-
-from spacy_llm_spark.operators import packing
-
-BUDGET = 64
-
-
-@pytest.fixture(scope="module")
-def docs(spark, sf_dir):
-    return spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text"
-    )
-
-
-@pytest.fixture(scope="module")
-def packed(docs):
-    return packing.pack_sequences(docs, BUDGET, n_chunks=7).cache()
-
-
-def test_packs_tile_exactly(packed):
-    """Every pack except the last sums to exactly BUDGET tokens and is
-    tiled contiguously from offset 0."""
-    sums = packed.groupBy("pack_id").agg(
-        F.sum("seg_len").alias("s"),
-        F.min("tok_start").alias("lo"),
-        F.max(F.col("tok_start") + F.col("seg_len")).alias("hi"),
-    )
-    last = sums.agg(F.max("pack_id")).head()[0]
-    bad = sums.where(
-        (F.col("pack_id") != last)
-        & ((F.col("s") != BUDGET) | (F.col("lo") != 0) | (F.col("hi") != BUDGET))
-    ).count()
-    assert bad == 0
-    # contiguity inside each pack: sorted segments abut
-    rows = packed.orderBy("pack_id", "tok_start").collect()
-    pos, cur = 0, None
-    for r in rows:
-        if r["pack_id"] != cur:
-            cur, pos = r["pack_id"], 0
-        assert r["tok_start"] == pos
-        pos += r["seg_len"]
-
-
-def test_per_doc_token_conservation(docs, packed):
-    from spacy_llm_spark.functions.text import token_count
-
-    want = {
-        r["doc_id"]: r["n"]
-        for r in docs.select(
-            "doc_id", token_count(F.col("text")).cast("long").alias("n")
-        ).collect()
-        if r["n"] > 0
-    }
-    got = {
-        r["doc_id"]: r["s"]
-        for r in packed.groupBy("doc_id").agg(F.sum("seg_len").alias("s")).collect()
-    }
-    assert got == want
-
-
-def test_chunking_invariance(docs, packed):
-    """n_chunks=1 (single chunk, no boundaries) produces identical rows."""
-    one = packing.pack_sequences(docs, BUDGET, n_chunks=1)
-    assert one.exceptAll(packed).count() == 0
-    assert packed.exceptAll(one).count() == 0
-
-
-def test_incremental_append_parity(docs, packed):
-    """old-pack ∪ append-pack(new, offset=total(old)) ≡ full recompute."""
-    split = docs.selectExpr("percentile(doc_id, 0.7)").head()[0]
-    old = docs.where(F.col("doc_id") <= split)
-    new = docs.where(F.col("doc_id") > split)
-    prev = packing.total_tokens(old)
-    merged = packing.pack_sequences(old, BUDGET, n_chunks=3).unionByName(
-        packing.pack_sequences_append(new, BUDGET, prev, n_chunks=2)
-    )
-    assert merged.exceptAll(packed).count() == 0
-    assert packed.exceptAll(merged).count() == 0
-
-
-def test_zero_token_docs_dropped(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "   "), (3, "")], ["doc_id", "text"]
-    )
-    out = packing.pack_sequences(df, 2, n_chunks=1)
-    assert sorted((r["doc_id"], r["pack_id"]) for r in out.collect()) == [
-        (1, 0),
-        (1, 1),
-    ]
-
-
-def test_precomputed_token_column(spark):
-    """n_tokens_col path never touches text; offsets are exact longs."""
-    df = spark.createDataFrame(
-        [(i, 10) for i in range(1, 11)], ["doc_id", "n_tok"]
-    )
-    out = packing.pack_sequences(
-        df, 16, n_tokens_col="n_tok", n_chunks=3
-    ).collect()
-    # 100 tokens -> packs 0..6; doc 2 spans the 16-token cut at 16
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc_id"], []).append(
-            (r["pack_id"], r["tok_start"], r["seg_len"])
-        )
-    assert by_doc[1] == [(0, 0, 10)]
-    assert sorted(by_doc[2]) == [(0, 10, 6), (1, 0, 4)]
-    assert sum(s for segs in by_doc.values() for _, _, s in segs) == 100
-
-
-def test_budget_validation(spark):
-    df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        packing.pack_sequences(df, 0)
-    with pytest.raises(ValueError):
-        packing.pack_sequences_append(df, 4, -1)
-
-
-def test_no_single_partition_window(docs):
-    """The scale guarantee: the running sum never collapses to a
-    single-partition global window."""
-    plan = (
-        packing.pack_sequences(docs, BUDGET, n_chunks=7)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "SinglePartition" not in plan
 
 
 # --- remove_duplicated_lines (CCNet line dedup, operators/dedup.py) ---
@@ -198,69 +70,6 @@ def test_line_dedup_validates_threshold(spark):
     df = spark.createDataFrame([(1, "x")], ["doc_id", "text"])
     with pytest.raises(ValueError):
         dedup.remove_duplicated_lines(df, 0)
-
-
-# --- weighted_upsample (epoch mixing, operators/sampling.py) ---
-
-
-def test_weighted_upsample_integer_weights(spark):
-    from spacy_llm_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(1, "wiki", "aa"), (2, "wiki", "bb"), (3, "web", "cc")],
-        ["doc_id", "source", "text"],
-    )
-    out = sampling.weighted_upsample(df, {"wiki": 3.0, "web": 1.0}, "source")
-    got = sorted((r["doc_id"], r["epoch"]) for r in out.collect())
-    assert got == [(1, 0), (1, 1), (1, 2), (2, 0), (2, 1), (2, 2), (3, 0)]
-
-
-def test_weighted_upsample_expected_rate_and_determinism(spark, sf_dir):
-    from spacy_llm_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = docs.count()
-    up = sampling.weighted_upsample(docs, {}, "source", default_weight=1.5)
-    c1, c2 = up.count(), up.count()
-    assert c1 == c2  # RNG-free: identical across runs
-    # fractional copies track the weight: ~1.5x within hash noise
-    assert abs(c1 / n - 1.5) < 0.15
-    # epoch 1 rows are a strict subset of epoch 0 rows
-    e0 = {r["doc_id"] for r in up.where("epoch = 0").collect()}
-    e1 = {r["doc_id"] for r in up.where("epoch = 1").collect()}
-    assert e1 < e0 and e0 == {r["doc_id"] for r in docs.collect()}
-
-
-def test_weighted_upsample_subunit_weight_downsamples(spark, sf_dir):
-    from spacy_llm_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    n = docs.count()
-    out = sampling.weighted_upsample(docs, {}, "source", default_weight=0.25)
-    c = out.count()
-    assert 0 < c < n and abs(c / n - 0.25) < 0.1
-    assert out.agg(F.max("epoch")).head()[0] == 0
-
-
-def test_weighted_upsample_null_group_and_default(spark):
-    from spacy_llm_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(1, None, "aa"), (2, "x", "bb")], ["doc_id", "source", "text"]
-    )
-    out = sampling.weighted_upsample(df, {"x": 2.0}, "source", default_weight=1.0)
-    got = sorted((r["doc_id"], r["epoch"]) for r in out.collect())
-    assert got == [(1, 0), (2, 0), (2, 1)]
-
-
-def test_weighted_upsample_rejects_negative(spark):
-    from spacy_llm_spark.operators import sampling
-
-    df = spark.createDataFrame([(1, "x", "aa")], ["doc_id", "source", "text"])
-    with pytest.raises(ValueError):
-        sampling.weighted_upsample(df, {"x": -1.0}, "source")
-    with pytest.raises(ValueError):
-        sampling.weighted_upsample(df, {}, "source", default_weight=-0.5)
 
 
 # --- neighbor_jaccard (link prediction, operators/graph.py) ---
@@ -343,44 +152,6 @@ def test_neighbor_jaccard_pivot_cap_is_lower_bound(spark):
         graph.neighbor_jaccard(edges, max_pivot_degree=0)
 
 
-def test_materialize_packs_reassembles_stream(docs, packed):
-    """Pack texts concatenated in pack order reproduce the original
-    token stream; each pack has exactly as many tokens as its segments
-    claim."""
-    from spacy_llm_spark.functions.text import tokens_expr
-
-    out = packing.materialize_packs(docs, packed)
-    rows = sorted(
-        ((r["pack_id"], r["pack_text"], r["n_tokens"]) for r in out.collect())
-    )
-    for _, text, n in rows:
-        assert len(text.split(" ")) == n
-    stream = " ".join(t for _, t, _ in rows).split(" ")
-    want = [
-        t
-        for r in docs.orderBy("doc_id").collect()
-        for t in r["text"].split() 
-    ]
-    assert stream == want
-
-
-def test_materialize_packs_straddling_doc(spark):
-    from spacy_llm_spark.operators.packing import (
-        materialize_packs,
-        pack_sequences,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "d e f g")], ["doc_id", "text"]
-    )
-    segs = pack_sequences(df, 4, n_chunks=1)
-    got = {
-        r["pack_id"]: (r["pack_text"], r["n_tokens"])
-        for r in materialize_packs(df, segs).collect()
-    }
-    assert got == {0: ("a b c d", 4), 1: ("e f g", 3)}
-
-
 def test_line_dedup_probe_equals_full_recompute(spark):
     """Chained incremental line dedup == full recompute, including the
     threshold-crossing rebuild of OLD docs: batch 2 re-delivers a line
@@ -427,106 +198,3 @@ def test_line_dedup_probe_refuses_unstamped(spark):
         dedup.line_dedup_probe(forged, cnt, clean, nb, 1)
     with pytest.raises(ValueError):
         dedup.line_dedup_probe(idx, cnt, clean, nb, 0)
-
-
-# ---- proportional_mix (exact-composition domain mixture) ----
-
-
-def test_proportional_mix_hand_case(spark):
-    from spacy_llm_spark.operators import sampling
-
-    rows = (
-        [(i, "A", f"a{i}") for i in range(10)]
-        + [(100 + i, "B", f"b{i}") for i in range(2)]
-        + [(200 + i, "C", f"c{i}") for i in range(4)]
-        + [(300, "unlisted", "zz")]
-    )
-    df = spark.createDataFrame(rows, ["doc_id", "src", "text"])
-    # exact-binary shares: ratios A 20, B 8, C 16 -> B binds (n=2)
-    out = sampling.proportional_mix(
-        df, "src", {"A": 0.5, "B": 0.25, "C": 0.25}
-    )
-    got = {
-        r["src"]: (r["n"], r["q"])
-        for r in out.groupBy("src")
-        .agg(F.count("*").alias("n"), F.first("quota").alias("q"))
-        .collect()
-    }
-    assert got == {"A": (4, 4), "B": (2, 2), "C": (2, 2)}
-
-
-def test_proportional_mix_binding_group_whole(spark, sf_dir):
-    """The binding group keeps EVERY row (no FP off-by-one), other
-    groups are cut, unlisted langs are dropped, and the run is
-    deterministic."""
-    from spacy_llm_spark.operators import sampling
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    props = {"en": 0.6, "de": 0.2, "fr": 0.2}
-    full = {
-        r["lang"]: r["n"]
-        for r in docs.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    b = min(props, key=lambda k: (full[k] / props[k], repr(k)))
-    out = sampling.proportional_mix(docs, "lang", props).cache()
-    kept = {
-        r["lang"]: r["n"]
-        for r in out.groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    assert set(kept) == set(props)
-    assert kept[b] == full[b]
-    for k in props:
-        assert kept[k] <= full[k]
-        # composition within 1 row of target share (floor rounding)
-        assert abs(kept[k] - (kept[b] / props[b]) * props[k]) <= 1
-    first = sorted(r["doc_id"] for r in out.collect())
-    again = sampling.proportional_mix(docs, "lang", props)
-    assert first == sorted(r["doc_id"] for r in again.collect())
-    out.unpersist()
-
-
-def test_proportional_mix_cuts_by_content_hash_order(spark):
-    """Kept rows of a cut group are exactly the quota-prefix of the
-    (sha256(text), doc_id) ordering — checked against hashlib."""
-    import hashlib
-
-    from spacy_llm_spark.operators import sampling
-
-    rows = [(i, "big", f"text-{i}") for i in range(20)] + [
-        (100, "small", "s0"),
-        (101, "small", "s1"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "g", "text"])
-    # small binds (2/0.2=10 < 20/0.8=25); big quota = floor(2*0.8/0.2)=8
-    out = sampling.proportional_mix(df, "g", {"big": 0.8, "small": 0.2})
-    kept_big = sorted(
-        r["doc_id"] for r in out.where("g = 'big'").collect()
-    )
-    expect = sorted(
-        range(20),
-        key=lambda i: (hashlib.sha256(f"text-{i}".encode()).hexdigest(), i),
-    )[:8]
-    assert kept_big == sorted(expect)
-
-
-def test_proportional_mix_validation(spark):
-    from spacy_llm_spark.operators import sampling
-
-    df = spark.createDataFrame(
-        [(1, "A", "x"), (2, "B", "y")], ["doc_id", "g", "text"]
-    )
-    with pytest.raises(ValueError, match="non-empty"):
-        sampling.proportional_mix(df, "g", {})
-    with pytest.raises(ValueError, match="positive"):
-        sampling.proportional_mix(df, "g", {"A": 0.0})
-    with pytest.raises(ValueError, match="NULL"):
-        sampling.proportional_mix(df, "g", {None: 1.0})
-    with pytest.raises(ValueError, match="no rows"):
-        sampling.proportional_mix(df, "g", {"A": 0.5, "missing": 0.5})
-    with pytest.raises(ValueError, match="warn|error"):
-        sampling.proportional_mix(df, "g", {"A": 1.0}, on_oversize="nope")
-    with pytest.raises(ValueError, match="exceed"):
-        sampling.proportional_mix(
-            df, "g", {"A": 0.5, "B": 0.5}, max_group_rows=0,
-            on_oversize="error",
-        )
