@@ -770,6 +770,15 @@ def q_vocab_topk(spark, sf_dir):
     return textfn.vocab_topk(_docs(spark, sf_dir), k=20)
 
 
+def q_lm_self_nll(spark, sf_dir):
+    """CCNet-style fluency score: bigram stupid-backoff LM trained on
+    the corpus, scoring the same corpus (functions/lm.py). Lower
+    lm_nll = more fluent relative to the corpus."""
+    from spacy_llm_spark.functions.lm import lm_self_score
+
+    return lm_self_score(_docs(spark, sf_dir))
+
+
 def q_semantic_dedup_pairs(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): centroid cells + within-cell exact
     all-pairs cosine (operators/dedup.semantic_dup_pairs). Centroids are
@@ -824,6 +833,22 @@ def q_semantic_dedup_incremental(spark, sf_dir):
     return old_pairs.select("id_a", "id_b").unionByName(
         probe.select("id_a", "id_b")
     )
+
+
+def q_lm_incremental_nll(spark, sf_dir):
+    """Incremental LM maintenance: counts trained on the first half of
+    the corpus, then the second half folded in via merge_ngram_counts
+    (additive — history never re-tokenizes); scoring with the merged
+    model must equal training on everything at once, so the oracle IS
+    lm_self_nll's, verbatim."""
+    from spacy_llm_spark.functions.lm import lm_score, merge_ngram_counts, ngram_lm_counts
+
+    docs = _docs(spark, sf_dir)
+    half_a = docs.where(F.col("doc_id") % 2 == 0)
+    half_b = docs.where(F.col("doc_id") % 2 == 1)
+    uni, big, total = ngram_lm_counts(half_a)
+    uni, big, total = merge_ngram_counts(uni, big, total, half_b)
+    return lm_score(docs, uni, big, total)
 
 
 def _pii_augmented(docs):
@@ -3462,8 +3487,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lexical_cosine_incremental": q_lexical_cosine_incremental,
         "vocab_drift": q_vocab_drift,
         "lsh_dedup_scoped": q_lsh_dedup_scoped,
+        "lm_self_nll": q_lm_self_nll,
         "semantic_dedup_pairs": q_semantic_dedup_pairs,
         "semantic_dedup_incremental": q_semantic_dedup_incremental,
+        "lm_incremental_nll": q_lm_incremental_nll,
         # sub-document dedup family variant (dup_ngram_stats is the
         # stamped representative); adds the CCNet rewrite step
         "line_dedup": q_line_dedup,
@@ -4674,6 +4701,66 @@ SELECT tok AS token, CAST(count(*) AS BIGINT) AS n
 FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
 WHERE len(tok) > 0
 GROUP BY tok ORDER BY n DESC, token ASC LIMIT 20
+""",
+        "lm_self_nll": """
+WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+tok AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
+        FROM ts),
+tokf AS (SELECT doc_id, w,
+                row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
+         FROM tok WHERE len(w) > 0),
+uni AS (SELECT w, count(*) AS c1 FROM tokf GROUP BY w),
+tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n FROM uni),
+big AS (SELECT a.w AS w1, b.w AS w2, count(*) AS c2
+        FROM tokf a JOIN tokf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+        GROUP BY 1, 2),
+scored AS (
+  SELECT t.doc_id,
+         round(CASE
+           WHEN t.pos = 1 THEN log10(coalesce(u.c1, 0.4) / tot.n)
+           WHEN bg.c2 IS NOT NULL THEN log10(CAST(bg.c2 AS DOUBLE) / up.c1)
+           ELSE log10(0.4 * coalesce(u.c1, 0.4) / tot.n)
+         END, 9) AS lp
+  FROM tokf t
+  LEFT JOIN tokf p  ON p.doc_id = t.doc_id AND p.pos = t.pos - 1
+  LEFT JOIN big bg  ON bg.w1 = p.w AND bg.w2 = t.w
+  LEFT JOIN uni u   ON u.w = t.w
+  LEFT JOIN uni up  ON up.w = p.w
+  CROSS JOIN tot
+)
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       round(-sum(lp) / count(*), 6) AS lm_nll
+FROM scored GROUP BY doc_id
+""",
+        "lm_incremental_nll": """
+WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
+tok AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
+        FROM ts),
+tokf AS (SELECT doc_id, w,
+                row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
+         FROM tok WHERE len(w) > 0),
+uni AS (SELECT w, count(*) AS c1 FROM tokf GROUP BY w),
+tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n FROM uni),
+big AS (SELECT a.w AS w1, b.w AS w2, count(*) AS c2
+        FROM tokf a JOIN tokf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
+        GROUP BY 1, 2),
+scored AS (
+  SELECT t.doc_id,
+         round(CASE
+           WHEN t.pos = 1 THEN log10(coalesce(u.c1, 0.4) / tot.n)
+           WHEN bg.c2 IS NOT NULL THEN log10(CAST(bg.c2 AS DOUBLE) / up.c1)
+           ELSE log10(0.4 * coalesce(u.c1, 0.4) / tot.n)
+         END, 9) AS lp
+  FROM tokf t
+  LEFT JOIN tokf p  ON p.doc_id = t.doc_id AND p.pos = t.pos - 1
+  LEFT JOIN big bg  ON bg.w1 = p.w AND bg.w2 = t.w
+  LEFT JOIN uni u   ON u.w = t.w
+  LEFT JOIN uni up  ON up.w = p.w
+  CROSS JOIN tot
+)
+SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+       round(-sum(lp) / count(*), 6) AS lm_nll
+FROM scored GROUP BY doc_id
 """,
         "semantic_dedup_pairs": """
 WITH doubled AS (

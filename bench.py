@@ -226,7 +226,8 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     bm25_topk(docs, ["spark", "window", "dup"], k=25).count()
     extras["bm25_topk_sec"] = round(time.time() - t0, 3)
 
-    # round-5 additions: SemDeDup (doubled corpus, 16 cells)
+    # round-5 additions: SemDeDup (doubled corpus, 16 cells) and the
+    # stupid-backoff LM self-score
     t0 = time.time()
     base_emb = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -247,6 +248,12 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     n_sem = dedup.semantic_dup_pairs(sem_doubled, sem_cents, threshold=0.95).count()
     extras["semantic_dedup_pairs_sec"] = round(time.time() - t0, 3)
     extras["semantic_dedup_n_pairs"] = n_sem
+
+    t0 = time.time()
+    from spacy_llm_spark.functions.lm import lm_self_score
+
+    lm_self_score(docs).count()
+    extras["lm_self_score_sec"] = round(time.time() - t0, 3)
 
     t0 = time.time()
     from spacy_llm_spark.operators.dedup import (
