@@ -770,15 +770,6 @@ def q_vocab_topk(spark, sf_dir):
     return textfn.vocab_topk(_docs(spark, sf_dir), k=20)
 
 
-def q_lm_self_nll(spark, sf_dir):
-    """CCNet-style fluency score: bigram stupid-backoff LM trained on
-    the corpus, scoring the same corpus (functions/lm.py). Lower
-    lm_nll = more fluent relative to the corpus."""
-    from spacy_llm_spark.functions.lm import lm_self_score
-
-    return lm_self_score(_docs(spark, sf_dir))
-
-
 def q_semantic_dedup_pairs(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): centroid cells + within-cell exact
     all-pairs cosine (operators/dedup.semantic_dup_pairs). Centroids are
@@ -833,22 +824,6 @@ def q_semantic_dedup_incremental(spark, sf_dir):
     return old_pairs.select("id_a", "id_b").unionByName(
         probe.select("id_a", "id_b")
     )
-
-
-def q_lm_incremental_nll(spark, sf_dir):
-    """Incremental LM maintenance: counts trained on the first half of
-    the corpus, then the second half folded in via merge_ngram_counts
-    (additive — history never re-tokenizes); scoring with the merged
-    model must equal training on everything at once, so the oracle IS
-    lm_self_nll's, verbatim."""
-    from spacy_llm_spark.functions.lm import lm_score, merge_ngram_counts, ngram_lm_counts
-
-    docs = _docs(spark, sf_dir)
-    half_a = docs.where(F.col("doc_id") % 2 == 0)
-    half_b = docs.where(F.col("doc_id") % 2 == 1)
-    uni, big, total = ngram_lm_counts(half_a)
-    uni, big, total = merge_ngram_counts(uni, big, total, half_b)
-    return lm_score(docs, uni, big, total)
 
 
 def _pii_augmented(docs):
@@ -1773,16 +1748,6 @@ def q_kg_jsonld(spark, sf_dir):
     return rdf.to_jsonld(triples)
 
 
-def q_bm25_topk(spark, sf_dir):
-    """BM25 top-25 against a fixed query-term set (one rare + two common
-    terms) — corpus stats in ONE reduce, scoring as a pure projection
-    (functions/relevance.py); idf/avgdl/contribution quantized at 10 dp
-    in engine AND oracle so float order cannot flip the 6 dp compare."""
-    from spacy_llm_spark.functions.relevance import bm25_topk
-
-    return bm25_topk(_docs(spark, sf_dir), ["spark", "window", "dup"], k=25)
-
-
 def q_line_dedup(spark, sf_dir):
     """CCNet-style corpus-level line dedup with doc rewriting: drop
     every 8-token-window 'line' occurring more than once across the
@@ -1827,23 +1792,6 @@ def q_dup_ngram_stats(spark, sf_dir):
     from spacy_llm_spark.operators.dedup import duplicated_ngram_stats
 
     return duplicated_ngram_stats(_docs(spark, sf_dir), n=3, min_docs=2)
-
-
-def q_bm25_topk_indexed(spark, sf_dir):
-    """BM25 from the persisted inverted index (postings + doclens) —
-    the corpus text is never read at query time; the postings scan is
-    filtered to the query terms. Matches bm25_topk bit-for-bit on every
-    matching doc, so it shares that oracle (the top-25 all score > 0
-    at every test SF)."""
-    from spacy_llm_spark.functions.relevance import (
-        bm25_index,
-        bm25_query_from_index,
-    )
-
-    postings, doclens = bm25_index(_docs(spark, sf_dir))
-    return bm25_query_from_index(
-        postings, doclens, ["spark", "window", "dup"], k=25
-    )
 
 
 def q_vocab_drift(spark, sf_dir):
@@ -1928,27 +1876,6 @@ def q_pretoken_count(spark, sf_dir):
     )
 
 
-def q_profile_documents(spark, sf_dir):
-    """Single-pass corpus card over the documents table
-    (operators/profile.py): every column's null rate, cardinality,
-    native-ordering min/max, and string mean length in ONE aggregation
-    over ONE scan — the pre-mix shape check a 100 TB corpus gets before
-    anything else runs."""
-    from spacy_llm_spark.operators.profile import profile_table
-
-    return profile_table(_docs(spark, sf_dir))
-
-
-def q_docs_length_histogram(spark, sf_dir):
-    """Fixed-width document-length histogram (operators/profile.py
-    histogram): distribution shape for the corpus card — one 1-row
-    bounds aggregate broadcast back, bin id as a projection, one
-    bins-scale aggregation. No sort, no Python."""
-    from spacy_llm_spark.operators.profile import histogram
-
-    return histogram(_docs(spark, sf_dir), "n_chars", n_bins=20)
-
-
 def q_docs_chunks(spark, sf_dir):
     """RAG/embedding ingestion chunking (functions/text.py
     chunk_documents): 64-token windows overlapping by 16, offsets kept,
@@ -1968,18 +1895,6 @@ def q_kg_negative_triples(spark, sf_dir):
 
     edges = q_kg_edges(spark, sf_dir).select("subj", "pred", "obj")
     return negative_triples(edges, seed=42, buckets=64)
-
-
-def q_doc_keywords(spark, sf_dir):
-    """Top-3 TF-IDF keywords per document (functions/relevance.py
-    tfidf_keywords, min_df=2): one corpus scan, one (doc,term)
-    aggregate, term-scale idf join, doc-keyed top-k window — never a
-    global sort; sklearn-smoothed idf at the shared 10 dp quantum.
-    (The synthetic corpus's 31-term vocabulary is dense — max_df_frac
-    would empty it, so the stopword knob stays unit-test-covered.)"""
-    from spacy_llm_spark.functions.relevance import tfidf_keywords
-
-    return tfidf_keywords(_docs(spark, sf_dir), k=3, min_df=2)
 
 
 def q_kg_shortest_paths(spark, sf_dir):
@@ -2090,17 +2005,6 @@ def q_lang_confusion(spark, sf_dir):
         )
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
-
-
-def q_docs_skew_report(spark, sf_dir):
-    """Pre-shuffle skew diagnostics (operators/profile.py skew_report)
-    over the deliberately skewed source column (the mega-repo owns
-    ~30% of rows): heaviest keys, their shares, and the skew factor
-    that decides between AQE splitting and salting BEFORE the shuffle
-    is paid for."""
-    from spacy_llm_spark.operators.profile import skew_report
-
-    return skew_report(_docs(spark, sf_dir), ["source"], top_n=10)
 
 
 def q_cluster_prf(spark, sf_dir):
@@ -2347,62 +2251,6 @@ _SHAPES = [
 ]
 
 
-def q_kg_embedding_alignment(spark, sf_dir):
-    """Procrustes embedding-space alignment (operators/kgembed.
-    procrustes_align): the destination space is the source rotated by
-    a KNOWN signed-reversal permutation (orthogonal and exactly
-    representable), anchors are every 5th vector — the recovered
-    rotation is numerically that permutation, so the rotated source
-    equals the directly-permuted space and the oracle applies the
-    permutation in SQL. dim x dim cross-covariance reduces
-    distributedly (10 dp pre-sum); the SVD is dim^3 driver work; the
-    rotation re-enters as literal codegen coefficients. 4 dp output
-    quantization + sign-of-zero normalization keep both engines'
-    float paths comparable."""
-    from spacy_llm_spark.operators.kgembed import procrustes_align
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").cast("string").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    dst = emb.select(
-        "id",
-        F.expr(
-            "transform(sequence(0, 63), j -> element_at(vec, 64 - j)"
-            " * CASE WHEN j % 2 = 0 THEN 1.0D ELSE -1.0D END)"
-        ).alias("vec"),
-    )
-    anchors = emb.select(
-        F.col("id").alias("src_id"), F.col("id").alias("dst_id")
-    ).where(F.col("id").cast("long") % 5 == 0)
-    rotated, _r = procrustes_align(emb, dst, anchors, quantum=4)
-    return rotated
-
-
-def q_embedding_smoothing(spark, sf_dir):
-    """GraphSAGE-mean neighborhood aggregation (operators/kgembed.
-    aggregate_neighbors): embedding vectors smoothed over a
-    deterministic 2-out-regular modular graph on the vec_id space —
-    in-neighbor element-wise means with 8 dp pre-sum quantization,
-    one posexplode to (vertex, component) + one keyed avg."""
-    from spacy_llm_spark.operators.kgembed import aggregate_neighbors
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        F.col("vec_id").alias("id"),
-        F.col("embedding").cast("array<double>").alias("vec"),
-    )
-    n = emb.count()
-    edges = emb.select(
-        F.col("id").alias("subj"), ((F.col("id") * 7 + 1) % n).alias("obj")
-    ).unionByName(
-        emb.select(
-            F.col("id").alias("subj"),
-            ((F.col("id") * 13 + 2) % n).alias("obj"),
-        )
-    )
-    return aggregate_neighbors(emb, edges, direction="in")
-
-
 def q_kg_transe_epoch(spark, sf_dir):
     """KG-embedding training step (operators/kgembed.py): deterministic
     full-batch TransE — negative_triples pairs over the distinct
@@ -2430,56 +2278,6 @@ def q_kg_transe_epoch(spark, sf_dir):
     return new_ent
 
 
-def q_kg_entity_alignment_incremental(spark, sf_dir):
-    """Incremental entity alignment (operators/audit.alignment_index +
-    align_entities_probe): the odd-doc standing KG is indexed ONCE —
-    features + per-feature entity counts, _fmt-stamped — and the
-    even-doc batch probes it. Feature frequency is side-separable
-    (df = df_index + df_batch), so this is EXACTLY
-    align_entities(batch, standing): shares kg_entity_alignment's
-    oracle VERBATIM. The standing corpus is never re-scanned at probe
-    time; append == rebuild is test-pinned."""
-    from spacy_llm_spark.operators.audit import (
-        align_entities_probe, alignment_index,
-    )
-
-    edges = mat.edges_table(_annotated(spark, sf_dir), ("doc_id",)).select(
-        "doc_id", "subj", "pred", "obj"
-    )
-    left = edges.where(F.col("doc_id") % 2 == 0).select("subj", "pred", "obj")
-    right = edges.where(F.col("doc_id") % 2 == 1).select("subj", "pred", "obj")
-    return align_entities_probe(left, alignment_index(right), min_shared=2)
-
-
-def q_kg_sameas_links(spark, sf_dir):
-    """Greedy 1:1 sameAs selection (operators/audit.mutual_best_alignment)
-    over the even/odd-split entity-alignment scores: each side keeps
-    exactly its mutual best match — two key-scale min-struct argmaxes
-    joined, no Window. The end of the cross-source identity pipeline:
-    align_entities scores -> mutual-best links -> owl:sameAs input for
-    canonicalization."""
-    from spacy_llm_spark.operators.audit import mutual_best_alignment
-
-    return mutual_best_alignment(q_kg_entity_alignment(spark, sf_dir))
-
-
-def q_kg_entity_alignment(spark, sf_dir):
-    """Instance-based entity alignment (operators/audit.align_entities)
-    across two KGs built from DISJOINT doc partitions (even vs odd
-    doc_id) — the cross-source sameAs-candidate scorer: shared
-    assertion features (outgoing + incoming), each discounted
-    1/ln(1+df) by its cross-corpus document frequency, min_shared=2.
-    One feature-keyed equi-join bounded by the df cap; pair-keyed sum."""
-    from spacy_llm_spark.operators.audit import align_entities
-
-    edges = mat.edges_table(_annotated(spark, sf_dir), ("doc_id",)).select(
-        "doc_id", "subj", "pred", "obj"
-    )
-    left = edges.where(F.col("doc_id") % 2 == 0).select("subj", "pred", "obj")
-    right = edges.where(F.col("doc_id") % 2 == 1).select("subj", "pred", "obj")
-    return align_entities(left, right, min_shared=2)
-
-
 def q_kg_quotient(spark, sf_dir):
     """SNAP-style label quotient of the instance KG
     (operators/graph.quotient_graph): the schema graph the ABox
@@ -2492,22 +2290,6 @@ def q_kg_quotient(spark, sf_dir):
         "subj", "pred", "obj", "subj_label", "obj_label"
     )
     return quotient_graph(edges)
-
-
-def q_kg_pred_alignment(spark, sf_dir):
-    """PARIS-style instance-based predicate alignment
-    (operators/audit.align_predicates), here as SELF-alignment of the
-    constructed KG with inverse discovery: predicate pairs scored by
-    distinct-instance-pair overlap (jaccard + directed containments),
-    plus every predicate against the REVERSED pair sets — high inverse
-    containment = owl:inverseOf evidence, the declared-inverse input
-    reason.owl_entailment consumes. One (subj, obj)-keyed equi-join
-    producing overlap-scale rows; the per-pred counts join at
-    predicate-pair scale."""
-    from spacy_llm_spark.operators.audit import align_predicates
-
-    triples = q_kg_edges(spark, sf_dir).select("subj", "pred", "obj").distinct()
-    return align_predicates(triples, triples, include_inverse=True)
 
 
 def q_kg_fused_facts(spark, sf_dir):
@@ -2578,38 +2360,6 @@ def q_kg_ontology(spark, sf_dir):
         "subj", "pred", "obj", "subj_label", "obj_label"
     )
     return induce_ontology(edges)
-
-
-def q_kg_entity_cards(spark, sf_dir):
-    """Entity summarization (operators/audit.summarize_entities): the
-    top-3 most characteristic facts per KG entity — informativeness =
-    1/ln(1+df) of the (pred, obj) value across subjects, the same
-    rare-evidence weight the alignment family uses. One value-scale df
-    aggregate + one subject-partitioned row_number (single shuffle,
-    no global sort)."""
-    from spacy_llm_spark.operators.audit import summarize_entities
-
-    triples = q_kg_edges(spark, sf_dir).select("subj", "pred", "obj").distinct()
-    return summarize_entities(triples, k=3)
-
-
-def q_kg_cardinality_audit(spark, sf_dir):
-    """SHACL-core cardinality validation (operators/audit.
-    shape_cardinality_violations): per-subject distinct-object bounds
-    — executes requires >= 1 (surface nodes appearing only as
-    feedsInto subjects fail it), stores caps at 2, emits requires
-    >= 3. One (subj, pred) distinct-count aggregate + a broadcast
-    vocabulary-scale constraint grid; zero-count (missing required
-    property) violations included via the subjects x constraints
-    grid."""
-    from spacy_llm_spark.operators.audit import shape_cardinality_violations
-
-    triples = q_kg_edges(spark, sf_dir).select("subj", "pred", "obj").distinct()
-    cons = spark.createDataFrame(
-        [("executes", 1, None), ("stores", None, 2), ("emits", 3, None)],
-        "pred string, min_count int, max_count int",
-    )
-    return shape_cardinality_violations(triples, cons)
 
 
 def q_kg_shape_audit(spark, sf_dir):
@@ -3143,44 +2893,6 @@ def q_docs_diversity(spark, sf_dir):
     return ngram_diversity(_docs(spark, sf_dir), group_col="lang", max_n=3)
 
 
-def q_audit_orders(spark, sf_dir):
-    """dbt-style data-quality battery (operators/audit.py) over a
-    DELIBERATELY corrupted orders frame — 2 duplicated keys, 3 orphan
-    foreign keys, 1 illegal status appended deterministically — so
-    every check reports a nonzero, independently recomputable count:
-    (check, n_violations) in check-name order."""
-    from spacy_llm_spark.operators import audit
-
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    customer = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    bad = orders.orderBy("o_orderkey").limit(3)
-    corrupted = (
-        orders.unionByName(bad.orderBy("o_orderkey").limit(2))
-        .unionByName(bad.withColumn("o_custkey", F.lit(-1).cast("long")))
-        .unionByName(
-            bad.orderBy("o_orderkey")
-            .limit(1)
-            .withColumn("o_orderstatus", F.lit("X"))
-        )
-    )
-    return audit.audit_report(
-        {
-            "orderkey_unique": audit.uniqueness_violations(
-                corrupted, ["o_orderkey"]
-            ),
-            "custkey_fk": audit.fk_violations(
-                corrupted, customer, "o_custkey", "c_custkey"
-            ),
-            "status_accepted": audit.accepted_values_violations(
-                corrupted, "o_orderstatus", ["O", "F", "P"]
-            ),
-            "custkey_not_null": audit.not_null_violations(
-                corrupted, ["o_custkey", "o_orderkey"]
-            ),
-        }
-    ).orderBy("check")
-
-
 def q_kg_msf(spark, sf_dir):
     """Boruvka minimum spanning forest (graph.minimum_spanning_forest)
     over a deterministic weighted graph derived from part (k -> k//2
@@ -3253,11 +2965,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     ANN (brute; the banded-LSH machinery stays stamped via
     lsh_dedup_incremental), truth-discovery fusion, ontology
     induction, graph analytics, text quality / language detection,
-    relevance scoring (BM25), sub-document span dedup, dataset
-    profiling, privacy audits, NER parsers/scorers (token_count,
-    ner_prf), windows/agg, EL. Variants whose family already has a
-    stamped representative (extra window shapes, base fingerprints)
-    live AFTER position 50 — still oracle-checked by
+    sub-document span dedup, privacy audits, NER parsers/scorers
+    (token_count, ner_prf), windows/agg, EL. Variants whose family
+    already has a stamped representative (extra window shapes, base
+    fingerprints) live AFTER position 50 — still oracle-checked by
     scripts/check_oracles.py when it runs every key. ADD NEW ENTRIES
     AFTER POSITION 50 unless they open a new family; if they do, swap
     them in for a same-family variant, never push a family's only
@@ -3321,15 +3032,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # session; kg_bfs_levels moved below 50 (analytics keeps
         # degree_stats + pagerank stamped) ---
         "kg_bgp_graphs": q_kg_bgp_graphs,
-        # --- relevance scoring (BM25) ---
-        "bm25_topk": q_bm25_topk,
+        # --- text quality ---
         "quality_score": q_quality_score,
-        # (detect_language is below 50 — text analysis keeps
-        # quality_score + token_count)
-        # --- dataset profiling (corpus card) ---
-        # (corpus_clean moved below 50 to make room: it composes the
-        # same quality_exprs machinery quality_score stamps)
-        "profile_documents": q_profile_documents,
         # --- NER parsers / scorers ---
         "token_count": q_token_count,
         "ner_prf": q_ner_prf,
@@ -3359,14 +3063,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "detect_language": q_detect_language,
         "corpus_clean": q_corpus_clean,
         "simhash_dup_pairs": q_simhash_dup_pairs,
-        # ================= position 50 boundary =================
-        # family variants below — oracle-checked, not driver-stamped
-        # (embedding_lsh_incremental keeps the embedding modality
-        # stamped)
+        # --- base embedding dedup and RDF Turtle: the slots the BM25
+        # and profiling families held ---
         "embedding_dup_pairs": q_embedding_dup_pairs,
         # RDF interchange (serde-family variant; escape table pinned by
         # the adversarial round-trip test)
         "kg_turtle": q_kg_turtle,
+        # ================= position 50 boundary =================
+        # family variants below — oracle-checked, not driver-stamped
         "kg_jsonld": q_kg_jsonld,
         # KG-query family variants (kg_bgp_match holds the stamped
         # slot): SPARQL OPTIONAL left-join groups; pred+ property paths
@@ -3402,8 +3106,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_ranking_metrics": q_kg_ranking_metrics,
         # incremental twin of kg_closure (shares its oracle verbatim)
         "kg_closure_incremental": q_kg_closure_incremental,
-        # profiling-family variant (profile_documents holds the stamped
-        # slot): VoID predicate descriptor
+        # VoID predicate descriptor
         "kg_pred_stats": q_kg_pred_stats,
         # canonicalization-family variant (kg_vertices/kg_canonical_edges
         # hold the stamped slots): display-name vote
@@ -3461,36 +3164,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_hits": q_kg_hits,
         "kg_scc": q_kg_scc,
         "kg_shape_audit": q_kg_shape_audit,
-        "kg_cardinality_audit": q_kg_cardinality_audit,
-        "kg_entity_cards": q_kg_entity_cards,
-        "kg_pred_alignment": q_kg_pred_alignment,
         "kg_fused_facts_incremental": q_kg_fused_facts_incremental,
         "kg_conflict_report": q_kg_conflict_report,
         "kg_quotient": q_kg_quotient,
-        "kg_entity_alignment": q_kg_entity_alignment,
-        "kg_entity_alignment_incremental": q_kg_entity_alignment_incremental,
-        "kg_sameas_links": q_kg_sameas_links,
         "kg_transe_epoch": q_kg_transe_epoch,
-        "kg_embedding_alignment": q_kg_embedding_alignment,
-        "embedding_smoothing": q_embedding_smoothing,
         # (ann_lsh_topk / topk_orders_per_customer displaced from the
         # first 50 by the fusion + ontology-induction families)
         "ann_lsh_topk": q_ann_lsh_topk,
         "topk_orders_per_customer": q_topk_orders_per_customer,
-        "audit_orders": q_audit_orders,
         "docs_diversity": q_docs_diversity,
         "knn_join": q_knn_join,
         "hard_negatives": q_hard_negatives,
         "lexical_cosine_pairs": q_lexical_cosine_pairs,
         "dup_ngram_stats_incremental": q_dup_ngram_stats_incremental,
-        "bm25_topk_indexed": q_bm25_topk_indexed,
         "lexical_cosine_incremental": q_lexical_cosine_incremental,
         "vocab_drift": q_vocab_drift,
         "lsh_dedup_scoped": q_lsh_dedup_scoped,
-        "lm_self_nll": q_lm_self_nll,
         "semantic_dedup_pairs": q_semantic_dedup_pairs,
         "semantic_dedup_incremental": q_semantic_dedup_incremental,
-        "lm_incremental_nll": q_lm_incremental_nll,
         # sub-document dedup family variant (dup_ngram_stats is the
         # stamped representative); adds the CCNet rewrite step
         "line_dedup": q_line_dedup,
@@ -3502,8 +3193,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # scorer family variant (ner_prf holds the stamped slot)
         "cluster_prf": q_cluster_prf,
         "cluster_bcubed": q_cluster_bcubed,
-        # profiling-family variant (profile_documents holds the slot)
-        "docs_skew_report": q_docs_skew_report,
         # classifier-evaluation variant (ner_prf holds the scorer slot)
         "lang_confusion": q_lang_confusion,
         # graph family variant (degree/pagerank/triangles/BFS stamped)
@@ -3514,11 +3203,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_edge_support": q_kg_edge_support,
         "kg_edge_support_incremental": q_kg_edge_support_incremental,
         "kg_shortest_paths": q_kg_shortest_paths,
-        "doc_keywords": q_doc_keywords,
         # text-analysis family variant: RAG chunking
         "docs_chunks": q_docs_chunks,
-        # profiling family variant (profile_documents holds the slot)
-        "docs_length_histogram": q_docs_length_histogram,
     }
 
 
@@ -4097,35 +3783,6 @@ def _node2vec_unrolled_sql(
     return "\n".join(parts)
 
 
-def _profile_sql(table: str, cols: list) -> str:
-    """Mirror of operators/profile.py profile_table: one wide aggregate
-    CTE, unpivoted by a constant-size UNION ALL. ``cols`` is
-    [(name, is_string)] in the table's column order."""
-    aggs = ["count(*) AS n"]
-    for c, is_str in cols:
-        aggs.append(f"sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS nn_{c}")
-        aggs.append(f"count(DISTINCT {c}) AS nd_{c}")
-        aggs.append(f"CAST(min({c}) AS VARCHAR) AS mn_{c}")
-        aggs.append(f"CAST(max({c}) AS VARCHAR) AS mx_{c}")
-        if is_str:
-            aggs.append(f"avg(len({c})) AS al_{c}")
-    rows = []
-    for c, is_str in cols:
-        al = f"round(al_{c}, 6)" if is_str else "CAST(NULL AS DOUBLE)"
-        rows.append(
-            f"SELECT '{c}' AS \"column\", CAST(n AS BIGINT) AS n_rows,\n"
-            f"  CAST(nn_{c} AS BIGINT) AS n_nulls,\n"
-            f"  round(CAST(nn_{c} AS DOUBLE) / n, 6) AS null_rate,\n"
-            f"  CAST(nd_{c} AS BIGINT) AS n_distinct,\n"
-            f"  mn_{c} AS min_value, mx_{c} AS max_value,\n"
-            f"  {al} AS avg_len FROM s"
-        )
-    return (
-        "WITH s AS (SELECT " + ", ".join(aggs) + f" FROM {table})\n"
-        + "\nUNION ALL\n".join(rows)
-    )
-
-
 def _ppr_unrolled_sql(iters: int, d: float, seed_pred: str) -> str:
     """Personalized-PageRank power iteration unrolled (chained
     MATERIALIZED CTEs — same discipline and 10 dp round-quantization as
@@ -4702,66 +4359,6 @@ FROM (SELECT unnest(string_split(text, ' ')) AS tok FROM documents)
 WHERE len(tok) > 0
 GROUP BY tok ORDER BY n DESC, token ASC LIMIT 20
 """,
-        "lm_self_nll": """
-WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-tok AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
-        FROM ts),
-tokf AS (SELECT doc_id, w,
-                row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
-         FROM tok WHERE len(w) > 0),
-uni AS (SELECT w, count(*) AS c1 FROM tokf GROUP BY w),
-tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n FROM uni),
-big AS (SELECT a.w AS w1, b.w AS w2, count(*) AS c2
-        FROM tokf a JOIN tokf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        GROUP BY 1, 2),
-scored AS (
-  SELECT t.doc_id,
-         round(CASE
-           WHEN t.pos = 1 THEN log10(coalesce(u.c1, 0.4) / tot.n)
-           WHEN bg.c2 IS NOT NULL THEN log10(CAST(bg.c2 AS DOUBLE) / up.c1)
-           ELSE log10(0.4 * coalesce(u.c1, 0.4) / tot.n)
-         END, 9) AS lp
-  FROM tokf t
-  LEFT JOIN tokf p  ON p.doc_id = t.doc_id AND p.pos = t.pos - 1
-  LEFT JOIN big bg  ON bg.w1 = p.w AND bg.w2 = t.w
-  LEFT JOIN uni u   ON u.w = t.w
-  LEFT JOIN uni up  ON up.w = p.w
-  CROSS JOIN tot
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(-sum(lp) / count(*), 6) AS lm_nll
-FROM scored GROUP BY doc_id
-""",
-        "lm_incremental_nll": """
-WITH ts AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-tok AS (SELECT doc_id, unnest(toks) AS w, generate_subscripts(toks, 1) AS ord
-        FROM ts),
-tokf AS (SELECT doc_id, w,
-                row_number() OVER (PARTITION BY doc_id ORDER BY ord) AS pos
-         FROM tok WHERE len(w) > 0),
-uni AS (SELECT w, count(*) AS c1 FROM tokf GROUP BY w),
-tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS n FROM uni),
-big AS (SELECT a.w AS w1, b.w AS w2, count(*) AS c2
-        FROM tokf a JOIN tokf b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-        GROUP BY 1, 2),
-scored AS (
-  SELECT t.doc_id,
-         round(CASE
-           WHEN t.pos = 1 THEN log10(coalesce(u.c1, 0.4) / tot.n)
-           WHEN bg.c2 IS NOT NULL THEN log10(CAST(bg.c2 AS DOUBLE) / up.c1)
-           ELSE log10(0.4 * coalesce(u.c1, 0.4) / tot.n)
-         END, 9) AS lp
-  FROM tokf t
-  LEFT JOIN tokf p  ON p.doc_id = t.doc_id AND p.pos = t.pos - 1
-  LEFT JOIN big bg  ON bg.w1 = p.w AND bg.w2 = t.w
-  LEFT JOIN uni u   ON u.w = t.w
-  LEFT JOIN uni up  ON up.w = p.w
-  CROSS JOIN tot
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-       round(-sum(lp) / count(*), 6) AS lm_nll
-FROM scored GROUP BY doc_id
-""",
         "semantic_dedup_pairs": """
 WITH doubled AS (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -5265,42 +4862,6 @@ SELECT subj,
        || '}' AS jsonld
 FROM pp GROUP BY subj
 """,
-        # Procrustes alignment: the recovered rotation IS the planted
-        # signed-reversal permutation, applied directly in SQL; + 0.0
-        # normalizes -0.0 on both sides
-        "kg_embedding_alignment": m
-        + """
-SELECT CAST(vec_id AS VARCHAR) AS id,
-       list_transform(range(0, 64), j ->
-         round(CAST(embedding[64 - j] AS DOUBLE)
-               * CASE WHEN j % 2 = 0 THEN 1.0 ELSE -1.0 END, 4) + 0.0
-       ) AS vec
-FROM embeddings
-""",
-        # neighborhood mean: unnest positions -> keyed avg -> ordered
-        # list, mirroring the posexplode/avg/array_sort pipeline
-        "embedding_smoothing": """
-WITH nn AS (SELECT count(*) AS n FROM embeddings),
-e AS (
-  SELECT vec_id AS s, (vec_id * 7 + 1) % (SELECT n FROM nn) AS t
-  FROM embeddings
-  UNION
-  SELECT vec_id, (vec_id * 13 + 2) % (SELECT n FROM nn)
-  FROM embeddings),
-nbr AS (SELECT DISTINCT t AS v, s AS nb FROM e WHERE t <> s),
-cells AS (
-  SELECT nbr.v, generate_subscripts(emb.embedding, 1) AS j,
-         unnest(emb.embedding) AS x
-  FROM nbr JOIN embeddings emb ON emb.vec_id = nbr.nb),
-agg AS (
-  SELECT v, j,
-         round(sum(round(CAST(x AS DOUBLE), 8)), 8) / count(*) AS m,
-         count(*) AS c
-  FROM cells GROUP BY v, j)
-SELECT v AS id, list(m ORDER BY j) AS vec,
-       CAST(max(c) AS BIGINT) AS n_neighbors
-FROM agg GROUP BY v
-""",
         # Turtle serialization: prefixed-name concat (terms PN-safe on
         # this corpus, see q_kg_turtle docstring) with nested ordered
         # string_aggs mirroring the engine's sorted collects
@@ -5656,108 +5217,6 @@ FROM pr
         "kg_hits": _hits_oracle_sql(iters=5, q=10),
         "kg_weighted_pagerank": m + _EDGES_CTE + _wpr_oracle_sql(iters=3),
         "kg_katz": m + _EDGES_CTE + _katz_oracle_sql(iters=3, alpha=0.05),
-        # SHACL shape audit: same literal ontology as _SHAPES (generated
-        # from the one Python list so engine and oracle cannot drift)
-        # mutual-best sameAs links: the alignment CTE + two
-        # row_number argmaxes (mirroring the min-struct halves) joined
-        "kg_sameas_links": m
-        + _EDGES_CTE
-        + """
-, l AS (SELECT DISTINCT subj, pred, obj FROM edges WHERE doc_id % 2 = 0)
-, r AS (SELECT DISTINCT subj, pred, obj FROM edges WHERE doc_id % 2 = 1)
-, fl AS (
-  SELECT subj AS e, 'out' AS dir, pred AS p, obj AS v FROM l
-  UNION SELECT obj, 'in', pred, subj FROM l)
-, fr AS (
-  SELECT subj AS e, 'out' AS dir, pred AS p, obj AS v FROM r
-  UNION SELECT obj, 'in', pred, subj FROM r)
-, dfq AS (
-  SELECT dir, p, v, round(1.0 / ln(1 + df), 10) AS w FROM (
-    SELECT dir, p, v, count(DISTINCT (side, e)) AS df FROM (
-      SELECT 'l' AS side, * FROM fl
-      UNION ALL SELECT 'r' AS side, * FROM fr)
-    GROUP BY dir, p, v)
-  WHERE df <= 1000)
-, al AS (
-SELECT fl.e AS left_id, fr.e AS right_id,
-       CAST(count(*) AS BIGINT) AS n_shared,
-       round(sum(w), 6) AS score
-FROM fl
-JOIN dfq ON dfq.dir = fl.dir AND dfq.p = fl.p AND dfq.v = fl.v
-JOIN fr ON fr.dir = fl.dir AND fr.p = fl.p AND fr.v = fl.v
-GROUP BY fl.e, fr.e HAVING count(*) >= 2)
-, lb AS (
-  SELECT left_id, right_id, score,
-         row_number() OVER (PARTITION BY left_id
-                            ORDER BY score DESC, right_id) AS rk
-  FROM al)
-, rb AS (
-  SELECT left_id, right_id,
-         row_number() OVER (PARTITION BY right_id
-                            ORDER BY score DESC, left_id) AS rk
-  FROM al)
-SELECT l.left_id, l.right_id, l.score
-FROM lb l JOIN rb r
-  ON r.left_id = l.left_id AND r.right_id = l.right_id AND r.rk = 1
-WHERE l.rk = 1
-""",
-        # entity alignment across the even/odd doc split: feature
-        # UNIONs (set = distinct), cross-side df, ln-discounted sum —
-        # same 10 dp pre-sum / 6 dp final quantization as the engine
-        "kg_entity_alignment": m
-        + _EDGES_CTE
-        + """
-, l AS (SELECT DISTINCT subj, pred, obj FROM edges WHERE doc_id % 2 = 0)
-, r AS (SELECT DISTINCT subj, pred, obj FROM edges WHERE doc_id % 2 = 1)
-, fl AS (
-  SELECT subj AS e, 'out' AS dir, pred AS p, obj AS v FROM l
-  UNION SELECT obj, 'in', pred, subj FROM l)
-, fr AS (
-  SELECT subj AS e, 'out' AS dir, pred AS p, obj AS v FROM r
-  UNION SELECT obj, 'in', pred, subj FROM r)
-, dfq AS (
-  SELECT dir, p, v, round(1.0 / ln(1 + df), 10) AS w FROM (
-    SELECT dir, p, v, count(DISTINCT (side, e)) AS df FROM (
-      SELECT 'l' AS side, * FROM fl
-      UNION ALL SELECT 'r' AS side, * FROM fr)
-    GROUP BY dir, p, v)
-  WHERE df <= 1000)
-SELECT fl.e AS left_id, fr.e AS right_id,
-       CAST(count(*) AS BIGINT) AS n_shared,
-       round(sum(w), 6) AS score
-FROM fl
-JOIN dfq ON dfq.dir = fl.dir AND dfq.p = fl.p AND dfq.v = fl.v
-JOIN fr ON fr.dir = fl.dir AND fr.p = fl.p AND fr.v = fl.v
-GROUP BY fl.e, fr.e HAVING count(*) >= 2
-""",
-        # incremental form: EXACT equivalence (side-separable df),
-        # so the oracle is shared verbatim
-"kg_entity_alignment_incremental": m
-        + _EDGES_CTE
-        + """
-, l AS (SELECT DISTINCT subj, pred, obj FROM edges WHERE doc_id % 2 = 0)
-, r AS (SELECT DISTINCT subj, pred, obj FROM edges WHERE doc_id % 2 = 1)
-, fl AS (
-  SELECT subj AS e, 'out' AS dir, pred AS p, obj AS v FROM l
-  UNION SELECT obj, 'in', pred, subj FROM l)
-, fr AS (
-  SELECT subj AS e, 'out' AS dir, pred AS p, obj AS v FROM r
-  UNION SELECT obj, 'in', pred, subj FROM r)
-, dfq AS (
-  SELECT dir, p, v, round(1.0 / ln(1 + df), 10) AS w FROM (
-    SELECT dir, p, v, count(DISTINCT (side, e)) AS df FROM (
-      SELECT 'l' AS side, * FROM fl
-      UNION ALL SELECT 'r' AS side, * FROM fr)
-    GROUP BY dir, p, v)
-  WHERE df <= 1000)
-SELECT fl.e AS left_id, fr.e AS right_id,
-       CAST(count(*) AS BIGINT) AS n_shared,
-       round(sum(w), 6) AS score
-FROM fl
-JOIN dfq ON dfq.dir = fl.dir AND dfq.p = fl.p AND dfq.v = fl.v
-JOIN fr ON fr.dir = fl.dir AND fr.p = fl.p AND fr.v = fl.v
-GROUP BY fl.e, fr.e HAVING count(*) >= 2
-""",
         # label quotient: one grouped aggregate over the distinct
         # labeled triple set
         "kg_quotient": m
@@ -5781,34 +5240,6 @@ SELECT subj_label, pred, obj_label,
        round(CAST(count(*) AS DOUBLE)
              / (count(DISTINCT subj) * count(DISTINCT obj)), 6) AS density
 FROM de GROUP BY subj_label, pred, obj_label
-""",
-        # PARIS predicate self-alignment: distinct-pair overlap joins
-        # (fwd + reversed) grouped to predicate-pair scale
-        "kg_pred_alignment": m
-        + _EDGES_CTE
-        + """
-, de AS (SELECT DISTINCT subj, pred, obj FROM edges)
-, ln AS (SELECT pred AS p, count(*) AS n FROM de GROUP BY pred)
-, ov AS (
-  SELECT a.pred AS lp, b.pred AS rp, 'fwd' AS direction,
-         count(*) AS n_overlap
-  FROM de a JOIN de b ON a.subj = b.subj AND a.obj = b.obj
-  GROUP BY a.pred, b.pred
-  UNION ALL
-  SELECT a.pred AS lp, b.pred AS rp, 'inv' AS direction,
-         count(*) AS n_overlap
-  FROM de a JOIN de b ON a.subj = b.obj AND a.obj = b.subj
-  GROUP BY a.pred, b.pred
-)
-SELECT ov.lp AS left_pred, ov.rp AS right_pred, ov.direction,
-       CAST(ov.n_overlap AS BIGINT) AS n_overlap,
-       CAST(l.n AS BIGINT) AS n_left, CAST(r.n AS BIGINT) AS n_right,
-       round(CAST(ov.n_overlap AS DOUBLE)
-             / (l.n + r.n - ov.n_overlap), 6) AS jaccard,
-       round(CAST(ov.n_overlap AS DOUBLE) / l.n, 6) AS left_in_right,
-       round(CAST(ov.n_overlap AS DOUBLE) / r.n, 6) AS right_in_left
-FROM ov JOIN ln l ON ov.lp = l.p JOIN ln r ON ov.rp = r.p
-WHERE ov.n_overlap >= 1
 """,
         # truth-discovery fusion, 2 rounds unrolled: product() mirrors
         # the engine's F.product, every aggregate quantized 10 dp,
@@ -5861,48 +5292,6 @@ FROM topf t JOIN ns USING (subj, pred, obj) WHERE t.rk = 1
            FROM f2)
 SELECT t.subj, t.pred, t.obj, round(t.c, 6) AS confidence, ns.n_sources
 FROM topf t JOIN ns USING (subj, pred, obj) WHERE t.rk = 1
-""",
-        # entity cards: (pred, obj) df -> 1/ln(1+df) weights,
-        # row_number per subject mirrors the engine exactly
-        "kg_entity_cards": m
-        + _EDGES_CTE
-        + """
-, de AS (SELECT DISTINCT subj, pred, obj FROM edges)
-, dfq AS (SELECT pred, obj, count(DISTINCT subj) AS df
-          FROM de GROUP BY pred, obj)
-, scored AS (
-  SELECT de.subj, de.pred, de.obj,
-         round(1.0 / ln(1 + dfq.df), 10) AS informativeness
-  FROM de JOIN dfq ON dfq.pred = de.pred AND dfq.obj = de.obj)
-SELECT subj, pred, obj, informativeness, CAST(rank AS BIGINT) AS rank
-FROM (
-  SELECT *, row_number() OVER (PARTITION BY subj
-                               ORDER BY informativeness DESC, pred, obj)
-            AS rank
-  FROM scored)
-WHERE rank <= 3
-""",
-        # cardinality audit: distinct-object counts vs the bound grid
-        "kg_cardinality_audit": m
-        + _EDGES_CTE
-        + """
-, de AS (SELECT DISTINCT subj, pred, obj FROM edges)
-, cons(p, lo, hi) AS (VALUES ('executes', 1, NULL),
-                             ('stores', NULL, 2), ('emits', 3, NULL))
-, cnt AS (SELECT subj AS s, pred AS p, count(DISTINCT obj) AS n
-          FROM de GROUP BY subj, pred)
-, subs AS (SELECT DISTINCT subj AS s FROM de)
-, obs AS (
-  SELECT g.s, g.p, coalesce(c.n, 0) AS n, g.lo, g.hi
-  FROM (SELECT s, p, lo, hi FROM subs CROSS JOIN cons) g
-  LEFT JOIN cnt c ON c.s = g.s AND c.p = g.p)
-SELECT s AS subj, p AS pred, CAST(n AS BIGINT) AS n_objects,
-       CASE WHEN lo IS NOT NULL AND n < lo THEN 'min_count'
-            ELSE 'max_count' END AS kind,
-       CAST(CASE WHEN lo IS NOT NULL AND n < lo THEN lo
-                 ELSE hi END AS BIGINT) AS bound
-FROM obs
-WHERE (lo IS NOT NULL AND n < lo) OR (hi IS NOT NULL AND n > hi)
 """,
         # fusion audit view: the incremental oracle minus the rk filter,
         # plus per-item value counts; rk=1 == the engine's winner flag
@@ -6309,32 +5698,6 @@ GROUP BY 1, 2
         "kg_shortest_paths": m
         + _EDGES_CTE
         + _sssp_unrolled_sql(4, "v LIKE 'K1%'"),
-        # TF-IDF keywords: same tokenization idiom as bm25_topk; the
-        # 10dp/6dp rounding ladder mirrors tfidf_keywords line-for-line
-        "doc_keywords": """
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0) AS tk
-  FROM documents
-), tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, unnest(tk) AS term FROM toks) GROUP BY doc_id, term
-), n AS (SELECT CAST(count(*) AS DOUBLE) AS N FROM documents),
-dfx AS (
-  SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf GROUP BY term
-), idf AS (
-  SELECT term, round(ln((1e0 + N) / (1e0 + df)) + 1e0, 10) AS idf
-  FROM dfx, n WHERE df >= 2
-), scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf,
-         round(round(tf.tf * idf.idf, 10), 6) AS score
-  FROM tf JOIN idf USING (term)
-)
-SELECT doc_id, term, tf, score, CAST(rn AS INT) AS rank FROM (
-  SELECT *, row_number() OVER (
-    PARTITION BY doc_id ORDER BY score DESC, term) AS rn
-  FROM scored
-) WHERE rn <= 3
-""",
         "kg_ppr": m
         + _EDGES_CTE
         + _ppr_unrolled_sql(iters=5, d=0.85, seed_pred="v LIKE 'K1%'"),
@@ -6358,38 +5721,6 @@ f3 AS (SELECT DISTINCT u.t AS v FROM und u JOIN f2 ON u.s = f2.v
        WHERE u.t NOT IN (SELECT v FROM r2)),
 r3 AS (SELECT v, level FROM r2 UNION ALL SELECT v, 3 FROM f3)
 SELECT v AS vertex, CAST(level AS BIGINT) AS level FROM r3
-""",
-        # BM25: formula and quantization mirror functions/relevance.py
-        # line-for-line (10 dp intermediates, 6 dp final; avgdl from
-        # exact integer sums; e0 suffixes force DOUBLE literals so
-        # DuckDB can't fall into DECIMAL arithmetic).
-        "bm25_topk": """
-WITH toks AS (
-  SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0) AS tk
-  FROM documents
-), base AS (
-  SELECT doc_id, len(tk) AS dl,
-    len(list_filter(tk, t -> t = 'dup')) AS tf_0,
-    len(list_filter(tk, t -> t = 'spark')) AS tf_1,
-    len(list_filter(tk, t -> t = 'window')) AS tf_2
-  FROM toks
-), stats AS (
-  SELECT CAST(count(*) AS DOUBLE) AS N,
-    round(CAST(sum(dl) AS DOUBLE) / count(*), 10) AS avgdl,
-    round(ln(1e0 + (count(*) - sum(CASE WHEN tf_0>0 THEN 1 ELSE 0 END) + 0.5e0)
-                 / (sum(CASE WHEN tf_0>0 THEN 1 ELSE 0 END) + 0.5e0)), 10) AS idf_0,
-    round(ln(1e0 + (count(*) - sum(CASE WHEN tf_1>0 THEN 1 ELSE 0 END) + 0.5e0)
-                 / (sum(CASE WHEN tf_1>0 THEN 1 ELSE 0 END) + 0.5e0)), 10) AS idf_1,
-    round(ln(1e0 + (count(*) - sum(CASE WHEN tf_2>0 THEN 1 ELSE 0 END) + 0.5e0)
-                 / (sum(CASE WHEN tf_2>0 THEN 1 ELSE 0 END) + 0.5e0)), 10) AS idf_2
-  FROM base
-)
-SELECT doc_id, round(
-    round(idf_0 * (tf_0 * 2.2e0) / (tf_0 + 1.2e0 * (0.25e0 + 0.75e0 * dl / avgdl)), 10)
-  + round(idf_1 * (tf_1 * 2.2e0) / (tf_1 + 1.2e0 * (0.25e0 + 0.75e0 * dl / avgdl)), 10)
-  + round(idf_2 * (tf_2 * 2.2e0) / (tf_2 + 1.2e0 * (0.25e0 + 0.75e0 * dl / avgdl)), 10), 6) AS score
-FROM base, stats
-ORDER BY score DESC, doc_id ASC LIMIT 25
 """,
         # duplicated 3-gram spans: per-doc DISTINCT grams, dup = gram in
         # >= 2 docs (count over per-doc-distinct rows IS the doc count)
@@ -6492,24 +5823,6 @@ FROM documents
             "  CAST(len(list_filter(regexp_split_to_array(text, '\\s+'), t -> len(t) > 0)) AS BIGINT) AS n_ws_tokens\n"
             "FROM aug"
         ).format(aug=_pii_aug_sql(), pat=textfn.PRETOKEN_PATTERN),
-        "docs_length_histogram": """
-WITH b AS (
-  SELECT CAST(min(n_chars) AS DOUBLE) AS blo,
-         CAST(max(n_chars) AS DOUBLE) AS bhi
-  FROM documents WHERE n_chars IS NOT NULL
-), binned AS (
-  SELECT CASE WHEN b.bhi > b.blo
-              THEN least(CAST(floor((CAST(n_chars AS DOUBLE) - b.blo)
-                                    / ((b.bhi - b.blo) / 20)) AS BIGINT), 19)
-              ELSE 0 END AS bin,
-         b.blo, b.bhi
-  FROM documents, b WHERE n_chars IS NOT NULL
-)
-SELECT bin, round(blo + bin * (bhi - blo) / 20, 6) AS lo,
-       round(blo + (bin + 1) * (bhi - blo) / 20, 6) AS hi,
-       CAST(count(*) AS BIGINT) AS n
-FROM binned GROUP BY bin, blo, bhi
-""",
         "docs_chunks": """
 WITH toks AS (
   SELECT doc_id, list_filter(string_split(text, ' '), t -> len(t) > 0) AS arr
@@ -6530,23 +5843,6 @@ SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
        CAST(len(list_slice(arr, s + 1, s + 64)) AS BIGINT) AS n_tokens,
        array_to_string(list_slice(arr, s + 1, s + 64), ' ') AS chunk_text
 FROM kept
-""",
-        "docs_skew_report": """
-WITH counts AS (
-  SELECT coalesce(CAST(source AS VARCHAR), '␀') AS key,
-         CAST(count(*) AS BIGINT) AS n
-  FROM documents GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(n) AS DOUBLE) AS total,
-         CAST(count(*) AS DOUBLE) AS nkeys,
-         CAST(max(n) AS DOUBLE) AS maxn
-  FROM counts
-)
-SELECT key, n, round(n / tot.total, 6) AS share,
-       round(tot.maxn / (tot.total / tot.nkeys), 6) AS skew_factor,
-       CAST(row_number() OVER (ORDER BY n DESC, key ASC) AS BIGINT) AS rank
-FROM counts, tot
-ORDER BY n DESC, key ASC LIMIT 10
 """,
         "cluster_prf": """
 WITH a AS (
@@ -6609,16 +5905,6 @@ SELECT n_items,
          AS bcubed_f1
 FROM t
 """,
-        "profile_documents": _profile_sql(
-            "documents",
-            [
-                ("doc_id", False),
-                ("text", True),
-                ("lang", True),
-                ("source", True),
-                ("n_chars", False),
-            ],
-        ),
         "corpus_split": (
             "SELECT doc_id, CASE {ladder} END AS split FROM (\n"
             "  SELECT doc_id, CAST('0x' || substr(sha256(text), 1, 8) AS BIGINT)\n"
@@ -6772,41 +6058,6 @@ SELECT grid.lang, grid.n,
          AS distinct_ratio
 FROM grid LEFT JOIN u ON u.lang = grid.lang AND u.n = grid.n
 """,
-        # data-quality battery over the deterministically corrupted
-        # orders frame; each count recomputed independently (EXISTS /
-        # GROUP-HAVING / NOT IN), "check" quoted — reserved in DuckDB
-        "audit_orders": """
-WITH bad AS (SELECT * FROM orders ORDER BY o_orderkey LIMIT 3),
-corrupted AS (
-  SELECT * FROM orders
-  UNION ALL SELECT * FROM (SELECT * FROM bad ORDER BY o_orderkey LIMIT 2)
-  UNION ALL SELECT o_orderkey, CAST(-1 AS BIGINT), o_orderstatus,
-                   o_totalprice, o_orderdate, o_orderpriority FROM bad
-  UNION ALL SELECT o_orderkey, o_custkey, 'X', o_totalprice, o_orderdate,
-                   o_orderpriority
-             FROM (SELECT * FROM bad ORDER BY o_orderkey LIMIT 1)
-)
-SELECT * FROM (
-  SELECT 'custkey_fk' AS "check", CAST(count(*) AS BIGINT) AS n_violations
-  FROM corrupted c
-  WHERE c.o_custkey IS NOT NULL
-    AND NOT EXISTS (SELECT 1 FROM customer p WHERE p.c_custkey = c.o_custkey)
-  UNION ALL
-  SELECT 'custkey_not_null', CAST(count(*) AS BIGINT) FROM (
-    SELECT sum(CASE WHEN o_custkey IS NULL THEN 1 END) AS n FROM corrupted
-    UNION ALL
-    SELECT sum(CASE WHEN o_orderkey IS NULL THEN 1 END) FROM corrupted
-  ) WHERE n > 0
-  UNION ALL
-  SELECT 'orderkey_unique', CAST(count(*) AS BIGINT) FROM (
-    SELECT o_orderkey FROM corrupted WHERE o_orderkey IS NOT NULL
-    GROUP BY o_orderkey HAVING count(*) > 1
-  )
-  UNION ALL
-  SELECT 'status_accepted', CAST(count(*) AS BIGINT) FROM corrupted
-  WHERE o_orderstatus IS NOT NULL AND o_orderstatus NOT IN ('O', 'F', 'P')
-) ORDER BY "check"
-""",
         "event_quantiles": """
 SELECT event_type,
        round(quantile_cont(value, 0.5), 6) AS p50,
@@ -6835,7 +6086,6 @@ FROM events GROUP BY 1
     sql["embedding_lsh_incremental"] = sql["embedding_dup_pairs"]
     sql["simhash_incremental"] = sql["simhash_dup_pairs"]
     sql["dup_ngram_stats_incremental"] = sql["dup_ngram_stats"]
-    sql["bm25_topk_indexed"] = sql["bm25_topk"]
     # the full detector oracle nests as a subquery; joined to the gold
     # lang column it becomes the confusion matrix
     sql["lang_confusion"] = (

@@ -220,14 +220,7 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["lexical_cosine_pairs_sec"] = round(time.time() - t0, 3)
     extras["lexical_cosine_n_pairs"] = n_lex
 
-    t0 = time.time()
-    from spacy_llm_spark.functions.relevance import bm25_topk
-
-    bm25_topk(docs, ["spark", "window", "dup"], k=25).count()
-    extras["bm25_topk_sec"] = round(time.time() - t0, 3)
-
-    # round-5 additions: SemDeDup (doubled corpus, 16 cells) and the
-    # stupid-backoff LM self-score
+    # round-5 addition: SemDeDup (doubled corpus, 16 cells)
     t0 = time.time()
     base_emb = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -250,12 +243,6 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["semantic_dedup_n_pairs"] = n_sem
 
     t0 = time.time()
-    from spacy_llm_spark.functions.lm import lm_self_score
-
-    lm_self_score(docs).count()
-    extras["lm_self_score_sec"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -272,7 +259,7 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
     extras["line_dedup_n_removed"] = int(n_line)
 
     # round-5 late families: k-core peeling + personalized pagerank over
-    # the 200k-edge graph and the single-pass profiler
+    # the 200k-edge graph
     t0 = time.time()
     from spacy_llm_spark.operators.graph import k_core
 
@@ -292,12 +279,6 @@ def run_bench(sf_dir: str, cpus: int, replicate: int) -> dict:
 
     personalized_pagerank(chain, seeds, src="src", dst="dst", iters=5).count()
     extras["ppr_200k_edges_5iters_sec"] = round(time.time() - t0, 3)
-
-    t0 = time.time()
-    from spacy_llm_spark.operators.profile import profile_table
-
-    profile_table(docs).count()
-    extras["profile_documents_sec"] = round(time.time() - t0, 3)
 
     # Adamic–Adar link prediction over the 200k-edge chain graph (~every
     # interior vertex is a wedge pivot -> ~200k scored non-adjacent pairs)

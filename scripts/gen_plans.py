@@ -211,41 +211,7 @@ def main():
         explain_str(canonical_edges(triples, vmap)),
     ))
 
-    # 11. BM25 direct path: one stats reduce, scoring projection, TakeOrdered
-    from spacy_llm_spark.functions.relevance import (
-        bm25_index,
-        bm25_query_from_index,
-        bm25_topk,
-    )
-
-    sections.append((
-        "BM25 (direct): ONE stats reduce, scoring as a projection, TakeOrdered",
-        "The corpus stats (N, avgdl, per-term df) reduce to a single row "
-        "(Exchange SinglePartition) that broadcasts back via a 1-row "
-        "IdentityBroadcast cross join; the per-doc score is a pure "
-        "whole-stage-codegen projection; top-k is TakeOrderedAndProject — "
-        "no global Sort materializes the corpus ordering. Two scans of the "
-        "text column, zero corpus-keyed shuffles.",
-        explain_str(bm25_topk(docs, ["spark", "window", "dup"], k=25)),
-    ))
-
-    # 12. BM25 from the persisted inverted index: term-filtered scan
-    postings, doclens = bm25_index(docs)
-    postings.write.mode("overwrite").parquet("/tmp/plans_bm25_postings")
-    doclens.write.mode("overwrite").parquet("/tmp/plans_bm25_doclens")
-    p2 = spark.read.parquet("/tmp/plans_bm25_postings")
-    d2 = spark.read.parquet("/tmp/plans_bm25_doclens")
-    sections.append((
-        "BM25 (indexed): the postings scan is FILTERED to the query terms",
-        "Querying from the persisted inverted index never reads the corpus "
-        "text: look for `PushedFilters: [In(term, ...)]` on the postings "
-        "scan — with a term-bucketed or term-partitioned layout this prunes "
-        "to |terms| slivers of the index. df is a |terms|-group aggregate "
-        "over the pruned scan; doclens is the only doc-scale input.",
-        explain_str(bm25_query_from_index(p2, d2, ["spark", "window", "dup"], k=25)),
-    ))
-
-    # 13. duplicated n-gram spans: projection -> one gram groupBy -> semi-join
+    # 11. duplicated n-gram spans: projection -> one gram groupBy -> semi-join
     from spacy_llm_spark.operators.dedup import duplicated_ngram_stats
 
     sections.append((
@@ -259,7 +225,7 @@ def main():
         explain_str(duplicated_ngram_stats(docs, n=3)),
     ))
 
-    # 14. sparse lexical all-pairs cosine: inverted-index equi-join
+    # 12. sparse lexical all-pairs cosine: inverted-index equi-join
     from spacy_llm_spark.operators.similarity import lexical_cosine_pairs
 
     sections.append((
@@ -272,7 +238,7 @@ def main():
         explain_str(lexical_cosine_pairs(docs, min_sim=0.5, n=3, max_df=100)),
     ))
 
-    # 15. multi-source BFS hop: expand equi-join + visited anti-join
+    # 13. multi-source BFS hop: expand equi-join + visited anti-join
     from spacy_llm_spark.operators.graph import bfs_levels
 
     bfs_edges = spark.createDataFrame(
@@ -291,7 +257,7 @@ def main():
         explain_str(bfs_levels(bfs_edges, bfs_seeds, max_hops=1)),
     ))
 
-    # 16. line dedup: one line-keyed count, anti join, doc reassembly
+    # 14. line dedup: one line-keyed count, anti join, doc reassembly
     from spacy_llm_spark.operators.dedup import (
         remove_duplicated_lines,
         token_window_lines,
@@ -311,21 +277,7 @@ def main():
         ),
     ))
 
-    # 17. single-pass profiler: one scan, one expand, one aggregate
-    from spacy_llm_spark.operators.profile import profile_table
-
-    sections.append((
-        "Table profile: every column's stats in one scan + one aggregate",
-        "All null/distinct/min/max/len statistics ride ONE scan: the "
-        "multi-distinct rewrite is the single Expand above the scan, the "
-        "wide aggregate reduces to one row (Exchange SinglePartition of "
-        "partial aggregates — bytes, not rows), and the per-column "
-        "unpivot is a Generate(stack) over that 1-row frame. Profiling N "
-        "columns costs the same single pass as profiling one.",
-        explain_str(profile_table(docs)),
-    ))
-
-    # 18. Adamic–Adar: equi-joins only, aggregate-fused scoring
+    # 15. Adamic–Adar: equi-joins only, aggregate-fused scoring
     from spacy_llm_spark.operators.graph import adamic_adar
 
     edges_aa = spark.createDataFrame(
@@ -343,7 +295,7 @@ def main():
         explain_str(adamic_adar(edges_aa, min_common=1)),
     ))
 
-    # 19. label propagation: per-round argmax is ONE two-level aggregate.
+    # 16. label propagation: per-round argmax is ONE two-level aggregate.
     # cut_lineage (localCheckpoint per round) would collapse the explain
     # to a Scan ExistingRDD — for the CAPTURE only, the cut still runs
     # (observations on the cut frame, like HITS' L1 total, fire on its
@@ -872,50 +824,6 @@ def main():
         "Untouched entities pass through a left join; no Window, no "
         "driver-side weights.",
         explain_str(te_e),
-    ))
-
-    # Procrustes rotation application: literal coefficients, no UDF
-    from spacy_llm_spark.operators.kgembed import procrustes_align
-
-    pa_src = kgembed.init_embeddings(te_ents.limit(200), "id", dim=8)
-    pa_dst = pa_src.select(
-        "id",
-        F.expr(
-            "transform(sequence(0, 7), j -> element_at(vec, 8 - j)"
-            " * CASE WHEN j % 2 = 0 THEN 1.0D ELSE -1.0D END)"
-        ).alias("vec"),
-    )
-    pa_anchor = pa_src.select(
-        F.col("id").alias("src_id"), F.col("id").alias("dst_id")
-    ).limit(50)
-    pa_rot, _ = procrustes_align(pa_src, pa_dst, pa_anchor)
-    sections.append((
-        "Procrustes rotation: literal codegen coefficients, no UDF, no join",
-        "procrustes_align's apply step (shown): each rotated component "
-        "is a dim-term arithmetic projection whose coefficients are "
-        "LITERALS baked in after the driver-side dim^3 SVD — the table "
-        "never leaves the executors and nothing joins. The dim^2 "
-        "cross-covariance reduced distributedly beforehand (two "
-        "posexplodes + one keyed sum over anchor-scale rows).",
-        explain_str(pa_rot),
-    ))
-
-    # Cardinality audit: one keyed aggregate + broadcast constraint grid
-    from spacy_llm_spark.operators.audit import shape_cardinality_violations
-
-    card_cons = spark.createDataFrame(
-        [("executes", 1, None), ("stores", None, 2)],
-        "pred string, min_count int, max_count int",
-    )
-    sections.append((
-        "Cardinality audit: keyed distinct-count + broadcast grid, no Window",
-        "shape_cardinality_violations: one (subj, pred) distinct-count "
-        "aggregate with map-side partials; the subjects x constraints "
-        "grid is a BroadcastNestedLoopJoin against the VOCABULARY-scale "
-        "constraint table (|subjects| x |constraints| rows — the "
-        "unavoidable linear cost of seeing zero-count missing-property "
-        "subjects); violations emerge from a pure CASE projection.",
-        explain_str(shape_cardinality_violations(trip_upd, card_cons)),
     ))
 
     sections.append((

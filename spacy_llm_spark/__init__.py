@@ -18,9 +18,6 @@ Layout
                           mentions/links/edges tables, vertices, canonical edges
 - ``operators.*``         graph / reason / dedup / similarity / audit /
                           fusion / temporal / kgembed (legacy driver queries)
-- ``operators.profile`` / ``functions.relevance`` / ``functions.lm``
-                          table profiling, BM25, n-gram LM: the legacy driver's
-                          remaining non-KG queries and bench rows
 - ``functions.response_parsers``   response-parser kernels (NER, REL, EL)
 - ``functions.normalizers`` label normalizers
 - ``functions.text`` / ``functions.rdf``  text analysis, RDF serialization

@@ -343,7 +343,7 @@ def vocab_drift(
     Scale shape: one explode + groupBy per slice (map-side partial
     aggregation; token-vocabulary-scale result), one full-outer join of
     the two vocab tables keyed on the token, arithmetic from exact
-    integer counts (engine-deterministic like BM25's avgdl). The
+    integer counts (engine-deterministic). The
     corpora never join each other — only their vocab aggregates do.
     """
     def vocab(df, total_alias, cnt_alias):

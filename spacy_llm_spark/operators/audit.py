@@ -1,28 +1,15 @@
-"""Data-quality audits: the dbt-style test battery as DataFrame ops.
+"""KG quality audits as DataFrame ops.
 
-A 100 TB ingest pipeline runs these continuously — before training
-ever sees a shard — so they are built to the same scale discipline as
-the analytics operators:
-
-- ``uniqueness_violations``: keys appearing more than once. ONE
-  key-keyed aggregate with map-side partials; output is
-  violation-scale, not table-scale.
-- ``fk_violations``: child rows whose foreign key has no parent — a
-  LeftAnti equi-join (AQE broadcasts the parent key set when it is
-  small; at dimension scale it stays a shuffled anti-join). The parent
-  side is deduplicated to its key column first, so the anti-join
-  never carries parent payload columns.
-- ``accepted_values_violations``: rows outside an allowed literal set
-  — a pure scan-level Filter (pushed to parquet when the column is a
-  scan column); the allowed set is a literal, never a join.
-- ``audit_report``: any number of the above folded into ONE tidy
-  (check, n_violations) frame — each check is an independent
-  aggregate, unioned at count scale (k rows for k checks).
-
-NULL semantics follow dbt: a NULL key is reported by the dedicated
-``not_null`` check, not smuggled into uniqueness (NULLs are excluded
-there) or FK checks (a NULL FK is an orphan-by-absence, excluded —
-flag it with ``not_null`` if the column is mandatory).
+- ``triple_shape_violations``: SHACL-style shape validation of a
+  labeled triple table against an ontology of allowed
+  (pred, subj_label, obj_label) combinations. Broadcast lookups on the
+  ontology, one pass over the edges; output is violation-scale.
+- ``induce_ontology``: the inverse, per-predicate domain/range
+  discovery from instance data, with functionality statistics. Its
+  output is the ``shapes`` input ``triple_shape_violations`` wants.
+- ``k_anonymity_violations`` / ``l_diversity_violations``:
+  quasi-identifier groups too small, or too uniform in a sensitive
+  column, to release. One aggregate each.
 
 Reference analogue: none (spacy_llm has no data-quality surface);
 cited for parity accounting only.
@@ -34,91 +21,6 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def uniqueness_violations(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """(keys..., n) for every key tuple appearing more than once.
-    Rows with a NULL in any key column are excluded (dbt semantics —
-    use ``not_null_violations`` for those)."""
-    if not keys:
-        raise ValueError("keys must be non-empty")
-    cond = None
-    for k in keys:
-        c = F.col(k).isNotNull()
-        cond = c if cond is None else (cond & c)
-    return (
-        df.where(cond)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .where(F.col("n") > 1)
-    )
-
-
-def not_null_violations(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """(column, n_null) for every listed column that has NULLs — one
-    scan, all columns counted in a single aggregate."""
-    if not cols:
-        raise ValueError("cols must be non-empty")
-    agg = df.agg(
-        *[
-            F.count(F.when(F.col(c).isNull(), 1)).alias(c)
-            for c in cols
-        ]
-    )
-    stacked = agg.select(
-        F.expr(
-            "stack({n}, {args}) as (column, n_null)".format(
-                n=len(cols),
-                args=", ".join(f"'{c}', `{c}`" for c in cols),
-            )
-        )
-    )
-    return stacked.where(F.col("n_null") > 0)
-
-
-def fk_violations(
-    child: DataFrame,
-    parent: DataFrame,
-    child_key: str,
-    parent_key: str | None = None,
-) -> DataFrame:
-    """Child rows whose ``child_key`` does not exist in the parent's
-    ``parent_key`` (defaults to the same name) — the referential-
-    integrity orphans. NULL foreign keys are excluded (dbt semantics).
-    Output keeps the child's full row for triage."""
-    pk = parent_key or child_key
-    parents = parent.select(F.col(pk).alias(child_key)).distinct()
-    return child.where(F.col(child_key).isNotNull()).join(
-        parents, child_key, "left_anti"
-    )
-
-
-def accepted_values_violations(
-    df: DataFrame, col: str, allowed: Sequence
-) -> DataFrame:
-    """Rows whose ``col`` is outside the ``allowed`` literal set.
-    NULLs are excluded (dbt semantics). The set is a literal isin —
-    a scan-level filter, never a join."""
-    if not allowed:
-        raise ValueError("allowed must be non-empty")
-    return df.where(F.col(col).isNotNull() & ~F.col(col).isin(list(allowed)))
-
-
-def audit_report(checks: dict[str, DataFrame]) -> DataFrame:
-    """Fold named violation frames into ONE (check, n_violations)
-    report, one row per check in name order — each check is counted
-    independently (its own aggregate job), and only the k count rows
-    ever union. A clean table reports 0 rows per check, not absence."""
-    if not checks:
-        raise ValueError("checks must be non-empty")
-    out = None
-    for name in sorted(checks):
-        row = checks[name].agg(
-            F.lit(name).alias("check"),
-            F.count(F.lit(1)).cast("long").alias("n_violations"),
-        )
-        out = row if out is None else out.unionByName(row)
-    return out
 
 
 def triple_shape_violations(
@@ -266,494 +168,6 @@ def induce_ontology(
             F.col("p").alias(pred), "n_triples",
             "domain", "domain_conf", "range", "range_conf",
             "functionality", "inv_functionality",
-        )
-    )
-
-
-def align_predicates(
-    left: DataFrame,
-    right: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    min_overlap: int = 1,
-    include_inverse: bool = False,
-) -> DataFrame:
-    """Instance-based PREDICATE alignment between two KGs — the
-    ontology-alignment step of PARIS (Suchanek et al., VLDB 2012 §5):
-    two predicates align to the degree their distinct ``(subj, obj)``
-    instance-pair sets overlap. For each ``(left_pred, right_pred)``
-    pair sharing >= ``min_overlap`` instance pairs: ``n_overlap``,
-    each side's pair count, ``jaccard``, and the directed containments
-    ``left_in_right`` = P(right | left) (high == left is a
-    SUBPROPERTY of right) and ``right_in_left`` — all fractions 6 dp.
-
-    ``include_inverse=True`` additionally scores every left predicate
-    against the REVERSED right pairs (``direction = 'inv'`` vs
-    ``'fwd'``) — a high inverse containment is ``owl:inverseOf``
-    DISCOVERY from instance data (the declared-inverse input
-    ``operators/reason.owl_entailment`` consumes). Self-alignment
-    (``left is right``) keeps the trivial fwd self-pairs; filter
-    ``left_pred != right_pred`` downstream when only cross-predicate
-    structure matters.
-
-    Scale shape: each side reduces to its distinct (pred, subj, obj)
-    set, the overlap is ONE (subj, obj)-keyed hash equi-join whose
-    output is overlap-scale, and everything after runs at
-    predicate-pair scale (two broadcast-sized per-pred count joins).
-    The inverse variant reuses the SAME left scan against a column-swap
-    of the right — a projection, not a second shuffle of left.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    if min_overlap < 1:
-        raise ValueError(f"min_overlap must be >= 1, got {min_overlap}")
-    lp = left.select(
-        F.col(pred).alias("lp"), F.col(subj).alias("s"), F.col(obj).alias("o")
-    ).distinct()
-    rp = right.select(
-        F.col(pred).alias("rp"), F.col(subj).alias("s"), F.col(obj).alias("o")
-    ).distinct()
-    ln = lp.groupBy("lp").agg(F.count(F.lit(1)).alias("n_left"))
-    rn = rp.groupBy("rp").agg(F.count(F.lit(1)).alias("n_right"))
-
-    def overlap(rside: DataFrame, direction: str) -> DataFrame:
-        return (
-            lp.join(rside, ["s", "o"])
-            .groupBy("lp", "rp")
-            .agg(F.count(F.lit(1)).alias("n_overlap"))
-            .where(F.col("n_overlap") >= min_overlap)
-            .select("lp", "rp", "n_overlap",
-                    F.lit(direction).alias("direction"))
-        )
-
-    out = overlap(rp, "fwd")
-    if include_inverse:
-        out = out.unionByName(
-            overlap(
-                rp.select("rp", F.col("o").alias("s"), F.col("s").alias("o")),
-                "inv",
-            )
-        )
-    return (
-        out.join(ln, "lp").join(rn, "rp")
-        .select(
-            F.col("lp").alias("left_pred"),
-            F.col("rp").alias("right_pred"),
-            "direction", "n_overlap", "n_left", "n_right",
-            F.round(
-                F.col("n_overlap")
-                / (F.col("n_left") + F.col("n_right") - F.col("n_overlap")),
-                6,
-            ).alias("jaccard"),
-            F.round(F.col("n_overlap") / F.col("n_left"), 6)
-            .alias("left_in_right"),
-            F.round(F.col("n_overlap") / F.col("n_right"), 6)
-            .alias("right_in_left"),
-        )
-    )
-
-
-def _entity_features(
-    df: DataFrame, subj: str, pred: str, obj: str, include_incoming: bool
-) -> DataFrame:
-    """Distinct (e, dir, p, v) assertion features of a triple frame —
-    outgoing (pred, obj) per subject and, with ``include_incoming``,
-    incoming (pred, subj) per object. Shared by :func:`align_entities`
-    and the persisted-index forms so both compute identical features."""
-    de = df.select(subj, pred, obj).distinct()
-    out = de.select(
-        F.col(subj).alias("e"), F.lit("out").alias("dir"),
-        F.col(pred).alias("p"), F.col(obj).alias("v"),
-    )
-    if include_incoming:
-        out = out.unionByName(
-            de.select(
-                F.col(obj).alias("e"), F.lit("in").alias("dir"),
-                F.col(pred).alias("p"), F.col(subj).alias("v"),
-            )
-        )
-    return out.distinct()
-
-
-def align_entities(
-    left: DataFrame,
-    right: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    max_feature_df: int = 1000,
-    min_shared: int = 1,
-    include_incoming: bool = True,
-    exclude_self: bool = False,
-    quantum: int = 10,
-) -> DataFrame:
-    """Instance-based ENTITY alignment across two KGs — the sameAs-
-    candidate scorer completing :func:`align_predicates` (PARIS-style
-    evidence, additively simplified): a left and a right entity score
-    by the assertion FEATURES they share, each feature discounted by
-    how common it is (the Adamic–Adar rare-evidence principle — two
-    entities sharing ``bornIn -> smallville`` is strong evidence,
-    sharing ``type -> person`` is none).
-
-    A feature is an outgoing ``(pred, obj)`` — and, with
-    ``include_incoming`` (default), an incoming ``(pred, subj)`` — of
-    a distinct triple. Feature document-frequency ``df`` counts the
-    DISTINCT carrying entities across BOTH sides; features with
-    ``df > max_feature_df`` are dropped (ubiquitous features carry no
-    signal AND would quadratically blow up the join — the same
-    hot-bucket cap discipline as the LSH families, and here the cap is
-    also the precision lever). Each surviving shared feature adds
-    ``1/ln(1 + df)`` (quantized ``quantum`` dp pre-sum — both engines
-    then sum bit-comparable addends); pairs return with ``n_shared``
-    and ``score`` (6 dp) when ``n_shared >= min_shared``.
-    ``exclude_self`` drops identity pairs for self-alignment runs.
-
-    Output is candidate-scale: feed it a min-struct argmax / mutual-
-    best filter for final sameAs links, or the streaming pipe for
-    incremental re-scoring. Scale shape: two distinct projections,
-    one (feature)-keyed df aggregate, one feature-keyed equi-join
-    whose per-feature fan-out the cap bounds, one pair-keyed sum.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    if max_feature_df < 1:
-        raise ValueError(f"max_feature_df must be >= 1, got {max_feature_df}")
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-
-    def feats(df: DataFrame, side: str) -> DataFrame:
-        return _entity_features(
-            df, subj, pred, obj, include_incoming
-        ).withColumn("side", F.lit(side))
-
-    fl = feats(left, "l")
-    fr = feats(right, "r")
-    dfreq = (
-        fl.unionByName(fr)
-        .groupBy("dir", "p", "v")
-        .agg(F.countDistinct("side", "e").alias("df"))
-        .where(F.col("df") <= max_feature_df)
-        .select(
-            "dir", "p", "v",
-            F.round(1.0 / F.log(1.0 + F.col("df")), quantum).alias("w"),
-        )
-    )
-    pairs = (
-        fl.select(F.col("e").alias("left_id"), "dir", "p", "v")
-        .join(dfreq, ["dir", "p", "v"])
-        .join(
-            fr.select(F.col("e").alias("right_id"), "dir", "p", "v"),
-            ["dir", "p", "v"],
-        )
-    )
-    if exclude_self:
-        pairs = pairs.where(F.col("left_id") != F.col("right_id"))
-    return (
-        pairs.groupBy("left_id", "right_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shared"),
-            F.round(F.sum("w"), 6).alias("score"),
-        )
-        .where(F.col("n_shared") >= int(min_shared))
-    )
-
-
-def mutual_best_alignment(
-    scores: DataFrame,
-    left_id: str = "left_id",
-    right_id: str = "right_id",
-    score: str = "score",
-) -> DataFrame:
-    """Greedy 1:1 link selection over an alignment-score frame
-    (:func:`align_entities` output or any ``(left, right, score)``
-    candidates): keep exactly the pairs where each side is the other's
-    BEST match — the standard mutual-best-match sameAs decision rule
-    (stable against the one-sided hub absorption a plain per-left
-    argmax suffers). Ties break toward the lexicographically smallest
-    partner id (min-struct discipline), so the result is deterministic.
-
-    Two key-scale min-struct aggregates (no Window) + one equi-join of
-    their agreeing halves; output is link-scale.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-
-    def best(frame: DataFrame, key: str, other: str, out: str) -> DataFrame:
-        return frame.groupBy(key).agg(
-            F.min(
-                F.struct(
-                    (-F.col(score)).alias("neg"), F.col(other).alias("pick")
-                )
-            ).alias(out)
-        )
-
-    lb = best(scores, left_id, right_id, "_lb")
-    rb = best(scores, right_id, left_id, "_rb")
-    return (
-        lb.select(
-            left_id, F.col("_lb.pick").alias(right_id),
-            F.round(-F.col("_lb.neg"), 6).alias(score),
-        )
-        .join(
-            rb.select(F.col("_rb.pick").alias(left_id), right_id),
-            [left_id, right_id],
-        )
-    )
-
-
-def alignment_index(
-    right: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    include_incoming: bool = True,
-) -> DataFrame:
-    """The PERSISTED standing-side artifact for incremental entity
-    alignment: the right corpus's distinct features
-    ``(right_id, dir, p, v)`` with the per-feature right-side entity
-    count ``df_r`` — everything a probe needs, so the right corpus is
-    never re-scanned. Because :func:`align_entities`' feature frequency
-    counts distinct ``(side, entity)`` it is SIDE-SEPARABLE:
-    ``df = df_r (from this index) + df_batch (computed on the probe
-    batch alone)``, which is what makes
-    :func:`align_entities_probe` EXACTLY equal to a full
-    ``align_entities(batch, right)`` — the strong equivalence, not the
-    stale-index approximation. Stamped with the engine-wide
-    ``_fmt_*`` column-name discipline (format + ``include_incoming``
-    baked in; df caps are probe-time parameters and stay free)."""
-    from .dedup import LSH_INDEX_FORMAT, _index_stamp
-
-    fr = _entity_features(right, subj, pred, obj, include_incoming)
-    dfr = fr.groupBy("dir", "p", "v").agg(
-        F.countDistinct("e").alias("df_r")
-    )
-    stamp = _index_stamp("alif", inc=int(include_incoming))
-    return (
-        fr.select(F.col("e").alias("right_id"), "dir", "p", "v")
-        .join(dfr, ["dir", "p", "v"])
-        .withColumn(stamp, F.lit(LSH_INDEX_FORMAT))
-    )
-
-
-def alignment_index_append(
-    index: DataFrame,
-    batch: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    include_incoming: bool = True,
-) -> DataFrame:
-    """Merge a new standing-side batch into a persisted
-    :func:`alignment_index` WITHOUT re-reading the old corpus: union
-    the old feature rows with the batch's, recount ``df_r`` per
-    feature (index-scale work), restamp. Bit-equal to rebuilding from
-    the concatenated corpus (test-pinned) — the house incremental
-    contract."""
-    from .dedup import _check_index_format, _index_stamp
-
-    stamp = _index_stamp("alif", inc=int(include_incoming))
-    _check_index_format(index, "alignment_index_append", stamp)
-    old = index.select("right_id", "dir", "p", "v")
-    new = _entity_features(batch, subj, pred, obj, include_incoming).select(
-        F.col("e").alias("right_id"), "dir", "p", "v"
-    )
-    merged = old.unionByName(new).distinct()
-    dfr = merged.groupBy("dir", "p", "v").agg(
-        F.countDistinct("right_id").alias("df_r")
-    )
-    from .dedup import LSH_INDEX_FORMAT
-
-    return merged.join(dfr, ["dir", "p", "v"]).withColumn(
-        stamp, F.lit(LSH_INDEX_FORMAT)
-    )
-
-
-def align_entities_probe(
-    batch: DataFrame,
-    index: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    max_feature_df: int = 1000,
-    min_shared: int = 1,
-    include_incoming: bool = True,
-    exclude_self: bool = False,
-    quantum: int = 10,
-) -> DataFrame:
-    """Incremental entity alignment: score a probe batch against a
-    persisted :func:`alignment_index` — EXACTLY
-    ``align_entities(batch, right_corpus)`` (side-separable df, see
-    the index docstring; equivalence test-pinned) at batch cost. The
-    stamp refuses an index built with a different format or
-    ``include_incoming`` BEFORE any probe-side work."""
-    from .dedup import _check_index_format, _index_stamp
-
-    if max_feature_df < 1:
-        raise ValueError(f"max_feature_df must be >= 1, got {max_feature_df}")
-    if min_shared < 1:
-        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
-    stamp = _index_stamp("alif", inc=int(include_incoming))
-    _check_index_format(index, "align_entities_probe", stamp)
-    fl = _entity_features(batch, subj, pred, obj, include_incoming)
-    dfl = fl.groupBy("dir", "p", "v").agg(
-        F.countDistinct("e").alias("df_l")
-    )
-    pairs = (
-        fl.select(F.col("e").alias("left_id"), "dir", "p", "v")
-        .join(dfl, ["dir", "p", "v"])
-        .join(
-            index.select("right_id", "dir", "p", "v", "df_r"),
-            ["dir", "p", "v"],
-        )
-        .withColumn("_df", F.col("df_l") + F.col("df_r"))
-        .where(F.col("_df") <= max_feature_df)
-        .withColumn(
-            "w", F.round(1.0 / F.log(1.0 + F.col("_df")), quantum)
-        )
-    )
-    if exclude_self:
-        pairs = pairs.where(F.col("left_id") != F.col("right_id"))
-    return (
-        pairs.groupBy("left_id", "right_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_shared"),
-            F.round(F.sum("w"), 6).alias("score"),
-        )
-        .where(F.col("n_shared") >= int(min_shared))
-    )
-
-
-def shape_cardinality_violations(
-    edges: DataFrame,
-    constraints: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-) -> DataFrame:
-    """SHACL-core cardinality validation, the counting complement of
-    ``triple_shape_violations``' class checks: ``constraints`` lists
-    ``(pred, min_count, max_count)`` — per SUBJECT bounds on distinct
-    objects (sh:minCount / sh:maxCount; NULL = unbounded on that
-    side). Every ``(subj, pred)`` outside its bounds returns with the
-    observed ``n_objects``, the violated bound, and ``kind``
-    ('min_count' | 'max_count'). minCount violations include subjects
-    with ZERO objects for a constrained predicate — entities missing a
-    required property entirely — via the subject-universe × constraint
-    grid anti-semantics (a subject is anyone appearing in subject
-    position anywhere; grid rows are |subjects| x |constraints|,
-    vocabulary-bounded on one side).
-
-    One (subj, pred)-keyed distinct-count aggregate, one broadcast
-    join of the vocabulary-scale constraint table, one
-    subjects x constraints grid for the zero-count rule — output is
-    violation-scale. Constraints with NULL pred, non-positive bounds,
-    or min > max raise at build time (a malformed bound would silently
-    allow everything).
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    for c in ("min_count", "max_count"):
-        if c not in constraints.columns:
-            raise ValueError(f"constraints is missing column {c!r}")
-    con = constraints.select(
-        F.col(pred).alias("p"),
-        F.col("min_count").cast("long").alias("lo"),
-        F.col("max_count").cast("long").alias("hi"),
-    )
-    bad = con.where(
-        F.col("p").isNull()
-        | (F.col("lo").isNotNull() & (F.col("lo") < 0))
-        | (F.col("hi").isNotNull() & (F.col("hi") < 1))
-        | (
-            F.col("lo").isNotNull()
-            & F.col("hi").isNotNull()
-            & (F.col("lo") > F.col("hi"))
-        )
-    ).count()  # bounded: vocabulary-scale frame
-    if bad:
-        raise ValueError(
-            f"constraints has {bad} malformed row(s): pred must be "
-            "non-NULL, min_count >= 0, max_count >= 1, min <= max"
-        )
-    counts = (
-        edges.select(F.col(subj).alias("s"), F.col(pred).alias("p"),
-                     F.col(obj).alias("o"))
-        .groupBy("s", "p")
-        .agg(F.countDistinct("o").alias("n_objects"))
-    )
-    subjects = edges.select(F.col(subj).alias("s")).distinct()
-    grid = subjects.crossJoin(F.broadcast(con))
-    observed = grid.join(counts, ["s", "p"], "left").withColumn(
-        "n_objects", F.coalesce("n_objects", F.lit(0))
-    )
-    viol = observed.select(
-        "s", "p", "n_objects",
-        F.when(
-            F.col("lo").isNotNull() & (F.col("n_objects") < F.col("lo")),
-            F.struct(F.lit("min_count").alias("kind"),
-                     F.col("lo").alias("bound")),
-        ).when(
-            F.col("hi").isNotNull() & (F.col("n_objects") > F.col("hi")),
-            F.struct(F.lit("max_count").alias("kind"),
-                     F.col("hi").alias("bound")),
-        ).alias("_v"),
-    ).where(F.col("_v").isNotNull())
-    return viol.select(
-        F.col("s").alias(subj), F.col("p").alias(pred),
-        "n_objects",
-        F.col("_v.kind").alias("kind"), F.col("_v.bound").alias("bound"),
-    )
-
-
-def summarize_entities(
-    triples: DataFrame,
-    k: int = 5,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-) -> DataFrame:
-    """Entity summarization — the top-``k`` most CHARACTERISTIC facts
-    per entity (the entity-card / preview problem; RELIN-family
-    informativeness, simplified to the same rare-evidence weight the
-    alignment ops use): a fact ``(s, p, o)`` is informative to the
-    degree its ``(p, o)`` value is rare across entities —
-    ``informativeness = 1/ln(1 + df)`` with ``df`` = distinct subjects
-    carrying that (pred, obj), 10 dp. ``type -> person`` (df = corpus)
-    ranks last; ``bornIn -> smallville`` (df = 2) ranks first. Output:
-    ``(subj, pred, obj, informativeness, rank)``, rank 1..k per
-    subject, ties broken (pred, obj) lexicographic — deterministic.
-
-    One (pred, obj)-keyed df aggregate joined back (value-scale), then
-    a subject-PARTITIONED row_number — partitioned windows shuffle
-    once on the subject and never sort globally; per-partition state
-    is one counter.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    from pyspark.sql import Window
-
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    de = triples.select(
-        F.col(subj).alias("s"), F.col(pred).alias("p"), F.col(obj).alias("o")
-    ).distinct()
-    dfreq = de.groupBy("p", "o").agg(F.countDistinct("s").alias("df"))
-    w = Window.partitionBy("s").orderBy(
-        F.desc("informativeness"), F.col("p"), F.col("o")
-    )
-    return (
-        de.join(dfreq, ["p", "o"])
-        .withColumn(
-            "informativeness",
-            F.round(1.0 / F.log(1.0 + F.col("df")), 10),
-        )
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= int(k))
-        .select(
-            F.col("s").alias(subj), F.col("p").alias(pred),
-            F.col("o").alias(obj), "informativeness",
-            F.col("rank").cast("long").alias("rank"),
         )
     )
 

@@ -425,8 +425,8 @@ def incremental_components(
     carry the full historical connectivity), minus two joins and a
     union. The slice count rides the lineage-cut materialization via
     ``df.observe`` (no extra scan); the only added job is one
-    node-scale count. scripts/bench_incremental.py --adversarial
-    records the measured crossover.
+    node-scale count. BENCH/INCREMENTAL_r5.md §1 records the measured
+    crossover (adversarial touch, sliced vs fallback vs full).
     """
     labels = labels.select("node", "component")
     new_edges = new_edges.select("src", "dst")

@@ -4376,212 +4376,6 @@ def degree_histogram(
     )
 
 
-# topological_levels strategy switch: below this many distinct edges the
-# longest-path doubling form (O(log depth) jobs) replaces the Kahn peel
-# (O(depth) jobs). Doubling materializes root-reachability pairs —
-# worst-case quadratic on deep graphs — so corpus-scale inputs keep the
-# edge-linear peel.
-_TOPO_DOUBLING_MAX_EDGES = 262_144
-
-
-def _topological_levels_doubling(
-    rem: DataFrame, n_edges: int, max_rounds: int
-) -> DataFrame:
-    """Longest-path layering via (s, t, max_len) path doubling — the
-    small-graph strategy of :func:`topological_levels` (same contract:
-    level(v) = longest path from any in-degree-0 root; ValueError on a
-    cycle, certified by a walk of length >= |V|). ``rem`` is the cut,
-    distinct, self-loop-free (s, t) edge set."""
-    import math
-
-    from pyspark.sql import Observation
-
-    all_v = fs.cut_lineage(
-        rem.select(F.col("s").alias("v"))
-        .union(rem.select(F.col("t").alias("v")))
-        .distinct()
-    )
-    n_v = all_v.count()
-    d = rem.select("s", "t", F.lit(1).cast("long").alias("len"))
-    sig = (n_edges, n_edges)  # (n_pairs, sum_len) fixpoint signature
-    # doubling covers depth 2^i after i rounds; a DAG's depth is < |V|
-    # and cycles certify within the same budget, so the bound is log|V|
-    budget = max(2, math.ceil(math.log2(max(2, n_v))) + 2)
-    for _ in range(budget):
-        left = d.select(
-            F.col("s"), F.col("t").alias("__m"), F.col("len").alias("__ll")
-        )
-        right = d.select(
-            F.col("s").alias("__m"), F.col("t"), F.col("len").alias("__lr")
-        )
-        obs = Observation()
-        nxt = (
-            d.unionByName(
-                left.join(right, "__m").select(
-                    "s", "t", (F.col("__ll") + F.col("__lr")).alias("len")
-                )
-            )
-            .groupBy("s", "t")
-            .agg(F.max("len").alias("len"))
-            .observe(
-                obs,
-                F.count(F.lit(1)).alias("n"),
-                F.sum("len").alias("sl"),
-                F.max("len").alias("ml"),
-            )
-        )
-        nxt = fs.cut_lineage(nxt)
-        got = obs.get
-        if got["ml"] >= n_v:
-            # pigeonhole: a walk of length >= |V| repeats a vertex
-            raise ValueError(
-                "topological_levels: the graph contains a cycle "
-                f"(a walk of length {got['ml']} over {n_v} vertices); "
-                "condense SCCs first (strongly_connected_components) "
-                "or layer an acyclic subset"
-            )
-        d = nxt
-        depth = int(got["ml"])
-        if (got["n"], got["sl"]) == sig:
-            break
-        sig = (got["n"], got["sl"])
-    else:
-        raise RuntimeError(
-            "topological_levels: longest-path doubling did not converge "
-            f"within {budget} rounds — unexpected on an acyclic input"
-        )
-    if depth + 1 > max_rounds:
-        # same budget contract as the peel strategy: a depth-d layering
-        # uses d+1 peel rounds, so refuse identically
-        raise RuntimeError(
-            f"topological_levels did not converge within max_rounds="
-            f"{max_rounds}; the longest dependency chain is deeper — raise "
-            "max_rounds (each round peels >= 1 vertex, so max_rounds=|V| "
-            "always suffices on a DAG)"
-        )
-    roots = all_v.join(
-        rem.select(F.col("t").alias("v")).distinct(), "v", "left_anti"
-    )
-    from_roots = (
-        d.join(roots.select(F.col("v").alias("s")), "s", "left_semi")
-        .groupBy("t")
-        .agg(F.max("len").alias("level"))
-        .select(F.col("t").alias("vertex"), "level")
-    )
-    return roots.select(
-        F.col("v").alias("vertex"), F.lit(0).cast("long").alias("level")
-    ).unionByName(from_roots)
-
-
-def topological_levels(
-    edges: DataFrame,
-    src: str = "subj",
-    dst: str = "obj",
-    max_rounds: int = 1000,
-) -> DataFrame:
-    """(vertex, level): Kahn-style topological layering of a DAG —
-    level(v) = length of the LONGEST path from any root (in-degree-0
-    vertex) to v, the build-order / dependency-depth primitive for
-    import graphs and ontology hierarchies.
-
-    Synchronous peel rounds: round r assigns level r to every vertex
-    whose unpeeled in-degree is 0, then removes its outgoing edges.
-    A vertex is peeled exactly when its last predecessor was peeled in
-    the previous round, so the round index IS the longest-path depth —
-    which is what makes the synchronous distributed rounds exact.
-
-    Scale shape: per round ONE distinct over the remaining edges' dst
-    column (vertex-scale, map-side combined) + two anti-joins keyed on
-    the vertex id; the edge set shrinks monotonically and is
-    lineage-cut per round with the remaining-edge count observed
-    DURING the cut (``df.observe`` — zero extra scans, same discipline
-    as ``k_core``). Rounds = longest-path depth, so dependency graphs
-    (depth tens) converge fast; a pathological chain needs depth
-    rounds, which ``max_rounds`` bounds.
-
-    CYCLES ARE REFUSED: a round that peels nobody while edges remain
-    means every remaining vertex has an unpeeled predecessor — a cycle
-    — and a partial layering would silently misreport depths, so the
-    operator raises instead (condense SCCs first — see
-    ``strongly_connected_components`` — if a cyclic graph needs
-    layering).
-
-    Two physical strategies behind the same contract (a driver-known
-    INPUT-count switch — never a semantic one): small edge sets
-    (< ``_TOPO_DOUBLING_MAX_EDGES``) use longest-path PATH DOUBLING —
-    level(v) is the longest path from any root, so closing (s, t,
-    max_len) pairs in O(log depth) rounds and max-reducing per target
-    gives the identical layering in ~6 jobs where a 60-deep dependency
-    graph pays 60 peel rounds of driver latency; a walk of length
-    >= |V| certifies a cycle (pigeonhole), raising the same ValueError.
-    Large edge sets keep the Kahn peel: doubling materializes the
-    all-pairs root-reachability relation, which is quadratic on deep
-    corpus-scale graphs, while peeling stays edge-linear per round.
-
-    Reference analogue: none — driver-memory KBs (reference
-    spacy_llm/tasks/entity_linker/registry.py) cannot express
-    corpus-scale dependency layering; cited for parity accounting only.
-    """
-    from pyspark.sql import Observation
-
-    rem = fs.cut_lineage(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("t"))
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-    )
-    n_edges = rem.count()
-    if 0 < n_edges < _TOPO_DOUBLING_MAX_EDGES:
-        return _topological_levels_doubling(rem, n_edges, max_rounds)
-    unassigned = fs.cut_lineage(
-        rem.select(F.col("s").alias("v"))
-        .union(rem.select(F.col("t").alias("v")))
-        .distinct()
-    )
-    assigned = None
-    for rnd in range(max_rounds):
-        # zero-in-degree = unassigned vertices that are no remaining dst
-        zero = unassigned.join(
-            rem.select(F.col("t").alias("v")).distinct(), "v", "left_anti"
-        )
-        layer = zero.withColumn("level", F.lit(rnd).cast("long"))
-        # assigned stays a PLAIN union of already-cut layer frames
-        # (same reasoning as bfs_levels.visited)
-        cut_layer = fs.cut_lineage(layer)
-        assigned = (
-            cut_layer if assigned is None else assigned.unionByName(cut_layer)
-        )
-        if n_edges == 0:
-            # everything still unassigned is in-degree 0 by definition;
-            # the layer above was final
-            return assigned.select("v", "level").withColumnRenamed(
-                "v", "vertex"
-            )
-        obs = Observation()
-        nxt = rem.join(
-            cut_layer.select(F.col("v").alias("s")), "s", "left_anti"
-        ).observe(obs, F.count(F.lit(1)).alias("n"))
-        nxt = fs.cut_lineage(nxt)
-        n_next = obs.get["n"]
-        if n_next == n_edges:
-            # nobody peeled but edges remain -> cycle
-            raise ValueError(
-                "topological_levels: the graph contains a cycle "
-                f"({n_next} edges form strongly connected structure); "
-                "condense SCCs first (strongly_connected_components) "
-                "or layer an acyclic subset"
-            )
-        unassigned = fs.cut_lineage(
-            unassigned.join(cut_layer.select("v"), "v", "left_anti")
-        )
-        rem, n_edges = nxt, n_next
-    raise RuntimeError(
-        f"topological_levels did not converge within max_rounds="
-        f"{max_rounds}; the longest dependency chain is deeper — raise "
-        "max_rounds (each round peels >= 1 vertex, so max_rounds=|V| "
-        "always suffices on a DAG)"
-    )
-
-
 def minimum_spanning_forest(
     edges: DataFrame,
     src: str = "subj",

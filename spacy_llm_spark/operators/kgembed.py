@@ -296,167 +296,3 @@ def transe_epoch(
     new_ent = fs.cut_lineage(apply(ent, ent_contrib, normalize))
     new_rel = fs.cut_lineage(apply(rel, rel_contrib, False))
     return new_ent, new_rel
-
-
-def procrustes_align(
-    src: DataFrame,
-    dst: DataFrame,
-    anchors: DataFrame,
-    src_id: str = "src_id",
-    dst_id: str = "dst_id",
-    id_col: str = "id",
-    vec: str = "vec",
-    quantum: int = 6,
-):
-    """Orthogonal Procrustes alignment of two embedding SPACES — the
-    vector-space half of cross-KG entity matching (MUSE, Conneau et
-    al. 2018; Schönemann 1966): given anchor pairs (seed translations
-    — :func:`..audit.mutual_best_alignment` output is the natural
-    source), find the orthogonal rotation ``R = U Vᵀ`` from the SVD of
-    the anchor cross-covariance ``M = Σ x yᵀ`` that best maps the
-    source space onto the destination space, and return
-    ``(rotated_src, R)`` — rotated vectors quantized ``quantum`` dp.
-
-    Distribution shape: M is a ``dim x dim`` matrix — the ONLY
-    driver-side object. Its entries reduce distributedly (two
-    posexplodes over the anchor-scale join = ``|anchors| x dim²``
-    contribution rows, each quantized 10 dp pre-sum — order-free), the
-    SVD runs on the driver at ``dim³`` cost (microseconds for any
-    sane embedding dim), and R re-enters the plan as LITERAL
-    coefficients: each rotated component is a ``dim``-term codegen
-    expression — no UDF, no broadcast join, the full table never
-    leaves the executors.
-
-    Anchors referencing ids missing from either table raise (silent
-    drops would skew M toward whatever survived).
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    import numpy as np
-
-    sv = src.select(F.col(id_col).alias("_sid"), F.col(vec).alias("_sv"))
-    dv = dst.select(F.col(id_col).alias("_did"), F.col(vec).alias("_dv"))
-    an = anchors.select(
-        F.col(src_id).alias("_sid"), F.col(dst_id).alias("_did")
-    ).distinct()
-    n_anchors = an.count()
-    if n_anchors == 0:
-        raise ValueError("procrustes_align: anchors is empty")
-    joined = an.join(sv, "_sid").join(dv, "_did")
-    n_joined = joined.count()
-    if n_joined != n_anchors:
-        raise ValueError(
-            f"procrustes_align: {n_anchors - n_joined} anchor(s) "
-            "reference ids missing from src or dst embeddings"
-        )
-    cells = (
-        joined.select(
-            F.posexplode("_sv").alias("_i", "_x"), F.col("_dv")
-        )
-        .select("_i", "_x", F.posexplode("_dv").alias("_j", "_y"))
-        .groupBy("_i", "_j")
-        .agg(F.sum(F.round(F.col("_x") * F.col("_y"), 10)).alias("_m"))
-        .collect()
-    )
-    dim = max(c._i for c in cells) + 1
-    M = np.zeros((dim, dim))
-    for c in cells:
-        M[c._i][c._j] = c._m
-    U, _, Vt = np.linalg.svd(M)
-    R = U @ Vt  # orthogonal, det +-1; deterministic for fixed M
-
-    rot_cols = [
-        # + 0.0 normalizes the sign of zero: rotation noise can land
-        # on -0.0, which is a DIFFERENT repr than 0.0 to row hashers
-        F.round(
-            sum(
-                F.element_at(vec, i + 1) * float(R[i][j])
-                for i in range(dim)
-            ),
-            quantum,
-        ) + F.lit(0.0)
-        for j in range(dim)
-    ]
-    rotated = src.select(F.col(id_col), F.array(*rot_cols).alias(vec))
-    return rotated, R
-
-
-def aggregate_neighbors(
-    features: DataFrame,
-    edges: DataFrame,
-    direction: str = "in",
-    id_col: str = "id",
-    vec: str = "vec",
-    src: str = "subj",
-    dst: str = "obj",
-    quantum: int = 8,
-) -> DataFrame:
-    """One round of mean neighborhood aggregation — the message-passing
-    primitive under GraphSAGE-mean / GCN-style feature propagation
-    (Hamilton et al. 2017), KG reading: smooth entity features over
-    the graph, or build structure-aware inputs for a downstream
-    classifier. For each vertex with >= 1 neighbor, the element-wise
-    MEAN of its neighbors' vectors plus ``n_neighbors``; ``direction``
-    picks the neighbor set (``in`` = sources of in-edges, ``out`` =
-    targets of out-edges, ``both`` = union, duplicates collapsed so a
-    reciprocal edge is one neighbor). Vertices without neighbors are
-    ABSENT from the output (a mean over nothing is not a zero vector)
-    — left-join + coalesce downstream to keep them.
-
-    Determinism: each contribution is quantized ``quantum`` dp pre-sum
-    (addends differ per neighbor — the DSIR rule); the mean is the
-    ROUNDED SUM divided by the count, with NO post-division rounding —
-    a mean of k quantized values sits exactly on a half-quantum
-    boundary whenever k is even, where HALF_UP (Spark) and the C
-    rounding (DuckDB) disagree, while the quantized sum is tie-free
-    and identical doubles divide identically in both engines. Shape: one neighbor-pair distinct, one
-    features equi-join, ONE posexplode to (vertex, component) rows —
-    the same honest dim-x cost as ``transe_epoch`` — and one keyed
-    avg re-assembled via array_sort(collect_list).
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    if direction not in ("in", "out", "both"):
-        raise ValueError(
-            f"direction must be in/out/both, got {direction!r}"
-        )
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_t"))
-    if direction == "in":
-        nbr = e.select(F.col("_t").alias("_v"), F.col("_s").alias("_n"))
-    elif direction == "out":
-        nbr = e.select(F.col("_s").alias("_v"), F.col("_t").alias("_n"))
-    else:
-        nbr = e.select(
-            F.col("_t").alias("_v"), F.col("_s").alias("_n")
-        ).unionByName(
-            e.select(F.col("_s").alias("_v"), F.col("_t").alias("_n"))
-        )
-    nbr = nbr.where(F.col("_v") != F.col("_n")).distinct()
-    fv = features.select(F.col(id_col).alias("_n"), F.col(vec).alias("_nv"))
-    cells = (
-        nbr.join(fv, "_n")
-        .select(
-            "_v",
-            F.posexplode(
-                F.transform("_nv", lambda x: F.round(x, quantum))
-            ).alias("_j", "_x"),
-        )
-        .groupBy("_v", "_j")
-        .agg(
-            (
-                F.round(F.sum("_x"), quantum) / F.count(F.lit(1))
-            ).alias("_m"),
-            F.count(F.lit(1)).alias("_n_nbr"),
-        )
-    )
-    return (
-        cells.groupBy("_v")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_j", "_m"))),
-                lambda s: s["_m"],
-            ).alias(vec),
-            F.max("_n_nbr").alias("n_neighbors"),
-        )
-        .select(F.col("_v").alias(id_col), vec, "n_neighbors")
-    )

@@ -299,40 +299,6 @@ def test_bfs_levels_duplicate_seeds_and_min_level(spark):
     assert got == {"s": 0, "a": 1, "b": 1}
 
 
-# ---------------------------------------------------------------- bm25
-
-def test_bm25_rare_term_outranks_common(spark):
-    """A doc matching the rare query term outscores a doc matching the
-    corpus-saturating term (idf ordering), and tf raises the score."""
-    from spacy_llm_spark.functions.relevance import bm25_scores
-
-    rows = [(i, "common filler words here") for i in range(20)]
-    rows += [(100, "rare common filler words"), (101, "rare rare filler words"),
-             (102, "common filler other words")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {r["doc_id"]: r["score"] for r in
-           bm25_scores(docs, ["rare", "common"]).collect()}
-    assert len(got) == 23  # every doc present, zero-score included
-    assert got[101] > got[100] > got[102] > 0.0
-    # docs without either term would score 0; all docs here have >=1 term
-    assert all(v >= 0.0 for v in got.values())
-
-
-def test_bm25_empty_terms_raise_and_topk_ties(spark):
-    from spacy_llm_spark.functions.relevance import bm25_scores, bm25_topk
-
-    docs = spark.createDataFrame(
-        [(2, "t x"), (1, "t x"), (3, "y z")], "doc_id long, text string"
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        bm25_scores(docs, [])
-    top = bm25_topk(docs, ["t"], k=2).collect()
-    # identical scores tie-break by ascending doc_id
-    assert [r["doc_id"] for r in top] == [1, 2]
-
-
 # ------------------------------------------------- duplicated n-grams
 
 def test_duplicated_ngram_stats_hand_case(spark):
@@ -368,99 +334,6 @@ def test_duplicated_ngram_stats_min_docs_threshold(spark):
     assert all(r["n_dup_grams"] == 0 for r in strict)
     loose = duplicated_ngram_stats(docs, n=3, min_docs=3).collect()
     assert all(r["n_dup_grams"] == 1 and r["dup_ratio"] == 1.0 for r in loose)
-
-
-def test_tfidf_keywords_hand_case(spark):
-    """Doc-discriminating terms outrank corpus-wide ones; min_df and
-    max_df_frac prune the tails; rank ties break by term; reference
-    parity against a pure-Python recompute of the same formula."""
-    import math
-
-    from spacy_llm_spark.functions.relevance import tfidf_keywords
-
-    rows = [
-        (0, "apple banana apple common"),
-        (1, "banana cherry common"),
-        (2, "cherry dates common"),
-        (3, "common only here zebra"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id bigint, text string")
-    got = tfidf_keywords(docs, k=2, min_df=2).collect()
-
-    # pure-Python reference of the exact formula (smoothed idf, 10/6 dp)
-    toks = {i: t.split() for i, t in rows}
-    n = len(rows)
-    df = {}
-    for tk in toks.values():
-        for t in set(tk):
-            df[t] = df.get(t, 0) + 1
-    want = {}
-    for i, tk in toks.items():
-        scored = []
-        for t in set(tk):
-            if df[t] < 2:
-                continue
-            idf = round(math.log((1 + n) / (1 + df[t])) + 1, 10)
-            scored.append((round(round(tk.count(t) * idf, 10), 6), t))
-        scored.sort(key=lambda s: (-s[0], s[1]))
-        for r, (sc, t) in enumerate(scored[:2], 1):
-            want[(i, t)] = (tk.count(t), sc, r)
-    assert {(r["doc_id"], r["term"]): (r["tf"], r["score"], r["rank"])
-            for r in got} == want
-    # 'apple' (df=1) never appears even though tf=2 in doc 0
-    assert all(r["term"] != "apple" for r in got)
-
-    # max_df_frac=0.5 kills 'common' (df=4/4)
-    pruned = tfidf_keywords(docs, k=3, min_df=1, max_df_frac=0.5).collect()
-    assert all(r["term"] != "common" for r in pruned)
-    assert any(r["term"] == "apple" for r in pruned)  # min_df=1 admits it
-
-    import pytest
-
-    with pytest.raises(ValueError, match="k must"):
-        tfidf_keywords(docs, k=0)
-    with pytest.raises(ValueError, match="min_df"):
-        tfidf_keywords(docs, min_df=0)
-    with pytest.raises(ValueError, match="max_df_frac"):
-        tfidf_keywords(docs, max_df_frac=1.5)
-
-
-def test_bm25_index_path_matches_direct(spark):
-    """Index-path scores equal the direct path on every matching doc;
-    append maintenance equals a rebuild; stamps are enforced."""
-    import pytest as _pytest
-
-    from spacy_llm_spark.functions.relevance import (
-        bm25_index,
-        bm25_index_append,
-        bm25_query_from_index,
-        bm25_scores,
-    )
-
-    rows = [(i, f"alpha beta {'gamma ' * (i % 3)}common") for i in range(30)]
-    rows += [(100, "delta epsilon zeta")]  # matches nothing below
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    terms = ["alpha", "gamma"]
-    p, d = bm25_index(docs)
-    via_index = {r["doc_id"]: r["score"]
-                 for r in bm25_query_from_index(p, d, terms, k=100).collect()}
-    direct = {r["doc_id"]: r["score"]
-              for r in bm25_scores(docs, terms).collect() if r["score"] > 0}
-    assert via_index == direct
-    assert 100 not in via_index  # no matching term -> never visited
-
-    old = docs.where("doc_id < 15")
-    new = docs.where("doc_id >= 15")
-    po, do_ = bm25_index(old)
-    pa, da = bm25_index_append(po, do_, new)
-    rebuilt = bm25_query_from_index(p, d, terms, k=100).collect()
-    appended = bm25_query_from_index(pa, da, terms, k=100).collect()
-    assert sorted(map(tuple, appended)) == sorted(map(tuple, rebuilt))
-
-    with _pytest.raises(ValueError, match="stamp"):
-        bm25_query_from_index(p.drop("_fmt_v1_bm25"), d, terms)
-    with _pytest.raises(ValueError):
-        bm25_query_from_index(p, d, [])
 
 
 def test_vocab_drift_hand_case(spark):

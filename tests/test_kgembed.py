@@ -166,71 +166,3 @@ def test_transe_epoch_missing_embedding_raises(spark):
             _pairs_df(spark, [("a", "r", "b", "b")]),
             _emb_df(spark, ent), _emb_df(spark, rel), lr=0.0,
         )
-
-
-def test_procrustes_recovers_signed_permutation(spark):
-    # dst space = src rotated by a known signed permutation (orthogonal
-    # and exactly representable): Procrustes must recover it from a
-    # SUBSET of anchors and map non-anchor entities correctly too
-    ids = spark.createDataFrame([Row(id=f"e{i}") for i in range(30)],
-                                "id string")
-    src = kgembed.init_embeddings(ids, "id", dim=4)
-    src_py = {r.id: np.array(r.vec) for r in src.collect()}
-    R_true = np.array([
-        [0, 1, 0, 0],
-        [0, 0, -1, 0],
-        [1, 0, 0, 0],
-        [0, 0, 0, -1],
-    ], dtype=float)
-    dst = spark.createDataFrame(
-        [Row(id=k, vec=[float(x) for x in v @ R_true])
-         for k, v in src_py.items()],
-        "id string, vec array<double>",
-    )
-    anchors = spark.createDataFrame(
-        [Row(src_id=f"e{i}", dst_id=f"e{i}") for i in range(10)],
-        "src_id string, dst_id string",
-    )
-    rotated, R = kgembed.procrustes_align(src, dst, anchors)
-    np.testing.assert_allclose(R, R_true, atol=1e-9)
-    got = {r.id: np.array(r.vec) for r in rotated.collect()}
-    for k, v in src_py.items():       # includes the 20 non-anchor ids
-        np.testing.assert_allclose(got[k], v @ R_true, atol=1e-6, err_msg=k)
-    # guards
-    with pytest.raises(ValueError, match="anchors is empty"):
-        kgembed.procrustes_align(src, dst, anchors.limit(0))
-    bad = spark.createDataFrame([Row(src_id="e1", dst_id="nope")],
-                                "src_id string, dst_id string")
-    with pytest.raises(ValueError, match="missing"):
-        kgembed.procrustes_align(src, dst, bad)
-
-
-def test_aggregate_neighbors_mean_and_directions(spark):
-    feats = _emb_df(spark, {
-        "a": [1.0, 0.0], "b": [3.0, 2.0], "c": [5.0, 4.0],
-        "d": [7.0, 6.0],
-    })
-    edges = spark.createDataFrame(
-        [("a", "c"), ("b", "c"), ("c", "d"), ("a", "c")],  # dup collapses
-        "subj string, obj string",
-    )
-    got_in = {r.id: (r.vec, r.n_neighbors)
-              for r in kgembed.aggregate_neighbors(feats, edges).collect()}
-    # c's in-neighbors {a, b} -> mean ([1,0],[3,2]) = [2,1]
-    assert got_in["c"] == ([2.0, 1.0], 2)
-    assert got_in["d"] == ([5.0, 4.0], 1)
-    assert set(got_in) == {"c", "d"}  # a, b have no in-neighbors
-    got_out = {r.id: r.vec for r in kgembed.aggregate_neighbors(
-        feats, edges, direction="out").collect()}
-    assert got_out["a"] == [5.0, 4.0]      # a -> c
-    assert got_out["c"] == [7.0, 6.0]      # c -> d
-    got_both = {r.id: (r.vec, r.n_neighbors)
-                for r in kgembed.aggregate_neighbors(
-                    feats, edges, direction="both").collect()}
-    # c's undirected neighbors {a, b, d} -> mean = [11/3, 8/3]
-    assert got_both["c"][1] == 3
-    np.testing.assert_allclose(
-        got_both["c"][0], [11 / 3, 8 / 3], atol=1e-7)
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="direction"):
-        kgembed.aggregate_neighbors(feats, edges, direction="up")

@@ -1,6 +1,6 @@
 """Round-5 additions: Adamic–Adar link prediction and deterministic label
 propagation — each against an independent pure-Python reference — plus
-data-quality audits, kNN joins and KG shape checks."""
+privacy audits, kNN joins and KG shape checks."""
 
 import itertools
 import math
@@ -250,64 +250,6 @@ def test_hits_mass_conservation_and_empty(spark):
     out = graph.hits(empty, iters=2)
     assert out.count() == 0
     assert out.columns == ["vertex", "hub", "authority"]
-
-
-# ---------------------------------------------------------------------------
-# Data-quality audits
-# ---------------------------------------------------------------------------
-
-
-def test_audit_checks_hand_cases(spark):
-    from spacy_llm_spark.operators import audit
-
-    child = spark.createDataFrame(
-        [(1, 10, "A"), (2, 10, "A"), (2, 20, "B"),
-         (3, None, "C"), (4, 99, "A"), (None, 10, "A")],
-        "id long, fk long, status string",
-    )
-    parent = spark.createDataFrame([(10,), (20,)], "pk long")
-
-    uniq = audit.uniqueness_violations(child, ["id"]).collect()
-    # id=2 twice; NULL ids excluded
-    assert [(r["id"], r["n"]) for r in uniq] == [(2, 2)]
-
-    fk = audit.fk_violations(child, parent, "fk", "pk").collect()
-    # fk=99 orphaned; NULL fk excluded
-    assert sorted(r["id"] for r in fk) == [4]
-
-    acc = audit.accepted_values_violations(child, "status", ["A", "B"]).collect()
-    assert sorted(r["id"] for r in acc) == [3]
-
-    nn = {r["column"]: r["n_null"]
-          for r in audit.not_null_violations(child, ["id", "fk", "status"]).collect()}
-    assert nn == {"id": 1, "fk": 1}  # status clean -> absent
-
-    rep = audit.audit_report({
-        "uniq": audit.uniqueness_violations(child, ["id"]),
-        "fk": audit.fk_violations(child, parent, "fk", "pk"),
-        "clean": audit.accepted_values_violations(child, "status", ["A", "B", "C"]),
-    }).collect()
-    assert [(r["check"], r["n_violations"]) for r in rep] == [
-        ("clean", 0), ("fk", 1), ("uniq", 1),
-    ]
-
-
-def test_audit_composite_key_and_validation(spark):
-    from spacy_llm_spark.operators import audit
-
-    df = spark.createDataFrame(
-        [(1, "x"), (1, "x"), (1, "y")], "a long, b string"
-    )
-    rows = audit.uniqueness_violations(df, ["a", "b"]).collect()
-    assert [(r["a"], r["b"], r["n"]) for r in rows] == [(1, "x", 2)]
-    for bad_call in (
-        lambda: audit.uniqueness_violations(df, []),
-        lambda: audit.not_null_violations(df, []),
-        lambda: audit.accepted_values_violations(df, "b", []),
-        lambda: audit.audit_report({}),
-    ):
-        with pytest.raises(ValueError):
-            bad_call()
 
 
 # ---------------------------------------------------------------------------
@@ -659,245 +601,6 @@ def test_induce_ontology_domain_range_functionality(spark):
     )
     t = audit.induce_ontology(tie).head()
     assert (t.domain, t.domain_conf) == ("A", 0.5)
-
-
-def test_align_predicates_containment_jaccard_inverse(spark):
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators import audit
-
-    def kg(rows):
-        return spark.createDataFrame(
-            [Row(subj=s, pred=p, obj=o) for s, p, o in rows],
-            "subj string, pred string, obj string",
-        )
-
-    left = kg([("a", "p", "b"), ("c", "p", "d"), ("e", "p", "f"),
-               ("a", "q", "b"), ("a", "p", "b")])  # dup collapses
-    right = kg([("a", "P", "b"), ("c", "P", "d"), ("b", "R", "a")])
-    got = {
-        (r.left_pred, r.right_pred, r.direction): r
-        for r in audit.align_predicates(
-            left, right, include_inverse=True
-        ).collect()
-    }
-    pP = got[("p", "P", "fwd")]
-    assert (pP.n_overlap, pP.n_left, pP.n_right) == (2, 3, 2)
-    assert pP.jaccard == 0.666667          # 2 / (3 + 2 - 2)
-    assert pP.left_in_right == 0.666667
-    assert pP.right_in_left == 1.0         # P is a subproperty of p
-    qP = got[("q", "P", "fwd")]
-    assert (qP.n_overlap, qP.left_in_right) == (1, 1.0)  # q ⊑ P
-    # inverse discovery: R's reversed pairs hit p and q
-    assert got[("p", "R", "inv")].n_overlap == 1
-    assert got[("q", "R", "inv")].right_in_left == 1.0   # R ≡ q⁻
-    assert ("p", "R", "fwd") not in got    # un-reversed R never matches
-    # min_overlap prunes pair-count-1 alignments
-    pruned = {
-        (r.left_pred, r.right_pred)
-        for r in audit.align_predicates(
-            left, right, min_overlap=2, include_inverse=True
-        ).collect()
-    }
-    assert pruned == {("p", "P")}
-    # self-alignment keeps trivial self rows; q ⊑ p shows as containment
-    self_got = {
-        (r.left_pred, r.right_pred): r
-        for r in audit.align_predicates(left, left).collect()
-    }
-    assert self_got[("p", "p")].jaccard == 1.0
-    assert self_got[("q", "p")].left_in_right == 1.0
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="min_overlap"):
-        audit.align_predicates(left, right, min_overlap=0)
-
-
-def test_align_entities_rare_feature_weighting(spark):
-    import math
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators import audit
-
-    def kg(rows):
-        return spark.createDataFrame(
-            [Row(subj=s, pred=p, obj=o) for s, p, o in rows],
-            "subj string, pred string, obj string",
-        )
-
-    # left KG: x1 is clark; right KG: y1 is clark under another id.
-    # bornIn->smallville is rare (df=2: x1, y1); type->person is
-    # carried by everyone (df=4) — weights must differ accordingly.
-    left = kg([
-        ("x1", "bornIn", "smallville"), ("x1", "type", "person"),
-        ("x2", "type", "person"),
-        ("metropolis", "locatedIn", "x2"),   # incoming feature for x2
-    ])
-    right = kg([
-        ("y1", "bornIn", "smallville"), ("y1", "type", "person"),
-        ("y2", "type", "person"),
-        ("metropolis", "locatedIn", "y2"),
-    ])
-    got = {
-        (r.left_id, r.right_id): (r.n_shared, r.score)
-        for r in audit.align_entities(left, right).collect()
-    }
-    w_rare = round(1 / math.log(1 + 2), 10)     # bornIn df=2
-    w_type = round(1 / math.log(1 + 4), 10)     # type df=4
-    w_in = round(1 / math.log(1 + 2), 10)       # incoming locatedIn df=2
-    assert got[("x1", "y1")] == (2, round(w_rare + w_type, 6))
-    assert got[("x2", "y2")] == (2, round(w_type + w_in, 6))
-    # cross pairs share only the ubiquitous type feature
-    assert got[("x1", "y2")] == (1, round(w_type, 6))
-    # the true pairs outscore the impostors
-    assert got[("x1", "y1")][1] > got[("x1", "y2")][1]
-    # df cap drops the ubiquitous feature entirely
-    capped = {
-        (r.left_id, r.right_id)
-        for r in audit.align_entities(left, right, max_feature_df=3).collect()
-    }
-    assert capped == {("x1", "y1"), ("x2", "y2")}
-    # min_shared prunes single-feature evidence
-    strong = {
-        (r.left_id, r.right_id)
-        for r in audit.align_entities(left, right, min_shared=2).collect()
-    }
-    assert strong == {("x1", "y1"), ("x2", "y2")}
-    # incoming features off: x2/y2 drop to the type feature only
-    noin = {
-        (r.left_id, r.right_id): r.n_shared
-        for r in audit.align_entities(
-            left, right, include_incoming=False
-        ).collect()
-    }
-    assert noin[("x2", "y2")] == 1
-    # self-alignment: identity pairs dominate, exclude_self drops them
-    selfed = audit.align_entities(left, left, exclude_self=True).collect()
-    assert all(r.left_id != r.right_id for r in selfed)
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="max_feature_df"):
-        audit.align_entities(left, right, max_feature_df=0)
-    with _pytest.raises(ValueError, match="min_shared"):
-        audit.align_entities(left, right, min_shared=0)
-
-
-def test_alignment_index_probe_equals_full(spark):
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators import audit
-
-    def kg(rows):
-        return spark.createDataFrame(
-            [Row(subj=s, pred=p, obj=o) for s, p, o in rows],
-            "subj string, pred string, obj string",
-        )
-
-    left = kg([
-        ("x1", "bornIn", "smallville"), ("x1", "type", "person"),
-        ("x2", "type", "person"), ("metropolis", "locatedIn", "x2"),
-    ])
-    right = kg([
-        ("y1", "bornIn", "smallville"), ("y1", "type", "person"),
-        ("y2", "type", "person"), ("metropolis", "locatedIn", "y2"),
-    ])
-
-    def rows_of(df):
-        return {(r.left_id, r.right_id): (r.n_shared, r.score)
-                for r in df.collect()}
-
-    idx = audit.alignment_index(right)
-    for kw in ({}, {"max_feature_df": 3}, {"min_shared": 2}):
-        full = rows_of(audit.align_entities(left, right, **kw))
-        inc = rows_of(audit.align_entities_probe(left, idx, **kw))
-        assert inc == full, kw
-    # append == rebuild from the concatenated corpus, bit-for-bit
-    batch = kg([("y3", "bornIn", "smallville"), ("y3", "type", "person")])
-    both = right.unionByName(batch)
-    a = audit.alignment_index_append(idx, batch)
-    b = audit.alignment_index(both)
-    key = lambda df: {tuple(r) for r in df.collect()}
-    assert key(a) == key(b)
-    assert rows_of(audit.align_entities_probe(left, a)) == rows_of(
-        audit.align_entities(left, both))
-    # stamp guards: include_incoming mismatch and unstamped frames refuse
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="stamp mismatch"):
-        audit.align_entities_probe(left, idx, include_incoming=False)
-    with _pytest.raises(ValueError, match="no _fmt"):
-        audit.align_entities_probe(
-            left, idx.select("right_id", "dir", "p", "v", "df_r"))
-    with _pytest.raises(ValueError, match="stamp mismatch"):
-        audit.alignment_index_append(
-            audit.alignment_index(right, include_incoming=False), batch)
-
-
-def test_shape_cardinality_violations(spark):
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators import audit
-
-    edges = spark.createDataFrame(
-        [Row(subj=s, pred=p, obj=o) for s, p, o in [
-            ("s1", "executes", "a"), ("s1", "executes", "b"),
-            ("s1", "executes", "b"),              # dup object collapses
-            ("s1", "stores", "x"), ("s1", "stores", "y"),
-            ("s2", "emits", "m"),
-            ("s1", "untracked", "z"),             # no constraint -> ignored
-        ]],
-        "subj string, pred string, obj string",
-    )
-    cons = spark.createDataFrame(
-        [("executes", 1, 2), ("stores", None, 1), ("emits", 2, None)],
-        "pred string, min_count int, max_count int",
-    )
-    got = {(r.subj, r.pred): (r.n_objects, r.kind, r.bound)
-           for r in audit.shape_cardinality_violations(edges, cons).collect()}
-    assert got == {
-        ("s1", "stores"): (2, "max_count", 1),     # over the cap
-        ("s1", "emits"): (0, "min_count", 2),      # required, absent
-        ("s2", "executes"): (0, "min_count", 1),   # required, absent
-        ("s2", "emits"): (1, "min_count", 2),      # present, too few
-        # NOT here: (s2, stores) — stores has no min bound, so a
-        # subject without it violates nothing; untracked pred ignored
-    }
-    import pytest as _pytest
-    for bad in ([(None, 1, 2)], [("p", -1, 2)], [("p", 3, 2)],
-                [("p", 0, 0)]):
-        bad_cons = spark.createDataFrame(
-            bad, "pred string, min_count int, max_count int")
-        with _pytest.raises(ValueError, match="malformed"):
-            audit.shape_cardinality_violations(edges, bad_cons)
-
-
-def test_summarize_entities_rare_facts_first(spark):
-    import math
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators import audit
-
-    rows = [
-        # everyone is a person (df=3); rare facts identify
-        ("a", "type", "person"), ("b", "type", "person"),
-        ("c", "type", "person"),
-        ("a", "bornIn", "smallville"),          # df=1
-        ("b", "bornIn", "metropolis"), ("c", "bornIn", "metropolis"),
-        ("a", "worksAt", "planet"), ("b", "worksAt", "planet"),
-        ("a", "type", "person"),                # dup collapses
-    ]
-    t = spark.createDataFrame(
-        [Row(subj=s, pred=p, obj=o) for s, p, o in rows],
-        "subj string, pred string, obj string",
-    )
-    got = {(r.subj, r.rank): (r.pred, r.obj, r.informativeness)
-           for r in audit.summarize_entities(t, k=2).collect()}
-    w1 = round(1 / math.log(2), 10)   # df=1
-    w2 = round(1 / math.log(3), 10)   # df=2
-    w3 = round(1 / math.log(4), 10)   # df=3
-    assert got[("a", 1)] == ("bornIn", "smallville", w1)
-    assert got[("a", 2)] == ("worksAt", "planet", w2)
-    # b: bornIn metropolis (df=2) ties worksAt planet (df=2) -> pred tie-break
-    assert got[("b", 1)] == ("bornIn", "metropolis", w2)
-    assert got[("b", 2)] == ("worksAt", "planet", w2)
-    # c has only 2 facts; k=2 returns both, type last
-    assert got[("c", 2)] == ("type", "person", w3)
-    assert max(r for (_, r) in got) == 2
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="k must be"):
-        audit.summarize_entities(t, k=0)
 
 
 def test_k_anonymity_violations(spark):

@@ -14,6 +14,8 @@
 - Each of the first 50 ``queries()`` entries, the ones the driver's
   correctness harness stamps, has a DuckDB oracle, and
   ``scripts/check_oracles.py`` passes from any working directory.
+- Every package module, module-level def and script that README.md or
+  COVERAGE.md cites exists.
 
 The checks are static or run in a fresh interpreter; only the
 ``check_oracles.py`` run starts Spark, in its own process.
@@ -113,8 +115,6 @@ TEST_ONLY_DEFS = {
         "inverse of flat to_turtle; the serializer's round-trip tests use it",
     f"{PKG}.functions.rdf.turtle_header":
         "the @prefix line a to_turtle document starts with",
-    f"{PKG}.functions.relevance.bm25_index_append":
-        "append form of bm25_index, pinned equal to a rebuild",
     f"{PKG}.operators.dedup.exact_dedup":
         "min-id representative per exact text hash, pinned by a test",
     f"{PKG}.operators.dedup.jaccard_vs_probe":
@@ -515,4 +515,78 @@ def test_def_reference_scan_resolves_imports_and_attributes(tmp_path):
         (f"{PKG}.fs", "cut_lineage"),
         (f"{PKG}.operators.canonicalize", "canonical_vertices"),
         (f"{PKG}.operators.graph", "pagerank"),
+    }
+
+
+# Paths the docs cite: package files as ``pkg/<path>.py`` (COVERAGE.md's
+# shorthand) or relative to the package (``operators/el.py``,
+# ``operators/el.candidates_df``), and driver scripts.
+DOC_FILES = ("README.md", "COVERAGE.md")
+_PKG_PATH = re.compile(r"(?<![\w/])pkg/([\w/]+\.py)")
+_SUBPKG_PATH = re.compile(
+    r"(?<![\w/.])((?:operators|functions|sources|streaming|plans)/[\w/]*\w)"
+)
+_SCRIPT_PATH = re.compile(r"(?<![\w/])scripts/\w+\.py")
+# ``path.py:name`` names a top-level def of that module
+_CITED_DEF = re.compile(
+    r"(?<![\w/])(?:pkg/|(?=(?:operators|functions|sources|streaming|plans)/))"
+    r"([\w/]+\.py):([A-Za-z_]\w*)"
+)
+
+
+def _cited_paths(text):
+    """Repo-relative files (or package directories) a document cites."""
+    out = {f"{PKG}/{m}" for m in _PKG_PATH.findall(text)}
+    for m in _SUBPKG_PATH.findall(text):
+        base = os.path.join(PKG, m)
+        out.add(base if os.path.isdir(os.path.join(REPO, base)) else base + ".py")
+    out.update(_SCRIPT_PATH.findall(text))
+    return out
+
+
+def _cited_defs(text):
+    """``(file, name)`` for each ``path.py:name`` citation of a package file."""
+    return {(f"{PKG}/{path}", name) for path, name in _CITED_DEF.findall(text)}
+
+
+def test_doc_cited_paths_exist():
+    """README.md and COVERAGE.md cite no module, script or module-level
+    def that is gone."""
+    missing = {}
+    for doc in DOC_FILES:
+        with open(os.path.join(REPO, doc)) as f:
+            text = f.read()
+        gone = sorted(
+            p for p in _cited_paths(text) if not os.path.exists(os.path.join(REPO, p))
+        )
+        gone += sorted(
+            f"{path}:{name}"
+            for path, name in _cited_defs(text)
+            if os.path.exists(os.path.join(REPO, path))
+            and name not in _top_level_names(os.path.join(REPO, path))
+        )
+        if gone:
+            missing[doc] = gone
+    assert not missing, missing
+
+
+def test_cited_path_scan_reads_each_citation_form():
+    text = (
+        "`pkg/kb.py:load_kb_yaml`, `operators/el.candidates_df`, "
+        "`functions/rdf.py:to_turtle`, plans/validate.py, `sources/`, "
+        "`scripts/run_kg_job.py`, pipeline/llm.py:195, "
+        "pkg/operators/gone.py, streaming/incremental.py"
+    )
+    assert _cited_paths(text) == {
+        f"{PKG}/kb.py",
+        f"{PKG}/operators/el.py",
+        f"{PKG}/functions/rdf.py",
+        f"{PKG}/plans/validate.py",
+        "scripts/run_kg_job.py",
+        f"{PKG}/operators/gone.py",
+        f"{PKG}/streaming/incremental.py",
+    }
+    assert _cited_defs(text) == {
+        (f"{PKG}/kb.py", "load_kb_yaml"),
+        (f"{PKG}/functions/rdf.py", "to_turtle"),
     }

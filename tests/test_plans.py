@@ -120,23 +120,6 @@ def test_canonical_edge_remap_never_shuffles_triples(spark, tmp_path):
     assert plan.count("BroadcastHashJoin") == 2
 
 
-def test_bm25_plan_one_reduce_topk_no_sort(spark):
-    """BM25: corpus stats are ONE SinglePartition reduce broadcast back
-    (no driver collect in the plan); top-k is TakeOrderedAndProject —
-    a global Sort node would materialize the whole corpus ordering."""
-    from spacy_llm_spark.functions.relevance import bm25_topk
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma {i}") for i in range(30)],
-        "doc_id long, text string",
-    )
-    plan = _plan(bm25_topk(docs, ["alpha", "gamma"], k=5))
-    assert "TakeOrderedAndProject" in plan
-    assert "Sort " not in plan
-    # exactly one shuffle: the single-row stats reduce
-    assert plan.count("Exchange") - plan.count("BroadcastExchange") == 1
-
-
 def test_dup_ngram_stats_no_cartesian(spark):
     """Duplicated-span profiling must stay equi-join shaped: no
     cartesian/BNLJ anywhere, dup-gram filter applied before the
@@ -167,42 +150,3 @@ def test_bfs_frontier_round_is_equi_join_shaped(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-
-def test_bm25_indexed_pushes_term_filter_to_postings_scan(spark, tmp_path):
-    """Query-from-index must push `In(term, ...)` into the postings
-    parquet scan — the property that makes a 100 TB index queryable
-    without reading it."""
-    from spacy_llm_spark.functions.relevance import (
-        bm25_index,
-        bm25_query_from_index,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma{i % 4}") for i in range(20)],
-        "doc_id long, text string",
-    )
-    p, d = bm25_index(docs)
-    p.write.parquet(str(tmp_path / "postings"))
-    d.write.parquet(str(tmp_path / "doclens"))
-    out = bm25_query_from_index(
-        spark.read.parquet(str(tmp_path / "postings")),
-        spark.read.parquet(str(tmp_path / "doclens")),
-        ["alpha", "gamma1"],
-        k=5,
-    )
-    plan = _plan(out)
-    assert "In(term, [alpha,gamma1])" in plan
-    assert out.count() > 0
-
-
-def test_bm25_empty_corpus_degrades_gracefully(spark):
-    from spacy_llm_spark.functions.relevance import (
-        bm25_index,
-        bm25_query_from_index,
-        bm25_scores,
-    )
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert bm25_scores(empty, ["x"]).collect() == []
-    p, d = bm25_index(empty)
-    assert bm25_query_from_index(p, d, ["x"]).collect() == []

@@ -1,75 +1,5 @@
-"""Single-pass table profiler (operators/profile.py)."""
-
-import pytest
-
-from spacy_llm_spark.operators.profile import profile_table
-
-
-@pytest.fixture(scope="module")
-def sample(spark):
-    rows = [
-        (1, "alpha", 10.0),
-        (2, "bravo", None),
-        (3, None, 30.0),
-        (3, "alpha", 30.0),
-    ]
-    return spark.createDataFrame(rows, "id bigint, name string, score double")
-
-
-def test_profile_values(sample):
-    got = {r["column"]: r.asDict() for r in profile_table(sample).collect()}
-    assert set(got) == {"id", "name", "score"}
-
-    i = got["id"]
-    assert (i["n_rows"], i["n_nulls"], i["n_distinct"]) == (4, 0, 3)
-    assert (i["min_value"], i["max_value"]) == ("1", "3")
-    assert i["null_rate"] == 0.0 and i["avg_len"] is None
-
-    n = got["name"]
-    assert (n["n_nulls"], n["n_distinct"]) == (1, 2)
-    assert (n["min_value"], n["max_value"]) == ("alpha", "bravo")
-    assert n["null_rate"] == 0.25
-    assert n["avg_len"] == 5.0  # mean of 5,5,5 (nulls excluded)
-
-    s = got["score"]
-    assert (s["n_nulls"], s["n_distinct"]) == (1, 2)
-    assert s["avg_len"] is None
-
-
-def test_profile_column_subset_and_errors(sample):
-    got = profile_table(sample, columns=["name"]).collect()
-    assert len(got) == 1 and got[0]["column"] == "name"
-    with pytest.raises(ValueError, match="unknown columns"):
-        profile_table(sample, columns=["nope"])
-    with pytest.raises(ValueError, match="no columns"):
-        profile_table(sample, columns=[])
-
-
-def test_profile_single_scan(sample):
-    plan = profile_table(sample)._jdf.queryExecution().executedPlan().toString()
-    # the whole profile reads the table exactly once (createDataFrame
-    # scans surface as ExistingRDD); the multi-distinct expand happens
-    # above the single scan
-    assert plan.count("Scan ExistingRDD") == 1
-    assert plan.count("Expand") == 1
-
-
-def test_profile_approx_mode(sample):
-    got = {
-        r["column"]: r["n_distinct"]
-        for r in profile_table(sample, approx=True).collect()
-    }
-    # HLL at this cardinality is exact in practice; allow slack anyway
-    assert abs(got["id"] - 3) <= 1 and abs(got["name"] - 2) <= 1
-
-
-def test_profile_all_null_column(spark):
-    df = spark.createDataFrame([(None,), (None,)], "x string")
-    r = profile_table(df).collect()[0]
-    assert (r["n_nulls"], r["n_distinct"], r["null_rate"]) == (2, 0, 1.0)
-    assert r["min_value"] is None and r["max_value"] is None
-    assert r["avg_len"] is None
-
+"""Clustering scores (operators/scoring.py) and document chunking
+(functions/text.py)."""
 
 # ------------------------------------------- pairwise clustering P/R/F1
 
@@ -131,34 +61,6 @@ def test_pairwise_cluster_prf_no_pair_materialization(spark):
     assert "SortMergeJoin" not in plan
 
 
-# --------------------------------------------------- skew report
-
-from spacy_llm_spark.operators.profile import skew_report
-
-
-def test_skew_report_values(spark):
-    rows = [("hot",)] * 6 + [("a",)] * 2 + [("b",)] * 1 + [("c",)] * 1
-    df = spark.createDataFrame(rows, "k string")
-    got = skew_report(df, ["k"], top_n=2).collect()
-    assert [(r["key"], r["n"], r["rank"]) for r in got] == [("hot", 6, 1), ("a", 2, 2)]
-    # mean per key = 10/4 = 2.5; skew factor = 6/2.5 = 2.4; share 0.6
-    assert got[0]["share"] == 0.6 and got[0]["skew_factor"] == 2.4
-
-    import pytest
-
-    with pytest.raises(ValueError, match="top_n"):
-        skew_report(df, ["k"], top_n=0)
-
-
-def test_skew_report_composite_key_and_ties(spark):
-    rows = [("r1", "py"), ("r1", "py"), ("r2", "go"), ("r1", "go")]
-    df = spark.createDataFrame(rows, "repo string, lang string")
-    got = skew_report(df, ["repo", "lang"], top_n=3).collect()
-    assert got[0]["key"] == "r1␟py" and got[0]["n"] == 2
-    # ties broken by key ascending — deterministic cut
-    assert [r["key"] for r in got[1:]] == ["r1␟go", "r2␟go"]
-
-
 # --------------------------------------------------- document chunking
 
 from spacy_llm_spark.functions.text import chunk_documents
@@ -206,32 +108,6 @@ def test_chunk_documents_no_shuffle(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "Exchange" not in plan  # pure projection + generate
-
-
-# --------------------------------------------------- histogram
-
-from spacy_llm_spark.operators.profile import histogram
-
-
-def test_histogram_uniform_and_edges(spark):
-    df = spark.createDataFrame([(float(i),) for i in range(100)], "v double")
-    got = {r["bin"]: (r["lo"], r["hi"], r["n"]) for r in histogram(df, "v", 10).collect()}
-    assert len(got) == 10
-    # width 9.9; the max (99.0) folds into the top bin
-    assert got[0][2] == 10 and got[9][2] == 10
-    assert got[0][0] == 0.0 and got[9][1] == 99.0
-    assert sum(n for _, _, n in got.values()) == 100
-
-
-def test_histogram_constant_nulls_and_validation(spark):
-    df = spark.createDataFrame([(5.0,), (5.0,), (None,)], "v double")
-    got = histogram(df, "v", 4).collect()
-    assert [(r["bin"], r["n"]) for r in got] == [(0, 2)]
-
-    import pytest
-
-    with pytest.raises(ValueError, match="n_bins"):
-        histogram(df, "v", 0)
 
 
 def _ref_bcubed(rows):

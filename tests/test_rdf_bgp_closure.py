@@ -1661,24 +1661,6 @@ def test_construct_triples_bnode_templates(spark):
         construct_triples(bind, [("?s", "p", "_:bad-label")])
 
 
-def test_mutual_best_alignment(spark):
-    from spacy_llm_spark.operators.audit import mutual_best_alignment
-
-    rows = [
-        ("l1", "r1", 0.9), ("l1", "r2", 0.5),
-        ("l2", "r1", 0.8),              # r1 prefers l1 -> l2 unmatched
-        ("l3", "r3", 0.7),
-        ("l4", "r4", 0.6), ("l4", "r5", 0.6),  # tie -> min right_id
-        ("l5", "r5", 0.4),  # l5's best is r5, but r5's best is l4: out
-    ]
-    scores = spark.createDataFrame(
-        rows, "left_id string, right_id string, score double"
-    )
-    got = {(r.left_id, r.right_id): r.score
-           for r in mutual_best_alignment(scores).collect()}
-    assert got == {("l1", "r1"): 0.9, ("l3", "r3"): 0.7, ("l4", "r4"): 0.6}
-
-
 def test_jsonld_export_parses_and_roundtrips(spark):
     import json as _json
     from urllib.parse import unquote
