@@ -522,15 +522,13 @@ def test_def_reference_scan_resolves_imports_and_attributes(tmp_path):
 # shorthand) or relative to the package (``operators/el.py``,
 # ``operators/el.candidates_df``), and driver scripts.
 DOC_FILES = ("README.md", "COVERAGE.md")
+_SUBPKGS = "(?:operators|functions|sources|streaming|plans)/"
 _PKG_PATH = re.compile(r"(?<![\w/])pkg/([\w/]+\.py)")
-_SUBPKG_PATH = re.compile(
-    r"(?<![\w/.])((?:operators|functions|sources|streaming|plans)/[\w/]*\w)"
-)
+_SUBPKG_PATH = re.compile(rf"(?<![\w/.])({_SUBPKGS}[\w/]*\w)")
 _SCRIPT_PATH = re.compile(r"(?<![\w/])scripts/\w+\.py")
 # ``path.py:name`` names a top-level def of that module
 _CITED_DEF = re.compile(
-    r"(?<![\w/])(?:pkg/|(?=(?:operators|functions|sources|streaming|plans)/))"
-    r"([\w/]+\.py):([A-Za-z_]\w*)"
+    rf"(?<![\w/])(?:pkg/|(?={_SUBPKGS}))([\w/]+\.py):([A-Za-z_]\w*)"
 )
 
 
