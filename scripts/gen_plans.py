@@ -448,24 +448,6 @@ def main():
             ),
         ))
 
-    from spacy_llm_spark.operators.canonicalize import modal_label
-
-    ml_in = spark.createDataFrame(
-        [("e1", "Alpha")], ["entity", "surface"]
-    )
-    sections.append((
-        "Modal-label vote: two keyed aggregates, no Window",
-        "The (max count, min label) argmax is a min-struct aggregate over "
-        "the per-(key,label) counts — the plan is one HashAggregate pair "
-        "(counts) plus one SortAggregate pair (struct-min is not "
-        "hash-aggregable), both keyed on the entity id with partial/final "
-        "halves around their Exchange, and contains NO Window node (a "
-        "rank window would sort every key group globally), so "
-        "display-name selection costs two keyed shuffles with map-side "
-        "partials at any scale.",
-        explain_str(modal_label(ml_in, "entity", "surface")),
-    ))
-
     from spacy_llm_spark.functions.rdf import to_ntriples
 
     sections.append((
@@ -507,26 +489,6 @@ def main():
         "union-distinct HashAggregates, and the schema closures' own "
         "doubling rounds run at ontology scale before this plan starts.",
         explain_str(rdfs_entailment(r_tri, r_ont)),
-    ))
-
-    from spacy_llm_spark.operators.graph import match_bgp_union
-
-    bu = spark.createDataFrame(
-        [("a", "p", "b"), ("a", "q", "c")], ["subj", "pred", "obj"]
-    )
-    sections.append((
-        "BGP UNION: group plans stacked under one Union, NULL padding free",
-        "Each UNION group keeps its own pushdown-filtered scans and join "
-        "order; the NULL padding for variables a group does not bind is a "
-        "literal projection (zero cost), the groups meet in ONE Union "
-        "node, and the only added Exchange is the optional trailing "
-        "distinct — so a UNION of k groups costs exactly the k group "
-        "plans plus one aggregate.",
-        explain_str(
-            match_bgp_union(
-                bu, [[("?s", "p", "?o")], [("?s", "q", "?t")]]
-            )
-        ),
     ))
 
     # one node2vec step constructed inline (the operator lineage-cuts
@@ -824,15 +786,6 @@ def main():
         "Untouched entities pass through a left join; no Window, no "
         "driver-side weights.",
         explain_str(te_e),
-    ))
-
-    sections.append((
-        "JSON-LD export: the Turtle aggregate shape with JSON term framing",
-        "to_jsonld grouped blocks: identical physical shape to "
-        "to_turtle — term framing is a pure projection (ECHAR table "
-        "doubling as JSON escapes; control chars percent-encoded), "
-        "then the two subject-keyed sort-collect hash aggregates.",
-        explain_str(rdffn.to_jsonld(trip_upd)),
     ))
 
     spark.stop()

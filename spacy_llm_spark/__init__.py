@@ -17,7 +17,8 @@ Layout
 - ``operators.materialize`` / ``canonicalize``
                           mentions/links/edges tables, vertices, canonical edges
 - ``operators.*``         graph / reason / dedup / similarity / audit /
-                          fusion / temporal / kgembed (legacy driver queries)
+                          fusion / temporal / kgembed / scoring / spancat
+                          (legacy driver queries)
 - ``functions.response_parsers``   response-parser kernels (NER, REL, EL)
 - ``functions.normalizers`` label normalizers
 - ``functions.text`` / ``functions.rdf``  text analysis, RDF serialization

@@ -105,51 +105,11 @@ def to_ntriples(
     return df.select(line.alias(out_col))
 
 
-def to_nquads(
-    df: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    graph: str = "graph",
-    base: str = "http://example.org/kg/",
-    obj_is_iri=True,
-    out_col: str = "nquad",
-) -> DataFrame:
-    """One N-Quads line per row: ``<s> <p> <o> <g> .`` — the named-graph
-    form of :func:`to_ntriples`, same pure-projection/codegen shape. A
-    NULL ``graph`` serializes as a triple line (the N-Quads grammar
-    makes the graph label optional = the default graph), so one table
-    carries a full RDF dataset."""
-    if isinstance(obj_is_iri, bool):
-        obj_is_iri = F.lit(obj_is_iri)
-    iri_obj = F.concat(F.lit("<" + base), escape_iri(obj), F.lit(">"))
-    lit_obj = F.concat(F.lit('"'), escape_literal(obj), F.lit('"'))
-    gpart = F.when(
-        F.col(graph).isNull(), F.lit("")
-    ).otherwise(
-        F.concat(F.lit(" <" + base), escape_iri(graph), F.lit(">"))
-    )
-    line = F.concat(
-        F.lit("<" + base), escape_iri(subj), F.lit("> "),
-        F.lit("<" + base), escape_iri(pred), F.lit("> "),
-        F.when(obj_is_iri, iri_obj).otherwise(lit_obj),
-        gpart,
-        F.lit(" ."),
-    )
-    return df.select(line.alias(out_col))
-
-
 # One regex, three term groups: subject IRI, predicate IRI, then either
 # an object IRI (group 3) or a quoted literal (group 4). Literal bodies
 # may contain anything except an UNESCAPED quote — i.e. any char that
 # is not '"' or '\', or a backslash-escaped pair.
 _NT_LINE_RE = r'^<([^<>]*)> <([^<>]*)> (?:<([^<>]*)>|"((?:[^"\\]|\\.)*)") \.$'
-
-# N-Quads: the same three terms plus an OPTIONAL graph IRI (group 5).
-_NQ_LINE_RE = (
-    r'^<([^<>]*)> <([^<>]*)> (?:<([^<>]*)>|"((?:[^"\\]|\\.)*)")'
-    r'(?: <([^<>]*)>)? \.$'
-)
 
 
 def parse_ntriples(
@@ -184,207 +144,6 @@ def parse_ntriples(
             F.when(is_iri, strip_base(unescape_iri(o_iri)))
             .otherwise(unescape_literal(o_lit))
             .alias(obj),
-            is_iri.alias("obj_is_iri"),
-        )
-    )
-
-
-_BNODE = r"_:[A-Za-z][A-Za-z0-9]*"
-_SUBJ = rf"(?:<[^<>]*>|{_BNODE})"
-_LIT = r'"(?:[^"\\]|\\.)*"'
-_LANG = r"[a-zA-Z][a-zA-Z0-9]*(?:-[a-zA-Z0-9]+)*"
-
-# full-grammar line: subject IRI or bnode; object IRI, bnode, or
-# literal with optional @lang / ^^<datatype> suffix
-_NT_TYPED_RE = (
-    rf"^(?:<([^<>]*)>|({_BNODE})) <([^<>]*)> "
-    rf'(?:<([^<>]*)>|({_BNODE})|"((?:[^"\\]|\\.)*)"'
-    rf"(?:@({_LANG})|\^\^<([^<>]*)>)?) \.$"
-)
-
-
-def to_ntriples_typed(
-    df: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    obj_kind: str = "obj_kind",
-    lang: str | None = None,
-    datatype: str | None = None,
-    base: str = "http://example.org/kg/",
-    bnode_prefix: str = "bnode:",
-    out_col: str = "ntriple",
-) -> DataFrame:
-    """Full-term-grammar N-Triples serialization: per-row ``obj_kind``
-    in ``iri`` / ``bnode`` / ``literal`` chooses the object form, an
-    optional ``lang`` column renders ``"lit"@tag`` and an optional
-    ``datatype`` column (an ABSOLUTE IRI — xsd types are not
-    base-prefixed) renders ``"lit"^^<dt>``; per the RDF data model a
-    language tag and a datatype are mutually exclusive, so a row with
-    both REFUSES at plan time via a raise_error branch rather than
-    silently picking one. Subjects (and bnode objects) whose value
-    starts with ``bnode_prefix`` serialize as ``_:label`` — the inverse
-    of :func:`parse_ntriples_typed`'s skolemization, making the round
-    trip exact. Same pure-projection/codegen shape as
-    :func:`to_ntriples`."""
-    def term_subj(col: str):
-        c = F.col(col)
-        return F.when(
-            c.startswith(bnode_prefix),
-            F.concat(
-                F.lit("_:"), F.substring(c, len(bnode_prefix) + 1, 2**31 - 1)
-            ),
-        ).otherwise(F.concat(F.lit("<" + base), escape_iri(c), F.lit(">")))
-
-    lit_body = F.concat(F.lit('"'), escape_literal(obj), F.lit('"'))
-    lang_c = F.col(lang) if lang else F.lit(None).cast("string")
-    dt_c = F.col(datatype) if datatype else F.lit(None).cast("string")
-    literal = (
-        F.when(
-            lang_c.isNotNull() & dt_c.isNotNull(),
-            F.raise_error(
-                F.lit(
-                    "to_ntriples_typed: a literal cannot carry BOTH a "
-                    "language tag and a datatype (RDF 1.1 data model)"
-                )
-            ),
-        )
-        .when(lang_c.isNotNull(), F.concat(lit_body, F.lit("@"), lang_c))
-        .when(
-            dt_c.isNotNull(),
-            F.concat(lit_body, F.lit("^^<"), escape_iri(dt_c), F.lit(">")),
-        )
-        .otherwise(lit_body)
-    )
-    bnode_label = F.when(
-        F.col(obj).startswith(bnode_prefix),
-        F.substring(F.col(obj), len(bnode_prefix) + 1, 2**31 - 1),
-    ).otherwise(F.col(obj))
-    obj_term = (
-        F.when(
-            F.col(obj_kind) == "iri",
-            F.concat(F.lit("<" + base), escape_iri(obj), F.lit(">")),
-        )
-        .when(
-            F.col(obj_kind) == "bnode",
-            F.concat(F.lit("_:"), bnode_label),
-        )
-        .when(F.col(obj_kind) == "literal", literal)
-        .otherwise(
-            F.raise_error(
-                F.concat(
-                    F.lit("to_ntriples_typed: bad obj_kind "),
-                    F.col(obj_kind),
-                )
-            )
-        )
-    )
-    line = F.concat(
-        term_subj(subj),
-        F.lit(" "),
-        F.lit("<" + base),
-        escape_iri(pred),
-        F.lit("> "),
-        obj_term,
-        F.lit(" ."),
-    )
-    return df.select(line.alias(out_col))
-
-
-def parse_ntriples_typed(
-    df: DataFrame,
-    col: str = "ntriple",
-    base: str = "http://example.org/kg/",
-    bnode_prefix: str = "bnode:",
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-) -> DataFrame:
-    """Full-term-grammar N-Triples parsing: subjects may be IRIs or
-    blank nodes, objects may be IRIs, blank nodes, plain literals,
-    language-tagged literals (``"x"@en-US``) or datatyped literals
-    (``"1"^^<...#integer>``). Blank node labels SKOLEMIZE to
-    ``bnode_prefix + label`` (deterministic, per the W3C skolemization
-    rule — a distributed engine cannot carry document-scoped anonymous
-    terms through joins); :func:`to_ntriples_typed` inverts it.
-    Output: (subj, pred, obj, obj_kind in iri/bnode/literal, lang,
-    datatype) with NULL lang/datatype where absent. Malformed lines are
-    dropped (F7)."""
-
-    def strip_base(c: Column) -> Column:
-        return F.when(
-            c.startswith(base), F.substring(c, len(base) + 1, 2**31 - 1)
-        ).otherwise(c)
-
-    def skolem(c: Column) -> Column:
-        return F.concat(F.lit(bnode_prefix), F.substring(c, 3, 2**31 - 1))
-
-    line = F.col(col)
-    g = [F.regexp_extract(line, _NT_TYPED_RE, i) for i in range(9)]
-    is_subj_bnode = line.rlike(rf"^{_BNODE} ")
-    is_obj_iri = line.rlike(rf"^{_SUBJ} <[^<>]*> <[^<>]*> \.$")
-    is_obj_bnode = line.rlike(rf"^{_SUBJ} <[^<>]*> {_BNODE} \.$")
-    has_lang = line.rlike(rf"^{_SUBJ} <[^<>]*> {_LIT}@{_LANG} \.$")
-    has_dtype = line.rlike(rf"^{_SUBJ} <[^<>]*> {_LIT}\^\^<[^<>]*> \.$")
-    return (
-        df.where(line.rlike(_NT_TYPED_RE))
-        .select(
-            F.when(is_subj_bnode, skolem(g[2]))
-            .otherwise(strip_base(unescape_iri(g[1])))
-            .alias(subj),
-            strip_base(unescape_iri(g[3])).alias(pred),
-            F.when(is_obj_iri, strip_base(unescape_iri(g[4])))
-            .when(is_obj_bnode, skolem(g[5]))
-            .otherwise(unescape_literal(g[6]))
-            .alias(obj),
-            F.when(is_obj_iri, F.lit("iri"))
-            .when(is_obj_bnode, F.lit("bnode"))
-            .otherwise(F.lit("literal"))
-            .alias("obj_kind"),
-            F.when(has_lang, g[7]).alias("lang"),
-            F.when(has_dtype, unescape_iri(g[8])).alias("datatype"),
-        )
-    )
-
-
-def parse_nquads(
-    df: DataFrame,
-    col: str = "nquad",
-    base: str = "http://example.org/kg/",
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    graph: str = "graph",
-) -> DataFrame:
-    """Inverse of :func:`to_nquads`: the three terms plus the optional
-    graph label (NULL = default graph — a plain triple line IS a valid
-    quad line, so this parser also reads N-Triples files). Malformed
-    lines are dropped (F7)."""
-
-    def strip_base(c: Column) -> Column:
-        return F.when(
-            c.startswith(base), F.substring(c, len(base) + 1, 2**31 - 1)
-        ).otherwise(c)
-
-    line = F.col(col)
-    s = F.regexp_extract(line, _NQ_LINE_RE, 1)
-    p = F.regexp_extract(line, _NQ_LINE_RE, 2)
-    o_iri = F.regexp_extract(line, _NQ_LINE_RE, 3)
-    o_lit = F.regexp_extract(line, _NQ_LINE_RE, 4)
-    g = F.regexp_extract(line, _NQ_LINE_RE, 5)
-    is_iri = line.rlike(r'^<[^<>]*> <[^<>]*> <[^<>]*>(?: <[^<>]*>)? \.$')
-    has_graph = line.rlike(
-        r'^<[^<>]*> <[^<>]*> (?:<[^<>]*>|"(?:[^"\\]|\\.)*") <[^<>]*> \.$'
-    )
-    return (
-        df.where(line.rlike(_NQ_LINE_RE))
-        .select(
-            strip_base(unescape_iri(s)).alias(subj),
-            strip_base(unescape_iri(p)).alias(pred),
-            F.when(is_iri, strip_base(unescape_iri(o_iri)))
-            .otherwise(unescape_literal(o_lit))
-            .alias(obj),
-            F.when(has_graph, strip_base(unescape_iri(g))).alias(graph),
             is_iri.alias("obj_is_iri"),
         )
     )
@@ -560,87 +319,5 @@ def parse_turtle(
             .otherwise(strip_close(term(o_raw)))
             .alias(obj),
             (~is_lit).alias("obj_is_iri"),
-        )
-    )
-
-
-def to_jsonld(
-    df: DataFrame,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    base: str = "http://example.org/kg/",
-    obj_is_iri=True,
-    out_col: str = "jsonld",
-) -> DataFrame:
-    """JSON-LD (expanded form) export of the canonical triple set —
-    the web-consumer interchange format beside N-Triples (machine) and
-    Turtle (human): ONE JSON object per subject,
-    ``{"@id": "<iri>", "<pred iri>": [{"@id": ...} | {"@value": ...},
-    ...], ...}`` — predicates and objects sorted, so the document is
-    deterministic; same two subject-keyed hash aggregates as
-    :func:`to_turtle`. The ECHAR table doubles as the JSON escape
-    table (``\\ " \\n \\r \\t`` spell identically), and IRIs are
-    JSON-safe after :func:`escape_iri` (quote and backslash
-    percent-encode). Serialize-ONLY by design: generic JSON-LD parsing
-    needs a real JSON parser (dynamic keys defeat ``from_json``
-    schemas, and a grammar regex cannot balance brackets inside string
-    values) — ingest through N-Triples/Turtle instead; the round trip
-    is pinned in tests via ``json.loads``.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    if isinstance(obj_is_iri, bool):
-        obj_is_iri = F.lit(obj_is_iri)
-
-    # escape_iri leaves control characters alone (the N-Triples IRI
-    # round trip carries them verbatim); JSON forbids raw controls in
-    # strings, so the JSON-LD path percent-encodes the ones this
-    # engine's escape table can produce — still IRI-flavored, and
-    # urllib-unquotable together with the rest of the chain
-    def _json_iri(col):
-        return _chain_replace(
-            escape_iri(col), [("\n", "%0A"), ("\r", "%0D"), ("\t", "%09")]
-        )
-
-    s_t = F.concat(F.lit('"' + base), _json_iri(subj), F.lit('"'))
-    p_t = F.concat(F.lit('"' + base), _json_iri(pred), F.lit('"'))
-    o_t = F.when(
-        obj_is_iri,
-        F.concat(F.lit('{"@id":"' + base), _json_iri(obj), F.lit('"}')),
-    ).otherwise(
-        F.concat(F.lit('{"@value":"'), escape_literal(obj), F.lit('"}'))
-    )
-    per_pred = (
-        df.select(
-            F.col(subj).alias("_s"), s_t.alias("_st"),
-            p_t.alias("_pt"), o_t.alias("_ot"),
-        )
-        .groupBy("_s", "_st", "_pt")
-        .agg(
-            F.concat(
-                F.lit("["),
-                F.array_join(F.array_sort(F.collect_set("_ot")), ","),
-                F.lit("]"),
-            ).alias("_objs")
-        )
-    )
-    return (
-        per_pred.groupBy("_s", "_st")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pt", "_objs"))),
-                    lambda r: F.concat(r["_pt"], F.lit(":"), r["_objs"]),
-                ),
-                ",",
-            ).alias("_preds")
-        )
-        .select(
-            F.col("_s").alias(subj),
-            F.concat(
-                F.lit('{"@id":'), F.col("_st"), F.lit(","),
-                F.col("_preds"), F.lit("}"),
-            ).alias(out_col),
         )
     )

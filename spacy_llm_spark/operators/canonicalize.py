@@ -622,52 +622,3 @@ def canonical_edges(
             *[c for c in edges.columns if c not in ("subj", "pred", "obj")],
         )
     )
-
-
-def modal_label(
-    df: DataFrame,
-    key_cols,
-    label_col: str,
-    out_col: str = "label",
-    count_col: str = "n_occurrences",
-) -> DataFrame:
-    """The modal (most frequent) label per key — the canonical
-    display-name selection step of KG construction: after mentions
-    collapse into entities, each entity needs ONE preferred surface
-    form, and corpus frequency with a deterministic tie-break (lexical
-    min among the tied) is the standard truth-discovery vote.
-
-    Two keyed aggregates, nothing else: (key, label) occurrence counts
-    with map-side partials, then one min-struct aggregate per key over
-    (-n, label) — the (max count, min label) order without a window
-    (no per-key sort, no rank shuffle), the same argmax discipline as
-    ``label_propagation``. NULL labels are excluded from the vote.
-
-    Scale shape: both shuffles are keyed on the entity id; the second
-    input is already (entities x distinct surfaces)-scale, far below
-    mention scale. Reference analogue: none — the reference keeps one
-    doc's ents in memory and never aggregates across a corpus; cited
-    for parity accounting.
-    """
-    if isinstance(key_cols, str):
-        key_cols = [key_cols]
-    if not key_cols:
-        raise ValueError("modal_label: need at least one key column")
-    counts = (
-        df.where(F.col(label_col).isNotNull())
-        .groupBy(*key_cols, label_col)
-        .agg(F.count(F.lit(1)).alias("__n"))
-    )
-    best = counts.groupBy(*key_cols).agg(
-        F.min(
-            F.struct(
-                (-F.col("__n")).alias("neg_n"),
-                F.col(label_col).alias("lbl"),
-            )
-        ).alias("__m")
-    )
-    return best.select(
-        *key_cols,
-        F.col("__m.lbl").alias(out_col),
-        (-F.col("__m.neg_n")).cast("long").alias(count_col),
-    )

@@ -1242,215 +1242,6 @@ def duplicated_ngram_stats(
     )
 
 
-def dup_ngram_index(
-    docs: DataFrame,
-    n: int = 3,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Persistable duplicated-span index: per-doc DISTINCT token n-grams
-    as (id_col, gram) rows, param-stamped in the column name like every
-    persisted index in this family (``_fmt_v2_ng_n3``).
-
-    Built ONCE over the standing corpus; daily batches then maintain
-    stats through ``dup_ngram_stats_probe`` without ever re-shingling
-    history. Store it bucketed on ``gram`` (sources/bucketed.py) and the
-    count derivation + crossing joins elide their Exchanges.
-    """
-    from ..functions.text import ngrams_expr
-
-    stamp = _index_stamp("ng", n=n)
-    return docs.select(
-        F.col(id_col),
-        F.explode(F.array_distinct(ngrams_expr(text_col, n))).alias("gram"),
-    ).withColumn(stamp, F.lit(True))
-
-
-def dup_ngram_counts(index_grams: DataFrame, *, n: int = 3) -> DataFrame:
-    """(gram, nd): distinct-document count per gram — the aggregate half
-    of the persisted dup-ngram index (rows are per-doc distinct, so
-    count(*) IS the doc count). Same stamp as the gram index."""
-    stamp = _index_stamp("ng", n=n)
-    _check_index_format(index_grams, "dup_ngram_counts", stamp)
-    return (
-        index_grams.groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("nd"))
-        .withColumn(stamp, F.lit(True))
-    )
-
-
-def dup_ngram_stats_probe(
-    index_grams: DataFrame,
-    index_counts: DataFrame,
-    prior_stats: DataFrame,
-    new_docs: DataFrame,
-    *,
-    n: int = 3,
-    min_docs: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Incrementally maintain ``duplicated_ngram_stats`` under an
-    append-only batch: returns ``(stats, new_index_grams,
-    new_index_counts)`` where ``stats`` over (old ∪ new) is bit-equal to
-    a full recompute (shared oracle) and the returned index frames feed
-    the next probe.
-
-    The monotonicity trick that makes this increment-proportional:
-    document counts only GROW under append, so a gram's duplicated-flag
-    can only flip 0→1, and it flips exactly for the "crossed" grams
-    (old nd < min_docs <= merged nd) — a subset of the BATCH's grams,
-    batch-scale by construction. An old doc's new dup-gram count is then
-    simply ``prior + #crossed grams it contains``; no old doc is ever
-    re-shingled and no old gram list is re-aggregated. Per batch:
-
-    - batch shingle + count: batch-scale;
-    - count merge: ONE outer join keyed on gram (bucket the counts
-      table on gram to elide the Exchange at scale);
-    - crossed-gram increments: the history gram table is scanned
-      narrow and joined against the batch-scale crossed set (AQE
-      broadcasts it) — the history is never shuffled;
-    - old-stat update: one join keyed on the doc id against the
-      increment slice (touched docs only).
-
-    ``min_docs`` and ``prior_stats`` must be the pair used to build the
-    prior stats — the stamp pins ``n`` (the shingle formula) but cannot
-    see what threshold produced ``prior_stats``; a mismatched threshold
-    is a caller bug the equivalence tests would catch.
-
-    Requires old/new doc ids disjoint (append-only corpus), like every
-    incremental probe in this family.
-    """
-    from ..functions.text import ngrams_expr
-
-    stamp = _index_stamp("ng", n=n)
-    _check_index_format(index_grams, "dup_ngram_stats_probe(grams)", stamp)
-    _check_index_format(index_counts, "dup_ngram_stats_probe(counts)", stamp)
-
-    new_pg = new_docs.select(
-        F.col(id_col),
-        F.explode_outer(F.array_distinct(ngrams_expr(text_col, n))).alias("gram"),
-    )
-    batch_counts = (
-        new_pg.where(F.col("gram").isNotNull())
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("bnd"))
-    )
-    merged = (
-        index_counts.select("gram", "nd")
-        .join(batch_counts, "gram", "full")
-        .select(
-            "gram",
-            F.coalesce("nd", F.lit(0)).alias("old_nd"),
-            (F.coalesce("nd", F.lit(0)) + F.coalesce("bnd", F.lit(0))).alias("mnd"),
-        )
-    )
-    crossed = merged.where(
-        (F.col("old_nd") < min_docs) & (F.col("mnd") >= min_docs)
-    ).select("gram")
-    increments = (
-        index_grams.select(id_col, "gram")
-        .join(crossed, "gram")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_inc"))
-    )
-    updated_old = prior_stats.join(increments, id_col, "left").select(
-        F.col(id_col),
-        F.col("n_grams"),
-        (F.col("n_dup_grams") + F.coalesce("_inc", F.lit(0)))
-        .cast("long")
-        .alias("n_dup_grams"),
-        F.round(
-            F.when(
-                F.col("n_grams") > 0,
-                (F.col("n_dup_grams") + F.coalesce("_inc", F.lit(0)))
-                / F.col("n_grams"),
-            ).otherwise(F.lit(0.0)),
-            6,
-        ).alias("dup_ratio"),
-    )
-    dup_set = merged.where(F.col("mnd") >= min_docs).select("gram")
-    new_flagged = (
-        new_pg.where(F.col("gram").isNotNull())
-        .join(dup_set, "gram", "left_semi")
-        .groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_nd"))
-    )
-    new_stats = (
-        new_pg.groupBy(id_col)
-        .agg(F.sum(F.col("gram").isNotNull().cast("long")).alias("n_grams"))
-        .join(new_flagged, id_col, "left")
-        .select(
-            F.col(id_col),
-            F.col("n_grams").cast("long").alias("n_grams"),
-            F.coalesce("_nd", F.lit(0)).cast("long").alias("n_dup_grams"),
-            F.round(
-                F.when(
-                    F.col("n_grams") > 0,
-                    F.coalesce("_nd", F.lit(0)) / F.col("n_grams"),
-                ).otherwise(F.lit(0.0)),
-                6,
-            ).alias("dup_ratio"),
-        )
-    )
-    stats = updated_old.unionByName(new_stats)
-    new_index_grams = index_grams.unionByName(
-        new_pg.where(F.col("gram").isNotNull()).withColumn(stamp, F.lit(True))
-    )
-    new_index_counts = merged.select(
-        "gram", F.col("mnd").alias("nd")
-    ).withColumn(stamp, F.lit(True))
-    return stats, new_index_grams, new_index_counts
-
-
-def scoped_dup_pairs(
-    docs: DataFrame,
-    scope_col: str,
-    pairs: DataFrame | None = None,
-    *,
-    id_col: str = "doc_id",
-    **lsh_kwargs,
-):
-    """Near-dup pairs restricted to the SAME scope (language, repo,
-    split...) — the production "dedupe within language" shape.
-
-    Deliberately a post-filter over the unscoped pair stream (two
-    id-keyed joins against the narrow (id, scope) map + one equality
-    filter) rather than folding the scope into the LSH bucket key:
-
-    - ONE persisted index serves every scoping choice — a scope-keyed
-      bucket formula would fork the index (and its _fmt stamp) per
-      consumer, defeating the shared incremental-probe story;
-    - the waste is bounded by how often DISSIMILAR scopes collide in a
-      band bucket, which banding already makes rare — cross-scope
-      near-dups are exactly the pairs that would have shared buckets,
-      and on a multilingual web corpus those are the translation/
-      boilerplate pairs one usually WANTS to at least count before
-      dropping.
-
-    ``pairs``: a precomputed pair frame (any of the dup-pair family —
-    minhash/simhash/embedding/lexical — with id_a/id_b columns); default
-    builds ``minhash_lsh_dup_pairs(docs, **lsh_kwargs)``.
-    """
-    if pairs is None:
-        pairs = minhash_lsh_dup_pairs(docs, id_col=id_col, **lsh_kwargs)
-    scope = docs.select(F.col(id_col), F.col(scope_col))
-    sa = scope.select(
-        F.col(id_col).alias("id_a"), F.col(scope_col).alias("_scope_a")
-    )
-    sb = scope.select(
-        F.col(id_col).alias("id_b"), F.col(scope_col).alias("_scope_b")
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .where(F.col("_scope_a").eqNullSafe(F.col("_scope_b")))
-        .withColumn("scope", F.col("_scope_a"))
-        .drop("_scope_a", "_scope_b")
-    )
-
-
 # ---------------------------------------------------------------------------
 # SemDeDup: semantic dedup via k-means cells + within-cell exact cosine
 # ---------------------------------------------------------------------------
@@ -1554,122 +1345,6 @@ def semantic_dedup(
     )
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(dropped, id_col, "left_anti")
-
-
-def _centroid_digest(centroids) -> str:
-    """Deterministic 10-hex fingerprint of the centroid matrix — the
-    build param that decides every cell assignment."""
-    import hashlib
-
-    arr = np.ascontiguousarray(np.asarray(centroids, dtype=np.float64))
-    return hashlib.sha256(arr.tobytes()).hexdigest()[:10]
-
-
-def semantic_cell_index(
-    df: DataFrame,
-    centroids,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Persisted SemDeDup index: the corpus with its cell assignment
-    materialized, stamped (like the LSH family) with the centroid
-    digest so a probe built against DIFFERENT centroids refuses
-    schema-level instead of silently pairing across misaligned cells.
-    Standing corpus is assigned ONCE; daily batches probe it."""
-    from .similarity import assign_ivf_cells
-
-    cents = np.asarray(centroids, dtype=np.float64)
-    assigned = assign_ivf_cells(df.select(id_col, vec_col), cents, vec_col=vec_col)
-    return assigned.withColumn(
-        _index_stamp("sem", c=len(cents), d=_centroid_digest(cents)),
-        F.lit(LSH_INDEX_FORMAT),
-    )
-
-
-def semantic_dedup_probe(
-    new_batch: DataFrame,
-    index: DataFrame,
-    centroids,
-    *,
-    threshold: float = 0.95,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    include_new_pairs: bool = True,
-    max_cell_rows: int = 200_000,
-) -> DataFrame:
-    """Incremental SemDeDup: near-dup pairs TOUCHING the new batch —
-    (new x indexed) plus, when ``include_new_pairs``, (new x new).
-
-    pairs(index corpus) ∪ probe(new) ≡ semantic_dup_pairs(corpus ∪ new)
-    — the same persisted-index contract as minhash_lsh_probe /
-    embedding_lsh_probe: the standing corpus is never re-assigned, and
-    the per-cell kernel computes the (n_new x n_cell) similarity block,
-    NOT the full cell gram matrix, so probe cost scales with the batch.
-    Ids must not collide across batch and index (same contract as the
-    LSH probes)."""
-    cents = np.asarray(centroids, dtype=np.float64)
-    _check_index_format(
-        index, "semantic_dedup_probe",
-        _index_stamp("sem", c=len(cents), d=_centroid_digest(cents)),
-    )
-    from .similarity import assign_ivf_cells
-
-    id_type = new_batch.schema[id_col].dataType
-    new_assigned = assign_ivf_cells(
-        new_batch.select(id_col, vec_col), cents, vec_col=vec_col
-    ).withColumn("_new", F.lit(True))
-    old = index.select(id_col, vec_col, "ivf_cell").withColumn("_new", F.lit(False))
-    both = old.unionByName(new_assigned)
-
-    out_schema = StructType(
-        [
-            StructField("id_a", id_type),
-            StructField("id_b", id_type),
-            StructField("cos_sim", DoubleType()),
-        ]
-    )
-    empty = pd.DataFrame({"id_a": [], "id_b": [], "cos_sim": []})
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        n = len(pdf)
-        if n > max_cell_rows:
-            raise ValueError(
-                f"semantic_dedup_probe: cell with {n} rows exceeds "
-                f"max_cell_rows={max_cell_rows}; raise n_cells or "
-                "max_cell_rows"
-            )
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
-        is_new = pdf["_new"].to_numpy()
-        if not is_new.any() or n < 2:
-            return empty
-        V = np.asarray([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        norms = np.linalg.norm(V, axis=1)
-        norms[norms == 0.0] = 1.0
-        Vn = V / norms[:, None]
-        B = Vn[is_new] @ Vn.T  # (n_new x n_cell) block only
-        ids = pdf[id_col].to_numpy()
-        new_ids = ids[is_new]
-        bi, bj = np.nonzero(B >= threshold)
-        a, b = new_ids[bi], ids[bj]
-        keep = a != b
-        if not include_new_pairs:
-            keep &= ~is_new[bj]
-        else:
-            # drop the new-x-new duplicates the block emits twice
-            keep &= ~(is_new[bj] & (a > b))
-        lo, hi = np.minimum(a, b), np.maximum(a, b)
-        return pd.DataFrame(
-            {
-                "id_a": lo[keep],
-                "id_b": hi[keep],
-                "cos_sim": np.round(B[bi, bj][keep], 6),
-            }
-        )
-
-    return both.groupBy("ivf_cell").applyInPandas(
-        lambda _key, pdf: per_cell(pdf), out_schema
-    )
 
 
 def token_window_lines(
@@ -1793,154 +1468,3 @@ def _reassemble_lines(
             F.count(F.lit(1)).alias("_n_kept"),
         )
     )
-
-
-def line_index(
-    docs: DataFrame,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lines: Column | None = None,
-) -> DataFrame:
-    """Persistable line-slot index for incremental line dedup: one row
-    per (id, _pos, _line) slot, version-stamped like every persisted
-    index in this family. The line UNIT is a caller-supplied Column
-    expression and cannot be encoded in the stamp — build the index and
-    every probe with the same unit (the equivalence tests pin this)."""
-    stamp = _index_stamp("ld")
-    lines = lines if lines is not None else newline_lines(text_col)
-    return (
-        docs.select(F.col(id_col), F.posexplode(lines).alias("_pos", "_line"))
-        .withColumn(stamp, F.lit(True))
-    )
-
-
-def line_counts(index_lines: DataFrame) -> DataFrame:
-    """(_line, c): corpus-wide slot count per line — the aggregate half
-    of the persisted line index. Same stamp."""
-    stamp = _index_stamp("ld")
-    _check_index_format(index_lines, "line_counts", stamp)
-    return (
-        index_lines.groupBy("_line")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .withColumn(stamp, F.lit(True))
-    )
-
-
-def line_dedup_probe(
-    index_lines: DataFrame,
-    index_counts: DataFrame,
-    prior_clean: DataFrame,
-    new_docs: DataFrame,
-    max_occurrences: int = 1,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    lines: Column | None = None,
-    delim: str = "\n",
-):
-    """Incrementally maintain ``remove_duplicated_lines`` under an
-    append-only batch: returns ``(clean, new_index_lines,
-    new_index_counts)`` where ``clean`` over (old ∪ new) is bit-equal to
-    a full recompute (shared oracle) and the index frames feed the next
-    probe.
-
-    Same monotonicity trick as ``dup_ngram_stats_probe``: slot counts
-    only GROW under append, so a line flips kept→removed exactly when it
-    CROSSES ``max_occurrences`` (old c <= k < merged c) — a subset of
-    the batch's lines, batch-scale by construction. Only the old docs
-    containing a crossed line are rebuilt (their slot rows come from the
-    standing index, scanned once keyed on the crossed set and the
-    affected ids — never re-split from text); every other old doc's
-    output row passes through untouched. Per batch:
-
-    - batch split + count: batch-scale;
-    - count merge: ONE outer join keyed on the line (bucket the counts
-      table on _line at scale);
-    - crossed-line slice: index scan against the batch-scale crossed
-      set (AQE broadcasts it);
-    - rebuild: reassembly aggregate over the affected docs' slots only.
-
-    ``max_occurrences`` must match the value that produced
-    ``prior_clean`` — the stamp pins the index format, the threshold is
-    the caller's contract (the equivalence tests would catch a drift).
-    Requires old/new doc ids disjoint (append-only corpus).
-    """
-    if max_occurrences < 1:
-        raise ValueError(
-            f"max_occurrences must be >= 1, got {max_occurrences}"
-        )
-    stamp = _index_stamp("ld")
-    _check_index_format(index_lines, "line_dedup_probe(lines)", stamp)
-    _check_index_format(index_counts, "line_dedup_probe(counts)", stamp)
-    lines = lines if lines is not None else newline_lines(text_col)
-
-    new_slots_all = new_docs.select(
-        F.col(id_col), F.posexplode_outer(lines).alias("_pos", "_line")
-    )
-    new_slots = new_slots_all.where(F.col("_line").isNotNull())
-    batch_counts = new_slots.groupBy("_line").agg(
-        F.count(F.lit(1)).alias("bc")
-    )
-    merged = (
-        index_counts.select("_line", "c")
-        .join(batch_counts, "_line", "full")
-        .select(
-            "_line",
-            F.coalesce("c", F.lit(0)).alias("old_c"),
-            (F.coalesce("c", F.lit(0)) + F.coalesce("bc", F.lit(0))).alias(
-                "mc"
-            ),
-        )
-    )
-    over = merged.where(F.col("mc") > max_occurrences).select("_line")
-    crossed = merged.where(
-        (F.col("old_c") <= max_occurrences)
-        & (F.col("mc") > max_occurrences)
-    ).select("_line")
-
-    hist = index_lines.select(id_col, "_pos", "_line")
-    affected_ids = hist.join(crossed, "_line").select(id_col).distinct()
-    affected_slots = hist.join(affected_ids, id_col, "left_semi")
-    affected_totals = affected_slots.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("_n_lines")
-    )
-    rebuilt_old = (
-        affected_totals.join(
-            _reassemble_lines(affected_slots, over, id_col, delim),
-            id_col,
-            "left",
-        ).select(
-            F.col(id_col),
-            F.coalesce("_clean", F.lit("")).alias("clean_text"),
-            F.coalesce("_n_kept", F.lit(0)).cast("long").alias("n_lines_kept"),
-            (F.col("_n_lines") - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_lines_removed"),
-        )
-    )
-    untouched_old = prior_clean.join(affected_ids, id_col, "left_anti")
-
-    new_totals = new_slots_all.groupBy(id_col).agg(
-        F.sum(F.col("_line").isNotNull().cast("long")).alias("_n_lines")
-    )
-    new_clean = (
-        new_totals.join(
-            _reassemble_lines(new_slots, over, id_col, delim), id_col, "left"
-        ).select(
-            F.col(id_col),
-            F.coalesce("_clean", F.lit("")).alias("clean_text"),
-            F.coalesce("_n_kept", F.lit(0)).cast("long").alias("n_lines_kept"),
-            (F.col("_n_lines") - F.coalesce("_n_kept", F.lit(0)))
-            .cast("long")
-            .alias("n_lines_removed"),
-        )
-    )
-    clean = untouched_old.unionByName(rebuilt_old).unionByName(new_clean)
-    new_index_lines = index_lines.unionByName(
-        new_slots.withColumn(stamp, F.lit(True))
-    )
-    new_index_counts = merged.select(
-        "_line", F.col("mc").alias("c")
-    ).withColumn(stamp, F.lit(True))
-    return clean, new_index_lines, new_index_counts

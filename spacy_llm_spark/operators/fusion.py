@@ -130,205 +130,3 @@ def fuse_facts(
         F.round(-F.col("_t.negc"), 6).alias("confidence"),
         F.col("_t.n").alias("n_sources"),
     )
-
-
-def source_trust_table(
-    claims: DataFrame,
-    source: str = "source",
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    iters: int = 3,
-    prior: float = 0.8,
-    quantum: int = 10,
-) -> DataFrame:
-    """The PERSISTED artifact of a fusion run: the ``(source, trust)``
-    table after ``iters - 1`` trust updates — exactly the trust
-    :func:`fuse_facts` scores its final round with, so
-    ``fuse_facts(c, iters=k)`` ==
-    ``fuse_facts_with_trust(c, source_trust_table(c, iters=k))``
-    bit-for-bit (test-pinned). Write this once over the standing
-    corpus; nightly batches then score incrementally against it."""
-    if iters < 1:
-        raise ValueError(f"iters must be >= 1, got {iters}")
-    if not (0.0 < prior <= _TRUST_CAP):
-        raise ValueError(f"prior must be in (0, {_TRUST_CAP}], got {prior}")
-    c = fs.cut_lineage(
-        claims.select(
-            F.col(source).alias("src"), F.col(subj).alias("s"),
-            F.col(pred).alias("p"), F.col(obj).alias("o"),
-        ).distinct()
-    )
-    trust = c.select("src").distinct().select(
-        "src", F.lit(float(prior)).alias("t")
-    )
-    for _ in range(iters - 1):
-        conf = (
-            c.join(trust, "src")
-            .groupBy("s", "p", "o")
-            .agg(
-                F.round(1.0 - F.product(1.0 - F.col("t")), quantum).alias("c")
-            )
-        )
-        trust = fs.cut_lineage(
-            c.join(conf, ["s", "p", "o"])
-            .groupBy("src")
-            .agg(
-                F.least(
-                    F.round(F.avg("c"), quantum), F.lit(_TRUST_CAP)
-                ).alias("t")
-            )
-        )
-    return trust.select(
-        F.col("src").alias(source), F.col("t").alias("trust")
-    )
-
-
-def fuse_facts_with_trust(
-    claims: DataFrame,
-    trust: DataFrame,
-    source: str = "source",
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    prior: float = 0.8,
-    quantum: int = 10,
-) -> DataFrame:
-    """The INCREMENTAL fusion form — the stale-index pattern the IVF /
-    LSH families use, applied to truth discovery: score claims with a
-    FROZEN ``(source, trust)`` table (:func:`source_trust_table`) in
-    ONE probabilistic-OR pass + argmax — no iteration, no global
-    fixpoint, so a nightly claim batch fuses at batch cost while the
-    trust table stands. Sources unseen by the table enter at ``prior``
-    (the cold-start rule). Equivalence: with the table trained on the
-    SAME claims, output == :func:`fuse_facts` exactly; with appended
-    claims the trust is stale by construction — watch
-    :func:`trust_drift` and retrain on its signal, exactly like
-    ``similarity.ivf_index_drift``."""
-    if not (0.0 < prior <= _TRUST_CAP):
-        raise ValueError(f"prior must be in (0, {_TRUST_CAP}], got {prior}")
-    c = claims.select(
-        F.col(source).alias("src"), F.col(subj).alias("s"),
-        F.col(pred).alias("p"), F.col(obj).alias("o"),
-    ).distinct()
-    tr = trust.select(
-        F.col(source).alias("src"), F.col("trust").alias("t")
-    )
-    joined = c.join(tr, "src", "left").withColumn(
-        "t", F.coalesce("t", F.lit(float(prior)))
-    )
-    conf = joined.groupBy("s", "p", "o").agg(
-        F.round(1.0 - F.product(1.0 - F.col("t")), quantum).alias("c")
-    )
-    n_src = c.groupBy("s", "p", "o").agg(F.countDistinct("src").alias("n"))
-    top = conf.groupBy("s", "p").agg(
-        F.min(
-            F.struct((-F.col("c")).alias("negc"), F.col("o").alias("obj"))
-        ).alias("_t")
-    )
-    return (
-        top.select(
-            "s", "p", F.col("_t.obj").alias("o"),
-            F.round(-F.col("_t.negc"), 6).alias("confidence"),
-        )
-        .join(n_src, ["s", "p", "o"])
-        .select(
-            F.col("s").alias(subj), F.col("p").alias(pred),
-            F.col("o").alias(obj), "confidence",
-            F.col("n").alias("n_sources"),
-        )
-    )
-
-
-def trust_drift(
-    claims: DataFrame,
-    trust: DataFrame,
-    source: str = "source",
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    iters: int = 3,
-    prior: float = 0.8,
-    quantum: int = 10,
-) -> DataFrame:
-    """Staleness metric for a frozen trust table (the retrain trigger,
-    mirroring ``similarity.ivf_index_drift``'s fresh-recompute
-    comparison): RETRAIN a trust table on the current claims
-    (:func:`source_trust_table`, same ``iters``/``prior``) and report
-    ``(source, trust, trust_new, drift)`` — drift = |Δ|, 6 dp; sources
-    absent from the frozen table compare against the cold-start
-    ``prior``. Zero on the table's own training claims by
-    construction. Like the IVF recall metric, this COSTS a retrain —
-    schedule it, don't run it per batch; the per-batch path is
-    :func:`fuse_facts_with_trust` alone."""
-    fresh = source_trust_table(
-        claims, source=source, subj=subj, pred=pred, obj=obj,
-        iters=iters, prior=prior, quantum=quantum,
-    ).select(F.col(source), F.col("trust").alias("t_new"))
-    frozen = trust.select(F.col(source), F.col("trust").alias("t"))
-    return (
-        fresh.join(frozen, source, "left")
-        .withColumn("t", F.coalesce("t", F.lit(float(prior))))
-        .select(
-            F.col(source), F.col("t").alias("trust"),
-            F.col("t_new").alias("trust_new"),
-            F.round(F.abs(F.col("t_new") - F.col("t")), 6).alias("drift"),
-        )
-    )
-
-
-def conflict_report(
-    claims: DataFrame,
-    trust: DataFrame,
-    source: str = "source",
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    prior: float = 0.8,
-    quantum: int = 10,
-) -> DataFrame:
-    """The AUDIT view of a fusion run — every claimed value per data
-    item with its confidence and the decision, not just the winner
-    :func:`fuse_facts_with_trust` keeps: one row per ``(subj, pred,
-    obj)`` with ``confidence``, ``n_sources``, ``n_values`` (how many
-    distinct objects compete for the item), and ``is_winner``. Filter
-    ``NOT is_winner AND n_values > 1`` for the rejected-conflict
-    queue a curation workflow reviews; items with ``n_values = 1``
-    were never contested. Same frozen-trust scoring as the
-    incremental probe (unseen sources at ``prior``), so the report
-    explains exactly what that path decided. Adds ONE item-keyed
-    count to the probe's aggregates; no extra shuffles."""
-    if not (0.0 < prior <= _TRUST_CAP):
-        raise ValueError(f"prior must be in (0, {_TRUST_CAP}], got {prior}")
-    c = claims.select(
-        F.col(source).alias("src"), F.col(subj).alias("s"),
-        F.col(pred).alias("p"), F.col(obj).alias("o"),
-    ).distinct()
-    tr = trust.select(F.col(source).alias("src"), F.col("trust").alias("t"))
-    joined = c.join(tr, "src", "left").withColumn(
-        "t", F.coalesce("t", F.lit(float(prior)))
-    )
-    conf = joined.groupBy("s", "p", "o").agg(
-        F.round(1.0 - F.product(1.0 - F.col("t")), quantum).alias("c"),
-        F.countDistinct("src").alias("n"),
-    )
-    per_item = conf.groupBy("s", "p").agg(
-        F.min(
-            F.struct((-F.col("c")).alias("negc"), F.col("o").alias("obj"))
-        ).alias("_t"),
-        F.count(F.lit(1)).alias("n_values"),
-    )
-    return (
-        conf.join(per_item, ["s", "p"])
-        .select(
-            F.col("s").alias(subj), F.col("p").alias(pred),
-            F.col("o").alias(obj),
-            F.round("c", 6).alias("confidence"),
-            F.col("n").alias("n_sources"),
-            "n_values",
-            (
-                (F.col("c") == -F.col("_t.negc"))
-                & (F.col("o") == F.col("_t.obj"))
-            ).alias("is_winner"),
-        )
-    )

@@ -1064,102 +1064,6 @@ def negative_triples(
     return neg.join(positives, [src, pred, "neg_obj"], "left_anti")
 
 
-def random_walks(
-    edges: DataFrame,
-    walks_per_vertex: int = 2,
-    walk_length: int = 4,
-    seed: int | str = 42,
-    src: str = "subj",
-    dst: str = "obj",
-) -> DataFrame:
-    """Deterministic DeepWalk-style random-walk corpus over the
-    undirected distinct edge set: ``walks_per_vertex`` walks of
-    ``walk_length`` vertices from every vertex, emitted as
-    ``(walk_id, walk)`` with the walk a space-joined vertex string —
-    the training input for skip-gram KG-embedding models (DeepWalk,
-    node2vec p=q=1).
-
-    Pseudo-randomness is a seeded hash argmin, not an RNG: at step t,
-    walk w moves to the neighbor n minimizing
-    sha256(seed US w US t US n) — the same 60-bit conv-hex idiom as
-    ``negative_triples`` / ``corpus_split``, so the walk set is
-    bit-reproducible on any cluster size AND expressible in ANSI SQL
-    (the oracle unrolls one CTE per step with
-    ``row_number() OVER (ORDER BY hv, n) = 1``, which matches
-    ``F.min(struct(hv, n))`` exactly; hash ties are broken by the
-    neighbor id in both engines).
-
-    Scale shape: per step, ONE equi-join of the walk frontier against
-    the adjacency list (keyed on the current vertex — hub vertices fan
-    out by their degree, bounded by walks landing there, never
-    quadratic) and ONE min-struct aggregate keyed on the walk id; both
-    reuse hash partitionings and the state is lineage-cut per step.
-    State is O(V · walks_per_vertex) rows of O(walk_length) strings —
-    never materializes the neighborhood product. Every visited vertex
-    has >= 1 undirected neighbor by construction (vertices come from
-    the edge list and reachability preserves it), so walks never
-    dangle and always reach full length.
-
-    Reference analogue: none — spacy-llm emits triples
-    (spacy_llm/tasks/rel/task.py) but has no graph runtime; this is
-    the downstream embedding-corpus step a KG pipeline feeds.
-    """
-    if walks_per_vertex < 1:
-        raise ValueError(f"walks_per_vertex must be >= 1, got {walks_per_vertex}")
-    if walk_length < 1:
-        raise ValueError(f"walk_length must be >= 1, got {walk_length}")
-    und = _undirected_edges(edges, src, dst)
-    adj = und.select(F.col("lo").alias("p"), F.col("hi").alias("n")).unionByName(
-        und.select(F.col("hi").alias("p"), F.col("lo").alias("n"))
-    )
-    verts = adj.select(F.col("p").alias("v")).distinct()
-    state = fs.cut_lineage(
-        verts.select(
-            F.explode(
-                F.sequence(F.lit(0), F.lit(walks_per_vertex - 1))
-            ).alias("r"),
-            F.col("v"),
-        ).select(
-            F.concat_ws("#", F.col("v"), F.col("r")).alias("walk_id"),
-            F.col("v").alias("cur"),
-            F.col("v").alias("path"),
-        )
-    )
-    for step in range(1, walk_length):
-        hv = F.conv(
-            F.substring(
-                F.sha2(
-                    F.concat_ws(
-                        "\x1f",
-                        F.lit(str(seed)),
-                        F.col("walk_id"),
-                        F.lit(str(step)),
-                        F.col("n"),
-                    ),
-                    256,
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
-        picked = (
-            state.join(adj, state["cur"] == adj["p"])
-            .withColumn("_hv", hv)
-            .groupBy("walk_id", "path")
-            .agg(F.min(F.struct(F.col("_hv"), F.col("n"))).alias("_m"))
-        )
-        state = fs.cut_lineage(
-            picked.select(
-                "walk_id",
-                F.col("_m.n").alias("cur"),
-                F.concat_ws(" ", F.col("path"), F.col("_m.n")).alias("path"),
-            )
-        )
-    return state.select("walk_id", F.col("path").alias("walk"))
-
-
 def node2vec_walks(
     edges: DataFrame,
     walks_per_vertex: int = 2,
@@ -1173,8 +1077,8 @@ def node2vec_walks(
 ) -> DataFrame:
     """Second-order biased random walks (node2vec, Grover & Leskovec
     2016) over the undirected distinct edge set — the BFS/DFS-
-    interpolating walk corpus that generalizes :func:`random_walks`
-    (which is the ``w_return = w_in = w_out`` special case).
+    interpolating walk corpus (``w_return = w_in = w_out`` gives the
+    uniform DeepWalk walk).
 
     Weights are INTEGERS (node2vec's 1/p, 1/q scaled to a common
     denominator: p=0.5, q=0.25 with K=1 -> w_return=2, w_in=1,
@@ -1290,50 +1194,6 @@ def node2vec_walks(
             )
         )
     return state.select("walk_id", F.col("path").alias("walk"))
-
-
-def walk_context_pairs(
-    walks: DataFrame,
-    window: int = 2,
-    walk_col: str = "walk",
-) -> DataFrame:
-    """Skip-gram (center, context) pair counts from a random-walk
-    corpus — the step between :func:`random_walks` and any word2vec-
-    style KG-embedding trainer (DeepWalk/node2vec both train on exactly
-    these pairs; the counts are the co-occurrence matrix whose shifted
-    PMI word2vec implicitly factorizes, Levy & Goldberg 2014).
-
-    Per walk token the context positions are generated DIRECTLY with
-    ``sequence(i-window, i+window)`` filtered to the walk bounds — 2w
-    rows per token, never the token-squared blowup of exploding all
-    position pairs and filtering after. The plan is two generators and
-    ONE (center, context)-keyed count aggregate with map-side partials;
-    asymmetric windows at walk edges fall out of the bounds filter
-    (standard word2vec behavior). Reference analogue: none — cited for
-    parity accounting.
-    """
-    if window < 1:
-        raise ValueError("walk_context_pairs: window must be >= 1")
-    toks = walks.select(
-        F.split(F.col(walk_col), " ").alias("a")
-    ).select(
-        "a", F.posexplode("a").alias("i", "center")
-    )
-    ctx = toks.select(
-        "center",
-        "a",
-        F.explode(
-            F.expr(
-                f"filter(sequence(i - {int(window)}, i + {int(window)}),"
-                " j -> j != i AND j >= 0 AND j < size(a))"
-            )
-        ).alias("j"),
-    ).select(
-        "center", F.element_at("a", F.col("j") + 1).alias("context")
-    )
-    return ctx.groupBy("center", "context").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    )
 
 
 def shortest_paths(
@@ -1938,7 +1798,7 @@ def _compile_bgp(
     # segment is refused: SPARQL binds | LOOSER than /, so a/b|c means
     # (a/b)|c — an alternation of sequences this single-chain rewrite
     # cannot express; per-step alternation must be parenthesised
-    # (a/(b|c)), whole-sequence alternation needs match_bgp_union.
+    # (a/(b|c)); whole-sequence alternation is not supported.
     expanded = []
     for i, pat in enumerate(patterns):
         for t in pat:
@@ -1963,8 +1823,8 @@ def _compile_bgp(
                         f"match_bgp: bare | inside sequence step {seg!r} "
                         f"(pattern {i}) — SPARQL parses a/b|c as (a/b)|c, "
                         "which one pattern chain cannot express; "
-                        "parenthesise a per-step alternation (a/(b|c)) or "
-                        "use match_bgp_union for alternated sequences"
+                        "parenthesise a per-step alternation (a/(b|c)); "
+                        "alternated sequences are not supported"
                     )
             mids = [f"?__seq{i}_{j}" for j in range(len(segs) - 1)]
             chain = [pat[0], *mids, pat[2]]
@@ -2289,8 +2149,8 @@ def match_bgp(
     tighter binding than ``/``). A BARE ``|`` inside a sequence step is
     refused because SPARQL binds ``|`` looser than ``/`` (``a/b|c`` is
     ``(a/b)|c``, inexpressible as one chain) — parenthesise a per-step
-    alternation (``"a/(b|c)"``, one isin scan for that step) or use
-    :func:`match_bgp_union` for alternated sequences. ``!`` is the
+    alternation (``"a/(b|c)"``, one isin scan for that step);
+    alternated sequences are not supported. ``!`` is the
     negated property set (``"!p"``, ``"!(p|q)"``): ONE scan keeping
     every edge whose pred is NOT in the set; per the SPARQL grammar an
     NPS is a single step, so closure modifiers on it are refused.
@@ -2526,277 +2386,6 @@ def match_bgp(
     return out
 
 
-def match_bgp_union(
-    triples: DataFrame,
-    groups: list,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    distinct: bool = True,
-    allow_cartesian: bool = False,
-) -> DataFrame:
-    """SPARQL ``UNION`` of pattern groups: ``groups`` is a list of
-    pattern lists, each compiled exactly like :func:`match_bgp`, and
-    the solution sets are unioned. Variables a group does not mention
-    are NULL in its rows (SPARQL's *unbound*); the output has one
-    column per variable across ALL groups, sorted. ``distinct=True``
-    dedups across groups (``SELECT DISTINCT`` over the union);
-    ``False`` keeps SPARQL bag semantics — UNION ALL of the group
-    multisets, including cross-group duplicates.
-
-    The plan is the groups' plans stacked under one Union node — each
-    group keeps its own pushdown scans and join order, the NULL padding
-    is a zero-cost literal projection, and the optional trailing
-    distinct is the only added Exchange. Reference analogue: none —
-    cited for parity accounting.
-    """
-    if not groups or any(not g for g in groups):
-        raise ValueError("match_bgp_union: need >= 1 non-empty group")
-    parts = [
-        match_bgp(
-            triples,
-            g,
-            subj=subj,
-            pred=pred,
-            obj=obj,
-            distinct=False,
-            allow_cartesian=allow_cartesian,
-        )
-        for g in groups
-    ]
-    all_vars = sorted({v for p in parts for v in p.columns})
-    out = None
-    for p in parts:
-        padded = p.select(
-            *[
-                F.col(v) if v in p.columns
-                else F.lit(None).cast("string").alias(v)
-                for v in all_vars
-            ]
-        )
-        out = padded if out is None else out.unionByName(padded)
-    return out.distinct() if distinct else out
-
-
-_BGP_AGGS = {
-    "count", "count_distinct", "sum", "avg", "min", "max",
-    "sample", "group_concat",
-}
-
-
-def match_bgp_agg(
-    triples: DataFrame,
-    patterns: list,
-    group_by: list,
-    aggregates: list,
-    having: list | None = None,
-    order_by: list | None = None,
-    limit: int | None = None,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    distinct: bool = False,
-    **bgp_kwargs,
-) -> DataFrame:
-    """SPARQL aggregation over BGP solutions — ``SELECT (COUNT(?x) AS
-    ?n) ... WHERE { ... } GROUP BY ?g HAVING(...) ORDER BY ... LIMIT k``
-    compiled to the BGP join followed by ONE hash aggregate.
-
-    ``patterns`` (and any ``match_bgp`` keyword — ``optional``,
-    ``filters``, ``minus``, ``exists``/``not_exists``, ``values`` —
-    passed through ``bgp_kwargs``) define the solution set exactly as
-    :func:`match_bgp` does, with ``distinct=False`` by default because
-    SPARQL aggregates evaluate over the solution MULTISET (the bag the
-    group pattern produces), not its distinct projection; pass
-    ``distinct=True`` for the ``SELECT DISTINCT`` inner form.
-
-    ``group_by`` is a list of variables (``?`` optional); empty means
-    the SPARQL implicit single group (one global row). ``aggregates``
-    is a list of ``(func, var, alias)`` tuples — ``func`` one of
-    ``count`` (``var="*"`` for COUNT(*), else counts bound/non-NULL
-    solutions per the SPARQL COUNT(?x) rule), ``count_distinct``,
-    ``sum`` / ``avg`` (terms try_cast to double; non-numeric terms
-    become NULL and are skipped, SPARQL's error-solution elision — a
-    plain cast would THROW under Spark 4's default ANSI mode),
-    ``min`` / ``max`` (lexicographic on terms, numeric after an
-    explicit cast in a FILTER/projection upstream), ``sample``
-    (SPARQL leaves the choice open — pinned to MIN for determinism),
-    and ``group_concat`` (optionally ``(func, var, alias, sep)`` —
-    SPARQL leaves element order undefined, so the elements are sorted
-    before joining, making the result reproducible across engines and
-    partitionings). Aliases must not collide with group variables.
-
-    ``having`` is a list of SQL boolean strings over the group
-    variables and aggregate aliases (one post-aggregate Filter each);
-    ``order_by`` a list of ``"col"`` / ``"col desc"`` strings and
-    ``limit`` an int — together they compile to TakeOrderedAndProject
-    (top-k without a global sort) when both are present. ``order_by``
-    without ``limit`` is a full sort and is only worth it on
-    group-scale (already aggregated) output.
-
-    Plan shape: the BGP's pushdown scans + equi-joins feed ONE
-    partial+final hash aggregate keyed on ``group_by`` — no extra
-    shuffle beyond the aggregate's own Exchange; HAVING prunes
-    group-scale rows after the final aggregate. Reference analogue:
-    none — the reference has no query layer; cited for parity
-    accounting.
-    """
-    group_by = [v[1:] if v.startswith("?") else v for v in group_by]
-    if not aggregates:
-        raise ValueError("match_bgp_agg: need at least one aggregate")
-    bound = match_bgp(
-        triples, patterns, subj=subj, pred=pred, obj=obj,
-        distinct=distinct, **bgp_kwargs,
-    )
-    cols = set(bound.columns)
-    missing = [g for g in group_by if g not in cols]
-    if missing:
-        raise ValueError(
-            f"match_bgp_agg: group_by variable(s) {missing} not among "
-            f"the bound variables {sorted(cols)}"
-        )
-    exprs = []
-    seen_aliases = set(group_by)
-    for spec in aggregates:
-        func, var, alias, *rest = spec
-        sep = rest[0] if rest else " "
-        if rest and func != "group_concat":
-            raise ValueError(
-                f"match_bgp_agg: only group_concat takes a separator: {spec!r}"
-            )
-        var = var[1:] if isinstance(var, str) and var.startswith("?") else var
-        if func not in _BGP_AGGS:
-            raise ValueError(
-                f"match_bgp_agg: unknown aggregate {func!r} "
-                f"(supported: {sorted(_BGP_AGGS)})"
-            )
-        if alias in seen_aliases:
-            raise ValueError(
-                f"match_bgp_agg: alias {alias!r} collides with a group "
-                "variable or earlier alias"
-            )
-        seen_aliases.add(alias)
-        if var == "*":
-            if func != "count":
-                raise ValueError(
-                    f"match_bgp_agg: '*' is only valid for count, not {func}"
-                )
-            exprs.append(F.count(F.lit(1)).alias(alias))
-            continue
-        if var not in cols:
-            raise ValueError(
-                f"match_bgp_agg: aggregate variable ?{var} not among "
-                f"the bound variables {sorted(cols)}"
-            )
-        c = F.col(var)
-        if func == "count":
-            exprs.append(F.count(c).alias(alias))
-        elif func == "count_distinct":
-            exprs.append(F.count_distinct(c).alias(alias))
-        elif func == "sum":
-            exprs.append(F.sum(c.try_cast("double")).alias(alias))
-        elif func == "avg":
-            exprs.append(F.avg(c.try_cast("double")).alias(alias))
-        elif func == "min" or func == "sample":
-            exprs.append(F.min(c).alias(alias))
-        elif func == "max":
-            exprs.append(F.max(c).alias(alias))
-        else:  # group_concat — sorted for cross-engine determinism
-            exprs.append(
-                F.array_join(F.array_sort(F.collect_list(c)), sep).alias(alias)
-            )
-    out = bound.groupBy(*[F.col(g) for g in group_by]).agg(*exprs)
-    for hi, expr in enumerate(having or []):
-        try:
-            out = out.where(F.expr(expr))
-        except Exception as exc:
-            raise ValueError(
-                f"match_bgp_agg: having {hi} ({expr!r}) failed analysis "
-                f"over {sorted(seen_aliases)}"
-            ) from exc
-    if order_by:
-        sort_cols = []
-        for spec in order_by:
-            parts = spec.split()
-            col = F.col(parts[0])
-            if len(parts) == 2 and parts[1].lower() == "desc":
-                col = col.desc()
-            elif len(parts) > 1:
-                raise ValueError(f"match_bgp_agg: bad order_by spec {spec!r}")
-            sort_cols.append(col)
-        out = out.orderBy(*sort_cols)
-    if limit is not None:
-        out = out.limit(int(limit))
-    return out
-
-
-def ask_bgp(triples: DataFrame, patterns: list, **kwargs) -> bool:
-    """SPARQL ``ASK``: does the group pattern have at least one
-    solution? Compiled exactly like :func:`match_bgp` (every keyword —
-    ``optional``/``filters``/``minus``/``exists``/``not_exists``/
-    ``values`` — passes through) with ``distinct=False`` forced, since
-    existence doesn't care about multiplicities and the final
-    distinct's Exchange would be pure waste; the answer is ONE
-    limit-1 probe job over the compiled plan, so Catalyst stops the
-    scans at the first binding found. Completes the SPARQL query-form
-    set next to SELECT (:func:`match_bgp`), CONSTRUCT
-    (:func:`construct_triples`) and aggregation
-    (:func:`match_bgp_agg`). Reference analogue: none — the reference
-    constructs triples but has no query layer; cited for parity
-    accounting."""
-    kwargs["distinct"] = False
-    return not match_bgp(triples, patterns, **kwargs).isEmpty()
-
-
-def describe_nodes(
-    triples: DataFrame,
-    nodes,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-) -> DataFrame:
-    """SPARQL ``DESCRIBE``: every triple touching the given nodes —
-    the spec leaves the description form to the engine; this one
-    returns the symmetric star (all triples where the node is subject
-    OR object), which is the Concise Bounded Description for a graph
-    with no blank nodes (this engine skolemizes everything to IRIs, so
-    there is no bnode closure to chase). Completes the fourth SPARQL
-    query form next to SELECT (:func:`match_bgp`), ASK
-    (:func:`ask_bgp`) and CONSTRUCT (:func:`construct_triples`).
-
-    ``nodes`` is either a list of constants — compiled to ONE scan with
-    an ``(subj IN ... OR obj IN ...)`` pushdown filter, no join — or a
-    single-column DataFrame of node ids, compiled to two ``left_semi``
-    equi-joins (subject side, object side) unioned and deduped; the
-    node side of each semi-join is binding-scale, so AQE broadcasts it
-    and the triple table never shuffles. Reference analogue: none —
-    the reference has no query layer; cited for parity accounting."""
-    out_cols = (subj, pred, obj)
-    if isinstance(nodes, DataFrame):
-        if len(nodes.columns) != 1:
-            raise ValueError(
-                "describe_nodes: the node DataFrame must have exactly "
-                f"one column, got {nodes.columns}"
-            )
-        ncol = nodes.columns[0]
-        ids = nodes.select(F.col(ncol).alias("__dn_id")).distinct()
-        by_subj = triples.join(
-            ids, triples[subj] == F.col("__dn_id"), "left_semi"
-        )
-        by_obj = triples.join(
-            ids, triples[obj] == F.col("__dn_id"), "left_semi"
-        )
-        return by_subj.select(*out_cols).unionByName(
-            by_obj.select(*out_cols)
-        ).distinct()
-    nodes = sorted(set(nodes))
-    if not nodes:
-        raise ValueError("describe_nodes: empty node list")
-    return triples.where(
-        F.col(subj).isin(nodes) | F.col(obj).isin(nodes)
-    ).select(*out_cols)
-
-
 def wl_fingerprints(
     quads: DataFrame,
     rounds: int = 2,
@@ -2955,8 +2544,8 @@ def match_quads(
     filters: list | None = None,
 ) -> DataFrame:
     """SPARQL named-graph matching over an RDF DATASET — a quad table
-    ``(graph, subj, pred, obj)`` such as :func:`parse_nquads` produces
-    or a per-document/per-repo provenance-scoped KG materializes.
+    ``(graph, subj, pred, obj)`` such as a per-document/per-repo
+    provenance-scoped KG materializes.
 
     ``patterns`` are default-graph triple patterns evaluated against
     the UNION of all graphs (the "union default graph" convention of
@@ -3210,10 +2799,10 @@ def update_where(
 ):
     """SPARQL Update ``DELETE/INSERT WHERE`` over the materialized KG —
     the graph-MUTATION form that completes the query layer (SELECT =
-    :func:`match_bgp`, CONSTRUCT = :func:`construct_triples`, ASK =
-    :func:`ask_bgp`): evaluate the WHERE pattern group ONCE against the
-    current graph, instantiate the ``delete`` and ``insert`` templates
-    from the same solution set, and return ``(G \\ D) ∪ I`` — the spec's
+    :func:`match_bgp`, CONSTRUCT = :func:`construct_triples`): evaluate
+    the WHERE pattern group ONCE against the current graph, instantiate
+    the ``delete`` and ``insert`` templates from the same solution set,
+    and return ``(G \\ D) ∪ I`` — the spec's
     order (both template sets computed against the PRE-update graph;
     deletes applied before inserts, so a triple in both sets survives).
 
@@ -4020,10 +3609,9 @@ def weighted_pagerank(
     quantum: int = 10,
 ) -> DataFrame:
     """PageRank with WEIGHTED transitions — entity importance where an
-    edge's pull is proportional to its evidence (feed it
-    ``materialize.edge_support``'s per-triple mention/doc counts and
-    the random surfer follows well-attested edges): a vertex's rank
-    flows to its out-neighbors proportionally to
+    edge's pull is proportional to its evidence (feed it per-triple
+    mention or doc counts and the random surfer follows well-attested
+    edges): a vertex's rank flows to its out-neighbors proportionally to
     ``w(s, t) / W(s)`` (``W`` = the vertex's total out-weight) instead
     of uniformly. Duplicate ``(src, dst)`` rows SUM their weights;
     weights must be positive (zero/negative/NULL raise — a zero-weight
@@ -4168,121 +3756,6 @@ def katz_centrality(
             )
         )
     return cent
-
-
-_GRAPH_MGMT_OPS = ("clear", "drop", "copy", "move", "add")
-_UNSET = object()
-
-
-def manage_graphs(
-    quads: DataFrame,
-    op: str,
-    graph: str | None = None,
-    to=_UNSET,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    graph_col: str = "graph",
-) -> DataFrame:
-    """SPARQL Update graph MANAGEMENT over an RDF dataset (the quad
-    table :func:`match_quads` queries): ``CLEAR``/``DROP`` empty a
-    graph, ``COPY`` replaces the destination with the source's
-    triples, ``ADD`` merges the source into the destination (set
-    semantics), ``MOVE`` is COPY + source removal — the spec's five
-    graph operations as pure filter/projection/anti-join/union
-    algebra, returning the updated dataset. ``graph=None`` addresses
-    the DEFAULT graph (NULL graph label), per the N-Quads convention
-    used throughout.
-
-    In this engine's quad model CLEAR and DROP coincide (a graph
-    EXISTS iff it has quads — there is no empty-graph row to keep),
-    which is exactly the spec's behavior on implicitly-created graphs;
-    both spellings are accepted.
-
-    Physical shape: one pushdown-filter scan per affected graph plus,
-    for ADD, one solution-scale anti-join for the set-insert (the
-    :func:`update_where` discipline — the dataset is never
-    re-distincted). COPY/MOVE replace the destination wholesale:
-    filter + union, no join at all.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    o = op.lower()
-    if o not in _GRAPH_MGMT_OPS:
-        raise ValueError(
-            f"manage_graphs: unknown op {op!r} (one of {_GRAPH_MGMT_OPS})"
-        )
-    g = F.col(graph_col)
-
-    def is_g(label):
-        # eqNullSafe: a NULL (default-graph) label must compare FALSE
-        # against a named graph, not NULL — ~NULL would silently drop
-        # default-graph quads from every complement filter
-        return g.isNull() if label is None else g.eqNullSafe(F.lit(label))
-
-    cols = [graph_col, subj, pred, obj]
-    ds = quads.select(*cols)
-    if o in ("clear", "drop"):
-        return ds.where(~is_g(graph))
-    if to is _UNSET:
-        raise ValueError(
-            f"manage_graphs: {op!r} needs a 'to' graph "
-            "(None addresses the default graph)"
-        )
-    if graph == to:
-        return ds  # spec: same-graph COPY/MOVE/ADD is a no-op
-    src_triples = ds.where(is_g(graph)).select(
-        F.lit(to).cast("string").alias(graph_col), subj, pred, obj
-    )
-    if o == "copy" or o == "move":
-        out = ds.where(~is_g(to)).unionByName(src_triples)
-        if o == "move":
-            out = out.where(~is_g(graph))
-        return out
-    # add: set-merge into the destination — the anti-join runs on the
-    # triple columns only (both sides are already destination-filtered,
-    # and a NULL default-graph key would never equi-join, letting
-    # duplicates through)
-    dst = ds.where(is_g(to)).select(subj, pred, obj)
-    new = src_triples.join(dst, [subj, pred, obj], "left_anti")
-    return ds.unionByName(new)
-
-
-def update_where_in_graph(
-    quads: DataFrame,
-    graph: str | None,
-    patterns: list,
-    delete: list | None = None,
-    insert: list | None = None,
-    subj: str = "subj",
-    pred: str = "pred",
-    obj: str = "obj",
-    graph_col: str = "graph",
-    **match_kwargs,
-) -> DataFrame:
-    """SPARQL Update's ``WITH <g> DELETE/INSERT WHERE`` — the
-    graph-scoped form of :func:`update_where` completing the Update
-    surface (:func:`manage_graphs` covers the dataset operations):
-    the WHERE matches ONLY against graph ``g`` (``None`` = the default
-    graph), the template sets apply only to ``g``'s triples, and every
-    other graph passes through untouched. One pushdown graph filter
-    splits the dataset; the scoped slice runs the exact
-    :func:`update_where` algebra; the label is a constant re-attach.
-
-    Reference analogue: none — cited for parity accounting.
-    """
-    g = F.col(graph_col)
-    in_g = g.isNull() if graph is None else g.eqNullSafe(F.lit(graph))
-    ds = quads.select(graph_col, subj, pred, obj)
-    scoped = ds.where(in_g).select(subj, pred, obj)
-    updated = update_where(
-        scoped, patterns, delete=delete, insert=insert,
-        subj=subj, pred=pred, obj=obj, **match_kwargs,
-    )
-    relabeled = updated.select(
-        F.lit(graph).cast("string").alias(graph_col), subj, pred, obj
-    )
-    return ds.where(~in_g).unionByName(relabeled)
 
 
 def ego_network(

@@ -1,11 +1,9 @@
 """KG-embedding training: deterministic TransE in pure DataFrame ops.
 
-Completes the link-prediction training loop the engine already has the
-two ends of — ``graph.negative_triples`` (the corrupted-sample input)
-and ``scoring.ranking_metrics`` (the MRR/Hits@k evaluation protocol):
-this module supplies the middle, a full-batch TransE (Bordes et al.,
-NIPS 2013) training epoch with the margin-ranking hinge
-``max(0, margin + d(h+r, t) - d(h+r, t'))`` under the L1 distance.
+A full-batch TransE (Bordes et al., NIPS 2013) training epoch over the
+corrupted samples ``graph.negative_triples`` produces, with the
+margin-ranking hinge ``max(0, margin + d(h+r, t) - d(h+r, t'))`` under
+the L1 distance.
 
 Why full-batch and not SGD: distributed SGD's update order is
 scheduler-dependent — the same data would train to different weights
@@ -89,8 +87,7 @@ def transe_scores(
     as pure array-fold projections. Left joins: ids with no embedding
     yield NULL ``_d_pos``/``_d_neg`` here — the missing-id guard (which
     raises) lives in :func:`transe_epoch`, riding the scored frame's
-    materialization; direct callers feeding e.g.
-    ``scoring.ranking_metrics`` should apply the same check or
+    materialization; direct callers should apply the same check or
     guarantee coverage (an inner join would silently drop triples)."""
     e = ent.select(F.col(id_col).alias("_eid"), F.col(vec).alias("_evec"))
     r = rel.select(F.col(id_col).alias("_rid"), F.col(vec).alias("_rvec"))
@@ -162,8 +159,8 @@ def transe_epoch(
     (the original algorithm's constraint, applied at epoch granularity;
     zero vectors pass through).
 
-    Use :func:`transe_scores`' ``_d_pos``/``_d_neg`` or
-    ``scoring.ranking_metrics`` to monitor convergence.
+    Use :func:`transe_scores`' ``_d_pos``/``_d_neg`` to monitor
+    convergence.
     """
     if lr <= 0 or margin <= 0:
         raise ValueError(f"lr and margin must be > 0, got {lr}, {margin}")

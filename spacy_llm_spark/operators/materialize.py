@@ -115,78 +115,3 @@ def edges_table(df: DataFrame, id_cols=("doc_id", "content_sha256")) -> DataFram
             "dest_ent.label AS obj_label",
         )
     )
-
-
-def edge_support(
-    edges: DataFrame,
-    doc_col: str = "doc_id",
-    total_docs: int | None = None,
-) -> DataFrame:
-    """Provenance/confidence aggregation per distinct triple: how many
-    documents assert (subj, pred, obj), how many individual mention
-    pairs, and the support fraction when the corpus size is known — the
-    weighting KG-construction pipelines attach before downstream
-    consumers rank or threshold edges (an extraction seen in one doc of
-    a billion is noise; one seen in thousands is signal).
-
-    ONE triple-keyed aggregate with map-side partials:
-    ``n_docs = count(DISTINCT doc)`` and ``n_mentions = count(*)`` in
-    the same pass (Spark plans the distinct via a two-phase expand on
-    the SAME key shuffle — no second scan). Output is distinct-triple
-    scale. ``support`` = n_docs / total_docs rounded to 6 dp when
-    ``total_docs`` is given (pass the corpus count the pipeline already
-    knows; computing it here would add a scan), NULL otherwise.
-    """
-    out = edges.groupBy("subj", "pred", "obj").agg(
-        F.countDistinct(doc_col).cast("long").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_mentions"),
-    )
-    if total_docs is not None:
-        if total_docs <= 0:
-            raise ValueError("edge_support: total_docs must be positive")
-        sup = F.round(F.col("n_docs") / F.lit(float(total_docs)), 6)
-    else:
-        sup = F.lit(None).cast("double")
-    return out.withColumn("support", sup)
-
-
-def edge_support_append(
-    stored: DataFrame,
-    new_edges: DataFrame,
-    doc_col: str = "doc_id",
-    total_docs: int | None = None,
-) -> DataFrame:
-    """Incremental provenance maintenance for APPEND-ONLY corpora: fold
-    a new batch's edges into a stored ``edge_support`` table — the
-    daily-ingest shape, same persisted-result/merge family as the dedup
-    indexes.
-
-    Correctness contract: batch doc ids must be NEW (append-only
-    ingest — the checkpoint anti-join upstream guarantees a doc is
-    processed once), so both ``n_docs`` (distinct docs are disjoint
-    across batches) and ``n_mentions`` merge ADDITIVELY: aggregate the
-    delta alone, then ONE triple-keyed sum over stored ∪ delta —
-    triple-scale work, the raw edge history is never re-read. Bit-equal
-    to a full recompute under the contract (test-pinned). A corpus that
-    re-processes documents breaks the contract; recompute from raw
-    edges there. ``support`` is recomputed from the NEW corpus total
-    (it changes for every triple when the denominator grows, which is
-    why it is derived here rather than merged).
-    """
-    delta = edge_support(new_edges, doc_col=doc_col)
-    merged = (
-        stored.select("subj", "pred", "obj", "n_docs", "n_mentions")
-        .unionByName(delta.select("subj", "pred", "obj", "n_docs", "n_mentions"))
-        .groupBy("subj", "pred", "obj")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_mentions").cast("long").alias("n_mentions"),
-        )
-    )
-    if total_docs is not None:
-        if total_docs <= 0:
-            raise ValueError("edge_support_append: total_docs must be positive")
-        sup = F.round(F.col("n_docs") / F.lit(float(total_docs)), 6)
-    else:
-        sup = F.lit(None).cast("double")
-    return merged.withColumn("support", sup)

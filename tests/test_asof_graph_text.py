@@ -596,66 +596,6 @@ def test_shortest_paths_unit_weight_matches_bfs(spark):
     assert sp == bfs
 
 
-def test_random_walks_properties(spark):
-    """Every vertex starts walks_per_vertex walks; every walk reaches
-    full length (undirected graphs never dangle); every step follows an
-    undirected edge; the whole corpus is deterministic across runs AND
-    across input partitionings (seeded hash argmin, no RNG)."""
-    from spacy_llm_spark.operators.graph import random_walks
-
-    rows = [
-        ("a", "r", "b"), ("b", "r", "c"), ("c", "r", "a"),
-        ("c", "r", "d"), ("d", "r", "e"), ("e", "r", "a"),
-        ("a", "r", "a"),  # self-loop must never appear inside a walk
-    ]
-    edges = spark.createDataFrame(rows, "subj string, pred string, obj string")
-    got = random_walks(edges, walks_per_vertex=2, walk_length=5, seed=7).collect()
-    und = set()
-    for s, _, o in rows:
-        if s != o:
-            und.add((s, o))
-            und.add((o, s))
-    verts = {v for e in und for v in e}
-    assert len(got) == 2 * len(verts)
-    assert {r["walk_id"] for r in got} == {
-        f"{v}#{r}" for v in verts for r in (0, 1)
-    }
-    for r in got:
-        path = r["walk"].split(" ")
-        assert len(path) == 5
-        assert r["walk_id"].split("#")[0] == path[0]
-        for a, b in zip(path, path[1:]):
-            assert (a, b) in und, (r["walk_id"], r["walk"])
-
-    again = random_walks(
-        edges.repartition(7, "obj"), walks_per_vertex=2, walk_length=5, seed=7
-    ).collect()
-    assert sorted(map(tuple, got)) == sorted(map(tuple, again))
-
-    # a different seed must actually change some walk (pseudo-randomness
-    # is live, not a constant choice)
-    other = random_walks(edges, walks_per_vertex=2, walk_length=5, seed=8).collect()
-    assert sorted(map(tuple, got)) != sorted(map(tuple, other))
-
-    import pytest
-
-    with pytest.raises(ValueError, match="walks_per_vertex"):
-        random_walks(edges, walks_per_vertex=0)
-    with pytest.raises(ValueError, match="walk_length"):
-        random_walks(edges, walk_length=0)
-
-
-def test_random_walks_length_one_is_vertex_list(spark):
-    from spacy_llm_spark.operators.graph import random_walks
-
-    edges = spark.createDataFrame(
-        [("a", "r", "b")], "subj string, pred string, obj string"
-    )
-    got = {(r["walk_id"], r["walk"]) for r in
-           random_walks(edges, walks_per_vertex=1, walk_length=1).collect()}
-    assert got == {("a#0", "a"), ("b#0", "b")}
-
-
 def test_k_core_empty_result_keeps_input_vertex_type(spark):
     from spacy_llm_spark.operators.graph import k_core
 

@@ -961,75 +961,6 @@ def test_lexical_cosine_pairs_ngram_space_and_validation(spark):
     assert got == {(1, 2): 0.5}
 
 
-def test_dup_ngram_probe_equals_full_recompute(spark):
-    """pairs(old) maintained through an append batch == full recompute,
-    including grams pushed over the threshold BY the batch."""
-    from spacy_llm_spark.operators.dedup import (
-        dup_ngram_counts,
-        dup_ngram_index,
-        dup_ngram_stats_probe,
-        duplicated_ngram_stats,
-    )
-
-    old = spark.createDataFrame(
-        [(1, "a b c d"), (2, "p q r s"), (3, "m n")],
-        "doc_id long, text string",
-    )
-    # batch doc 10 shares "a b c" with doc 1 (crossing: old nd=1 -> 2)
-    # and "p q r" with doc 2; doc 11 is all-new; doc 12 too short
-    new = spark.createDataFrame(
-        [(10, "a b c z p q r"), (11, "x y z w"), (12, "k")],
-        "doc_id long, text string",
-    )
-    grams = dup_ngram_index(old, n=3).localCheckpoint()
-    counts = dup_ngram_counts(grams, n=3)
-    prior = duplicated_ngram_stats(old, n=3)
-    stats, g2, c2 = dup_ngram_stats_probe(grams, counts, prior, new, n=3)
-    full = duplicated_ngram_stats(old.unionByName(new), n=3)
-    assert sorted(map(tuple, stats.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-    got = {r["doc_id"]: (r["n_dup_grams"], r["n_grams"]) for r in stats.collect()}
-    assert got[1] == (1, 2)   # "a b c" crossed; "b c d" still unique
-    assert got[12] == (0, 0)  # too short: zero grams, present anyway
-
-    # chain a second batch through the RETURNED index frames
-    new2 = spark.createDataFrame([(20, "x y z q")], "doc_id long, text string")
-    stats2, _, _ = dup_ngram_stats_probe(
-        g2.localCheckpoint(), c2.localCheckpoint(), stats, new2, n=3
-    )
-    full2 = duplicated_ngram_stats(old.unionByName(new).unionByName(new2), n=3)
-    assert sorted(map(tuple, stats2.collect())) == sorted(
-        map(tuple, full2.collect())
-    )
-
-
-def test_dup_ngram_probe_refuses_mismatched_stamp(spark):
-    """An index built with a different n (or unstamped) is refused
-    schema-level before any probe work."""
-    import pytest as _pytest
-
-    from spacy_llm_spark.operators.dedup import (
-        dup_ngram_counts,
-        dup_ngram_index,
-        dup_ngram_stats_probe,
-        duplicated_ngram_stats,
-    )
-
-    docs = spark.createDataFrame([(1, "a b c d")], "doc_id long, text string")
-    new = spark.createDataFrame([(2, "a b c")], "doc_id long, text string")
-    grams4 = dup_ngram_index(docs, n=4)
-    counts4 = dup_ngram_counts(grams4, n=4)
-    prior = duplicated_ngram_stats(docs, n=4)
-    with _pytest.raises(ValueError, match="stamp mismatch"):
-        dup_ngram_stats_probe(grams4, counts4, prior, new, n=3)
-    with _pytest.raises(ValueError, match="no _fmt"):
-        dup_ngram_stats_probe(
-            grams4.drop([c for c in grams4.columns if c.startswith("_fmt")][0]),
-            counts4, prior, new, n=4,
-        )
-
-
 def test_lexical_cosine_probe_equals_full_recompute(spark):
     from spacy_llm_spark.operators.similarity import (
         lexical_cosine_pairs,
@@ -1071,45 +1002,6 @@ def test_lexical_cosine_probe_refuses_mismatched_stamp(spark):
         lexical_cosine_probe(tf, norms, new, n=1)
     with _pytest.raises(ValueError, match="stamp"):
         lexical_cosine_probe(tf.drop("_fmt_v1_lx_n2"), norms, new, n=2)
-
-
-def test_scoped_dup_pairs_filters_cross_scope(spark):
-    """Identical texts in different scopes must NOT pair; same-scope
-    dups keep pairing; NULL scope pairs with NULL (null-safe equality)."""
-    from spacy_llm_spark.operators.dedup import scoped_dup_pairs
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps high", "en"),
-            (2, "the quick brown fox jumps high", "en"),   # same-scope dup
-            (3, "the quick brown fox jumps high", "fr"),   # cross-scope dup
-            (4, "voila un texte totalement different ici", "fr"),
-            (5, "null scope twin text here okay", None),
-            (6, "null scope twin text here okay", None),
-        ],
-        "doc_id long, text string, lang string",
-    )
-    got = {(r["id_a"], r["id_b"], r["scope"]) for r in scoped_dup_pairs(
-        docs, "lang", n_hashes=32, bands=8, shingle_k=3, threshold=1.0
-    ).collect()}
-    assert got == {(1, 2, "en"), (5, 6, None)}
-
-
-def test_scoped_dup_pairs_accepts_prebuilt_pairs(spark):
-    """Any pair frame with id_a/id_b post-filters the same way — the
-    one-index-any-scope property."""
-    from spacy_llm_spark.operators.dedup import scoped_dup_pairs
-
-    docs = spark.createDataFrame(
-        [(1, "x", "a"), (2, "x", "a"), (3, "x", "b")],
-        "doc_id long, text string, lang string",
-    )
-    pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (2, 3)], "id_a long, id_b long"
-    )
-    got = {(r["id_a"], r["id_b"]) for r in
-           scoped_dup_pairs(docs, "lang", pairs=pairs).collect()}
-    assert got == {(1, 2)}
 
 
 def test_semantic_dup_pairs_hand_case(spark):
@@ -1171,73 +1063,3 @@ def test_semantic_dup_pairs_oversized_cell_raises(spark):
         semantic_dup_pairs(
             df, [[1.0, 0.0]], threshold=0.99, max_cell_rows=10
         ).collect()
-
-
-def test_semantic_probe_union_equals_full_recompute(spark):
-    """pairs(index corpus) ∪ probe(new) == semantic_dup_pairs(corpus ∪
-    new) — the persisted-index contract, on vectors engineered so new
-    rows pair with old rows, with each other, and with nobody."""
-    from spacy_llm_spark.operators.dedup import (
-        semantic_cell_index,
-        semantic_dedup_probe,
-        semantic_dup_pairs,
-    )
-
-    old_rows = [
-        (0, [1.0, 0.0, 0.0]),
-        (1, [0.999, 0.01, 0.0]),
-        (3, [0.0, 1.0, 0.0]),
-    ]
-    new_rows = [
-        (10, [0.9995, 0.005, 0.0]),  # dups 0, 1, and 11
-        (11, [0.9992, 0.008, 0.0]),
-        (12, [0.0, 0.0, 1.0]),       # dup of nobody
-        (13, [0.0, 0.999, 0.01]),    # dups 3
-    ]
-    schema = "vec_id long, embedding array<double>"
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0]]
-    old = spark.createDataFrame(old_rows, schema)
-    new = spark.createDataFrame(new_rows, schema)
-
-    index = semantic_cell_index(old, cents).localCheckpoint()
-    got = {
-        (r.id_a, r.id_b)
-        for r in semantic_dup_pairs(old, cents, threshold=0.999).collect()
-    } | {
-        (r.id_a, r.id_b)
-        for r in semantic_dedup_probe(new, index, cents, threshold=0.999).collect()
-    }
-    full = {
-        (r.id_a, r.id_b)
-        for r in semantic_dup_pairs(old.union(new), cents, threshold=0.999).collect()
-    }
-    assert got == full
-    assert (10, 11) in got and (3, 13) in got  # new-new and new-old both present
-
-    # old-only probe form (new x new suppressed)
-    no_new = {
-        (r.id_a, r.id_b)
-        for r in semantic_dedup_probe(
-            new, index, cents, threshold=0.999, include_new_pairs=False
-        ).collect()
-    }
-    assert no_new == {p for p in full if (p[0] < 10) != (p[1] < 10)}
-
-
-def test_semantic_probe_refuses_wrong_centroids(spark):
-    """A probe against an index built with DIFFERENT centroids must
-    refuse schema-level (centroid digest in the stamp), not silently
-    pair across misaligned cells."""
-    from spacy_llm_spark.operators.dedup import (
-        semantic_cell_index,
-        semantic_dedup_probe,
-    )
-
-    df = spark.createDataFrame(
-        [(0, [1.0, 0.0])], "vec_id long, embedding array<double>"
-    )
-    index = semantic_cell_index(df, [[1.0, 0.0], [0.0, 1.0]])
-    with pytest.raises(ValueError, match="stamp mismatch"):
-        semantic_dedup_probe(df, index, [[1.0, 0.1], [0.0, 1.0]])
-    with pytest.raises(ValueError, match="stamp mismatch"):
-        semantic_dedup_probe(df, index, [[1.0, 0.0]])  # wrong cell count

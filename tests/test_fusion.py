@@ -121,169 +121,3 @@ def test_fuse_facts_ties_and_guards(spark):
         fuse_facts(_df(spark, rows), iters=0)
     with pytest.raises(ValueError, match="prior"):
         fuse_facts(_df(spark, rows), prior=1.5)
-
-
-def test_fuse_with_trust_equals_full_on_same_claims(spark):
-    from spacy_llm_spark.operators.fusion import (
-        fuse_facts, fuse_facts_with_trust, source_trust_table,
-    )
-
-    cdf = _df(spark, CLAIMS)
-    for iters in (1, 2, 4):
-        full = {(r.subj, r.pred): (r.obj, r.confidence, r.n_sources)
-                for r in fuse_facts(cdf, iters=iters).collect()}
-        trust = source_trust_table(cdf, iters=iters)
-        inc = {(r.subj, r.pred): (r.obj, r.confidence, r.n_sources)
-               for r in fuse_facts_with_trust(cdf, trust).collect()}
-        assert inc == full, iters
-
-
-def test_fuse_with_trust_append_and_drift(spark):
-    from spacy_llm_spark.operators.fusion import (
-        fuse_facts_with_trust, source_trust_table, trust_drift,
-    )
-
-    standing = _df(spark, CLAIMS)
-    trust = source_trust_table(standing, iters=3)
-    # appended batch: a NEW source (cold-start at prior) + new item
-    batch = [("e", "e9", "k", "v"), ("a", "e9", "k", "v")]
-    allc = _df(spark, CLAIMS + batch)
-    out = {(r.subj, r.pred): r for r in
-           fuse_facts_with_trust(allc, trust).collect()}
-    assert ("e9", "k") in out and out[("e9", "k")].obj == "v"
-    assert out[("e9", "k")].n_sources == 2
-    # standing winners unchanged by the disjoint batch (frozen trust)
-    base = {(r.subj, r.pred): r.obj for r in
-            fuse_facts_with_trust(standing, trust).collect()}
-    for k, v in base.items():
-        assert out[k].obj == v
-    # drift = |retrained - frozen|: ZERO on the table's own training
-    # claims (deterministic retrain), positive once the appended batch
-    # shifts the retrained trust
-    d0 = {r.source: r.drift for r in
-          trust_drift(standing, trust, iters=3).collect()}
-    assert all(v == 0.0 for v in d0.values())
-    d1 = {r.source: r for r in trust_drift(allc, trust, iters=3).collect()}
-    assert "e" in d1            # cold-start source reported vs prior
-    assert any(r.drift > 0 for r in d1.values())
-
-
-def test_conflict_report_flags_winners_and_losers(spark):
-    from spacy_llm_spark.operators.fusion import (
-        conflict_report, fuse_facts_with_trust, source_trust_table,
-    )
-
-    cdf = _df(spark, CLAIMS)
-    trust = source_trust_table(cdf, iters=2)
-    rep = conflict_report(cdf, trust)
-    rows = {(r.subj, r.pred, r.obj): r for r in rep.collect()}
-    # exactly one winner per data item, and it IS the probe's winner
-    winners = {(r.subj, r.pred): r.obj
-               for r in rep.where("is_winner").collect()}
-    probe = {(r.subj, r.pred): r.obj
-             for r in fuse_facts_with_trust(cdf, trust).collect()}
-    assert winners == probe
-    # losing conflict rows carry the contested count
-    mars = rows[("e2", "hq", "mars")]
-    assert (not mars.is_winner) and mars.n_values == 2
-    assert mars.confidence < rows[("e2", "hq", "berlin")].confidence
-    # uncontested items: n_values == 1 and winner
-    assert rows[("e3", "lang", "de")].n_values == 1
-    assert rows[("e3", "lang", "de")].is_winner
-    # every claimed value appears — report is claims-complete
-    assert set(rows) == {(s, p, o) for _, s, p, o in CLAIMS}
-
-
-ALLEN_CASES = {
-    # name: (left interval, right interval) -> relation == name
-    "before": ((1, 3), (4, 6)),
-    "meets": ((1, 3), (3, 6)),
-    "overlaps": ((1, 4), (2, 6)),
-    "starts": ((2, 4), (2, 6)),
-    "during": ((3, 4), (2, 6)),
-    "finishes": ((4, 6), (2, 6)),
-    "equals": ((2, 6), (2, 6)),
-    "finished_by": ((2, 6), (4, 6)),
-    "contains": ((2, 6), (3, 4)),
-    "started_by": ((2, 6), (2, 4)),
-    "overlapped_by": ((2, 6), (1, 4)),
-    "met_by": ((3, 6), (1, 3)),
-    "after": ((4, 6), (1, 3)),
-}
-
-
-def test_allen_relations_full_matrix(spark):
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators.temporal import allen_relations
-
-    left = spark.createDataFrame(
-        [Row(k=n, valid_from=a, valid_to=b)
-         for n, ((a, b), _) in ALLEN_CASES.items()],
-        "k string, valid_from long, valid_to long",
-    )
-    right = spark.createDataFrame(
-        [Row(k=n, valid_from=a, valid_to=b)
-         for n, (_, (a, b)) in ALLEN_CASES.items()],
-        "k string, valid_from long, valid_to long",
-    )
-    got = {r.k: r.relation
-           for r in allen_relations(left, right, "k").collect()}
-    assert got == {n: n for n in ALLEN_CASES}
-    # NULL valid_to = still live (+inf): two live intervals SHARE the
-    # infinite end, so the earlier-started one finished_by the later —
-    # the correct Allen reading, not a mere overlap
-    live = spark.createDataFrame(
-        [Row(k="x", valid_from=1, valid_to=None)],
-        "k string, valid_from long, valid_to long",
-    )
-    later_live = spark.createDataFrame(
-        [Row(k="x", valid_from=3, valid_to=None)],
-        "k string, valid_from long, valid_to long",
-    )
-    assert allen_relations(
-        live, later_live, "k").head().relation == "finished_by"
-    assert allen_relations(
-        later_live, live, "k").head().relation == "finishes"
-    # a closed interval straddling a live one's start overlaps it
-    closed = spark.createDataFrame(
-        [Row(k="x", valid_from=2, valid_to=5)],
-        "k string, valid_from long, valid_to long",
-    )
-    assert allen_relations(
-        closed, later_live, "k").head().relation == "overlaps"
-    # degenerate interval raises
-    import pytest as _pytest
-    bad = spark.createDataFrame(
-        [Row(k="x", valid_from=5, valid_to=5)],
-        "k string, valid_from long, valid_to long",
-    )
-    with _pytest.raises(ValueError, match="empty or negative"):
-        allen_relations(bad, live, "k")
-
-
-def test_fact_lifetimes_churn_profile(spark):
-    from pyspark.sql import Row
-    from spacy_llm_spark.operators.temporal import fact_lifetimes
-
-    rows = [
-        # volatile: s1 has 3 versions (2 closed: 2 and 5), s2 one live
-        ("s1", "p", 0, 2), ("s1", "p", 2, 7), ("s1", "p", 7, None),
-        ("s2", "p", 1, None),
-        # stable: one live version only -> durations NULL, not 0
-        ("s3", "q", 0, None),
-    ]
-    iv = spark.createDataFrame(
-        [Row(subj=s, pred=p, valid_from=a, valid_to=b)
-         for s, p, a, b in rows],
-        "subj string, pred string, valid_from long, valid_to long",
-    )
-    got = {r.pred: r for r in fact_lifetimes(iv).collect()}
-    p = got["p"]
-    assert (p.n_versions, p.n_keys, p.n_live) == (4, 2, 2)
-    assert p.versions_per_key == 2.0
-    assert p.live_fraction == 0.5
-    assert p.avg_duration == 3.5     # (2 + 5) / 2, NULLs excluded
-    assert p.max_duration == 5
-    q = got["q"]
-    assert (q.n_versions, q.n_live) == (1, 1)
-    assert q.avg_duration is None and q.max_duration is None

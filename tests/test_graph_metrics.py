@@ -1,6 +1,5 @@
-"""Graph structure metrics (assortativity, reciprocity) and
-link-prediction ranking metrics, checked against pure-Python
-references on hand graphs and deterministic pseudo-random tables."""
+"""Graph structure metrics (assortativity, reciprocity), checked against
+pure-Python references on hand graphs."""
 
 import math
 
@@ -8,7 +7,6 @@ import pytest
 from pyspark.sql import Row
 
 from spacy_llm_spark.operators.graph import degree_assortativity, reciprocity
-from spacy_llm_spark.operators.scoring import ranking_metrics
 
 
 def _edges(spark, pairs):
@@ -91,98 +89,6 @@ def test_reciprocity_hand_cases(spark):
     # empty graph: defined 0.0, no division blowup
     row0 = reciprocity(_edges(spark, [("x", "x")])).collect()[0]
     assert (row0.n_edges, row0.n_reciprocated, row0.reciprocity) == (0, 0, 0.0)
-
-
-def _py_ranking(rows, filtered, ks=(1, 3, 10)):
-    by_q = {}
-    for q, c, s, l in rows:
-        by_q.setdefault(q, []).append((c, s, l))
-    ranks = []
-    for cl in by_q.values():
-        # (score DESC, cand ASC): stable sort by cand, then by score
-        order = sorted(sorted(cl, key=lambda t: t[0]),
-                       key=lambda t: t[1], reverse=True)
-        for i, (c, s, l) in enumerate(order):
-            if l:
-                if filtered:
-                    ranks.append(
-                        1 + sum(1 for c2, s2, l2 in order[:i] if not l2)
-                    )
-                else:
-                    ranks.append(i + 1)
-    n_q = len({q for q, c, s, l in rows if l})
-    mrr = sum(1.0 / r for r in ranks) / len(ranks)
-    out = {"n_queries": n_q, "n_positives": len(ranks),
-           "mrr": round(mrr, 6),
-           "mean_rank": round(sum(ranks) / len(ranks), 6)}
-    for k in ks:
-        out[f"hits_{k}"] = round(
-            sum(1 for r in ranks if r <= k) / len(ranks), 6
-        )
-    return out
-
-
-def _scored_df(spark, rows):
-    return spark.createDataFrame(
-        [Row(qid=q, cand=c, score=s, label=l) for q, c, s, l in rows],
-        "qid string, cand string, score double, label boolean",
-    )
-
-
-def test_ranking_metrics_hand_case(spark):
-    rows = [
-        # q1: positive ranked 2nd raw; 2nd filtered too (one neg ahead)
-        ("q1", "a", 0.9, False), ("q1", "b", 0.8, True),
-        ("q1", "c", 0.1, False),
-        # q2: two positives lead -> filtered ranks 1 and 1
-        ("q2", "a", 0.9, True), ("q2", "b", 0.8, True),
-        ("q2", "c", 0.5, False),
-    ]
-    got = ranking_metrics(
-        _scored_df(spark, rows), "qid", "cand", "score", "label"
-    ).collect()[0]
-    assert (got.n_queries, got.n_positives) == (2, 3)
-    assert got.mrr == pytest.approx(round((0.5 + 1 + 1) / 3, 6))
-    assert got.hits_1 == pytest.approx(round(2 / 3, 6))
-    assert got.hits_3 == 1.0
-    # raw setting: q2's second positive ranks 2nd
-    raw = ranking_metrics(
-        _scored_df(spark, rows), "qid", "cand", "score", "label",
-        filtered=False,
-    ).collect()[0]
-    assert raw.mrr == pytest.approx(round((0.5 + 1 + 0.5) / 3, 6))
-    # deterministic tie-break: equal scores rank by candidate ASC
-    ties = [("q", "x", 1.0, False), ("q", "y", 1.0, True)]
-    t = ranking_metrics(
-        _scored_df(spark, ties), "qid", "cand", "score", "label"
-    ).collect()[0]
-    assert t.mean_rank == 2.0
-    with pytest.raises(ValueError, match="bad ks"):
-        ranking_metrics(
-            _scored_df(spark, ties), "qid", "cand", "score", "label", ks=[]
-        )
-
-
-def test_ranking_metrics_matches_reference(spark):
-    # deterministic pseudo-random table: 7 queries x 12 candidates,
-    # hash-derived scores and labels — no RNG, reproducible everywhere
-    rows = []
-    for qi in range(7):
-        for ci in range(12):
-            h = (qi * 31 + ci * 17 + 7) % 97
-            rows.append(
-                (f"q{qi}", f"c{ci:02d}", float(h),
-                 (h % 5 == 0) or ci == qi)
-            )
-    for filtered in (True, False):
-        got = ranking_metrics(
-            _scored_df(spark, rows), "qid", "cand", "score", "label",
-            filtered=filtered,
-        ).collect()[0]
-        want = _py_ranking(rows, filtered)
-        for k, v in want.items():
-            assert getattr(got, k) == pytest.approx(v, abs=1e-9), (
-                filtered, k)
 
 
 def _asn(spark, pairs):
@@ -313,63 +219,6 @@ def test_k_truss_cliques_and_cascade(spark):
         k_truss(e, 1)
     with pytest.raises(RuntimeError, match="converge"):
         k_truss(_edges(spark, fan), 4, max_rounds=1)
-
-
-def test_calibration_bins_hand_case(spark):
-    from spacy_llm_spark.operators.scoring import calibration_bins
-
-    rows = [
-        # bin 9 hosts 0.95-scores: 1 of 2 positive -> gap -0.45
-        (0.95, 1.0), (0.95, 0.0),
-        # bin 1 hosts 0.15: all negative, well calibrated-ish
-        (0.15, 0.0), (0.15, 0.0),
-        # score exactly 1.0 folds into the TOP bin, not bin 10
-        (1.0, 1.0),
-        # bin 0
-        (0.0, 0.0),
-    ]
-    df = spark.createDataFrame(rows, "score double, label double")
-    out = {r.bin: r for r in
-           calibration_bins(df, "score", "label", n_bins=10).collect()}
-    assert set(out) == {0, 1, 9}
-    assert (out[9].n, out[9].mean_score) == (3, round((0.95 + 0.95 + 1.0) / 3, 6))
-    assert out[9].frac_pos == round(2 / 3, 6)
-    assert out[9].gap == round(out[9].frac_pos - out[9].mean_score, 6)
-    assert (out[1].n, out[1].frac_pos) == (2, 0.0)
-    assert (out[0].lo, out[0].hi) == (0.0, 0.1)
-    # ECE derivable: sum(n * |gap|) / sum(n)
-    ece = sum(r.n * abs(r.gap) for r in out.values()) / sum(
-        r.n for r in out.values()
-    )
-    assert ece > 0
-    # out-of-range scores raise instead of clamping silently
-    bad = spark.createDataFrame([(1.5, 1.0)], "score double, label double")
-    with pytest.raises(Exception, match="outside"):
-        calibration_bins(bad, "score", "label").collect()
-    with pytest.raises(ValueError, match="n_bins"):
-        calibration_bins(df, "score", "label", n_bins=0)
-
-
-def test_roc_auc_hand_cases(spark):
-    from spacy_llm_spark.operators.scoring import roc_auc
-
-    def auc_of(rows):
-        df = spark.createDataFrame(rows, "score double, label double")
-        return roc_auc(df, "score", "label").collect()[0]
-
-    # perfect separation
-    r = auc_of([(0.9, 1.0), (0.8, 1.0), (0.2, 0.0), (0.1, 0.0)])
-    assert (r.auc, r.n_pos, r.n_neg) == (1.0, 2, 2)
-    # perfectly wrong
-    assert auc_of([(0.1, 1.0), (0.9, 0.0)]).auc == 0.0
-    # all-tied scores: AUC = 0.5 regardless of labels
-    assert auc_of([(0.5, 1.0), (0.5, 0.0), (0.5, 0.0)]).auc == 0.5
-    # mixed with a tie: pairs = (pos .9 > both negs) = 2,
-    # (pos .4 vs neg .4) = 0.5, (pos .4 < neg .6) = 0 -> (2+0.5)/4
-    r = auc_of([(0.9, 1.0), (0.4, 1.0), (0.6, 0.0), (0.4, 0.0)])
-    assert r.auc == round(2.5 / 4, 6)
-    # degenerate: single-class input -> NULL auc, not a crash
-    assert auc_of([(0.9, 1.0), (0.5, 1.0)]).auc is None
 
 
 def test_quotient_graph_density_and_counts(spark):

@@ -14,14 +14,17 @@
 - Each of the first 50 ``queries()`` entries, the ones the driver's
   correctness harness stamps, has a DuckDB oracle, and
   ``scripts/check_oracles.py`` passes from any working directory.
-- Every package module, module-level def and script that README.md or
-  COVERAGE.md cites exists.
+- Every top-level def of ``__spark_entry__.py`` is used in it, and every
+  ``q_*`` query is listed in ``queries()``.
+- Every package module, module-level def, script and test that README.md
+  or COVERAGE.md cites exists.
 
 The checks are static or run in a fresh interpreter; only the
 ``check_oracles.py`` run starts Spark, in its own process.
 """
 
 import ast
+import fnmatch
 import glob
 import json
 import os
@@ -107,10 +110,6 @@ TEST_ONLY_DEFS = {
         "reads back a table that write_table committed",
     f"{PKG}.functions.rdf.parse_ntriples":
         "inverse of to_ntriples; the serializer's round-trip tests use it",
-    f"{PKG}.functions.rdf.parse_ntriples_typed":
-        "full-grammar N-Triples reader for the typed round-trip tests",
-    f"{PKG}.functions.rdf.parse_nquads":
-        "inverse of to_nquads; the serializer's round-trip tests use it",
     f"{PKG}.functions.rdf.parse_turtle":
         "inverse of flat to_turtle; the serializer's round-trip tests use it",
     f"{PKG}.functions.rdf.turtle_header":
@@ -119,8 +118,6 @@ TEST_ONLY_DEFS = {
         "min-id representative per exact text hash, pinned by a test",
     f"{PKG}.operators.dedup.jaccard_vs_probe":
         "token-set Jaccard against one probe text, pinned by a test",
-    f"{PKG}.operators.fusion.trust_drift":
-        "staleness metric for a frozen trust table, pinned by tests",
     f"{PKG}.operators.similarity.ivf_index_drift":
         "recall of a stale IVF index against brute force, pinned by tests",
     f"{PKG}.operators.similarity.train_ivf_centroids":
@@ -131,7 +128,6 @@ DRIVER_FILES = sorted(
     [
         os.path.join(REPO, "__spark_entry__.py"),
         os.path.join(REPO, "bench.py"),
-        os.path.join(REPO, "bench_extra.py"),
     ]
     + glob.glob(os.path.join(REPO, "scripts", "*.py"))
     + glob.glob(os.path.join(REPO, "perfbench", "*.py"))
@@ -456,6 +452,21 @@ def _def_references(tree, package=None):
     return refs
 
 
+def _self_used_defs(tree):
+    """``{name: used}`` for each def of a parsed module: whether a
+    top-level statement other than the def itself uses the name."""
+    own = _module_defs(tree)
+    used = {}  # name -> top-level statements that use it
+    for s in tree.body:
+        for n in ast.walk(s):
+            if isinstance(n, ast.Name) and n.id in own:
+                used.setdefault(n.id, set()).add(id(s))
+    return {
+        name: bool(used.get(name, set()) - {id(node)})
+        for name, node in own.items()
+    }
+
+
 def _unreferenced_package_defs():
     """``module.name`` of every package def that neither its own module
     (outside the def itself) nor another package module nor a driver file
@@ -467,14 +478,8 @@ def _unreferenced_package_defs():
             tree = ast.parse(f.read())
         package = mod if path.endswith("__init__.py") else mod.rpartition(".")[0]
         refs |= _def_references(tree, package)
-        own = _module_defs(tree)
-        used = {}  # name -> top-level statements that use it
-        for s in tree.body:
-            for n in ast.walk(s):
-                if isinstance(n, ast.Name) and n.id in own:
-                    used.setdefault(n.id, set()).add(id(s))
-        for name, node in own.items():
-            defs[(mod, name)] = bool(used.get(name, set()) - {id(node)})
+        for name, self_used in _self_used_defs(tree).items():
+            defs[(mod, name)] = self_used
     for path in DRIVER_FILES:
         with open(path) as f:
             refs |= _def_references(ast.parse(f.read()))
@@ -496,6 +501,37 @@ def test_every_package_def_is_reached_outside_tests():
     # an entry that gained a caller, or lost its def, leaves the list
     stale = sorted(set(TEST_ONLY_DEFS) - unreferenced)
     assert not stale, f"no longer test-only: {stale}"
+
+
+# what the driver harness calls in __spark_entry__.py
+DRIVER_CONTRACT = {"entry", "queries", "oracle_sql"}
+
+
+def test_driver_entry_has_no_orphan_defs():
+    """Every top-level def and constant of ``__spark_entry__.py`` is used
+    elsewhere in the file, except the contract functions, and every
+    ``q_*`` query is a ``queries()`` entry: a helper whose last query
+    went is deleted with it."""
+    with open(os.path.join(REPO, "__spark_entry__.py")) as f:
+        tree = ast.parse(f.read())
+    orphans = sorted(
+        name
+        for name, self_used in _self_used_defs(tree).items()
+        if not self_used and name not in DRIVER_CONTRACT
+    )
+    assert not orphans, f"nothing in __spark_entry__.py uses {orphans}"
+    queries = next(
+        s for s in tree.body
+        if isinstance(s, ast.FunctionDef) and s.name == "queries"
+    )
+    listed = {n.id for n in ast.walk(queries) if isinstance(n, ast.Name)}
+    unlisted = sorted(
+        s.name for s in tree.body
+        if isinstance(s, ast.FunctionDef)
+        and s.name.startswith("q_")
+        and s.name not in listed
+    )
+    assert not unlisted, f"queries() does not list {unlisted}"
 
 
 def test_def_reference_scan_resolves_imports_and_attributes(tmp_path):
@@ -542,14 +578,59 @@ def _cited_paths(text):
     return out
 
 
+# inside a code span, ``module.name`` names a top-level def of the
+# package module whose last dotted component is ``module``;
+# ``module.a/b/c`` lists three of them
+_CODE_SPAN = re.compile(r"`([^`\n]+)`")
+_SHORT_DEF = re.compile(
+    r"(?<![\w/.])([a-z_]\w*)\.(?!py\b)([A-Za-z_]\w*(?:/[A-Za-z_]\w*)*)"
+)
+# ``test_x.py::test_y`` (``*`` a glob); a bare ``::test_z`` cites the
+# same file as the citation before it on its line
+_CITED_TEST = re.compile(
+    r"(?<![\w/])(?:tests/)?(test_\w+\.py)?::(test_[\w*]+)"
+)
+
+
 def _cited_defs(text):
-    """``(file, name)`` for each ``path.py:name`` citation of a package file."""
-    return {(f"{PKG}/{path}", name) for path, name in _CITED_DEF.findall(text)}
+    """``(file, name)`` for each ``path.py:name`` citation of a package
+    file and each ``module.name`` citation of a package module."""
+    out = {(f"{PKG}/{path}", name) for path, name in _CITED_DEF.findall(text)}
+    files = {  # last dotted component of a package module -> its file
+        mod.rpartition(".")[2]: os.path.relpath(_module_file(mod), REPO)
+        for mod in _package_modules()
+    }
+    for span in _CODE_SPAN.findall(text):
+        for module, names in _SHORT_DEF.findall(span):
+            if module in files:
+                out.update((files[module], name) for name in names.split("/"))
+    return out
+
+
+def _cited_tests(text):
+    """``(test file, test name pattern)`` for each cited test id."""
+    out = set()
+    for line in text.splitlines():
+        last = None
+        for path, name in _CITED_TEST.findall(line):
+            last = path or last
+            if last:
+                out.add((f"tests/{last}", name))
+    return out
+
+
+def _test_names(path):
+    with open(path) as f:
+        tree = ast.parse(f.read())
+    return {
+        s.name for s in tree.body
+        if isinstance(s, ast.FunctionDef) and s.name.startswith("test_")
+    }
 
 
 def test_doc_cited_paths_exist():
-    """README.md and COVERAGE.md cite no module, script or module-level
-    def that is gone."""
+    """README.md and COVERAGE.md cite no module, script, module-level
+    def or test that is gone."""
     missing = {}
     for doc in DOC_FILES:
         with open(os.path.join(REPO, doc)) as f:
@@ -563,6 +644,12 @@ def test_doc_cited_paths_exist():
             if os.path.exists(os.path.join(REPO, path))
             and name not in _top_level_names(os.path.join(REPO, path))
         )
+        gone += sorted(
+            f"{path}::{pattern}"
+            for path, pattern in _cited_tests(text)
+            if not os.path.exists(os.path.join(REPO, path))
+            or not fnmatch.filter(_test_names(os.path.join(REPO, path)), pattern)
+        )
         if gone:
             missing[doc] = gone
     assert not missing, missing
@@ -575,6 +662,23 @@ def test_cited_path_scan_reads_each_citation_form():
         "`scripts/run_kg_job.py`, pipeline/llm.py:195, "
         "pkg/operators/gone.py, streaming/incremental.py"
     )
+    short = (
+        "`dedup.line_index/line_counts` and `fs.cut_lineage`, `kb.py`, "
+        "`gone.op`, spancat.v1 outside a code span\n"
+        "`test_el.py::test_unhighlight_*` / `::test_kb_yaml_loader`, "
+        "tests/test_fused.py::test_fused_matches_unfused\n"
+        "::test_orphan has no file before it on its line\n"
+    )
+    assert _cited_defs(short) == {
+        (f"{PKG}/operators/dedup.py", "line_index"),
+        (f"{PKG}/operators/dedup.py", "line_counts"),
+        (f"{PKG}/fs.py", "cut_lineage"),
+    }
+    assert _cited_tests(short) == {
+        ("tests/test_el.py", "test_unhighlight_*"),
+        ("tests/test_el.py", "test_kb_yaml_loader"),
+        ("tests/test_fused.py", "test_fused_matches_unfused"),
+    }
     assert _cited_paths(text) == {
         f"{PKG}/kb.py",
         f"{PKG}/operators/el.py",

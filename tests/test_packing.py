@@ -150,51 +150,3 @@ def test_neighbor_jaccard_pivot_cap_is_lower_bound(spark):
         graph.neighbor_jaccard(edges, min_common=0)
     with pytest.raises(ValueError):
         graph.neighbor_jaccard(edges, max_pivot_degree=0)
-
-
-def test_line_dedup_probe_equals_full_recompute(spark):
-    """Chained incremental line dedup == full recompute, including the
-    threshold-crossing rebuild of OLD docs: batch 2 re-delivers a line
-    doc 1 already holds, so doc 1 must be rewritten without re-splitting
-    its text."""
-    from spacy_llm_spark.operators import dedup
-
-    schema = ["doc_id", "text"]
-    old_rows = [(1, "alpha line\nunique a"), (2, "beta line\nunique b")]
-    b1_rows = [(3, "alpha line\nfresh c")]   # crosses "alpha line"
-    b2_rows = [(4, "beta line\ngamma line"), (5, "gamma line")]
-    old = spark.createDataFrame(old_rows, schema)
-    idx = dedup.line_index(old)
-    cnt = dedup.line_counts(idx)
-    clean = dedup.remove_duplicated_lines(old, 1)
-
-    for rows in (b1_rows, b2_rows):
-        nb = spark.createDataFrame(rows, schema)
-        clean, idx, cnt = dedup.line_dedup_probe(idx, cnt, clean, nb, 1)
-
-    full = dedup.remove_duplicated_lines(
-        spark.createDataFrame(old_rows + b1_rows + b2_rows, schema), 1
-    )
-    assert clean.exceptAll(full).count() == 0
-    assert full.exceptAll(clean).count() == 0
-    got = {r["doc_id"]: r["clean_text"] for r in clean.collect()}
-    # doc 1 lost "alpha line" when batch 1 crossed it; doc 2 lost
-    # "beta line" at batch 2; docs 4/5 share "gamma line"
-    assert got[1] == "unique a" and got[2] == "unique b"
-    assert got[3] == "fresh c"
-    assert got[4] == "" and got[5] == ""
-
-
-def test_line_dedup_probe_refuses_unstamped(spark):
-    from spacy_llm_spark.operators import dedup
-
-    df = spark.createDataFrame([(1, "x\ny")], ["doc_id", "text"])
-    idx = dedup.line_index(df)
-    cnt = dedup.line_counts(idx)
-    clean = dedup.remove_duplicated_lines(df, 1)
-    forged = idx.drop([c for c in idx.columns if c.startswith("_fmt")][0])
-    nb = spark.createDataFrame([(2, "z")], ["doc_id", "text"])
-    with pytest.raises(ValueError):
-        dedup.line_dedup_probe(forged, cnt, clean, nb, 1)
-    with pytest.raises(ValueError):
-        dedup.line_dedup_probe(idx, cnt, clean, nb, 0)

@@ -271,74 +271,6 @@ def test_match_bgp_inverse_and_alternation(spark):
             match_bgp(t, [("?x", bad, "?y")])
 
 
-def test_walk_context_pairs_matches_bruteforce(spark):
-    from collections import Counter
-
-    from spacy_llm_spark.operators.graph import walk_context_pairs
-
-    walks = [("w0", "a b c d"), ("w1", "b b e"), ("w2", "a")]
-    df = spark.createDataFrame(walks, "walk_id string, walk string")
-    for window in (1, 2):
-        want = Counter()
-        for _, w in walks:
-            toks = w.split(" ")
-            for i, c in enumerate(toks):
-                for j in range(max(0, i - window), min(len(toks), i + window + 1)):
-                    if j != i:
-                        want[(c, toks[j])] += 1
-        got = {
-            (r.center, r.context): r.n
-            for r in walk_context_pairs(df, window=window).collect()
-        }
-        assert got == dict(want)
-    with pytest.raises(ValueError, match="window"):
-        walk_context_pairs(df, window=0)
-
-
-def test_match_bgp_union_groups(spark):
-    from spacy_llm_spark.operators.graph import match_bgp_union
-
-    out = match_bgp_union(
-        _triples_df(spark),
-        [[("?s", "executes", "?o")], [("?s", "stores", "?t")]],
-    )
-    assert sorted(out.columns) == ["o", "s", "t"]
-    got = {(r.s, r.o, r.t) for r in out.collect()}
-    assert got == {
-        ("s1", "op1", None),
-        ("s1", "op2", None),
-        ("s2", "op2", None),
-        ("s1", None, "t1"),
-        ("s2", None, "t2"),
-    }
-    # bag semantics keep cross-group duplicates: two single-var groups
-    # over the same pattern shape double every row
-    bag = match_bgp_union(
-        _triples_df(spark),
-        [[("?s", "executes", "?o")], [("?s", "executes", "?o")]],
-        distinct=False,
-    )
-    assert bag.count() == 6
-    assert match_bgp_union(
-        _triples_df(spark),
-        [[("?s", "executes", "?o")], [("?s", "executes", "?o")]],
-    ).count() == 3
-    with pytest.raises(ValueError, match="non-empty group"):
-        match_bgp_union(_triples_df(spark), [[("?s", "executes", "?o")], []])
-    with pytest.raises(ValueError, match="non-empty group"):
-        match_bgp_union(_triples_df(spark), [])
-    # multi-pattern group joins internally before the union
-    mixed = match_bgp_union(
-        _triples_df(spark),
-        [
-            [("?s", "executes", "?o"), ("?o", "appliesTo", "?t")],
-            [("?s", "stores", "?t")],
-        ],
-    )
-    got2 = {(r.s, r.o, r.t) for r in mixed.collect()}
-    assert ("s1", "op1", "t1") in got2 and ("s1", None, "t1") in got2
-
-
 def test_match_bgp_optional_groups(spark):
     # ?s executes ?o, OPTIONAL { ?o appliesTo ?t }: op1/op2 bind ?t,
     # and an op with no appliesTo edge survives with t = NULL
@@ -415,35 +347,6 @@ def test_match_bgp_property_path(spark):
         match_bgp(tri, [("?a", "+", "?b")])
     none = match_bgp(tri, [("?a", "<+>", "?b")])
     assert none.count() == 0
-
-
-def test_modal_label_vote_and_tiebreak(spark):
-    from spacy_llm_spark.operators.canonicalize import modal_label
-
-    df = spark.createDataFrame(
-        [
-            ("e1", "Alpha"), ("e1", "Alpha"), ("e1", "alfa"),
-            ("e2", "Beta"), ("e2", "Aeta"),  # tie: lexical min wins
-            ("e3", None), ("e3", "Gamma"),   # NULL excluded from vote
-        ],
-        "entity string, surface string",
-    )
-    got = {
-        (r.entity, r.label, r.n_occurrences)
-        for r in modal_label(df, "entity", "surface").collect()
-    }
-    assert got == {("e1", "Alpha", 2), ("e2", "Aeta", 1), ("e3", "Gamma", 1)}
-    # multi-column keys + custom output names
-    df2 = spark.createDataFrame(
-        [("a", 1, "x"), ("a", 1, "x"), ("a", 2, "y")],
-        "k1 string, k2 int, v string",
-    )
-    out = modal_label(df2, ["k1", "k2"], "v", out_col="top_v", count_col="n")
-    assert sorted(out.columns) == ["k1", "k2", "n", "top_v"]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="at least one key"):
-        modal_label(df2, [], "v")
 
 
 def test_construct_triples_templates(spark):
@@ -971,126 +874,6 @@ def test_match_bgp_values(spark):
         )
 
 
-def test_match_bgp_agg_grouped(spark):
-    from spacy_llm_spark.operators.graph import match_bgp_agg
-
-    out = match_bgp_agg(
-        _triples_df(spark),
-        [("?s", "executes", "?o"), ("?o", "appliesTo", "?t")],
-        group_by=["?s"],
-        aggregates=[
-            ("count", "*", "n"),
-            ("count_distinct", "?t", "nt"),
-            ("min", "?o", "first_o"),
-            ("group_concat", "?t", "ts", ","),
-        ],
-    )
-    got = {(r.s, r.n, r.nt, r.first_o, r.ts) for r in out.collect()}
-    assert got == {
-        ("s1", 3, 2, "op1", "t1,t1,t2"),
-        ("s2", 2, 2, "op2", "t1,t2"),
-    }
-
-
-def test_match_bgp_agg_global_and_numeric(spark):
-    from spacy_llm_spark.operators.graph import match_bgp_agg
-
-    # implicit single group; numeric terms cast for sum/avg
-    weighted = spark.createDataFrame(
-        [Row(subj=s, pred="weighs", obj=o)
-         for s, o in [("a", "3"), ("b", "5"), ("c", "4")]],
-        "subj string, pred string, obj string",
-    )
-    row = match_bgp_agg(
-        weighted,
-        [("?x", "weighs", "?w")],
-        group_by=[],
-        aggregates=[
-            ("count", "?w", "n"),
-            ("sum", "?w", "total"),
-            ("avg", "?w", "mean"),
-            ("max", "?x", "last_x"),
-            ("sample", "?x", "any_x"),
-        ],
-    ).collect()
-    assert len(row) == 1
-    r = row[0]
-    assert (r.n, r.total, r.mean, r.last_x, r.any_x) == (3, 12.0, 4.0, "c", "a")
-    # non-numeric terms become NULL under sum (SPARQL error elision)
-    bad = match_bgp_agg(
-        _triples_df(spark),
-        [("?s", "executes", "?o")],
-        group_by=[],
-        aggregates=[("sum", "?o", "total")],
-    ).collect()[0]
-    assert bad.total is None
-
-
-def test_match_bgp_agg_having_order_limit(spark):
-    from spacy_llm_spark.operators.graph import match_bgp_agg
-
-    out = match_bgp_agg(
-        _triples_df(spark),
-        [("?s", "executes", "?o"), ("?o", "appliesTo", "?t")],
-        group_by=["?s"],
-        aggregates=[("count", "*", "n")],
-        having=["n >= 3"],
-    ).collect()
-    assert [(r.s, r.n) for r in out] == [("s1", 3)]
-    top = match_bgp_agg(
-        _triples_df(spark),
-        [("?s", "executes", "?o"), ("?o", "appliesTo", "?t")],
-        group_by=["?s"],
-        aggregates=[("count", "*", "n")],
-        order_by=["n desc", "s"],
-        limit=1,
-    ).collect()
-    assert [(r.s, r.n) for r in top] == [("s1", 3)]
-
-
-def test_match_bgp_agg_bag_vs_distinct(spark):
-    from spacy_llm_spark.operators.graph import match_bgp_agg
-
-    dup = _triples_df(spark).unionByName(_triples_df(spark))
-    args = dict(
-        patterns=[("?s", "executes", "?o")],
-        group_by=["?s"],
-        aggregates=[("count", "*", "n")],
-    )
-    bag = {(r.s, r.n) for r in match_bgp_agg(dup, **args).collect()}
-    assert bag == {("s1", 4), ("s2", 2)}  # solution multiset
-    dis = {(r.s, r.n)
-           for r in match_bgp_agg(dup, distinct=True, **args).collect()}
-    assert dis == {("s1", 2), ("s2", 1)}
-
-
-def test_match_bgp_agg_guards(spark):
-    from spacy_llm_spark.operators.graph import match_bgp_agg
-
-    t = _triples_df(spark)
-    pats = [("?s", "executes", "?o")]
-    with pytest.raises(ValueError, match="at least one aggregate"):
-        match_bgp_agg(t, pats, group_by=["?s"], aggregates=[])
-    with pytest.raises(ValueError, match="unknown aggregate"):
-        match_bgp_agg(t, pats, ["?s"], [("median", "?o", "m")])
-    with pytest.raises(ValueError, match="only valid for count"):
-        match_bgp_agg(t, pats, ["?s"], [("sum", "*", "x")])
-    with pytest.raises(ValueError, match="collides"):
-        match_bgp_agg(t, pats, ["?s"], [("count", "*", "s")])
-    with pytest.raises(ValueError, match="group_by variable"):
-        match_bgp_agg(t, pats, ["?zz"], [("count", "*", "n")])
-    with pytest.raises(ValueError, match="aggregate variable"):
-        match_bgp_agg(t, pats, ["?s"], [("count", "?zz", "n")])
-    with pytest.raises(ValueError, match="separator"):
-        match_bgp_agg(t, pats, ["?s"], [("count", "?o", "n", ",")])
-    with pytest.raises(ValueError, match="bad order_by"):
-        match_bgp_agg(t, pats, ["?s"], [("count", "*", "n")],
-                      order_by=["n descending extra"])
-    with pytest.raises(ValueError, match="having 0"):
-        match_bgp_agg(t, pats, ["?s"], [("count", "*", "n")],
-                      having=["nope > 1"])
-
-
 def test_match_bgp_sequence_path(spark):
     # a/b == the spec's fresh-variable rewrite: two chained patterns,
     # internal variable projected away, multiplicities preserved
@@ -1192,22 +975,6 @@ def test_match_bgp_bracketed_literal_preds(spark):
         match_bgp(t, [("?x", "p+q", "?y")])
 
 
-def test_ask_bgp(spark):
-    from spacy_llm_spark.operators.graph import ask_bgp
-
-    t = _triples_df(spark)
-    assert ask_bgp(t, [("?s", "executes/appliesTo", "?t")]) is True
-    assert ask_bgp(t, [("?s", "stores", "op1")]) is False
-    # keyword passthrough: filters narrow the existence check
-    assert ask_bgp(
-        t, [("?s", "executes", "?o")], filters=["s = 's2'"]
-    ) is True
-    assert ask_bgp(
-        t, [("?s", "executes", "?o")],
-        filters=["s = 's2'"], not_exists=[[("?s", "stores", "?u")]],
-    ) is False
-
-
 def test_match_bgp_bounded_repetition(spark):
     # chain a->b->c->d->e on pred p, plus a q edge for alternation
     rows = [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "d"),
@@ -1266,52 +1033,6 @@ def test_match_bgp_bind_and_modifiers(spark):
     with pytest.raises(ValueError, match="order_by"):
         match_bgp(t, [("?s", "executes", "?o")],
                   order_by=["zzz asc"], limit=1).collect()
-
-
-def test_describe_nodes(spark):
-    from spacy_llm_spark.operators.graph import describe_nodes
-
-    t = _triples_df(spark)
-    star = {(r.subj, r.pred, r.obj)
-            for r in describe_nodes(t, ["op2"]).collect()}
-    assert star == {("s1", "executes", "op2"), ("s2", "executes", "op2"),
-                    ("op2", "appliesTo", "t1"), ("op2", "appliesTo", "t2"),
-                    ("op1", "precedes", "op2")}
-    # DataFrame node set gives the same star, deduped across both ends
-    nodes = spark.createDataFrame([("op2",), ("t2",)], "id string")
-    star2 = {(r.subj, r.pred, r.obj)
-             for r in describe_nodes(t, nodes).collect()}
-    assert star2 == star | {("s2", "stores", "t2")}
-    with pytest.raises(ValueError, match="one column"):
-        describe_nodes(t, t)
-    with pytest.raises(ValueError, match="empty"):
-        describe_nodes(t, [])
-
-
-def test_nquads_roundtrip_and_default_graph(spark):
-    quads = [("g1", *t) for t in ADVERSARIAL[:3]] + [
-        (None, *t) for t in ADVERSARIAL[3:]
-    ] + [('gr"aph\\adv', "s", "p", "o")]
-    df = spark.createDataFrame(
-        [Row(graph=g, subj=s, pred=p, obj=o) for g, s, p, o in quads],
-        "graph string, subj string, pred string, obj string",
-    )
-    for obj_is_iri in (True, False):
-        lines = rdf.to_nquads(df, obj_is_iri=obj_is_iri)
-        back = rdf.parse_nquads(lines)
-        got = {(r.graph, r.subj, r.pred, r.obj, r.obj_is_iri)
-               for r in back.collect()}
-        assert got == {(g, s, p, o, obj_is_iri) for g, s, p, o in quads}
-    # a default-graph quad line IS an N-Triples line; the quad parser
-    # reads N-Triples files and the triple parser skips graph-labeled
-    # lines as malformed rather than misparsing them
-    tri_only = rdf.parse_ntriples(rdf.to_nquads(df), col="nquad")
-    assert tri_only.count() == 3
-    junk = spark.createDataFrame(
-        [Row(nquad='<a> <b> <c> <d> <e> .'), Row(nquad="nope")],
-        "nquad string",
-    )
-    assert rdf.parse_nquads(junk).count() == 0
 
 
 def test_match_quads_blocks_and_union_default(spark):
@@ -1382,74 +1103,6 @@ def test_match_quads_constant_graph_paths(spark):
     gotu = {(r.s, r.o) for r in
             match_quads(q, patterns=[("?s", "p+", "?o")]).collect()}
     assert got1 <= gotu
-
-
-def test_ntriples_typed_roundtrip_full_grammar(spark):
-    from pyspark.sql import Row as R
-
-    rows = [
-        # (subj, pred, obj, obj_kind, lang, datatype)
-        ("K1", "label", "chat", "literal", "en", None),
-        ("K1", "label", "conversation", "literal", "en-US", None),
-        ("K2", "size", "42", "literal", None,
-         "http://www.w3.org/2001/XMLSchema#integer"),
-        ("K2", "knows", "K3", "iri", None, None),
-        ("bnode:b0", "type", "Thing", "iri", None, None),
-        ("K3", "part", "bnode:b1", "bnode", None, None),
-        ("K4", "note", 'es"cape\\me', "literal", "fr", None),
-        ("K4", "plain", "no suffix", "literal", None, None),
-    ]
-    df = spark.createDataFrame(
-        [R(subj=s, pred=p, obj=o, obj_kind=k, lang=l, datatype=d)
-         for s, p, o, k, l, d in rows],
-        "subj string, pred string, obj string, obj_kind string, "
-        "lang string, datatype string",
-    )
-    lines = rdf.to_ntriples_typed(df, lang="lang", datatype="datatype")
-    text = {r[0] for r in lines.collect()}
-    assert (
-        '<http://example.org/kg/K1> <http://example.org/kg/label> '
-        '"chat"@en .' in text
-    )
-    assert (
-        '<http://example.org/kg/K2> <http://example.org/kg/size> '
-        '"42"^^<http://www.w3.org/2001/XMLSchema#integer> .' in text
-    )
-    assert any(t.startswith("_:b0 <") for t in text)
-    assert any(t.endswith("_:b1 .") for t in text)
-    back = rdf.parse_ntriples_typed(lines)
-    got = {(r.subj, r.pred, r.obj, r.obj_kind, r.lang, r.datatype)
-           for r in back.collect()}
-    assert got == set(rows)
-    # malformed / rejected shapes drop; lang+datatype together raises
-    junk = spark.createDataFrame(
-        [R(ntriple=x) for x in [
-            '<a> <b> "x"@ .',           # empty lang tag
-            '<a> <b> "x"^^y .',         # unbracketed datatype
-            '_:1bad <b> <c> .',         # bnode label starts with digit
-            '<a> <b> "x"@en',           # missing final dot
-        ]],
-        "ntriple string",
-    )
-    assert rdf.parse_ntriples_typed(junk).count() == 0
-    bad = spark.createDataFrame(
-        [R(subj="s", pred="p", obj="x", obj_kind="literal",
-           lang="en", datatype="http://dt")],
-        "subj string, pred string, obj string, obj_kind string, "
-        "lang string, datatype string",
-    )
-    with pytest.raises(Exception, match="BOTH"):
-        rdf.to_ntriples_typed(bad, lang="lang", datatype="datatype").collect()
-    badkind = spark.createDataFrame(
-        [R(subj="s", pred="p", obj="x", obj_kind="nope",
-           lang=None, datatype=None)],
-        "subj string, pred string, obj string, obj_kind string, "
-        "lang string, datatype string",
-    )
-    with pytest.raises(Exception, match="bad obj_kind"):
-        rdf.to_ntriples_typed(
-            badkind, lang="lang", datatype="datatype"
-        ).collect()
 
 
 def test_match_quads_filters(spark):
@@ -1659,126 +1312,3 @@ def test_construct_triples_bnode_templates(spark):
     assert len(ids) == 2
     with pytest.raises(ValueError, match="bnode label"):
         construct_triples(bind, [("?s", "p", "_:bad-label")])
-
-
-def test_jsonld_export_parses_and_roundtrips(spark):
-    import json as _json
-    from urllib.parse import unquote
-
-    base = "http://example.org/kg/"
-    rows = ADVERSARIAL + [("s1", "p", "o2"), ("s1", "p", "o1")]
-    df = spark.createDataFrame(
-        [Row(subj=s, pred=p, obj=o) for s, p, o in rows],
-        "subj string, pred string, obj string",
-    )
-    for obj_is_iri in (True, False):
-        out = rdf.to_jsonld(df, obj_is_iri=obj_is_iri).collect()
-        got = set()
-        for r in out:
-            doc = _json.loads(r.jsonld)  # every row is valid JSON
-            sid = unquote(doc.pop("@id")[len(base):])
-            assert sid == r.subj
-            for pk, objs in doc.items():
-                p = unquote(pk[len(base):])
-                for o in objs:
-                    if "@id" in o:
-                        assert obj_is_iri
-                        got.add((sid, p, unquote(o["@id"][len(base):])))
-                    else:
-                        assert not obj_is_iri
-                        got.add((sid, p, o["@value"]))
-        assert got == set(rows)
-    # deterministic: objects sorted within a predicate array
-    one = {r.subj: r.jsonld for r in rdf.to_jsonld(df).collect()}["s1"]
-    assert one.index("o1") < one.index("o2")
-
-
-def test_manage_graphs_spec_operations(spark):
-    from spacy_llm_spark.operators.graph import manage_graphs
-
-    rows = [
-        (None, "a", "p", "b"),      # default graph
-        ("g1", "a", "p", "b"), ("g1", "c", "p", "d"),
-        ("g2", "a", "p", "b"), ("g2", "e", "p", "f"),
-    ]
-    ds = spark.createDataFrame(
-        [Row(graph=g, subj=s, pred=p, obj=o) for g, s, p, o in rows],
-        "graph string, subj string, pred string, obj string",
-    )
-
-    def quads(df):
-        return {(r.graph, r.subj, r.pred, r.obj) for r in df.collect()}
-
-    full = quads(ds)
-    # CLEAR g1 == DROP g1 in the implicit-graph model
-    assert quads(manage_graphs(ds, "clear", "g1")) == {
-        q for q in full if q[0] != "g1"}
-    assert quads(manage_graphs(ds, "drop", "g1")) == quads(
-        manage_graphs(ds, "CLEAR", "g1"))
-    # CLEAR DEFAULT
-    assert quads(manage_graphs(ds, "clear", None)) == {
-        q for q in full if q[0] is not None}
-    # COPY g1 TO g2: g2 replaced wholesale
-    got = quads(manage_graphs(ds, "copy", "g1", to="g2"))
-    assert got == {q for q in full if q[0] != "g2"} | {
-        ("g2", "a", "p", "b"), ("g2", "c", "p", "d")}
-    # MOVE default TO g3: default emptied, g3 created
-    got = quads(manage_graphs(ds, "move", None, to="g3"))
-    assert got == {q for q in full if q[0] is not None} | {
-        ("g3", "a", "p", "b")}
-    # MOVE g1 TO DEFAULT: legal; default replaced by g1's triples
-    got = quads(manage_graphs(ds, "move", "g1", to=None))
-    assert got == {q for q in full if q[0] not in (None, "g1")} | {
-        (None, "a", "p", "b"), (None, "c", "p", "d")}
-    # ADD g1 TO g2: set-merge (shared (a,p,b) not duplicated)
-    got_df = manage_graphs(ds, "add", "g1", to="g2")
-    assert quads(got_df) == full | {("g2", "c", "p", "d")}
-    assert got_df.count() == len(full) + 1  # no duplicate rows either
-    # ADD g2 TO DEFAULT: NULL-graph destination still set-merges
-    # ((a,p,b) already in default -> only (e,p,f) lands)
-    got_df2 = manage_graphs(ds, "add", "g2", to=None)
-    assert quads(got_df2) == full | {(None, "e", "p", "f")}
-    assert got_df2.count() == len(full) + 1
-    # same-graph ops are no-ops; guards
-    assert quads(manage_graphs(ds, "copy", "g1", to="g1")) == full
-    with pytest.raises(ValueError, match="needs a 'to'"):
-        manage_graphs(ds, "copy", "g1")
-    with pytest.raises(ValueError, match="unknown op"):
-        manage_graphs(ds, "truncate", "g1")
-
-
-def test_update_where_in_graph_scoping(spark):
-    from spacy_llm_spark.operators.graph import update_where_in_graph
-
-    rows = [
-        (None, "s1", "stores", "t1"),
-        ("g1", "s1", "stores", "t1"), ("g1", "s2", "stores", "t2"),
-        ("g2", "s1", "stores", "t1"),
-    ]
-    ds = spark.createDataFrame(
-        [Row(graph=g, subj=s, pred=p, obj=o) for g, s, p, o in rows],
-        "graph string, subj string, pred string, obj string",
-    )
-
-    def quads(df):
-        return {(r.graph, r.subj, r.pred, r.obj) for r in df.collect()}
-
-    # WITH g1: rename stores -> storedIn ONLY inside g1
-    got = quads(update_where_in_graph(
-        ds, "g1", [("?s", "stores", "?t")],
-        delete=[("?s", "stores", "?t")],
-        insert=[("?s", "storedIn", "?t")],
-    ))
-    assert got == {
-        (None, "s1", "stores", "t1"), ("g2", "s1", "stores", "t1"),
-        ("g1", "s1", "storedIn", "t1"), ("g1", "s2", "storedIn", "t2"),
-    }
-    # WITH DEFAULT: only the NULL-graph triple mutates; named survive
-    got = quads(update_where_in_graph(
-        ds, None, [("?s", "stores", "?t")],
-        delete=[("?s", "stores", "?t")],
-    ))
-    assert got == {
-        ("g1", "s1", "stores", "t1"), ("g1", "s2", "stores", "t2"),
-        ("g2", "s1", "stores", "t1"),
-    }

@@ -1,5 +1,5 @@
-"""Retry policy, annotation merge, config serde, multi-token dictionary
-NER and edge support."""
+"""Retry policy, annotation merge, config serde and multi-token
+dictionary NER."""
 
 import dataclasses
 
@@ -104,59 +104,3 @@ def test_multi_token_dictionary_ner():
         ("Boston Celtics", "ORG"),
     ]
     assert spans == [(14, 20, "LOC"), (32, 46, "ORG")]
-
-
-def test_edge_support_counts_and_fraction(spark):
-    from spacy_llm_spark.operators.materialize import edge_support
-
-    rows = [
-        # (doc_id, subj, pred, obj) — t1 asserted twice in d1, once in d2
-        (1, "a", "p", "b"),
-        (1, "a", "p", "b"),
-        (2, "a", "p", "b"),
-        (2, "x", "q", "y"),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id int, subj string, pred string, obj string"
-    )
-    got = {
-        (r.subj, r.pred, r.obj): (r.n_docs, r.n_mentions, r.support)
-        for r in edge_support(df, total_docs=4).collect()
-    }
-    assert got == {
-        ("a", "p", "b"): (2, 3, 0.5),
-        ("x", "q", "y"): (1, 1, 0.25),
-    }
-    # no corpus size -> NULL support, counts unchanged
-    r = edge_support(df).where("subj = 'a'").collect()[0]
-    assert (r.n_docs, r.n_mentions, r.support) == (2, 3, None)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="total_docs"):
-        edge_support(df, total_docs=0)
-
-
-def test_edge_support_append_equals_full(spark):
-    from spacy_llm_spark.operators.materialize import (
-        edge_support,
-        edge_support_append,
-    )
-
-    rows = [
-        (1, "a", "p", "b"), (1, "a", "p", "b"), (2, "a", "p", "b"),
-        (2, "x", "q", "y"), (3, "a", "p", "b"), (3, "n", "r", "m"),
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id int, subj string, pred string, obj string"
-    )
-    old = df.where("doc_id <= 2")
-    new = df.where("doc_id > 2")  # disjoint doc ids: the append contract
-    inc = edge_support_append(edge_support(old), new, total_docs=6)
-    full = edge_support(df, total_docs=6)
-    assert sorted(map(tuple, inc.collect())) == sorted(
-        map(tuple, full.collect())
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="total_docs"):
-        edge_support_append(edge_support(old), new, total_docs=-1)

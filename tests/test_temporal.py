@@ -1,16 +1,10 @@
-"""Valid-time triple log operators (operators/temporal.py): snapshot
-argmax, validity intervals, and snapshot diff — hand logs exercising
-re-assertion, retraction (NULL obj), same-instant tie-breaks, and the
-interval/snapshot consistency invariant."""
+"""Valid-time triple log snapshots (operators/temporal.py): hand logs
+exercising re-assertion, retraction (NULL obj) and same-instant
+tie-breaks."""
 
-import pytest
 from pyspark.sql import Row
 
-from spacy_llm_spark.operators.temporal import (
-    snapshot_asof,
-    snapshot_diff,
-    triple_intervals,
-)
+from spacy_llm_spark.operators.temporal import snapshot_asof
 
 LOG = [
     # (subj, pred, obj, ts, seq)
@@ -50,77 +44,3 @@ def test_snapshot_asof_versions_retraction_ties(spark):
     assert _snap(spark, 6)[("e3", "owner")] == "erin"
     # before everything: empty snapshot
     assert _snap(spark, 0) == {}
-
-
-def test_triple_intervals_halfopen_and_consistency(spark):
-    out = {
-        (r.subj, r.pred, r.obj): (r.valid_from, r.valid_to)
-        for r in triple_intervals(_log(spark), seq="seq").collect()
-    }
-    assert out[("e1", "owner", "alice")] == (1, 3)
-    assert out[("e1", "owner", "bob")] == (3, None)   # still current
-    assert out[("e1", "lang", "py")] == (2, 5)        # closed by retraction
-    assert ("e1", "lang", None) not in out            # retractions emit no row
-    assert out[("e3", "owner", "dan")] == (6, 6)      # zero-length: superseded
-    assert out[("e3", "owner", "erin")] == (6, None)
-    # invariant: snapshot at t == the interval containing t
-    for t in range(1, 8):
-        snap = _snap(spark, t)
-        from_intervals = {
-            (s, p): o
-            for (s, p, o), (lo, hi) in out.items()
-            if lo <= t and (hi is None or t < hi)
-        }
-        assert snap == from_intervals, f"t={t}"
-
-
-def test_snapshot_diff_added_removed_changed(spark):
-    got = {
-        (r.subj, r.pred): (r.obj_old, r.obj_new, r.change)
-        for r in snapshot_diff(_log(spark), 2, 5, seq="seq").collect()
-    }
-    assert got == {
-        ("e1", "owner"): ("alice", "bob", "changed"),
-        ("e1", "lang"): ("py", None, "removed"),
-        ("e2", "owner"): (None, "carol", "added"),
-    }
-    # identical instants: empty diff (unchanged keys are omitted)
-    assert snapshot_diff(_log(spark), 4, 4, seq="seq").count() == 0
-
-
-def test_snapshot_state_merge_equals_full(spark):
-    from spacy_llm_spark.operators.temporal import (
-        snapshot_state,
-        snapshot_state_append,
-        snapshot_view,
-    )
-
-    full = _log(spark)
-
-    def view_rows(df):
-        return {(r.subj, r.pred, r.obj) for r in df.collect()}
-
-    want = view_rows(snapshot_view(snapshot_state(full, seq="seq")))
-    # every split point — including splits that put the retraction and
-    # its older assertion in DIFFERENT batches — must merge to the full
-    # recompute (argmax associativity)
-    for cut in range(0, 8):
-        early = full.where(full.ts <= cut)
-        late = full.where(full.ts > cut)
-        merged = snapshot_state_append(
-            snapshot_state(early, seq="seq"), late, seq="seq"
-        )
-        assert view_rows(snapshot_view(merged)) == want, f"cut={cut}"
-    # OUT-OF-ORDER: apply the late half first, then the early half — a
-    # late-arriving OLD batch must not resurrect the retracted fact
-    swapped = snapshot_state_append(
-        snapshot_state(full.where(full.ts > 3), seq="seq"),
-        full.where(full.ts <= 3),
-        seq="seq",
-    )
-    assert view_rows(snapshot_view(swapped)) == want
-    # the state keeps the tombstone row itself (obj NULL)
-    state = snapshot_state(full, seq="seq")
-    tomb = [r for r in state.collect()
-            if (r.subj, r.pred) == ("e1", "lang")]
-    assert len(tomb) == 1 and tomb[0].obj is None and tomb[0].ts == 5
